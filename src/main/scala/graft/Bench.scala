@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.fraud.FraudRules
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -13,53 +11,25 @@ import graft.fraud.FraudRules
   * Catalyst prune projections and final sorts, under-measuring map-only
   * queries — the noop write measures the plan users actually run.
   *
-  * Errors are errors: a failing query is recorded under "errors" in the
-  * JSON and the process exits non-zero. No fake timings.
+  * Errors are errors: a failing or timed-out query is recorded under
+  * "errors" in the JSON and the process exits non-zero. No fake timings.
+  *
+  * Usage: sbt "runMain graft.Bench [q_x ...]" (trailing names: a subset).
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_PASSES (3),
+  * SPARK_GRAFT_BENCH_TIMEOUT (240 s per drive), SPARK_GRAFT_BENCH_OUT
+  * (bench_out.json), and the [[Harness]] session knobs.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Pid-private learned-cell export dir: a bench run must never
-    // clobber the cell snapshot a pending Verify/oracle check reads.
-    if (sys.props.get("graft.cells.dir").isEmpty)
-      System.setProperty("graft.cells.dir",
-        s"/tmp/graft_bench_cells_${ProcessHandle.current().pid()}")
-    if (sys.props.get("graft.scratch.dir").isEmpty)
-      System.setProperty("graft.scratch.dir",
-        s"/tmp/graft_bench_scratch_${ProcessHandle.current().pid()}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Watchdog per drive: a single wedged query (e.g. an AQE hang under
-    // co-tenant noise) must not hang the whole benchmark. The drive runs
-    // on a worker thread inside a cancellable job group; on timeout the
-    // group is cancelled, the worker interrupted, and the query recorded
-    // as an error.
+    val (cells, scratch) = Harness.pidDirs("bench")
+    val spark = Harness.session(cells, scratch)
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT", "240").toLong
-    def drive(name: String): Unit = {
-      @volatile var failure: Throwable = null
-      val worker = new Thread(() => {
-        try {
-          spark.sparkContext.setJobGroup(s"bench-$name", name, interruptOnCancel = true)
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        } catch { case t: Throwable => failure = t }
-        finally spark.sparkContext.clearJobGroup()
-      }, s"bench-$name")
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(timeoutSec * 1000L)
-      if (worker.isAlive) {
-        spark.sparkContext.cancelJobGroup(s"bench-$name")
-        worker.interrupt()
-        worker.join(10000L)
-        throw new RuntimeException(s"timed out after ${timeoutSec}s")
+    def drive(name: String): Unit =
+      Harness.drive(spark, s"bench-$name", timeoutSec) {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
       }
-      if (failure != null) throw failure
-    }
 
     // JVM/codegen warm-up on a small scan so the first measured query
     // doesn't pay JIT + classloading. Best-effort: a warm-up failure

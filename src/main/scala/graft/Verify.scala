@@ -1,36 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for an external DuckDB compare (tools/check.py), plus a
+  * HEAD_SHA provenance stamp when run inside a git checkout.
+  *
+  * Usage: sbt "runMain graft.Verify <sfDir> <outDir> [q_x ...]"
+  * Env: SPARK_GRAFT_VERIFY_TIMEOUT (600 s per query),
+  * SPARK_GRAFT_SCALED_TWINS=1 (scaled-tier oracle twins), and the
+  * [[Harness]] session knobs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = args.splitAt(2)
+    val headBefore = headSha()
     // Hermetic learned-cell snapshot: the KMeans assignment the learned
     // queries export (and the DuckDB twins read back) lives INSIDE this
     // run's out dir, so the dump and the table its oracle probes are one
-    // immutable artifact — no interleaved run can clobber it.
-    if (sys.props.get("graft.cells.dir").isEmpty)
-      System.setProperty("graft.cells.dir", new java.io.File(outDir).getAbsolutePath)
-    // Same hermeticity for the q_mart_*/q_src_orc scratch tables: each
+    // immutable artifact — no interleaved run can clobber it. Same
+    // hermeticity for the q_mart_*/q_src_orc scratch tables: each
     // Verify run builds them under ITS OWN out dir, so parallel sweeps
     // can't clobber each other (ADVICE r11).
-    if (sys.props.get("graft.scratch.dir").isEmpty)
-      System.setProperty("graft.scratch.dir",
-        new java.io.File(outDir, "_scratch").getAbsolutePath)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Decoupled shuffle-partition override for the layout-determinism
-    // sweep: results must not depend on the physical partitioning, and
-    // the only way to PROVE that is to run the same dump under a
-    // different (prime, ≠ core-count) partition count and diff hashes.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = GraftSession.builder(s"local[$cpus]", shuffle.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(new java.io.File(outDir).getAbsolutePath,
+      new java.io.File(outDir, "_scratch").getAbsolutePath)
     new java.io.File(outDir).mkdirs()
-    // Per-query watchdog (same rationale as Bench): one wedged query
-    // must not stall the whole correctness dump.
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_TIMEOUT", "600").toLong
     // Optional trailing args filter to named queries (dev loop); the
     // driver's two-arg invocation still dumps everything.
@@ -38,25 +29,11 @@ object Verify {
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
     selected.foreach { case (name, fn) =>
-      @volatile var failure: Throwable = null
-      val worker = new Thread(() => {
-        try {
-          spark.sparkContext.setJobGroup(s"verify-$name", name, interruptOnCancel = true)
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-        } catch { case t: Throwable => failure = t }
-        finally spark.sparkContext.clearJobGroup()
-      }, s"verify-$name")
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(timeoutSec * 1000L)
-      if (worker.isAlive) {
-        spark.sparkContext.cancelJobGroup(s"verify-$name")
-        worker.interrupt()
-        worker.join(10000L)
-        System.err.println(s"[verify] $name failed: timed out after ${timeoutSec}s")
-      } else if (failure != null)
-        System.err.println(s"[verify] $name failed: ${failure.getMessage}")
+      try Harness.drive(spark, s"verify-$name", timeoutSec) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -105,5 +82,15 @@ object Verify {
         rm(scratch)
       }
     }
+    // Provenance stamp (tools/sweep_check.py): written only when HEAD
+    // did not move during the dump, so the dump is that commit's output.
+    if (headBefore.isDefined && headSha() == headBefore)
+      Files.writeString(Paths.get(s"$outDir/HEAD_SHA"), headBefore.get + "\n")
+  }
+
+  /** `git rev-parse HEAD` of the working directory, if it is a checkout. */
+  private def headSha(): Option[String] = {
+    import scala.sys.process._
+    scala.util.Try(Seq("git", "rev-parse", "HEAD").!!(ProcessLogger(_ => ())).trim).toOption
   }
 }

@@ -26,18 +26,9 @@ object GraftFunctions {
     * DuckDB's epoch_us(). */
   def tsUs(c: Column): Column = unix_micros(c)
 
-  /** Timestamp → epoch milliseconds; DuckDB twin epoch_ms(). */
-  def tsMs(c: Column): Column = unix_millis(c)
-
   /** Reference fio concat (rep_fraud.py:15 `last_name || ' ' || ...`):
     * here the client "name" analog. */
   def fio(parts: Column*): Column = concat_ws(" ", parts: _*)
-
-  /** Minutes between two timestamps, floored — the reference's
-    * `cast((julianday(a) - julianday(b)) * 24 * 60 as integer)`
-    * (rep_fraud.py:148) computed in exact integer µs. */
-  def minutesBetween(later: Column, earlier: Column): Column =
-    floor((unix_micros(later) - unix_micros(earlier)) / lit(60000000L))
 
   /** 32-bit hash from the md5 hex prefix — the only hash both Spark and
     * DuckDB compute identically (`('0x'||substr(md5(x),1,8))::BIGINT`

@@ -58,12 +58,4 @@ object FraudScorer {
       .setLabelCol("label").setFeaturesCol("features")
     new Pipeline().setStages(Array(assembler, lr))
   }
-
-  /** Fit on the labeled frame, return per-user scores. */
-  def scoreUsers(s: SparkSession, d: String): DataFrame = {
-    val tf = trainingFrame(s, d).cache()
-    val model = pipeline().fit(tf)
-    model.transform(tf)
-      .select(col("user_id"), col("label"), col("probability"), col("prediction"))
-  }
 }

@@ -273,7 +273,8 @@ object TextAnalysis {
     * exactly like over-ppm terms (stats kept, empty list). The 50M
     * default holds a posting row under ~400 MB serialized — inside a
     * default executor; a real shard writer splits lists long before
-    * that. Probed at the boundary by [[graft.ProbeDriverBounds]]. */
+    * that. Checked at the boundary by ScaleSpec's "driver-bound
+    * structures" test. */
   def invertedIndex(docs: DataFrame, maxDfPpm: Long = 780000L,
                     maxPostings: Long = 50000000L): DataFrame = {
     val occ = docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"))

@@ -37,14 +37,13 @@ object Compaction {
   /** Compaction plan: `bins` to rewrite (≥2 files or 1 under-sized
     * file each… singletons only when a stray small file can't pair),
     * `skipped` files already at target size. */
-  final case class Plan(bins: Seq[Bin], skipped: Seq[String]) {
-    def outputFiles: Int = bins.length
-  }
+  final case class Plan(bins: Seq[Bin], skipped: Seq[String])
 
   /** Listings a driver can hold comfortably: 20M entries ≈ 3–4 GB of
-    * path strings on a default 8 GB driver (measured by
-    * [[graft.ProbeDriverBounds]]). Beyond that the LISTING, not the
-    * pack, is the problem — shard plan() per table partition. */
+    * path strings on a default 8 GB driver. Beyond that the LISTING, not
+    * the pack, is the problem — shard plan() per table partition.
+    * ScaleSpec's "driver-bound structures" test checks [[pack]]'s
+    * invariants on both adversarial shapes. */
   val MaxPlanFiles = 20_000_000
 
   /** Bin-pack (name, bytes) entries into rewrite groups of
@@ -54,7 +53,7 @@ object Compaction {
     * driver at lake-real listings (a million stray small files whose
     * sizes don't pair is a million bins → 10¹² comparisons). BFD keeps
     * FFD's 11/9·OPT quality bound and the same determinism (ties
-    * broken by insertion order). Exposed for the driver-bound probe;
+    * broken by insertion order). Exposed for the driver-bound test;
     * [[plan]] is listing + this. */
   def pack(files: Seq[(String, Long)], targetBytes: Long): Plan = {
     require(files.length <= MaxPlanFiles,

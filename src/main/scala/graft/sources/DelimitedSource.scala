@@ -94,8 +94,12 @@ object DelimitedSource {
   def batchIdToDate(batchId: String): String =
     s"${batchId.substring(4, 8)}-${batchId.substring(2, 4)}-${batchId.substring(0, 2)}"
 
-  /** First data file in `dir` by sorted name with the given extension —
-    * the reference's daily-drop discovery (tools.py:16-29). */
+  /** Oldest data file in `dir` with the given extension — the
+    * reference's daily-drop discovery (tools.py:16-29). Drops are
+    * ordered by their parsed batch date, not by name: `DDMMYYYY` names
+    * sort `01042021` before `31032021`, so a backlog crossing a month
+    * would run out of order. A file without a batch id sorts by its
+    * name. */
   def discoverBatch(dir: String, ext: String = ".txt"): Option[String] = {
     val d = Paths.get(dir)
     if (!Files.isDirectory(d)) None
@@ -104,7 +108,9 @@ object DelimitedSource {
       Files.list(d).iterator().asScala
         .map(_.getFileName.toString)
         .filter(_.endsWith(ext))
-        .toSeq.sorted.headOption
+        .toSeq
+        .sortBy(n => (batchIdFromFilename(n).fold(n)(batchIdToDate), n))
+        .headOption
     }
   }
 

@@ -40,6 +40,12 @@ class IngestSpec extends SparkSpec {
     Files.writeString(dir.resolve("transactions_01032021.txt"), "x")
     assert(DelimitedSource.discoverBatch(dir.toString)
       .contains("transactions_01032021.txt"))
+    // a backlog crossing a month runs in date order, not name order
+    val backlog = Files.createTempDirectory("graft_drop_backlog")
+    Files.writeString(backlog.resolve("transactions_01042021.txt"), "x")
+    Files.writeString(backlog.resolve("transactions_31032021.txt"), "x")
+    assert(DelimitedSource.discoverBatch(backlog.toString)
+      .contains("transactions_31032021.txt"))
     val archived = DelimitedSource.archive(
       dir.resolve("transactions_01032021.txt"), dir.resolve("archive"))
     assert(Files.exists(archived) && archived.toString.endsWith(".backup"))

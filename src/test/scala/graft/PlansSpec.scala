@@ -106,7 +106,7 @@ class PlansSpec extends SparkSpec {
       "q_copurchase"      -> (0, 5),
       "q_ann_ivf_learned" -> (0, 5),
       "q_containment"     -> (2, 5),
-      // r6 additions to the bench top tier (audited via graft.Explain
+      // r6 additions to the bench top tier (audited via graft.Plans
       // at round close: km bhj=7 smj=1, impact bhj=3 smj=1)
       "q_km"              -> (1, 6),
       "q_dedup_impact"    -> (1, 3),
@@ -120,7 +120,7 @@ class PlansSpec extends SparkSpec {
       "q_cindex"            -> (1, 1),
       "q_lm_buckets"        -> (8, 2),
       // r7 (VERDICT r6 #6): coverage extended to EVERY query ≥2 s in
-      // BENCH_SF01_r06.json; counts audited via graft.Explain at
+      // BENCH_SF01_r06.json; counts audited via graft.Plans at
       // sf0.001. q_kcore/q_dedup_clusters truncate at localCheckpoint
       // lineage cuts, so their counters only see the final stage.
       "q_kcore"             -> (0, 0),
@@ -142,12 +142,12 @@ class PlansSpec extends SparkSpec {
       // conversion-sized frames (broadcastable at test scale); a pair
       // materialization regressing back would surface as smj growth
       "q_attribution"       -> (1, 2),
-      // r7 third leg's ≥2s newcomers (audited via graft.Explain at
+      // r7 third leg's ≥2s newcomers (audited via graft.Plans at
       // sf0.001: cindex bhj=11 smj=1; curve bhj=18 smj=6; funnel
       // bhj=1 smj=1 — its LSH clustering truncates at checkpoint cuts)
       "q_dedup_curve"       -> (6, 18),
       "q_curation_funnel"   -> (1, 1),
-      // r8 newcomers ≥2s (audited via graft.Explain at sf0.001:
+      // r8 newcomers ≥2s (audited via graft.Plans at sf0.001:
       // squash bhj=18 smj=0 — the SCD2 merge's detect joins all
       // broadcast; explain bhj=8 smj=2, verifyCore's shape)
       "q_dedup_explain"     -> (2, 8),

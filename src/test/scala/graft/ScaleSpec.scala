@@ -206,6 +206,9 @@ class ScaleSpec extends SparkSpec {
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not split the skewed partition:\n$plan")
+      // graft.Plans reads the same marker off the final plan
+      val counts = Plans.shapeCounts(j.queryExecution.executedPlan).toMap
+      assert(counts("skew") >= 1, counts)
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
@@ -467,6 +470,57 @@ class ScaleSpec extends SparkSpec {
     // already-compact files are skipped, not rewritten
     val plan2 = Compaction.plan(spark, s"$tmp/frag", sizes.min)
     assert(plan2.bins.isEmpty && plan2.skipped.length == 64)
+  }
+
+  test("driver-bound structures: compaction pack at 1e5 files, posting caps at the boundary") {
+    import graft.sources.Compaction
+    // B17: the two adversarial listings for the driver-side pack.
+    // "unpairable": every file is 0.9×target, so every file is its own
+    // bin (the bin-count worst case that wedged the O(n·bins) FFD);
+    // "mixed": seeded xorshift sizes across 1–127 MB.
+    val target = 128L * 1024 * 1024
+    val n = 100000
+    for (shape <- Seq("unpairable", "mixed")) {
+      var seed = 0x9E3779B97F4A7C15L
+      def nextLong(): Long = { seed ^= seed << 13; seed ^= seed >>> 7; seed ^= seed << 17; seed }
+      val files = (0 until n).map { i =>
+        val sz =
+          if (shape == "unpairable") target * 9 / 10
+          else 1024L * 1024 * (1 + math.floorMod(nextLong(), 127L))
+        (f"file:/lake/t/part-$i%08d.parquet", sz)
+      }
+      val size = files.toMap
+      val plan = Compaction.pack(files, target)
+      val placed = plan.bins.flatMap(_.files) ++ plan.skipped
+      assert(placed.length == n && placed.toSet == size.keySet,
+        s"$shape: every file placed exactly once")
+      assert(plan.bins.forall(_.bytes <= target), s"$shape: bin over target")
+      assert(plan.bins.forall(b => b.bytes == b.files.map(size).sum),
+        s"$shape: bin bytes disagree with its files")
+      assert(plan.bins.map(_.bytes).sum == files.map(_._2).filter(_ < target).sum,
+        s"$shape: byte mass not conserved")
+      if (shape == "unpairable") assert(plan.bins.length == n)
+    }
+
+    // E47: "hot" is in every doc (over the 78% ppm gate), "warm" in
+    // 77.9% of docs (just under it: the boundary term), "u<id>" once
+    val docs = spark.range(2000).select(col("id").as("doc_id"),
+      concat(lit("hot "),
+        when(col("id") % 1000 < 779, lit("warm ")).otherwise(lit("")),
+        lit("u"), col("id").cast("string")).as("text"))
+    def postings(maxPostings: Long): Map[String, (Long, Long)] =
+      graft.ops.TextAnalysis.invertedIndex(docs, maxPostings = maxPostings)
+        .filter(col("term").isin("hot", "warm"))
+        .select(col("term"), col("df"),
+          when(col("postings") === "", 0L)
+            .otherwise(size(split(col("postings"), ","))).cast("long"))
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val gateOnly = postings(Long.MaxValue)
+    assert(gateOnly("hot") == (2000L, 0L), "over-ppm term kept a posting list")
+    assert(gateOnly("warm") == (1558L, 1558L), "under-cap list length != df")
+    val capped = postings(1000L)
+    assert(capped("hot")._2 == 0L && capped("warm") == (1558L, 0L),
+      "maxPostings did not stop-list the boundary term")
   }
 
   test("I22 range layout: non-overlapping per-file key ranges, key scans prune") {

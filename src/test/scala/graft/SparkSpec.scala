@@ -3,16 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session (one per JVM — suites reuse it via getOrCreate). */
+/** Shared session (one per JVM — suites reuse it via getOrCreate),
+  * built by the production factory so tests run under the production
+  * config (AQE/skew, nanosAsLong, codegen cache, status-store
+  * retention), at test size with the UI off. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    // same extension set as production sessions (GraftSession) — the
-    // BloomSemiNode expansion rule only exists via extensions
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

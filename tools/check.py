@@ -8,7 +8,7 @@ Loads each testdata table as a DuckDB view, runs every oracle SQL from
 dumps: schema (column names), row count, and an order-insensitive value
 hash with columns sorted by name.
 """
-import sys, os, json, glob, hashlib
+import sys, os, json, glob, hashlib, tempfile
 import duckdb
 import pandas as pd
 
@@ -33,11 +33,14 @@ def main():
     # Pin the oracle's resource budget (VERDICT r10 #1/#3): an unpinned
     # DuckDB spills to the cwd-relative .tmp and dies of ENOSPC on big
     # tiers (r10's q_pagerank FAIL), and unbounded memory co-tenants
-    # badly. Env-tunable so tier runs can size explicitly.
-    tmp = os.environ.get("CHECK_TMP", "/root/scaled/ducktmp")
+    # badly. Defaults: a fresh temp dir and half of physical RAM;
+    # CHECK_TMP / CHECK_MEM override them for tier runs.
+    fresh = tempfile.TemporaryDirectory(prefix="graft_check_")  # removed at exit
+    tmp = os.environ.get("CHECK_TMP", fresh.name)
     os.makedirs(tmp, exist_ok=True)
+    half_ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**30
     con.execute(f"PRAGMA temp_directory='{tmp}'")
-    con.execute(f"PRAGMA memory_limit='{os.environ.get('CHECK_MEM', '40GB')}'")
+    con.execute(f"PRAGMA memory_limit='{os.environ.get('CHECK_MEM', f'{max(half_ram_gb, 1)}GB')}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))

@@ -13,7 +13,7 @@ EVERY given sweep dir. Run it on each sweep dir after compare_runs.py;
 rc != 0 means the sweep is stale and must be re-run at HEAD.
 
 HERMETICITY (VERDICT r9 #2): each dir must also carry a HEAD_SHA stamp
-file (written by the close script: sha captured before AND after the
+file (written by graft.Verify: sha captured before AND after the
 dump, stamped only if equal) matching the CURRENT git HEAD, and every
 query's dump mtime must not predate the last commit touching src/main
 — the round-9 failure mode was a tier dir mixing dumps from three
