@@ -45,7 +45,7 @@ object Bench {
     // invokes with no args and benches everything.
     val names =
       if (args.nonEmpty) args.toSeq.sorted.filter(SparkEntry.queries.contains)
-      else SparkEntry.queries.keys.toSeq.sorted
+      else SparkEntry.registry.map(_.name).sorted
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // Pass count knob: 3 interleaved passes by default; large-SF runs

@@ -8,7 +8,7 @@ package graft
   * monopolizing the box at ~150 GB. Each override was validated equal
   * to its default twin at sf0.1 and 10x, and equal to the r13 engine
   * dumps at 100x, before landing (r14). Exactness arguments live at
-  * the [[SparkEntry.scaledOracleOverrides]] call sites.
+  * the [[QueryDef.scaledOracle]] call sites in [[SparkEntry.registry]].
   */
 object ScaledTwins {
 

@@ -10,8 +10,22 @@ import graft.functions.GraftFunctions._
 import graft.fraud.{FraudModel, FraudRules}
 import graft.relational.RelationalQueries
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
-  * Every query key has a DuckDB twin in [[oracleSql]]; cross-engine
+/** One query of the driver contract: its Spark plan and its DuckDB twin,
+  * which must agree in column names and result hash.
+  *
+  * @param scaledOracle a resource-feasible twin for the 10x/100x tiers,
+  *   for the few queries whose independent default twin is super-linear
+  *   there. [[Verify]] swaps it in under `SPARK_GRAFT_SCALED_TWINS=1`;
+  *   the sf0.01 correctness gate always sees the independent default.
+  */
+final case class QueryDef(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: String,
+    scaledOracle: Option[String] = None)
+
+/** Driver contract — see SURVEY.md §2 for the inventory. Every query in
+  * [[SparkEntry.registry]] carries its DuckDB twin; cross-engine
   * determinism rules are in SURVEY.md §5 (exact integer money, epoch-µs
   * timestamps, md5 as the only cross-engine hash).
   */
@@ -58,10 +72,12 @@ object SparkEntry {
     sys.props.getOrElse("graft.scratch.dir",
       System.getProperty("java.io.tmpdir")) + "/" + name
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2: its Spark
+    * plan next to its DuckDB twin. Lazy because the twins read the
+    * oracle helper `val`s declared below it. */
+  lazy val registry: Seq[QueryDef] = unique(Seq(
     // ---- D1: grouped aggregation, exact-integer money (TPC-H Q1 shape)
-    "q1_agg" -> ((s, d) => {
+    QueryDef("q1_agg", (s, d) => {
       val li = Tables.lineitem(s, d)
       val base = cents(col("l_extendedprice"))
       val disc = lit(100L) - pct(col("l_discount"))
@@ -75,10 +91,20 @@ object SparkEntry {
           sum(base * disc * tax).as("sum_charge_cpp"),
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
+    },
+      oracle = """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
+        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT) AS sum_disc_cp,
+        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT))) AS BIGINT) AS sum_charge_cpp,
+        |  count(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
     // ---- D10: time bucketing + multi-key agg on the event stream
-    "q_events_bucket" -> ((s, d) => {
+    QueryDef("q_events_bucket", (s, d) => {
       Tables.events(s, d)
         .groupBy(date_format(col("ts_t"), "yyyy-MM-dd").as("day"), col("event_type"))
         .agg(
@@ -86,40 +112,94 @@ object SparkEntry {
           sum(cents(col("value"))).as("sum_value_cents"),
           countDistinct(col("user_id")).as("n_users"))
         .orderBy(col("day"), col("event_type"))
-    }),
+    },
+      oracle = """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
+        |  count(*) AS n_events,
+        |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_value_cents,
+        |  count(DISTINCT user_id) AS n_users
+        |FROM events
+        |GROUP BY 1, 2
+        |ORDER BY 1, 2""".stripMargin),
 
     // ---- A3: JSON-in-column extraction (props → k → city bucket)
-    "q_src_json" -> ((s, d) => {
+    QueryDef("q_src_json", (s, d) => {
       Tables.events(s, d)
         .select(
           col("event_id"),
           get_json_object(col("props"), "$.k").cast(LongType).as("k"))
         .withColumn("city", col("k") % 5)
         .orderBy(col("event_id"))
-    }),
+    },
+      oracle = """SELECT event_id,
+        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+        |  CAST(json_extract_string(props, '$.k') AS BIGINT) % 5 AS city
+        |FROM events
+        |ORDER BY event_id""".stripMargin),
 
     // ---- C1..C5: the reference's fraud rules (SURVEY §2 C)
-    "q_fraud_passport" -> ((s, d) =>
+    QueryDef("q_fraud_passport", (s, d) =>
       FraudRules.allRules(s, d).head
-        .orderBy(col("client_key"), col("event_dt_us"))),
-    "q_fraud_account" -> ((s, d) =>
+        .orderBy(col("client_key"), col("event_dt_us")),
+      oracle = s"SELECT * FROM $fraudPassportBody ORDER BY client_key, event_dt_us"),
+    QueryDef("q_fraud_account", (s, d) =>
       FraudRules.allRules(s, d)(1)
-        .orderBy(col("client_key"), col("event_dt_us"))),
-    "q_fraud_city" -> ((s, d) =>
+        .orderBy(col("client_key"), col("event_dt_us")),
+      oracle = s"SELECT * FROM $fraudAccountBody ORDER BY client_key, event_dt_us"),
+    QueryDef("q_fraud_city", (s, d) =>
       FraudRules.allRules(s, d)(2)
-        .orderBy(col("client_key"))),
-    "q_fraud_amount" -> ((s, d) =>
+        .orderBy(col("client_key")),
+      oracle = s"SELECT * FROM $fraudCityBody ORDER BY client_key"),
+    QueryDef("q_fraud_amount", (s, d) =>
       FraudRules.allRules(s, d)(3)
-        .orderBy(col("client_key"), col("event_dt_us"))),
-    "q_fraud_mart" -> ((s, d) =>
+        .orderBy(col("client_key"), col("event_dt_us")),
+      oracle = s"SELECT * FROM $fraudAmountBody ORDER BY client_key, event_dt_us"),
+    QueryDef("q_fraud_mart", (s, d) =>
       FraudRules.mart(FraudRules.allRules(s, d))
-        .orderBy(col("rule"), col("client_key"), col("event_dt_us"))),
+        .orderBy(col("rule"), col("client_key"), col("event_dt_us")),
+      oracle = s"""SELECT * FROM (
+         |SELECT * FROM $fraudPassportBody
+         |UNION ALL SELECT * FROM $fraudAccountBody
+         |UNION ALL SELECT * FROM $fraudCityBody
+         |UNION ALL SELECT * FROM $fraudAmountBody)
+         |ORDER BY rule, client_key, event_dt_us""".stripMargin),
 
     // ---- B1, D2..D9: ETL rename + relational engine
-    "q_etl_rename" -> ((s, d) => RelationalQueries.etlRename(s, d)),
-    "q3_join" -> ((s, d) => RelationalQueries.q3Join(s, d)),
-    "q5_join5" -> ((s, d) => RelationalQueries.q5Join5(s, d)),
-    "q_window_topn" -> ((s, d) => RelationalQueries.windowTopN(s, d)),
+    QueryDef("q_etl_rename", (s, d) => RelationalQueries.etlRename(s, d),
+      oracle = """SELECT o_orderkey AS account_num, o_custkey AS client,
+        |  strftime(o_orderdate, '%Y-%m-%d') AS create_dt,
+        |  o_totalprice AS balance
+        |FROM orders ORDER BY account_num""".stripMargin),
+    QueryDef("q3_join", (s, d) => RelationalQueries.q3Join(s, d),
+      oracle = """SELECT o.o_orderkey, strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
+        |  CAST(sum(CAST(round(l.l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l.l_discount*100) AS BIGINT))) AS BIGINT) AS revenue_cp
+        |FROM orders o
+        |JOIN customer c ON o.o_custkey = c.c_custkey AND c.c_mktsegment = 'BUILDING'
+        |JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+        |WHERE o.o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND l.l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY o.o_orderkey, o.o_orderdate
+        |ORDER BY revenue_cp DESC, o.o_orderkey
+        |LIMIT 10""".stripMargin),
+    QueryDef("q5_join5", (s, d) => RelationalQueries.q5Join5(s, d),
+      oracle = """SELECT n.n_name,
+        |  CAST(sum(CAST(round(l.l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l.l_discount*100) AS BIGINT))) AS BIGINT) AS revenue_cp
+        |FROM lineitem l
+        |JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        |JOIN customer c ON o.o_custkey = c.c_custkey
+        |JOIN nation n ON s.s_nationkey = n.n_nationkey AND c.c_nationkey = n.n_nationkey
+        |JOIN region r ON n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
+        |WHERE o.o_orderdate < TIMESTAMP '1999-01-01'
+        |GROUP BY n.n_name
+        |ORDER BY revenue_cp DESC, n.n_name""".stripMargin),
+    QueryDef("q_window_topn", (s, d) => RelationalQueries.windowTopN(s, d),
+      oracle = """SELECT * FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    CAST(round(o_totalprice*100) AS BIGINT) AS tp_cents,
+        |    CAST(row_number() OVER (PARTITION BY o_custkey
+        |      ORDER BY CAST(round(o_totalprice*100) AS BIGINT) DESC, o_orderkey) AS BIGINT) AS rn
+        |  FROM orders)
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
     // The ORACLE view contracts the 60M-row (at 100×) prefix-sum
     // output to per-suppkey fingerprints: count, sum, max (= the group
     // total), and a dot product of each running value with its row
@@ -127,7 +207,7 @@ object SparkEntry {
     // misassigned row perturbs the dot. Row-level window semantics
     // stay proven by the row-level window oracles that remain small
     // (q_window_topn / q_window_rank / q_window_firstlast).
-    "q_window_running" -> ((s, d) =>
+    QueryDef("q_window_running", (s, d) =>
       RelationalQueries.windowRunning(s, d)
         .groupBy("l_suppkey").agg(
           count(lit(1)).as("n"),
@@ -135,13 +215,33 @@ object SparkEntry {
           max("running_qty").as("run_max"),
           sum(col("running_qty") *
             ((col("l_orderkey") * 37L + col("l_linenumber")) % 997L)).as("run_dot"))
-        .orderBy("l_suppkey")),
-    "q_semi_anti" -> ((s, d) => RelationalQueries.semiAnti(s, d)),
+        .orderBy("l_suppkey"),
+      oracle = """WITH r AS (
+        |  SELECT l_suppkey, l_orderkey, l_linenumber,
+        |    CAST(sum(CAST(l_quantity AS BIGINT)) OVER (PARTITION BY l_suppkey
+        |      ORDER BY l_shipdate, l_orderkey, l_linenumber,
+        |        CAST(l_quantity AS BIGINT)
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_qty
+        |  FROM lineitem)
+        |SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(running_qty) AS BIGINT) AS run_sum,
+        |  CAST(max(running_qty) AS BIGINT) AS run_max,
+        |  CAST(sum(running_qty * ((l_orderkey * 37 + l_linenumber) % 997))
+        |    AS BIGINT) AS run_dot
+        |FROM r GROUP BY l_suppkey
+        |ORDER BY l_suppkey""".stripMargin),
+    QueryDef("q_semi_anti", (s, d) => RelationalQueries.semiAnti(s, d),
+      oracle = """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
+        |AND NOT EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
+        |ORDER BY c_custkey""".stripMargin),
     // D39/I15: Bloom-prefiltered semi-join — hash-equal to the plain
     // IN-subquery semi-join (Bloom has no false negatives); the filter
     // drops non-matching lineitem rows BEFORE the join shuffle, so at
     // scale the exchange carries matches, not the corpus.
-    "q_bloom_semi" -> ((s, d) => {
+    QueryDef("q_bloom_semi", (s, d) => {
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         cents(col("l_extendedprice")).as("price_cents"))
       val big = Tables.orders(s, d)
@@ -152,37 +252,181 @@ object SparkEntry {
         .groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n_items"), sum(col("price_cents")).as("rev_cents"))
         .orderBy(col("l_orderkey"))
-    }),
-    "q_setops" -> ((s, d) => RelationalQueries.setOps(s, d)),
-    "q_rollup" -> ((s, d) => RelationalQueries.rollup(s, d)),
-    "q_cube" -> ((s, d) => RelationalQueries.cube(s, d)),
-    "q_distinct_cond" -> ((s, d) => RelationalQueries.distinctCond(s, d)),
+    },
+      // Bloom prefilter is transparent to semantics: the twin is the
+      // plain IN-subquery semi-join + aggregation.
+      oracle = """SELECT l_orderkey,
+        |  count(*) AS n_items,
+        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS rev_cents
+        |FROM lineitem
+        |WHERE l_orderkey IN (
+        |  SELECT o_orderkey FROM orders WHERE o_totalprice > 480000.0)
+        |GROUP BY l_orderkey
+        |ORDER BY l_orderkey""".stripMargin),
+    QueryDef("q_setops", (s, d) => RelationalQueries.setOps(s, d),
+      oracle = """SELECT * FROM (
+        |  SELECT partkey, 'sold_extreme' AS tag FROM (
+        |    SELECT DISTINCT l_partkey AS partkey FROM lineitem
+        |    INTERSECT (
+        |      SELECT p_partkey FROM part WHERE p_size <= 10
+        |      UNION ALL SELECT p_partkey FROM part WHERE p_size >= 40))
+        |  UNION ALL
+        |  SELECT partkey, 'small_unsold' AS tag FROM (
+        |    SELECT p_partkey AS partkey FROM part WHERE p_size <= 10
+        |    EXCEPT SELECT DISTINCT l_partkey FROM lineitem))
+        |ORDER BY tag, partkey""".stripMargin),
+    QueryDef("q_rollup", (s, d) => RelationalQueries.rollup(s, d),
+      oracle = """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_price_cents,
+        |  count(*) AS n
+        |FROM lineitem
+        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    QueryDef("q_cube", (s, d) => RelationalQueries.cube(s, d),
+      oracle = """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_price_cents,
+        |  count(*) AS n
+        |FROM lineitem
+        |GROUP BY CUBE (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    QueryDef("q_distinct_cond", (s, d) => RelationalQueries.distinctCond(s, d),
+      oracle = """SELECT o_orderpriority,
+        |  count(DISTINCT o_custkey) AS n_cust,
+        |  count(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
+        |  CAST(sum(CASE WHEN o_orderstatus = 'O'
+        |    THEN CAST(round(o_totalprice*100) AS BIGINT) ELSE 0 END) AS BIGINT) AS open_cents
+        |FROM orders
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
     // D40: equi-width histogram, exact integer bin edges
-    "q_histogram" -> ((s, d) => RelationalQueries.histogram(s, d)),
+    QueryDef("q_histogram", (s, d) => RelationalQueries.histogram(s, d),
+      oracle = """WITH ev AS (
+        |  SELECT event_type,
+        |    CAST(round(value*100) AS BIGINT) AS v
+        |  FROM events),
+        |b AS (SELECT min(v) AS mn, max(v) AS mx FROM ev)
+        |SELECT event_type,
+        |  ((v - mn) * 10) // (mx - mn + 1) AS bin,
+        |  count(*) AS n,
+        |  min(v) AS lo_cents, max(v) AS hi_cents
+        |FROM ev CROSS JOIN b
+        |GROUP BY 1, 2 ORDER BY event_type, bin""".stripMargin),
     // D41: equi-depth histogram — contracted value distribution, tie-
     // coherent integer bucket assignment (never ntile: it splits ties)
-    "q_histogram_depth" -> ((s, d) => RelationalQueries.histogramDepth(s, d)),
+    QueryDef("q_histogram_depth", (s, d) => RelationalQueries.histogramDepth(s, d),
+      oracle = """WITH vals AS (
+        |  SELECT CAST(round(value*100) AS BIGINT) AS v, count(*) AS nv
+        |  FROM events GROUP BY 1),
+        |cum AS (
+        |  SELECT v, nv, sum(nv) OVER (ORDER BY v) AS cum FROM vals),
+        |tot AS (SELECT CAST(sum(nv) AS BIGINT) AS n_rows FROM vals)
+        |SELECT CAST(((cum - nv) * 8) // n_rows AS BIGINT) AS bucket,
+        |  CAST(sum(nv) AS BIGINT) AS n,
+        |  min(v) AS lo_cents, max(v) AS hi_cents
+        |FROM cum CROSS JOIN tot
+        |GROUP BY 1 ORDER BY bucket""".stripMargin),
     // D46: exact winsorization — per-group discrete-percentile clipping
     // via the count-of-counts contraction, broadcast thresholds
-    "q_winsorize" -> ((s, d) => RelationalQueries.winsorize(s, d)),
+    QueryDef("q_winsorize", (s, d) => RelationalQueries.winsorize(s, d),
+      oracle = """WITH ev AS (
+        |  SELECT event_type, CAST(round(value*100) AS BIGINT) AS v FROM events),
+        |cc AS (SELECT event_type, v, count(*) AS nv FROM ev GROUP BY 1, 2),
+        |cum AS (
+        |  SELECT event_type, v, nv,
+        |    sum(nv) OVER (PARTITION BY event_type ORDER BY v) AS cum
+        |  FROM cc),
+        |tot AS (SELECT event_type, CAST(sum(nv) AS BIGINT) AS n
+        |  FROM cc GROUP BY 1),
+        |lo AS (
+        |  SELECT c.event_type, min(c.v) AS lo_cents
+        |  FROM cum c JOIN tot t ON t.event_type = c.event_type
+        |  WHERE c.cum >= (5 * t.n + 99) // 100 GROUP BY 1),
+        |hi AS (
+        |  SELECT c.event_type, min(c.v) AS hi_cents
+        |  FROM cum c JOIN tot t ON t.event_type = c.event_type
+        |  WHERE c.cum >= (95 * t.n + 99) // 100 GROUP BY 1),
+        |cl AS (
+        |  SELECT e.event_type, e.v, lo.lo_cents, hi.hi_cents,
+        |    least(greatest(e.v, lo.lo_cents), hi.hi_cents) AS wv
+        |  FROM ev e
+        |  JOIN lo ON lo.event_type = e.event_type
+        |  JOIN hi ON hi.event_type = e.event_type)
+        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+        |  min(lo_cents) AS lo_cents, min(hi_cents) AS hi_cents,
+        |  CAST(sum(CASE WHEN v < lo_cents THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_lo,
+        |  CAST(sum(CASE WHEN v > hi_cents THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_hi,
+        |  CAST(sum(v) AS BIGINT) AS sum_raw_cents,
+        |  CAST(sum(wv) AS BIGINT) AS sum_wins_cents
+        |FROM cl GROUP BY 1 ORDER BY event_type""".stripMargin),
     // D48: exact 2-D skyline — divide-&-conquer frontier; oracle is the
     // quadratic NOT-EXISTS dominance join, so the hash proves exactness
-    "q_skyline" -> ((s, d) => RelationalQueries.skyline(s, d)),
+    QueryDef("q_skyline", (s, d) => RelationalQueries.skyline(s, d),
+      oracle = """WITH pts AS (
+        |  SELECT o.o_custkey, c.c_nationkey,
+        |    CAST(SUM(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |      AS spend_cents,
+        |    CAST(count(*) AS BIGINT) AS n_orders
+        |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+        |  GROUP BY 1, 2)
+        |SELECT p.c_nationkey, p.o_custkey, p.spend_cents, p.n_orders
+        |FROM pts p
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM pts q
+        |  WHERE q.c_nationkey = p.c_nationkey
+        |    AND q.spend_cents >= p.spend_cents
+        |    AND q.n_orders >= p.n_orders
+        |    AND (q.spend_cents > p.spend_cents OR q.n_orders > p.n_orders))
+        |ORDER BY p.c_nationkey, p.o_custkey""".stripMargin),
     // D49: exact per-group mode, ties to the smallest value —
     // count-of-counts contraction, no per-group raw sort
-    "q_mode" -> ((s, d) => RelationalQueries.modePerGroup(s, d)),
+    QueryDef("q_mode", (s, d) => RelationalQueries.modePerGroup(s, d),
+      oracle = """WITH cc AS (
+        |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v,
+        |    CAST(count(*) AS BIGINT) AS nv
+        |  FROM events GROUP BY 1, 2),
+        |rk AS (
+        |  SELECT event_type, v, nv,
+        |    row_number() OVER (PARTITION BY event_type
+        |      ORDER BY nv DESC, v) AS rn
+        |  FROM cc)
+        |SELECT event_type, v AS mode_cents, nv AS n_occurrences
+        |FROM rk WHERE rn = 1 ORDER BY event_type""".stripMargin),
     // B19: GDPR erasure propagation — distributed anti-join against a
     // data-derived erase set, survivor/erased accounting per type
-    "q_erasure" -> ((s, d) => RelationalQueries.erasure(s, d)),
+    QueryDef("q_erasure", (s, d) => RelationalQueries.erasure(s, d),
+      oracle = """WITH ev AS (SELECT event_type, user_id FROM events),
+        |surv AS (
+        |  SELECT event_type,
+        |    CAST(count(*) AS BIGINT) AS n_surviving,
+        |    CAST(count(DISTINCT user_id) AS BIGINT) AS n_users_surviving
+        |  FROM ev WHERE user_id % 97 <> 0 GROUP BY 1),
+        |gone AS (
+        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_erased
+        |  FROM ev WHERE user_id % 97 = 0 GROUP BY 1)
+        |SELECT s.event_type, s.n_surviving, s.n_users_surviving,
+        |  COALESCE(g.n_erased, 0) AS n_erased
+        |FROM surv s LEFT JOIN gone g ON g.event_type = s.event_type
+        |ORDER BY s.event_type""".stripMargin),
     // D43: exact trailing-7-day distinct users — distinct counts don't
     // compose across frames, so (user, day) rows explode into their
     // bounded ×7 window coverage instead
-    "q_window_distinct" -> ((s, d) =>
-      RelationalQueries.slidingDistinctUsers(s, d)),
+    QueryDef("q_window_distinct", (s, d) =>
+      RelationalQueries.slidingDistinctUsers(s, d),
+      oracle = """WITH ud AS (
+        |  SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
+        |  FROM events),
+        |b AS (SELECT max(day) AS dmax FROM ud),
+        |e AS (
+        |  SELECT user_id,
+        |    unnest(range(day, least(day + 7, dmax + 1))) AS window_day
+        |  FROM ud CROSS JOIN b)
+        |SELECT CAST(window_day AS BIGINT) AS window_day,
+        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_active_users
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
     // D42/I20: k smallest values per group through the custom
     // TypedImperativeAggregate (O(k) buffer, map-side partials) — the
     // oracle is the window form the aggregate replaces at scale
-    "q_topk_agg" -> ((s, d) =>
+    QueryDef("q_topk_agg", (s, d) =>
       Tables.events(s, d)
         .select(col("event_type"), cents(col("value")).as("v"))
         .groupBy(col("event_type"))
@@ -191,53 +435,89 @@ object SparkEntry {
         .select(col("event_type"),
           (col("pos") + 1).cast(LongType).as("rnk"),
           col("col").as("v_cents"))
-        .orderBy(col("event_type"), col("rnk"))),
+        .orderBy(col("event_type"), col("rnk")),
+      oracle = """SELECT event_type, CAST(rnk AS BIGINT) AS rnk, v AS v_cents FROM (
+        |  SELECT event_type, v, row_number() OVER (PARTITION BY event_type
+        |    ORDER BY v) AS rnk
+        |  FROM (SELECT event_type, CAST(round(value*100) AS BIGINT) AS v
+        |        FROM events))
+        |WHERE rnk <= 5 ORDER BY event_type, rnk""".stripMargin),
 
     // ---- B2..B6: SCD2 dimension maintenance on deterministic snapshots
-    "q_scd2_new" -> ((s, d) =>
+    QueryDef("q_scd2_new", (s, d) =>
       etl.Scd2.detectNew(etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.day2(s, d),
-        etl.Scd2Snapshots.Key).orderBy(col("terminal_id"))),
-    "q_scd2_deleted" -> ((s, d) =>
+        etl.Scd2Snapshots.Key).orderBy(col("terminal_id")),
+      oracle = s"""WITH $sqlSnaps
+         |SELECT * FROM scd_new ORDER BY terminal_id""".stripMargin),
+    QueryDef("q_scd2_deleted", (s, d) =>
       etl.Scd2.detectDeleted(etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.day2(s, d),
-        etl.Scd2Snapshots.Key).orderBy(col("terminal_id"))),
-    "q_scd2_changed" -> ((s, d) =>
+        etl.Scd2Snapshots.Key).orderBy(col("terminal_id")),
+      oracle = s"""WITH $sqlSnaps
+         |SELECT * FROM scd_deleted ORDER BY terminal_id""".stripMargin),
+    QueryDef("q_scd2_changed", (s, d) =>
       etl.Scd2.detectChanged(etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.day2(s, d),
-        etl.Scd2Snapshots.Key, etl.Scd2Snapshots.Attrs).orderBy(col("terminal_id"))),
-    "q_scd2_apply" -> ((s, d) => {
+        etl.Scd2Snapshots.Key, etl.Scd2Snapshots.Attrs).orderBy(col("terminal_id")),
+      oracle = s"""WITH $sqlSnaps
+         |SELECT * FROM scd_changed ORDER BY terminal_id""".stripMargin),
+    QueryDef("q_scd2_apply", (s, d) => {
       val h0 = etl.Scd2.init(etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.Day1)
       etl.Scd2.merge(h0, etl.Scd2Snapshots.day2(s, d), etl.Scd2Snapshots.Key,
         etl.Scd2Snapshots.Attrs, etl.Scd2Snapshots.Day2)
         .orderBy(col("terminal_id"), col("effective_from"), col("deleted_flg"))
-    }),
+    },
+      oracle = s"""SELECT * FROM $sqlScd2History
+         |ORDER BY terminal_id, effective_from, deleted_flg""".stripMargin),
     // B30: history squash round trip — split every span into two
     // identical abutting versions, squash, and land EXACTLY back on
     // the q_scd2_apply history (the oracle is that same history)
-    "q_scd2_squash" -> ((s, d) => {
+    QueryDef("q_scd2_squash", (s, d) => {
       val h0 = etl.Scd2.init(etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.Day1)
       val h = etl.Scd2.merge(h0, etl.Scd2Snapshots.day2(s, d), etl.Scd2Snapshots.Key,
         etl.Scd2Snapshots.Attrs, etl.Scd2Snapshots.Day2)
       etl.Scd2.squash(etl.Scd2.splitSpans(h),
         etl.Scd2Snapshots.Key, etl.Scd2Snapshots.Attrs)
         .orderBy(col("terminal_id"), col("effective_from"), col("deleted_flg"))
-    }),
-    "q_scd2_current" -> ((s, d) => {
+    },
+      // squash twin: splitting then squashing is the identity, so the
+      // oracle is the untouched apply history itself
+      oracle = s"""SELECT * FROM $sqlScd2History
+         |ORDER BY terminal_id, effective_from, deleted_flg""".stripMargin),
+    QueryDef("q_scd2_current", (s, d) => {
       val h0 = etl.Scd2.init(etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.Day1)
       etl.Scd2.currentView(
         etl.Scd2.merge(h0, etl.Scd2Snapshots.day2(s, d), etl.Scd2Snapshots.Key,
           etl.Scd2Snapshots.Attrs, etl.Scd2Snapshots.Day2))
         .orderBy(col("terminal_id"))
-    }),
+    },
+      oracle = s"""SELECT * FROM $sqlScd2History
+         |WHERE deleted_flg = 0 AND effective_to = '2999-12-31'
+         |ORDER BY terminal_id""".stripMargin),
     // B11: one-pass column profile over orders (timestamp pre-formatted
     // to a date string so min/max stringification is engine-neutral)
-    "q_profile" -> ((s, d) =>
+    QueryDef("q_profile", (s, d) =>
       etl.DataQuality.profile(
         Tables.orders(s, d).withColumn("o_orderdate",
           date_format(col("o_orderdate"), "yyyy-MM-dd")),
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate",
-          "o_orderpriority"))),
+          "o_orderpriority")),
+      // Profile twin: one SELECT per column over the same pre-formatted
+      // frame, UNION ALL into the tall shape.
+      oracle = {
+      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+        "o_orderdate", "o_orderpriority")
+      cols.map(c =>
+        s"""SELECT '$c' AS col_name, count(*) AS n_rows,
+           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
+           |  count(DISTINCT $c) AS n_distinct,
+           |  CAST(min($c) AS VARCHAR) AS min_v,
+           |  CAST(max($c) AS VARCHAR) AS max_v
+           |FROM (SELECT * REPLACE (strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate)
+           |      FROM orders)""".stripMargin)
+        .mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
+    }),
     // B16: distribution-drift monitor — rational chi-square between the
     // first/second halves of the event window, per event_type
-    "q_drift" -> ((s, d) => {
+    QueryDef("q_drift", (s, d) => {
       val ev = Tables.events(s, d).select(col("event_type"),
         expr("ts_us div 86400000000").as("day"), cents(col("value")).as("v"))
       val bounds = ev.agg(min(col("day")).as("dmin"))
@@ -246,11 +526,40 @@ object SparkEntry {
         tagged.filter(col("day") < col("dmin") + 15).select(col("event_type"), col("v")),
         tagged.filter(col("day") >= col("dmin") + 15).select(col("event_type"), col("v")),
         "event_type", "v")
-    }),
+    },
+      oracle = """WITH ev AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(round(value*100) AS BIGINT) AS v
+        |  FROM events),
+        |bdmin AS (SELECT min(day) AS dmin FROM ev),
+        |base AS (SELECT event_type, v FROM ev CROSS JOIN bdmin
+        |  WHERE day < dmin + 15),
+        |cur AS (SELECT event_type, v FROM ev CROSS JOIN bdmin
+        |  WHERE day >= dmin + 15),
+        |bounds AS (SELECT min(v) AS mn, max(v) AS mx FROM (
+        |  SELECT v FROM base UNION ALL SELECT v FROM cur)),
+        |b AS (SELECT event_type, ((v - mn) * 10) // (mx - mn + 1) AS bin,
+        |    count(*) AS n_b FROM base CROSS JOIN bounds GROUP BY 1, 2),
+        |c AS (SELECT event_type, ((v - mn) * 10) // (mx - mn + 1) AS bin,
+        |    count(*) AS n_c FROM cur CROSS JOIN bounds GROUP BY 1, 2),
+        |tb AS (SELECT event_type, CAST(sum(n_b) AS BIGINT) AS tb FROM b GROUP BY 1),
+        |tc AS (SELECT event_type, CAST(sum(n_c) AS BIGINT) AS tc FROM c GROUP BY 1),
+        |j AS (
+        |  SELECT b.event_type, b.bin,
+        |    CAST(COALESCE(c.n_c, 0) AS DOUBLE) AS ncd,
+        |    CAST(tb.tb AS DOUBLE) AS tbd, CAST(tc.tc AS DOUBLE) AS tcd,
+        |    CAST(b.n_b AS DOUBLE) AS nbd
+        |  FROM b
+        |  LEFT JOIN c ON c.event_type = b.event_type AND c.bin = b.bin
+        |  JOIN tb ON tb.event_type = b.event_type
+        |  JOIN tc ON tc.event_type = b.event_type)
+        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_bins,
+        |  CAST(SUM(CAST(ROUND(((ncd * tbd - tcd * nbd) * (ncd * tbd - tcd * nbd) * 1000000.0) / ((tbd * tcd) * nbd)) AS BIGINT)) AS BIGINT) AS chi2_u
+        |FROM j GROUP BY 1 ORDER BY event_type""".stripMargin),
     // B14: incremental aggregate maintenance — history and delta fold
     // to mergeable (n, sum, min, max) states; the oracle recomputes
     // from scratch, proving incremental == full
-    "q_incr_agg" -> ((s, d) => {
+    QueryDef("q_incr_agg", (s, d) => {
       val ev = Tables.events(s, d).select(col("user_id"),
         expr("ts_us div 86400000000").as("day"), cents(col("value")).as("v"))
       val bounds = ev.agg(min(col("day")).as("dmin"))
@@ -262,20 +571,69 @@ object SparkEntry {
           tagged.filter(col("day") >= col("dmin") + 15), "user_id", col("v")),
         "user_id")
         .orderBy(col("user_id"))
-    }),
+    },
+      oracle = """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents,
+        |  min(CAST(round(value*100) AS BIGINT)) AS min_cents,
+        |  max(CAST(round(value*100) AS BIGINT)) AS max_cents
+        |FROM events GROUP BY 1 ORDER BY user_id""".stripMargin),
     // B13: bucket-checksum reconciliation between the two SCD2 snapshot
     // days — O(buckets) exchange per side, differing buckets survive
-    "q_table_diff" -> ((s, d) =>
+    QueryDef("q_table_diff", (s, d) =>
       etl.TableDiff.diff(
         etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.day2(s, d),
-        etl.Scd2Snapshots.Key, etl.Scd2Snapshots.Attrs)),
+        etl.Scd2Snapshots.Key, etl.Scd2Snapshots.Attrs),
+      oracle = s"""WITH $sqlSnaps,
+         |la AS (
+         |  SELECT terminal_id % 256 AS bucket,
+         |    CAST(('0x'||substr(md5(CAST(terminal_id AS VARCHAR) || '|' ||
+         |      terminal_type || '|' || terminal_city || '|' ||
+         |      terminal_address),1,8)) AS BIGINT) AS rh
+         |  FROM snap1),
+         |lb AS (
+         |  SELECT terminal_id % 256 AS bucket,
+         |    CAST(('0x'||substr(md5(CAST(terminal_id AS VARCHAR) || '|' ||
+         |      terminal_type || '|' || terminal_city || '|' ||
+         |      terminal_address),1,8)) AS BIGINT) AS rh
+         |  FROM snap2),
+         |ga AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n,
+         |       CAST(bit_xor(rh) AS BIGINT) AS cs FROM la GROUP BY 1),
+         |gb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n,
+         |       CAST(bit_xor(rh) AS BIGINT) AS cs FROM lb GROUP BY 1)
+         |SELECT COALESCE(ga.bucket, gb.bucket) AS bucket,
+         |  COALESCE(ga.n, 0) AS n_left, COALESCE(gb.n, 0) AS n_right,
+         |  COALESCE(ga.cs, 0) AS xor_left, COALESCE(gb.cs, 0) AS xor_right
+         |FROM ga FULL OUTER JOIN gb ON ga.bucket = gb.bucket
+         |WHERE COALESCE(ga.n, 0) <> COALESCE(gb.n, 0)
+         |   OR COALESCE(ga.cs, 0) <> COALESCE(gb.cs, 0)
+         |ORDER BY bucket""".stripMargin),
     // B12: key-skew profiler — exact discrete frequency quantiles via
     // the count-of-counts contraction (no global sort of keys)
-    "q_skew_profile" -> ((s, d) =>
-      etl.DataQuality.skewProfile(Tables.events(s, d), "user_id")),
+    QueryDef("q_skew_profile", (s, d) =>
+      etl.DataQuality.skewProfile(Tables.events(s, d), "user_id"),
+      oracle = """WITH pk AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY 1),
+        |cc AS (SELECT cnt, count(*) AS nk FROM pk GROUP BY 1),
+        |cum AS (SELECT cnt, nk, sum(nk) OVER (ORDER BY cnt) AS cum FROM cc),
+        |tot AS (SELECT CAST(sum(nk) AS BIGINT) AS n_keys,
+        |               CAST(sum(cnt*nk) AS BIGINT) AS n_rows,
+        |               max(cnt) AS max_cnt, min(cnt) AS min_cnt FROM cc)
+        |SELECT metric, CAST(value AS BIGINT) AS value FROM (
+        |  SELECT 'max_cnt' AS metric, max_cnt AS value FROM tot
+        |  UNION ALL SELECT 'mean_cnt_ppm', (n_rows * 1000000) // n_keys FROM tot
+        |  UNION ALL SELECT 'min_cnt', min_cnt FROM tot
+        |  UNION ALL SELECT 'n_keys', n_keys FROM tot
+        |  UNION ALL SELECT 'n_rows', n_rows FROM tot
+        |  UNION ALL SELECT 'skew_ppm', (max_cnt * n_keys * 1000000) // n_rows FROM tot
+        |  UNION ALL SELECT 'p50_cnt', min(cnt) FROM cum CROSS JOIN tot
+        |    WHERE cum >= (1 * n_keys + 1) // 2
+        |  UNION ALL SELECT 'p90_cnt', min(cnt) FROM cum CROSS JOIN tot
+        |    WHERE cum >= (9 * n_keys + 9) // 10
+        |  UNION ALL SELECT 'p99_cnt', min(cnt) FROM cum CROSS JOIN tot
+        |    WHERE cum >= (99 * n_keys + 99) // 100)
+        |ORDER BY metric""".stripMargin),
     // B10: point-in-time join — facts dated across the snapshot window
     // resolve the dimension version effective on their date
-    "q_scd2_pit" -> ((s, d) => {
+    QueryDef("q_scd2_pit", (s, d) => {
       val h0 = etl.Scd2.init(etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.Day1)
       val hist = etl.Scd2.merge(h0, etl.Scd2Snapshots.day2(s, d),
         etl.Scd2Snapshots.Key, etl.Scd2Snapshots.Attrs, etl.Scd2Snapshots.Day2)
@@ -288,20 +646,48 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           countDistinct(col("l_partkey")).as("n_parts"))
         .orderBy(col("fact_dt"), col("terminal_city").asc_nulls_first)
-    }),
+    },
+      // PIT twin: same half-open windows, non-deleted versions joined in
+      // the ON clause so unmatched facts survive the left join.
+      oracle = s"""WITH hist AS (SELECT * FROM $sqlScd2History),
+         |f AS (
+         |  SELECT l_orderkey, l_partkey,
+         |    strftime(DATE '2024-03-01' +
+         |      CAST(l_orderkey % 4 AS INT) * INTERVAL 1 DAY, '%Y-%m-%d') AS fact_dt
+         |  FROM lineitem),
+         |j AS (
+         |  SELECT f.fact_dt, f.l_partkey, h.terminal_city
+         |  FROM f LEFT JOIN hist h ON h.terminal_id = f.l_partkey
+         |    AND h.deleted_flg = 0
+         |    AND f.fact_dt >= h.effective_from AND f.fact_dt < h.effective_to)
+         |SELECT fact_dt, terminal_city, count(*) AS n,
+         |  count(DISTINCT l_partkey) AS n_parts
+         |FROM j GROUP BY 1, 2
+         |ORDER BY fact_dt, terminal_city NULLS FIRST""".stripMargin),
 
     // ---- B8: CDC changelog from SCD2 history
-    "q_scd2_changelog" -> ((s, d) => {
+    QueryDef("q_scd2_changelog", (s, d) => {
       val h0 = etl.Scd2.init(etl.Scd2Snapshots.day1(s, d), etl.Scd2Snapshots.Day1)
       etl.Scd2.changelog(
         etl.Scd2.merge(h0, etl.Scd2Snapshots.day2(s, d), etl.Scd2Snapshots.Key,
           etl.Scd2Snapshots.Attrs, etl.Scd2Snapshots.Day2),
         etl.Scd2Snapshots.Key, etl.Scd2Snapshots.Attrs)
         .orderBy(col("key"), col("change_dt"), col("op"))
-    }),
+    },
+      oracle = s"""WITH hist AS (SELECT * FROM $sqlScd2History),
+         |v AS (
+         |  SELECT *, row_number() OVER (PARTITION BY terminal_id
+         |    ORDER BY effective_from, deleted_flg) AS rn
+         |  FROM hist)
+         |SELECT
+         |  CASE WHEN deleted_flg = 1 THEN 'D'
+         |       WHEN rn = 1 THEN 'I' ELSE 'U' END AS op,
+         |  terminal_id AS key, terminal_type, terminal_city, terminal_address,
+         |  effective_from AS change_dt
+         |FROM v ORDER BY key, change_dt, op""".stripMargin),
 
     // ---- B9: data-quality checks (orphans, duplicate keys)
-    "q_dq_summary" -> ((s, d) => {
+    QueryDef("q_dq_summary", (s, d) => {
       val li = Tables.lineitem(s, d)
       etl.DataQuality.summary(Seq(
         "orphan_partkeys" -> etl.DataQuality.orphans(
@@ -311,13 +697,22 @@ object SparkEntry {
           "p_partkey"),
         "dup_orderkeys" -> etl.DataQuality.duplicateKeys(li, "l_orderkey")))
         .orderBy(col("check_name"))
-    }),
+    },
+      oracle = """SELECT * FROM (
+        |  SELECT 'orphan_partkeys' AS check_name, count(*) AS violations
+        |  FROM lineitem l
+        |  WHERE NOT EXISTS (SELECT 1 FROM part p
+        |    WHERE p.p_partkey = l.l_partkey AND p.p_size <= 25)
+        |  UNION ALL
+        |  SELECT 'dup_orderkeys', count(*) FROM (
+        |    SELECT l_orderkey FROM lineitem GROUP BY 1 HAVING count(*) > 1))
+        |ORDER BY check_name""".stripMargin),
 
     // B29: declarative check suite — six constraints fused into ONE
     // scan (row-local conditional counts + one count-distinct) plus a
     // key-domain referential anti-join; c6's tight discount budget is
     // deliberately breachable so the FAIL path is exercised honestly
-    "q_dq_checks" -> ((s, d) => {
+    QueryDef("q_dq_checks", (s, d) => {
       val li = Tables.lineitem(s, d)
       etl.Checks.run(li, Seq(
         etl.Checks.NotNull("c1_shipdate_not_null", "l_shipdate"),
@@ -329,10 +724,41 @@ object SparkEntry {
         etl.Checks.Bounds("c6_discount_budget", cents(col("l_discount")), 0L, 8L),
         etl.Checks.Predicate("c7_price_covers_qty",
           cents(col("l_extendedprice")) >= cents(col("l_quantity")))))
-    }),
+    },
+      // check-suite twin: the same six fused row-local metrics + the
+      // referential key-domain count, one verdict row each
+      oracle = """WITH v AS (SELECT
+        |    COUNT(CASE WHEN l_shipdate IS NULL THEN 1 END) AS c1,
+        |    COUNT(CASE WHEN CAST(round(l_quantity*100) AS BIGINT) < 100
+        |      OR CAST(round(l_quantity*100) AS BIGINT) > 5000 THEN 1 END) AS c2,
+        |    COUNT(CASE WHEN l_returnflag NOT IN ('A','N','R')
+        |      OR l_returnflag IS NULL THEN 1 END) AS c3,
+        |    COUNT(*) - COUNT(DISTINCT (l_orderkey, l_linenumber)) AS c4,
+        |    COUNT(CASE WHEN CAST(round(l_discount*100) AS BIGINT) < 0
+        |      OR CAST(round(l_discount*100) AS BIGINT) > 8 THEN 1 END) AS c6,
+        |    COUNT(CASE WHEN NOT COALESCE(
+        |      CAST(round(l_extendedprice*100) AS BIGINT) >=
+        |      CAST(round(l_quantity*100) AS BIGINT), FALSE) THEN 1 END) AS c7
+        |  FROM lineitem),
+        |r AS (SELECT COUNT(*) AS c5 FROM (
+        |    SELECT DISTINCT l_orderkey AS k FROM lineitem
+        |    WHERE l_orderkey IS NOT NULL) f
+        |  WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = f.k)),
+        |u AS (
+        |  SELECT 'c1_shipdate_not_null' AS "check", c1 AS violations, 0 AS allowed FROM v
+        |  UNION ALL SELECT 'c2_qty_cents_bounds', c2, 0 FROM v
+        |  UNION ALL SELECT 'c3_returnflag_domain', c3, 0 FROM v
+        |  UNION ALL SELECT 'c4_line_unique', c4, 0 FROM v
+        |  UNION ALL SELECT 'c5_order_fk', c5, 0 FROM r
+        |  UNION ALL SELECT 'c6_discount_budget', c6, 0 FROM v
+        |  UNION ALL SELECT 'c7_price_covers_qty', c7, 0 FROM v)
+        |SELECT "check", CAST(violations AS BIGINT) AS violations,
+        |  CAST(allowed AS BIGINT) AS allowed,
+        |  CAST(CASE WHEN violations <= allowed THEN 1 ELSE 0 END AS BIGINT) AS pass
+        |FROM u ORDER BY "check"""".stripMargin),
 
     // ---- A1: delimited decode semantics (file-level reader: DelimitedSource)
-    "q_src_csv" -> ((s, d) => {
+    QueryDef("q_src_csv", (s, d) => {
       val lines = Tables.customer(s, d).select(
         concat_ws(";", col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_mktsegment")).as("line"))
@@ -343,13 +769,21 @@ object SparkEntry {
         f.getItem(2).cast(LongType).as("nationkey"),
         f.getItem(3).as("segment"))
         .orderBy(col("custkey"))
-    }),
+    },
+      oracle = """WITH lines AS (
+        |  SELECT CAST(c_custkey AS VARCHAR) || ';' || c_name || ';' ||
+        |         CAST(c_nationkey AS VARCHAR) || ';' || c_mktsegment AS line
+        |  FROM customer),
+        |p AS (SELECT string_split(line, ';') AS f FROM lines)
+        |SELECT CAST(f[1] AS BIGINT) AS custkey, f[2] AS name,
+        |       CAST(f[3] AS BIGINT) AS nationkey, f[4] AS segment
+        |FROM p ORDER BY custkey""".stripMargin),
 
     // ---- A7: ORC round-trip — write a projection of events to ORC,
     // read it back through the Orc() source, aggregate. The oracle runs
     // the same aggregate on the parquet originals, so the hash check
     // proves the ORC encode/decode preserves values exactly.
-    "q_src_orc" -> ((s, d) => {
+    QueryDef("q_src_orc", (s, d) => {
       val out = scratchDir("graft_orc_roundtrip")
       Tables.events(s, d)
         .select(col("user_id"), col("event_type"), cents(col("value")).as("v"))
@@ -360,43 +794,194 @@ object SparkEntry {
           sum(col("v")).as("sum_cents"),
           countDistinct(col("user_id")).as("n_users"))
         .orderBy(col("event_type"))
-    }),
+    },
+      oracle = """SELECT event_type, count(*) AS n,
+        |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents,
+        |  count(DISTINCT user_id) AS n_users
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin),
 
     // ---- E1..E11: training-data pipeline operators
-    "q_dedup_exact" -> ((s, d) => ops.Dedup.exact(Tables.documents(s, d))),
+    QueryDef("q_dedup_exact", (s, d) => ops.Dedup.exact(Tables.documents(s, d)),
+      oracle = """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
+        |  count(*) AS n_copies
+        |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin),
     // E37: normalization-aware dedup — injected case/punctuation
     // variants must collide on the normalized hash only
-    "q_dedup_norm" -> ((s, d) => {
+    QueryDef("q_dedup_norm", (s, d) => {
       val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val variants = base.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 20000000L).as("doc_id"),
           concat(upper(col("text")), lit(" .")).as("text"))
       ops.Dedup.exactNormalized(base.unionByName(variants))
-    }),
-    "q_dedup_minhash" -> ((s, d) => ops.Dedup.minhashLsh(Tables.documents(s, d))),
-    "q_dedup_verify" -> ((s, d) => ops.Dedup.lshVerify(Tables.documents(s, d))),
+    },
+      // Normalization-dedup twin: same ASCII-only normalization (DuckDB
+      // needs the 'g' flag for replace-all; Spark replaces all by
+      // default), same injected variants, same 2-level aggregation.
+      oracle = """WITH wd AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 20000000, upper(text) || ' .'
+        |  FROM documents WHERE doc_id % 50 = 0),
+        |h AS (
+        |  SELECT doc_id, md5(text) AS raw_hash,
+        |    md5(trim(regexp_replace(regexp_replace(lower(text),
+        |      '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS norm_hash
+        |  FROM wd),
+        |g AS (
+        |  SELECT norm_hash, raw_hash, min(doc_id) AS keep_id,
+        |    count(*) AS n_docs
+        |  FROM h GROUP BY 1, 2)
+        |SELECT norm_hash, min(keep_id) AS keep_id,
+        |  CAST(sum(n_docs) AS BIGINT) AS n_copies,
+        |  count(*) AS n_raw_variants
+        |FROM g GROUP BY 1 HAVING count(*) > 1
+        |ORDER BY keep_id""".stripMargin),
+    QueryDef("q_dedup_minhash", (s, d) => ops.Dedup.minhashLsh(Tables.documents(s, d)),
+      oracle = s"""WITH $sqlLshCtes
+         |SELECT id1, id2, n_shared_bands FROM cand ORDER BY id1, id2""".stripMargin),
+    QueryDef("q_dedup_verify", (s, d) => ops.Dedup.lshVerify(Tables.documents(s, d)),
+      oracle = s"""WITH $sqlLshCtes,
+         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
+         |j AS (
+         |  SELECT c.id1, c.id2, c.n_shared_bands,
+         |    CAST(len(list_intersect(a.shd, b.shd)) AS BIGINT) AS n_inter,
+         |    CAST(len(a.shd) + len(b.shd) AS BIGINT) AS n_sum
+         |  FROM cand c
+         |  JOIN sd a ON c.id1 = a.doc_id
+         |  JOIN sd b ON c.id2 = b.doc_id)
+         |SELECT id1, id2, n_shared_bands, n_inter,
+         |  n_sum - n_inter AS n_union,
+         |  n_inter / (n_sum - n_inter) AS jaccard
+         |FROM j ORDER BY id1, id2""".stripMargin),
     // E71: the pair forensic mart — every overlap measure + triage
     // class off ONE verify pass
-    "q_dedup_explain" -> ((s, d) => ops.Dedup.dupExplain(Tables.documents(s, d))),
+    QueryDef("q_dedup_explain", (s, d) => ops.Dedup.dupExplain(Tables.documents(s, d)),
+      // E71 twin: the same verified candidates, all measures + the same
+      // class ladder in integer ppm
+      oracle = s"""WITH $sqlLshCtes,
+         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
+         |j AS (
+         |  SELECT c.id1, c.id2, c.n_shared_bands,
+         |    CAST(len(list_intersect(a.shd, b.shd)) AS BIGINT) AS n_inter,
+         |    CAST(len(a.shd) AS BIGINT) AS n1,
+         |    CAST(len(b.shd) AS BIGINT) AS n2
+         |  FROM cand c
+         |  JOIN sd a ON c.id1 = a.doc_id
+         |  JOIN sd b ON c.id2 = b.doc_id),
+         |m AS (
+         |  SELECT *,
+         |    CAST(1000000 * n_inter // (n1 + n2 - n_inter) AS BIGINT) AS jac_ppm,
+         |    CAST((n_inter * 1000000) // greatest(least(n1, n2), 1) AS BIGINT) AS cont_ppm,
+         |    CAST((least(n1, n2) * 1000000) // greatest(n1, n2) AS BIGINT) AS len_ratio_ppm
+         |  FROM j)
+         |SELECT id1, id2, n_shared_bands, n_inter, n1, n2,
+         |  jac_ppm, cont_ppm, len_ratio_ppm,
+         |  CASE WHEN n_inter = n1 AND n_inter = n2 THEN 'identical_grams'
+         |       WHEN cont_ppm = 1000000 THEN 'containment'
+         |       WHEN jac_ppm >= 700000 THEN 'near_dup'
+         |       ELSE 'candidate_only' END AS "class"
+         |FROM m ORDER BY id1, id2""".stripMargin),
     // E69: the what-if curve over candidate Jaccard cutoffs — one
     // verify pass, every threshold row emitted even when empty
-    "q_dedup_curve" -> ((s, d) =>
-      ops.Dedup.thresholdCurve(Tables.documents(s, d))),
+    QueryDef("q_dedup_curve", (s, d) =>
+      ops.Dedup.thresholdCurve(Tables.documents(s, d)),
+      // E69: threshold fold over the same verified candidates, integer
+      // ppm jaccard, zero-completed threshold rows
+      oracle = s"""WITH $sqlLshCtes,
+         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
+         |j AS (
+         |  SELECT c.id1, c.id2,
+         |    CAST(1000000 * len(list_intersect(a.shd, b.shd))
+         |      // (len(a.shd) + len(b.shd)
+         |         - len(list_intersect(a.shd, b.shd))) AS BIGINT)
+         |      AS jac_ppm
+         |  FROM cand c
+         |  JOIN sd a ON c.id1 = a.doc_id
+         |  JOIN sd b ON c.id2 = b.doc_id),
+         |th AS (SELECT CAST(unnest([500000, 700000, 800000, 900000,
+         |    1000000]) AS BIGINT) AS threshold_ppm),
+         |f AS (SELECT t.threshold_ppm, j.id1, j.id2
+         |  FROM th t JOIN j ON j.jac_ppm >= t.threshold_ppm),
+         |np AS (SELECT threshold_ppm, CAST(count(*) AS BIGINT) AS n_pairs
+         |  FROM f GROUP BY 1),
+         |nd AS (SELECT threshold_ppm,
+         |    CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
+         |  FROM (SELECT threshold_ppm, unnest([id1, id2]) AS doc FROM f)
+         |  GROUP BY 1)
+         |SELECT t.threshold_ppm,
+         |  coalesce(np.n_pairs, 0) AS n_pairs,
+         |  coalesce(nd.n_docs, 0) AS n_docs
+         |FROM th t
+         |LEFT JOIN np USING (threshold_ppm)
+         |LEFT JOIN nd USING (threshold_ppm)
+         |ORDER BY t.threshold_ppm""".stripMargin),
     // E53: incremental delta-vs-corpus dedup — batch docs probe the
     // standing corpus band index; per-doc candidate/dup accounting
-    "q_dedup_incremental" -> ((s, d) =>
-      ops.Dedup.incrementalLsh(Tables.documents(s, d))),
-    "q_dedup_clusters" -> ((s, d) => ops.Dedup.lshClusters(Tables.documents(s, d))),
+    QueryDef("q_dedup_incremental", (s, d) =>
+      ops.Dedup.incrementalLsh(Tables.documents(s, d)),
+      // E53 twin: batch = synthetic re-crawl copies (replica-aware id
+      // range, shared constants with Dedup.incrementalLsh) + the %10=7
+      // fresh slice; candidates vs corpus (any) and vs smaller-id batch
+      // docs; exact-Jaccard gate 7/10 in integers
+      oracle = s"""WITH $sqlLshCtes,
+         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
+         |ci AS (
+         |  SELECT DISTINCT b.doc_id, o.doc_id AS other_id,
+         |    CASE WHEN ${sqlIsBatchDoc("o.doc_id")}
+         |         THEN 0 ELSE 1 END AS from_corpus
+         |  FROM bands b JOIN bands o
+         |    ON b.band = o.band AND b.bucket = o.bucket
+         |   AND b.doc_id <> o.doc_id
+         |  WHERE (${sqlIsBatchDoc("b.doc_id")})
+         |    AND (NOT (${sqlIsBatchDoc("o.doc_id")})
+         |         OR o.doc_id < b.doc_id)),
+         |gt AS (
+         |  SELECT c.doc_id, c.from_corpus,
+         |    CASE WHEN 10 * len(list_intersect(a.shd, o.shd))
+         |         >= 7 * (len(a.shd) + len(o.shd)
+         |                 - len(list_intersect(a.shd, o.shd)))
+         |         THEN 1 ELSE 0 END AS dup
+         |  FROM ci c
+         |  JOIN sd a ON c.doc_id = a.doc_id
+         |  JOIN sd o ON c.other_id = o.doc_id)
+         |SELECT nd.doc_id,
+         |  CAST(COALESCE(sum(gt.from_corpus), 0) AS BIGINT) AS n_cand_corpus,
+         |  CAST(COALESCE(count(gt.from_corpus), 0)
+         |       - COALESCE(sum(gt.from_corpus), 0) AS BIGINT) AS n_cand_batch,
+         |  CAST(COALESCE(sum(gt.dup), 0) AS BIGINT) AS n_dup,
+         |  CAST(COALESCE(max(gt.dup), 0) AS BIGINT) AS is_dup
+         |FROM (SELECT doc_id FROM t
+         |      WHERE ${sqlIsBatchDoc("doc_id")}) nd
+         |LEFT JOIN gt ON nd.doc_id = gt.doc_id
+         |GROUP BY nd.doc_id ORDER BY nd.doc_id""".stripMargin),
+    QueryDef("q_dedup_clusters", (s, d) => ops.Dedup.lshClusters(Tables.documents(s, d)),
+      oracle = sqlClustersOracle),
     // E26: same clusters via alternating large-star/small-star
     // contraction — O(log² path) rounds, the adversarial-graph scale path
-    "q_dedup_cc" -> ((s, d) => ops.Dedup.lshClustersScalable(Tables.documents(s, d))),
-    "q_dedup_simhash" -> ((s, d) => ops.Dedup.simhash(Tables.documents(s, d))),
+    QueryDef("q_dedup_cc", (s, d) => ops.Dedup.lshClustersScalable(Tables.documents(s, d)),
+      // same transitive-closure truth — the Spark side differs (alternating
+      // star contraction instead of min-label propagation)
+      oracle = sqlClustersOracle),
+    QueryDef("q_dedup_simhash", (s, d) => ops.Dedup.simhash(Tables.documents(s, d)),
+      oracle = """WITH toksd AS (
+        |  SELECT doc_id, unnest(list_distinct(string_split(text,' '))) AS tok
+        |  FROM documents),
+        |h AS (
+        |  SELECT doc_id, CAST(('0x'||substr(md5(tok),1,8)) AS BIGINT) AS h
+        |  FROM toksd),
+        |v AS (
+        |  SELECT doc_id, bit,
+        |    SUM(CASE WHEN (h >> CAST(bit AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
+        |  FROM h, range(0,16) r(bit) GROUP BY doc_id, bit)
+        |SELECT doc_id,
+        |  CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << CAST(bit AS INTEGER)) ELSE 0 END) AS BIGINT) AS simhash
+        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // ---- G4 end-to-end: perceptual-hash media near-dup through the
     // deterministic stub decoder. Payloads are index-derived, so the
     // DuckDB twin regenerates the identical byte strings and replays
     // the decoder's rolling-hash scan with a recursive CTE — the whole
     // decode→aHash→banded-LSH→Hamming-verify pipeline is hash-checked.
-    "q_phash_dups" -> ((s, d) => {
+    QueryDef("q_phash_dups", (s, d) => {
       val media = multimodal.Multimodal.syntheticMedia(s, 500)
       val withDups = media.unionByName(
         media.filter(col("media_id") % 50 === 0)
@@ -405,12 +990,65 @@ object SparkEntry {
       multimodal.Multimodal.phashDups(
         multimodal.Multimodal.perceptualHash(withDups,
           multimodal.Multimodal.StubDecoder))
-    }),
+    },
+      // G4 twin: regenerate the index-derived payload strings, replay the
+      // stub decoder's sequential rolling hash (acc = (31·acc + byte) mod
+      // 2³²) as a recursive CTE, then aHash bits / 16-bit bands / Hamming
+      // verify — all in exact integer space except the mean compare,
+      // which is the same single IEEE division on both engines. The
+      // 64-bit phash itself is never materialized here (bit tables
+      // instead), dodging cross-engine signed-shift semantics.
+      oracle = """WITH RECURSIVE base AS (
+        |  SELECT i AS media_id, i AS src FROM range(500) t(i)
+        |  UNION ALL
+        |  SELECT i + 10000 AS media_id, i AS src FROM range(500) t(i) WHERE i % 50 = 0),
+        |medias AS (
+        |  SELECT media_id,
+        |    'media-' || src || '-' ||
+        |    (CASE src % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) ||
+        |    '-payload' AS payload
+        |  FROM base),
+        |m2 AS (
+        |  SELECT media_id, payload, length(payload) AS len,
+        |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma
+        |  FROM medias),
+        |scan AS (
+        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
+        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
+        |  FROM m2
+        |  UNION ALL
+        |  SELECT media_id, payload, len, n_luma, i + 1,
+        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
+        |  FROM scan WHERE i + 1 < n_luma),
+        |luma AS (SELECT media_id, i, acc % 256 AS v FROM scan),
+        |stats AS (
+        |  SELECT media_id, count(*) AS n, CAST(SUM(v) AS BIGINT) AS s
+        |  FROM luma GROUP BY 1),
+        |bits AS (
+        |  SELECT st.media_id, b.i AS bit,
+        |    CASE WHEN l.v > st.s / st.n THEN 1 ELSE 0 END AS bs
+        |  FROM stats st CROSS JOIN range(64) b(i)
+        |  JOIN luma l ON l.media_id = st.media_id AND l.i = b.i % st.n),
+        |bands AS (
+        |  SELECT media_id, bit // 16 AS band,
+        |    CAST(SUM(CASE WHEN bs = 1 THEN (CAST(1 AS BIGINT) << CAST(bit % 16 AS INTEGER)) ELSE 0 END) AS BIGINT) AS bv
+        |  FROM bits GROUP BY 1, 2),
+        |cand AS (
+        |  SELECT DISTINCT a.media_id AS id1, b.media_id AS id2
+        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.media_id < b.media_id)
+        |SELECT c.id1, c.id2,
+        |  CAST(SUM(CASE WHEN x.bs <> y.bs THEN 1 ELSE 0 END) AS BIGINT) AS hamming
+        |FROM cand c
+        |JOIN bits x ON x.media_id = c.id1
+        |JOIN bits y ON y.media_id = c.id2 AND y.bit = x.bit
+        |GROUP BY 1, 2
+        |HAVING SUM(CASE WHEN x.bs <> y.bs THEN 1 ELSE 0 END) <= 8
+        |ORDER BY 1, 2""".stripMargin),
     // ---- G2 end-to-end: the batched per-partition decode + feature
     // extraction itself, hash-checked via the same decoder-replay
     // technique as q_phash_dups (exact integer lumas; the mean is one
     // IEEE division on both engines).
-    "q_media_features" -> ((s, d) =>
+    QueryDef("q_media_features", (s, d) =>
       multimodal.Multimodal.extractFeatures(
         multimodal.Multimodal.syntheticMedia(s, 500),
         multimodal.Multimodal.StubDecoder)
@@ -420,24 +1058,74 @@ object SparkEntry {
           col("height").cast(LongType).as("height"),
           col("n_frames").cast(LongType).as("n_frames"),
           col("mean_luma"), col("max_luma"))
-        .orderBy(col("media_id"))),
+        .orderBy(col("media_id")),
+      // G2 twin: decoder replay (same recursive CTE as q_phash_dups,
+      // without the dup injection), then per-media feature aggregates.
+      oracle = """WITH RECURSIVE medias AS (
+        |  SELECT i AS media_id,
+        |    (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) AS kind,
+        |    'media-' || i || '-' ||
+        |    (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) ||
+        |    '-payload' AS payload
+        |  FROM range(500) t(i)),
+        |m2 AS (
+        |  SELECT media_id, kind, payload, length(payload) AS len,
+        |    4 + length(payload) % 8 AS w, 3 + length(payload) % 5 AS h,
+        |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma,
+        |    CASE WHEN kind = 'video' THEN 1 + length(payload) % 7 ELSE 1 END AS frames
+        |  FROM medias),
+        |scan AS (
+        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
+        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
+        |  FROM m2
+        |  UNION ALL
+        |  SELECT media_id, payload, len, n_luma, i + 1,
+        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
+        |  FROM scan WHERE i + 1 < n_luma),
+        |stats AS (
+        |  SELECT media_id, count(*) AS n,
+        |    CAST(SUM(acc % 256) AS BIGINT) AS s,
+        |    CAST(MAX(acc % 256) AS DOUBLE) AS mx
+        |  FROM scan GROUP BY 1)
+        |SELECT m.media_id, m.kind,
+        |  CAST(m.w AS BIGINT) AS width, CAST(m.h AS BIGINT) AS height,
+        |  CAST(m.frames AS BIGINT) AS n_frames,
+        |  st.s / st.n AS mean_luma, st.mx AS max_luma
+        |FROM m2 m JOIN stats st USING (media_id)
+        |ORDER BY m.media_id""".stripMargin),
     // ---- G3 end-to-end: frame-sampling plumbing (every 2nd frame
     // index), replayed in SQL from the stub's metadata derivation.
-    "q_frame_sample" -> ((s, d) =>
+    QueryDef("q_frame_sample", (s, d) =>
       multimodal.Multimodal.sampleFrames(
         multimodal.Multimodal.extractFeatures(
           multimodal.Multimodal.syntheticMedia(s, 500),
           multimodal.Multimodal.StubDecoder), stride = 2)
         .select(col("media_id"),
           col("frame_idx").cast(LongType).as("frame_idx"))
-        .orderBy(col("media_id"), col("frame_idx"))),
+        .orderBy(col("media_id"), col("frame_idx")),
+      // G3 twin: frame indices from the stub's metadata derivation alone.
+      oracle = """WITH medias AS (
+        |  SELECT i AS media_id,
+        |    (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) AS kind,
+        |    length('media-' || i || '-' ||
+        |      (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) ||
+        |      '-payload') AS len
+        |  FROM range(500) t(i)),
+        |f AS (
+        |  SELECT media_id,
+        |    CASE WHEN kind = 'video' THEN 1 + len % 7 ELSE 1 END AS frames
+        |  FROM medias)
+        |SELECT media_id,
+        |  unnest(range(0, CAST(frames AS BIGINT), 2)) AS frame_idx
+        |FROM f
+        |ORDER BY media_id, frame_idx""".stripMargin),
     // ---- G5 end-to-end (r7): temporal frame-sequence near-dup. G3's
     // sampler fans each synthetic video into frames, each frame pHashes
     // per-partition (payloads never shuffle), then the E55-style
     // shingle join + D70 diagonal islands find shared RUNS — the
     // re-upload/clip shape per-frame equality can't see. DuckDB
     // replays the stub decode per frame exactly like q_phash_dups.
-    "q_video_dups" -> ((s, d) => {
+    QueryDef("q_video_dups", (s, d) => {
       val m = multimodal.Multimodal
       val vids = m.syntheticVideos(s, 60)
       val frames = m.sampleFrames(
@@ -445,47 +1133,332 @@ object SparkEntry {
       m.videoRunDups(
         m.framePhashes(m.syntheticFramePayloads(frames), m.StubDecoder)
           .toDF())
-    }),
+    },
+      // G5 twin: the whole video pipeline replayed — padded video
+      // payloads → stub frame counts → per-frame payload derivation
+      // (re-upload rule) → per-frame stub decode (same recursive scan as
+      // q_phash_dups, keyed by (media, frame)) → signed 64-bit phash →
+      // 3-frame shingles (lead window) → shared-sig join → diagonal
+      // islands → per-pair run aggregates.
+      oracle = """WITH RECURSIVE vids AS (
+        |  SELECT i AS media_id, 'media-' || i || '-video' AS base
+        |  FROM range(60) t(i)),
+        |pv AS (
+        |  SELECT media_id, base || repeat('x',
+        |    CAST((6 - length(base) % 7 + 7) % 7 + 7 * (media_id % 3)
+        |      AS INTEGER)) AS vp
+        |  FROM vids),
+        |meta AS (
+        |  SELECT media_id, 1 + length(vp) % 7 AS n_frames FROM pv),
+        |frames AS (
+        |  SELECT m.media_id, f.i AS frame_idx
+        |  FROM meta m JOIN range(7) f(i) ON f.i < m.n_frames),
+        |fp AS (
+        |  SELECT media_id, frame_idx,
+        |    'frame-' || (CASE WHEN media_id % 5 = 4 AND frame_idx >= 2
+        |      THEN CAST(media_id - 4 AS VARCHAR) || ':' ||
+        |           CAST(frame_idx - 2 AS VARCHAR)
+        |      ELSE CAST(media_id AS VARCHAR) || ':' ||
+        |           CAST(frame_idx AS VARCHAR) END) AS pay
+        |  FROM frames),
+        |f2 AS (
+        |  SELECT media_id, frame_idx, pay, length(pay) AS len,
+        |    (4 + length(pay) % 8) * (3 + length(pay) % 5) AS n_luma
+        |  FROM fp),
+        |scan AS (
+        |  SELECT media_id, frame_idx, pay, len, n_luma,
+        |    CAST(0 AS BIGINT) AS i,
+        |    CAST((17*31 + ascii(substr(pay, 1, 1))) % 4294967296
+        |      AS BIGINT) AS acc
+        |  FROM f2
+        |  UNION ALL
+        |  SELECT media_id, frame_idx, pay, len, n_luma, i + 1,
+        |    (acc * 31 + ascii(substr(pay,
+        |      CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
+        |  FROM scan WHERE i + 1 < n_luma),
+        |luma AS (
+        |  SELECT media_id, frame_idx, i, acc % 256 AS v FROM scan),
+        |stats AS (
+        |  SELECT media_id, frame_idx, count(*) AS n,
+        |    CAST(SUM(v) AS BIGINT) AS s
+        |  FROM luma GROUP BY 1, 2),
+        |bits AS (
+        |  SELECT st.media_id, st.frame_idx, b.i AS bit,
+        |    CASE WHEN l.v > st.s / st.n THEN 1 ELSE 0 END AS bs
+        |  FROM stats st CROSS JOIN range(64) b(i)
+        |  JOIN luma l ON l.media_id = st.media_id
+        |    AND l.frame_idx = st.frame_idx AND l.i = b.i % st.n),
+        |ph AS (
+        |  SELECT media_id, frame_idx,
+        |    CAST(CASE WHEN hv >= 9223372036854775808
+        |      THEN hv - 18446744073709551616 ELSE hv END AS BIGINT)
+        |      AS phash
+        |  FROM (
+        |    SELECT media_id, frame_idx,
+        |      SUM(CAST(bs AS HUGEINT) *
+        |        (CAST(1 AS HUGEINT) << CAST(bit AS INTEGER))) AS hv
+        |    FROM bits GROUP BY 1, 2)),
+        |sh AS (
+        |  SELECT media_id, frame_idx AS sidx,
+        |    md5(CAST(phash AS VARCHAR) || ':' || CAST(h1 AS VARCHAR)
+        |      || ':' || CAST(h2 AS VARCHAR)) AS sig
+        |  FROM (
+        |    SELECT media_id, frame_idx, phash,
+        |      lead(phash, 1) OVER (PARTITION BY media_id
+        |        ORDER BY frame_idx) AS h1,
+        |      lead(phash, 2) OVER (PARTITION BY media_id
+        |        ORDER BY frame_idx) AS h2
+        |    FROM ph)
+        |  WHERE h1 IS NOT NULL AND h2 IS NOT NULL),
+        |shared AS (
+        |  SELECT a.media_id AS vid1, b.media_id AS vid2,
+        |    a.sidx AS i1, a.sidx - b.sidx AS diag
+        |  FROM sh a JOIN sh b
+        |    ON a.sig = b.sig AND a.media_id < b.media_id),
+        |runs AS (
+        |  SELECT vid1, vid2, diag, grp,
+        |    CAST(count(*) AS BIGINT) AS n_shingles
+        |  FROM (SELECT vid1, vid2, diag, i1,
+        |          i1 - row_number() OVER (PARTITION BY vid1, vid2, diag
+        |            ORDER BY i1) AS grp
+        |        FROM shared)
+        |  GROUP BY 1, 2, 3, 4)
+        |SELECT CAST(vid1 AS BIGINT) AS vid1, CAST(vid2 AS BIGINT) AS vid2,
+        |  CAST(SUM(n_shingles) AS BIGINT) AS n_shared_shingles,
+        |  CAST(MAX(n_shingles) + 2 AS BIGINT) AS longest_run_frames,
+        |  CAST(count(*) AS BIGINT) AS n_runs
+        |FROM runs GROUP BY 1, 2 ORDER BY vid1, vid2""".stripMargin),
     // G6: audio near-dup via fingerprint alignment histogram over the
     // stub decode (decoder replayed in the oracle's recursive SQL)
-    "q_audio_dups" -> ((s, d) => {
+    QueryDef("q_audio_dups", (s, d) => {
       val m = multimodal.Multimodal
       m.audioAlignDups(
         m.audioFingerprints(m.syntheticAudio(s, 60), m.StubDecoder).toDF())
+    },
+      // G6 twin: the audio pipeline replayed — remaster payload rule →
+      // stub sample scan (same recursion as q_phash_dups) → sliding
+      // 13-sample windows → 12 successive-comparison bits → df-capped
+      // fingerprint join → per-(pair, offset) vote histogram → best
+      // alignment per pair
+      oracle = """WITH RECURSIVE medias AS (
+        |  SELECT CAST(i AS BIGINT) AS media_id,
+        |    CASE WHEN i % 4 = 3
+        |      THEN 'audio-track-' || (i - 3) || '-program-material-remaster-v2'
+        |      ELSE 'audio-track-' || i || '-program-material' END AS payload
+        |  FROM range(60) t(i)),
+        |m2 AS (
+        |  SELECT media_id, payload, length(payload) AS len,
+        |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma
+        |  FROM medias),
+        |scan AS (
+        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
+        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
+        |  FROM m2
+        |  UNION ALL
+        |  SELECT media_id, payload, len, n_luma, i + 1,
+        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
+        |  FROM scan WHERE i + 1 < n_luma),
+        |luma AS (SELECT media_id, n_luma, i, acc % 256 AS v FROM scan),
+        |wins AS (
+        |  SELECT DISTINCT l.media_id, CAST(w.w AS BIGINT) AS w
+        |  FROM luma l CROSS JOIN range(0, 4096, 2) w(w)
+        |  WHERE w.w <= l.n_luma - 13),
+        |fp AS (
+        |  SELECT ws.media_id, ws.w AS win_idx,
+        |    CAST(SUM(CASE WHEN hi.v > lo.v
+        |      THEN (CAST(1 AS BIGINT) << CAST(b.b AS INTEGER)) ELSE 0 END) AS BIGINT) AS fhash
+        |  FROM wins ws CROSS JOIN range(12) b(b)
+        |  JOIN luma hi ON hi.media_id = ws.media_id AND hi.i = ws.w + b.b + 1
+        |  JOIN luma lo ON lo.media_id = ws.media_id AND lo.i = ws.w + b.b
+        |  GROUP BY 1, 2),
+        |keepf AS (
+        |  SELECT fhash FROM fp GROUP BY 1
+        |  HAVING COUNT(DISTINCT media_id) <= 10),
+        |hf AS (SELECT fp.* FROM fp JOIN keepf USING (fhash)),
+        |votes AS (
+        |  SELECT a.media_id AS id1, b.media_id AS id2,
+        |    a.win_idx - b.win_idx AS delta,
+        |    CAST(COUNT(*) AS BIGINT) AS n_matches
+        |  FROM hf a JOIN hf b ON a.fhash = b.fhash AND a.media_id < b.media_id
+        |  GROUP BY 1, 2, 3
+        |  HAVING COUNT(*) >= 3),
+        |best AS (
+        |  SELECT *, row_number() OVER (PARTITION BY id1, id2
+        |    ORDER BY n_matches DESC, delta) AS rn FROM votes)
+        |SELECT id1, id2, delta AS best_delta, n_matches
+        |FROM best WHERE rn = 1 ORDER BY id1, id2""".stripMargin),
+    QueryDef("q_lang_id", (s, d) => ops.TextAnalysis.langId(Tables.documents(s, d)),
+      oracle = {
+      val lex = Map(
+        "de" -> "['join','merge','sort','order']",
+        "en" -> "['the','a','of','key']",
+        "es" -> "['data','row','table','column']",
+        "fr" -> "['query','filter','group','window']",
+        "zh" -> "['spark','stream','batch','vector']")
+      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
+        s"CAST(len(list_filter(toks, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
+        .mkString(",\n    ")
+      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
+        s"WHEN score_$c = g THEN '$c'").mkString(" ")
+      s"""WITH t AS (SELECT doc_id, lang, string_split(text,' ') AS toks FROM documents),
+         |s AS (
+         |  SELECT doc_id, lang,
+         |    $scores
+         |  FROM t),
+         |g AS (SELECT *, greatest(score_de, score_en, score_es, score_fr, score_zh) AS g FROM s)
+         |SELECT doc_id, lang, score_de, score_en, score_es, score_fr, score_zh,
+         |  CASE $cases ELSE 'und' END AS pred_lang
+         |FROM g ORDER BY doc_id""".stripMargin
     }),
-    "q_lang_id" -> ((s, d) => ops.TextAnalysis.langId(Tables.documents(s, d))),
-    "q_quality" -> ((s, d) => ops.TextAnalysis.qualityScore(Tables.documents(s, d))),
-    "q_token_count" -> ((s, d) => ops.TextAnalysis.tokenCount(Tables.documents(s, d))),
-    "q_fingerprint" -> ((s, d) => ops.TextAnalysis.fingerprint(Tables.documents(s, d))),
+    QueryDef("q_quality", (s, d) => ops.TextAnalysis.qualityScore(Tables.documents(s, d)),
+      oracle = """WITH t AS (SELECT doc_id, text, string_split(text,' ') AS toks FROM documents),
+        |c AS (
+        |  SELECT doc_id,
+        |    CAST(length(text) AS BIGINT) AS n_chars,
+        |    CAST(len(toks) AS BIGINT) AS n_tokens,
+        |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(toks, x -> CAST(length(x) AS BIGINT))), (a,b) -> a+b) AS BIGINT) AS sum_tok_len,
+        |    CAST(len(list_filter(toks, x -> list_contains(
+        |      ['join','merge','sort','order','the','a','of','key','data','row','table','column',
+        |       'query','filter','group','window','spark','stream','batch','vector'], x))) AS BIGINT) AS stop_hits
+        |  FROM t),
+        |r AS (
+        |  SELECT *,
+        |    n_distinct / n_tokens AS distinct_ratio,
+        |    sum_tok_len / n_tokens AS mean_tok_len,
+        |    stop_hits / n_tokens AS stop_ratio
+        |  FROM c)
+        |SELECT doc_id, n_chars, n_tokens, n_distinct, sum_tok_len, stop_hits,
+        |  distinct_ratio, mean_tok_len, stop_ratio,
+        |  CAST((n_tokens >= 20 AND n_tokens <= 1000 AND distinct_ratio >= 0.05) AS BIGINT) AS quality_ok
+        |FROM r ORDER BY doc_id""".stripMargin),
+    QueryDef("q_token_count", (s, d) => ops.TextAnalysis.tokenCount(Tables.documents(s, d)),
+      oracle = """SELECT doc_id,
+        |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_ws,
+        |  CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS n_words,
+        |  CAST((length(text) + 3) // 4 AS BIGINT) AS n_bpe_est
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q_fingerprint", (s, d) => ops.TextAnalysis.fingerprint(Tables.documents(s, d)),
+      oracle = """SELECT doc_id,
+        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |    list_transform(string_split(text,' '),
+        |      t -> CAST(('0x'||substr(md5(t),1,8)) AS BIGINT))),
+        |    (a,b) -> (a*1000003 + b) % 2147483647) AS fp
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // ---- E56/E57: corpus-law profiles through doubling buckets
-    "q_zipf" -> ((s, d) => ops.CorpusStats.zipfProfile(Tables.documents(s, d))),
-    "q_heaps" -> ((s, d) => ops.CorpusStats.heapsGrowth(Tables.documents(s, d))),
+    QueryDef("q_zipf", (s, d) => ops.CorpusStats.zipfProfile(Tables.documents(s, d)),
+      oracle = """WITH toks AS (
+        |  SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+        |v AS (SELECT w, CAST(count(*) AS BIGINT) AS f
+        |      FROM toks WHERE w <> '' GROUP BY 1),
+        |b AS (SELECT CAST(length(to_base(f, 2)) AS BIGINT) AS freq_bits,
+        |        CAST(count(*) AS BIGINT) AS n_words,
+        |        CAST(sum(f) AS BIGINT) AS n_occ,
+        |        CAST(min(f) AS BIGINT) AS min_f,
+        |        CAST(max(f) AS BIGINT) AS max_f
+        |      FROM v GROUP BY 1)
+        |SELECT freq_bits, n_words, n_occ, min_f, max_f,
+        |  CAST(1000000 * sum(n_occ) OVER (ORDER BY freq_bits DESC
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |    // sum(n_occ) OVER () AS BIGINT) AS cum_share_ppm,
+        |  CAST(length(to_base(n_words, 2)) + freq_bits - 1 AS BIGINT)
+        |    AS zipf_const_bits
+        |FROM b ORDER BY freq_bits""".stripMargin),
+    QueryDef("q_heaps", (s, d) => ops.CorpusStats.heapsGrowth(Tables.documents(s, d)),
+      oracle = """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |toks AS (SELECT doc_id, unnest(t) AS w FROM d),
+        |fm AS (SELECT w, min(doc_id) AS m FROM toks WHERE w <> '' GROUP BY 1),
+        |vb AS (SELECT CASE WHEN m = 0 THEN 0
+        |         ELSE length(to_base(m, 2)) END AS k,
+        |         CAST(count(*) AS BIGINT) AS new_vocab
+        |       FROM fm GROUP BY 1),
+        |tb AS (SELECT CASE WHEN doc_id = 0 THEN 0
+        |         ELSE length(to_base(doc_id, 2)) END AS k,
+        |         CAST(count(*) AS BIGINT) AS new_docs,
+        |         CAST(sum(len(list_filter(t, x -> x <> ''))) AS BIGINT)
+        |           AS new_tokens
+        |       FROM d GROUP BY 1),
+        |j AS (SELECT tb.k, tb.new_docs, tb.new_tokens,
+        |        COALESCE(vb.new_vocab, 0) AS new_vocab
+        |      FROM tb LEFT JOIN vb ON tb.k = vb.k)
+        |SELECT CAST(k AS BIGINT) AS k,
+        |  CAST(sum(new_docs) OVER wcum AS BIGINT) AS n_docs,
+        |  CAST(sum(new_tokens) OVER wcum AS BIGINT) AS n_tokens,
+        |  CAST(sum(new_vocab) OVER wcum AS BIGINT) AS n_vocab,
+        |  CAST(new_vocab AS BIGINT) AS new_vocab,
+        |  CAST(new_tokens AS BIGINT) AS new_tokens,
+        |  CAST(CASE WHEN new_tokens > 0
+        |    THEN 1000000 * new_vocab // new_tokens ELSE 0 END AS BIGINT)
+        |    AS new_rate_ppm
+        |FROM j
+        |WINDOW wcum AS (ORDER BY k
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |ORDER BY k""".stripMargin),
     // ---- D11: as-of join (purchase -> last prior error per user)
-    "q_asof_prior" -> ((s, d) =>
+    QueryDef("q_asof_prior", (s, d) =>
       ops.AsOfJoin.lastPriorEvent(Tables.events(s, d),
         key = "user_id", timeCol = "ts_us", idCol = "event_id",
         typeCol = "event_type", queryType = "purchase", refType = "error")
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      oracle = """WITH p AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
+        |  WHERE event_type = 'purchase'),
+        |e AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
+        |  WHERE event_type = 'error')
+        |SELECT p.event_id, p.user_id, p.ts_us,
+        |  COALESCE(e.ts_us, -1) AS asof_ts,
+        |  COALESCE(p.ts_us - e.ts_us, -1) AS gap
+        |FROM p ASOF LEFT JOIN e
+        |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
+        |ORDER BY event_id""".stripMargin),
     // ---- D11 with a 1-day staleness bound: matches older than the
     // tolerance are no-match, exactly as if the reference were absent
-    "q_asof_tol" -> ((s, d) =>
+    QueryDef("q_asof_tol", (s, d) =>
       ops.AsOfJoin.lastPriorEventWithin(Tables.events(s, d),
         key = "user_id", timeCol = "ts_us", idCol = "event_id",
         typeCol = "event_type", queryType = "purchase", refType = "error",
         maxGap = 86400000000L)
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      oracle = """WITH p AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
+        |  WHERE event_type = 'purchase'),
+        |e AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
+        |  WHERE event_type = 'error')
+        |SELECT p.event_id, p.user_id, p.ts_us,
+        |  CASE WHEN p.ts_us - e.ts_us <= 86400000000 THEN e.ts_us
+        |       ELSE -1 END AS asof_ts,
+        |  CASE WHEN p.ts_us - e.ts_us <= 86400000000
+        |       THEN p.ts_us - e.ts_us ELSE -1 END AS gap
+        |FROM p ASOF LEFT JOIN e
+        |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
+        |ORDER BY event_id""".stripMargin),
     // ---- I12: same as-of contract through the native AsOfJoinExec
     // (custom LogicalPlan + Strategy + SparkPlan streaming merge)
-    "q_asof_native" -> ((s, d) =>
+    QueryDef("q_asof_native", (s, d) =>
       ops.AsOfJoin.lastPriorEventNative(Tables.events(s, d),
         key = "user_id", timeCol = "ts_us", idCol = "event_id",
         typeCol = "event_type", queryType = "purchase", refType = "error")
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      oracle = """WITH p AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
+        |  WHERE event_type = 'purchase'),
+        |e AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
+        |  WHERE event_type = 'error')
+        |SELECT p.event_id, p.user_id, p.ts_us,
+        |  COALESCE(e.ts_us, -1) AS asof_ts,
+        |  COALESCE(p.ts_us - e.ts_us, -1) AS gap
+        |FROM p ASOF LEFT JOIN e
+        |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
+        |ORDER BY event_id""".stripMargin),
 
     // ---- D25: SQL entrypoint + LATERAL correlated subquery (top-2
     // customers per nation). Users of the engine can hand it SQL text;
     // Catalyst plans the lateral as a per-group limit, not a cross join.
-    "q_sql_lateral" -> ((s, d) => {
+    QueryDef("q_sql_lateral", (s, d) => {
       Tables.nation(s, d).createOrReplaceTempView("nation")
       Tables.customer(s, d).createOrReplaceTempView("customer")
       s.sql("""
@@ -497,20 +1470,49 @@ object SparkEntry {
           ORDER BY bal_cents DESC, c_name LIMIT 2
         ) t
         ORDER BY n.n_name, t.bal_cents DESC, t.c_name""")
-    }),
+    },
+      oracle = """SELECT n.n_name, t.c_name, t.bal_cents
+        |FROM nation n,
+        |LATERAL (
+        |  SELECT c_name, CAST(round(c_acctbal*100) AS BIGINT) AS bal_cents
+        |  FROM customer WHERE c_nationkey = n.n_nationkey
+        |  ORDER BY bal_cents DESC, c_name LIMIT 2
+        |) t
+        |ORDER BY n.n_name, t.bal_cents DESC, t.c_name""".stripMargin),
 
     // ---- D23: time-series resample / LOCF gap fill (6-hour grid)
-    "q_resample" -> ((s, d) =>
+    QueryDef("q_resample", (s, d) =>
       ops.Resample.lastValueGrid(
         Tables.events(s, d).select(col("user_id"), col("ts_us"),
           cents(col("value")).as("v_cents")),
         key = "user_id", tsUs = "ts_us", valueCents = "v_cents",
-        stepUs = 21600000000L)),
+        stepUs = 21600000000L),
+      oracle = """WITH t AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us,
+        |    CAST(round(value*100) AS BIGINT) AS v_cents
+        |  FROM events),
+        |obs AS (
+        |  SELECT user_id, ts_us, max(v_cents) AS v FROM t GROUP BY 1, 2),
+        |b AS (
+        |  SELECT user_id, min(ts_us) AS tmin, max(ts_us) AS tmax
+        |  FROM obs GROUP BY 1),
+        |grid AS (
+        |  SELECT user_id, unnest(range(
+        |    tmin // 21600000000 * 21600000000,
+        |    tmax // 21600000000 * 21600000000 + 1,
+        |    21600000000)) AS grid_us
+        |  FROM b)
+        |SELECT g.user_id, g.grid_us,
+        |  COALESCE(o.v, -1) AS v_cents,
+        |  CAST(CASE WHEN o.v IS NULL THEN 0 ELSE 1 END AS BIGINT) AS has_value
+        |FROM grid g ASOF LEFT JOIN obs o
+        |  ON g.user_id = o.user_id AND g.grid_us >= o.ts_us
+        |ORDER BY g.user_id, g.grid_us""".stripMargin),
 
     // ---- D36: recursive CTE — hierarchy walk (Spark 4.1 WITH RECURSIVE).
     // Derived tree: parent(custkey) = custkey div 10, roots < 10; the
     // walk labels every customer with its root and depth, then rolls up.
-    "q_hierarchy" -> ((s, d) => {
+    QueryDef("q_hierarchy", (s, d) => {
       Tables.customer(s, d).createOrReplaceTempView("customer")
       s.sql("""
         WITH RECURSIVE h(custkey, root, depth) AS (
@@ -524,67 +1526,580 @@ object SparkEntry {
         SELECT root, depth, count(*) AS n,
           min(custkey) AS min_k, max(custkey) AS max_k
         FROM h GROUP BY root, depth ORDER BY root, depth""")
-    }),
+    },
+      oracle = """WITH RECURSIVE h(custkey, root, depth) AS (
+        |  SELECT c_custkey, c_custkey, CAST(0 AS BIGINT)
+        |  FROM customer WHERE c_custkey < 10
+        |  UNION ALL
+        |  SELECT c.c_custkey, h.root, h.depth + 1
+        |  FROM customer c JOIN h ON c.c_custkey // 10 = h.custkey
+        |  WHERE c.c_custkey >= 10
+        |)
+        |SELECT root, depth, count(*) AS n,
+        |  min(custkey) AS min_k, max(custkey) AS max_k
+        |FROM h GROUP BY root, depth ORDER BY root, depth""".stripMargin),
 
     // ---- D35: linear-interpolation gap fill on the same grid
-    "q_interp" -> ((s, d) =>
+    QueryDef("q_interp", (s, d) =>
       ops.Resample.interpolatedGrid(
         Tables.events(s, d).select(col("user_id"), col("ts_us"),
           cents(col("value")).as("v_cents")),
         key = "user_id", tsUs = "ts_us", valueCents = "v_cents",
-        stepUs = 21600000000L)),
+        stepUs = 21600000000L),
+      oracle = """WITH t AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us,
+        |    CAST(round(value*100) AS BIGINT) AS v_cents FROM events),
+        |obs AS (SELECT user_id, ts_us, max(v_cents) AS v FROM t GROUP BY 1, 2),
+        |b AS (SELECT user_id, min(ts_us) AS tmin, max(ts_us) AS tmax
+        |  FROM obs GROUP BY 1),
+        |grid AS (
+        |  SELECT user_id, unnest(range(tmin // 21600000000 * 21600000000,
+        |    tmax // 21600000000 * 21600000000 + 1, 21600000000)) AS grid_us
+        |  FROM b),
+        |p AS (
+        |  SELECT g.user_id, g.grid_us, o.ts_us AS p_t, o.v AS p_v
+        |  FROM grid g ASOF LEFT JOIN obs o
+        |    ON g.user_id = o.user_id AND g.grid_us >= o.ts_us),
+        |n AS (
+        |  SELECT g.user_id, g.grid_us, o.ts_us AS n_t, o.v AS n_v
+        |  FROM grid g ASOF LEFT JOIN obs o
+        |    ON g.user_id = o.user_id AND g.grid_us <= o.ts_us)
+        |SELECT p.user_id, p.grid_us,
+        |  CASE
+        |    WHEN p.p_t IS NULL AND n.n_t IS NULL THEN -1.0
+        |    WHEN p.p_t IS NULL THEN CAST(n.n_v AS DOUBLE)
+        |    WHEN n.n_t IS NULL THEN CAST(p.p_v AS DOUBLE)
+        |    WHEN n.n_t = p.p_t THEN CAST(p.p_v AS DOUBLE)
+        |    ELSE (CAST((n.n_v - p.p_v) * (p.grid_us - p.p_t) AS DOUBLE)
+        |      / (n.n_t - p.p_t)) + p.p_v
+        |  END AS v_interp
+        |FROM p JOIN n ON p.user_id = n.user_id AND p.grid_us = n.grid_us
+        |ORDER BY p.user_id, p.grid_us""".stripMargin),
 
-    "q_tfidf_top" -> ((s, d) => ops.TextAnalysis.tfidfTop(Tables.documents(s, d))),
-    "q_bigrams" -> ((s, d) => ops.TextAnalysis.bigramCounts(Tables.documents(s, d))),
+    QueryDef("q_tfidf_top", (s, d) => ops.TextAnalysis.tfidfTop(Tables.documents(s, d)),
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents),
+        |tf AS (
+        |  SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+        |df AS (
+        |  SELECT term, count(*) AS df FROM (
+        |    SELECT DISTINCT doc_id, term FROM toks) GROUP BY 1),
+        |scored AS (
+        |  SELECT tf.doc_id, tf.term, CAST(tf.tf AS BIGINT) AS tf,
+        |    CAST(df.df AS BIGINT) AS df,
+        |    CAST((tf.tf * 1000000) // df.df AS BIGINT) AS score
+        |  FROM tf JOIN df USING (term)),
+        |r AS (
+        |  SELECT *, row_number() OVER (PARTITION BY doc_id
+        |    ORDER BY score DESC, term) AS rn
+        |  FROM scored)
+        |SELECT doc_id, term AS top_term, tf, df, score
+        |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+    QueryDef("q_bigrams", (s, d) => ops.TextAnalysis.bigramCounts(Tables.documents(s, d)),
+      oracle = """WITH t AS (
+        |  SELECT string_split(text,' ') AS toks FROM documents
+        |  WHERE len(string_split(text,' ')) >= 2),
+        |b AS (
+        |  SELECT unnest(list_transform(range(1, len(toks)),
+        |    i -> toks[i] || ' ' || toks[i+1])) AS bigram
+        |  FROM t)
+        |SELECT bigram, count(*) AS n FROM b
+        |GROUP BY bigram HAVING count(*) >= 10
+        |ORDER BY bigram""".stripMargin),
     // E28: corpus-conditional bigram frequency averaged per doc — the
     // deterministic stand-in for LM-perplexity quality filtering
-    "q_coherence" -> ((s, d) => ops.TextAnalysis.bigramCoherence(Tables.documents(s, d))),
+    QueryDef("q_coherence", (s, d) => ops.TextAnalysis.bigramCoherence(Tables.documents(s, d)),
+      oracle = """WITH t AS (
+        |  SELECT doc_id, string_split(text,' ') AS toks FROM documents
+        |  WHERE len(string_split(text,' ')) >= 2),
+        |db AS (
+        |  SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+        |    i -> toks[i] || ' ' || toks[i+1])) AS bg
+        |  FROM t),
+        |model AS (
+        |  SELECT bg, count(*) AS bg_cnt, string_split(bg,' ')[1] AS w1
+        |  FROM db GROUP BY bg),
+        |prefix AS (
+        |  SELECT w1, CAST(sum(bg_cnt) AS BIGINT) AS w1_cnt
+        |  FROM model GROUP BY w1),
+        |scored AS (
+        |  SELECT m.bg, m.bg_cnt * 1000000 // p.w1_cnt AS ppm
+        |  FROM model m JOIN prefix p ON m.w1 = p.w1)
+        |SELECT d.doc_id, count(*) AS n_bigrams,
+        |  CAST(sum(s.ppm) AS BIGINT) AS sum_ppm,
+        |  CAST(sum(s.ppm) AS BIGINT) // count(*) AS coherence_ppm
+        |FROM db d JOIN scored s ON d.bg = s.bg
+        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin),
     // D44: oriented-wedge triangle counting over the content-duplicate
     // graph (two injected replicas per seed → deterministic 3-cliques)
-    "q_triangles" -> ((s, d) =>
+    QueryDef("q_triangles", (s, d) =>
       ops.GraphStats.triangles(
-        ops.GraphStats.contentDupEdges(Tables.documents(s, d)))),
+        ops.GraphStats.contentDupEdges(Tables.documents(s, d))),
+      oracle = """WITH sd AS (SELECT doc_id, text FROM documents WHERE doc_id % 125 = 0),
+        |u AS (
+        |  SELECT doc_id, md5(text) AS ch FROM documents
+        |  UNION ALL SELECT doc_id + 10000000, md5(text) FROM sd
+        |  UNION ALL SELECT doc_id + 20000000, md5(text) FROM sd),
+        |e AS (
+        |  SELECT l.doc_id AS id1, r.doc_id AS id2
+        |  FROM u l JOIN u r ON l.ch = r.ch AND l.doc_id < r.doc_id),
+        |t AS (
+        |  SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
+        |  FROM e e1
+        |  JOIN e e2 ON e1.id2 = e2.id1
+        |  JOIN e e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2),
+        |n AS (SELECT unnest([a, b, c]) AS node FROM t)
+        |SELECT CAST(node AS BIGINT) AS node,
+        |  CAST(count(*) AS BIGINT) AS n_triangles
+        |FROM n GROUP BY 1 ORDER BY node""".stripMargin),
     // D75: Watts–Strogatz local clustering coefficient over the same
     // content-dup graph — per-node cohesion (clique vs hub-and-spoke)
-    "q_lcc" -> ((s, d) =>
+    QueryDef("q_lcc", (s, d) =>
       ops.GraphStats.clusteringCoefficient(
-        ops.GraphStats.contentDupEdges(Tables.documents(s, d)))),
+        ops.GraphStats.contentDupEdges(Tables.documents(s, d))),
+      // D75: same dup graph; lcc = 2·tri/(deg·(deg−1)) in ppm, deg≥2
+      // nodes only, triangle-free nodes grid-completed at 0
+      oracle = """WITH sd AS (SELECT doc_id, text FROM documents WHERE doc_id % 125 = 0),
+        |u AS (
+        |  SELECT doc_id, md5(text) AS ch FROM documents
+        |  UNION ALL SELECT doc_id + 10000000, md5(text) FROM sd
+        |  UNION ALL SELECT doc_id + 20000000, md5(text) FROM sd),
+        |e AS (
+        |  SELECT l.doc_id AS id1, r.doc_id AS id2
+        |  FROM u l JOIN u r ON l.ch = r.ch AND l.doc_id < r.doc_id),
+        |t AS (
+        |  SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
+        |  FROM e e1
+        |  JOIN e e2 ON e1.id2 = e2.id1
+        |  JOIN e e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2),
+        |tri AS (
+        |  SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
+        |  FROM (SELECT unnest([a, b, c]) AS node FROM t) GROUP BY 1),
+        |deg AS (
+        |  SELECT node, CAST(count(*) AS BIGINT) AS degree
+        |  FROM (SELECT id1 AS node FROM e UNION ALL SELECT id2 FROM e)
+        |  GROUP BY 1),
+        |j AS (
+        |  SELECT d.node, d.degree,
+        |    coalesce(tri.n_triangles, 0) AS n_triangles
+        |  FROM deg d LEFT JOIN tri USING (node) WHERE d.degree >= 2)
+        |SELECT CAST(node AS BIGINT) AS node, degree, n_triangles,
+        |  CAST(1000000 * 2 * n_triangles // (degree * (degree - 1))
+        |    AS BIGINT) AS lcc_ppm
+        |FROM j ORDER BY node""".stripMargin),
     // E62: pairwise total-variation distance between source unigram
     // distributions — the mixture designer's distance matrix
-    "q_tv_sources" -> ((s, d) =>
-      ops.CorpusStats.sourceTvMatrix(Tables.documents(s, d))),
+    QueryDef("q_tv_sources", (s, d) =>
+      ops.CorpusStats.sourceTvMatrix(Tables.documents(s, d)),
+      // E62: TV by the Σmin identity — inner join only (one-sided words
+      // contribute zero to Σmin); cross-multiplied, never divides early
+      oracle = """WITH toks AS (
+        |  SELECT source, unnest(string_split(text, ' ')) AS w
+        |  FROM documents),
+        |cnt AS (
+        |  SELECT source, w, CAST(count(*) AS BIGINT) AS f
+        |  FROM toks WHERE length(w) > 0 GROUP BY 1, 2),
+        |tt AS (SELECT source, CAST(sum(f) AS BIGINT) AS t
+        |  FROM cnt GROUP BY 1),
+        |pairs AS (
+        |  SELECT a.source AS source_a, b.source AS source_b,
+        |    CAST(count(*) AS BIGINT) AS n_shared_words,
+        |    sum(least(CAST(a.f AS HUGEINT) * tb.t,
+        |      CAST(b.f AS HUGEINT) * ta.t)) AS smin,
+        |    max(ta.t) AS ta, max(tb.t) AS tb
+        |  FROM cnt a JOIN cnt b ON a.w = b.w AND a.source < b.source
+        |  JOIN tt ta ON ta.source = a.source
+        |  JOIN tt tb ON tb.source = b.source
+        |  GROUP BY 1, 2)
+        |SELECT source_a, source_b, n_shared_words,
+        |  CAST(1000000 * (CAST(ta AS HUGEINT) * tb - smin)
+        |    // (CAST(ta AS HUGEINT) * tb) AS BIGINT) AS tv_ppm
+        |FROM pairs ORDER BY source_a, source_b""".stripMargin),
     // E63: cross-source shingle-containment leakage matrix — do two
     // sources literally CARRY the same text (mirrors/syndication)?
-    "q_leakage" -> ((s, d) =>
-      ops.CorpusStats.sourceLeakageMatrix(Tables.documents(s, d))),
+    QueryDef("q_leakage", (s, d) =>
+      ops.CorpusStats.sourceLeakageMatrix(Tables.documents(s, d)),
+      // E63: the dedup pipeline's exact shingle units (word 3-grams,
+      // md5-prefix hash), distinct per source, directional containment
+      oracle = """WITH t AS (
+        |  SELECT source, string_split(text, ' ') AS toks FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 3),
+        |sh AS (
+        |  SELECT source, list_transform(range(1, len(toks)-1),
+        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS sh
+        |  FROM t),
+        |hx AS (
+        |  SELECT DISTINCT source,
+        |    CAST(('0x'||substr(md5(s),1,8)) AS BIGINT) AS x
+        |  FROM (SELECT source, unnest(sh) AS s FROM sh)),
+        |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n_sh
+        |  FROM hx GROUP BY 1),
+        |pr AS (
+        |  SELECT a.source AS source_a, b.source AS source_b,
+        |    CAST(count(*) AS BIGINT) AS n_shared
+        |  FROM hx a JOIN hx b ON a.x = b.x AND a.source < b.source
+        |  GROUP BY 1, 2)
+        |SELECT source_a, source_b, n_shared, za.n_sh AS n_a,
+        |  zb.n_sh AS n_b,
+        |  CAST(1000000 * n_shared // za.n_sh AS BIGINT) AS leak_a_ppm,
+        |  CAST(1000000 * n_shared // zb.n_sh AS BIGINT) AS leak_b_ppm
+        |FROM pr JOIN sz za ON za.source = pr.source_a
+        |JOIN sz zb ON zb.source = pr.source_b
+        |ORDER BY source_a, source_b""".stripMargin),
     // E64: per-doc novelty profile — unique-shingle share, max df,
     // mean df doubling-bucket (integer stand-in for self-information)
-    "q_novelty" -> ((s, d) =>
-      ops.CorpusStats.docNovelty(Tables.documents(s, d))),
+    QueryDef("q_novelty", (s, d) =>
+      ops.CorpusStats.docNovelty(Tables.documents(s, d)),
+      // E64: per-doc novelty — distinct shingles, df=1 share, max df,
+      // mean df bit-length (the E56 doubling-bucket idiom)
+      oracle = """WITH t AS (
+        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 3),
+        |sh0 AS (
+        |  SELECT doc_id, list_transform(range(1, len(toks)-1),
+        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS sh
+        |  FROM t),
+        |hx AS (
+        |  SELECT DISTINCT doc_id,
+        |    CAST(('0x'||substr(md5(s),1,8)) AS BIGINT) AS x
+        |  FROM (SELECT doc_id, unnest(sh) AS s FROM sh0)),
+        |df AS (SELECT x, CAST(count(*) AS BIGINT) AS df FROM hx GROUP BY 1)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
+        |  CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_unique,
+        |  CAST(1000000 * sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)
+        |    // count(*) AS BIGINT) AS unique_ppm,
+        |  max(df) AS max_df,
+        |  CAST(1000000 * sum(length(to_base(df, 2))) // count(*)
+        |    AS BIGINT) AS mean_df_bits_e6
+        |FROM hx JOIN df USING (x)
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // E66: per-source Gini–Simpson lexical diversity — the log-free
     // concentration index (boilerplate shows as a diversity cliff)
-    "q_diversity" -> ((s, d) =>
-      ops.CorpusStats.sourceDiversity(Tables.documents(s, d))),
+    QueryDef("q_diversity", (s, d) =>
+      ops.CorpusStats.sourceDiversity(Tables.documents(s, d)),
+      // E66: unbiased without-replacement Simpson; HUGEINT products
+      oracle = """WITH toks AS (
+        |  SELECT source, unnest(string_split(text, ' ')) AS w
+        |  FROM documents),
+        |cnt AS (
+        |  SELECT source, w, CAST(count(*) AS BIGINT) AS f
+        |  FROM toks WHERE length(w) > 0 GROUP BY 1, 2),
+        |ag AS (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n_vocab,
+        |    CAST(sum(f) AS BIGINT) AS n_tokens,
+        |    sum(CAST(f AS HUGEINT) * (f - 1)) AS coll
+        |  FROM cnt GROUP BY 1)
+        |SELECT source, n_vocab, n_tokens,
+        |  CAST(CASE WHEN n_tokens <= 1 THEN 0
+        |    ELSE 1000000 * coll
+        |      // (CAST(n_tokens AS HUGEINT) * (n_tokens - 1))
+        |    END AS BIGINT) AS simpson_ppm,
+        |  CAST(CASE WHEN n_tokens <= 1 THEN 0
+        |    ELSE 1000000 - 1000000 * coll
+        |      // (CAST(n_tokens AS HUGEINT) * (n_tokens - 1))
+        |    END AS BIGINT) AS diversity_ppm
+        |FROM ag ORDER BY source""".stripMargin),
     // E45: MinHash estimator calibration — signature-agreement estimate
     // (exact ppm) vs exact Jaccard on every LSH candidate pair
-    "q_minhash_calib" -> ((s, d) =>
-      ops.Dedup.minhashCalibration(Tables.documents(s, d))),
+    QueryDef("q_minhash_calib", (s, d) =>
+      ops.Dedup.minhashCalibration(Tables.documents(s, d)),
+      oracle = {
+      val eqTerms = (0 until 8)
+        .map(i => s"(CASE WHEN s1.sig_$i = s2.sig_$i THEN 1 ELSE 0 END)")
+        .mkString(" + ")
+      s"""WITH $sqlLshCtes,
+         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
+         |j AS (
+         |  SELECT c.id1, c.id2,
+         |    CAST(len(list_intersect(a.shd, b.shd)) AS BIGINT) AS n_inter,
+         |    CAST(len(a.shd) + len(b.shd) AS BIGINT) AS n_sum
+         |  FROM cand c
+         |  JOIN sd a ON c.id1 = a.doc_id
+         |  JOIN sd b ON c.id2 = b.doc_id),
+         |eqs AS (
+         |  SELECT c.id1, c.id2, CAST($eqTerms AS BIGINT) AS n_eq_sigs
+         |  FROM cand c
+         |  JOIN sig s1 ON c.id1 = s1.doc_id
+         |  JOIN sig s2 ON c.id2 = s2.doc_id)
+         |SELECT j.id1, j.id2, e.n_eq_sigs,
+         |  (e.n_eq_sigs * 1000000) // 8 AS est_ppm,
+         |  n_inter / (n_sum - n_inter) AS jaccard
+         |FROM j JOIN eqs e ON e.id1 = j.id1 AND e.id2 = j.id2
+         |ORDER BY j.id1, j.id2""".stripMargin
+    }),
     // E41: EXACT Jaccard-threshold self-join via prefix filtering
     // (AllPairs/PPJoin) — oracle is the brute-force shared-gram join,
     // so the hash check proves no false negatives
-    "q_prefix_join" -> ((s, d) =>
-      ops.PrefixJoin.jaccardJoin(Tables.documents(s, d))),
+    QueryDef("q_prefix_join", (s, d) =>
+      ops.PrefixJoin.jaccardJoin(Tables.documents(s, d)),
+      oracle = """WITH u AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 250 = 0),
+        |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM u),
+        |g AS (
+        |  SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
+        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
+        |  FROM t WHERE len(toks) >= 3),
+        |gd AS (SELECT DISTINCT doc_id, g FROM g),
+        |sz AS (SELECT doc_id, count(*) AS sz FROM gd GROUP BY 1),
+        |pairs AS (
+        |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
+        |  FROM gd a JOIN gd b ON a.g = b.g AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2),
+        |j AS (
+        |  SELECT id1, id2, n_inter, s1.sz AS sz1, s2.sz AS sz2
+        |  FROM pairs
+        |  JOIN sz s1 ON s1.doc_id = id1
+        |  JOIN sz s2 ON s2.doc_id = id2)
+        |SELECT id1, id2, CAST(n_inter AS BIGINT) AS n_inter,
+        |  n_inter / CAST(sz1 + sz2 - n_inter AS DOUBLE) AS jaccard
+        |FROM j
+        |WHERE 10 * n_inter >= 7 * (sz1 + sz2 - n_inter)
+        |ORDER BY id1, id2""".stripMargin),
     // E38: sparse cosine top-k via inverted-index join (bigram tf
     // vectors, df-capped posting lists)
-    "q_sparse_sim" -> ((s, d) => ops.SparseSim.topK(Tables.documents(s, d))),
+    QueryDef("q_sparse_sim", (s, d) => ops.SparseSim.topK(Tables.documents(s, d)),
+      // Sparse-cosine twin: mirrors the CONTENT-contracted index (the
+      // I14 discipline — identical texts have identical tf vectors, and
+      // an impact-ordered index dedups postings): same bigram vectors
+      // over distinct contents, df cap against the CONTENT count,
+      // content-level impact truncation, doc pairs expanded through
+      // group membership, same exact-integer cosine sequence.
+      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
+        |reps AS (SELECT ch, min(doc_id) AS rep FROM m GROUP BY 1),
+        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
+        |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
+        |toks AS (
+        |  SELECT doc_id, string_split(text, ' ') AS ts FROM rd),
+        |g AS (
+        |  SELECT doc_id, unnest(list_transform(range(1, len(ts)),
+        |    i -> ts[i] || ' ' || ts[i+1])) AS gram
+        |  FROM toks WHERE len(ts) >= 2),
+        |tf AS (SELECT doc_id, gram, count(*) AS tf FROM g GROUP BY 1, 2),
+        |nd AS (SELECT count(*) AS n_docs FROM rd),
+        |keptg AS (
+        |  SELECT gram FROM tf CROSS JOIN nd
+        |  GROUP BY gram, n_docs HAVING count(*) <= n_docs * 0.4),
+        |kept0 AS (SELECT tf.* FROM tf JOIN keptg USING (gram)),
+        |kept AS (
+        |  SELECT doc_id, gram, tf FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY gram
+        |      ORDER BY tf DESC, doc_id) AS pr FROM kept0)
+        |  WHERE pr <= 1000),
+        |norms AS (SELECT doc_id, SUM(tf*tf) AS norm2 FROM kept GROUP BY 1),
+        |qdocs AS (
+        |  SELECT doc_id AS q_id, rep AS qrep FROM members
+        |  WHERE doc_id % 50 = 0 AND doc_id < 5000),
+        |qpost AS (
+        |  SELECT DISTINCT qd.qrep, k.gram, k.tf AS tfq
+        |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
+        |  JOIN kept k ON k.doc_id = qd.qrep),
+        |dots AS (
+        |  SELECT q.qrep, k.doc_id AS crep, SUM(q.tfq * k.tf) AS dot
+        |  FROM qpost q JOIN kept k USING (gram)
+        |  GROUP BY 1, 2),
+        |cc AS (
+        |  SELECT d.qrep, d.crep,
+        |    CAST(d.dot AS DOUBLE) /
+        |      (sqrt(CAST(nq.norm2 AS DOUBLE)) * sqrt(CAST(nd2.norm2 AS DOUBLE))) AS cos
+        |  FROM dots d
+        |  JOIN norms nq ON nq.doc_id = d.qrep
+        |  JOIN norms nd2 ON nd2.doc_id = d.crep),
+        |ex AS (
+        |  SELECT qd.q_id, mem.doc_id, c.cos
+        |  FROM qdocs qd
+        |  JOIN cc c ON c.qrep = qd.qrep
+        |  JOIN members mem ON mem.rep = c.crep
+        |  WHERE mem.doc_id <> qd.q_id),
+        |rk AS (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
+        |    ORDER BY cos DESC, doc_id) AS BIGINT) AS rnk FROM ex)
+        |SELECT q_id, doc_id, cos, rnk FROM rk WHERE rnk <= 5
+        |ORDER BY q_id, rnk""".stripMargin),
     // E39: BM25 top-k retrieval — rational idf (no transcendentals),
     // micro-unit integer scores, E38's posting-list bounds
-    "q_bm25" -> ((s, d) => ops.Bm25.topK(Tables.documents(s, d))),
+    QueryDef("q_bm25", (s, d) => ops.Bm25.topK(Tables.documents(s, d)),
+      // BM25 twin — mirrors the content-contracted index: postings and
+      // truncation per distinct content, corpus stats (df/N/S) at DOC
+      // level through group sizes, doc pairs expanded via membership.
+      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
+        |reps AS (SELECT ch, min(doc_id) AS rep, count(*) AS gsz
+        |  FROM m GROUP BY 1),
+        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
+        |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
+        |gs AS (SELECT rep AS doc_id, gsz FROM reps),
+        |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM rd),
+        |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+        |    i -> toks[i] || ' ' || toks[i+1])) AS tok
+        |  FROM t WHERE len(toks) >= 2),
+        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM g GROUP BY 1, 2),
+        |dl AS (SELECT doc_id,
+        |    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END
+        |      AS BIGINT) AS dl
+        |  FROM t),
+        |c AS (SELECT CAST(sum(gs.gsz) AS BIGINT) AS n,
+        |             CAST(sum(gs.gsz * dl.dl) AS BIGINT) AS s
+        |  FROM dl JOIN gs USING (doc_id)),
+        |dft AS (SELECT tok, CAST(sum(gs.gsz) AS BIGINT) AS df
+        |  FROM tf JOIN gs USING (doc_id) GROUP BY 1),
+        |kept0 AS (
+        |  SELECT tf.doc_id, tf.tok, tf.tf, dft.df
+        |  FROM tf JOIN dft USING (tok) CROSS JOIN c
+        |  WHERE dft.df <= CAST(c.n AS DOUBLE) * 0.4),
+        |kept AS (
+        |  SELECT doc_id, tok, tf, df FROM (
+        |    SELECT k.*, row_number() OVER (PARTITION BY tok
+        |      ORDER BY tf DESC, doc_id) AS pr
+        |    FROM kept0 k)
+        |  WHERE pr <= 1000),
+        |qdocs AS (SELECT doc_id AS q_id, rep AS qrep FROM members
+        |  WHERE doc_id % 50 = 0 AND doc_id < 20000000),
+        |qpost AS (
+        |  SELECT DISTINCT qd.qrep, k.tok
+        |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
+        |  JOIN kept k ON k.doc_id = qd.qrep),
+        |terms AS (
+        |  SELECT q.qrep, k.doc_id AS crep,
+        |    CAST(c.s AS DOUBLE) AS sd, CAST(k.tf AS DOUBLE) AS tfd,
+        |    CAST(c.n AS DOUBLE) AS nd, CAST(k.df AS DOUBLE) AS dfd,
+        |    CAST(d.dl AS DOUBLE) AS dld
+        |  FROM qpost q JOIN kept k USING (tok)
+        |  JOIN dl d ON d.doc_id = k.doc_id
+        |  CROSS JOIN c),
+        |scoredc AS (
+        |  SELECT qrep, crep,
+        |    CAST(SUM(CAST(ROUND((22.0 * sd * tfd * (2.0*nd - 2.0*dfd + 1.0) * 1000000.0) / ((10.0*sd*tfd + 3.0*sd + 9.0*dld*nd) * (2.0*dfd + 1.0))) AS BIGINT)) AS BIGINT) AS score_u
+        |  FROM terms GROUP BY 1, 2),
+        |bys AS (
+        |  SELECT sc.qrep, sc.score_u, CAST(sum(g.gsz) AS BIGINT) AS msz
+        |  FROM scoredc sc JOIN gs g ON g.doc_id = sc.crep
+        |  GROUP BY 1, 2),
+        |cut AS (
+        |  SELECT qrep, score_u FROM (
+        |    SELECT qrep, score_u,
+        |      COALESCE(SUM(msz) OVER (PARTITION BY qrep ORDER BY score_u DESC
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS higher
+        |    FROM bys)
+        |  WHERE higher < 6),
+        |ex AS (
+        |  SELECT qd.q_id, mem.doc_id, sc.score_u
+        |  FROM qdocs qd
+        |  JOIN scoredc sc ON sc.qrep = qd.qrep
+        |  JOIN cut ON cut.qrep = sc.qrep AND cut.score_u = sc.score_u
+        |  JOIN members mem ON mem.rep = sc.crep
+        |  WHERE mem.doc_id <> qd.q_id)
+        |SELECT q_id, doc_id, score_u, rnk FROM (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
+        |    ORDER BY score_u DESC, doc_id) AS BIGINT) AS rnk
+        |  FROM ex)
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
+      // VERDICT r13 #3: the default q_bm25 / q_rrf_fusion twins peaked
+      // ~150 GB at 100x — NOT because the data is big (27M bigram
+      // instances), but because DuckDB inlines every non-materialized CTE
+      // reference, so the tf group-by ran 8x and the postings window 4x,
+      // each spilling its own copy. The override (a) pins the shared
+      // fragments with AS MATERIALIZED, (b) filters the bigram stream to
+      // QUERY-DOC TOKENS before tf — exact because the filter is by
+      // token, never by doc: every (doc, tok) instance of a query token
+      // survives, so tf, df, the df cap, and the per-token impact window
+      // are byte-identical for every token that can reach the scoring
+      // join, and (c) replaces the semantic leg's interpreted
+      // list_reduce integer dot with native list_dot_product over
+      // round(x*1e6) doubles — exact equality, not approximation: every
+      // partial sum is an integer below 2^53 (|component| <= 1e6, 64
+      // dims => dot <= 6.4e13), so the double arithmetic IS the integer
+      // arithmetic, followed by the same /(sqrt*sqrt) IEEE ops.
+      // Measured r14: 100x under a 16 GB cap in ~25 s each, results
+      // equal to the default twin at sf0.1/10x and to the r13 engine
+      // dumps at 100x. The independent default still guards sf0.01.
+      scaledOracle = Some(ScaledTwins.bm25Override)),
     // E40: charset/mojibake cleanliness gate (deterministic injected
     // noise, exact char-count metrics)
-    "q_charset" -> ((s, d) => ops.TextAnalysis.charsetGate(Tables.documents(s, d))),
-    "q_ann_brute" -> ((s, d) => ops.Ann.bruteForceTopK(Tables.embeddings(s, d))),
-    "q_ann_ivf" -> ((s, d) => ops.Ann.ivfTopK(Tables.embeddings(s, d))),
+    QueryDef("q_charset", (s, d) => ops.TextAnalysis.charsetGate(Tables.documents(s, d)),
+      oracle = """WITH noisy AS (
+        |  SELECT doc_id, text ||
+        |    (CASE WHEN doc_id % 7 = 0 THEN '�' ELSE '' END) ||
+        |    (CASE WHEN doc_id % 11 = 0 THEN ' café naïve' ELSE '' END) ||
+        |    (CASE WHEN doc_id % 13 = 0 THEN chr(9) || chr(9) ELSE '' END) AS t2
+        |  FROM documents),
+        |m AS (
+        |  SELECT doc_id, CAST(length(t2) AS BIGINT) AS n_chars,
+        |    CAST(length(t2) - length(regexp_replace(t2, '�', '', 'g'))
+        |      AS BIGINT) AS n_repl,
+        |    CAST(length(t2) - length(regexp_replace(t2, '[\x00-\x1f]', '', 'g'))
+        |      AS BIGINT) AS n_ctrl,
+        |    CAST(length(t2) - length(regexp_replace(t2, '[^\x00-\x7f]', '', 'g'))
+        |      AS BIGINT) AS n_non_ascii
+        |  FROM noisy)
+        |SELECT doc_id, n_chars, n_repl, n_ctrl,
+        |  (n_non_ascii * 1000000) // n_chars AS non_ascii_ppm,
+        |  CAST(n_repl = 0 AND n_ctrl = 0 AND
+        |    (n_non_ascii * 1000000) // n_chars < 20000 AS BIGINT) AS keep
+        |FROM m ORDER BY doc_id""".stripMargin),
+    QueryDef("q_ann_brute", (s, d) => ops.Ann.bruteForceTopK(Tables.embeddings(s, d)),
+      oracle = """WITH v AS (
+        |  SELECT vec_id, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM embeddings),
+        |n AS (
+        |  SELECT vec_id, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2 FROM n WHERE vec_id < 10),
+        |sc AS (
+        |  SELECT q.q_id, n.vec_id,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> q.q_svec[i]*n.svec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS DOUBLE))) AS cos
+        |  FROM n JOIN q ON n.vec_id <> q.q_id),
+        |r AS (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
+        |  FROM sc)
+        |SELECT q_id, vec_id, cos, rnk FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
+    QueryDef("q_ann_ivf", (s, d) => ops.Ann.ivfTopK(Tables.embeddings(s, d)),
+      oracle = """WITH v AS (
+        |  SELECT vec_id, label, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM embeddings),
+        |n AS (
+        |  SELECT vec_id, label, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2 FROM n WHERE vec_id < 10),
+        |cent0 AS (
+        |  SELECT label, i, SUM(svec[i]) AS s
+        |  FROM n, range(1,65) t(i) GROUP BY label, i),
+        |cent AS (
+        |  SELECT label, list(s ORDER BY i) AS cvec FROM cent0 GROUP BY label),
+        |centn AS (
+        |  SELECT label, cvec,
+        |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
+        |      list_transform(cvec, x -> CAST(x AS HUGEINT)*x)), (a,b) -> a+b) AS cnorm2
+        |  FROM cent),
+        |routed0 AS (
+        |  SELECT q.q_id, q.q_svec, q.q_norm2, c.label,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS HUGEINT),
+        |      list_transform(range(1,65), i -> CAST(q.q_svec[i] AS HUGEINT)*c.cvec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(c.cnorm2 AS DOUBLE))) AS ccos
+        |  FROM q CROSS JOIN centn c),
+        |routed AS (
+        |  SELECT * FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY ccos DESC, label) AS crnk
+        |    FROM routed0) WHERE crnk = 1),
+        |sc AS (
+        |  SELECT r.q_id, CAST(n.label AS BIGINT) AS label, n.vec_id,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> r.q_svec[i]*n.svec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(r.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS DOUBLE))) AS cos
+        |  FROM n JOIN routed r ON n.label = r.label AND n.vec_id <> r.q_id),
+        |rk AS (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
+        |  FROM sc)
+        |SELECT q_id, label, vec_id, cos, rnk FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin),
     // Learned KMeans coarse quantizer, nprobe=2. KMeans float math isn't
     // reproducible in DuckDB, so the learned ASSIGNMENT is exported to
     // parquet and read back for the probe — Spark and the DuckDB twin
@@ -592,17 +2107,64 @@ object SparkEntry {
     // (scaled-integer centroids, routing, top-k) is exact cross-engine
     // math, flipping this from rows-only to a full hash check. The
     // recall-vs-brute-force contract stays in OpsSpec.
-    "q_ann_ivf_learned" -> ((s, d) => {
+    QueryDef("q_ann_ivf_learned", (s, d) => {
       graft.ml.EmbeddingClustering.assignCells(s, d, k = 10)
         .select(col("vec_id"), col("cell"))
         .write.mode("overwrite").parquet(cellsExportPath(d))
       ops.Ann.ivfTopKLearned(Tables.embeddings(s, d),
         s.read.parquet(cellsExportPath(d)))
-    }),
+    },
+      // Learned-IVF twin: identical probe math to q_ann_ivf but the coarse
+      // cell comes from the parquet the Spark query exported (path patched
+      // in by Verify — __GRAFT_CELLS__), nprobe=2, k=3. Everything after
+      // the assignment table is exact scaled-integer math.
+      oracle = """WITH cells AS (
+        |  SELECT vec_id, CAST(cell AS BIGINT) AS cell
+        |  FROM read_parquet('__GRAFT_CELLS__/*.parquet')),
+        |v AS (
+        |  SELECT e.vec_id, c.cell, list_transform(e.embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM embeddings e JOIN cells c USING (vec_id)),
+        |n AS (
+        |  SELECT vec_id, cell, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2 FROM n WHERE vec_id < 10),
+        |cent0 AS (
+        |  SELECT cell, i, SUM(svec[i]) AS s
+        |  FROM n, range(1,65) t(i) GROUP BY cell, i),
+        |cent AS (
+        |  SELECT cell, list(s ORDER BY i) AS cvec FROM cent0 GROUP BY cell),
+        |centn AS (
+        |  SELECT cell, cvec,
+        |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
+        |      list_transform(cvec, x -> CAST(x AS HUGEINT)*x)), (a,b) -> a+b) AS cnorm2
+        |  FROM cent),
+        |routed0 AS (
+        |  SELECT q.q_id, q.q_svec, q.q_norm2, c.cell,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS HUGEINT),
+        |      list_transform(range(1,65), i -> CAST(q.q_svec[i] AS HUGEINT)*c.cvec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(c.cnorm2 AS DOUBLE))) AS ccos
+        |  FROM q CROSS JOIN centn c),
+        |routed AS (
+        |  SELECT * FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY ccos DESC, cell) AS crnk
+        |    FROM routed0) WHERE crnk <= 2),
+        |sc AS (
+        |  SELECT r.q_id, n.cell, n.vec_id,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> r.q_svec[i]*n.svec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(r.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS DOUBLE))) AS cos
+        |  FROM n JOIN routed r ON n.cell = r.cell AND n.vec_id <> r.q_id),
+        |rk AS (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
+        |  FROM sc)
+        |SELECT q_id, cell, vec_id, cos, rnk FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin),
     // E34 SemDeDup: seeded-KMeans cells over the dup-injected corpus,
     // assignment exported (same reproducibility contract as the learned
     // IVF above), then cell-scoped exact-cosine near-dup removal.
-    "q_semdedup" -> ((s, d) => {
+    QueryDef("q_semdedup", (s, d) => {
       val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val withDups = base.unionByName(
         base.filter(col("vec_id") % 100 === 0)
@@ -612,45 +2174,440 @@ object SparkEntry {
         .write.mode("overwrite").parquet(semCellsExportPath(d))
       ops.SemDedup.semanticDups(
         withDups.join(s.read.parquet(semCellsExportPath(d)), Seq("vec_id")))
-    }),
-    "q_emb_stats" -> ((s, d) => ops.Ann.labelStats(Tables.embeddings(s, d))),
-    "q_dedup_embed" -> ((s, d) => ops.Ann.embedCosineDups(Tables.embeddings(s, d))),
+    },
+      // SemDeDup twin: identical dup injection, the exported KMeans cell
+      // table (__GRAFT_SEMCELLS__), and the same µ-scaled exact-integer
+      // cosine op sequence as the other embedding oracles; removal =
+      // EXISTS a smaller-id same-cell neighbor at cos >= 0.999.
+      oracle = """WITH wd AS (
+        |  SELECT vec_id, embedding FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 10000000, embedding FROM embeddings
+        |  WHERE vec_id % 100 = 0),
+        |cells AS (
+        |  SELECT vec_id, CAST(cell AS BIGINT) AS cell
+        |  FROM read_parquet('__GRAFT_SEMCELLS__/*.parquet')),
+        |nn AS (
+        |  SELECT w.vec_id, c.cell,
+        |    list_transform(w.embedding,
+        |      x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM wd w JOIN cells c USING (vec_id)),
+        |n AS MATERIALIZED (
+        |  -- per-row svec math is EXACT in double (every term and
+        |  -- partial sum an integer < 2^53), so the native vectorized
+        |  -- list_dot_product replaces the interpreted list_reduce
+        |  -- lambda (~40x on the O(cell^2) pair scan) while producing
+        |  -- bit-identical cosines; group-summed centroid math
+        |  -- elsewhere stays HUGEINT, where double would NOT be exact
+        |  SELECT vec_id, cell,
+        |    list_transform(svec, x -> CAST(x AS DOUBLE)) AS dvec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM nn),
+        |rm AS (
+        |  SELECT DISTINCT b.vec_id
+        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id < b.vec_id
+        |  WHERE list_dot_product(a.dvec, b.dvec)
+        |    / (sqrt(CAST(a.norm2 AS DOUBLE)) * sqrt(CAST(b.norm2 AS DOUBLE)))
+        |    >= 0.999)
+        |SELECT n.vec_id, n.cell,
+        |  CASE WHEN rm.vec_id IS NULL THEN CAST(1 AS BIGINT)
+        |       ELSE CAST(0 AS BIGINT) END AS kept
+        |FROM n LEFT JOIN rm USING (vec_id)
+        |ORDER BY n.vec_id""".stripMargin),
+    QueryDef("q_emb_stats", (s, d) => ops.Ann.labelStats(Tables.embeddings(s, d)),
+      oracle = """WITH n AS (
+        |  SELECT label,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(embedding,
+        |        x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT))), (a,b) -> a + b*b
+        |    ) AS norm2
+        |  FROM embeddings)
+        |SELECT CAST(label AS BIGINT) AS label, count(*) AS n_vecs,
+        |  CAST(sum(norm2) AS BIGINT) AS sum_norm2,
+        |  CAST(min(norm2) AS BIGINT) AS min_norm2,
+        |  CAST(max(norm2) AS BIGINT) AS max_norm2
+        |FROM n GROUP BY label ORDER BY label""".stripMargin),
+    QueryDef("q_dedup_embed", (s, d) => ops.Ann.embedCosineDups(Tables.embeddings(s, d)),
+      oracle = """WITH base AS (
+        |  SELECT vec_id, embedding FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id % 100 = 0),
+        |v AS (
+        |  SELECT vec_id, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM base),
+        |n AS (
+        |  SELECT vec_id, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |signs AS (
+        |  SELECT j.j AS j, i.i AS i,
+        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
+        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
+        |  FROM range(0,16) j(j), range(0,64) i(i)),
+        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
+        |  FROM n, range(0,64) i(i)),
+        |proj AS (
+        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
+        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
+        |sig AS (
+        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
+        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
+        |  FROM proj GROUP BY vec_id),
+        |masks AS (
+        |  SELECT CAST(0 AS BIGINT) AS m
+        |  UNION ALL
+        |  SELECT CAST(1 AS BIGINT) << CAST(j.j AS INTEGER) FROM range(0,16) j(j)),
+        |probes AS (
+        |  SELECT vec_id, xor(sig, m) AS psig FROM sig, masks),
+        |cand AS (
+        |  SELECT a.vec_id AS id1, b.vec_id AS id2
+        |  FROM sig a JOIN probes b ON a.sig = b.psig AND a.vec_id < b.vec_id),
+        |sc AS (
+        |  SELECT c.id1, c.id2,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
+        |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)
+        |SELECT id1, id2, cos FROM sc WHERE cos >= 0.999 ORDER BY id1, id2""".stripMargin),
     // E42: diversity coreset — one representative per occupied SRP
     // angular cell (deterministic distributed stand-in for k-center)
-    "q_coreset" -> ((s, d) => ops.Ann.srpCoreset(Tables.embeddings(s, d))),
+    QueryDef("q_coreset", (s, d) => ops.Ann.srpCoreset(Tables.embeddings(s, d)),
+      // Coreset twin: the same exact-integer SRP signature pipeline as
+      // q_dedup_embed (no dup injection), then one group per bucket.
+      oracle = """WITH v AS (
+        |  SELECT vec_id, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM embeddings),
+        |signs AS (
+        |  SELECT j.j AS j, i.i AS i,
+        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
+        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
+        |  FROM range(0,16) j(j), range(0,64) i(i)),
+        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
+        |  FROM v, range(0,64) i(i)),
+        |proj AS (
+        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
+        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
+        |sig AS (
+        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
+        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
+        |  FROM proj GROUP BY vec_id)
+        |SELECT sig, min(vec_id) AS rep_id,
+        |  CAST(count(*) AS BIGINT) AS bucket_size
+        |FROM sig GROUP BY sig ORDER BY rep_id""".stripMargin),
     // The multiprobe KNOB at its other setting: exact-signature buckets
     // only (oneBitProbes=false) — 1/17th the probe fan-out of
     // q_dedup_embed, loses exactly the pairs straddling one hyperplane.
     // Both settings benched + oracle-checked; trade recorded in
     // docs/PLANS.md.
-    "q_dedup_embed_exactsig" -> ((s, d) =>
-      ops.Ann.embedCosineDups(Tables.embeddings(s, d), oneBitProbes = false)),
+    QueryDef("q_dedup_embed_exactsig", (s, d) =>
+      ops.Ann.embedCosineDups(Tables.embeddings(s, d), oneBitProbes = false),
+      // knob-off twin: identical up to candidate generation, which joins
+      // exact signatures only (no 1-bit probe masks)
+      oracle = """WITH base AS (
+        |  SELECT vec_id, embedding FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id % 100 = 0),
+        |v AS (
+        |  SELECT vec_id, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM base),
+        |n AS (
+        |  SELECT vec_id, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |signs AS (
+        |  SELECT j.j AS j, i.i AS i,
+        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
+        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
+        |  FROM range(0,16) j(j), range(0,64) i(i)),
+        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
+        |  FROM n, range(0,64) i(i)),
+        |proj AS (
+        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
+        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
+        |sig AS (
+        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
+        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
+        |  FROM proj GROUP BY vec_id),
+        |cand AS (
+        |  SELECT a.vec_id AS id1, b.vec_id AS id2
+        |  FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id < b.vec_id),
+        |sc AS (
+        |  SELECT c.id1, c.id2,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
+        |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)
+        |SELECT id1, id2, cos FROM sc WHERE cos >= 0.999 ORDER BY id1, id2""".stripMargin),
     // E54: embedding-space contamination screen — the semantic twin of
     // E24's verbatim n-gram screen; eval side broadcast + SRP-bucketed,
     // recovers the synthetically leaked eval vectors exactly
-    "q_contam_embed" -> ((s, d) =>
-      ops.Ann.embedContamination(Tables.embeddings(s, d))),
+    QueryDef("q_contam_embed", (s, d) =>
+      ops.Ann.embedContamination(Tables.embeddings(s, d)),
+      // E54 twin: identical SRP discipline, asymmetric sides — probes
+      // explode on the eval side only; leaked copies re-injected +10M
+      oracle = """WITH ev AS (
+        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
+        |tr AS (
+        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 0
+        |  UNION ALL
+        |  SELECT vec_id + 10000000, embedding FROM ev
+        |  WHERE (vec_id // 50) % 4 = 0),
+        |base AS (
+        |  SELECT vec_id, embedding, 1 AS is_ev FROM ev
+        |  UNION ALL
+        |  SELECT vec_id, embedding, 0 AS is_ev FROM tr),
+        |v AS (
+        |  SELECT vec_id, is_ev, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM base),
+        |n AS (
+        |  SELECT vec_id, is_ev, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |signs AS (
+        |  SELECT j.j AS j, i.i AS i,
+        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
+        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
+        |  FROM range(0,16) j(j), range(0,64) i(i)),
+        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
+        |  FROM n, range(0,64) i(i)),
+        |proj AS (
+        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
+        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
+        |sig AS (
+        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
+        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
+        |  FROM proj GROUP BY vec_id),
+        |masks AS (
+        |  SELECT CAST(0 AS BIGINT) AS m
+        |  UNION ALL
+        |  SELECT CAST(1 AS BIGINT) << CAST(j.j AS INTEGER) FROM range(0,16) j(j)),
+        |probes AS (
+        |  SELECT s.vec_id, xor(s.sig, m.m) AS psig
+        |  FROM sig s JOIN n ON n.vec_id = s.vec_id
+        |  CROSS JOIN masks m WHERE n.is_ev = 1),
+        |cand AS (
+        |  SELECT p.vec_id AS eval_id, t.vec_id AS train_id
+        |  FROM probes p
+        |  JOIN sig t ON t.sig = p.psig
+        |  JOIN n tn ON tn.vec_id = t.vec_id AND tn.is_ev = 0),
+        |sc AS (
+        |  SELECT c.eval_id, c.train_id,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
+        |  FROM cand c JOIN n x ON c.eval_id = x.vec_id JOIN n y ON c.train_id = y.vec_id)
+        |SELECT eval_id, CAST(count(*) AS BIGINT) AS n_leaks,
+        |  MAX(cos) AS max_cos, MIN(train_id) AS leak_id
+        |FROM sc WHERE cos >= 0.999
+        |GROUP BY eval_id ORDER BY eval_id""".stripMargin),
     // E55: winnowing (MOSS) fingerprint selection — rightmost-min over
     // every w-window of k-gram hashes via ONE packed-BIGINT MIN window
-    "q_winnow" -> ((s, d) => ops.Winnow.profile(Tables.documents(s, d))),
+    QueryDef("q_winnow", (s, d) => ops.Winnow.profile(Tables.documents(s, d)),
+      // E55 twin: identical packed-key rightmost-min winnowing selection
+      // (one MIN window over g·2^28 + (2^28−1−pos))
+      oracle = """WITH t AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+        |b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t WHERE len(tk) >= 3),
+        |g AS (
+        |  SELECT doc_id, pos0,
+        |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0+1 AS INTEGER):CAST(pos0+3 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
+        |  FROM (SELECT doc_id, tk, unnest(range(0, n - 2)) AS pos0 FROM b)),
+        |wm AS (
+        |  SELECT doc_id,
+        |    MIN(g * 268435456 + (268435455 - pos0)) OVER (PARTITION BY doc_id ORDER BY pos0
+        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
+        |    COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos0
+        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wn
+        |  FROM g),
+        |fp AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE wn = 4),
+        |agg AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fps,
+        |    MIN(wmin // 268435456) AS min_g, MAX(wmin // 268435456) AS max_g
+        |  FROM fp GROUP BY doc_id),
+        |nw AS (SELECT doc_id, n - 5 AS n_windows FROM b WHERE n - 5 >= 1)
+        |SELECT a.doc_id, nw.n_windows, a.n_fps,
+        |  CAST(a.n_fps * 1000000 // nw.n_windows AS BIGINT) AS density_ppm,
+        |  a.min_g, a.max_g
+        |FROM agg a JOIN nw USING (doc_id) ORDER BY doc_id""".stripMargin),
     // E55 detection join: content pairs sharing winnowed fingerprints,
     // df-capped postings (2/(w+1) the posting volume of full-gram E29)
-    "q_winnow_pairs" -> ((s, d) =>
-      ops.Winnow.sharedPairs(Tables.documents(s, d))),
-    "q_curate" -> ((s, d) => ops.Curation.curate(Tables.documents(s, d))),
+    QueryDef("q_winnow_pairs", (s, d) =>
+      ops.Winnow.sharedPairs(Tables.documents(s, d)),
+      // E55 pairs twin: I14 content reps, df-capped fingerprint postings
+      oracle = """WITH ch AS (SELECT doc_id, text, md5(text) AS ch FROM documents),
+        |reps AS (SELECT MIN(doc_id) AS doc_id FROM ch GROUP BY ch),
+        |rd AS (SELECT c.doc_id, c.text FROM ch c JOIN reps r ON c.doc_id = r.doc_id),
+        |t AS (SELECT doc_id, string_split(text,' ') AS tk FROM rd),
+        |b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t WHERE len(tk) >= 3),
+        |g AS (
+        |  SELECT doc_id, pos0,
+        |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0+1 AS INTEGER):CAST(pos0+3 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
+        |  FROM (SELECT doc_id, tk, unnest(range(0, n - 2)) AS pos0 FROM b)),
+        |wm AS (
+        |  SELECT doc_id,
+        |    MIN(g * 268435456 + (268435455 - pos0)) OVER (PARTITION BY doc_id ORDER BY pos0
+        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
+        |    COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos0
+        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wn
+        |  FROM g),
+        |fp AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE wn = 4),
+        |fpg AS (SELECT DISTINCT doc_id, wmin // 268435456 AS g FROM fp),
+        |rare AS (SELECT g FROM (SELECT g, count(*) AS df FROM fpg GROUP BY g) WHERE df <= 24),
+        |posts AS (SELECT f.doc_id, f.g FROM fpg f JOIN rare USING (g))
+        |SELECT a.doc_id AS id1, b2.doc_id AS id2, CAST(count(*) AS BIGINT) AS n_shared
+        |FROM posts a JOIN posts b2 ON a.g = b2.g AND a.doc_id < b2.doc_id
+        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id1, id2""".stripMargin),
+    QueryDef("q_curate", (s, d) => ops.Curation.curate(Tables.documents(s, d)),
+      oracle = """WITH g AS (
+        |  SELECT doc_id, lang, text,
+        |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
+        |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
+        |    md5(text) AS content_hash
+        |  FROM documents
+        |  WHERE lang IN ('en','de','fr')),
+        |gated AS (
+        |  SELECT * FROM g
+        |  WHERE n_tokens >= 20 AND n_tokens <= 1000
+        |    AND n_distinct / n_tokens >= 0.05),
+        |keepers AS (
+        |  SELECT content_hash, min(doc_id) AS doc_id FROM gated GROUP BY 1)
+        |SELECT g.doc_id, g.lang, g.n_tokens, g.content_hash
+        |FROM gated g
+        |WHERE EXISTS (SELECT 1 FROM keepers k
+        |  WHERE k.content_hash = g.content_hash AND k.doc_id = g.doc_id)
+        |ORDER BY g.doc_id""".stripMargin),
     // E43: per-source cap (domain capping) — k longest docs per source
     // via the count-of-counts threshold contraction, never a
     // whole-domain sort
-    "q_source_cap" -> ((s, d) => ops.Curation.sourceCap(Tables.documents(s, d))),
-    "q_curate_full" -> ((s, d) => ops.Curation.curateFull(Tables.documents(s, d))),
+    QueryDef("q_source_cap", (s, d) => ops.Curation.sourceCap(Tables.documents(s, d)),
+      oracle = """SELECT source, CAST(doc_id AS BIGINT) AS doc_id,
+        |  CAST(n_chars AS BIGINT) AS n_chars
+        |FROM (
+        |  SELECT source, doc_id, n_chars,
+        |    row_number() OVER (
+        |      PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn
+        |  FROM documents) t
+        |WHERE rn <= 10
+        |ORDER BY source, doc_id""".stripMargin),
+    QueryDef("q_curate_full", (s, d) => ops.Curation.curateFull(Tables.documents(s, d)),
+      oracle = s"""WITH RECURSIVE $sqlLshCtes,
+         |edges AS MATERIALIZED (
+         |  SELECT id1 AS a, id2 AS b FROM cand
+         |  UNION SELECT id2, id1 FROM cand),
+         |walk(node, lbl) AS (
+         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
+         |  UNION
+         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
+         |  FROM walk w JOIN edges e ON w.node = e.a
+         |  GROUP BY e.b),
+         |assign AS MATERIALIZED (
+         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
+         |  FROM walk GROUP BY node),
+         |g AS (
+         |  SELECT doc_id, lang, text,
+         |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
+         |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
+         |    md5(text) AS content_hash
+         |  FROM documents
+         |  WHERE lang IN ('en','de','fr')),
+         |gated AS (
+         |  SELECT * FROM g
+         |  WHERE n_tokens >= 20 AND n_tokens <= 1000
+         |    AND n_distinct / n_tokens >= 0.05),
+         |keepers AS (
+         |  SELECT content_hash, min(doc_id) AS doc_id FROM gated GROUP BY 1),
+         |cur AS (
+         |  SELECT g.doc_id, g.lang, g.n_tokens, g.content_hash
+         |  FROM gated g
+         |  WHERE EXISTS (SELECT 1 FROM keepers k
+         |    WHERE k.content_hash = g.content_hash AND k.doc_id = g.doc_id))
+         |SELECT c.doc_id, c.lang, c.n_tokens, c.content_hash
+         |FROM cur c LEFT JOIN assign a ON c.doc_id = a.doc_id
+         |WHERE a.cluster_id IS NULL OR a.cluster_id = c.doc_id
+         |ORDER BY c.doc_id""".stripMargin),
     // E70: where did the corpus go — per (source, first-failing-gate)
     // doc count and token mass; funnel['kept'] reconciles with E19
-    "q_curation_funnel" -> ((s, d) =>
-      ops.Curation.curationFunnel(Tables.documents(s, d))),
-    "q_emb_quantize" -> ((s, d) => ops.Curation.quantizeStats(Tables.embeddings(s, d))),
+    QueryDef("q_curation_funnel", (s, d) =>
+      ops.Curation.curationFunnel(Tables.documents(s, d)),
+      // E70: first-failing-gate attribution; keeper = min PASSING copy,
+      // near-dup canonical = full-corpus cluster min id (E19 semantics)
+      oracle = s"""WITH RECURSIVE $sqlLshCtes,
+         |edges AS MATERIALIZED (
+         |  SELECT id1 AS a, id2 AS b FROM cand
+         |  UNION SELECT id2, id1 FROM cand),
+         |walk(node, lbl) AS (
+         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
+         |  UNION
+         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
+         |  FROM walk w JOIN edges e ON w.node = e.a
+         |  GROUP BY e.b),
+         |assign AS MATERIALIZED (
+         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
+         |  FROM walk GROUP BY node),
+         |g AS (
+         |  SELECT doc_id, lang, source,
+         |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
+         |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT)
+         |      AS n_distinct,
+         |    md5(text) AS content_hash,
+         |    lang IN ('en','de','fr') AS lang_ok,
+         |    CAST(len(string_split(text,' ')) AS BIGINT) < 20
+         |      AS short_bad,
+         |    CAST(len(string_split(text,' ')) AS BIGINT) > 1000
+         |      AS long_bad
+         |  FROM documents),
+         |g2 AS (
+         |  SELECT *, n_distinct / n_tokens < 0.05 AS div_bad,
+         |    lang_ok AND NOT short_bad AND NOT long_bad
+         |      AND NOT (n_distinct / n_tokens < 0.05) AS passed
+         |  FROM g),
+         |ke AS (
+         |  SELECT content_hash, min(doc_id) AS keep_id
+         |  FROM g2 WHERE passed GROUP BY 1),
+         |r AS (
+         |  SELECT g2.source, g2.n_tokens,
+         |    CASE WHEN NOT g2.lang_ok THEN '1_lang'
+         |      WHEN g2.short_bad THEN '2_too_short'
+         |      WHEN g2.long_bad THEN '3_too_long'
+         |      WHEN g2.div_bad THEN '4_low_diversity'
+         |      WHEN g2.doc_id != k.keep_id THEN '5_exact_dup'
+         |      WHEN a.cluster_id IS NOT NULL
+         |        AND a.cluster_id != g2.doc_id THEN '6_near_dup'
+         |      ELSE '7_kept' END AS reason
+         |  FROM g2
+         |  LEFT JOIN ke k ON g2.content_hash = k.content_hash
+         |  LEFT JOIN assign a ON g2.doc_id = a.doc_id)
+         |SELECT source, reason, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens
+         |FROM r GROUP BY 1, 2 ORDER BY source, reason""".stripMargin),
+    QueryDef("q_emb_quantize", (s, d) => ops.Curation.quantizeStats(Tables.embeddings(s, d)),
+      oracle = """WITH d AS (
+        |  SELECT vec_id,
+        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dvec
+        |  FROM embeddings),
+        |m AS (
+        |  SELECT vec_id, dvec,
+        |    list_max(list_transform(dvec, x -> abs(x))) AS max_abs
+        |  FROM d),
+        |q AS (
+        |  SELECT vec_id,
+        |    list_transform(dvec, x -> CAST(round(x * 127 / max_abs) AS BIGINT)) AS qvec
+        |  FROM m)
+        |SELECT vec_id,
+        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), qvec), (a,b) -> a+b) AS BIGINT) AS q_sum,
+        |  CAST(list_min(qvec) AS BIGINT) AS q_min,
+        |  CAST(list_max(qvec) AS BIGINT) AS q_max
+        |FROM q ORDER BY vec_id""".stripMargin),
 
     // ---- D13: correlated-subquery shape (above-own-nation-average)
-    "q_corr_subquery" -> ((s, d) => {
+    QueryDef("q_corr_subquery", (s, d) => {
       val cust = Tables.customer(s, d).select(
         col("c_custkey"), col("c_nationkey").cast(LongType).as("nationkey"),
         cents(col("c_acctbal")).as("bal_cents"))
@@ -660,10 +2617,19 @@ object SparkEntry {
         .filter(col("bal_cents") > col("avg_bal"))
         .select(col("c_custkey"), col("nationkey"), col("bal_cents"))
         .orderBy(col("c_custkey"))
-    }),
+    },
+      oracle = """WITH cust AS (
+        |  SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nationkey,
+        |    CAST(round(c_acctbal*100) AS BIGINT) AS bal_cents
+        |  FROM customer)
+        |SELECT c_custkey, nationkey, bal_cents FROM cust c
+        |WHERE bal_cents > (
+        |  SELECT CAST(sum(bal_cents) AS DOUBLE) / count(*) FROM cust c2
+        |  WHERE c2.nationkey = c.nationkey)
+        |ORDER BY c_custkey""".stripMargin),
 
     // ---- D14: date/time function surface
-    "q_date_funcs" -> ((s, d) => {
+    QueryDef("q_date_funcs", (s, d) => {
       Tables.orders(s, d).select(
         col("o_orderkey"),
         year(col("o_orderdate")).cast(LongType).as("y"),
@@ -674,10 +2640,18 @@ object SparkEntry {
           .cast(LongType).as("age_days"),
         date_format(add_months(col("o_orderdate"), 3), "yyyy-MM-dd").as("plus3m"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      oracle = """SELECT o_orderkey,
+        |  CAST(year(o_orderdate) AS BIGINT) AS y,
+        |  CAST(quarter(o_orderdate) AS BIGINT) AS q,
+        |  CAST(month(o_orderdate) AS BIGINT) AS m,
+        |  CAST(isodow(o_orderdate) AS BIGINT) AS isodow,
+        |  CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS BIGINT) AS age_days,
+        |  strftime(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus3m
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // ---- D15: string function surface
-    "q_string_funcs" -> ((s, d) => {
+    QueryDef("q_string_funcs", (s, d) => {
       Tables.customer(s, d).select(
         col("c_custkey"),
         upper(col("c_name")).as("up"),
@@ -687,13 +2661,21 @@ object SparkEntry {
         length(col("c_name")).cast(LongType).as("name_len"),
         translate(col("c_mktsegment"), "AEIOU", "aeiou").as("xlat"))
         .orderBy(col("c_custkey"))
-    }),
+    },
+      oracle = """SELECT c_custkey,
+        |  upper(c_name) AS up,
+        |  substring(c_mktsegment, 1, 3) AS seg3,
+        |  regexp_replace(c_name, '#', '-', 'g') AS dashed,
+        |  lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded,
+        |  CAST(length(c_name) AS BIGINT) AS name_len,
+        |  translate(c_mktsegment, 'AEIOU', 'aeiou') AS xlat
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
     // ---- D45: collection-function surface (the array-HOF sibling of
     // D14/D15): per-user sorted value array, then codegen'd/interpreted
     // HOFs — aggregate fold, filter, zip_with+reverse, slice, exists.
     // Group arrays are bounded by per-user activity, never the corpus.
-    "q_collection_funcs" -> ((s, d) => {
+    QueryDef("q_collection_funcs", (s, d) => {
       val ev = Tables.events(s, d).select(col("user_id"), cents(col("value")).as("v"))
       ev.groupBy(col("user_id"))
         .agg(sort_array(collect_list(col("v"))).as("arr"))
@@ -714,25 +2696,95 @@ object SparkEntry {
             lit(0L), (acc, x) => acc + x).as("zip_sum"),
           exists(col("arr"), x => x > lit(90000L)).cast(LongType).as("has_big"))
         .orderBy(col("user_id"))
-    }),
+    },
+      // Collection twin: the zip_with(arr, reverse(arr)) fold equals
+      // 2·Σarr by symmetry, and exists(x > t) equals max > t — the twin
+      // states the identities, which checks the HOFs against closed forms.
+      oracle = """WITH ev AS (
+        |  SELECT user_id, CAST(round(value*100) AS BIGINT) AS v FROM events),
+        |a AS (SELECT user_id, list(v ORDER BY v) AS arr FROM ev GROUP BY 1)
+        |SELECT user_id,
+        |  CAST(len(arr) AS BIGINT) AS n,
+        |  CAST(list_sum(arr) AS BIGINT) AS total_cents,
+        |  list_min(arr) AS min_cents,
+        |  list_max(arr) AS max_cents,
+        |  CAST(len(list_filter(arr, x -> x % 2 = 0)) AS BIGINT) AS n_even,
+        |  array_to_string(arr[1:3], ',') AS first3,
+        |  arr[1] AS elem1,
+        |  CAST(2 * list_sum(arr) AS BIGINT) AS zip_sum,
+        |  CAST(list_max(arr) > 90000 AS BIGINT) AS has_big
+        |FROM a ORDER BY user_id""".stripMargin),
 
     // ---- D17: gap-based sessionization (30-min inactivity boundary)
-    "q_sessionize" -> ((s, d) => {
+    QueryDef("q_sessionize", (s, d) => {
       ops.Sessionize.sessions(
         Tables.events(s, d).select(col("user_id"), col("ts_us"),
           cents(col("value")).as("v_cents")),
         key = "user_id", tsUs = "ts_us", valueCents = "v_cents")
         .orderBy(col("user_id"), col("session_seq"))
-    }),
+    },
+      oracle = """WITH t AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us,
+        |    CAST(round(value*100) AS BIGINT) AS v_cents
+        |  FROM events),
+        |b AS (
+        |  SELECT *,
+        |    CASE WHEN lag(ts_us) OVER w IS NULL
+        |           OR ts_us - lag(ts_us) OVER w > 30*60000000 THEN 1 ELSE 0 END AS is_new
+        |  FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
+        |s AS (
+        |  SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us
+        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
+        |  FROM b)
+        |SELECT user_id, session_seq,
+        |  count(*) AS n_events,
+        |  CAST(min(ts_us) AS BIGINT) AS start_us,
+        |  CAST(max(ts_us) AS BIGINT) AS end_us,
+        |  CAST(sum(v_cents) AS BIGINT) AS sum_cents,
+        |  CAST(max(ts_us) - min(ts_us) AS BIGINT) AS duration_us
+        |FROM s GROUP BY user_id, session_seq
+        |ORDER BY user_id, session_seq""".stripMargin),
 
     // ---- D79: sweep-line session concurrency — per-day peak open
     // sessions + starts; capacity-planning view of D17's sessions
-    "q_concurrency" -> ((s, d) =>
+    QueryDef("q_concurrency", (s, d) =>
       ops.Sessionize.concurrencyCurve(
         ops.Sessionize.sessions(
           Tables.events(s, d).select(col("user_id"), col("ts_us"),
             cents(col("value")).as("v_cents")),
-          key = "user_id", tsUs = "ts_us", valueCents = "v_cents"))),
+          key = "user_id", tsUs = "ts_us", valueCents = "v_cents")),
+      // D79: +1/-1 sweep over the D17 sessions; starts before ends at
+      // equal ts (closed intervals); greatest(open, open-d) carries the
+      // overnight plateau; per-day max is tie-order invariant
+      oracle = """WITH t AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events),
+        |b AS (
+        |  SELECT *,
+        |    CASE WHEN lag(ts_us) OVER w IS NULL
+        |           OR ts_us - lag(ts_us) OVER w > 30*60000000
+        |      THEN 1 ELSE 0 END AS is_new
+        |  FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
+        |s AS (
+        |  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us
+        |    ROWS UNBOUNDED PRECEDING) AS session_seq
+        |  FROM b),
+        |sess AS (
+        |  SELECT user_id, session_seq, min(ts_us) AS start_us,
+        |    max(ts_us) AS end_us
+        |  FROM s GROUP BY 1, 2),
+        |deltas AS (
+        |  SELECT start_us AS ts, 1 AS d FROM sess
+        |  UNION ALL SELECT end_us, -1 FROM sess),
+        |sweep AS (
+        |  SELECT ts, d,
+        |    sum(d) OVER (ORDER BY ts, d DESC ROWS UNBOUNDED PRECEDING)
+        |      AS open
+        |  FROM deltas)
+        |SELECT ts // 86400000000 AS day,
+        |  CAST(max(greatest(open, open - d)) AS BIGINT) AS peak_concurrent,
+        |  CAST(sum(CASE WHEN d = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_starts
+        |FROM sweep GROUP BY 1 ORDER BY day""".stripMargin),
 
     // ---- D18: bounded-interval range join (same-user pairs ≤ 5 min
     // apart), banded: both sides join on (user_id, time_bucket) with
@@ -741,7 +2793,7 @@ object SparkEntry {
     // events in a bucket produces O(k·per-bucket) candidates instead of
     // the k² a join on user_id alone materializes — the difference
     // between a bounded task and a 2.5B-row task at 100×.
-    "q_range_join" -> ((s, d) => {
+    QueryDef("q_range_join", (s, d) => {
       val boundUs = 300000000L
       val e = Tables.events(s, d).select(
         col("user_id"), col("event_id"), col("ts_us"))
@@ -761,11 +2813,17 @@ object SparkEntry {
         .select(col("user_id"), col("id1"), col("id2"),
           (col("us2") - col("us1")).as("gap_us"))
         .orderBy(col("user_id"), col("id1"), col("id2"))
-    }),
+    },
+      oracle = """WITH t AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events)
+        |SELECT a.user_id, a.event_id AS id1, b.event_id AS id2,
+        |  b.ts_us - a.ts_us AS gap_us
+        |FROM t a JOIN t b ON a.user_id = b.user_id
+        |  AND b.ts_us > a.ts_us AND b.ts_us - a.ts_us <= 300000000
+        |ORDER BY a.user_id, id1, id2""".stripMargin),
 
     // ---- D20: null semantics (left-join nulls, null-safe equality,
     // coalesce/nullif, null-aware counts)
-    "q_null_safe" -> ((s, d) => {
+    QueryDef("q_null_safe", (s, d) => {
       val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
       val pOrders = Tables.orders(s, d).filter(col("o_orderstatus") === "P")
         .select(col("o_custkey"), col("o_orderpriority"))
@@ -779,10 +2837,20 @@ object SparkEntry {
             .otherwise(0L)).as("n_urgent_nullsafe"),
           count(nullif(col("o_orderpriority"), lit("5-LOW"))).as("n_not_low"))
         .orderBy(col("c_mktsegment"))
-    }),
+    },
+      oracle = """SELECT c_mktsegment,
+        |  count(*) AS n_rows,
+        |  count(o_orderpriority) AS n_matched,
+        |  CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
+        |  CAST(sum(CASE WHEN o_orderpriority IS NOT DISTINCT FROM '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS n_urgent_nullsafe,
+        |  count(nullif(o_orderpriority, '5-LOW')) AS n_not_low
+        |FROM customer c LEFT JOIN (
+        |  SELECT o_custkey, o_orderpriority FROM orders WHERE o_orderstatus = 'P') o
+        |  ON c.c_custkey = o.o_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
 
     // ---- D21: value-based (RANGE) window frames
-    "q_window_range" -> ((s, d) => {
+    QueryDef("q_window_range", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("l_suppkey"))
         .orderBy(col("qty"))
@@ -800,10 +2868,22 @@ object SparkEntry {
           sum(col("n_within5") *
             ((col("l_orderkey") * 37L + col("l_linenumber")) % 997L)).as("w_dot"))
         .orderBy(col("l_suppkey"))
-    }),
+    },
+      oracle = """WITH r AS (
+        |  SELECT l_suppkey, l_orderkey, l_linenumber,
+        |    count(*) OVER (PARTITION BY l_suppkey ORDER BY CAST(l_quantity AS BIGINT)
+        |      RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS n_within5
+        |  FROM lineitem)
+        |SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(n_within5) AS BIGINT) AS w_sum,
+        |  CAST(max(n_within5) AS BIGINT) AS w_max,
+        |  CAST(sum(n_within5 * ((l_orderkey * 37 + l_linenumber) % 997))
+        |    AS BIGINT) AS w_dot
+        |FROM r GROUP BY l_suppkey
+        |ORDER BY l_suppkey""".stripMargin),
 
     // ---- D22: first/last/nth value window functions
-    "q_window_firstlast" -> ((s, d) => {
+    QueryDef("q_window_firstlast", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
@@ -817,10 +2897,18 @@ object SparkEntry {
           col("first_key"), col("last_key"),
           coalesce(col("second_key"), lit(-1L)).as("second_key"))
         .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
+    },
+      oracle = """SELECT o_custkey, o_orderkey,
+        |  first_value(o_orderkey) OVER w AS first_key,
+        |  last_value(o_orderkey) OVER w AS last_key,
+        |  COALESCE(nth_value(o_orderkey, 2) OVER w, -1) AS second_key
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
 
     // ---- D19: exact interpolated quantiles per group
-    "q_median" -> ((s, d) => {
+    QueryDef("q_median", (s, d) => {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
@@ -828,7 +2916,12 @@ object SparkEntry {
           percentile(col("l_quantity"), lit(0.5)).as("p50"),
           percentile(col("l_quantity"), lit(0.75)).as("p75"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
+      oracle = """SELECT l_returnflag,
+        |  quantile_cont(l_quantity, 0.25) AS p25,
+        |  quantile_cont(l_quantity, 0.5) AS p50,
+        |  quantile_cont(l_quantity, 0.75) AS p75
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // ---- D37: exact-moment correlation/covariance/regression slope.
     // Built-in corr()/covar_pop() accumulate running doubles whose
@@ -838,7 +2931,7 @@ object SparkEntry {
     // fixed sequence of IEEE ops (cast, sqrt, multiply, divide) that
     // both engines round identically. Map-side partial aggregation,
     // one shuffle on the group key.
-    "q_corr" -> ((s, d) => {
+    QueryDef("q_corr", (s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       Tables.lineitem(s, d)
         .select(col("l_returnflag"),
@@ -862,7 +2955,23 @@ object SparkEntry {
             / (col("n").cast(dec) * col("syy") - col("sy") * col("sy")).cast("double"))
             .as("beta_price_on_qty"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
+      oracle = """WITH b AS (SELECT l_returnflag,
+        |    CAST(round(l_extendedprice*100) AS BIGINT) AS x,
+        |    CAST(l_quantity AS BIGINT) AS y
+        |  FROM lineitem),
+        |m AS (SELECT l_returnflag, count(*) AS n,
+        |    sum(x) AS sx, sum(y) AS sy,
+        |    sum(x*x) AS sxx, sum(x*y) AS sxy, sum(y*y) AS syy
+        |  FROM b GROUP BY 1)
+        |SELECT l_returnflag, n,
+        |  CAST(n*sxy - sx*sy AS DOUBLE)
+        |    / (sqrt(CAST(n*sxx - sx*sx AS DOUBLE))
+        |       * sqrt(CAST(n*syy - sy*sy AS DOUBLE))) AS corr_price_qty,
+        |  CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*n AS DOUBLE) AS cov_price_qty,
+        |  CAST(n*sxy - sx*sy AS DOUBLE)
+        |    / CAST(n*syy - sy*sy AS DOUBLE) AS beta_price_on_qty
+        |FROM m ORDER BY l_returnflag""".stripMargin),
 
     // ---- D38: exact integer z-score outliers. The σ-threshold test
     // |x−µ| > k·σ is squared into pure integer arithmetic —
@@ -870,7 +2979,7 @@ object SparkEntry {
     // floating point at all (µ and σ never materialize). Group moments
     // are one agg shuffle; the broadcast joins them back; the flag is
     // map-side. Deterministic on any engine with exact wide integers.
-    "q_outliers" -> ((s, d) => {
+    QueryDef("q_outliers", (s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val base = Tables.lineitem(s, d)
         .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
@@ -888,7 +2997,18 @@ object SparkEntry {
           min(col("x")).as("min_outlier_cents"),
           max(col("x")).as("max_outlier_cents"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
+      oracle = """WITH b AS (SELECT l_returnflag,
+        |    CAST(round(l_extendedprice*100) AS BIGINT) AS x
+        |  FROM lineitem),
+        |m AS (SELECT l_returnflag, count(*) AS n,
+        |    sum(x) AS sx, sum(x*x) AS sxx
+        |  FROM b GROUP BY 1)
+        |SELECT b.l_returnflag, count(*) AS n_outliers,
+        |  min(x) AS min_outlier_cents, max(x) AS max_outlier_cents
+        |FROM b JOIN m USING (l_returnflag)
+        |WHERE (x*n - sx)*(x*n - sx)*n > 9*(n*sxx - sx*sx)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ---- D91: audience OVERLAP matrix — for every event-type pair the
     // exact shared-user count and Jaccard ppm (the which-surfaces-
@@ -897,7 +3017,7 @@ object SparkEntry {
     // (type, user) FIRST, then the self-join on user_id is bounded by
     // types-per-user ≤ |type domain| — per-user pair fan-out ≤ 25 here,
     // never quadratic in events; sizes ride broadcast type-domain frames
-    "q_type_overlap" -> ((s, d) => {
+    QueryDef("q_type_overlap", (s, d) => {
       val m = Tables.events(s, d)
         .select(col("event_type").as("t"), col("user_id")).distinct()
       val sz = m.groupBy(col("t")).agg(count(lit(1)).as("n"))
@@ -910,7 +3030,19 @@ object SparkEntry {
           col("n1"), col("n2"),
           expr("1000000 * n_both div (n1 + n2 - n_both)").as("jaccard_ppm"))
         .orderBy(col("type1"), col("type2"))
-    }),
+    },
+      // overlap twin: same membership contraction + self-join + ppm
+      oracle = """WITH m AS (SELECT DISTINCT event_type AS t, user_id FROM events),
+        |sz AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS n FROM m GROUP BY 1),
+        |p AS (
+        |  SELECT a.t AS type1, b.t AS type2, CAST(COUNT(*) AS BIGINT) AS n_both
+        |  FROM m a JOIN m b ON a.user_id = b.user_id AND a.t < b.t
+        |  GROUP BY 1, 2)
+        |SELECT type1, type2, n_both, s1.n AS n1, s2.n AS n2,
+        |  CAST(1000000 * n_both // (s1.n + s2.n - n_both) AS BIGINT)
+        |    AS jaccard_ppm
+        |FROM p JOIN sz s1 ON s1.t = type1 JOIN sz s2 ON s2.t = type2
+        |ORDER BY 1, 2""".stripMargin),
 
     // ---- D90: exact MAD robust outliers per type — the heavy-tail-safe
     // sibling of D38's z-score (one wild value inflates a stdev until
@@ -921,22 +3053,45 @@ object SparkEntry {
     // finisher the F34 stream shares verbatim. cents are ints so every
     // interpolated value sits on the exact 0.5 grain — bit-equal as
     // doubles in both engines.
-    "q_mad_outliers" -> ((s, d) =>
-      ops.Analytics.madOutliers(Tables.events(s, d))),
+    QueryDef("q_mad_outliers", (s, d) =>
+      ops.Analytics.madOutliers(Tables.events(s, d)),
+      // MAD twin: quantile_cont interpolates exactly like Spark's
+      // percentile, and integer cents keep every value on the 0.5 grain
+      oracle = """WITH e AS (SELECT event_type,
+        |    CAST(round(value*100) AS BIGINT) AS v FROM events),
+        |m AS (SELECT event_type, quantile_cont(v, 0.5) AS med
+        |  FROM e GROUP BY 1),
+        |d AS (SELECT e.event_type, ABS(e.v - m.med) AS ad, m.med
+        |  FROM e JOIN m USING (event_type)),
+        |md AS (SELECT event_type, quantile_cont(ad, 0.5) AS mad
+        |  FROM d GROUP BY 1)
+        |SELECT d.event_type, MIN(d.med) AS med, MIN(md.mad) AS mad,
+        |  CAST(COUNT(*) AS BIGINT) AS n_rows,
+        |  CAST(COUNT(CASE WHEN d.ad > 3*md.mad THEN 1 END) AS BIGINT)
+        |    AS n_outliers
+        |FROM d JOIN md USING (event_type)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ---- D16: pivot (wide per-user event-type value matrix)
-    "q_pivot" -> ((s, d) => {
+    QueryDef("q_pivot", (s, d) => {
       Tables.events(s, d)
         .groupBy(col("user_id"))
         .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
         .agg(sum(cents(col("value"))))
         .na.fill(0L)
         .orderBy(col("user_id"))
-    }),
+    },
+      oracle = """SELECT user_id,
+        |  CAST(COALESCE(sum(CASE WHEN event_type='click' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS click,
+        |  CAST(COALESCE(sum(CASE WHEN event_type='error' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS error,
+        |  CAST(COALESCE(sum(CASE WHEN event_type='purchase' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS purchase,
+        |  CAST(COALESCE(sum(CASE WHEN event_type='signup' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS signup,
+        |  CAST(COALESCE(sum(CASE WHEN event_type='view' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS view
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // ---- D26: UNPIVOT/melt — wide metric columns to tall
     // (row, metric, value) form, the inverse of D16 pivot
-    "q_unpivot" -> ((s, d) => {
+    QueryDef("q_unpivot", (s, d) => {
       Tables.lineitem(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
         cents(col("l_extendedprice")).as("price_cents"),
@@ -962,31 +3117,202 @@ object SparkEntry {
           sum((col("v") % 1000003L) *
             ((col("l_orderkey") * 37L + col("l_linenumber")) % 997L)).as("v_dot"))
         .orderBy(col("metric"))
-    }),
+    },
+      oracle = """WITH base AS (
+        |  SELECT l_orderkey, l_linenumber,
+        |    CAST(round(l_extendedprice*100) AS BIGINT) AS price_cents,
+        |    CAST(round(l_discount*100) AS BIGINT) AS discount_cents,
+        |    CAST(round(l_tax*100) AS BIGINT) AS tax_cents,
+        |    CAST(l_quantity AS BIGINT) AS qty
+        |  FROM lineitem),
+        |tall AS (
+        |  SELECT l_orderkey, l_linenumber, metric, v FROM base
+        |  UNPIVOT (v FOR metric IN (price_cents, discount_cents, tax_cents, qty)))
+        |SELECT metric, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(v) AS BIGINT) AS v_sum,
+        |  CAST(min(v) AS BIGINT) AS v_min,
+        |  CAST(max(v) AS BIGINT) AS v_max,
+        |  CAST(sum((v % 1000003) * ((l_orderkey * 37 + l_linenumber) % 997))
+        |    AS BIGINT) AS v_dot
+        |FROM tall GROUP BY metric
+        |ORDER BY metric""".stripMargin),
 
     // ---- E20–E25: training-data prep (chunking, repetition gate, PII
     // scrub, deterministic split, contamination screen, stratified sample)
-    "q_chunk" -> ((s, d) => ops.TrainingData.chunk(Tables.documents(s, d))),
-    "q_gopher" -> ((s, d) => ops.TrainingData.gopherQuality(Tables.documents(s, d))),
-    "q_pii_scrub" -> ((s, d) => ops.TrainingData.piiScrub(Tables.documents(s, d))),
-    "q_split" -> ((s, d) => ops.TrainingData.hashSplit(Tables.documents(s, d))),
+    QueryDef("q_chunk", (s, d) => ops.TrainingData.chunk(Tables.documents(s, d)),
+      oracle = """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+        |c AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n,
+        |  CAST(1 + CASE WHEN len(toks) > 40
+        |    THEN (len(toks) - 40 + 29) // 30 ELSE 0 END AS BIGINT) AS n_chunks
+        |  FROM t),
+        |x AS (SELECT doc_id, toks, n, unnest(range(0, n_chunks)) AS i FROM c)
+        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
+        |  array_to_string(toks[(i*30+1):(i*30+40)], ' ') AS chunk_text,
+        |  CAST(least(40, n - i*30) AS BIGINT) AS chunk_tokens
+        |FROM x ORDER BY doc_id, chunk_id""".stripMargin),
+    QueryDef("q_gopher", (s, d) => ops.TrainingData.gopherQuality(Tables.documents(s, d)),
+      oracle = """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+        |u AS (SELECT doc_id, unnest(toks) AS tok FROM t),
+        |uc AS (SELECT doc_id, tok, count(*) AS c FROM u GROUP BY 1, 2),
+        |ua AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
+        |  count(*) AS n_distinct, CAST(max(c) AS BIGINT) AS max_uni
+        |  FROM uc GROUP BY 1),
+        |b AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+        |    i -> toks[i] || ' ' || toks[i+1])) AS bg
+        |  FROM t WHERE len(toks) >= 2),
+        |bc AS (SELECT doc_id, bg, count(*) AS c FROM b GROUP BY 1, 2),
+        |ba AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
+        |  CAST(max(c) AS BIGINT) AS max_bi FROM bc GROUP BY 1)
+        |SELECT ua.doc_id, ua.n_tokens, ua.n_distinct,
+        |  (ua.n_tokens - ua.n_distinct) * 1000000 // ua.n_tokens AS dup_tok_ppm,
+        |  ua.max_uni * 1000000 // ua.n_tokens AS top_uni_ppm,
+        |  COALESCE(ba.max_bi * 1000000 // ba.n_bigrams, 0) AS top_bi_ppm,
+        |  CAST(CASE WHEN ua.max_uni * 1000000 // ua.n_tokens <= 120000
+        |    AND COALESCE(ba.max_bi * 1000000 // ba.n_bigrams, 0) <= 80000
+        |    AND (ua.n_tokens - ua.n_distinct) * 1000000 // ua.n_tokens <= 800000
+        |    THEN 1 ELSE 0 END AS BIGINT) AS gopher_ok
+        |FROM ua LEFT JOIN ba ON ua.doc_id = ba.doc_id
+        |ORDER BY ua.doc_id""".stripMargin),
+    QueryDef("q_pii_scrub", (s, d) => ops.TrainingData.piiScrub(Tables.documents(s, d)),
+      oracle = """WITH t AS (
+        |  SELECT doc_id, text
+        |    || CASE WHEN doc_id % 7 = 0 THEN ' contact user'
+        |         || CAST(doc_id AS VARCHAR) || '@example.com now' ELSE '' END
+        |    || CASE WHEN doc_id % 11 = 0 THEN ' call 555-'
+        |         || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' asap'
+        |       ELSE '' END AS t2
+        |  FROM documents),
+        |m AS (
+        |  SELECT doc_id,
+        |    regexp_replace(regexp_replace(t2,
+        |      '[a-z0-9]+@[a-z]+\.[a-z]+', '<EMAIL>', 'g'),
+        |      '\d{3}-\d{4}', '<PHONE>', 'g') AS s2
+        |  FROM t)
+        |SELECT doc_id,
+        |  (length(s2) - length(replace(s2, '<EMAIL>', ''))) // 7 AS n_emails,
+        |  (length(s2) - length(replace(s2, '<PHONE>', ''))) // 7 AS n_phones,
+        |  CAST(('0x'||substr(md5(s2),1,8)) AS BIGINT) AS scrub_hash
+        |FROM m ORDER BY doc_id""".stripMargin),
+    QueryDef("q_split", (s, d) => ops.TrainingData.hashSplit(Tables.documents(s, d)),
+      oracle = """WITH t AS (
+        |  SELECT source, doc_id, n_chars,
+        |    CAST(('0x'||substr(md5('split:'||CAST(doc_id AS VARCHAR)),1,8))
+        |      AS BIGINT) % 100 AS b
+        |  FROM documents)
+        |SELECT source,
+        |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
+        |    ELSE 'test' END AS split,
+        |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        |  min(doc_id) AS min_doc
+        |FROM t GROUP BY 1, 2 ORDER BY source, split""".stripMargin),
     // E35: DLT priority sampling — weighted subset via top-N priorities
-    "q_priority_sample" -> ((s, d) =>
-      ops.TrainingData.prioritySample(Tables.documents(s, d))),
+    QueryDef("q_priority_sample", (s, d) =>
+      ops.TrainingData.prioritySample(Tables.documents(s, d)),
+      // DLT priority sampling twin: same md5-derived uniform, identical
+      // two-op IEEE sequence (cast-mul, then divide), same tie-break.
+      oracle = """SELECT doc_id, source, n_chars,
+        |  (CAST(n_chars AS DOUBLE) * 4294967296.0) /
+        |  CAST(CAST(('0x'||substr(md5('prio:'||CAST(doc_id AS VARCHAR)),1,8))
+        |    AS BIGINT) + 1 AS DOUBLE) AS priority
+        |FROM documents
+        |ORDER BY priority DESC, doc_id LIMIT 100""".stripMargin),
     // E36: fixed-mixture sampling to per-source char budgets
-    "q_mixture" -> ((s, d) =>
-      ops.TrainingData.mixtureSample(Tables.documents(s, d))),
-    "q_contam" -> ((s, d) => ops.TrainingData.contamination(Tables.documents(s, d))),
-    "q_stratified" -> ((s, d) => ops.TrainingData.stratifiedSample(Tables.documents(s, d))),
+    QueryDef("q_mixture", (s, d) =>
+      ops.TrainingData.mixtureSample(Tables.documents(s, d)),
+      // Mixture-sampling twin: same parity budgets, same md5 permutation,
+      // same strictly-before cumulative predicate.
+      oracle = """WITH t AS (
+        |  SELECT source, doc_id, n_chars,
+        |    CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 0
+        |      THEN 4000 ELSE 2000 END AS budget,
+        |    COALESCE(SUM(n_chars) OVER (PARTITION BY source
+        |      ORDER BY CAST(('0x'||substr(md5('mix:'||CAST(doc_id AS VARCHAR)),1,8))
+        |        AS BIGINT), doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
+        |  FROM documents)
+        |SELECT source, count(*) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
+        |FROM t WHERE cum_before < budget
+        |GROUP BY 1 ORDER BY source""".stripMargin),
+    QueryDef("q_contam", (s, d) => ops.TrainingData.contamination(Tables.documents(s, d)),
+      oracle = """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+        |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+        |    i -> CAST(('0x'||substr(md5(toks[i] || ' ' || toks[i+1]),1,8))
+        |      AS BIGINT))) AS g
+        |  FROM t WHERE len(toks) >= 2),
+        |e AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
+        |s AS (SELECT DISTINCT d.doc_id, d.g FROM g d JOIN e USING (g)
+        |  WHERE d.doc_id % 97 <> 0)
+        |SELECT doc_id, count(*) AS n_shared_grams
+        |FROM s GROUP BY 1 ORDER BY doc_id""".stripMargin),
+    QueryDef("q_stratified", (s, d) => ops.TrainingData.stratifiedSample(Tables.documents(s, d)),
+      oracle = """SELECT doc_id, lang, CAST(rn AS BIGINT) AS rn FROM (
+        |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
+        |    ORDER BY CAST(('0x'||substr(md5('strat:'||CAST(doc_id AS VARCHAR)),1,8))
+        |      AS BIGINT), doc_id) AS rn
+        |  FROM documents)
+        |WHERE rn <= 20 ORDER BY lang, rn""".stripMargin),
     // E29: exact-substring-dedup signal — token coverage by corpus-duplicated n-grams
-    "q_dupspan" -> ((s, d) => ops.TrainingData.dupSpanCoverage(Tables.documents(s, d))),
+    QueryDef("q_dupspan", (s, d) => ops.TrainingData.dupSpanCoverage(Tables.documents(s, d)),
+      oracle = """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+        |b AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n, toks
+        |  FROM t WHERE len(toks) >= 3),
+        |g AS (SELECT doc_id, n, toks,
+        |    unnest(range(0, len(toks) - 2)) AS pos0 FROM b),
+        |g2 AS (SELECT doc_id, n, pos0,
+        |    CAST(('0x'||substr(md5(
+        |      array_to_string(toks[pos0+1:pos0+3], ' ')),1,8)) AS BIGINT) AS g
+        |  FROM g),
+        |dup AS (SELECT g FROM g2 GROUP BY g HAVING count(*) >= 2),
+        |d AS (SELECT doc_id, n, pos0,
+        |    lead(pos0) OVER (PARTITION BY doc_id ORDER BY pos0) AS nxt
+        |  FROM g2 JOIN dup USING (g)),
+        |cov AS (SELECT doc_id, n, count(*) AS dup_grams,
+        |    CAST(sum(CASE WHEN nxt IS NULL THEN 3
+        |      ELSE least(3, nxt - pos0) END) AS BIGINT) AS cov_toks
+        |  FROM d GROUP BY doc_id, n)
+        |SELECT b.doc_id, b.n AS n_tokens, b.n - 2 AS n_grams,
+        |  COALESCE(dup_grams, 0) AS n_dup_grams,
+        |  COALESCE(cov_toks, 0) AS covered_tokens,
+        |  COALESCE(cov_toks, 0) * 1000000 // b.n AS coverage_ppm
+        |FROM b LEFT JOIN cov USING (doc_id, n)
+        |ORDER BY b.doc_id""".stripMargin),
     // ---- E33: duplicated-span REMOVAL (the dedup step E29 detects for)
-    "q_dupspan_removal" -> ((s, d) => ops.TrainingData.removeDupSpans(Tables.documents(s, d))),
+    QueryDef("q_dupspan_removal", (s, d) => ops.TrainingData.removeDupSpans(Tables.documents(s, d)),
+      oracle = """WITH t AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+        |b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t),
+        |g AS (
+        |  SELECT doc_id, pos0,
+        |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0 AS INTEGER):CAST(pos0+2 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
+        |  FROM (SELECT doc_id, tk,
+        |          unnest(range(1, CAST(len(tk) AS BIGINT) - 1)) AS pos0
+        |        FROM b WHERE n >= 3)),
+        |d AS (SELECT g FROM (SELECT g, count(*) AS c FROM g GROUP BY g) WHERE c >= 2),
+        |cov AS (
+        |  SELECT DISTINCT doc_id, pos0 + off AS p
+        |  FROM g JOIN d USING (g)
+        |  CROSS JOIN (SELECT unnest(range(0, 3)) AS off) o),
+        |tokrows AS (
+        |  SELECT doc_id, unnest(tk) AS tok,
+        |    unnest(range(1, CAST(len(tk) AS BIGINT) + 1)) AS p
+        |  FROM b),
+        |kept AS (
+        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
+        |    md5(string_agg(tok, ' ' ORDER BY p)) AS cm
+        |  FROM (SELECT tr.doc_id, tr.tok, tr.p
+        |        FROM tokrows tr ANTI JOIN cov USING (doc_id, p))
+        |  GROUP BY 1)
+        |SELECT b.doc_id, b.n AS n_tokens,
+        |  b.n - COALESCE(k.n_kept, 0) AS n_removed,
+        |  COALESCE(k.cm, md5('')) AS clean_md5
+        |FROM b LEFT JOIN kept k USING (doc_id)
+        |ORDER BY b.doc_id""".stripMargin),
     // ---- E32: C4-style common-line boilerplate removal. A 10-token
     // footer prepended to every 10th doc is the deterministic stand-in
     // for crawl boilerplate; its line repeats across enough docs to
     // cross the document-frequency cut and must be stripped.
-    "q_lines_dedup" -> ((s, d) => {
+    QueryDef("q_lines_dedup", (s, d) => {
       val withFooter = Tables.documents(s, d)
         .select(col("doc_id"),
           when(col("doc_id") % 10 === 0,
@@ -994,16 +3320,90 @@ object SparkEntry {
               col("text")))
             .otherwise(col("text")).as("text"))
       ops.TrainingData.removeCommonLines(withFooter)
-    }),
+    },
+      oracle = """WITH d AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 10 = 0
+        |      THEN 'nav footer terms privacy contact about login search home menu ' || text
+        |      ELSE text END AS text
+        |  FROM documents),
+        |t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM d),
+        |l0 AS (
+        |  SELECT doc_id, tk,
+        |    unnest(range(0, CAST(ceil(len(tk)/10.0) AS BIGINT))) AS pos
+        |  FROM t),
+        |l AS (
+        |  SELECT doc_id, pos,
+        |    array_to_string(tk[CAST(pos*10+1 AS INTEGER):CAST(pos*10+10 AS INTEGER)], ' ') AS line
+        |  FROM l0),
+        |h AS (SELECT doc_id, pos, line, md5(line) AS line_hash FROM l),
+        |f AS (SELECT line_hash, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS line_df
+        |  FROM h GROUP BY 1),
+        |k AS (
+        |  SELECT h.doc_id, h.pos, h.line,
+        |    CASE WHEN f.line_df < 3 THEN 1 ELSE 0 END AS keep
+        |  FROM h JOIN f USING (line_hash))
+        |SELECT doc_id,
+        |  CAST(COUNT(*) AS BIGINT) AS n_lines,
+        |  CAST(COUNT(*) - SUM(keep) AS BIGINT) AS n_removed,
+        |  md5(coalesce(string_agg(CASE WHEN keep = 1 THEN line END, ' ' ORDER BY pos), '')) AS clean_md5
+        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // E30: shard-parallel GPT-style sequence packing (no global cumsum)
-    "q_pack" -> ((s, d) => ops.TrainingData.packSequences(Tables.documents(s, d))),
+    QueryDef("q_pack", (s, d) => ops.TrainingData.packSequences(Tables.documents(s, d)),
+      oracle = """WITH t AS (SELECT doc_id,
+        |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tok,
+        |    ('0x'||substr(md5('pack:'||CAST(doc_id AS VARCHAR)),1,8))::BIGINT % 32
+        |      AS shard
+        |  FROM documents),
+        |c AS (SELECT doc_id, shard, n_tok,
+        |    CAST(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+        |  FROM t)
+        |SELECT doc_id, shard, n_tok,
+        |  (cum - n_tok) % 512 AS seq_offset,
+        |  (cum - n_tok) // 512 AS seq_id,
+        |  (cum - 1) // 512 - (cum - n_tok) // 512 + 1 AS n_seqs
+        |FROM c ORDER BY doc_id""".stripMargin),
     // E31: DSIR-style hashed-bigram importance scoring vs a target domain
-    "q_dsir" -> ((s, d) => ops.TrainingData.dsirScore(Tables.documents(s, d))),
+    QueryDef("q_dsir", (s, d) => ops.TrainingData.dsirScore(Tables.documents(s, d)),
+      oracle = """WITH t AS (
+        |  SELECT doc_id,
+        |    CAST(source = 'src0' AS BIGINT) AS is_target,
+        |    string_split(text,' ') AS toks
+        |  FROM documents WHERE len(string_split(text,' ')) >= 2),
+        |pd AS (
+        |  SELECT doc_id, is_target,
+        |    unnest(list_transform(range(1, len(toks)),
+        |      i -> CAST(('0x'||substr(md5(toks[i] || ' ' || toks[i+1]),1,8))
+        |        AS BIGINT) % 8192)) AS b
+        |  FROM t),
+        |g1 AS (SELECT doc_id, is_target, b, count(*) AS c
+        |  FROM pd GROUP BY 1, 2, 3),
+        |model AS (SELECT b,
+        |    CAST(sum(c * is_target) AS BIGINT) AS ct,
+        |    CAST(sum(c * (1 - is_target)) AS BIGINT) AS cr
+        |  FROM g1 GROUP BY b),
+        |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS tt,
+        |    CAST(sum(cr) AS BIGINT) AS tr FROM model),
+        |w AS (SELECT b,
+        |    (ct + 1) * 1000000 // (tt + 8192)
+        |      - (cr + 1) * 1000000 // (tr + 8192) AS w_ppm
+        |  FROM model CROSS JOIN tot)
+        |SELECT g1.doc_id, g1.is_target,
+        |  CAST(sum(c) AS BIGINT) AS n_grams,
+        |  CAST(sum(c * w_ppm) AS BIGINT) AS score_sum,
+        |  CAST(sum(c * w_ppm) AS BIGINT) // CAST(sum(c) AS BIGINT) AS score_avg,
+        |  CAST(g1.is_target = 0 AND
+        |    CAST(sum(c * w_ppm) AS BIGINT) // CAST(sum(c) AS BIGINT) > 0
+        |    AS BIGINT) AS selected
+        |FROM g1 JOIN w USING (b)
+        |GROUP BY g1.doc_id, g1.is_target
+        |ORDER BY g1.doc_id""".stripMargin),
 
     // ---- D27: GROUPING SETS with grouping() flags (SQL-text entry;
     // grouped-out keys coalesced to sentinels so the flags, not NULLs,
     // carry the level)
-    "q_grouping_sets" -> ((s, d) => {
+    QueryDef("q_grouping_sets", (s, d) => {
       Tables.customer(s, d).createOrReplaceTempView("customer")
       s.sql("""
         SELECT COALESCE(c_mktsegment, '(all)') AS seg,
@@ -1015,11 +3415,20 @@ object SparkEntry {
         FROM customer
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
         ORDER BY g_seg, g_nk, seg, nk""")
-    }),
+    },
+      oracle = """SELECT COALESCE(c_mktsegment, '(all)') AS seg,
+        |  COALESCE(CAST(c_nationkey AS BIGINT), -1) AS nk,
+        |  CAST(GROUPING(c_mktsegment) AS BIGINT) AS g_seg,
+        |  CAST(GROUPING(c_nationkey) AS BIGINT) AS g_nk,
+        |  count(*) AS n,
+        |  CAST(sum(CAST(round(c_acctbal*100) AS BIGINT)) AS BIGINT) AS bal_cents
+        |FROM customer
+        |GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
+        |ORDER BY g_seg, g_nk, seg, nk""".stripMargin),
 
     // ---- D28: rank-family window functions (percent_rank/cume_dist are
     // single IEEE divisions of exact integer ranks — deterministic)
-    "q_window_rank" -> ((s, d) => {
+    QueryDef("q_window_rank", (s, d) => {
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(col("bal_cents"), col("c_custkey"))
       Tables.customer(s, d)
@@ -1030,11 +3439,22 @@ object SparkEntry {
         .withColumn("quartile", ntile(4).over(w).cast(LongType))
         .withColumn("dr", dense_rank().over(w).cast(LongType))
         .orderBy(col("c_mktsegment"), col("c_custkey"))
-    }),
+    },
+      oracle = """WITH t AS (
+        |  SELECT c_custkey, c_mktsegment,
+        |    CAST(round(c_acctbal*100) AS BIGINT) AS bal_cents
+        |  FROM customer)
+        |SELECT c_custkey, c_mktsegment, bal_cents,
+        |  percent_rank() OVER w AS pr, cume_dist() OVER w AS cd,
+        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
+        |  CAST(dense_rank() OVER w AS BIGINT) AS dr
+        |FROM t
+        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY bal_cents, c_custkey)
+        |ORDER BY c_mktsegment, c_custkey""".stripMargin),
 
     // ---- D29: skew-salted join, oracle-checked — the salted (key,salt)
     // join must hash-equal the plain join the oracle runs
-    "q_salted_join" -> ((s, d) => {
+    QueryDef("q_salted_join", (s, d) => {
       val fact = Tables.lineitem(s, d).select(
         col("l_suppkey").as("suppkey"),
         cents(col("l_extendedprice")).as("price_cents"),
@@ -1046,10 +3466,15 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           sum(col("price_cents")).as("sum_price_cents"))
         .orderBy(col("nationkey"))
-    }),
+    },
+      oracle = """SELECT CAST(s_nationkey AS BIGINT) AS nationkey, count(*) AS n,
+        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)
+        |    AS sum_price_cents
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ---- D30: FULL OUTER JOIN with coalesced key and presence tag
-    "q_full_outer" -> ((s, d) => {
+    QueryDef("q_full_outer", (s, d) => {
       val ev = Tables.events(s, d)
       val p = ev.filter(col("event_type") === "purchase")
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_purch"))
@@ -1063,128 +3488,944 @@ object SparkEntry {
             .when(col("n_err").isNull, "purch_only")
             .otherwise("both").as("presence"))
         .orderBy(col("user_id"))
-    }),
+    },
+      oracle = """WITH p AS (
+        |  SELECT user_id, count(*) AS n_purch FROM events
+        |  WHERE event_type = 'purchase' GROUP BY 1),
+        |e AS (
+        |  SELECT user_id, count(*) AS n_err FROM events
+        |  WHERE event_type = 'error' GROUP BY 1)
+        |SELECT user_id,
+        |  COALESCE(n_purch, 0) AS n_purch,
+        |  COALESCE(n_err, 0) AS n_err,
+        |  CASE WHEN n_purch IS NULL THEN 'err_only'
+        |       WHEN n_err IS NULL THEN 'purch_only'
+        |       ELSE 'both' END AS presence
+        |FROM p FULL OUTER JOIN e USING (user_id)
+        |ORDER BY user_id""".stripMargin),
 
     // ---- E27: blocked fuzzy lookup (entity resolution by edit distance)
-    "q_fuzzy" -> ((s, d) =>
-      ops.FuzzyMatch.fuzzyLookup(Tables.part(s, d), "p_partkey", "p_name")),
+    QueryDef("q_fuzzy", (s, d) =>
+      ops.FuzzyMatch.fuzzyLookup(Tables.part(s, d), "p_partkey", "p_name"),
+      // Fuzzy twin — mirrors the name-level contraction: Levenshtein per
+      // distinct name pair, distance-level cut, membership expansion.
+      // The expansion is CONTRACTED to each matched name's 6 smallest
+      // member ids (mem6) BEFORE the per-query fan-out: only those can
+      // ever reach the global top-5 after self-exclusion (within a name
+      // candidates order by match_id; 5 winners + possibly self = 6).
+      // The old full expansion was queries × group-size rows — ~315M at
+      // the 100× tier, an >70 GB window-sort spill (the r10 resource
+      // wall); mem6 is provably output-identical (hash-verified at
+      // sf0.01 and 100×) and runs in ~1 s there.
+      oracle = sqlFuzzy("levenshtein")),
     // ---- E65/I26: same lookup under native unrestricted Damerau-
     // Levenshtein — transpositions are ONE error (fraud typo class)
-    "q_fuzzy_dl" -> ((s, d) =>
-      ops.FuzzyMatch.fuzzyLookupDL(Tables.part(s, d), "p_partkey", "p_name")),
+    QueryDef("q_fuzzy_dl", (s, d) =>
+      ops.FuzzyMatch.fuzzyLookupDL(Tables.part(s, d), "p_partkey", "p_name"),
+      // E65: DuckDB's damerau_levenshtein IS the unrestricted DL the
+      // native kernel computes (verified: dl('ca','abc') = 2, not OSA 3)
+      oracle = sqlFuzzy("damerau_levenshtein")),
 
     // ---- D34: Z-order clustering statistics (native ZValueL interleave;
     // tight per-bucket spans on BOTH dims = multi-dimensional file skipping)
-    "q_zorder" -> ((s, d) => ops.ZOrder.zStats(Tables.events(s, d))),
+    QueryDef("q_zorder", (s, d) => ops.ZOrder.zStats(Tables.events(s, d)),
+      oracle = """WITH e AS (
+        |  SELECT user_id % 1024 AS d1,
+        |    (epoch_us(ts) // 3600000000) % 1024 AS d2 FROM events),
+        |z AS (
+        |  SELECT d1, d2, list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |    list_transform(range(0, 10),
+        |      i -> (((d1 >> i) & 1) << (2*i)) | (((d2 >> i) & 1) << (2*i+1)))),
+        |    (a,b) -> a | b) AS z FROM e)
+        |SELECT z // 1024 AS z_bucket, count(*) AS n,
+        |  CAST(min(d1) AS BIGINT) AS d1_min, CAST(max(d1) AS BIGINT) AS d1_max,
+        |  CAST(min(d2) AS BIGINT) AS d2_min, CAST(max(d2) AS BIGINT) AS d2_max
+        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ---- D31–D33: event analytics (time-weighted avg, funnel, cohorts)
-    "q_twa" -> ((s, d) =>
+    QueryDef("q_twa", (s, d) =>
       ops.Analytics.timeWeightedAvg(
         Tables.events(s, d).select(col("user_id"), col("ts_us"),
-          cents(col("value")).as("v_cents")))),
-    "q_funnel" -> ((s, d) => ops.Analytics.funnel(Tables.events(s, d))),
-    "q_cohort" -> ((s, d) => ops.Analytics.cohortRetention(Tables.events(s, d))),
-    "q_seq_pattern" -> ((s, d) =>
-      ops.Analytics.patternEpisodes(Tables.events(s, d))),
+          cents(col("value")).as("v_cents"))),
+      oracle = """WITH e AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us,
+        |    CAST(round(value*100) AS BIGINT) AS v_cents
+        |  FROM events),
+        |l AS (
+        |  SELECT user_id, ts_us, v_cents,
+        |    lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) AS next_ts
+        |  FROM e),
+        |a AS (
+        |  SELECT user_id,
+        |    CAST(COALESCE(sum((next_ts - ts_us) * v_cents), 0) AS BIGINT) AS wsum,
+        |    CAST(max(ts_us) - min(ts_us) AS BIGINT) AS span_us
+        |  FROM l GROUP BY 1)
+        |SELECT user_id, wsum, span_us,
+        |  CASE WHEN span_us > 0
+        |    THEN CAST(wsum AS DOUBLE) / CAST(span_us AS DOUBLE)
+        |    ELSE -1.0 END AS twa_cents
+        |FROM a ORDER BY user_id""".stripMargin),
+    QueryDef("q_funnel", (s, d) => ops.Analytics.funnel(Tables.events(s, d)),
+      oracle = """WITH e AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_type FROM events),
+        |t1 AS (
+        |  SELECT user_id, min(ts_us) AS t1 FROM e
+        |  WHERE event_type = 'view' GROUP BY 1),
+        |t2 AS (
+        |  SELECT e.user_id, min(e.ts_us) AS t2 FROM e
+        |  JOIN t1 ON e.user_id = t1.user_id AND e.ts_us > t1.t1
+        |  WHERE e.event_type = 'click' GROUP BY 1),
+        |t3 AS (
+        |  SELECT e.user_id, min(e.ts_us) AS t3 FROM e
+        |  JOIN t2 ON e.user_id = t2.user_id AND e.ts_us > t2.t2
+        |  WHERE e.event_type = 'purchase' GROUP BY 1)
+        |SELECT t1.user_id, t1.t1 AS t1_us,
+        |  COALESCE(t2.t2, -1) AS t2_us,
+        |  COALESCE(t3.t3, -1) AS t3_us,
+        |  CAST(1 + CASE WHEN t2.t2 IS NULL THEN 0 ELSE 1 END
+        |         + CASE WHEN t3.t3 IS NULL THEN 0 ELSE 1 END AS BIGINT) AS stage
+        |FROM t1
+        |LEFT JOIN t2 ON t1.user_id = t2.user_id
+        |LEFT JOIN t3 ON t1.user_id = t3.user_id
+        |ORDER BY t1.user_id""".stripMargin),
+    QueryDef("q_cohort", (s, d) => ops.Analytics.cohortRetention(Tables.events(s, d)),
+      oracle = """WITH uw AS (
+        |  SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS wk
+        |  FROM events),
+        |c AS (
+        |  SELECT user_id, min(wk) AS cohort_wk FROM uw GROUP BY 1)
+        |SELECT c.cohort_wk, uw.wk - c.cohort_wk AS week_offset,
+        |  count(*) AS n_users
+        |FROM uw JOIN c ON uw.user_id = c.user_id
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q_seq_pattern", (s, d) =>
+      ops.Analytics.patternEpisodes(Tables.events(s, d)),
+      // D59 twin: identical code string (string_agg with the same total
+      // (ts, event_id) order), RE2 counting the same forced-extent
+      // episodes Java's regex counts (see Analytics.patternEpisodes).
+      oracle = """WITH e AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |    CASE event_type WHEN 'view' THEN 'v' WHEN 'click' THEN 'c'
+        |      WHEN 'purchase' THEN 'p' WHEN 'signup' THEN 's'
+        |      ELSE 'e' END AS code
+        |  FROM events),
+        |s AS (
+        |  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+        |    string_agg(code, '' ORDER BY ts_us, event_id) AS seq
+        |  FROM e GROUP BY 1)
+        |SELECT user_id, n_events, seq,
+        |  CAST(len(regexp_extract_all(seq, 'vc*p')) AS BIGINT) AS n_funnel,
+        |  CAST(len(regexp_extract_all(seq, 'vp')) AS BIGINT) AS n_direct
+        |FROM s ORDER BY user_id""".stripMargin),
     // ---- D61: multi-touch conversion attribution (linear + last-touch)
-    "q_attribution" -> ((s, d) =>
-      ops.Analytics.attribution(Tables.events(s, d))),
+    QueryDef("q_attribution", (s, d) =>
+      ops.Analytics.attribution(Tables.events(s, d)),
+      oracle = """WITH e AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type
+        |  FROM events),
+        |c AS (
+        |  SELECT user_id, ts_us AS conv_ts, event_id AS conv_id
+        |  FROM e WHERE event_type = 'purchase'),
+        |t AS (
+        |  SELECT user_id, ts_us AS touch_ts, event_id AS touch_id,
+        |    event_type AS channel
+        |  FROM e WHERE event_type IN ('view', 'click')),
+        |p AS (
+        |  SELECT t.channel, t.touch_id, t.touch_ts, c.conv_id
+        |  FROM t JOIN c ON t.user_id = c.user_id
+        |   AND t.touch_ts < c.conv_ts
+        |   AND t.touch_ts >= c.conv_ts - 604800000000),
+        |s AS (
+        |  SELECT channel, conv_id,
+        |    count(*) OVER (PARTITION BY conv_id) AS n_touch,
+        |    row_number() OVER (PARTITION BY conv_id
+        |      ORDER BY touch_ts DESC, touch_id DESC) AS lt_rank
+        |  FROM p)
+        |SELECT channel,
+        |  count(*) AS n_touchpoints,
+        |  count(DISTINCT conv_id) AS n_conversions,
+        |  CAST(sum(1000000 // n_touch) AS BIGINT) AS linear_credit_ppm,
+        |  CAST(sum(CASE WHEN lt_rank = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS last_touch_convs
+        |FROM s GROUP BY 1 ORDER BY channel""".stripMargin,
+      // VERDICT r13 #3 (extension): the default q_attribution twin
+      // materializes the 1.15e9-row (touch, conversion) pair set through
+      // TWO windows partitioned by conv_id. The override never windows:
+      // per-conversion touch counts and the last-touch argmax fold in ONE
+      // streaming group-by (the (ts, id) order packed into a single
+      // HUGEINT key for max_by — ts*2^63 + id, order-preserving since
+      // both are non-negative and id < 2^63), then per-channel metrics
+      // re-aggregate the conversion-grain frames. Exact: linear credit
+      // sums n_pairs * (1e6 div n_touch) per (channel, conv) instead of
+      // per pair — the same integers in the same groups. Measured r14:
+      // 100x in 23 s under 16 GB (default: >66 GB spill and climbing).
+      scaledOracle = Some(ScaledTwins.attributionOverride)),
     // ---- D62: first-order Markov transition matrix over the stream
-    "q_markov" -> ((s, d) =>
-      ops.Analytics.markovTransitions(Tables.events(s, d))),
+    QueryDef("q_markov", (s, d) =>
+      ops.Analytics.markovTransitions(Tables.events(s, d)),
+      oracle = """WITH e AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type
+        |  FROM events),
+        |p AS (
+        |  SELECT event_type AS from_state,
+        |    lead(event_type) OVER (PARTITION BY user_id
+        |      ORDER BY ts_us, event_id) AS to_state
+        |  FROM e),
+        |t AS (
+        |  SELECT from_state, to_state, CAST(count(*) AS BIGINT) AS n_trans
+        |  FROM p WHERE to_state IS NOT NULL GROUP BY 1, 2)
+        |SELECT from_state, to_state, n_trans,
+        |  CAST(1000000 * n_trans
+        |    // sum(n_trans) OVER (PARTITION BY from_state) AS BIGINT) AS p_ppm
+        |FROM t ORDER BY from_state, to_state""".stripMargin),
     // ---- D88: top length-3 event paths (journey discovery)
-    "q_event_paths" -> ((s, d) =>
-      ops.Analytics.topEventPaths(Tables.events(s, d))),
+    QueryDef("q_event_paths", (s, d) =>
+      ops.Analytics.topEventPaths(Tables.events(s, d)),
+      // path twin: the same two leads + type³ aggregation + lexicographic
+      // tie-broken top-k
+      oracle = """WITH seq AS (
+        |  SELECT user_id, event_type AS e1,
+        |    lead(event_type, 1) OVER w AS e2,
+        |    lead(event_type, 2) OVER w AS e3
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
+        |g AS (
+        |  SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS n_walks,
+        |    CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+        |  FROM seq WHERE e3 IS NOT NULL GROUP BY 1, 2, 3),
+        |r AS (SELECT *, row_number() OVER (
+        |    ORDER BY n_walks DESC, e1, e2, e3) AS rank FROM g)
+        |SELECT e1, e2, e3, n_walks, n_users, CAST(rank AS BIGINT) AS rank
+        |FROM r WHERE rank <= 25 ORDER BY rank""".stripMargin),
     // ---- D63: RFM quintile segmentation of the order mart
-    "q_rfm" -> ((s, d) =>
+    QueryDef("q_rfm", (s, d) =>
       ops.Analytics.rfmSegments(Tables.orders(s, d).select(
         col("o_custkey"),
         expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
           .as("epoch_day"),
-        cents(col("o_totalprice")).as("price_cents")))),
+        cents(col("o_totalprice")).as("price_cents"))),
+      oracle = """WITH base AS (
+        |  SELECT o_custkey,
+        |    max(epoch_us(o_orderdate) // 86400000000) AS r_day,
+        |    CAST(count(*) AS BIGINT) AS f_cnt,
+        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |      AS m_cents
+        |  FROM orders GROUP BY 1),
+        |b2 AS (SELECT *, m_cents // 100 AS m_dollars FROM base),
+        |rs AS (
+        |  SELECT v, 1 + 5 * COALESCE(sum(c) OVER (ORDER BY v
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |    // sum(c) OVER () AS sc
+        |  FROM (SELECT r_day AS v, count(*) AS c FROM b2 GROUP BY 1)),
+        |fs AS (
+        |  SELECT v, 1 + 5 * COALESCE(sum(c) OVER (ORDER BY v
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |    // sum(c) OVER () AS sc
+        |  FROM (SELECT f_cnt AS v, count(*) AS c FROM b2 GROUP BY 1)),
+        |ms AS (
+        |  SELECT v, 1 + 5 * COALESCE(sum(c) OVER (ORDER BY v
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |    // sum(c) OVER () AS sc
+        |  FROM (SELECT m_dollars AS v, count(*) AS c FROM b2 GROUP BY 1))
+        |SELECT b2.o_custkey, b2.r_day, b2.f_cnt, b2.m_cents,
+        |  CAST(rs.sc AS BIGINT) AS r_score,
+        |  CAST(fs.sc AS BIGINT) AS f_score,
+        |  CAST(ms.sc AS BIGINT) AS m_score,
+        |  CAST(rs.sc * 100 + fs.sc * 10 + ms.sc AS BIGINT) AS rfm,
+        |  CASE
+        |    WHEN rs.sc >= 4 AND fs.sc >= 4 AND ms.sc >= 4 THEN 'champion'
+        |    WHEN rs.sc <= 2 AND fs.sc >= 4 THEN 'at_risk'
+        |    WHEN rs.sc >= 4 AND fs.sc <= 2 THEN 'new'
+        |    WHEN rs.sc <= 2 AND fs.sc <= 2 AND ms.sc <= 2 THEN 'hibernating'
+        |    ELSE 'core' END AS segment
+        |FROM b2
+        |JOIN rs ON b2.r_day = rs.v
+        |JOIN fs ON b2.f_cnt = fs.v
+        |JOIN ms ON b2.m_dollars = ms.v
+        |ORDER BY b2.o_custkey""".stripMargin),
     // ---- D65: Benford first-digit conformance screen per priority
-    "q_benford" -> ((s, d) =>
-      ops.Analytics.benfordScreen(Tables.orders(s, d))),
+    QueryDef("q_benford", (s, d) =>
+      ops.Analytics.benfordScreen(Tables.orders(s, d)),
+      oracle = """WITH c AS (
+        |  SELECT o_orderpriority AS grp,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |  FROM orders),
+        |o AS (
+        |  SELECT grp,
+        |    CAST(substring(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit,
+        |    CAST(count(*) AS BIGINT) AS n
+        |  FROM c WHERE cents > 0 GROUP BY 1, 2),
+        |grid AS (
+        |  SELECT g.grp, d.digit FROM (SELECT DISTINCT grp FROM o) g
+        |  CROSS JOIN (SELECT CAST(unnest(range(1, 10)) AS BIGINT) AS digit) d),
+        |f AS (
+        |  SELECT grid.grp, grid.digit, COALESCE(o.n, 0) AS n
+        |  FROM grid LEFT JOIN o ON grid.grp = o.grp AND grid.digit = o.digit),
+        |e AS (
+        |  SELECT grp, digit, n,
+        |    CAST(1000000 * n // sum(n) OVER (PARTITION BY grp) AS BIGINT)
+        |      AS obs_ppm,
+        |    CAST(CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
+        |      WHEN 3 THEN 124939 WHEN 4 THEN 96910 WHEN 5 THEN 79181
+        |      WHEN 6 THEN 66947 WHEN 7 THEN 57992 WHEN 8 THEN 51153
+        |      ELSE 45757 END AS BIGINT) AS exp_ppm
+        |  FROM f)
+        |SELECT grp, digit, n, obs_ppm, exp_ppm,
+        |  obs_ppm - exp_ppm AS dev_ppm,
+        |  CAST(sum((obs_ppm - exp_ppm) * (obs_ppm - exp_ppm) // exp_ppm)
+        |    OVER (PARTITION BY grp) AS BIGINT) AS chi2_scaled
+        |FROM e ORDER BY grp, digit""".stripMargin),
     // ---- D66: CUSUM level-shift detection over daily event volumes
-    "q_cusum" -> ((s, d) => ops.Analytics.cusumShifts(Tables.events(s, d))),
+    QueryDef("q_cusum", (s, d) => ops.Analytics.cusumShifts(Tables.events(s, d)),
+      oracle = """WITH daily AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS n
+        |  FROM events GROUP BY 1, 2),
+        |m AS (
+        |  SELECT event_type, day, n,
+        |    CAST(sum(n) OVER (PARTITION BY event_type)
+        |      // count(n) OVER (PARTITION BY event_type) AS BIGINT) AS mu
+        |  FROM daily),
+        |p AS (
+        |  SELECT event_type, day, n, mu, n - mu AS dev,
+        |    sum(n - mu - mu // 10) OVER w AS p_hi,
+        |    sum(-(n - mu) - mu // 10) OVER w AS p_lo
+        |  FROM m WINDOW w AS (PARTITION BY event_type ORDER BY day
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+        |q AS (
+        |  SELECT event_type, day, n, mu, dev,
+        |    CAST(p_hi - least(min(p_hi) OVER w, 0) AS BIGINT) AS cusum_hi,
+        |    CAST(p_lo - least(min(p_lo) OVER w, 0) AS BIGINT) AS cusum_lo
+        |  FROM p WINDOW w AS (PARTITION BY event_type ORDER BY day
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+        |SELECT event_type, day, n, mu, dev, cusum_hi, cusum_lo,
+        |  CAST(CASE WHEN cusum_hi > mu OR cusum_lo > mu
+        |    THEN 1 ELSE 0 END AS BIGINT) AS alarm
+        |FROM q ORDER BY event_type, day""".stripMargin),
     // ---- D68: exact-rational OLS volume trend per event type
-    "q_trend" -> ((s, d) => ops.Analytics.volumeTrend(Tables.events(s, d))),
+    QueryDef("q_trend", (s, d) => ops.Analytics.volumeTrend(Tables.events(s, d)),
+      oracle = """WITH daily AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS n
+        |  FROM events GROUP BY 1, 2),
+        |x AS (
+        |  SELECT event_type,
+        |    day - min(day) OVER (PARTITION BY event_type) AS x, n
+        |  FROM daily),
+        |a AS (
+        |  SELECT event_type, CAST(count(*) AS BIGINT) AS k,
+        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(n) AS BIGINT) AS sy,
+        |    CAST(sum(x * x) AS BIGINT) AS sxx,
+        |    CAST(sum(x * n) AS BIGINT) AS sxy
+        |  FROM x GROUP BY 1),
+        |b AS (
+        |  SELECT event_type, k, sy,
+        |    CAST(k * sxy - sx * sy AS BIGINT) AS num,
+        |    CAST(k * sxx - sx * sx AS BIGINT) AS den
+        |  FROM a)
+        |SELECT event_type, k AS n_days, sy AS total, num, den,
+        |  CAST(CASE WHEN den = 0 THEN 0
+        |    WHEN num >= 0 THEN 1000000 * num // den
+        |    ELSE -(1000000 * (-num) // den) END AS BIGINT) AS slope_ppm
+        |FROM b ORDER BY event_type""".stripMargin),
     // ---- D69: day-of-week-seasonal volume anomalies, MAD-gated
-    "q_seasonal" -> ((s, d) =>
-      ops.Analytics.seasonalAnomalies(Tables.events(s, d))),
+    QueryDef("q_seasonal", (s, d) =>
+      ops.Analytics.seasonalAnomalies(Tables.events(s, d)),
+      oracle = """WITH daily AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS n
+        |  FROM events GROUP BY 1, 2),
+        |b AS (
+        |  SELECT event_type, day, n, day % 7 AS dow,
+        |    CAST(sum(n) OVER (PARTITION BY event_type, day % 7)
+        |      // count(n) OVER (PARTITION BY event_type, day % 7)
+        |      AS BIGINT) AS dow_mean
+        |  FROM daily),
+        |r AS (
+        |  SELECT *, n - dow_mean AS residual,
+        |    abs(n - dow_mean) AS abs_res
+        |  FROM b),
+        |h AS (
+        |  SELECT event_type, abs_res, CAST(count(*) AS BIGINT) AS c
+        |  FROM r GROUP BY 1, 2),
+        |h2 AS (
+        |  SELECT event_type, abs_res,
+        |    sum(c) OVER (PARTITION BY event_type ORDER BY abs_res
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(c) OVER (PARTITION BY event_type) AS n_tot
+        |  FROM h),
+        |mad AS (
+        |  SELECT event_type, CAST(min(abs_res) AS BIGINT) AS mad
+        |  FROM h2 WHERE cum >= (n_tot + 1) // 2 GROUP BY 1)
+        |SELECT r.event_type, r.day, r.n, CAST(r.dow AS BIGINT) AS dow,
+        |  r.dow_mean, r.residual, mad.mad,
+        |  CAST(CASE WHEN r.abs_res > 3 * mad.mad THEN 1 ELSE 0 END
+        |    AS BIGINT) AS anomaly
+        |FROM r JOIN mad ON r.event_type = mad.event_type
+        |ORDER BY r.event_type, r.day""".stripMargin),
     // ---- E59: per-source boilerplate (template) gram share
-    "q_boiler" -> ((s, d) =>
-      ops.TrainingData.sourceBoilerplate(Tables.documents(s, d))),
+    QueryDef("q_boiler", (s, d) =>
+      ops.TrainingData.sourceBoilerplate(Tables.documents(s, d)),
+      oracle = """WITH t AS (
+        |  SELECT doc_id, source, string_split(text, ' ') AS toks
+        |  FROM documents),
+        |b AS (SELECT doc_id, source, toks FROM t WHERE len(toks) >= 3),
+        |g0 AS (
+        |  SELECT doc_id, source, toks,
+        |    unnest(range(0, len(toks) - 2)) AS pos0
+        |  FROM b),
+        |g1 AS (
+        |  SELECT DISTINCT doc_id, source,
+        |    CAST(('0x' || substr(md5(
+        |      array_to_string(toks[pos0+1:pos0+3], ' ')), 1, 8)) AS BIGINT)
+        |      AS g
+        |  FROM g0),
+        |nd AS (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+        |  FROM b GROUP BY 1),
+        |d2 AS (
+        |  SELECT g1.doc_id, g1.source,
+        |    CAST(count(*) OVER (PARTITION BY g1.source, g1.g) AS BIGINT)
+        |      AS df
+        |  FROM g1)
+        |SELECT d2.doc_id, d2.source,
+        |  CAST(count(*) AS BIGINT) AS n_grams,
+        |  CAST(sum(CASE WHEN df * 1000000 // n_docs >= 500000
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
+        |  CAST(1000000 * sum(CASE WHEN df * 1000000 // n_docs >= 500000
+        |    THEN 1 ELSE 0 END) // count(*) AS BIGINT) AS boiler_ppm
+        |FROM d2 JOIN nd ON d2.source = nd.source
+        |GROUP BY d2.doc_id, d2.source
+        |ORDER BY d2.doc_id""".stripMargin),
     // ---- E60: dedup-cluster canonical election (the apply step)
-    "q_canon" -> ((s, d) => ops.Dedup.canonicalize(Tables.documents(s, d))),
+    QueryDef("q_canon", (s, d) => ops.Dedup.canonicalize(Tables.documents(s, d)),
+      oracle = s"""WITH RECURSIVE $sqlLshCtes,
+         |edges AS MATERIALIZED (
+         |  SELECT id1 AS a, id2 AS b FROM cand
+         |  UNION SELECT id2, id1 FROM cand),
+         |walk(node, lbl) AS (
+         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
+         |  UNION
+         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
+         |  FROM walk w JOIN edges e ON w.node = e.a
+         |  GROUP BY e.b),
+         |assign AS MATERIALIZED (
+         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
+         |  FROM walk GROUP BY node),
+         |cl AS (
+         |  SELECT doc_id, cluster_id,
+         |    CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
+         |      AS cluster_size
+         |  FROM assign),
+         |j AS (
+         |  SELECT cl.doc_id, cl.cluster_id, cl.cluster_size,
+         |    CAST(length(b.text) AS BIGINT) AS n_chars
+         |  FROM cl JOIN base b ON cl.doc_id = b.doc_id)
+         |SELECT doc_id, cluster_id, cluster_size, n_chars,
+         |  first_value(doc_id) OVER (PARTITION BY cluster_id
+         |    ORDER BY n_chars DESC, doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+         |    AS canonical_id,
+         |  CAST(doc_id = first_value(doc_id) OVER (PARTITION BY cluster_id
+         |    ORDER BY n_chars DESC, doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+         |    AS BIGINT) AS keep
+         |FROM j ORDER BY doc_id""".stripMargin),
     // ---- E61: what that election costs each source (docs/tokens ppm)
-    "q_dedup_impact" -> ((s, d) =>
-      ops.Dedup.dedupImpact(Tables.documents(s, d))),
+    QueryDef("q_dedup_impact", (s, d) =>
+      ops.Dedup.dedupImpact(Tables.documents(s, d)),
+      oracle = s"""WITH RECURSIVE $sqlLshCtes,
+         |edges AS MATERIALIZED (
+         |  SELECT id1 AS a, id2 AS b FROM cand
+         |  UNION SELECT id2, id1 FROM cand),
+         |walk(node, lbl) AS (
+         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
+         |  UNION
+         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
+         |  FROM walk w JOIN edges e ON w.node = e.a
+         |  GROUP BY e.b),
+         |assign AS MATERIALIZED (
+         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
+         |  FROM walk GROUP BY node),
+         |j AS (
+         |  SELECT a2.doc_id, a2.cluster_id,
+         |    CAST(length(b.text) AS BIGINT) AS n_chars
+         |  FROM assign a2 JOIN base b ON a2.doc_id = b.doc_id),
+         |canon AS (
+         |  SELECT doc_id,
+         |    CAST(doc_id = first_value(doc_id) OVER (PARTITION BY cluster_id
+         |      ORDER BY n_chars DESC, doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+         |      AS BIGINT) AS keep
+         |  FROM j),
+         |km AS (SELECT doc_id, keep FROM canon
+         |       WHERE doc_id % 1000000000 < 10000000),
+         |docs2 AS (
+         |  SELECT doc_id, source,
+         |    CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+         |      AS BIGINT) AS n_tok
+         |  FROM documents),
+         |j2 AS (
+         |  SELECT d.source, COALESCE(km.keep, 1) AS keep, d.n_tok
+         |  FROM docs2 d LEFT JOIN km ON d.doc_id = km.doc_id)
+         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(1 - keep) AS BIGINT) AS n_dropped,
+         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         |  CAST(sum((1 - keep) * n_tok) AS BIGINT) AS tokens_dropped,
+         |  CAST(1000000 * sum(1 - keep) // count(*) AS BIGINT)
+         |    AS doc_drop_ppm,
+         |  CAST(1000000 * sum((1 - keep) * n_tok) // sum(n_tok) AS BIGINT)
+         |    AS token_drop_ppm
+         |FROM j2 GROUP BY source ORDER BY source""".stripMargin),
     // ---- D71: A/B contingency chi-square over per-user conversion
-    "q_abtest" -> ((s, d) => ops.Analytics.abContingency(Tables.events(s, d))),
+    QueryDef("q_abtest", (s, d) => ops.Analytics.abContingency(Tables.events(s, d)),
+      oracle = """WITH per AS (
+        |  SELECT user_id, user_id % 2 AS variant,
+        |    CAST(max(CASE WHEN event_type = 'purchase'
+        |      AND CAST(round(value * 100) AS BIGINT) >= 15000
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS conv
+        |  FROM events GROUP BY user_id),
+        |cells AS (
+        |  SELECT
+        |    CAST(sum(CASE WHEN variant = 0 AND conv = 1 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS a,
+        |    CAST(sum(CASE WHEN variant = 0 AND conv = 0 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS b,
+        |    CAST(sum(CASE WHEN variant = 1 AND conv = 1 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c,
+        |    CAST(sum(CASE WHEN variant = 1 AND conv = 0 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS d
+        |  FROM per)
+        |SELECT a, b, c, d, a + b + c + d AS n,
+        |  CAST(1000000 * a // (a + b) AS BIGINT) AS rate0_ppm,
+        |  CAST(1000000 * c // (c + d) AS BIGINT) AS rate1_ppm,
+        |  CAST(a + b + c + d AS DOUBLE) * (a*d - b*c) * (a*d - b*c)
+        |    / (CAST(a + b AS DOUBLE) * (c + d) * (a + c) * (b + d)) AS chi2
+        |FROM cells""".stripMargin),
     // ---- D73: structuring (smurfing) screen — trailing-window sums of
     // sub-threshold purchases via prefix-sums-with-probes
-    "q_structuring" -> ((s, d) =>
+    QueryDef("q_structuring", (s, d) =>
       ops.Analytics.structuring(Tables.events(s, d)
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("amt_cents")))),
+          expr("CAST(round(value * 100) AS BIGINT)").as("amt_cents"))),
+      // D73: the probe construction is replayed verbatim (not a RANGE
+      // window — RANGE frames include ALL peers at the current ts, the
+      // probe prefix does not, so only the shared construction is
+      // tie-robust on replica corpora with duplicated timestamps)
+      oracle = """WITH sub AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |    CAST(round(value*100) AS BIGINT) AS amt_cents
+        |  FROM events
+        |  WHERE event_type = 'purchase'
+        |    AND CAST(round(value*100) AS BIGINT) > 0
+        |    AND CAST(round(value*100) AS BIGINT) < 10000),
+        |timeline AS (
+        |  SELECT user_id, ts_us, 1 AS kind, event_id, amt_cents FROM sub
+        |  UNION ALL
+        |  SELECT user_id, ts_us - 259200000000, 0, event_id, 0 FROM sub),
+        |prefixed AS (
+        |  SELECT user_id, ts_us, kind, event_id,
+        |    sum(CASE WHEN kind = 1 THEN amt_cents ELSE 0 END) OVER w AS ps,
+        |    sum(CASE WHEN kind = 1 THEN 1 ELSE 0 END) OVER w AS pc
+        |  FROM timeline
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, kind, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+        |flags AS (
+        |  SELECT r.user_id, r.ts_us,
+        |    r.ps - p.ps AS win_sum, r.pc - p.pc AS win_cnt
+        |  FROM (SELECT * FROM prefixed WHERE kind = 1) r
+        |  JOIN (SELECT event_id, ps, pc FROM prefixed WHERE kind = 0) p
+        |    USING (event_id)
+        |  WHERE r.pc - p.pc >= 4 AND r.ps - p.ps >= 15000)
+        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_flagged,
+        |  CAST(max(win_sum) AS BIGINT) AS peak_sum_cents,
+        |  CAST(max(win_cnt) AS BIGINT) AS peak_n_txn,
+        |  min(ts_us) AS first_flag_ts_us
+        |FROM flags GROUP BY user_id ORDER BY user_id""".stripMargin),
     // ---- D74: exact ACF of the per-type daily volume series (lags 1..7)
-    "q_acf" -> ((s, d) => ops.Analytics.acfProfile(Tables.events(s, d))),
+    QueryDef("q_acf", (s, d) => ops.Analytics.acfProfile(Tables.events(s, d)),
+      // D74: ×n-centered integer ACF; zero days completed; HUGEINT
+      // products; sign-split final ppm (truncate == floor on |num|)
+      oracle = """WITH daily0 AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1, 2),
+        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
+        |  FROM daily0 GROUP BY 1),
+        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
+        |  FROM span),
+        |daily AS (
+        |  SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
+        |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
+        |cent AS (
+        |  SELECT event_type, day,
+        |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
+        |    CAST(count(*) OVER (PARTITION BY event_type) AS HUGEINT) * x
+        |      - sum(x) OVER (PARTITION BY event_type) AS c
+        |  FROM daily),
+        |den AS (SELECT event_type, sum(c * c) AS den, max(n) AS n_days
+        |  FROM cent GROUP BY 1),
+        |num AS (
+        |  SELECT a.event_type, l.lag, sum(a.c * b.c) AS num
+        |  FROM cent a
+        |  CROSS JOIN (SELECT unnest(range(1, 8)) AS lag) l
+        |  JOIN cent b ON b.event_type = a.event_type
+        |    AND b.day = a.day + l.lag
+        |  GROUP BY 1, 2)
+        |SELECT n.event_type, CAST(n.lag AS BIGINT) AS lag,
+        |  CAST(d.n_days AS BIGINT) AS n_days,
+        |  CAST(CASE WHEN d.den = 0 THEN 0
+        |    WHEN n.num >= 0 THEN 1000000 * n.num // d.den
+        |    ELSE -(1000000 * (-n.num) // d.den) END AS BIGINT) AS acf_ppm
+        |FROM num n JOIN den d USING (event_type)
+        |ORDER BY event_type, lag""".stripMargin),
     // ---- D77: trailing 1h/24h/7d velocity features per purchase —
     // the at-auth-time fraud feature block, three probes one frame
-    "q_velocity" -> ((s, d) =>
+    QueryDef("q_velocity", (s, d) =>
       ops.Analytics.velocityFeatures(Tables.events(s, d)
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts_us"), col("event_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("amt_cents")))),
+          expr("CAST(round(value * 100) AS BIGINT)").as("amt_cents"))),
+      // D77: the D73 probe construction with three horizons on one
+      // frame; probes pivot back via conditional max per event
+      oracle = """WITH sub AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |    CAST(round(value*100) AS BIGINT) AS amt_cents
+        |  FROM events WHERE event_type = 'purchase'),
+        |timeline AS (
+        |  SELECT user_id, ts_us, 3 AS kind, event_id, amt_cents FROM sub
+        |  UNION ALL
+        |  SELECT user_id, ts_us - 3600000000, 0, event_id, 0 FROM sub
+        |  UNION ALL
+        |  SELECT user_id, ts_us - 86400000000, 1, event_id, 0 FROM sub
+        |  UNION ALL
+        |  SELECT user_id, ts_us - 604800000000, 2, event_id, 0 FROM sub),
+        |prefixed AS (
+        |  SELECT user_id, ts_us, kind, event_id, amt_cents,
+        |    sum(CASE WHEN kind = 3 THEN amt_cents ELSE 0 END) OVER w AS ps,
+        |    sum(CASE WHEN kind = 3 THEN 1 ELSE 0 END) OVER w AS pc
+        |  FROM timeline
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, kind, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+        |probes AS (
+        |  SELECT event_id,
+        |    max(CASE WHEN kind = 0 THEN ps END) AS lo_s_1h,
+        |    max(CASE WHEN kind = 0 THEN pc END) AS lo_c_1h,
+        |    max(CASE WHEN kind = 1 THEN ps END) AS lo_s_24h,
+        |    max(CASE WHEN kind = 1 THEN pc END) AS lo_c_24h,
+        |    max(CASE WHEN kind = 2 THEN ps END) AS lo_s_7d,
+        |    max(CASE WHEN kind = 2 THEN pc END) AS lo_c_7d
+        |  FROM prefixed WHERE kind < 3 GROUP BY event_id)
+        |SELECT r.user_id, r.ts_us, r.event_id, r.amt_cents,
+        |  CAST(r.pc - p.lo_c_1h AS BIGINT) AS cnt_1h,
+        |  CAST(r.ps - p.lo_s_1h AS BIGINT) AS sum_1h,
+        |  CAST(r.pc - p.lo_c_24h AS BIGINT) AS cnt_24h,
+        |  CAST(r.ps - p.lo_s_24h AS BIGINT) AS sum_24h,
+        |  CAST(r.pc - p.lo_c_7d AS BIGINT) AS cnt_7d,
+        |  CAST(r.ps - p.lo_s_7d AS BIGINT) AS sum_7d
+        |FROM (SELECT * FROM prefixed WHERE kind = 3) r
+        |JOIN probes p USING (event_id)
+        |ORDER BY user_id, ts_us, event_id""".stripMargin),
     // ---- D78: Theil–Sen robust daily-volume trend (median of pairwise
     // slopes off the count-of-counts contraction; outlier-immune D68)
-    "q_theilsen" -> ((s, d) =>
-      ops.Analytics.theilSenTrend(Tables.events(s, d))),
+    QueryDef("q_theilsen", (s, d) =>
+      ops.Analytics.theilSenTrend(Tables.events(s, d)),
+      // D78: slopes quantized sign-split to e-6/day BEFORE the median;
+      // lower median read off the count-of-counts contraction
+      oracle = """WITH daily AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS n
+        |  FROM events GROUP BY 1, 2),
+        |pairs AS (
+        |  SELECT a.event_type,
+        |    CASE WHEN b.n >= a.n
+        |      THEN 1000000 * (b.n - a.n) // (b.day - a.day)
+        |      ELSE -(1000000 * (a.n - b.n) // (b.day - a.day))
+        |    END AS slope_e6
+        |  FROM daily a JOIN daily b
+        |    ON b.event_type = a.event_type AND b.day > a.day),
+        |cc AS (SELECT event_type, slope_e6, CAST(count(*) AS BIGINT) AS c
+        |  FROM pairs GROUP BY 1, 2),
+        |cum AS (
+        |  SELECT event_type, slope_e6, c,
+        |    CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT)
+        |      AS n_pairs,
+        |    CAST(sum(c) OVER (PARTITION BY event_type ORDER BY slope_e6
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cum
+        |  FROM cc),
+        |nd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
+        |  FROM daily GROUP BY 1)
+        |SELECT cum.event_type, nd.n_days, cum.n_pairs,
+        |  cum.slope_e6 AS sen_slope_e6
+        |FROM cum JOIN nd USING (event_type)
+        |WHERE cum >= (n_pairs + 1) // 2
+        |  AND cum - c < (n_pairs + 1) // 2
+        |ORDER BY event_type""".stripMargin),
     // ---- D81: Pettitt nonparametric changepoint on the daily grid
-    "q_pettitt" -> ((s, d) =>
-      ops.Analytics.pettittChangepoint(Tables.events(s, d))),
+    QueryDef("q_pettitt", (s, d) =>
+      ops.Analytics.pettittChangepoint(Tables.events(s, d)),
+      // D81: Pettitt via the U_t = U_{t-1} + V_t recursion; V off the
+      // value histogram; U_n excluded; earliest argmax pinned
+      oracle = """WITH daily0 AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1, 2),
+        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
+        |  FROM daily0 GROUP BY 1),
+        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
+        |  FROM span),
+        |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
+        |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
+        |hist AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS c
+        |  FROM daily GROUP BY 1, 2),
+        |hcum AS (
+        |  SELECT event_type, x, c,
+        |    CAST(coalesce(sum(c) OVER (PARTITION BY event_type ORDER BY x
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS below,
+        |    CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
+        |  FROM hist),
+        |v AS (
+        |  SELECT d.event_type, d.day,
+        |    h.below - (h.n - h.below - h.c) AS v, h.n
+        |  FROM daily d JOIN hcum h USING (event_type, x)),
+        |u AS (
+        |  SELECT event_type, day, n,
+        |    CAST(sum(v) OVER (PARTITION BY event_type ORDER BY day
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS u,
+        |    max(day) OVER (PARTITION BY event_type) AS d1
+        |  FROM v),
+        |uf AS (SELECT * FROM u WHERE day < d1),
+        |k AS (SELECT event_type, CAST(max(abs(u)) AS BIGINT) AS k_stat,
+        |    CAST(max(n) AS BIGINT) AS n_days FROM uf GROUP BY 1),
+        |cp AS (SELECT uf.event_type, k.k_stat, k.n_days,
+        |    CAST(min(uf.day) AS BIGINT) AS cp_day
+        |  FROM uf JOIN k USING (event_type) WHERE abs(uf.u) = k.k_stat
+        |  GROUP BY 1, 2, 3)
+        |SELECT cp.event_type, cp.n_days, cp.cp_day, cp.k_stat,
+        |  uf.u AS u_at_cp
+        |FROM cp JOIN uf ON uf.event_type = cp.event_type
+        |  AND uf.day = cp.cp_day
+        |ORDER BY cp.event_type""".stripMargin),
     // ---- D82: Fano variance-to-mean burstiness per event type
-    "q_dispersion" -> ((s, d) =>
-      ops.Analytics.dispersionIndex(Tables.events(s, d))),
+    QueryDef("q_dispersion", (s, d) =>
+      ops.Analytics.dispersionIndex(Tables.events(s, d)),
+      // D82: exact rational Fano — cross-multiplied var/mean, HUGEINT
+      oracle = """WITH daily0 AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1, 2),
+        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
+        |  FROM daily0 GROUP BY 1),
+        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
+        |  FROM span),
+        |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
+        |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
+        |ag AS (
+        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(x) AS BIGINT) AS sx,
+        |    sum(CAST(x AS HUGEINT) * x) AS sxx
+        |  FROM daily GROUP BY 1),
+        |vn AS (SELECT *, CAST(n AS HUGEINT) * sxx
+        |    - CAST(sx AS HUGEINT) * sx AS varnum FROM ag)
+        |SELECT event_type, n AS n_days,
+        |  CAST(1000000 * sx // n AS BIGINT) AS mean_e6,
+        |  CAST(CASE WHEN n <= 1 THEN 0
+        |    ELSE 1000000 * varnum // (CAST(n AS HUGEINT) * (n - 1))
+        |    END AS BIGINT) AS var_e6,
+        |  CAST(CASE WHEN n <= 1 OR sx = 0 THEN 0
+        |    ELSE 1000000 * varnum // (CAST(n - 1 AS HUGEINT) * sx)
+        |    END AS BIGINT) AS fano_ppm
+        |FROM vn ORDER BY event_type""".stripMargin),
     // ---- D83: Wald-Wolfowitz runs test on above/below-median signs
-    "q_runs" -> ((s, d) =>
-      ops.Analytics.runsTest(Tables.events(s, d))),
+    QueryDef("q_runs", (s, d) =>
+      ops.Analytics.runsTest(Tables.events(s, d)),
+      // D83: runs over above/below-median signs; exact-median days out;
+      // z = A*sqrt(B)/sqrt(C) on exact integers in pinned literal order
+      oracle = """WITH daily0 AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1, 2),
+        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
+        |  FROM daily0 GROUP BY 1),
+        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
+        |  FROM span),
+        |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
+        |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
+        |hist AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS c
+        |  FROM daily GROUP BY 1, 2),
+        |hcum AS (
+        |  SELECT event_type, x, c,
+        |    CAST(sum(c) OVER (PARTITION BY event_type ORDER BY x
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cum,
+        |    CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n_tot
+        |  FROM hist),
+        |med AS (SELECT event_type, CAST(min(x) AS BIGINT) AS med
+        |  FROM hcum WHERE cum >= (n_tot + 1) // 2 GROUP BY 1),
+        |sg AS (
+        |  SELECT d.event_type, d.day,
+        |    CASE WHEN d.x > m.med THEN 1 ELSE -1 END AS sgn
+        |  FROM daily d JOIN med m USING (event_type)
+        |  WHERE d.x != m.med),
+        |br AS (
+        |  SELECT event_type, sgn,
+        |    CASE WHEN lag(sgn) OVER (PARTITION BY event_type
+        |        ORDER BY day) IS DISTINCT FROM sgn THEN 1 ELSE 0
+        |      END AS brk
+        |  FROM sg),
+        |ag AS (
+        |  SELECT event_type, CAST(sum(brk) AS BIGINT) AS runs,
+        |    CAST(sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n1,
+        |    CAST(sum(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n2
+        |  FROM br GROUP BY 1),
+        |zz AS (SELECT *,
+        |    (n1 + n2) * (runs - 1) - 2 * n1 * n2 AS za,
+        |    2 * n1 * n2 * (2 * n1 * n2 - n1 - n2) AS zc
+        |  FROM ag)
+        |SELECT event_type, runs, n1, n2,
+        |  CASE WHEN n1 = 0 OR n2 = 0 OR zc <= 0 THEN 0.0
+        |    ELSE CAST(za AS DOUBLE) * sqrt(CAST(n1 + n2 - 1 AS DOUBLE))
+        |      / sqrt(CAST(zc AS DOUBLE)) END AS z
+        |FROM zz ORDER BY event_type""".stripMargin),
     // ---- D80: Pareto/ABC revenue contribution classes over parts
-    "q_pareto" -> ((s, d) =>
-      ops.Analytics.paretoClasses(Tables.lineitem(s, d))),
+    QueryDef("q_pareto", (s, d) =>
+      ops.Analytics.paretoClasses(Tables.lineitem(s, d)),
+      // D80: ABC classes on exact centi-cent cumulative shares
+      oracle = """WITH pp AS (
+        |  SELECT l_partkey,
+        |    CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
+        |      * (100 - CAST(round(l_discount*100) AS BIGINT)))
+        |      AS BIGINT) AS rev_cp
+        |  FROM lineitem GROUP BY 1),
+        |r AS (
+        |  SELECT rev_cp,
+        |    CAST(sum(rev_cp) OVER (ORDER BY rev_cp DESC, l_partkey
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cum,
+        |    CAST(sum(rev_cp) OVER () AS BIGINT) AS tot
+        |  FROM pp),
+        |c AS (
+        |  SELECT CASE
+        |      WHEN CAST(cum AS HUGEINT) * 100 <= CAST(tot AS HUGEINT) * 70
+        |        THEN 'A'
+        |      WHEN CAST(cum AS HUGEINT) * 100 <= CAST(tot AS HUGEINT) * 90
+        |        THEN 'B'
+        |      ELSE 'C' END AS cls, rev_cp, tot
+        |  FROM r)
+        |SELECT cls, CAST(count(*) AS BIGINT) AS n_parts,
+        |  CAST(sum(rev_cp) AS BIGINT) AS revenue_cp,
+        |  CAST(1000000 * sum(rev_cp) // max(tot) AS BIGINT) AS share_ppm
+        |FROM c GROUP BY cls ORDER BY cls""".stripMargin),
     // ---- D76: Lorenz/Gini spend concentration per market segment
-    "q_gini" -> ((s, d) =>
+    QueryDef("q_gini", (s, d) =>
       ops.Analytics.giniProfile(
         Tables.orders(s, d).select(col("o_custkey"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("amt_cents"))
           .join(Tables.customer(s, d).select(col("c_custkey"),
             col("c_mktsegment")),
             col("o_custkey") === col("c_custkey")),
-        group = "c_mktsegment", user = "o_custkey")),
+        group = "c_mktsegment", user = "o_custkey"),
+      // D76: sample-normalized Gini ((n-1)·Σx denominator) + Lorenz
+      // bottom-half / top-decile shares; tie order pinned by (x, u)
+      oracle = """WITH per AS (
+        |  SELECT c.c_mktsegment AS grp, o.o_custkey AS u,
+        |    sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS x
+        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        |  GROUP BY 1, 2),
+        |rk AS (
+        |  SELECT grp, u, x,
+        |    CAST(row_number() OVER (PARTITION BY grp ORDER BY x, u)
+        |      AS BIGINT) AS i,
+        |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS n,
+        |    CAST(sum(x) OVER (PARTITION BY grp) AS BIGINT) AS tot
+        |  FROM per),
+        |ag AS (
+        |  SELECT grp, max(n) AS n_users, max(tot) AS total_cents,
+        |    sum(CAST(2 * i - n - 1 AS HUGEINT) * x) AS gnum,
+        |    CAST(sum(CASE WHEN i <= n // 2 THEN x ELSE 0 END) AS BIGINT)
+        |      AS bottom_half_cents,
+        |    CAST(sum(CASE WHEN i > (9 * n) // 10 THEN x ELSE 0 END)
+        |      AS BIGINT) AS top_decile_cents
+        |  FROM rk GROUP BY grp)
+        |SELECT grp, n_users, total_cents,
+        |  CAST(CASE WHEN n_users <= 1 OR total_cents = 0 THEN 0
+        |    ELSE 1000000 * gnum
+        |      // (CAST(n_users - 1 AS HUGEINT) * total_cents)
+        |    END AS BIGINT) AS gini_ppm,
+        |  CAST(CASE WHEN total_cents = 0 THEN 0
+        |    ELSE 1000000 * CAST(bottom_half_cents AS HUGEINT) // total_cents
+        |    END AS BIGINT) AS bottom50_share_ppm,
+        |  CAST(CASE WHEN total_cents = 0 THEN 0
+        |    ELSE 1000000 * CAST(top_decile_cents AS HUGEINT) // total_cents
+        |    END AS BIGINT) AS top10_share_ppm
+        |FROM ag ORDER BY grp""".stripMargin),
     // ---- D70: calendar gaps-and-islands; dow==3 days are dropped in
     // BOTH engines so the oracle exercises real multi-island runs
-    "q_islands" -> ((s, d) =>
+    QueryDef("q_islands", (s, d) =>
       ops.Analytics.calendarIslands(Tables.events(s, d)
-        .filter(expr("(ts_us div 86400000000) % 7 != 3")))),
+        .filter(expr("(ts_us div 86400000000) % 7 != 3"))),
+      oracle = """WITH daily AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS n
+        |  FROM events
+        |  WHERE (epoch_us(ts) // 86400000000) % 7 <> 3
+        |  GROUP BY 1, 2),
+        |g AS (
+        |  SELECT event_type, day, n,
+        |    day - row_number() OVER (PARTITION BY event_type ORDER BY day)
+        |      AS grp
+        |  FROM daily),
+        |i AS (
+        |  SELECT event_type, CAST(min(day) AS BIGINT) AS island_start,
+        |    CAST(max(day) AS BIGINT) AS island_end,
+        |    CAST(count(*) AS BIGINT) AS n_days,
+        |    CAST(sum(n) AS BIGINT) AS n_events
+        |  FROM g GROUP BY event_type, grp)
+        |SELECT event_type, island_start, island_end, n_days, n_events,
+        |  CAST(COALESCE(lead(island_start) OVER (PARTITION BY event_type
+        |    ORDER BY island_start) - island_end - 1, 0) AS BIGINT)
+        |    AS gap_after
+        |FROM i ORDER BY event_type, island_start""".stripMargin),
     // ---- B23: CDC op-log apply (tombstones, I-after-D, lsn frontier);
     // the log is synthesized deterministically from orders in both
     // engines: 4 versions per key, %10==0 tombstones, %10==5 inserts
-    "q_cdc" -> ((s, d) =>
+    QueryDef("q_cdc", (s, d) =>
       etl.Cdc.applyLog(Tables.orders(s, d).select(
         expr("o_orderkey div 4").as("k"),
         col("o_orderkey").as("lsn"),
         expr("CASE CAST(o_orderkey % 10 AS INT) WHEN 0 THEN 'D' " +
           "WHEN 5 THEN 'I' ELSE 'U' END").as("op"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"),
-        col("o_orderstatus").as("status")))),
+        col("o_orderstatus").as("status"))),
+      oracle = """WITH log AS (
+        |  SELECT o_orderkey // 4 AS k, o_orderkey AS lsn,
+        |    CASE CAST(o_orderkey % 10 AS INT) WHEN 0 THEN 'D'
+        |      WHEN 5 THEN 'I' ELSE 'U' END AS op,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+        |    o_orderstatus AS status
+        |  FROM orders),
+        |r AS (
+        |  SELECT *, row_number() OVER (PARTITION BY k
+        |      ORDER BY lsn DESC, op DESC,
+        |        md5(concat(CAST(price_cents AS VARCHAR), status)) DESC) AS rn,
+        |    CAST(count(*) OVER (PARTITION BY k) AS BIGINT) AS n_ops,
+        |    CAST(sum(CASE WHEN op = 'D' THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY k) AS BIGINT) AS n_deletes
+        |  FROM log)
+        |SELECT k, lsn AS applied_lsn, n_ops, n_deletes, price_cents, status
+        |FROM r WHERE rn = 1 AND op <> 'D' ORDER BY k""".stripMargin),
     // ---- B33: MERGE INTO a live AtomicMart — bootstrap the mart from
     // the first half of the synthesized op-log (lsn%4 in 0,1), merge
     // the second half as a CDC delta (one OCC commit rewriting only
     // touched partitions), read the table back. Delta lsns exceed base
     // lsns per key, so merged ≡ the oracle's full fold of the whole log
-    "q_mart_merge" -> ((s, d) => {
+    QueryDef("q_mart_merge", (s, d) => {
       val out = scratchDir("graft_mart_merge")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1207,12 +4448,30 @@ object SparkEntry {
         .select(col("k"), col("price_cents"), col("status"),
           col("part").cast("string").as("part"))
         .orderBy(col("k"))
-    }),
+    },
+      // merged mart ≡ full recompute from the whole op-log (the B33
+      // equivalence: per-key delta lsns exceed base lsns, so folding the
+      // snapshot + delta equals folding everything)
+      oracle = """WITH log AS (
+        |  SELECT o_orderkey // 4 AS k, o_orderkey AS lsn,
+        |    CASE CAST(o_orderkey % 10 AS INT) WHEN 0 THEN 'D'
+        |      WHEN 5 THEN 'I' ELSE 'U' END AS op,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+        |    o_orderstatus AS status,
+        |    'p' || CAST((o_orderkey // 4) % 8 AS VARCHAR) AS part
+        |  FROM orders),
+        |r AS (
+        |  SELECT *, row_number() OVER (PARTITION BY k
+        |      ORDER BY lsn DESC, op DESC,
+        |        md5(concat(CAST(price_cents AS VARCHAR), status, part)) DESC) AS rn
+        |  FROM log)
+        |SELECT k, price_cents, status, part
+        |FROM r WHERE rn = 1 AND op <> 'D' ORDER BY k""".stripMargin),
     // ---- B39: predicate UPDATE then DELETE on a live AtomicMart —
     // copy-on-write rewrites of only the touched partitions, each one
     // OCC commit; the readback is the post-DML table, so the oracle
     // checks the full statement semantics end-to-end.
-    "q_mart_delete" -> ((s, d) => {
+    QueryDef("q_mart_delete", (s, d) => {
       val out = scratchDir("graft_mart_delete")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1233,11 +4492,26 @@ object SparkEntry {
         .select(col("k"), col("price_cents"), col("status"),
           col("part").cast("string").as("part"))
         .orderBy(col("k"))
-    }),
+    },
+      oracle = """WITH base AS (
+        |  SELECT o_orderkey AS k,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+        |    o_orderstatus AS status,
+        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
+        |  FROM orders),
+        |upd AS (
+        |  SELECT k,
+        |    CASE WHEN status = 'F' AND k % 7 = 0 THEN price_cents + 100
+        |         ELSE price_cents END AS price_cents,
+        |    status, part
+        |  FROM base)
+        |SELECT k, price_cents, status, part FROM upd
+        |WHERE NOT (status = 'O' AND k % 3 = 0)
+        |ORDER BY k""".stripMargin),
     // ---- B40: change data feed — the row-level I/U/D delta DERIVED
     // between two retained versions (v0 → post-DML head), keyed so
     // rewrites classify as update pre/postimage pairs.
-    "q_mart_cdf" -> ((s, d) => {
+    QueryDef("q_mart_cdf", (s, d) => {
       val out = scratchDir("graft_mart_cdf")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1260,14 +4534,42 @@ object SparkEntry {
         .select(col("k"), col("price_cents"), col("status"),
           col("part").cast("string").as("part"), col("_change_type"))
         .orderBy(col("k"), col("_change_type"))
-    }),
+    },
+      // B40 twin: the multiset diff base → post-DML, keys on both sides
+      // of the diff reclassified as update pre/postimages
+      oracle = """WITH base AS (
+        |  SELECT o_orderkey AS k,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+        |    o_orderstatus AS status,
+        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
+        |  FROM orders),
+        |final AS (
+        |  SELECT k,
+        |    CASE WHEN status = 'F' AND k % 7 = 0 THEN price_cents + 100
+        |         ELSE price_cents END AS price_cents,
+        |    status, part
+        |  FROM base
+        |  WHERE NOT (status = 'O' AND k % 3 = 0)),
+        |d AS (SELECT * FROM base EXCEPT ALL SELECT * FROM final),
+        |i AS (SELECT * FROM final EXCEPT ALL SELECT * FROM base),
+        |uk AS (SELECT k FROM d INTERSECT SELECT k FROM i)
+        |SELECT k, price_cents, status, part,
+        |  CASE WHEN k IN (SELECT k FROM uk) THEN 'update_preimage'
+        |       ELSE 'delete' END AS _change_type
+        |FROM d
+        |UNION ALL
+        |SELECT k, price_cents, status, part,
+        |  CASE WHEN k IN (SELECT k FROM uk) THEN 'update_postimage'
+        |       ELSE 'insert' END AS _change_type
+        |FROM i
+        |ORDER BY k, _change_type""".stripMargin),
     // ---- B42: schema evolution — v0 publish, metadata-only ADD
     // COLUMN, an evolved publish carrying the new column, then an
     // UPDATE backfill over a slice (conform supplies NULLs to the
     // pre-evolution snapshots the rewrite reads). The readback is the
     // evolved table, so the oracle checks end-to-end: old rows NULL in
     // the added column except where the backfill touched them.
-    "q_mart_evolve" -> ((s, d) => {
+    QueryDef("q_mart_evolve", (s, d) => {
       val out = scratchDir("graft_mart_evolve")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1288,7 +4590,23 @@ object SparkEntry {
       back.select(col("k"), col("price_cents"), col("status"),
           col("part").cast("string").as("part"), col("discount_ppm"))
         .orderBy(col("k"))
-    }),
+    },
+      // B39 twin: the same UPDATE-then-DELETE statement pair in plain SQL
+      // B42 twin: evolved-table readback — the added column is NULL for
+      // pre-evolution rows, carried for the evolved batch, overwritten
+      // where the backfill UPDATE matched
+      oracle = """WITH base AS (
+        |  SELECT o_orderkey AS k,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+        |    o_orderstatus AS status,
+        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
+        |  FROM orders)
+        |SELECT k, price_cents, status, part,
+        |  CASE WHEN status = 'F' AND k % 5 = 0 THEN CAST(42 AS BIGINT)
+        |       WHEN k % 2 = 1 THEN CAST(k % 1000 AS BIGINT)
+        |       ELSE NULL END AS discount_ppm
+        |FROM base
+        |ORDER BY k""".stripMargin),
     // ---- B43: RENAME COLUMN via column-mapping ids — publish half
     // the rows, rename a data column AND the partition column
     // (metadata-only commits; the first rename auto-enables mapping),
@@ -1297,7 +4615,7 @@ object SparkEntry {
     // pinned flag columns: the CDF across the two rename commits is
     // EMPTY (no partition pointer moved), version 0 still reads under
     // its OWN (old) names, and the head reads under the new ones.
-    "q_mart_rename" -> ((s, d) => {
+    QueryDef("q_mart_rename", (s, d) => {
       val out = scratchDir("graft_mart_rename")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1328,13 +4646,31 @@ object SparkEntry {
         .withColumn("rename_cdf_rows", lit(renameCdfRows))
         .withColumn("v0_old_names", lit(v0OldNames))
         .orderBy(col("k"))
-    }),
+    },
+      // B43 twin: the final table under the RENAMED names, with the two
+      // engine-pinned invariants as constants — the CDF across the two
+      // metadata-only rename commits is empty (0 rows), and version 0
+      // still reads under its own pre-rename column names (TRUE)
+      oracle = """WITH base AS (
+        |  SELECT o_orderkey AS k,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS amount_cents,
+        |    o_orderstatus AS status,
+        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS bucket
+        |  FROM orders)
+        |SELECT k,
+        |  CASE WHEN status = 'F' AND k % 5 = 0 THEN amount_cents + 7
+        |       ELSE amount_cents END AS amount_cents,
+        |  status, bucket,
+        |  CAST(0 AS BIGINT) AS rename_cdf_rows,
+        |  TRUE AS v0_old_names
+        |FROM base
+        |ORDER BY k""".stripMargin),
     // ---- B44: multi-table transaction — a fact slice and the
     // dimension summary it joins against publish as TWO independent
     // AtomicMart tables under ONE intent-logged transaction (the
     // rep_fraud.py daily pair); the readback joins the committed pair,
     // so the oracle checks both legs landed and agree.
-    "q_mart_txn" -> ((s, d) => {
+    QueryDef("q_mart_txn", (s, d) => {
       val root = scratchDir("graft_mart_txn")
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1361,7 +4697,23 @@ object SparkEntry {
           col("part").cast("string").as("part"),
           col("n_orders"), col("sum_cents"))
         .orderBy(col("k"))
-    }),
+    },
+      // B44 twin: both transaction legs recomputed independently and
+      // joined — if either leg's commit were missing or stale the row
+      // count / aggregates could not match
+      oracle = """WITH fact AS (
+        |  SELECT o_orderkey AS k,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+        |    o_orderstatus AS status,
+        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
+        |  FROM orders),
+        |dim AS (
+        |  SELECT status, CAST(count(*) AS BIGINT) AS n_orders,
+        |    CAST(sum(price_cents) AS BIGINT) AS sum_cents
+        |  FROM fact GROUP BY status)
+        |SELECT f.k, f.price_cents, f.status, f.part, d.n_orders, d.sum_cents
+        |FROM fact f JOIN dim d USING (status)
+        |ORDER BY f.k""".stripMargin),
     // ---- B44 at N=3 (VERDICT r12 #6): a THREE-table transaction
     // (fact + status dim + per-part audit), the second txn KILLED
     // after one leg, rolled forward by recovery — the oracle checks
@@ -1371,7 +4723,7 @@ object SparkEntry {
     // partitions but the SAME dim partition, so the replay exercises
     // both the append-to-shared-partition and the fresh-partition leg
     // shapes in one intent.
-    "q_mart_txn3" -> ((s, d) => {
+    QueryDef("q_mart_txn3", (s, d) => {
       val root = scratchDir("graft_mart_txn3")
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1418,13 +4770,31 @@ object SparkEntry {
         .withColumn("torn_before_replay", lit(tornBefore))
         .withColumn("replay_recovered", lit(replayed))
         .orderBy(col("k"))
-    }),
+    },
+      oracle = """WITH fact AS (
+        |  SELECT o_orderkey AS k,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+        |    o_orderstatus AS status,
+        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
+        |  FROM orders),
+        |dim AS (
+        |  SELECT status, CAST(count(*) AS BIGINT) AS n_orders,
+        |    CAST(sum(price_cents) AS BIGINT) AS sum_cents
+        |  FROM fact GROUP BY status),
+        |aud AS (
+        |  SELECT part, CAST(count(*) AS BIGINT) AS n_part
+        |  FROM fact GROUP BY part)
+        |SELECT f.k, f.price_cents, f.status, f.part,
+        |  d.n_orders, d.sum_cents, a.n_part,
+        |  TRUE AS torn_before_replay, TRUE AS replay_recovered
+        |FROM fact f JOIN dim d USING (status) JOIN aud a USING (part)
+        |ORDER BY f.k""".stripMargin),
     // ---- B45: the ALTER TABLE SQL skin end-to-end — a migration
     // chain (rename, add, drop) arrives as SQL strings against a live
     // mart; the readback under the migrated names hash-matches the
     // direct recompute, and an out-of-grammar statement is refused
     // whole (flag column).
-    "q_mart_sql" -> ((s, d) => {
+    QueryDef("q_mart_sql", (s, d) => {
       val out = scratchDir("graft_mart_sql")
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1444,21 +4814,247 @@ object SparkEntry {
           col("part").cast("string").as("part"))
         .withColumn("bad_stmt_refused", lit(refused))
         .orderBy(col("k"))
-    }),
+    },
+      oracle = """SELECT o_orderkey AS k,
+        |  CAST(round(o_totalprice * 100) AS BIGINT) AS amount_cents,
+        |  o_orderstatus AS status,
+        |  'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part,
+        |  TRUE AS bad_stmt_refused
+        |FROM orders ORDER BY 1""".stripMargin),
     // ---- D67: Kaplan–Meier fulfilment curve with real right-censoring
-    "q_km" -> ((s, d) =>
-      ops.Survival.kaplanMeier(Tables.orders(s, d), Tables.lineitem(s, d))),
+    QueryDef("q_km", (s, d) =>
+      ops.Survival.kaplanMeier(Tables.orders(s, d), Tables.lineitem(s, d)),
+      oracle = """WITH j AS (
+        |  SELECT o.o_orderpriority AS grp,
+        |    epoch_us(l.l_shipdate) // 86400000000 AS ship_day,
+        |    epoch_us(o.o_orderdate) // 86400000000 AS order_day
+        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+        |cut AS (SELECT max(ship_day) - 30 AS cutoff FROM j),
+        |obs AS (
+        |  SELECT grp,
+        |    CASE WHEN ship_day <= cutoff THEN 1 ELSE 0 END AS is_event,
+        |    CASE WHEN ship_day <= cutoff THEN ship_day - order_day
+        |         ELSE cutoff - order_day END AS t
+        |  FROM j CROSS JOIN cut WHERE order_day <= cutoff),
+        |per_lag AS (
+        |  SELECT grp, t, CAST(sum(is_event) AS BIGINT) AS d,
+        |    CAST(sum(1 - is_event) AS BIGINT) AS c
+        |  FROM obs GROUP BY 1, 2),
+        |risk AS (
+        |  SELECT grp, t, d, c,
+        |    CAST(sum(d + c) OVER (PARTITION BY grp) -
+        |      COALESCE(sum(d + c) OVER (PARTITION BY grp ORDER BY t
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS n_risk
+        |  FROM per_lag),
+        |dth AS (SELECT * FROM risk WHERE d > 0),
+        |packed AS (
+        |  SELECT grp,
+        |    list(d * 4294967296 + n_risk ORDER BY t) AS xs,
+        |    list(t ORDER BY t) AS ts
+        |  FROM dth GROUP BY grp),
+        |folded AS (
+        |  SELECT r.grp, r.t, r.d, r.c, r.n_risk,
+        |    CAST(list_reduce(
+        |      list_prepend(CAST(1000000 AS BIGINT),
+        |        list_filter(p.xs, (x, i) -> p.ts[i] <= r.t)),
+        |      (acc, x) -> (acc * ((x % 4294967296) - (x // 4294967296)))
+        |                  // (x % 4294967296)) AS BIGINT) AS surv_ppm
+        |  FROM dth r JOIN packed p ON r.grp = p.grp)
+        |SELECT grp, t, d AS n_event, c AS n_censored, n_risk, surv_ppm
+        |FROM folded ORDER BY grp, t""".stripMargin),
     // ---- E58: sorted-neighborhood dedup (block windows + seam join)
-    "q_snm" -> ((s, d) =>
-      ops.Dedup.sortedNeighborhood(Tables.documents(s, d))),
-    "q_lm_quality" -> ((s, d) =>
-      ops.LmQuality.score(Tables.documents(s, d))),
-    "q_shuffle_shards" -> ((s, d) =>
-      ops.TrainingData.deterministicShuffle(Tables.documents(s, d))),
-    "q_copurchase" -> ((s, d) =>
-      ops.MarketBasket.coPurchase(Tables.lineitem(s, d))),
-    "q_lm_buckets" -> ((s, d) =>
-      ops.LmQuality.perplexityBuckets(Tables.documents(s, d))),
+    QueryDef("q_snm", (s, d) =>
+      ops.Dedup.sortedNeighborhood(Tables.documents(s, d)),
+      oracle = """WITH t AS (
+        |  SELECT doc_id, list_sort(list_distinct(
+        |      list_filter(string_split(text, ' '), x -> x <> ''))) AS toks
+        |  FROM documents
+        |  WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) > 0),
+        |kb AS (
+        |  SELECT doc_id, array_to_string(toks, ' ') AS key,
+        |    substring(array_to_string(toks, ' '), 1, 8) AS blk
+        |  FROM t),
+        |ld AS (
+        |  SELECT doc_id, blk,
+        |    lead(doc_id, 1) OVER win AS n1,
+        |    lead(doc_id, 2) OVER win AS n2,
+        |    lead(doc_id, 3) OVER win AS n3,
+        |    row_number() OVER win AS rn_a,
+        |    row_number() OVER (PARTITION BY blk
+        |      ORDER BY key DESC, doc_id DESC) AS rn_d
+        |  FROM kb WINDOW win AS (PARTITION BY blk ORDER BY key, doc_id)),
+        |interior AS (
+        |  SELECT doc_id, n1 AS nbr FROM ld WHERE n1 IS NOT NULL
+        |  UNION ALL SELECT doc_id, n2 FROM ld WHERE n2 IS NOT NULL
+        |  UNION ALL SELECT doc_id, n3 FROM ld WHERE n3 IS NOT NULL),
+        |bi AS (
+        |  SELECT blk, row_number() OVER (ORDER BY blk) AS blk_idx
+        |  FROM (SELECT DISTINCT blk FROM kb)),
+        |tails AS (
+        |  SELECT ld.doc_id AS a_id, ld.rn_d, bi.blk_idx
+        |  FROM ld JOIN bi ON ld.blk = bi.blk WHERE ld.rn_d < 4),
+        |heads AS (
+        |  SELECT ld.doc_id AS b_id, ld.rn_a, bi.blk_idx - 1 AS blk_idx
+        |  FROM ld JOIN bi ON ld.blk = bi.blk WHERE ld.rn_a < 4),
+        |seam AS (
+        |  SELECT a_id AS doc_id, b_id AS nbr
+        |  FROM tails JOIN heads USING (blk_idx) WHERE rn_d + rn_a <= 4),
+        |pairs AS (
+        |  SELECT least(doc_id, nbr) AS id1, greatest(doc_id, nbr) AS id2,
+        |    CAST(count(*) AS BIGINT) AS n_props
+        |  FROM (SELECT * FROM interior UNION ALL SELECT * FROM seam)
+        |  GROUP BY 1, 2),
+        |v AS (
+        |  SELECT p.id1, p.id2, p.n_props,
+        |    CAST(len(list_intersect(a.toks, b.toks)) AS BIGINT) AS n_inter,
+        |    CAST(len(a.toks) + len(b.toks) AS BIGINT) AS n_sum
+        |  FROM pairs p
+        |  JOIN t a ON p.id1 = a.doc_id
+        |  JOIN t b ON p.id2 = b.doc_id)
+        |SELECT id1, id2, n_props, n_inter, n_sum - n_inter AS n_union,
+        |  CAST(1000000 * n_inter // (n_sum - n_inter) AS BIGINT) AS jac_ppm
+        |FROM v
+        |WHERE 1000000 * n_inter // (n_sum - n_inter) >= 500000
+        |ORDER BY id1, id2""".stripMargin),
+    QueryDef("q_lm_quality", (s, d) =>
+      ops.LmQuality.score(Tables.documents(s, d)),
+      // E50 twin: same contraction, same doc-weighted model counts, and
+      // bl(x) as length(to_base(x,2)) — integer bit lengths, so the
+      // stupid-backoff code lengths replay bit-for-bit.
+      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
+        |reps AS (SELECT ch, min(doc_id) AS rep,
+        |    CAST(sum(CASE WHEN doc_id % 5 <> 0 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS tcnt
+        |  FROM m GROUP BY 1),
+        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
+        |rd AS (SELECT m.doc_id, string_split(m.text, ' ') AS t
+        |  FROM m JOIN reps r ON m.doc_id = r.rep),
+        |toks AS (SELECT doc_id, unnest(t) AS w FROM rd),
+        |p2 AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
+        |    unnest(t[2:len(t)]) AS w2
+        |  FROM rd WHERE len(t) >= 2),
+        |tc AS (SELECT rep AS doc_id, tcnt FROM reps),
+        |uni AS (SELECT w, CAST(sum(tc.tcnt) AS BIGINT) AS c1
+        |  FROM toks JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1),
+        |big AS (SELECT w1, w2, CAST(sum(tc.tcnt) AS BIGINT) AS c2
+        |  FROM p2 JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1, 2),
+        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS tot FROM uni),
+        |bits AS (SELECT p.doc_id,
+        |    CAST(CASE WHEN b.c2 IS NOT NULL
+        |      THEN length(to_base(u1.c1, 2)) - length(to_base(b.c2, 2))
+        |    WHEN u2.c1 IS NOT NULL
+        |      THEN length(to_base(t.tot, 2)) - length(to_base(u2.c1, 2)) + 4
+        |    ELSE length(to_base(t.tot, 2)) + 8 END AS BIGINT) AS bits
+        |  FROM p2 p
+        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
+        |  LEFT JOIN uni u1 ON p.w1 = u1.w
+        |  LEFT JOIN uni u2 ON p.w2 = u2.w
+        |  CROSS JOIN tot t),
+        |sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
+        |    CAST(sum(bits) AS BIGINT) AS bits_sum FROM bits GROUP BY 1),
+        |f AS (SELECT r.rep, COALESCE(sc.n_pairs, 0) AS n_pairs,
+        |    COALESCE(sc.bits_sum, 0) AS bits_sum
+        |  FROM reps r LEFT JOIN sc ON sc.doc_id = r.rep)
+        |SELECT mem.doc_id, f.n_pairs, f.bits_sum,
+        |  CAST(CASE WHEN f.n_pairs > 0 THEN (1000 * f.bits_sum) // f.n_pairs
+        |    ELSE -1 END AS BIGINT) AS mbits_per_pair
+        |FROM f JOIN members mem ON mem.rep = f.rep
+        |ORDER BY mem.doc_id""".stripMargin),
+    QueryDef("q_shuffle_shards", (s, d) =>
+      ops.TrainingData.deterministicShuffle(Tables.documents(s, d)),
+      // E51 twin: one md5 per row drives both the shard assignment
+      // (first-8-hex mod N, the E23 idiom — non-negative, so % == pmod)
+      // and the within-shard rank.
+      oracle = """WITH r AS (SELECT doc_id,
+        |    md5('shuf42:' || CAST(doc_id AS VARCHAR)) AS rk
+        |  FROM documents),
+        |a AS (SELECT doc_id, rk,
+        |    CAST(('0x' || substr(rk, 1, 8)) AS BIGINT) % 8 AS shard
+        |  FROM r)
+        |SELECT doc_id, shard,
+        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY rk, doc_id)
+        |    - 1 AS BIGINT) AS pos
+        |FROM a ORDER BY shard, pos""".stripMargin),
+    QueryDef("q_copurchase", (s, d) =>
+      ops.MarketBasket.coPurchase(Tables.lineitem(s, d)),
+      // D60 twin: identical Apriori prune, pair join, and exact ppm lift
+      // (integer floor-div on both sides, all operands non-negative).
+      oracle = """WITH items AS (
+        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+        |freq AS (
+        |  SELECT p, CAST(count(*) AS BIGINT) AS nf FROM items
+        |  GROUP BY 1 HAVING count(*) >= 2),
+        |kept AS (SELECT i.o, i.p FROM items i JOIN freq f USING (p)),
+        |tot AS (
+        |  SELECT CAST(count(DISTINCT o) AS BIGINT) AS tot FROM items),
+        |pairs AS (
+        |  SELECT a.p AS p1, b.p AS p2, CAST(count(*) AS BIGINT) AS n_orders
+        |  FROM kept a JOIN kept b ON a.o = b.o AND a.p < b.p
+        |  GROUP BY 1, 2 HAVING count(*) >= 2)
+        |SELECT p.p1, p.p2, p.n_orders,
+        |  (p.n_orders * t.tot * 1000000) // (f1.nf * f2.nf) AS lift_ppm
+        |FROM pairs p
+        |JOIN freq f1 ON f1.p = p.p1
+        |JOIN freq f2 ON f2.p = p.p2
+        |CROSS JOIN tot t
+        |ORDER BY p.p1, p.p2""".stripMargin),
+    QueryDef("q_lm_buckets", (s, d) =>
+      ops.LmQuality.perplexityBuckets(Tables.documents(s, d)),
+      // E52 twin: the E50 chain + the distinct-value tercile cuts
+      // (3·cum ≥ k·n — exact integer ceil), value-based bucket edges.
+      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
+        |reps AS (SELECT ch, min(doc_id) AS rep,
+        |    CAST(sum(CASE WHEN doc_id % 5 <> 0 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS tcnt
+        |  FROM m GROUP BY 1),
+        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
+        |rd AS (SELECT m.doc_id, string_split(m.text, ' ') AS t
+        |  FROM m JOIN reps r ON m.doc_id = r.rep),
+        |toks AS (SELECT doc_id, unnest(t) AS w FROM rd),
+        |p2 AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
+        |    unnest(t[2:len(t)]) AS w2
+        |  FROM rd WHERE len(t) >= 2),
+        |tc AS (SELECT rep AS doc_id, tcnt FROM reps),
+        |uni AS (SELECT w, CAST(sum(tc.tcnt) AS BIGINT) AS c1
+        |  FROM toks JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1),
+        |big AS (SELECT w1, w2, CAST(sum(tc.tcnt) AS BIGINT) AS c2
+        |  FROM p2 JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1, 2),
+        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS tot FROM uni),
+        |bits AS (SELECT p.doc_id,
+        |    CAST(CASE WHEN b.c2 IS NOT NULL
+        |      THEN length(to_base(u1.c1, 2)) - length(to_base(b.c2, 2))
+        |    WHEN u2.c1 IS NOT NULL
+        |      THEN length(to_base(t.tot, 2)) - length(to_base(u2.c1, 2)) + 4
+        |    ELSE length(to_base(t.tot, 2)) + 8 END AS BIGINT) AS bits
+        |  FROM p2 p
+        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
+        |  LEFT JOIN uni u1 ON p.w1 = u1.w
+        |  LEFT JOIN uni u2 ON p.w2 = u2.w
+        |  CROSS JOIN tot t),
+        |sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
+        |    CAST(sum(bits) AS BIGINT) AS bits_sum FROM bits GROUP BY 1),
+        |sd AS (SELECT mem.doc_id, doc.lang,
+        |    CAST((1000 * sc.bits_sum) // sc.n_pairs AS BIGINT)
+        |      AS mbits_per_pair
+        |  FROM sc JOIN members mem ON mem.rep = sc.doc_id
+        |  JOIN documents doc ON doc.doc_id = mem.doc_id),
+        |hist AS (SELECT lang, mbits_per_pair, CAST(count(*) AS BIGINT) AS c
+        |  FROM sd GROUP BY 1, 2),
+        |cum AS (SELECT lang, mbits_per_pair,
+        |    sum(c) OVER (PARTITION BY lang ORDER BY mbits_per_pair) AS cum,
+        |    sum(c) OVER (PARTITION BY lang) AS n
+        |  FROM hist),
+        |cuts AS (SELECT lang,
+        |    min(CASE WHEN cum * 3 >= n THEN mbits_per_pair END) AS t1,
+        |    min(CASE WHEN cum * 3 >= 2 * n THEN mbits_per_pair END) AS t2
+        |  FROM cum GROUP BY 1)
+        |SELECT sd.doc_id, sd.lang, sd.mbits_per_pair,
+        |  CASE WHEN sd.mbits_per_pair <= c.t1 THEN 'head'
+        |    WHEN sd.mbits_per_pair <= c.t2 THEN 'middle'
+        |    ELSE 'tail' END AS bucket
+        |FROM sd JOIN cuts c USING (lang)
+        |ORDER BY sd.doc_id""".stripMargin),
 
     // ---- D12: sketch aggregations (HLL / quantile digest). Engine
     // sketch layouts differ cross-engine, so raw estimates can never
@@ -1467,7 +5063,7 @@ object SparkEntry {
     // a 10% band = 5 sigma; quantile digest given a 2% value band).
     // Both engines agree on (exact, flag), so the driver gets a full
     // hash check while the sketch itself still runs in the hot path.
-    "q_approx_stats" -> ((s, d) => {
+    QueryDef("q_approx_stats", (s, d) => {
       // Two aggregation passes joined on the 5-row group key, NOT one
       // combined agg: mixing count_distinct (which plans an Expand)
       // with the TypedImperative sketch/percentile aggregates forces
@@ -1497,40 +5093,107 @@ object SparkEntry {
           okFlag(element_at(col("q"), 1), col("p50_exact"), 0.02).as("p50_ok"),
           okFlag(element_at(col("q"), 2), col("p95_exact"), 0.02).as("p95_ok"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
+      // D12: each engine runs its OWN sketch (DuckDB: HLL
+      // approx_count_distinct, t-digest approx_quantile) and emits the
+      // exact answer + a within-band verdict — only (exact, flag) is
+      // hashed, so the cross-engine sketch-layout difference is moot.
+      oracle = """SELECT l_returnflag,
+        |  count(DISTINCT l_partkey) AS exact_parts,
+        |  quantile_cont(l_extendedprice, 0.5) AS p50_exact,
+        |  quantile_cont(l_extendedprice, 0.95) AS p95_exact,
+        |  CAST(abs(approx_count_distinct(l_partkey) - count(DISTINCT l_partkey))
+        |       <= 0.10 * count(DISTINCT l_partkey) AS BIGINT) AS parts_ok,
+        |  CAST(abs(approx_quantile(l_extendedprice, 0.5) - quantile_cont(l_extendedprice, 0.5))
+        |       <= 0.02 * quantile_cont(l_extendedprice, 0.5) AS BIGINT) AS p50_ok,
+        |  CAST(abs(approx_quantile(l_extendedprice, 0.95) - quantile_cont(l_extendedprice, 0.95))
+        |       <= 0.02 * quantile_cont(l_extendedprice, 0.95) AS BIGINT) AS p95_ok
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // D47: fixed-iteration PageRank over the customer↔supplier trade
     // graph — exact integer ppm, so the iterative ranks hash-match an
     // independent engine bit-for-bit
-    "q_pagerank" -> ((s, d) =>
+    QueryDef("q_pagerank", (s, d) =>
       ops.GraphStats.pageRank(
-        ops.GraphStats.tradeEdges(Tables.orders(s, d), Tables.lineitem(s, d)))),
+        ops.GraphStats.tradeEdges(Tables.orders(s, d), Tables.lineitem(s, d))),
+      oracle = sqlPageRank),
     // D64: k-core decomposition of the same trade graph — iterative
     // peeling to the maximal ≥k-degree subgraph (cascades included)
-    "q_kcore" -> ((s, d) =>
+    QueryDef("q_kcore", (s, d) =>
       ops.GraphStats.kCore(
-        ops.GraphStats.tradeEdges(Tables.orders(s, d), Tables.lineitem(s, d)))),
+        ops.GraphStats.tradeEdges(Tables.orders(s, d), Tables.lineitem(s, d))),
+      oracle = sqlKCore),
 
     // D50: k-hop BFS from seeded sources over the trade graph — delta
     // iteration (frontier-only joins), oracle is a depth-bounded
     // recursive CTE
-    "q_bfs" -> ((s, d) =>
+    QueryDef("q_bfs", (s, d) =>
       ops.GraphStats.khopDistances(
-        ops.GraphStats.tradeEdges(Tables.orders(s, d), Tables.lineitem(s, d)))),
+        ops.GraphStats.tradeEdges(Tables.orders(s, d), Tables.lineitem(s, d))),
+      oracle = """WITH RECURSIVE p AS (
+        |  SELECT DISTINCT o_custkey AS cust, l_suppkey + 500000000 AS supp
+        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        |e AS (SELECT cust AS src, supp AS dst FROM p
+        |      UNION ALL SELECT supp AS src, cust AS dst FROM p),
+        |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+        |reach(node, d) AS (
+        |  SELECT node, 0 FROM n
+        |  WHERE node % 1000000000 < 500000000 AND node % 211 = 0
+        |  UNION
+        |  SELECT e.dst, r.d + 1 FROM reach r JOIN e ON e.src = r.node
+        |  WHERE r.d < 4)
+        |SELECT CAST(node AS BIGINT) AS node, CAST(MIN(d) AS BIGINT) AS dist
+        |FROM reach GROUP BY node ORDER BY node""".stripMargin),
 
     // D51: count-min sketch heavy hitters — md5-derived hash rows, so
     // the d×w counter array (and the overestimate semantics) replay
     // bit-for-bit in the oracle
-    "q_cms_heavy" -> ((s, d) =>
-      ops.Sketches.countMinHeavyHitters(Tables.documents(s, d))),
+    QueryDef("q_cms_heavy", (s, d) =>
+      ops.Sketches.countMinHeavyHitters(Tables.documents(s, d)),
+      oracle = """WITH toks AS (
+        |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM toks),
+        |tb AS (
+        |  SELECT tok, j,
+        |    CAST(('0x'||substr(md5('cm'||CAST(j AS VARCHAR)||':'||tok),1,8))
+        |      AS BIGINT) % 512 AS b
+        |  FROM toks, range(0,3) r(j)),
+        |sk AS (SELECT j, b, CAST(count(*) AS BIGINT) AS cnt
+        |       FROM tb GROUP BY 1, 2),
+        |dt AS (SELECT DISTINCT tok FROM toks),
+        |db AS (
+        |  SELECT tok, j,
+        |    CAST(('0x'||substr(md5('cm'||CAST(j AS VARCHAR)||':'||tok),1,8))
+        |      AS BIGINT) % 512 AS b
+        |  FROM dt, range(0,3) r(j)),
+        |est AS (
+        |  SELECT d.tok, CAST(MIN(sk.cnt) AS BIGINT) AS est_count
+        |  FROM db d JOIN sk ON sk.j = d.j AND sk.b = d.b
+        |  GROUP BY d.tok)
+        |SELECT tok, est_count FROM est, tot
+        |WHERE est_count * 200 >= n_total
+        |ORDER BY tok""".stripMargin),
 
     // E46: hashed-feature linear scorer (fasttext-style serving path)
-    "q_hashed_score" -> ((s, d) =>
-      ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))),
+    QueryDef("q_hashed_score", (s, d) =>
+      ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d)),
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks)
+        |SELECT doc_id,
+        |  CAST(count(*) AS BIGINT) AS n_tokens,
+        |  CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin,
+        |  CAST(CASE WHEN SUM((b * 2654435761) % 2001 - 1000) > 0
+        |       THEN 1 ELSE 0 END AS BIGINT) AS label
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // D52: KMV distinct-count estimate of parts ordered per customer
     // nation — the estimate ITSELF is integer-exact cross-engine
-    "q_kmv_distinct" -> ((s, d) =>
+    QueryDef("q_kmv_distinct", (s, d) =>
       ops.Sketches.kmvDistinct(
         Tables.customer(s, d).select(col("c_custkey"),
           col("c_nationkey").cast("long").as("c_nationkey"))
@@ -1539,60 +5202,288 @@ object SparkEntry {
           .join(Tables.lineitem(s, d).select(
             col("l_orderkey").as("o_orderkey"), col("l_partkey")),
             Seq("o_orderkey")),
-        grp = "c_nationkey", v = "l_partkey")),
+        grp = "c_nationkey", v = "l_partkey"),
+      oracle = """WITH pairs AS (
+        |  SELECT c_nationkey AS nat, l_partkey AS pk
+        |  FROM customer
+        |  JOIN orders ON o_custkey = c_custkey
+        |  JOIN lineitem ON l_orderkey = o_orderkey),
+        |h AS (
+        |  SELECT DISTINCT nat,
+        |    CAST(('0x'||substr(md5('kmv:'||CAST(pk AS VARCHAR)),1,8))
+        |      AS BIGINT) AS h
+        |  FROM pairs),
+        |r AS (SELECT nat, h,
+        |        row_number() OVER (PARTITION BY nat ORDER BY h) AS rn
+        |      FROM h),
+        |t AS (SELECT nat, CAST(max(h) AS BIGINT) AS kth,
+        |        CAST(count(*) AS BIGINT) AS c
+        |      FROM r WHERE rn <= 64 GROUP BY nat)
+        |SELECT CAST(nat AS BIGINT) AS c_nationkey,
+        |  CAST(CASE WHEN c < 64 THEN c
+        |       ELSE (63 * 4294967296) // greatest(kth, 1) END AS BIGINT)
+        |    AS est_distinct
+        |FROM t ORDER BY 1""".stripMargin),
 
     // D53: hop-limited weighted SSSP over trade-strength costs
-    "q_sssp" -> ((s, d) =>
+    QueryDef("q_sssp", (s, d) =>
       ops.GraphStats.ssspCosts(
         ops.GraphStats.weightedTradeEdges(
-          Tables.orders(s, d), Tables.lineitem(s, d)))),
+          Tables.orders(s, d), Tables.lineitem(s, d))),
+      oracle = """WITH p AS (
+        |  SELECT o_custkey AS cust, l_suppkey + 500000000 AS supp,
+        |    CAST(count(*) AS BIGINT) AS cnt
+        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+        |  GROUP BY 1, 2),
+        |e AS (SELECT cust AS src, supp AS dst, 1000000 // cnt AS w FROM p
+        |      UNION ALL SELECT supp, cust, 1000000 // cnt FROM p),
+        |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+        |d0 AS (SELECT node, CAST(0 AS BIGINT) AS cost FROM n
+        |       WHERE node % 1000000000 < 500000000 AND node % 211 = 0),
+        |r1 AS (SELECT e.dst AS node, MIN(d0.cost + e.w) AS cost
+        |       FROM d0 JOIN e ON e.src = d0.node GROUP BY 1),
+        |d1 AS (SELECT node, MIN(cost) AS cost FROM
+        |       (SELECT * FROM d0 UNION ALL SELECT * FROM r1) GROUP BY 1),
+        |r2 AS (SELECT e.dst AS node, MIN(d1.cost + e.w) AS cost
+        |       FROM d1 JOIN e ON e.src = d1.node GROUP BY 1),
+        |d2 AS (SELECT node, MIN(cost) AS cost FROM
+        |       (SELECT * FROM d1 UNION ALL SELECT * FROM r2) GROUP BY 1),
+        |r3 AS (SELECT e.dst AS node, MIN(d2.cost + e.w) AS cost
+        |       FROM d2 JOIN e ON e.src = d2.node GROUP BY 1),
+        |d3 AS (SELECT node, MIN(cost) AS cost FROM
+        |       (SELECT * FROM d2 UNION ALL SELECT * FROM r3) GROUP BY 1)
+        |SELECT CAST(node AS BIGINT) AS node, CAST(cost AS BIGINT) AS cost
+        |FROM d3 ORDER BY node""".stripMargin),
 
     // D72: log-linear mergeable quantile sketch — p50/p90/p99 of
     // line-item price per return flag with a ≤2^-7 relative-error
     // contract; octave via integer bit-smear (no log2), rank walk in
     // exact ppm arithmetic, so the ESTIMATES hash-verify cross-engine
-    "q_qsketch" -> ((s, d) =>
+    QueryDef("q_qsketch", (s, d) =>
       ops.QuantileSketch.groupQuantiles(
         Tables.lineitem(s, d).select(col("l_returnflag").as("flag"),
           cents(col("l_extendedprice")).as("price_cents")),
-        grp = "flag", c = "price_cents")),
+        grp = "flag", c = "price_cents"),
+      // D72 twin: identical staged bit-smear octave, bucket id, exact
+      // ppm rank walk, and integer midpoint inverse — the estimates
+      // (not just the rows) are bit-identical cross-engine.
+      oracle = """WITH v AS (
+        |  SELECT l_returnflag AS flag,
+        |    greatest(CAST(round(l_extendedprice * 100) AS BIGINT),
+        |             CAST(1 AS BIGINT)) AS c0
+        |  FROM lineitem),
+        |m1 AS (SELECT flag, c0, c0 | (c0 >> 1) AS s FROM v),
+        |m2 AS (SELECT flag, c0, s | (s >> 2) AS s FROM m1),
+        |m3 AS (SELECT flag, c0, s | (s >> 4) AS s FROM m2),
+        |m4 AS (SELECT flag, c0, s | (s >> 8) AS s FROM m3),
+        |m5 AS (SELECT flag, c0, s | (s >> 16) AS s FROM m4),
+        |m6 AS (SELECT flag, c0, s | (s >> 32) AS s FROM m5),
+        |b AS (
+        |  SELECT flag,
+        |    CASE WHEN c0 < 64 THEN c0
+        |         ELSE (CAST(bit_count(s) AS BIGINT) - 1 - 6) * 64
+        |              + c0 // ((s + 1) // 128) END AS bid
+        |  FROM m6),
+        |sk AS (SELECT flag, bid, CAST(COUNT(*) AS BIGINT) AS cnt
+        |       FROM b GROUP BY 1, 2),
+        |cum AS (
+        |  SELECT flag, bid, cnt,
+        |    CAST(SUM(cnt) OVER (PARTITION BY flag ORDER BY bid)
+        |      AS BIGINT) AS cum
+        |  FROM sk),
+        |tot AS (SELECT flag, CAST(SUM(cnt) AS BIGINT) AS n,
+        |          CAST(COUNT(*) AS BIGINT) AS n_buckets
+        |        FROM sk GROUP BY 1),
+        |g AS (SELECT flag, n, n_buckets, q_ppm FROM tot
+        |      CROSS JOIN (SELECT UNNEST([500000, 900000, 990000])
+        |                    AS q_ppm)),
+        |sel AS (
+        |  SELECT c.flag, g.q_ppm, g.n, g.n_buckets, MIN(c.bid) AS bid
+        |  FROM cum c JOIN g ON g.flag = c.flag
+        |  WHERE c.cum * 1000000 >= g.n * g.q_ppm
+        |  GROUP BY 1, 2, 3, 4)
+        |SELECT flag, CAST(q_ppm AS BIGINT) AS q_ppm, n, n_buckets,
+        |  CASE WHEN bid < 64 THEN bid
+        |       ELSE (bid - (bid // 64 - 1) * 64)
+        |            * (CAST(1 AS BIGINT) << CAST(bid // 64 - 1 AS INT))
+        |            + ((CAST(1 AS BIGINT) << CAST(bid // 64 - 1 AS INT))
+        |               - 1) // 2
+        |  END AS est_cents
+        |FROM sel ORDER BY 1, 2""".stripMargin),
 
     // E47: inverted index — stats for every term, postings only under
     // the df cap (the posting-skew guard)
-    "q_inverted" -> ((s, d) =>
-      ops.TextAnalysis.invertedIndex(Tables.documents(s, d))),
+    QueryDef("q_inverted", (s, d) =>
+      ops.TextAnalysis.invertedIndex(Tables.documents(s, d)),
+      oracle = """WITH occ AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |  FROM documents),
+        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+        |stats AS (
+        |  SELECT term, CAST(count(*) AS BIGINT) AS cf,
+        |    CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+        |  FROM occ GROUP BY term),
+        |post AS (
+        |  SELECT term, list(doc_id ORDER BY doc_id) AS postings
+        |  FROM (SELECT DISTINCT term, doc_id FROM occ)
+        |  WHERE term IN (SELECT term FROM stats, nd
+        |                 WHERE df * 1000000 <= 780000 * n_docs)
+        |  GROUP BY term)
+        |SELECT s.term, s.df, s.cf,
+        |  COALESCE(array_to_string(p.postings, ','), '') AS postings
+        |FROM stats s LEFT JOIN post p USING (term)
+        |ORDER BY s.term""".stripMargin),
 
     // D54: KMV sketch set algebra — catalog drift between 1995 and
     // 2001 part sets, estimated without materializing either set
-    "q_kmv_setops" -> ((s, d) =>
+    QueryDef("q_kmv_setops", (s, d) =>
       ops.Sketches.kmvSetOps(
         Tables.lineitem(s, d)
           .filter(year(col("l_shipdate")).isin(1995, 2001))
           .select(when(year(col("l_shipdate")) === 1995, 0L).otherwise(1L)
-            .as("side"), col("l_partkey").as("v")))),
+            .as("side"), col("l_partkey").as("v"))),
+      oracle = """WITH t AS (
+        |  SELECT CASE WHEN year(l_shipdate) = 1995 THEN 0 ELSE 1 END AS side,
+        |    l_partkey AS pk
+        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 2001)),
+        |h AS (
+        |  SELECT DISTINCT side,
+        |    CAST(('0x'||substr(md5('kmv:'||CAST(pk AS VARCHAR)),1,8))
+        |      AS BIGINT) AS h
+        |  FROM t),
+        |ra AS (SELECT h, row_number() OVER (ORDER BY h) AS rn
+        |       FROM h WHERE side = 0),
+        |rb AS (SELECT h, row_number() OVER (ORDER BY h) AS rn
+        |       FROM h WHERE side = 1),
+        |ru AS (SELECT h, row_number() OVER (ORDER BY h) AS rn
+        |       FROM (SELECT DISTINCT h FROM h)),
+        |sa AS (SELECT CAST(count(*) AS BIGINT) AS cnt,
+        |         CAST(max(h) AS BIGINT) AS kth FROM ra WHERE rn <= 64),
+        |sb AS (SELECT CAST(count(*) AS BIGINT) AS cnt,
+        |         CAST(max(h) AS BIGINT) AS kth FROM rb WHERE rn <= 64),
+        |su AS (SELECT CAST(count(*) AS BIGINT) AS cnt,
+        |         CAST(max(h) AS BIGINT) AS kth FROM ru WHERE rn <= 64),
+        |rho AS (SELECT CAST(count(*) AS BIGINT) AS rho
+        |        FROM (SELECT h FROM ru WHERE rn <= 64) u
+        |        JOIN (SELECT h FROM ra WHERE rn <= 64) a USING (h)
+        |        JOIN (SELECT h FROM rb WHERE rn <= 64) b USING (h)),
+        |es AS (
+        |  SELECT
+        |    CAST(CASE WHEN sa.cnt < 64 THEN sa.cnt
+        |         ELSE (63 * 4294967296) // greatest(sa.kth, 1) END AS BIGINT)
+        |      AS est_a,
+        |    CAST(CASE WHEN sb.cnt < 64 THEN sb.cnt
+        |         ELSE (63 * 4294967296) // greatest(sb.kth, 1) END AS BIGINT)
+        |      AS est_b,
+        |    CAST(CASE WHEN su.cnt < 64 THEN su.cnt
+        |         ELSE (63 * 4294967296) // greatest(su.kth, 1) END AS BIGINT)
+        |      AS est_union,
+        |    su.cnt AS u_cnt, rho.rho
+        |  FROM sa, sb, su, rho),
+        |f AS (
+        |  SELECT est_a, est_b, est_union,
+        |    CAST(CASE WHEN u_cnt < 64 THEN rho
+        |         ELSE (rho * est_union) // 64 END AS BIGINT) AS est_inter,
+        |    est_union AS eu FROM es)
+        |SELECT est_a, est_b, est_union, est_inter,
+        |  CAST((est_inter * 1000000) // greatest(eu, 1) AS BIGINT)
+        |    AS jaccard_ppm
+        |FROM f""".stripMargin),
 
     // H4: exact rank-sum AUC of the E46 scorer's margin predicting
     // English — ties by average rank, doubled into integer space
-    "q_auc" -> ((s, d) =>
+    QueryDef("q_auc", (s, d) =>
       ml.Evaluation.aucExact(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin AS s,
+        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+        |          CAST(SUM(lab) AS BIGINT) AS np
+        |        FROM sc GROUP BY s),
+        |rk AS (SELECT *, COALESCE(SUM(n) OVER (ORDER BY s
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+        |       FROM bys),
+        |ag AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
+        |         CAST(SUM(n - np) AS BIGINT) AS n_neg,
+        |         CAST(SUM(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
+        |       FROM rk)
+        |SELECT n_pos, n_neg,
+        |  CAST((sum_r2 - n_pos * (n_pos + 1)) * 500000
+        |    // (n_pos * n_neg) AS BIGINT) AS auc_ppm
+        |FROM ag""".stripMargin),
 
     // H10: Poisson-bootstrap uncertainty band for the H4 AUC —
     // deterministic md5-inverted Poisson(1) weights per (replicate,
     // doc), weighted tie-aware rank-sum per replicate, all integer
-    "q_auc_ci" -> ((s, d) =>
+    QueryDef("q_auc_ci", (s, d) =>
       ml.Evaluation.aucBootstrap(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      // H10 twin: same scored frame, 16 Poisson(1)-reweighted replicates
+      // (md5-inverted CDF, integer thresholds), weighted rank-sum each
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT d.doc_id, margin AS s,
+        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |ww AS (
+        |  SELECT q.r, q.s, q.lab,
+        |    CASE WHEN q.u < 1580030168 THEN 0 WHEN q.u < 3160060337 THEN 1
+        |         WHEN q.u < 3950075421 THEN 2 WHEN q.u < 4213413783 THEN 3
+        |         WHEN q.u < 4279248373 THEN 4 WHEN q.u < 4292415291 THEN 5
+        |         ELSE 6 END AS wgt
+        |  FROM (SELECT sc.doc_id, sc.s, sc.lab, r.r,
+        |          CAST(('0x'||substr(md5('boot:'||CAST(r.r AS VARCHAR)||':'||CAST(sc.doc_id AS VARCHAR)),1,8)) AS BIGINT) AS u
+        |        FROM sc CROSS JOIN range(0,16) r(r)) q),
+        |bys AS (
+        |  SELECT r, s,
+        |    CAST(SUM(CASE WHEN lab = 1 THEN wgt ELSE 0 END) AS BIGINT) AS wp,
+        |    CAST(SUM(CASE WHEN lab <> 1 THEN wgt ELSE 0 END) AS BIGINT) AS wn
+        |  FROM ww GROUP BY r, s),
+        |rk AS (
+        |  SELECT *, COALESCE(SUM(wn) OVER (PARTITION BY r ORDER BY s
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumn
+        |  FROM bys),
+        |ag AS (
+        |  SELECT r, CAST(SUM(wp) AS BIGINT) AS w_pos,
+        |    CAST(SUM(wn) AS BIGINT) AS w_neg,
+        |    CAST(SUM(wp * (2 * cumn + wn)) AS BIGINT) AS u2
+        |  FROM rk GROUP BY r)
+        |SELECT CAST(r AS BIGINT) AS r, w_pos, w_neg,
+        |  CAST(u2 * 500000 // greatest(w_pos * w_neg, 1) AS BIGINT) AS auc_ppm
+        |FROM ag ORDER BY r""".stripMargin),
 
     // H9: end-to-end fraud-scoring evaluation — the reference's actual
     // ML use case (score clients for fraud risk) closed into one
@@ -1603,50 +5494,198 @@ object SparkEntry {
     // membership, evaluated with the H4 exact rank-sum AUC. The
     // nondeterministic H1 LogisticRegression twin of this evaluation is
     // pinned in MlSpec (same shape, learned scores).
-    "q_fraud_auc" -> ((s, d) =>
-      ml.Evaluation.aucExact(fraudScoredFrame(s, d))),
+    QueryDef("q_fraud_auc", (s, d) =>
+      ml.Evaluation.aucExact(fraudScoredFrame(s, d)),
+      // H9 twin: the four rule bodies provide the labels (each body
+      // carries its own WITH scope; the outer clients CTE is shadowed
+      // inside them, deliberately identically)
+      oracle = s"""WITH $sqlClients,
+         |mart AS (
+         |  SELECT DISTINCT client_key FROM (
+         |    SELECT client_key FROM $fraudPassportBody
+         |    UNION ALL SELECT client_key FROM $fraudAccountBody
+         |    UNION ALL SELECT client_key FROM $fraudCityBody
+         |    UNION ALL SELECT client_key FROM $fraudAmountBody)),
+         |scored AS (
+         |  SELECT c.c_custkey,
+         |    (CASE WHEN DATE '2024-06-30' > c.passport_valid_to
+         |       THEN 400 ELSE 0 END
+         |     + CASE WHEN c.c_acctbal < 0 THEN 300 ELSE 0 END
+         |     + (c.c_custkey * 37) % 100) AS s,
+         |    CASE WHEN m.client_key IS NULL THEN 0 ELSE 1 END AS lab
+         |  FROM clients c LEFT JOIN mart m ON c.c_custkey = m.client_key),
+         |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+         |          CAST(SUM(lab) AS BIGINT) AS np
+         |        FROM scored GROUP BY s),
+         |rk AS (SELECT *, COALESCE(SUM(n) OVER (ORDER BY s
+         |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+         |       FROM bys),
+         |ag AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
+         |         CAST(SUM(n - np) AS BIGINT) AS n_neg,
+         |         CAST(SUM(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
+         |       FROM rk)
+         |SELECT n_pos, n_neg,
+         |  CAST((sum_r2 - n_pos * (n_pos + 1)) * 500000
+         |    // (n_pos * n_neg) AS BIGINT) AS auc_ppm
+         |FROM ag""".stripMargin),
 
     // H11: decile lift / cumulative-gains table of the SAME fraud
     // scorer — the campaign-targeting view (contact the top decile
     // first; how much fraud does each cumulative slice capture vs
     // random?). Ties share a bucket on the distinct-score contraction.
-    "q_lift" -> ((s, d) =>
-      ml.Evaluation.liftTable(fraudScoredFrame(s, d))),
+    QueryDef("q_lift", (s, d) =>
+      ml.Evaluation.liftTable(fraudScoredFrame(s, d)),
+      oracle = s"""WITH $sqlClients,
+         |mart AS (
+         |  SELECT DISTINCT client_key FROM (
+         |    SELECT client_key FROM $fraudPassportBody
+         |    UNION ALL SELECT client_key FROM $fraudAccountBody
+         |    UNION ALL SELECT client_key FROM $fraudCityBody
+         |    UNION ALL SELECT client_key FROM $fraudAmountBody)),
+         |scored AS (
+         |  SELECT c.c_custkey,
+         |    (CASE WHEN DATE '2024-06-30' > c.passport_valid_to
+         |       THEN 400 ELSE 0 END
+         |     + CASE WHEN c.c_acctbal < 0 THEN 300 ELSE 0 END
+         |     + (c.c_custkey * 37) % 100) AS s,
+         |    CASE WHEN m.client_key IS NULL THEN 0 ELSE 1 END AS lab
+         |  FROM clients c LEFT JOIN mart m ON c.c_custkey = m.client_key),
+         |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+         |          CAST(SUM(lab) AS BIGINT) AS np
+         |        FROM scored GROUP BY s),
+         |rk AS (SELECT *,
+         |         COALESCE(SUM(n) OVER (ORDER BY s DESC
+         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |           AS cum_lt,
+         |         SUM(n) OVER () AS ntot, SUM(np) OVER () AS ptot
+         |       FROM bys),
+         |bk AS (SELECT LEAST(9, 10 * cum_lt // ntot) + 1 AS bucket,
+         |         n, np, ntot, ptot
+         |       FROM rk),
+         |ag AS (SELECT bucket, CAST(SUM(n) AS BIGINT) AS n,
+         |         CAST(SUM(np) AS BIGINT) AS n_pos,
+         |         MAX(ntot) AS ntot, MAX(ptot) AS ptot
+         |       FROM bk GROUP BY bucket),
+         |cu AS (SELECT *,
+         |         SUM(n) OVER (ORDER BY bucket
+         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_n,
+         |         SUM(n_pos) OVER (ORDER BY bucket
+         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_pos
+         |       FROM ag)
+         |SELECT CAST(bucket AS BIGINT) AS bucket, n, n_pos,
+         |  CAST(cum_n AS BIGINT) AS cum_n,
+         |  CAST(cum_pos AS BIGINT) AS cum_pos,
+         |  CAST(cum_pos * 1000000 // ptot AS BIGINT) AS gain_ppm,
+         |  CAST(CAST(cum_pos AS HUGEINT) * ntot * 1000000
+         |    // (CAST(cum_n AS HUGEINT) * ptot) AS BIGINT)
+         |    AS lift_ppm
+         |FROM cu ORDER BY bucket""".stripMargin),
 
     // H5: calibration curve of the same scorer, fixed-width margin bins
-    "q_calibration" -> ((s, d) =>
+    QueryDef("q_calibration", (s, d) =>
       ml.Evaluation.calibration(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id))
+        |SELECT
+        |  CAST(((margin + 1000000000) // 500) * 500 - 1000000000 AS BIGINT)
+        |    AS bin,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(SUM(lab) AS BIGINT) AS n_pos,
+        |  CAST(SUM(margin) AS BIGINT) AS sum_score,
+        |  CAST((SUM(lab) * 1000000) // count(*) AS BIGINT) AS pos_rate_ppm
+        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // ---- B24: inferred-member placeholders for late-arriving dims
     // (dim rows with key%97==0 withheld in BOTH engines to simulate
     // the straggler load; the op re-infers them from pending facts)
-    "q_inferred" -> ((s, d) =>
+    QueryDef("q_inferred", (s, d) =>
       etl.DataQuality.inferredMembers(
         Tables.orders(s, d).select(col("o_custkey"), col("o_orderdate")),
         "o_custkey",
         Tables.customer(s, d).filter(col("c_custkey") % 97 =!= 0),
-        "c_custkey", "o_orderdate")),
+        "c_custkey", "o_orderdate"),
+      // B24: anti join on the key-domain contraction; %97 dims withheld
+      // in both engines
+      oracle = """WITH f AS (
+        |  SELECT o_custkey AS inferred_key, o_orderdate AS ts FROM orders
+        |  WHERE o_custkey IS NOT NULL),
+        |agg AS (
+        |  SELECT inferred_key, CAST(count(*) AS BIGINT) AS n_pending_facts,
+        |    min(ts) AS first_seen, max(ts) AS last_seen
+        |  FROM f GROUP BY 1),
+        |dim AS (SELECT DISTINCT c_custkey FROM customer
+        |  WHERE c_custkey % 97 != 0)
+        |SELECT a.inferred_key, n_pending_facts, first_seen, last_seen,
+        |  CAST(1 AS BIGINT) AS inferred_flg
+        |FROM agg a LEFT JOIN dim d ON d.c_custkey = a.inferred_key
+        |WHERE d.c_custkey IS NULL
+        |ORDER BY inferred_key""".stripMargin),
 
     // H15: exact average precision (the PR-curve scalar) on the same
     // scored frame as q_auc — the rare-positive ranking verdict
-    "q_ap" -> ((s, d) =>
+    QueryDef("q_ap", (s, d) =>
       ml.Evaluation.averagePrecision(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      // H15: tie groups contribute their positive mass at the group's
+      // own precision; per-level ppm floors identical both engines
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin AS s,
+        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(lab) AS BIGINT) AS np
+        |  FROM sc GROUP BY 1),
+        |cw AS (SELECT *,
+        |    CAST(sum(np) OVER (ORDER BY s DESC ROWS UNBOUNDED PRECEDING)
+        |      AS BIGINT) AS cum_tp,
+        |    CAST(sum(n) OVER (ORDER BY s DESC ROWS UNBOUNDED PRECEDING)
+        |      AS BIGINT) AS cum_n
+        |  FROM bys),
+        |pp AS (SELECT *, 1000000 * cum_tp // cum_n AS prec_ppm FROM cw)
+        |SELECT CAST(sum(np) AS BIGINT) AS n_pos,
+        |  CAST(sum(n - np) AS BIGINT) AS n_neg,
+        |  CAST(sum(np * prec_ppm) // sum(np) AS BIGINT) AS ap_ppm,
+        |  CAST(1000000 * sum(np) // (sum(np) + sum(n - np)) AS BIGINT)
+        |    AS prevalence_ppm
+        |FROM pp""".stripMargin),
 
     // H14: McNemar's paired test — hashed scorer (margin>0) vs the
     // E7 lexicon lang-id, judged on the discordant rows only
-    "q_mcnemar" -> ((s, d) => {
+    QueryDef("q_mcnemar", (s, d) => {
       val docs = Tables.documents(s, d)
       val a = ops.TextAnalysis.hashedLinearScore(docs)
         .select(col("doc_id"),
@@ -1658,118 +5697,634 @@ object SparkEntry {
         when(col("lang") === "en", 1L).otherwise(0L).as("label"))
       ml.Evaluation.mcnemar(
         a.join(b, Seq("doc_id")).join(lab, Seq("doc_id")))
+    },
+      // H14: discordant-cell chi-square, no continuity correction
+      // (pinned); one double division of exact integers (D71 discipline)
+      oracle = {
+      val lex = Map(
+        "de" -> "['join','merge','sort','order']",
+        "en" -> "['the','a','of','key']",
+        "es" -> "['data','row','table','column']",
+        "fr" -> "['query','filter','group','window']",
+        "zh" -> "['spark','stream','batch','vector']")
+      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
+        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
+        .mkString(",\n    ")
+      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
+        s"WHEN score_$c = g THEN '$c'").mkString(" ")
+      s"""WITH toks AS (
+         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+         |  FROM documents),
+         |f AS (
+         |  SELECT doc_id,
+         |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+         |  FROM toks),
+         |m AS (
+         |  SELECT doc_id,
+         |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+         |  FROM f GROUP BY doc_id),
+         |t2 AS (SELECT doc_id, lang, string_split(text,' ') AS toks2
+         |  FROM documents),
+         |s2 AS (SELECT doc_id, lang,
+         |    $scores
+         |  FROM t2),
+         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
+         |    score_fr, score_zh) AS g FROM s2),
+         |p AS (SELECT doc_id, lang,
+         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
+         |j AS (
+         |  SELECT CASE WHEN m.margin > 0 THEN 1 ELSE 0 END AS pred_a,
+         |    CASE WHEN p.pred_lang = 'en' THEN 1 ELSE 0 END AS pred_b,
+         |    CASE WHEN p.lang = 'en' THEN 1 ELSE 0 END AS label
+         |  FROM m JOIN p USING (doc_id)),
+         |cells AS (
+         |  SELECT CAST(count(*) AS BIGINT) AS n,
+         |    CAST(sum(CASE WHEN pred_a = label THEN 1 ELSE 0 END)
+         |      AS BIGINT) AS n_a_right,
+         |    CAST(sum(CASE WHEN pred_b = label THEN 1 ELSE 0 END)
+         |      AS BIGINT) AS n_b_right,
+         |    CAST(sum(CASE WHEN pred_a = label AND pred_b != label
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS b_cell,
+         |    CAST(sum(CASE WHEN pred_a != label AND pred_b = label
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS c_cell
+         |  FROM j)
+         |SELECT n, n_a_right, n_b_right,
+         |  CAST(1000000 * n_a_right // n AS BIGINT) AS acc_a_ppm,
+         |  CAST(1000000 * n_b_right // n AS BIGINT) AS acc_b_ppm,
+         |  b_cell, c_cell,
+         |  CASE WHEN b_cell + c_cell = 0 THEN 0.0
+         |    ELSE CAST((b_cell - c_cell) * (b_cell - c_cell) AS DOUBLE)
+         |      / CAST(b_cell + c_cell AS DOUBLE) END AS chi2
+         |FROM cells""".stripMargin
     }),
 
     // H13: Kendall tau-b between the binned margin and binned doc
     // length — the is-the-scorer-just-a-ruler confound check
-    "q_kendall" -> ((s, d) =>
+    QueryDef("q_kendall", (s, d) =>
       ml.Evaluation.kendallTauB(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             col("n_chars")), Seq("doc_id"))
           .select(expr("(margin + 1000000000) div 500").as("va"),
-            expr("n_chars div 200").as("vb")))),
+            expr("n_chars div 200").as("vb"))),
+      // H13: cell-contracted Kendall tau-b; one orientation per
+      // unordered cell pair; sqrt is IEEE-correctly-rounded both engines
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
+        |  FROM m JOIN documents d USING (doc_id)),
+        |cells AS (SELECT va AS i, vb AS j, CAST(count(*) AS BIGINT) AS n
+        |  FROM sc GROUP BY 1, 2),
+        |conc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
+        |    AS c_pairs
+        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j > a.j),
+        |disc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
+        |    AS d_pairs
+        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j < a.j),
+        |ma AS (SELECT CAST(sum(t) AS BIGINT) AS ntot,
+        |    CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_a
+        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY i)),
+        |mb AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_b
+        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY j))
+        |SELECT ntot AS n, c_pairs, d_pairs,
+        |  ntot * (ntot - 1) // 2 AS n0, ties_a, ties_b,
+        |  CASE WHEN ntot * (ntot - 1) // 2 = ties_a
+        |         OR ntot * (ntot - 1) // 2 = ties_b THEN 0.0
+        |  ELSE CAST(c_pairs - d_pairs AS DOUBLE)
+        |    / sqrt(CAST(ntot * (ntot - 1) // 2 - ties_a AS DOUBLE)
+        |         * CAST(ntot * (ntot - 1) // 2 - ties_b AS DOUBLE))
+        |  END AS tau_b
+        |FROM conc, disc, ma, mb""".stripMargin),
 
     // H23: gamma + both Somers' D directions off H13's concordance
     // contraction — one cell pass, three coefficient families
-    "q_rank_assoc" -> ((s, d) =>
+    QueryDef("q_rank_assoc", (s, d) =>
       ml.Evaluation.rankAssociation(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             col("n_chars")), Seq("doc_id"))
           .select(expr("(margin + 1000000000) div 500").as("va"),
-            expr("n_chars div 200").as("vb")))),
+            expr("n_chars div 200").as("vb"))),
+      // rank-association twin: the q_kendall CTEs with the gamma /
+      // Somers' D ratios instead of τ-b's geometric-mean denominator
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
+        |  FROM m JOIN documents d USING (doc_id)),
+        |cells AS (SELECT va AS i, vb AS j, CAST(count(*) AS BIGINT) AS n
+        |  FROM sc GROUP BY 1, 2),
+        |conc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
+        |    AS c_pairs
+        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j > a.j),
+        |disc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
+        |    AS d_pairs
+        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j < a.j),
+        |ma AS (SELECT CAST(sum(t) AS BIGINT) AS ntot,
+        |    CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_a
+        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY i)),
+        |mb AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_b
+        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY j))
+        |SELECT ntot AS n, c_pairs, d_pairs,
+        |  ntot * (ntot - 1) // 2 AS n0, ties_a, ties_b,
+        |  CASE WHEN c_pairs + d_pairs = 0 THEN 0.0
+        |    ELSE CAST(c_pairs - d_pairs AS DOUBLE)
+        |      / CAST(c_pairs + d_pairs AS DOUBLE) END AS gamma,
+        |  CASE WHEN ntot * (ntot - 1) // 2 = ties_a THEN 0.0
+        |    ELSE CAST(c_pairs - d_pairs AS DOUBLE)
+        |      / CAST(ntot * (ntot - 1) // 2 - ties_a AS DOUBLE) END
+        |    AS somers_d_ba,
+        |  CASE WHEN ntot * (ntot - 1) // 2 = ties_b THEN 0.0
+        |    ELSE CAST(c_pairs - d_pairs AS DOUBLE)
+        |      / CAST(ntot * (ntot - 1) // 2 - ties_b AS DOUBLE) END
+        |    AS somers_d_ab
+        |FROM conc, disc, ma, mb""".stripMargin),
 
     // H12: Murphy decomposition of the Brier score on the same frame —
     // reliability vs resolution vs base-rate uncertainty, one-row verdict
-    "q_brier" -> ((s, d) =>
+    QueryDef("q_brier", (s, d) =>
       ml.Evaluation.brierDecomposition(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      // H12: Murphy decomposition — clamped-linear link (slope 25) to
+      // ppm, 50000-ppm forecast bins at midpoints, all terms e-12 with
+      // the floor-rounding identity gap emitted as a self-check
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |bb AS (
+        |  SELECT (least(999999, greatest(0, 500000 + margin * 25))
+        |      // 50000) * 50000 + 25000 AS phat,
+        |    CAST(count(*) AS BIGINT) AS n_k,
+        |    CAST(sum(lab) AS BIGINT) AS np_k
+        |  FROM sc GROUP BY 1),
+        |tt AS (
+        |  SELECT phat, n_k, np_k,
+        |    CAST(sum(n_k) OVER () AS BIGINT) AS nn,
+        |    CAST(sum(np_k) OVER () AS BIGINT) AS pp
+        |  FROM bb),
+        |ob AS (
+        |  SELECT *, 1000000 * pp // nn AS obar,
+        |    1000000 * np_k // n_k AS obark
+        |  FROM tt),
+        |ag AS (
+        |  SELECT max(nn) AS n, max(pp) AS n_pos, max(obar) AS obar_ppm,
+        |    sum(CAST(np_k AS HUGEINT) * (phat - 1000000) * (phat - 1000000)
+        |      + CAST(n_k - np_k AS HUGEINT) * phat * phat) AS bsum,
+        |    sum(CAST(n_k AS HUGEINT) * (phat - obark) * (phat - obark))
+        |      AS rsum,
+        |    sum(CAST(n_k AS HUGEINT) * (obark - obar) * (obark - obar))
+        |      AS ssum
+        |  FROM ob)
+        |SELECT n, n_pos, obar_ppm,
+        |  CAST(bsum // n AS BIGINT) AS brier_e12,
+        |  CAST(rsum // n AS BIGINT) AS reliability_e12,
+        |  CAST(ssum // n AS BIGINT) AS resolution_e12,
+        |  obar_ppm * (1000000 - obar_ppm) AS uncertainty_e12,
+        |  CAST(bsum // n AS BIGINT) - (CAST(rsum // n AS BIGINT)
+        |    - CAST(ssum // n AS BIGINT)
+        |    + obar_ppm * (1000000 - obar_ppm)) AS identity_gap_e12
+        |FROM ag""".stripMargin),
 
     // B25: header-vs-detail money reconciliation as a delta
     // distribution — matched mass, mismatch octaves, both orphans
-    "q_recon" -> ((s, d) =>
+    QueryDef("q_recon", (s, d) =>
       etl.DataQuality.reconcileMoney(Tables.orders(s, d),
-        Tables.lineitem(s, d))),
+        Tables.lineitem(s, d)),
+      // B25: full outer header⋈detail-sums on the key domain, exact
+      // cpp money, octave buckets for the mismatch mass
+      oracle = """WITH items AS (
+        |  SELECT l_orderkey AS k,
+        |    CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
+        |      * (100 - CAST(round(l_discount*100) AS BIGINT))
+        |      * (100 + CAST(round(l_tax*100) AS BIGINT))) AS BIGINT)
+        |      AS items_cpp
+        |  FROM lineitem GROUP BY 1),
+        |heads AS (SELECT o_orderkey AS k,
+        |    CAST(round(o_totalprice*100) AS BIGINT) * 10000 AS head_cpp
+        |  FROM orders),
+        |j AS (
+        |  SELECT CASE WHEN i.items_cpp IS NULL THEN 'orphan_order'
+        |              WHEN h.head_cpp IS NULL THEN 'orphan_item'
+        |              WHEN h.head_cpp = i.items_cpp THEN 'matched'
+        |              ELSE 'delta' END AS status,
+        |    coalesce(h.head_cpp, 0) - coalesce(i.items_cpp, 0) AS delta
+        |  FROM heads h FULL OUTER JOIN items i ON h.k = i.k),
+        |b AS (
+        |  SELECT status,
+        |    CAST(CASE WHEN status = 'delta'
+        |      THEN length(to_base(abs(delta), 2)) ELSE 0 END AS BIGINT)
+        |      AS delta_bits,
+        |    delta
+        |  FROM j)
+        |SELECT status, delta_bits, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(delta AS HUGEINT)) AS BIGINT) AS net_delta_cpp,
+        |  CAST(sum(CAST(abs(delta) AS HUGEINT)) AS BIGINT)
+        |    AS abs_delta_cpp
+        |FROM b GROUP BY 1, 2 ORDER BY status, delta_bits""".stripMargin),
 
     // H21: per-source AUC of the hashed scorer — the subgroup audit;
     // single-class slices pin to 500000, never fail
-    "q_auc_slices" -> ((s, d) =>
+    QueryDef("q_auc_slices", (s, d) =>
       ml.Evaluation.sliceAuc(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"), col("source"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        slice = "source", score = "margin", label = "is_en")),
+        slice = "source", score = "margin", label = "is_en"),
+      // H21: H4's rank-sum per slice; degenerate slices pinned 500000
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT d.source AS slice, m.margin AS s,
+        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |cells AS (SELECT slice, s, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(lab) AS BIGINT) AS np
+        |  FROM sc GROUP BY 1, 2),
+        |cum AS (SELECT *,
+        |    CAST(coalesce(sum(n) OVER (PARTITION BY slice ORDER BY s
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS cum
+        |  FROM cells),
+        |ag AS (SELECT slice, CAST(sum(np) AS BIGINT) AS n_pos,
+        |    CAST(sum(n - np) AS BIGINT) AS n_neg,
+        |    CAST(sum(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
+        |  FROM cum GROUP BY 1)
+        |SELECT slice, n_pos, n_neg,
+        |  CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN 500000
+        |    ELSE (sum_r2 - n_pos * (n_pos + 1)) * 500000
+        |      // (n_pos * n_neg) END AS BIGINT) AS auc_ppm
+        |FROM ag ORDER BY slice""".stripMargin),
 
     // H20: Harrell's C — does order value predict ship speed, judged
     // only on pairs whose outcome order survives the D67 censoring
-    "q_cindex" -> ((s, d) =>
+    QueryDef("q_cindex", (s, d) =>
       ml.Evaluation.concordanceIndex(
         ops.Survival.shipLagScored(Tables.orders(s, d),
-          Tables.lineitem(s, d)))),
+          Tables.lineitem(s, d))),
+      // H20: pair masses off the completed t×sbin grid; admissibility
+      // pinned (event drives; same-t censored comparable; event-event
+      // same-t not); ties half-credit via 500000*(2c+t)
+      oracle = """WITH j AS (
+        |  SELECT epoch_us(l.l_shipdate) // 86400000000 AS ship_day,
+        |    epoch_us(o.o_orderdate) // 86400000000 AS order_day,
+        |    CAST(round(o.o_totalprice * 100) AS BIGINT) // 5000000
+        |      AS sbin
+        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+        |cut AS (SELECT max(ship_day) - 30 AS cutoff FROM j),
+        |obs AS (
+        |  SELECT CASE WHEN ship_day <= cutoff THEN 1 ELSE 0 END AS e,
+        |    CASE WHEN ship_day <= cutoff THEN ship_day - order_day
+        |         ELSE cutoff - order_day END AS t, sbin
+        |  FROM j CROSS JOIN cut WHERE order_day <= cutoff),
+        |cells AS (SELECT t, sbin AS s, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(e) AS BIGINT) AS ne FROM obs GROUP BY 1, 2),
+        |grid AS (
+        |  SELECT td.t, sd.s, coalesce(c.n, 0) AS n,
+        |    coalesce(c.ne, 0) AS ne
+        |  FROM (SELECT DISTINCT t FROM cells) td
+        |  CROSS JOIN (SELECT DISTINCT s FROM cells) sd
+        |  LEFT JOIN cells c USING (t, s)),
+        |g AS (
+        |  SELECT t, s, n, ne,
+        |    CAST(sum(n) OVER (PARTITION BY s)
+        |      - sum(n) OVER (PARTITION BY s ORDER BY t
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS later,
+        |    n - ne AS cens
+        |  FROM grid),
+        |g2 AS (
+        |  SELECT *,
+        |    CAST(coalesce(sum(later) OVER (PARTITION BY t ORDER BY s
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS later_lt,
+        |    CAST(coalesce(sum(later) OVER (PARTITION BY t ORDER BY s DESC
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS later_gt,
+        |    CAST(coalesce(sum(cens) OVER (PARTITION BY t ORDER BY s
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS cens_lt,
+        |    CAST(coalesce(sum(cens) OVER (PARTITION BY t ORDER BY s DESC
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS cens_gt
+        |  FROM g),
+        |ag AS (
+        |  SELECT CAST(sum(ne * (later_lt + cens_lt)) AS BIGINT) AS conc,
+        |    CAST(sum(ne * (later_gt + cens_gt)) AS BIGINT) AS disc,
+        |    CAST(sum(ne * (later + cens)) AS BIGINT) AS tied
+        |  FROM g2 WHERE ne > 0)
+        |SELECT conc, disc, tied, conc + disc + tied AS comparable,
+        |  CAST(CASE WHEN conc + disc + tied = 0 THEN 500000
+        |    ELSE 500000 * CAST(2 * conc + tied AS HUGEINT)
+        |      // (conc + disc + tied) END AS BIGINT) AS c_ppm
+        |FROM ag""".stripMargin),
 
     // H19: the lang-id's error anatomy — which languages bleed into
     // which, with exact row (recall) and column (precision) shares
-    "q_confusion" -> ((s, d) =>
+    QueryDef("q_confusion", (s, d) =>
       ml.Evaluation.confusionMatrix(
         ops.TextAnalysis.langId(Tables.documents(s, d)),
-        truth = "lang", pred = "pred_lang")),
+        truth = "lang", pred = "pred_lang"),
+      // H19: observed (truth, pred) cells with exact row/col shares
+      oracle = {
+      val lex = Map(
+        "de" -> "['join','merge','sort','order']",
+        "en" -> "['the','a','of','key']",
+        "es" -> "['data','row','table','column']",
+        "fr" -> "['query','filter','group','window']",
+        "zh" -> "['spark','stream','batch','vector']")
+      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
+        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
+        .mkString(",\n    ")
+      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
+        s"WHEN score_$c = g THEN '$c'").mkString(" ")
+      s"""WITH t2 AS (SELECT doc_id, lang, string_split(text,' ') AS toks2
+         |  FROM documents),
+         |s2 AS (SELECT doc_id, lang,
+         |    $scores
+         |  FROM t2),
+         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
+         |    score_fr, score_zh) AS g FROM s2),
+         |p AS (SELECT doc_id, lang,
+         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
+         |cells AS (SELECT lang AS truth, pred_lang AS pred,
+         |    CAST(count(*) AS BIGINT) AS n
+         |  FROM p GROUP BY 1, 2),
+         |m AS (SELECT truth, pred, n,
+         |    CAST(sum(n) OVER (PARTITION BY truth) AS BIGINT) AS row_n,
+         |    CAST(sum(n) OVER (PARTITION BY pred) AS BIGINT) AS col_n
+         |  FROM cells)
+         |SELECT truth, pred, n, row_n, col_n,
+         |  CAST(1000000 * n // row_n AS BIGINT) AS row_share_ppm,
+         |  CAST(1000000 * n // col_n AS BIGINT) AS col_share_ppm
+         |FROM m ORDER BY truth, pred""".stripMargin
+    }),
 
     // E67: within-source stability — TV between interleaved doc-id
     // halves; a drifting source is two populations under one label
-    "q_tv_snapshots" -> ((s, d) =>
-      ops.CorpusStats.snapshotTvDrift(Tables.documents(s, d))),
+    QueryDef("q_tv_snapshots", (s, d) =>
+      ops.CorpusStats.snapshotTvDrift(Tables.documents(s, d)),
+      // E67: Σmin TV between the doc_id-parity halves, no self-join
+      oracle = """WITH toks AS (
+        |  SELECT source, doc_id % 2 AS snap,
+        |    unnest(string_split(text, ' ')) AS w
+        |  FROM documents),
+        |counts AS (
+        |  SELECT source, w,
+        |    CAST(sum(CASE WHEN snap = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS f0,
+        |    CAST(sum(CASE WHEN snap = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS f1
+        |  FROM toks WHERE len(w) > 0 GROUP BY 1, 2),
+        |tt AS (
+        |  SELECT source, f0, f1,
+        |    CAST(sum(f0) OVER (PARTITION BY source) AS BIGINT) AS t0,
+        |    CAST(sum(f1) OVER (PARTITION BY source) AS BIGINT) AS t1
+        |  FROM counts),
+        |ag AS (
+        |  SELECT source, max(t0) AS t0, max(t1) AS t1,
+        |    sum(least(CAST(f0 AS HUGEINT) * t1, CAST(f1 AS HUGEINT) * t0))
+        |      AS smin
+        |  FROM tt GROUP BY 1)
+        |SELECT source, t0, t1,
+        |  CAST(CASE WHEN t0 = 0 OR t1 = 0 THEN 1000000
+        |    ELSE 1000000 * (CAST(t0 AS HUGEINT) * t1 - smin)
+        |      // (CAST(t0 AS HUGEINT) * t1) END AS BIGINT) AS tv_ppm
+        |FROM ag ORDER BY source""".stripMargin),
 
     // E68: chars/BPE per token by (lang, source) — the tokenizer
     // budget mart; fertility outliers are encoding junk
-    "q_fertility" -> ((s, d) =>
-      ops.CorpusStats.tokenizerFertility(Tables.documents(s, d))),
+    QueryDef("q_fertility", (s, d) =>
+      ops.CorpusStats.tokenizerFertility(Tables.documents(s, d)),
+      // E68: length-arithmetic token counts (E9's definitions), ppm
+      oracle = """WITH d AS (
+        |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(length(text)) AS BIGINT) AS n_chars,
+        |    CAST(sum(len(list_filter(string_split(text, ' '),
+        |      w -> len(w) > 0))) AS BIGINT) AS n_tokens,
+        |    CAST(sum((length(text) + 3) // 4) AS BIGINT) AS n_bpe
+        |  FROM documents GROUP BY 1, 2)
+        |SELECT lang, source, n_docs, n_chars, n_tokens, n_bpe,
+        |  CAST(CASE WHEN n_tokens = 0 THEN 0
+        |    ELSE 1000000 * n_chars // n_tokens END AS BIGINT)
+        |    AS chars_per_tok_ppm,
+        |  CAST(CASE WHEN n_tokens = 0 THEN 0
+        |    ELSE 1000000 * n_bpe // n_tokens END AS BIGINT)
+        |    AS bpe_per_tok_ppm
+        |FROM d ORDER BY lang, source""".stripMargin),
 
     // D84: doubling histogram of per-user inter-arrival gaps — the
     // burst micro-structure beside D82's daily Fano verdict
-    "q_interarrival" -> ((s, d) =>
-      ops.Analytics.interArrivalProfile(Tables.events(s, d))),
+    QueryDef("q_interarrival", (s, d) =>
+      ops.Analytics.interArrivalProfile(Tables.events(s, d)),
+      // D84: (ts, event_id)-ordered lag gaps, octave buckets via
+      // to_base bit length, shares over the per-type octave frame
+      oracle = """WITH e AS (
+        |  SELECT event_type, user_id, epoch_us(ts) AS ts_us, event_id
+        |  FROM events),
+        |g AS (
+        |  SELECT event_type,
+        |    (ts_us - lag(ts_us) OVER (PARTITION BY event_type, user_id
+        |      ORDER BY ts_us, event_id)) // 1000000 AS gap_s
+        |  FROM e),
+        |h AS (
+        |  SELECT event_type,
+        |    CAST(length(to_base(gap_s + 1, 2)) AS BIGINT) AS gap_bits,
+        |    CAST(count(*) AS BIGINT) AS n_gaps,
+        |    CAST(min(gap_s) AS BIGINT) AS min_gap_s,
+        |    CAST(max(gap_s) AS BIGINT) AS max_gap_s
+        |  FROM g WHERE gap_s IS NOT NULL GROUP BY 1, 2)
+        |SELECT event_type, gap_bits, n_gaps, min_gap_s, max_gap_s,
+        |  CAST(1000000 * n_gaps // sum(n_gaps)
+        |    OVER (PARTITION BY event_type) AS BIGINT) AS share_ppm
+        |FROM h ORDER BY event_type, gap_bits""".stripMargin),
 
     // D85: exact p25..p99 ladder of quantity cents per return flag
-    "q_quantiles" -> ((s, d) =>
+    QueryDef("q_quantiles", (s, d) =>
       ops.Analytics.quantileLadder(
         Tables.lineitem(s, d).select(col("l_returnflag"),
           expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents")),
-        group = "l_returnflag", value = "qty_cents")),
+        group = "l_returnflag", value = "qty_cents"),
+      // D85: lower quantiles off the cumulative histogram, rank
+      // ceil(p*n/100), bucket picked by its cumulative range
+      oracle = """WITH h AS (
+        |  SELECT l_returnflag AS grp,
+        |    CAST(round(l_quantity * 100) AS BIGINT) AS x,
+        |    CAST(count(*) AS BIGINT) AS c
+        |  FROM lineitem GROUP BY 1, 2),
+        |cum AS (
+        |  SELECT grp, x, c,
+        |    CAST(sum(c) OVER (PARTITION BY grp ORDER BY x
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cum,
+        |    CAST(sum(c) OVER (PARTITION BY grp) AS BIGINT) AS n
+        |  FROM h),
+        |l AS (
+        |  SELECT grp, x, c, cum, n,
+        |    CAST(unnest([25, 50, 75, 90, 99]) AS BIGINT) AS p
+        |  FROM cum),
+        |r AS (SELECT *, (p * n + 99) // 100 AS rk FROM l)
+        |SELECT grp, p, n, x AS q_value
+        |FROM r WHERE cum >= rk AND cum - c < rk
+        |ORDER BY grp, p""".stripMargin),
 
     // B26: per-type arrival lag behind the corpus frontier — the
     // is-the-feed-alive SLA check; D70 audits past gaps, this the open one
-    "q_freshness" -> ((s, d) =>
-      ops.Analytics.freshness(Tables.events(s, d))),
+    QueryDef("q_freshness", (s, d) =>
+      ops.Analytics.freshness(Tables.events(s, d)),
+      // B26: frontier lag per type, stale flag at the pinned budget
+      oracle = """WITH per AS (
+        |  SELECT event_type,
+        |    CAST(min(epoch_us(ts)) AS BIGINT) AS first_ts_us,
+        |    CAST(max(epoch_us(ts)) AS BIGINT) AS last_ts_us,
+        |    CAST(count(*) AS BIGINT) AS n_rows
+        |  FROM events GROUP BY 1),
+        |f AS (SELECT max(last_ts_us) AS frontier FROM per)
+        |SELECT event_type, n_rows, first_ts_us, last_ts_us,
+        |  (frontier - last_ts_us) // 1000000 AS lag_s,
+        |  CAST(CASE WHEN (frontier - last_ts_us) // 1000000 > 86400
+        |    THEN 1 ELSE 0 END AS BIGINT) AS stale_flg
+        |FROM per CROSS JOIN f ORDER BY event_type""".stripMargin),
 
     // D86: week-over-week movers — sign-split exact ppm change per
     // (type, epoch week), dead weeks zero-completed, 0->n pinned
-    "q_movers" -> ((s, d) =>
-      ops.Analytics.weeklyMovers(Tables.events(s, d))),
+    QueryDef("q_movers", (s, d) =>
+      ops.Analytics.weeklyMovers(Tables.events(s, d)),
+      // D86: epoch-week grid, lag deltas sign-split, 0-baseline pinned
+      oracle = """WITH weekly0 AS (
+        |  SELECT event_type, epoch_us(ts) // 604800000000 AS week,
+        |    CAST(count(*) AS BIGINT) AS n
+        |  FROM events GROUP BY 1, 2),
+        |span AS (SELECT event_type, min(week) AS w0, max(week) AS w1
+        |  FROM weekly0 GROUP BY 1),
+        |grid AS (SELECT event_type, unnest(range(w0, w1 + 1)) AS week
+        |  FROM span),
+        |weekly AS (SELECT g.event_type, g.week, coalesce(d.n, 0) AS n
+        |  FROM grid g LEFT JOIN weekly0 d USING (event_type, week)),
+        |lg AS (
+        |  SELECT event_type, week, n,
+        |    lag(n) OVER (PARTITION BY event_type ORDER BY week) AS prev_n
+        |  FROM weekly)
+        |SELECT event_type, CAST(week AS BIGINT) AS week, n,
+        |  CAST(prev_n AS BIGINT) AS prev_n,
+        |  CAST(CASE WHEN prev_n = 0 THEN 1000000
+        |    WHEN n >= prev_n THEN 1000000 * (n - prev_n) // prev_n
+        |    ELSE -(1000000 * (prev_n - n) // prev_n) END AS BIGINT)
+        |    AS delta_ppm
+        |FROM lg WHERE prev_n IS NOT NULL
+        |ORDER BY event_type, week""".stripMargin),
 
     // H22: Spearman rho on the same bins as q_kendall — the linear-
     // cost monotone-association companion to tau-b
-    "q_spearman" -> ((s, d) =>
+    QueryDef("q_spearman", (s, d) =>
       ml.Evaluation.spearmanRho(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             col("n_chars")), Seq("doc_id"))
           .select(expr("(margin + 1000000000) div 500").as("va"),
-            expr("n_chars div 200").as("vb")))),
+            expr("n_chars div 200").as("vb"))),
+      // H22: doubled midranks off the marginal histograms; rho is the
+      // one IEEE step over exact HUGEINT moments in pinned order
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
+        |  FROM m JOIN documents d USING (doc_id)),
+        |cells AS (SELECT va, vb, CAST(count(*) AS BIGINT) AS n
+        |  FROM sc GROUP BY 1, 2),
+        |ra AS (
+        |  SELECT v AS va, 2 * cum + t + 1 AS ra2 FROM (
+        |    SELECT va AS v, CAST(sum(n) AS BIGINT) AS t,
+        |      CAST(coalesce(sum(sum(n)) OVER (ORDER BY va
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |        AS BIGINT) AS cum
+        |    FROM cells GROUP BY va)),
+        |rb AS (
+        |  SELECT v AS vb, 2 * cum + t + 1 AS rb2 FROM (
+        |    SELECT vb AS v, CAST(sum(n) AS BIGINT) AS t,
+        |      CAST(coalesce(sum(sum(n)) OVER (ORDER BY vb
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |        AS BIGINT) AS cum
+        |    FROM cells GROUP BY vb)),
+        |mo AS (
+        |  SELECT CAST(sum(n) AS BIGINT) AS nn,
+        |    sum(CAST(n AS HUGEINT) * ra2) AS sa,
+        |    sum(CAST(n AS HUGEINT) * rb2) AS sb,
+        |    sum(CAST(n AS HUGEINT) * ra2 * ra2) AS saa,
+        |    sum(CAST(n AS HUGEINT) * rb2 * rb2) AS sbb,
+        |    sum(CAST(n AS HUGEINT) * ra2 * rb2) AS sab
+        |  FROM cells JOIN ra USING (va) JOIN rb USING (vb)),
+        |fin AS (
+        |  SELECT nn, nn * sab - sa * sb AS num,
+        |    nn * saa - sa * sa AS sxx, nn * sbb - sb * sb AS syy
+        |  FROM mo)
+        |SELECT nn AS n,
+        |  CASE WHEN sxx = 0 OR syy = 0 THEN 0.0
+        |    ELSE CAST(num AS DOUBLE)
+        |      / sqrt(CAST(sxx AS DOUBLE) * CAST(syy AS DOUBLE))
+        |  END AS rho
+        |FROM fin""".stripMargin),
 
     // H16: Cohen's kappa between the same two raters q_mcnemar pits
     // against the label — here judged against EACH OTHER, no label
-    "q_kappa" -> ((s, d) => {
+    QueryDef("q_kappa", (s, d) => {
       val docs = Tables.documents(s, d)
       val a = ops.TextAnalysis.hashedLinearScore(docs)
         .select(col("doc_id"),
@@ -1778,39 +6333,183 @@ object SparkEntry {
         .select(col("doc_id"),
           when(col("pred_lang") === "en", 1L).otherwise(0L).as("pred_b"))
       ml.Evaluation.cohenKappa(a.join(b, Seq("doc_id")))
+    },
+      // H16: exact cross-multiplied kappa — sign-split ppm, chance term
+      // off the marginal product join, never floored p_o/p_e
+      oracle = {
+      val lex = Map(
+        "de" -> "['join','merge','sort','order']",
+        "en" -> "['the','a','of','key']",
+        "es" -> "['data','row','table','column']",
+        "fr" -> "['query','filter','group','window']",
+        "zh" -> "['spark','stream','batch','vector']")
+      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
+        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
+        .mkString(",\n    ")
+      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
+        s"WHEN score_$c = g THEN '$c'").mkString(" ")
+      s"""WITH toks AS (
+         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+         |  FROM documents),
+         |f AS (
+         |  SELECT doc_id,
+         |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+         |  FROM toks),
+         |m AS (
+         |  SELECT doc_id,
+         |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+         |  FROM f GROUP BY doc_id),
+         |t2 AS (SELECT doc_id, string_split(text,' ') AS toks2
+         |  FROM documents),
+         |s2 AS (SELECT doc_id,
+         |    $scores
+         |  FROM t2),
+         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
+         |    score_fr, score_zh) AS g FROM s2),
+         |p AS (SELECT doc_id,
+         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
+         |j AS (
+         |  SELECT CASE WHEN m.margin > 0 THEN 1 ELSE 0 END AS pred_a,
+         |    CASE WHEN p.pred_lang = 'en' THEN 1 ELSE 0 END AS pred_b
+         |  FROM m JOIN p USING (doc_id)),
+         |cells AS (SELECT pred_a, pred_b, CAST(count(*) AS BIGINT) AS n
+         |  FROM j GROUP BY 1, 2),
+         |ra AS (SELECT pred_a AS k, CAST(sum(n) AS BIGINT) AS r
+         |  FROM cells GROUP BY 1),
+         |rb AS (SELECT pred_b AS k, CAST(sum(n) AS BIGINT) AS c
+         |  FROM cells GROUP BY 1),
+         |ch AS (SELECT coalesce(sum(CAST(r AS HUGEINT) * c),
+         |    CAST(0 AS HUGEINT)) AS rc
+         |  FROM ra JOIN rb USING (k)),
+         |tt AS (SELECT CAST(sum(n) AS BIGINT) AS ntot,
+         |    CAST(sum(CASE WHEN pred_a = pred_b THEN n ELSE 0 END)
+         |      AS BIGINT) AS agree
+         |  FROM cells),
+         |fin AS (SELECT ntot, agree, rc,
+         |    CAST(ntot AS HUGEINT) * agree - rc AS num,
+         |    CAST(ntot AS HUGEINT) * ntot - rc AS den
+         |  FROM tt, ch)
+         |SELECT ntot AS n, agree,
+         |  CAST(1000000 * agree // ntot AS BIGINT) AS po_ppm,
+         |  CAST(1000000 * rc // (CAST(ntot AS HUGEINT) * ntot)
+         |    AS BIGINT) AS pe_ppm,
+         |  CAST(CASE WHEN den = 0 THEN 0
+         |    WHEN num >= 0 THEN 1000000 * num // den
+         |    ELSE -(1000000 * (-num) // den) END AS BIGINT) AS kappa_ppm
+         |FROM fin""".stripMargin
     }),
 
     // H17: MCC at the margin>0 operating point (q_mcnemar's pred_a) —
     // the imbalance-honest single-threshold verdict beside H8's F1
-    "q_mcc" -> ((s, d) =>
+    QueryDef("q_mcc", (s, d) =>
       ml.Evaluation.mccAtThreshold(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        threshold = 1L, score = "margin", label = "is_en")),
+        threshold = 1L, score = "margin", label = "is_en"),
+      // H17: exact cells; MCC = one double step in pinned literal order
+      // (each marginal factor < 2^53 exactly representable, the H13 sqrt
+      // precedent); zero marginal pins 0.0
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |cells AS (
+        |  SELECT
+        |    CAST(sum(CASE WHEN margin >= 1 AND lab = 1 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS tp,
+        |    CAST(sum(CASE WHEN margin >= 1 AND lab = 0 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS fp,
+        |    CAST(sum(CASE WHEN margin < 1 AND lab = 1 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS fn,
+        |    CAST(sum(CASE WHEN margin < 1 AND lab = 0 THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS tn
+        |  FROM sc)
+        |SELECT tp, fp, fn, tn,
+        |  CASE WHEN tp + fp = 0 OR tp + fn = 0 OR tn + fp = 0
+        |      OR tn + fn = 0 THEN 0.0
+        |    ELSE CAST(tp * tn - fp * fn AS DOUBLE)
+        |      / sqrt(CAST(tp + fp AS DOUBLE) * CAST(tp + fn AS DOUBLE)
+        |           * CAST(tn + fp AS DOUBLE) * CAST(tn + fn AS DOUBLE))
+        |  END AS mcc
+        |FROM cells""".stripMargin),
 
     // H18: ECE + MCE on q_brier's link/bin geometry — the one-number
     // calibration gate beside H5's picture and H12's attribution
-    "q_ece" -> ((s, d) =>
+    QueryDef("q_ece", (s, d) =>
       ml.Evaluation.expectedCalibrationError(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      // H18: ECE with the weight-before-floor exact form (one floor at
+      // the final div n); MCE's inner floor is on a non-negative ratio
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |bb AS (
+        |  SELECT (least(999999, greatest(0, 500000 + margin * 25))
+        |      // 50000) * 50000 + 25000 AS phat,
+        |    CAST(count(*) AS BIGINT) AS n_k,
+        |    CAST(sum(lab) AS BIGINT) AS np_k
+        |  FROM sc GROUP BY 1),
+        |ag AS (
+        |  SELECT CAST(sum(n_k) AS BIGINT) AS n,
+        |    CAST(count(*) AS BIGINT) AS n_bins,
+        |    sum(abs(CAST(1000000 AS HUGEINT) * np_k
+        |      - CAST(phat AS HUGEINT) * n_k)) AS gsum,
+        |    CAST(max(abs(1000000 * np_k // n_k - phat)) AS BIGINT)
+        |      AS mce_ppm
+        |  FROM bb)
+        |SELECT n, n_bins, CAST(gsum // n AS BIGINT) AS ece_ppm, mce_ppm
+        |FROM ag""".stripMargin),
 
     // E48: containment verify on the LSH candidates — the asymmetric
     // measure that catches quote-inclusion dups Jaccard misses
-    "q_containment" -> ((s, d) =>
-      ops.Dedup.lshContainment(Tables.documents(s, d))),
+    QueryDef("q_containment", (s, d) =>
+      ops.Dedup.lshContainment(Tables.documents(s, d)),
+      oracle = s"""WITH $sqlLshCtes,
+         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
+         |j AS (
+         |  SELECT c.id1, c.id2,
+         |    CAST(len(list_intersect(a.shd, b.shd)) AS BIGINT) AS n_inter,
+         |    CAST(least(len(a.shd), len(b.shd)) AS BIGINT) AS n_min
+         |  FROM cand c
+         |  JOIN sd a ON c.id1 = a.doc_id
+         |  JOIN sd b ON c.id2 = b.doc_id)
+         |SELECT id1, id2, n_inter, n_min,
+         |  (n_inter * 1000000) // greatest(n_min, 1) AS containment_ppm
+         |FROM j ORDER BY id1, id2""".stripMargin),
 
     // D55: first-principles HLL over the SAME per-nation part sets as
     // q_kmv_distinct — two estimator families, one task, both
     // integer-exact cross-engine
-    "q_hll_distinct" -> ((s, d) =>
+    QueryDef("q_hll_distinct", (s, d) =>
       ops.Sketches.hllDistinct(
         Tables.customer(s, d).select(col("c_custkey"),
           col("c_nationkey").cast("long").as("c_nationkey"))
@@ -1819,32 +6518,118 @@ object SparkEntry {
           .join(Tables.lineitem(s, d).select(
             col("l_orderkey").as("o_orderkey"), col("l_partkey")),
             Seq("o_orderkey")),
-        grp = "c_nationkey", v = "l_partkey")),
+        grp = "c_nationkey", v = "l_partkey"),
+      // HLL twin: identical md5 register routing; ρ = trailing-zeros
+      // position via (w & -w) — pure integer bit ops both engines; the
+      // numerator constant is 709000·64²·2^30.
+      oracle = """WITH pairs AS (
+        |  SELECT c_nationkey AS nat, l_partkey AS pk
+        |  FROM customer
+        |  JOIN orders ON o_custkey = c_custkey
+        |  JOIN lineitem ON l_orderkey = o_orderkey),
+        |h AS (
+        |  SELECT nat,
+        |    CAST(('0x'||substr(md5('hll:'||CAST(pk AS VARCHAR)),1,8))
+        |      AS BIGINT) AS h
+        |  FROM pairs),
+        |r AS (
+        |  SELECT nat, h % 64 AS idx,
+        |    CASE WHEN h // 64 = 0 THEN 27
+        |         ELSE bit_count(((h // 64) & -(h // 64)) - 1) + 1 END AS rho
+        |  FROM h),
+        |reg AS (SELECT nat, idx, MAX(rho) AS m FROM r GROUP BY 1, 2),
+        |a AS (SELECT nat, CAST(SUM(CAST(1 AS BIGINT) << (30 - m))
+        |        AS BIGINT) AS sp, CAST(COUNT(*) AS BIGINT) AS np
+        |      FROM reg GROUP BY 1)
+        |SELECT CAST(nat AS BIGINT) AS c_nationkey,
+        |  CAST(3118214976372736000
+        |    // (1000000 * (sp + (64 - np) * 1073741824)) AS BIGINT)
+        |    AS est_distinct,
+        |  CAST(64 - np AS BIGINT) AS v_zero
+        |FROM a ORDER BY 1""".stripMargin),
 
     // H6: KS drift between the 1995 and 1996 order-price distributions
-    "q_ks_drift" -> ((s, d) =>
+    QueryDef("q_ks_drift", (s, d) =>
       ml.Evaluation.ksDrift(
         Tables.orders(s, d)
           .filter(year(col("o_orderdate")).isin(1995, 1996))
           .select(
             when(year(col("o_orderdate")) === 1995, 0L).otherwise(1L)
               .as("side"),
-            expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v")))),
+            expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v"))),
+      oracle = """WITH s AS (
+        |  SELECT CASE WHEN year(o_orderdate) = 1995 THEN 0 ELSE 1 END
+        |      AS side,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS v
+        |  FROM orders WHERE year(o_orderdate) IN (1995, 1996)),
+        |b AS (
+        |  SELECT v AS x,
+        |    CAST(SUM(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS da,
+        |    CAST(SUM(CASE WHEN side <> 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS db
+        |  FROM s GROUP BY 1),
+        |c AS (
+        |  SELECT x, da, db,
+        |    CAST(SUM(da) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS ca,
+        |    CAST(SUM(db) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
+        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS cb
+        |  FROM b),
+        |t AS (SELECT CAST(SUM(da) AS BIGINT) AS n_a,
+        |        CAST(SUM(db) AS BIGINT) AS n_b FROM b)
+        |SELECT n_a, n_b,
+        |  CAST(MAX(abs(n_b * ca - n_a * cb)) AS BIGINT) AS d_num,
+        |  CAST(MAX(abs(n_b * ca - n_a * cb)) * 1000000
+        |    // greatest(n_a * n_b, 1) AS BIGINT) AS ks_ppm
+        |FROM c, t GROUP BY n_a, n_b""".stripMargin),
 
     // H7: precision/recall curve of the E46 scorer's margin predicting
     // English — every operating point an exact integer
-    "q_pr_curve" -> ((s, d) =>
+    QueryDef("q_pr_curve", (s, d) =>
       ml.Evaluation.prCurve(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      // PR-curve twin: the q_auc scored CTE, descending cumulative TP/FP
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin AS s,
+        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+        |          CAST(SUM(lab) AS BIGINT) AS np
+        |        FROM sc GROUP BY s),
+        |cum AS (SELECT s,
+        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
+        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
+        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
+        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
+        |        FROM bys),
+        |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos FROM bys)
+        |SELECT s AS threshold, tp, pp - tp AS fp,
+        |  CAST(tp * 1000000 // greatest(pp, 1) AS BIGINT)
+        |    AS precision_ppm,
+        |  CAST(tp * 1000000 // greatest(n_pos, 1) AS BIGINT)
+        |    AS recall_ppm
+        |FROM cum, t ORDER BY threshold""".stripMargin),
 
     // B20: referential-integrity audit across the full star-schema FK
     // graph — key domains and orphan blast radius per edge
-    "q_integrity" -> ((s, d) =>
+    QueryDef("q_integrity", (s, d) =>
       etl.DataQuality.integrityAudit(Seq(
         ("customer.nation", Tables.customer(s, d), "c_nationkey",
           Tables.nation(s, d), "n_nationkey"),
@@ -1859,12 +6644,78 @@ object SparkEntry {
         ("orders.customer", Tables.orders(s, d), "o_custkey",
           Tables.customer(s, d), "c_custkey"),
         ("supplier.nation", Tables.supplier(s, d), "s_nationkey",
-          Tables.nation(s, d), "n_nationkey")))),
+          Tables.nation(s, d), "n_nationkey"))),
+      // Integrity twin: parent PKs are unique in this schema, so a LEFT
+      // JOIN probe neither duplicates nor drops child rows
+      oracle = """SELECT * FROM (
+        |  SELECT 'customer.nation' AS fk,
+        |    CAST(COUNT(DISTINCT c_nationkey) AS BIGINT) AS n_child_keys,
+        |    CAST(COUNT(DISTINCT CASE WHEN n_nationkey IS NULL
+        |      THEN c_nationkey END) AS BIGINT) AS orphan_keys,
+        |    CAST(SUM(CASE WHEN n_nationkey IS NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS orphan_rows
+        |  FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
+        |  WHERE c_nationkey IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'lineitem.orders',
+        |    CAST(COUNT(DISTINCT l_orderkey) AS BIGINT),
+        |    CAST(COUNT(DISTINCT CASE WHEN o_orderkey IS NULL
+        |      THEN l_orderkey END) AS BIGINT),
+        |    CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT)
+        |  FROM lineitem LEFT JOIN orders ON l_orderkey = o_orderkey
+        |  WHERE l_orderkey IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'lineitem.part',
+        |    CAST(COUNT(DISTINCT l_partkey) AS BIGINT),
+        |    CAST(COUNT(DISTINCT CASE WHEN p_partkey IS NULL
+        |      THEN l_partkey END) AS BIGINT),
+        |    CAST(SUM(CASE WHEN p_partkey IS NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT)
+        |  FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
+        |  WHERE l_partkey IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'lineitem.supplier',
+        |    CAST(COUNT(DISTINCT l_suppkey) AS BIGINT),
+        |    CAST(COUNT(DISTINCT CASE WHEN s_suppkey IS NULL
+        |      THEN l_suppkey END) AS BIGINT),
+        |    CAST(SUM(CASE WHEN s_suppkey IS NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT)
+        |  FROM lineitem LEFT JOIN supplier ON l_suppkey = s_suppkey
+        |  WHERE l_suppkey IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'nation.region',
+        |    CAST(COUNT(DISTINCT n_regionkey) AS BIGINT),
+        |    CAST(COUNT(DISTINCT CASE WHEN r_regionkey IS NULL
+        |      THEN n_regionkey END) AS BIGINT),
+        |    CAST(SUM(CASE WHEN r_regionkey IS NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT)
+        |  FROM nation LEFT JOIN region ON n_regionkey = r_regionkey
+        |  WHERE n_regionkey IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'orders.customer',
+        |    CAST(COUNT(DISTINCT o_custkey) AS BIGINT),
+        |    CAST(COUNT(DISTINCT CASE WHEN c_custkey IS NULL
+        |      THEN o_custkey END) AS BIGINT),
+        |    CAST(SUM(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT)
+        |  FROM orders LEFT JOIN customer ON o_custkey = c_custkey
+        |  WHERE o_custkey IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'supplier.nation',
+        |    CAST(COUNT(DISTINCT s_nationkey) AS BIGINT),
+        |    CAST(COUNT(DISTINCT CASE WHEN n_nationkey IS NULL
+        |      THEN s_nationkey END) AS BIGINT),
+        |    CAST(SUM(CASE WHEN n_nationkey IS NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT)
+        |  FROM supplier LEFT JOIN nation ON s_nationkey = n_nationkey
+        |  WHERE s_nationkey IS NOT NULL
+        |) ORDER BY fk""".stripMargin),
 
     // E49: hybrid retrieval — RRF fusion of the E39 lexical ranking
     // and the E5 semantic ranking over the aligned doc/vec id space
     // (doc_id ≡ vec_id in the testdata); both feeders exclude self
-    "q_rrf_fusion" -> ((s, d) => {
+    QueryDef("q_rrf_fusion", (s, d) => {
       val lex = ops.Bm25.topK(Tables.documents(s, d), qMod = 50, k = 10)
         .select(col("q_id"), col("doc_id").as("item_id"), col("rnk"))
       val sem = ops.Ann.bruteForceRank(Tables.embeddings(s, d),
@@ -1872,12 +6723,122 @@ object SparkEntry {
         k = 10)
         .select(col("q_id"), col("vec_id").as("item_id"), col("rnk"))
       ops.Fusion.rrfFuse(Seq(lex, sem), k = 10)
-    }),
+    },
+      // RRF twin: the q_bm25 pipeline at k=10 (cut < 11) + the
+      // q_ann_brute pipeline with %50-aligned queries at k=10, fused by
+      // rank only — 10^6 // (60 + rnk) summed per (query, item)
+      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
+        |reps AS (SELECT ch, min(doc_id) AS rep, count(*) AS gsz
+        |  FROM m GROUP BY 1),
+        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
+        |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
+        |gs AS (SELECT rep AS doc_id, gsz FROM reps),
+        |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM rd),
+        |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+        |    i -> toks[i] || ' ' || toks[i+1])) AS tok
+        |  FROM t WHERE len(toks) >= 2),
+        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM g GROUP BY 1, 2),
+        |dl AS (SELECT doc_id,
+        |    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END
+        |      AS BIGINT) AS dl
+        |  FROM t),
+        |c AS (SELECT CAST(sum(gs.gsz) AS BIGINT) AS n,
+        |             CAST(sum(gs.gsz * dl.dl) AS BIGINT) AS s
+        |  FROM dl JOIN gs USING (doc_id)),
+        |dft AS (SELECT tok, CAST(sum(gs.gsz) AS BIGINT) AS df
+        |  FROM tf JOIN gs USING (doc_id) GROUP BY 1),
+        |kept0 AS (
+        |  SELECT tf.doc_id, tf.tok, tf.tf, dft.df
+        |  FROM tf JOIN dft USING (tok) CROSS JOIN c
+        |  WHERE dft.df <= CAST(c.n AS DOUBLE) * 0.4),
+        |kept AS (
+        |  SELECT doc_id, tok, tf, df FROM (
+        |    SELECT k.*, row_number() OVER (PARTITION BY tok
+        |      ORDER BY tf DESC, doc_id) AS pr
+        |    FROM kept0 k)
+        |  WHERE pr <= 1000),
+        |qdocs AS (SELECT doc_id AS q_id, rep AS qrep FROM members
+        |  WHERE doc_id % 50 = 0 AND doc_id < 20000000),
+        |qpost AS (
+        |  SELECT DISTINCT qd.qrep, k.tok
+        |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
+        |  JOIN kept k ON k.doc_id = qd.qrep),
+        |terms AS (
+        |  SELECT q.qrep, k.doc_id AS crep,
+        |    CAST(c.s AS DOUBLE) AS sd, CAST(k.tf AS DOUBLE) AS tfd,
+        |    CAST(c.n AS DOUBLE) AS nd, CAST(k.df AS DOUBLE) AS dfd,
+        |    CAST(d.dl AS DOUBLE) AS dld
+        |  FROM qpost q JOIN kept k USING (tok)
+        |  JOIN dl d ON d.doc_id = k.doc_id
+        |  CROSS JOIN c),
+        |scoredc AS (
+        |  SELECT qrep, crep,
+        |    CAST(SUM(CAST(ROUND((22.0 * sd * tfd * (2.0*nd - 2.0*dfd + 1.0) * 1000000.0) / ((10.0*sd*tfd + 3.0*sd + 9.0*dld*nd) * (2.0*dfd + 1.0))) AS BIGINT)) AS BIGINT) AS score_u
+        |  FROM terms GROUP BY 1, 2),
+        |bys AS (
+        |  SELECT sc.qrep, sc.score_u, CAST(sum(g.gsz) AS BIGINT) AS msz
+        |  FROM scoredc sc JOIN gs g ON g.doc_id = sc.crep
+        |  GROUP BY 1, 2),
+        |cut AS (
+        |  SELECT qrep, score_u FROM (
+        |    SELECT qrep, score_u,
+        |      COALESCE(SUM(msz) OVER (PARTITION BY qrep ORDER BY score_u DESC
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS higher
+        |    FROM bys)
+        |  WHERE higher < 11),
+        |ex AS (
+        |  SELECT qd.q_id, mem.doc_id, sc.score_u
+        |  FROM qdocs qd
+        |  JOIN scoredc sc ON sc.qrep = qd.qrep
+        |  JOIN cut ON cut.qrep = sc.qrep AND cut.score_u = sc.score_u
+        |  JOIN members mem ON mem.rep = sc.crep
+        |  WHERE mem.doc_id <> qd.q_id),
+        |lex AS (
+        |  SELECT q_id, doc_id AS item_id, rnk FROM (
+        |    SELECT *, CAST(row_number() OVER (PARTITION BY q_id
+        |      ORDER BY score_u DESC, doc_id) AS BIGINT) AS rnk
+        |    FROM ex)
+        |  WHERE rnk <= 10),
+        |v AS (
+        |  SELECT vec_id, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM embeddings),
+        |nv AS (
+        |  SELECT vec_id, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |qv AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2
+        |  FROM nv WHERE vec_id % 50 = 0 AND vec_id < 20000000),
+        |scv AS (
+        |  SELECT qv.q_id, nv.vec_id,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> qv.q_svec[i]*nv.svec[i])), (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(qv.q_norm2 AS DOUBLE)) * sqrt(CAST(nv.norm2 AS DOUBLE))) AS cos
+        |  FROM nv JOIN qv ON nv.vec_id <> qv.q_id),
+        |sem AS (
+        |  SELECT q_id, vec_id AS item_id, rnk FROM (
+        |    SELECT *, CAST(row_number() OVER (PARTITION BY q_id
+        |      ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
+        |    FROM scv)
+        |  WHERE rnk <= 10),
+        |u AS (SELECT * FROM lex UNION ALL SELECT * FROM sem),
+        |f AS (
+        |  SELECT q_id, item_id,
+        |    CAST(SUM(1000000 // (60 + rnk)) AS BIGINT) AS rrf_u,
+        |    CAST(COUNT(*) AS BIGINT) AS n_lists
+        |  FROM u GROUP BY 1, 2)
+        |SELECT q_id, item_id, rrf_u, n_lists, rnk FROM (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
+        |    ORDER BY rrf_u DESC, item_id) AS BIGINT) AS rnk
+        |  FROM f)
+        |WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin,
+      scaledOracle = Some(ScaledTwins.rrfFusionOverride)),
 
     // B22: dictionary-encode event_type (value-ordered dense ids) and
     // aggregate on the encoded column — dictionary joined back for
     // the readable report
-    "q_dict_encode" -> ((s, d) => {
+    QueryDef("q_dict_encode", (s, d) => {
       val ev = Tables.events(s, d).select(col("event_type"))
       val dict = etl.Dictionary.build(ev, "event_type")
       etl.Dictionary.encode(ev, "event_type", dict)
@@ -1885,28 +6846,60 @@ object SparkEntry {
         .join(dict.select(col("id").as("event_type_id"), col("value")),
           Seq("event_type_id"))
         .orderBy(col("event_type_id"))
-    }),
+    },
+      // dictionary twin: row_number over the sorted distinct domain
+      oracle = """WITH dd AS (
+        |  SELECT DISTINCT event_type AS value FROM events
+        |  WHERE event_type IS NOT NULL),
+        |d AS (SELECT value,
+        |        CAST(row_number() OVER (ORDER BY value) - 1 AS BIGINT)
+        |          AS id
+        |      FROM dd),
+        |c AS (SELECT d.id AS event_type_id, CAST(COUNT(*) AS BIGINT) AS n
+        |      FROM events e JOIN d ON e.event_type = d.value
+        |      GROUP BY 1)
+        |SELECT c.event_type_id, c.n, d.value
+        |FROM c JOIN d ON d.id = c.event_type_id
+        |ORDER BY 1""".stripMargin),
 
     // D58: exact distinct users per event type via packed bitset
     // words — the dense-domain exact alternative to D52/D55
-    "q_bitset_distinct" -> ((s, d) =>
+    QueryDef("q_bitset_distinct", (s, d) =>
       ops.Sketches.bitsetDistinct(
         Tables.events(s, d).select(col("event_type").as("et"),
           col("user_id")),
-        grp = "et", id = "user_id")),
+        grp = "et", id = "user_id"),
+      // bitset twin: identical word/bit packing, bit_or fold, popcount
+      oracle = """WITH b AS (
+        |  SELECT event_type AS et, user_id // 63 AS w,
+        |    CAST(1 AS BIGINT) << CAST(user_id % 63 AS INT) AS m
+        |  FROM events),
+        |mw AS (SELECT et, w, bit_or(m) AS mask FROM b GROUP BY 1, 2)
+        |SELECT et, CAST(SUM(bit_count(mask)) AS BIGINT) AS n_distinct,
+        |  CAST(COUNT(*) AS BIGINT) AS n_words
+        |FROM mw GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // D57: per-user EWMA behavioral baseline (α = 1/2, identical
     // integer left-fold both engines)
-    "q_ewma" -> ((s, d) =>
+    QueryDef("q_ewma", (s, d) =>
       ops.Analytics.ewmaBaseline(
         Tables.events(s, d).select(col("user_id"), col("ts_us"),
-          col("event_id"), cents(col("value")).as("amt_cents")))),
+          col("event_id"), cents(col("value")).as("amt_cents"))),
+      // EWMA twin: list(... ORDER BY ts, id) + list_reduce is the same
+      // totally-ordered integer fold as Spark's sort_array + aggregate
+      oracle = """SELECT user_id,
+        |  CAST(COUNT(*) AS BIGINT) AS n_txn,
+        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |    list(CAST(round(value*100) AS BIGINT)
+        |         ORDER BY epoch_us(ts), event_id)),
+        |    (a, b) -> (a + b) // 2) AS BIGINT) AS ewma_cents
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // D56: interval×interval overlap join (7-day order windows per
     // nation) — bucket-blocked with canonical-bucket dedup; the oracle
     // is the DIRECT quadratic overlap join, so a hash match proves the
     // decomposition
-    "q_interval_overlap" -> ((s, d) =>
+    QueryDef("q_interval_overlap", (s, d) =>
       ops.IntervalJoin.overlapCounts(
         Tables.orders(s, d)
           .join(broadcast(Tables.customer(s, d)
@@ -1915,7 +6908,33 @@ object SparkEntry {
           .select(col("key"), col("o_orderkey").as("id"),
             datediff(col("o_orderdate"), lit("1970-01-01")).as("lo"),
             (datediff(col("o_orderdate"), lit("1970-01-01")) + 7).as("hi")),
-        bucketW = 7L)),
+        bucketW = 7L),
+      // overlap twin: the direct quadratic join the blocked form must
+      // reproduce exactly
+      // ANALYTIC twin: every interval here is exactly (lo, lo+7), so two
+      // intervals overlap iff |lo_x − lo_y| ≤ 7 and the pair count folds
+      // over the per-(key, day) histogram — C(n,2) same-day + n_d·n_d'
+      // for day gaps 1..7 — a (keys × days)-sized computation. The old
+      // direct quadratic join enumerated ~2.8e10 pairs at the 100× tier
+      // (25 nation keys × 600k intervals each) and never finished; this
+      // independent derivation hash-matches the engine's bucket-blocked
+      // enumeration at sf0.01/10×/100× (1.9 s at 100×).
+      oracle = """WITH o AS (
+        |  SELECT CAST(c_nationkey AS BIGINT) AS key,
+        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS lo
+        |  FROM orders JOIN customer ON o_custkey = c_custkey),
+        |d AS MATERIALIZED (
+        |  SELECT key, lo, CAST(count(*) AS BIGINT) AS n FROM o GROUP BY 1, 2),
+        |same AS (
+        |  SELECT key, CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS c FROM d GROUP BY 1),
+        |crossd AS (
+        |  SELECT a.key, CAST(SUM(a.n * b.n) AS BIGINT) AS c
+        |  FROM d a JOIN d b ON a.key = b.key AND b.lo > a.lo AND b.lo <= a.lo + 7
+        |  GROUP BY 1)
+        |SELECT s.key, CAST(s.c + COALESCE(x.c, 0) AS BIGINT) AS n_pairs
+        |FROM same s LEFT JOIN crossd x ON s.key = x.key
+        |WHERE s.c + COALESCE(x.c, 0) > 0
+        |ORDER BY 1""".stripMargin),
 
     // D87: grid-blocked spatial neighbor self-join (all pairs within
     // Chebyshev radius r over a deterministic plane embedding) — the
@@ -1927,29 +6946,135 @@ object SparkEntry {
     // at the 100× tier it is 271M rows — a pair-list twin both
     // quadratic-joins in DuckDB and drowns the Python hasher. Any
     // wrong/missing/extra pair still perturbs the fingerprint.
-    "q_spatial_join" -> ((s, d) => ops.Spatial.neighborPairs(s, d)
+    QueryDef("q_spatial_join", (s, d) => ops.Spatial.neighborPairs(s, d)
       .groupBy("id1").agg(
         count(lit(1)).as("n_pairs"),
         sum("cheb").as("cheb_sum"),
         min("cheb").as("cheb_min"),
         max("id2").as("id2_max"))
-      .orderBy("id1")),
+      .orderBy("id1"),
+      // spatial twin: the direct quadratic distance self-join over the
+      // same integer plane embedding
+      // Grid-blocked twin (the engine's own 3×3-cell blocking, so the
+      // DuckDB side is an EQUALITY hash join instead of the quadratic
+      // inequality join that ran >1 h at 100×), contracted per id1.
+      // DEFAULT twin = the DIRECT quadratic join (ADVICE r11: the grid-
+      // blocked rewrite shared the engine's own blocking scheme at every
+      // tier, so a conceptual blocking error would have passed both
+      // sides unnoticed; at sf0.01 the quadratic form is cheap and fully
+      // independent). The grid-blocked form lives in
+      // its `scaledOracle` for the 10x/100x close checks, where
+      // the quadratic join's ~2.8e10 candidate pairs never finish.
+      oracle = """WITH pts AS (
+        |  SELECT event_id AS id,
+        |    ((event_id % 1000003) * 2654435761) % 1000000 AS x,
+        |    ((event_id % 1000033) * 2246822519) % 1000000 AS y
+        |  FROM events WHERE event_id % 17 = 0),
+        |pairs AS (
+        |  SELECT a.id AS id1, b.id AS id2,
+        |    GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS cheb
+        |  FROM pts a JOIN pts b
+        |    ON a.id < b.id
+        |    AND ABS(a.x - b.x) <= 20000 AND ABS(a.y - b.y) <= 20000)
+        |SELECT id1, CAST(count(*) AS BIGINT) AS n_pairs,
+        |  CAST(sum(cheb) AS BIGINT) AS cheb_sum,
+        |  CAST(min(cheb) AS BIGINT) AS cheb_min,
+        |  CAST(max(id2) AS BIGINT) AS id2_max
+        |FROM pairs GROUP BY id1 ORDER BY id1""".stripMargin,
+      // grid-cell blocked neighbor join — same 3x3-cell candidate scheme
+      // as the engine, which is why it is NOT the default twin: a shared
+      // conceptual blocking error would pass both sides. At 100x the
+      // quadratic default enumerates ~2.8e10 pairs and never finishes;
+      // this form is linear in occupied cells.
+      scaledOracle = Some("""WITH pts AS MATERIALIZED (
+        |  SELECT event_id AS id,
+        |    ((event_id % 1000003) * 2654435761) % 1000000 AS x,
+        |    ((event_id % 1000033) * 2246822519) % 1000000 AS y
+        |  FROM events WHERE event_id % 17 = 0),
+        |g AS MATERIALIZED (
+        |  SELECT id, x, y, x // 20000 AS cx, y // 20000 AS cy FROM pts),
+        |pairs AS (
+        |  SELECT a.id AS id1, b.id AS id2,
+        |    GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS cheb
+        |  FROM g a
+        |  JOIN (SELECT unnest(range(-1, 2)) AS dx) ox ON true
+        |  JOIN (SELECT unnest(range(-1, 2)) AS dy) oy ON true
+        |  JOIN g b ON b.cx = a.cx + ox.dx AND b.cy = a.cy + oy.dy
+        |  WHERE a.id < b.id
+        |    AND ABS(a.x - b.x) <= 20000 AND ABS(a.y - b.y) <= 20000)
+        |SELECT id1, CAST(count(*) AS BIGINT) AS n_pairs,
+        |  CAST(sum(cheb) AS BIGINT) AS cheb_sum,
+        |  CAST(min(cheb) AS BIGINT) AS cheb_min,
+        |  CAST(max(id2) AS BIGINT) AS id2_max
+        |FROM pairs GROUP BY id1 ORDER BY id1""".stripMargin)),
 
     // D89: radius-capped nearest neighbor per point over the same grid
-    "q_spatial_nn" -> ((s, d) => ops.Spatial.nearestNeighbors(s, d)),
+    QueryDef("q_spatial_nn", (s, d) => ops.Spatial.nearestNeighbors(s, d),
+      // nearest-neighbor twin: quadratic argmin with the same
+      // (distance, id) tie-break
+      oracle = """WITH pts AS (
+        |  SELECT event_id AS id,
+        |    ((event_id % 1000003) * 2654435761) % 1000000 AS x,
+        |    ((event_id % 1000033) * 2246822519) % 1000000 AS y
+        |  FROM events WHERE event_id % 17 = 0),
+        |cand AS (
+        |  SELECT a.id, b.id AS nn_id,
+        |    GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS cheb
+        |  FROM pts a JOIN pts b
+        |    ON a.id <> b.id
+        |    AND ABS(a.x - b.x) <= 20000 AND ABS(a.y - b.y) <= 20000),
+        |rk AS (SELECT *, row_number() OVER (
+        |    PARTITION BY id ORDER BY cheb, nn_id) AS rn FROM cand)
+        |SELECT id, nn_id, cheb FROM rk WHERE rn = 1 ORDER BY id""".stripMargin),
 
     // H8: the deployed operating point — best-F1 threshold of the E46
     // scorer, exact argmax in pico-units over the distinct-score frame
-    "q_best_f1" -> ((s, d) =>
+    QueryDef("q_best_f1", (s, d) =>
       ml.Evaluation.bestF1(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
           .join(Tables.documents(s, d).select(col("doc_id"),
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      // best-F1 twin: the q_pr_curve CTEs + exact pico argmax, highest
+      // threshold on ties
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin AS s,
+        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+        |          CAST(SUM(lab) AS BIGINT) AS np
+        |        FROM sc GROUP BY s),
+        |cum AS (SELECT s,
+        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
+        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
+        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
+        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
+        |        FROM bys),
+        |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos FROM bys),
+        |pts AS (
+        |  SELECT s AS threshold, tp, pp, n_pos,
+        |    CAST(2 * tp * 1000000000000 // (pp + n_pos) AS BIGINT)
+        |      AS f1_pico
+        |  FROM cum, t)
+        |SELECT threshold, tp, pp - tp AS fp, n_pos - tp AS fn, f1_pico
+        |FROM pts
+        |WHERE f1_pico = (SELECT MAX(f1_pico) FROM pts)
+        |ORDER BY threshold DESC LIMIT 1""".stripMargin),
     // H11: min-money-lost operating point (review 100c, miss 900c)
-    "q_cost_threshold" -> ((s, d) =>
+    QueryDef("q_cost_threshold", (s, d) =>
       ml.Evaluation.costThreshold(
         ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
           .select(col("doc_id"), col("margin"))
@@ -1957,13 +7082,52 @@ object SparkEntry {
             when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
             Seq("doc_id")),
         fpCostCents = 100L, fnCostCents = 900L,
-        score = "margin", label = "is_en")),
+        score = "margin", label = "is_en"),
+      oracle = """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+        |  FROM toks),
+        |m AS (
+        |  SELECT doc_id,
+        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+        |  FROM f GROUP BY doc_id),
+        |sc AS (
+        |  SELECT margin AS s,
+        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+        |  FROM m JOIN documents d USING (doc_id)),
+        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+        |          CAST(SUM(lab) AS BIGINT) AS np
+        |        FROM sc GROUP BY s),
+        |cum AS (SELECT s,
+        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
+        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
+        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
+        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
+        |        FROM bys),
+        |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
+        |        CAST(MAX(s) + 1 AS BIGINT) AS none_t FROM bys),
+        |pts AS (
+        |  SELECT s AS threshold, tp, pp, n_pos FROM cum, t
+        |  UNION ALL
+        |  SELECT none_t, 0, 0, n_pos FROM t),
+        |costs AS (
+        |  SELECT threshold, tp, pp - tp AS fp, n_pos - tp AS fn,
+        |    CAST((pp - tp) * 100 + (n_pos - tp) * 900 AS BIGINT)
+        |      AS cost_cents
+        |  FROM pts)
+        |SELECT threshold, tp, fp, fn, cost_cents
+        |FROM costs
+        |WHERE cost_cents = (SELECT MIN(cost_cents) FROM costs)
+        |ORDER BY threshold DESC LIMIT 1""".stripMargin),
 
     // B21: incremental join-view maintenance — the maintained view is
     // built from the DELTA ALGEBRA (ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB) while the
     // oracle recomputes the full join: a hash match proves the
     // incremental path reproduced the view, cross-engine
-    "q_ivm_join" -> ((s, d) => {
+    QueryDef("q_ivm_join", (s, d) => {
       val ords = Tables.orders(s, d).select(
         col("o_custkey").as("c_custkey"), col("o_orderkey"),
         cents(col("o_totalprice")).as("tp_cents"),
@@ -1981,29 +7145,116 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_orders"),
           sum(col("tp_cents")).as("sum_cents"))
         .orderBy(col("nat"))
-    }),
+    },
+      // IVM twin: the FULL join recompute — matching hashes prove the
+      // delta algebra, they don't replay it
+      oracle = """SELECT CAST(c_nationkey AS BIGINT) AS nat,
+        |  CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT)
+        |    AS sum_cents
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // D92: Mann–Whitney U — did urgent orders' price distribution move
     // vs the rest, per order status (rank-based, outlier-immune)
-    "q_mannwhitney" -> ((s, d) =>
+    QueryDef("q_mannwhitney", (s, d) =>
       ops.RankTests.mannWhitney(
         Tables.orders(s, d).select(
           col("o_orderstatus").as("slice"),
           when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
             .as("grp"),
-          cents(col("o_totalprice")).as("v")))),
+          cents(col("o_totalprice")).as("v"))),
+      oracle = """WITH base AS (
+        |  SELECT o_orderstatus AS slice,
+        |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS grp,
+        |    CAST(round(o_totalprice*100) AS BIGINT) AS v
+        |  FROM orders),
+        |byval AS (
+        |  SELECT slice, v, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(SUM(grp) AS BIGINT) AS n1v
+        |  FROM base GROUP BY 1, 2),
+        |cums AS (
+        |  SELECT *, CAST(coalesce(SUM(n) OVER (PARTITION BY slice ORDER BY v
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+        |    AS cum
+        |  FROM byval),
+        |agg AS (
+        |  SELECT slice, CAST(SUM(n1v) AS BIGINT) AS n1,
+        |    CAST(SUM(n - n1v) AS BIGINT) AS n2,
+        |    CAST(SUM(n1v * (2*cum + n + 1)) AS BIGINT) AS r1_x2,
+        |    CAST(SUM(CAST(n AS HUGEINT)*n*n - n) AS HUGEINT) AS ties
+        |  FROM cums GROUP BY 1),
+        |fin AS (
+        |  SELECT slice, n1, n2, r1_x2 - n1*(n1+1) AS u1_x2,
+        |    CAST(n1 AS HUGEINT) * n2
+        |      * (CAST(n1+n2 AS HUGEINT)*(n1+n2)*(n1+n2) - (n1+n2) - ties)
+        |      AS var_num,
+        |    CAST(3 AS HUGEINT)*(n1+n2)*(n1+n2-1) AS var_den
+        |  FROM agg)
+        |SELECT slice, n1, n2, u1_x2,
+        |  CASE WHEN n1 = 0 OR n2 = 0 OR var_num <= 0 THEN 0.0
+        |  ELSE CAST(u1_x2 - n1*n2 AS DOUBLE)
+        |    / sqrt(CAST(var_num AS DOUBLE) / CAST(var_den AS DOUBLE)) END AS z
+        |FROM fin ORDER BY slice""".stripMargin),
 
     // D93: Kruskal–Wallis H — price across ALL five priority classes
     // per status, the k-sample rank ANOVA over the same frame
-    "q_kruskal" -> ((s, d) =>
+    QueryDef("q_kruskal", (s, d) =>
       ops.RankTests.kruskalWallis(
         Tables.orders(s, d).select(
           col("o_orderstatus").as("slice"),
           col("o_orderpriority").as("g"),
-          cents(col("o_totalprice")).as("v")))),
+          cents(col("o_totalprice")).as("v"))),
+      oracle = """WITH base AS (
+        |  SELECT o_orderstatus AS slice, o_orderpriority AS g,
+        |    CAST(round(o_totalprice*100) AS BIGINT) AS v
+        |  FROM orders),
+        |byval AS (
+        |  SELECT slice, v, CAST(count(*) AS BIGINT) AS n
+        |  FROM base GROUP BY 1, 2),
+        |ranked AS (
+        |  SELECT *, 2 * CAST(coalesce(SUM(n) OVER (PARTITION BY slice
+        |      ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+        |      0) AS BIGINT) + n + 1 AS ar2
+        |  FROM byval),
+        |pg AS (
+        |  SELECT pc.slice, pc.g, CAST(SUM(pc.c) AS BIGINT) AS ng,
+        |    CAST(SUM(CAST(pc.c AS HUGEINT) * r.ar2) AS HUGEINT) AS r2g
+        |  FROM (SELECT slice, g, v, CAST(count(*) AS BIGINT) AS c
+        |        FROM base GROUP BY 1, 2, 3) pc
+        |  JOIN ranked r ON pc.slice = r.slice AND pc.v = r.v
+        |  GROUP BY 1, 2),
+        |terms AS (
+        |  SELECT slice, ng,
+        |    CAST(r2g * r2g * 3000000 // CAST(ng AS HUGEINT) AS HUGEINT)
+        |      AS term
+        |  FROM pg),
+        |tie AS (
+        |  SELECT slice, CAST(SUM(CAST(n AS HUGEINT)*n*n - n) AS HUGEINT)
+        |    AS ties
+        |  FROM ranked GROUP BY 1),
+        |agg AS (
+        |  SELECT slice, CAST(count(*) AS BIGINT) AS k,
+        |    CAST(SUM(ng) AS BIGINT) AS n_tot,
+        |    CAST(SUM(term) AS HUGEINT) AS s3m
+        |  FROM terms GROUP BY 1),
+        |fin AS (
+        |  SELECT a.slice, a.k, a.n_tot,
+        |    greatest(CAST(a.s3m // (CAST(a.n_tot AS HUGEINT)*(a.n_tot+1))
+        |      - 3000000*(a.n_tot+1) AS BIGINT), 0) AS h_nn,
+        |    CAST(a.n_tot AS HUGEINT)*a.n_tot*a.n_tot - a.n_tot AS cube_n,
+        |    CAST(a.n_tot AS HUGEINT)*a.n_tot*a.n_tot - a.n_tot - t.ties
+        |      AS corr_den
+        |  FROM agg a JOIN tie t ON a.slice = t.slice)
+        |SELECT slice, k, n_tot,
+        |  CASE WHEN corr_den <= 0 THEN 0 ELSE h_nn END AS h_ppm,
+        |  CASE WHEN corr_den <= 0 THEN 0
+        |    ELSE CAST(CAST(h_nn AS HUGEINT) * cube_n // corr_den AS BIGINT)
+        |  END AS h_corr_ppm
+        |FROM fin ORDER BY slice""".stripMargin),
 
     // D94: HHI supplier-revenue concentration per nation market
-    "q_hhi" -> ((s, d) =>
+    QueryDef("q_hhi", (s, d) =>
       ops.Analytics.hhiProfile(
         Tables.lineitem(s, d)
           .select(col("l_suppkey"), cents(col("l_extendedprice"))
@@ -2012,22 +7263,193 @@ object SparkEntry {
             .as("l_suppkey"),
             col("s_nationkey").cast(LongType).as("s_nationkey")),
             Seq("l_suppkey")),
-        market = "s_nationkey", participant = "l_suppkey")),
+        market = "s_nationkey", participant = "l_suppkey"),
+      oracle = """WITH per AS (
+        |  SELECT CAST(s_nationkey AS BIGINT) AS grp, l_suppkey AS p,
+        |    CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT)) AS HUGEINT)
+        |      AS x
+        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |  GROUP BY 1, 2),
+        |agg AS (
+        |  SELECT grp, CAST(count(*) AS BIGINT) AS n_participants,
+        |    CAST(SUM(x) AS HUGEINT) AS tot, CAST(SUM(x*x) AS HUGEINT) AS sq
+        |  FROM per GROUP BY 1),
+        |fin AS (
+        |  SELECT grp, n_participants, CAST(tot AS BIGINT) AS total_cents,
+        |    CASE WHEN tot <= 0 THEN 0
+        |      ELSE CAST(1000000 * sq // (tot * tot) AS BIGINT) END AS hhi
+        |  FROM agg)
+        |SELECT grp, n_participants, total_cents, hhi AS hhi_ppm,
+        |  CASE WHEN n_participants <= 1 THEN 1000000
+        |    WHEN hhi * n_participants <= 1000000 THEN 0
+        |    ELSE (hhi * n_participants - 1000000) // (n_participants - 1)
+        |  END AS hhi_norm_ppm,
+        |  CASE WHEN hhi <= 0 THEN 0 ELSE 1000000000 // hhi END
+        |    AS eff_n_milli
+        |FROM fin ORDER BY grp""".stripMargin),
 
     // D95: neighbor-overlap link prediction over the co-purchase graph
-    "q_linkpred" -> ((s, d) =>
-      ops.MarketBasket.linkPredict(Tables.lineitem(s, d))),
+    QueryDef("q_linkpred", (s, d) =>
+      ops.MarketBasket.linkPredict(Tables.lineitem(s, d)),
+      oracle = """WITH items AS MATERIALIZED (
+        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+        |freq AS MATERIALIZED (
+        |  SELECT p FROM items GROUP BY p
+        |  HAVING count(*) >= 2 AND count(*) <= 1000),
+        |kept AS MATERIALIZED (SELECT i.o, i.p FROM items i JOIN freq USING (p)),
+        |edges AS MATERIALIZED (
+        |  SELECT a.p AS p1, b.p AS p2
+        |  FROM kept a JOIN kept b ON a.o = b.o AND a.p < b.p
+        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+        |deg AS MATERIALIZED (
+        |  SELECT p, CAST(count(*) AS BIGINT) AS deg FROM (
+        |    SELECT p1 AS p FROM edges UNION ALL SELECT p2 FROM edges) u
+        |  GROUP BY 1 HAVING count(*) <= 60),
+        |adj AS MATERIALIZED (
+        |  SELECT e.x, e.nbr FROM (
+        |    SELECT p1 AS x, p2 AS nbr FROM edges
+        |    UNION ALL SELECT p2, p1 FROM edges) e
+        |  JOIN deg dx ON dx.p = e.x JOIN deg dn ON dn.p = e.nbr),
+        |wedge AS MATERIALIZED (
+        |  SELECT l.x AS a, r.x AS c, CAST(count(*) AS BIGINT) AS cn
+        |  FROM adj l JOIN adj r ON l.nbr = r.nbr AND l.x < r.x
+        |  GROUP BY 1, 2),
+        |cand AS MATERIALIZED (
+        |  SELECT w.* FROM wedge w
+        |  LEFT JOIN edges e ON w.a = e.p1 AND w.c = e.p2
+        |  WHERE e.p1 IS NULL)
+        |SELECT cand.a AS p1, cand.c AS p2, cn, da.deg AS deg_a,
+        |  dc.deg AS deg_c,
+        |  CAST(1000000 * cn // (da.deg + dc.deg - cn) AS BIGINT)
+        |    AS jaccard_ppm
+        |FROM cand JOIN deg da ON da.p = cand.a JOIN deg dc ON dc.p = cand.c
+        |ORDER BY cn DESC, jaccard_ppm DESC, p1, p2 LIMIT 20""".stripMargin),
 
     // H24: NDCG@10 of brute-force retrieval vs label ground truth,
     // fixed-point discount table (pinned literals — no libm log)
-    "q_ndcg" -> ((s, d) => ops.Ann.ndcgAtK(Tables.embeddings(s, d))),
+    QueryDef("q_ndcg", (s, d) => ops.Ann.ndcgAtK(Tables.embeddings(s, d)),
+      oracle = """WITH v AS (
+        |  SELECT vec_id, CAST(label AS BIGINT) AS label, list_transform(
+        |    embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM embeddings),
+        |n AS (
+        |  SELECT vec_id, label, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |q AS (SELECT vec_id AS q_id, label AS q_label, svec AS q_svec,
+        |    norm2 AS q_norm2 FROM n WHERE vec_id < 10),
+        |sc AS (
+        |  SELECT q.q_id, q.q_label, n.vec_id, n.label AS h_label,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> q.q_svec[i]*n.svec[i])),
+        |      (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS
+        |        DOUBLE))) AS cos
+        |  FROM n JOIN q ON n.vec_id <> q.q_id),
+        |r AS (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
+        |    ORDER BY cos DESC, vec_id) AS INT) AS rnk
+        |  FROM sc),
+        |top AS (SELECT * FROM r WHERE rnk <= 10),
+        |dcg AS (
+        |  SELECT q_id, q_label,
+        |    CAST(SUM(CASE WHEN h_label = q_label THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n_rel_topk,
+        |    CAST(SUM(CASE WHEN h_label = q_label THEN
+        |      ([1000000, 630929, 500000, 430676, 386852,
+        |        356207, 333333, 315464, 301029, 289064])[rnk]
+        |      ELSE 0 END) AS BIGINT) AS dcg_fp
+        |  FROM top GROUP BY 1, 2),
+        |lc AS (SELECT CAST(label AS BIGINT) AS q_label,
+        |    CAST(count(*) AS BIGINT) AS n_label FROM embeddings GROUP BY 1),
+        |fin AS (
+        |  SELECT d.q_id, d.q_label, lc.n_label - 1 AS n_rel, d.n_rel_topk,
+        |    d.dcg_fp,
+        |    CASE WHEN lc.n_label - 1 <= 0 THEN 0
+        |      ELSE ([1000000, 1630929, 2130929, 2561605, 2948457,
+        |        3304664, 3637997, 3953461, 4254490, 4543554])
+        |        [CAST(least(lc.n_label - 1, 10) AS INT)] END AS idcg_fp
+        |  FROM dcg d JOIN lc ON d.q_label = lc.q_label)
+        |SELECT q_id, q_label, n_rel, n_rel_topk, dcg_fp,
+        |  CASE WHEN idcg_fp <= 0 THEN 0
+        |    ELSE CAST(1000000 * dcg_fp // idcg_fp AS BIGINT) END AS ndcg_ppm
+        |FROM fin ORDER BY q_id""".stripMargin),
 
     // H25: recall@3 of the IVF index vs the brute-force ground truth
-    "q_ann_recall" -> ((s, d) => ops.Ann.recallAtK(Tables.embeddings(s, d))),
+    QueryDef("q_ann_recall", (s, d) => ops.Ann.recallAtK(Tables.embeddings(s, d)),
+      oracle = """WITH v AS (
+        |  SELECT vec_id, label, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+        |  FROM embeddings),
+        |n AS (
+        |  SELECT vec_id, label, svec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+        |  FROM v),
+        |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2
+        |  FROM n WHERE vec_id < 10),
+        |bsc AS (
+        |  SELECT q.q_id, n.vec_id,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> q.q_svec[i]*n.svec[i])),
+        |      (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS
+        |        DOUBLE))) AS cos
+        |  FROM n JOIN q ON n.vec_id <> q.q_id),
+        |brute AS (
+        |  SELECT q_id, vec_id FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY q_id
+        |      ORDER BY cos DESC, vec_id) AS rnk FROM bsc) WHERE rnk <= 3),
+        |cent0 AS (
+        |  SELECT label, i, SUM(svec[i]) AS s
+        |  FROM n, range(1,65) t(i) GROUP BY label, i),
+        |cent AS (
+        |  SELECT label, list(s ORDER BY i) AS cvec FROM cent0
+        |  GROUP BY label),
+        |centn AS (
+        |  SELECT label, cvec,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(cvec, x -> x*x)), (a,b) -> a+b) AS cnorm2
+        |  FROM cent),
+        |routed0 AS (
+        |  SELECT q.q_id, q.q_svec, q.q_norm2, c.label,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> q.q_svec[i]*c.cvec[i])),
+        |      (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(c.cnorm2 AS
+        |        DOUBLE))) AS ccos
+        |  FROM q CROSS JOIN centn c),
+        |routed AS (
+        |  SELECT * FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY q_id
+        |      ORDER BY ccos DESC, label) AS crnk
+        |    FROM routed0) WHERE crnk = 1),
+        |isc AS (
+        |  SELECT r.q_id, n.vec_id,
+        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1,65), i -> r.q_svec[i]*n.svec[i])),
+        |      (a,b) -> a+b) AS DOUBLE)
+        |      / (sqrt(CAST(r.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS
+        |        DOUBLE))) AS cos
+        |  FROM n JOIN routed r ON n.label = r.label AND n.vec_id <> r.q_id),
+        |approx AS (
+        |  SELECT q_id, vec_id FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY q_id
+        |      ORDER BY cos DESC, vec_id) AS rnk FROM isc) WHERE rnk <= 3)
+        |SELECT b.q_id,
+        |  CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_hit,
+        |  CAST(1000000 * SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0
+        |    END) // 3 AS BIGINT) AS recall_ppm
+        |FROM brute b LEFT JOIN approx a
+        |  ON b.q_id = a.q_id AND b.vec_id = a.vec_id
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // H26: Cochran's Q — do three rule-raters fire at the same rate
     // over the same orders, per status (k-rater McNemar)
-    "q_cochran" -> ((s, d) =>
+    QueryDef("q_cochran", (s, d) =>
       ml.Evaluation.cochranQ(
         Tables.orders(s, d).select(col("o_orderstatus").as("slice"),
             col("o_orderkey").as("item"),
@@ -2043,11 +7465,43 @@ object SparkEntry {
             struct(lit("r_h1season").as("rater"),
               when(col("mth") <= 6, 1L).otherwise(0L).as("x")))).as("r"))
           .select(col("slice"), col("item"), col("r.rater").as("rater"),
-            col("r.x").as("x")))),
+            col("r.x").as("x"))),
+      oracle = """WITH base AS (
+        |  SELECT o_orderstatus AS slice, o_orderkey AS item,
+        |    CASE WHEN CAST(round(o_totalprice*100) AS BIGINT) > 15000000
+        |      THEN 1 ELSE 0 END AS r1,
+        |    CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
+        |      THEN 1 ELSE 0 END AS r2,
+        |    CASE WHEN month(o_orderdate) <= 6 THEN 1 ELSE 0 END AS r3
+        |  FROM orders),
+        |lng AS (
+        |  SELECT slice, item, 'r_bigticket' AS rater, r1 AS x FROM base
+        |  UNION ALL SELECT slice, item, 'r_priority', r2 FROM base
+        |  UNION ALL SELECT slice, item, 'r_h1season', r3 FROM base),
+        |byr AS (
+        |  SELECT slice, CAST(count(*) AS BIGINT) AS k,
+        |    CAST(SUM(cj) AS BIGINT) AS t,
+        |    CAST(SUM(CAST(cj AS HUGEINT)*cj) AS HUGEINT) AS sc2
+        |  FROM (SELECT slice, rater, CAST(SUM(x) AS BIGINT) AS cj
+        |        FROM lng GROUP BY 1, 2) c GROUP BY 1),
+        |byi AS (
+        |  SELECT slice, CAST(count(*) AS BIGINT) AS n_items,
+        |    CAST(SUM(CAST(ri AS HUGEINT)*ri) AS HUGEINT) AS sr2
+        |  FROM (SELECT slice, item, CAST(SUM(x) AS BIGINT) AS ri
+        |        FROM lng GROUP BY 1, 2) i GROUP BY 1),
+        |fin AS (
+        |  SELECT r.slice, r.k, i.n_items, r.t,
+        |    (r.k - 1) * (r.k * r.sc2 - CAST(r.t AS HUGEINT) * r.t) AS num,
+        |    CAST(r.k AS HUGEINT) * r.t - i.sr2 AS den
+        |  FROM byr r JOIN byi i ON r.slice = i.slice)
+        |SELECT slice, k, n_items, t, k - 1 AS df,
+        |  CASE WHEN den <= 0 THEN 0
+        |    ELSE CAST(1000 * num // den AS BIGINT) END AS q_milli
+        |FROM fin ORDER BY slice""".stripMargin),
 
     // H27: Kendall's W — do revenue, quantity and breadth rank the
     // suppliers concordantly (m=3 raters over the supplier items)
-    "q_kendall_w" -> ((s, d) =>
+    QueryDef("q_kendall_w", (s, d) =>
       ops.RankTests.kendallW(
         Tables.lineitem(s, d)
           .groupBy(col("l_suppkey").as("item"))
@@ -2061,19 +7515,85 @@ object SparkEntry {
             .as("r"))
           .select(col("item"), col("r.rater").as("rater"),
             col("r.v").as("v")),
-        m = 3)),
+        m = 3),
+      oracle = """WITH per AS (
+        |  SELECT l_suppkey AS item,
+        |    CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)
+        |      AS rev,
+        |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
+        |    CAST(count(DISTINCT l_partkey) AS BIGINT) AS npart
+        |  FROM lineitem GROUP BY 1),
+        |lng AS (
+        |  SELECT item, 'rev' AS rater, rev AS v FROM per
+        |  UNION ALL SELECT item, 'qty', qty FROM per
+        |  UNION ALL SELECT item, 'npart', npart FROM per),
+        |byval AS (
+        |  SELECT rater, v, CAST(count(*) AS BIGINT) AS t
+        |  FROM lng GROUP BY 1, 2),
+        |ranked AS (
+        |  SELECT *, 2 * CAST(coalesce(SUM(t) OVER (PARTITION BY rater
+        |      ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+        |      0) AS BIGINT) + t + 1 AS ar2
+        |  FROM byval),
+        |itemsums AS (
+        |  SELECT l.item, CAST(SUM(r.ar2) AS BIGINT) AS r2i
+        |  FROM lng l JOIN ranked r ON l.rater = r.rater AND l.v = r.v
+        |  GROUP BY 1),
+        |tie AS (
+        |  SELECT CAST(coalesce(SUM(CAST(t AS HUGEINT)*t*t - t), 0)
+        |    AS HUGEINT) AS tsum FROM ranked),
+        |base AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS n_items,
+        |    CAST(SUM(CAST(r2i AS HUGEINT)*r2i) AS HUGEINT) AS s2
+        |  FROM itemsums),
+        |fin AS (
+        |  SELECT n_items,
+        |    3*s2 - CAST(27 AS HUGEINT)*n_items*(n_items+1)*(n_items+1)
+        |      AS num,
+        |    CAST(9 AS HUGEINT)
+        |      * (CAST(n_items AS HUGEINT)*n_items*n_items - n_items)
+        |      - 3*tsum AS den
+        |  FROM base, tie)
+        |SELECT CAST(3 AS BIGINT) AS m, n_items,
+        |  CASE WHEN den <= 0 THEN 0
+        |    ELSE CAST(num * 1000000 // den AS BIGINT) END AS w_ppm,
+        |  CASE WHEN den <= 0 THEN 0
+        |    ELSE CAST(num * 1000000 * 3 * (n_items - 1) // den AS BIGINT)
+        |  END AS chi2_ppm
+        |FROM fin""".stripMargin),
 
     // E72: per-source OOV mass against the corpus top-2000 vocabulary
-    "q_oov" -> ((s, d) => ops.CorpusStats.oovRate(Tables.documents(s, d))),
+    QueryDef("q_oov", (s, d) => ops.CorpusStats.oovRate(Tables.documents(s, d)),
+      oracle = """WITH toks AS (
+        |  SELECT source, unnest(string_split(text, ' ')) AS w
+        |  FROM documents),
+        |ps AS (
+        |  SELECT source, w, CAST(count(*) AS BIGINT) AS f
+        |  FROM toks WHERE length(w) > 0 GROUP BY 1, 2),
+        |vocab AS (
+        |  SELECT w FROM (
+        |    SELECT w, CAST(SUM(f) AS BIGINT) AS cf FROM ps GROUP BY 1) c
+        |  ORDER BY cf DESC, w LIMIT 2000)
+        |SELECT source, CAST(SUM(f) AS BIGINT) AS n_tokens,
+        |  CAST(SUM(CASE WHEN v.w IS NULL THEN f ELSE 0 END) AS BIGINT)
+        |    AS oov_tokens,
+        |  CAST(SUM(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS oov_types,
+        |  CASE WHEN SUM(f) = 0 THEN 0
+        |    ELSE CAST(1000000 * SUM(CASE WHEN v.w IS NULL THEN f ELSE 0 END)
+        |      // SUM(f) AS BIGINT) END AS oov_ppm
+        |FROM ps LEFT JOIN vocab v ON ps.w = v.w
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // E73: leakage-safe split — E23's hash split keyed by the near-dup
     // cluster representative so twins never straddle train and test
-    "q_split_safe" -> ((s, d) =>
-      ops.TrainingData.clusterSafeSplit(Tables.documents(s, d))),
+    QueryDef("q_split_safe", (s, d) =>
+      ops.TrainingData.clusterSafeSplit(Tables.documents(s, d)),
+      oracle = sqlSplitSafeOracle),
 
     // H28: Krippendorff's α — 3 nominal band-raters over orders, the
     // season rater ABSTAINS on every third order (missing-tolerant)
-    "q_kripp" -> ((s, d) =>
+    QueryDef("q_kripp", (s, d) =>
       ml.Evaluation.krippendorffAlpha(
         Tables.orders(s, d).select(col("o_orderstatus").as("slice"),
             col("o_orderkey").as("item"),
@@ -2095,8 +7615,68 @@ object SparkEntry {
           .select(col("slice"), col("item"), col("r.rater").as("rater"),
             col("r.cat").as("cat"))
           .filter(!(col("rater") === "r_season" && col("item") % 3 === 0)),
-        maxRaters = 3))
-  )
+        maxRaters = 3),
+      oracle = """WITH base AS (
+        |  SELECT o_orderstatus AS slice, o_orderkey AS item,
+        |    CASE WHEN CAST(round(o_totalprice*100) AS BIGINT) < 5000000
+        |      THEN 'low'
+        |      WHEN CAST(round(o_totalprice*100) AS BIGINT) < 15000000
+        |      THEN 'mid' ELSE 'high' END AS c1,
+        |    CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 'high'
+        |      WHEN o_orderpriority = '3-MEDIUM' THEN 'mid'
+        |      ELSE 'low' END AS c2,
+        |    CASE WHEN month(o_orderdate) <= 4 THEN 'low'
+        |      WHEN month(o_orderdate) <= 8 THEN 'mid'
+        |      ELSE 'high' END AS c3
+        |  FROM orders),
+        |lng AS (
+        |  SELECT slice, item, c1 AS cat FROM base
+        |  UNION ALL SELECT slice, item, c2 FROM base
+        |  UNION ALL SELECT slice, item, c3 FROM base WHERE item % 3 <> 0),
+        |cells AS (
+        |  SELECT slice, item, cat, CAST(count(*) AS BIGINT) AS ncu
+        |  FROM lng GROUP BY 1, 2, 3),
+        |units AS (
+        |  SELECT slice, item, CAST(SUM(ncu) AS BIGINT) AS mu,
+        |    CAST(SUM(ncu*ncu) AS BIGINT) AS snc2
+        |  FROM cells GROUP BY 1, 2 HAVING SUM(ncu) >= 2),
+        |obs AS (
+        |  SELECT slice, CAST(count(*) AS BIGINT) AS n_items,
+        |    CAST(SUM((2 // (mu - 1)) * (mu*mu - snc2)) AS BIGINT)
+        |      AS o_scaled
+        |  FROM units GROUP BY 1),
+        |marg AS (
+        |  SELECT slice, CAST(count(*) AS BIGINT) AS n_cats,
+        |    CAST(SUM(nc) AS BIGINT) AS n,
+        |    CAST(SUM(CAST(nc AS HUGEINT)*nc) AS HUGEINT) AS msnc2
+        |  FROM (SELECT c.slice, c.cat, CAST(SUM(c.ncu) AS BIGINT) AS nc
+        |        FROM cells c JOIN units u
+        |          ON c.slice = u.slice AND c.item = u.item
+        |        GROUP BY 1, 2) mm GROUP BY 1),
+        |fin AS (
+        |  SELECT o.slice, o.n_items, m.n, m.n_cats, o.o_scaled,
+        |    CAST(m.n AS HUGEINT) * m.n - m.msnc2 AS de_num
+        |  FROM obs o JOIN marg m ON o.slice = m.slice)
+        |SELECT slice, n_items, n, n_cats,
+        |  CASE WHEN de_num <= 0 THEN 1000000
+        |    ELSE 1000000 - CAST(1000000 * CAST(n - 1 AS HUGEINT) * o_scaled
+        |      // (2 * de_num) AS BIGINT) END AS alpha_ppm
+        |FROM fin ORDER BY slice""".stripMargin)
+  ))
+
+  private def unique(defs: Seq[QueryDef]): Seq[QueryDef] = {
+    val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
+    defs
+  }
+
+  /** Query name → Spark plan, derived from [[registry]]. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(d => d.name -> d.build).toMap
+
+  /** Query name → default DuckDB twin, derived from [[registry]]. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(d => d.name -> d.oracle).toMap
 
   // ---------------------------------------------------------------------
   // DuckDB oracle twins. Shared CTE bodies keep the analog model
@@ -2487,6029 +8067,4 @@ object SparkEntry {
        |         || '$rounds rounds — raise rounds') END) = 1
        |GROUP BY src ORDER BY node""".stripMargin
   }
-
-  /** DuckDB twins, same column names/aliases as the Spark plans. */
-  /** Scaled-tier twin OVERRIDES (ADVICE r11 on q_spatial_join): a few
-    * oracles keep a fully independent (but super-linear) form for the
-    * small graded tiers, and switch to a resource-feasible rewrite only
-    * at 10x/100x. [[Verify]] swaps these in when the close exports a
-    * scaled-tier dump (`SPARK_GRAFT_SCALED_TWINS=1`); the driver's own
-    * sf0.01 correctness gate always sees the independent default. */
-  def scaledOracleOverrides: Map[String, String] = Map(
-    // grid-cell blocked neighbor join — same 3x3-cell candidate scheme
-    // as the engine, which is why it is NOT the default twin: a shared
-    // conceptual blocking error would pass both sides. At 100x the
-    // quadratic default enumerates ~2.8e10 pairs and never finishes;
-    // this form is linear in occupied cells.
-    "q_spatial_join" ->
-      """WITH pts AS MATERIALIZED (
-        |  SELECT event_id AS id,
-        |    ((event_id % 1000003) * 2654435761) % 1000000 AS x,
-        |    ((event_id % 1000033) * 2246822519) % 1000000 AS y
-        |  FROM events WHERE event_id % 17 = 0),
-        |g AS MATERIALIZED (
-        |  SELECT id, x, y, x // 20000 AS cx, y // 20000 AS cy FROM pts),
-        |pairs AS (
-        |  SELECT a.id AS id1, b.id AS id2,
-        |    GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS cheb
-        |  FROM g a
-        |  JOIN (SELECT unnest(range(-1, 2)) AS dx) ox ON true
-        |  JOIN (SELECT unnest(range(-1, 2)) AS dy) oy ON true
-        |  JOIN g b ON b.cx = a.cx + ox.dx AND b.cy = a.cy + oy.dy
-        |  WHERE a.id < b.id
-        |    AND ABS(a.x - b.x) <= 20000 AND ABS(a.y - b.y) <= 20000)
-        |SELECT id1, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(sum(cheb) AS BIGINT) AS cheb_sum,
-        |  CAST(min(cheb) AS BIGINT) AS cheb_min,
-        |  CAST(max(id2) AS BIGINT) AS id2_max
-        |FROM pairs GROUP BY id1 ORDER BY id1""".stripMargin,
-
-    // VERDICT r13 #3: the default q_bm25 / q_rrf_fusion twins peaked
-    // ~150 GB at 100x — NOT because the data is big (27M bigram
-    // instances), but because DuckDB inlines every non-materialized CTE
-    // reference, so the tf group-by ran 8x and the postings window 4x,
-    // each spilling its own copy. The override (a) pins the shared
-    // fragments with AS MATERIALIZED, (b) filters the bigram stream to
-    // QUERY-DOC TOKENS before tf — exact because the filter is by
-    // token, never by doc: every (doc, tok) instance of a query token
-    // survives, so tf, df, the df cap, and the per-token impact window
-    // are byte-identical for every token that can reach the scoring
-    // join, and (c) replaces the semantic leg's interpreted
-    // list_reduce integer dot with native list_dot_product over
-    // round(x*1e6) doubles — exact equality, not approximation: every
-    // partial sum is an integer below 2^53 (|component| <= 1e6, 64
-    // dims => dot <= 6.4e13), so the double arithmetic IS the integer
-    // arithmetic, followed by the same /(sqrt*sqrt) IEEE ops.
-    // Measured r14: 100x under a 16 GB cap in ~25 s each, results
-    // equal to the default twin at sf0.1/10x and to the r13 engine
-    // dumps at 100x. The independent default still guards sf0.01.
-    "q_bm25" -> ScaledTwins.bm25Override,
-    "q_rrf_fusion" -> ScaledTwins.rrfFusionOverride,
-
-    // VERDICT r13 #3 (extension): the default q_attribution twin
-    // materializes the 1.15e9-row (touch, conversion) pair set through
-    // TWO windows partitioned by conv_id. The override never windows:
-    // per-conversion touch counts and the last-touch argmax fold in ONE
-    // streaming group-by (the (ts, id) order packed into a single
-    // HUGEINT key for max_by — ts*2^63 + id, order-preserving since
-    // both are non-negative and id < 2^63), then per-channel metrics
-    // re-aggregate the conversion-grain frames. Exact: linear credit
-    // sums n_pairs * (1e6 div n_touch) per (channel, conv) instead of
-    // per pair — the same integers in the same groups. Measured r14:
-    // 100x in 23 s under 16 GB (default: >66 GB spill and climbing).
-    "q_attribution" -> ScaledTwins.attributionOverride,
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_pagerank" -> sqlPageRank,
-    "q_kcore" -> sqlKCore,
-
-    "q_bfs" ->
-      """WITH RECURSIVE p AS (
-        |  SELECT DISTINCT o_custkey AS cust, l_suppkey + 500000000 AS supp
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-        |e AS (SELECT cust AS src, supp AS dst FROM p
-        |      UNION ALL SELECT supp AS src, cust AS dst FROM p),
-        |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |reach(node, d) AS (
-        |  SELECT node, 0 FROM n
-        |  WHERE node % 1000000000 < 500000000 AND node % 211 = 0
-        |  UNION
-        |  SELECT e.dst, r.d + 1 FROM reach r JOIN e ON e.src = r.node
-        |  WHERE r.d < 4)
-        |SELECT CAST(node AS BIGINT) AS node, CAST(MIN(d) AS BIGINT) AS dist
-        |FROM reach GROUP BY node ORDER BY node""".stripMargin,
-
-    "q_cms_heavy" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM toks),
-        |tb AS (
-        |  SELECT tok, j,
-        |    CAST(('0x'||substr(md5('cm'||CAST(j AS VARCHAR)||':'||tok),1,8))
-        |      AS BIGINT) % 512 AS b
-        |  FROM toks, range(0,3) r(j)),
-        |sk AS (SELECT j, b, CAST(count(*) AS BIGINT) AS cnt
-        |       FROM tb GROUP BY 1, 2),
-        |dt AS (SELECT DISTINCT tok FROM toks),
-        |db AS (
-        |  SELECT tok, j,
-        |    CAST(('0x'||substr(md5('cm'||CAST(j AS VARCHAR)||':'||tok),1,8))
-        |      AS BIGINT) % 512 AS b
-        |  FROM dt, range(0,3) r(j)),
-        |est AS (
-        |  SELECT d.tok, CAST(MIN(sk.cnt) AS BIGINT) AS est_count
-        |  FROM db d JOIN sk ON sk.j = d.j AND sk.b = d.b
-        |  GROUP BY d.tok)
-        |SELECT tok, est_count FROM est, tot
-        |WHERE est_count * 200 >= n_total
-        |ORDER BY tok""".stripMargin,
-
-    "q_hashed_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks)
-        |SELECT doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin,
-        |  CAST(CASE WHEN SUM((b * 2654435761) % 2001 - 1000) > 0
-        |       THEN 1 ELSE 0 END AS BIGINT) AS label
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_kmv_distinct" ->
-      """WITH pairs AS (
-        |  SELECT c_nationkey AS nat, l_partkey AS pk
-        |  FROM customer
-        |  JOIN orders ON o_custkey = c_custkey
-        |  JOIN lineitem ON l_orderkey = o_orderkey),
-        |h AS (
-        |  SELECT DISTINCT nat,
-        |    CAST(('0x'||substr(md5('kmv:'||CAST(pk AS VARCHAR)),1,8))
-        |      AS BIGINT) AS h
-        |  FROM pairs),
-        |r AS (SELECT nat, h,
-        |        row_number() OVER (PARTITION BY nat ORDER BY h) AS rn
-        |      FROM h),
-        |t AS (SELECT nat, CAST(max(h) AS BIGINT) AS kth,
-        |        CAST(count(*) AS BIGINT) AS c
-        |      FROM r WHERE rn <= 64 GROUP BY nat)
-        |SELECT CAST(nat AS BIGINT) AS c_nationkey,
-        |  CAST(CASE WHEN c < 64 THEN c
-        |       ELSE (63 * 4294967296) // greatest(kth, 1) END AS BIGINT)
-        |    AS est_distinct
-        |FROM t ORDER BY 1""".stripMargin,
-
-    "q_sssp" ->
-      """WITH p AS (
-        |  SELECT o_custkey AS cust, l_suppkey + 500000000 AS supp,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |  GROUP BY 1, 2),
-        |e AS (SELECT cust AS src, supp AS dst, 1000000 // cnt AS w FROM p
-        |      UNION ALL SELECT supp, cust, 1000000 // cnt FROM p),
-        |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |d0 AS (SELECT node, CAST(0 AS BIGINT) AS cost FROM n
-        |       WHERE node % 1000000000 < 500000000 AND node % 211 = 0),
-        |r1 AS (SELECT e.dst AS node, MIN(d0.cost + e.w) AS cost
-        |       FROM d0 JOIN e ON e.src = d0.node GROUP BY 1),
-        |d1 AS (SELECT node, MIN(cost) AS cost FROM
-        |       (SELECT * FROM d0 UNION ALL SELECT * FROM r1) GROUP BY 1),
-        |r2 AS (SELECT e.dst AS node, MIN(d1.cost + e.w) AS cost
-        |       FROM d1 JOIN e ON e.src = d1.node GROUP BY 1),
-        |d2 AS (SELECT node, MIN(cost) AS cost FROM
-        |       (SELECT * FROM d1 UNION ALL SELECT * FROM r2) GROUP BY 1),
-        |r3 AS (SELECT e.dst AS node, MIN(d2.cost + e.w) AS cost
-        |       FROM d2 JOIN e ON e.src = d2.node GROUP BY 1),
-        |d3 AS (SELECT node, MIN(cost) AS cost FROM
-        |       (SELECT * FROM d2 UNION ALL SELECT * FROM r3) GROUP BY 1)
-        |SELECT CAST(node AS BIGINT) AS node, CAST(cost AS BIGINT) AS cost
-        |FROM d3 ORDER BY node""".stripMargin,
-
-    "q_inverted" ->
-      """WITH occ AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-        |stats AS (
-        |  SELECT term, CAST(count(*) AS BIGINT) AS cf,
-        |    CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |  FROM occ GROUP BY term),
-        |post AS (
-        |  SELECT term, list(doc_id ORDER BY doc_id) AS postings
-        |  FROM (SELECT DISTINCT term, doc_id FROM occ)
-        |  WHERE term IN (SELECT term FROM stats, nd
-        |                 WHERE df * 1000000 <= 780000 * n_docs)
-        |  GROUP BY term)
-        |SELECT s.term, s.df, s.cf,
-        |  COALESCE(array_to_string(p.postings, ','), '') AS postings
-        |FROM stats s LEFT JOIN post p USING (term)
-        |ORDER BY s.term""".stripMargin,
-
-    "q_auc" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(SUM(lab) AS BIGINT) AS np
-        |        FROM sc GROUP BY s),
-        |rk AS (SELECT *, COALESCE(SUM(n) OVER (ORDER BY s
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-        |       FROM bys),
-        |ag AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
-        |         CAST(SUM(n - np) AS BIGINT) AS n_neg,
-        |         CAST(SUM(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
-        |       FROM rk)
-        |SELECT n_pos, n_neg,
-        |  CAST((sum_r2 - n_pos * (n_pos + 1)) * 500000
-        |    // (n_pos * n_neg) AS BIGINT) AS auc_ppm
-        |FROM ag""".stripMargin,
-
-    // H10 twin: same scored frame, 16 Poisson(1)-reweighted replicates
-    // (md5-inverted CDF, integer thresholds), weighted rank-sum each
-    "q_auc_ci" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT d.doc_id, margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |ww AS (
-        |  SELECT q.r, q.s, q.lab,
-        |    CASE WHEN q.u < 1580030168 THEN 0 WHEN q.u < 3160060337 THEN 1
-        |         WHEN q.u < 3950075421 THEN 2 WHEN q.u < 4213413783 THEN 3
-        |         WHEN q.u < 4279248373 THEN 4 WHEN q.u < 4292415291 THEN 5
-        |         ELSE 6 END AS wgt
-        |  FROM (SELECT sc.doc_id, sc.s, sc.lab, r.r,
-        |          CAST(('0x'||substr(md5('boot:'||CAST(r.r AS VARCHAR)||':'||CAST(sc.doc_id AS VARCHAR)),1,8)) AS BIGINT) AS u
-        |        FROM sc CROSS JOIN range(0,16) r(r)) q),
-        |bys AS (
-        |  SELECT r, s,
-        |    CAST(SUM(CASE WHEN lab = 1 THEN wgt ELSE 0 END) AS BIGINT) AS wp,
-        |    CAST(SUM(CASE WHEN lab <> 1 THEN wgt ELSE 0 END) AS BIGINT) AS wn
-        |  FROM ww GROUP BY r, s),
-        |rk AS (
-        |  SELECT *, COALESCE(SUM(wn) OVER (PARTITION BY r ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumn
-        |  FROM bys),
-        |ag AS (
-        |  SELECT r, CAST(SUM(wp) AS BIGINT) AS w_pos,
-        |    CAST(SUM(wn) AS BIGINT) AS w_neg,
-        |    CAST(SUM(wp * (2 * cumn + wn)) AS BIGINT) AS u2
-        |  FROM rk GROUP BY r)
-        |SELECT CAST(r AS BIGINT) AS r, w_pos, w_neg,
-        |  CAST(u2 * 500000 // greatest(w_pos * w_neg, 1) AS BIGINT) AS auc_ppm
-        |FROM ag ORDER BY r""".stripMargin,
-
-    // H9 twin: the four rule bodies provide the labels (each body
-    // carries its own WITH scope; the outer clients CTE is shadowed
-    // inside them, deliberately identically)
-    "q_fraud_auc" ->
-      s"""WITH $sqlClients,
-         |mart AS (
-         |  SELECT DISTINCT client_key FROM (
-         |    SELECT client_key FROM $fraudPassportBody
-         |    UNION ALL SELECT client_key FROM $fraudAccountBody
-         |    UNION ALL SELECT client_key FROM $fraudCityBody
-         |    UNION ALL SELECT client_key FROM $fraudAmountBody)),
-         |scored AS (
-         |  SELECT c.c_custkey,
-         |    (CASE WHEN DATE '2024-06-30' > c.passport_valid_to
-         |       THEN 400 ELSE 0 END
-         |     + CASE WHEN c.c_acctbal < 0 THEN 300 ELSE 0 END
-         |     + (c.c_custkey * 37) % 100) AS s,
-         |    CASE WHEN m.client_key IS NULL THEN 0 ELSE 1 END AS lab
-         |  FROM clients c LEFT JOIN mart m ON c.c_custkey = m.client_key),
-         |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-         |          CAST(SUM(lab) AS BIGINT) AS np
-         |        FROM scored GROUP BY s),
-         |rk AS (SELECT *, COALESCE(SUM(n) OVER (ORDER BY s
-         |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-         |       FROM bys),
-         |ag AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
-         |         CAST(SUM(n - np) AS BIGINT) AS n_neg,
-         |         CAST(SUM(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
-         |       FROM rk)
-         |SELECT n_pos, n_neg,
-         |  CAST((sum_r2 - n_pos * (n_pos + 1)) * 500000
-         |    // (n_pos * n_neg) AS BIGINT) AS auc_ppm
-         |FROM ag""".stripMargin,
-
-    "q_lift" ->
-      s"""WITH $sqlClients,
-         |mart AS (
-         |  SELECT DISTINCT client_key FROM (
-         |    SELECT client_key FROM $fraudPassportBody
-         |    UNION ALL SELECT client_key FROM $fraudAccountBody
-         |    UNION ALL SELECT client_key FROM $fraudCityBody
-         |    UNION ALL SELECT client_key FROM $fraudAmountBody)),
-         |scored AS (
-         |  SELECT c.c_custkey,
-         |    (CASE WHEN DATE '2024-06-30' > c.passport_valid_to
-         |       THEN 400 ELSE 0 END
-         |     + CASE WHEN c.c_acctbal < 0 THEN 300 ELSE 0 END
-         |     + (c.c_custkey * 37) % 100) AS s,
-         |    CASE WHEN m.client_key IS NULL THEN 0 ELSE 1 END AS lab
-         |  FROM clients c LEFT JOIN mart m ON c.c_custkey = m.client_key),
-         |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-         |          CAST(SUM(lab) AS BIGINT) AS np
-         |        FROM scored GROUP BY s),
-         |rk AS (SELECT *,
-         |         COALESCE(SUM(n) OVER (ORDER BY s DESC
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |           AS cum_lt,
-         |         SUM(n) OVER () AS ntot, SUM(np) OVER () AS ptot
-         |       FROM bys),
-         |bk AS (SELECT LEAST(9, 10 * cum_lt // ntot) + 1 AS bucket,
-         |         n, np, ntot, ptot
-         |       FROM rk),
-         |ag AS (SELECT bucket, CAST(SUM(n) AS BIGINT) AS n,
-         |         CAST(SUM(np) AS BIGINT) AS n_pos,
-         |         MAX(ntot) AS ntot, MAX(ptot) AS ptot
-         |       FROM bk GROUP BY bucket),
-         |cu AS (SELECT *,
-         |         SUM(n) OVER (ORDER BY bucket
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_n,
-         |         SUM(n_pos) OVER (ORDER BY bucket
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_pos
-         |       FROM ag)
-         |SELECT CAST(bucket AS BIGINT) AS bucket, n, n_pos,
-         |  CAST(cum_n AS BIGINT) AS cum_n,
-         |  CAST(cum_pos AS BIGINT) AS cum_pos,
-         |  CAST(cum_pos * 1000000 // ptot AS BIGINT) AS gain_ppm,
-         |  CAST(CAST(cum_pos AS HUGEINT) * ntot * 1000000
-         |    // (CAST(cum_n AS HUGEINT) * ptot) AS BIGINT)
-         |    AS lift_ppm
-         |FROM cu ORDER BY bucket""".stripMargin,
-
-    "q_calibration" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id))
-        |SELECT
-        |  CAST(((margin + 1000000000) // 500) * 500 - 1000000000 AS BIGINT)
-        |    AS bin,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(SUM(lab) AS BIGINT) AS n_pos,
-        |  CAST(SUM(margin) AS BIGINT) AS sum_score,
-        |  CAST((SUM(lab) * 1000000) // count(*) AS BIGINT) AS pos_rate_ppm
-        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // B24: anti join on the key-domain contraction; %97 dims withheld
-    // in both engines
-    "q_inferred" ->
-      """WITH f AS (
-        |  SELECT o_custkey AS inferred_key, o_orderdate AS ts FROM orders
-        |  WHERE o_custkey IS NOT NULL),
-        |agg AS (
-        |  SELECT inferred_key, CAST(count(*) AS BIGINT) AS n_pending_facts,
-        |    min(ts) AS first_seen, max(ts) AS last_seen
-        |  FROM f GROUP BY 1),
-        |dim AS (SELECT DISTINCT c_custkey FROM customer
-        |  WHERE c_custkey % 97 != 0)
-        |SELECT a.inferred_key, n_pending_facts, first_seen, last_seen,
-        |  CAST(1 AS BIGINT) AS inferred_flg
-        |FROM agg a LEFT JOIN dim d ON d.c_custkey = a.inferred_key
-        |WHERE d.c_custkey IS NULL
-        |ORDER BY inferred_key""".stripMargin,
-
-    // H15: tie groups contribute their positive mass at the group's
-    // own precision; per-level ppm floors identical both engines
-    "q_ap" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(lab) AS BIGINT) AS np
-        |  FROM sc GROUP BY 1),
-        |cw AS (SELECT *,
-        |    CAST(sum(np) OVER (ORDER BY s DESC ROWS UNBOUNDED PRECEDING)
-        |      AS BIGINT) AS cum_tp,
-        |    CAST(sum(n) OVER (ORDER BY s DESC ROWS UNBOUNDED PRECEDING)
-        |      AS BIGINT) AS cum_n
-        |  FROM bys),
-        |pp AS (SELECT *, 1000000 * cum_tp // cum_n AS prec_ppm FROM cw)
-        |SELECT CAST(sum(np) AS BIGINT) AS n_pos,
-        |  CAST(sum(n - np) AS BIGINT) AS n_neg,
-        |  CAST(sum(np * prec_ppm) // sum(np) AS BIGINT) AS ap_ppm,
-        |  CAST(1000000 * sum(np) // (sum(np) + sum(n - np)) AS BIGINT)
-        |    AS prevalence_ppm
-        |FROM pp""".stripMargin,
-
-    // H14: discordant-cell chi-square, no continuity correction
-    // (pinned); one double division of exact integers (D71 discipline)
-    "q_mcnemar" -> {
-      val lex = Map(
-        "de" -> "['join','merge','sort','order']",
-        "en" -> "['the','a','of','key']",
-        "es" -> "['data','row','table','column']",
-        "fr" -> "['query','filter','group','window']",
-        "zh" -> "['spark','stream','batch','vector']")
-      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
-        .mkString(",\n    ")
-      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"WHEN score_$c = g THEN '$c'").mkString(" ")
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-         |  FROM documents),
-         |f AS (
-         |  SELECT doc_id,
-         |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-         |  FROM toks),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-         |  FROM f GROUP BY doc_id),
-         |t2 AS (SELECT doc_id, lang, string_split(text,' ') AS toks2
-         |  FROM documents),
-         |s2 AS (SELECT doc_id, lang,
-         |    $scores
-         |  FROM t2),
-         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
-         |    score_fr, score_zh) AS g FROM s2),
-         |p AS (SELECT doc_id, lang,
-         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
-         |j AS (
-         |  SELECT CASE WHEN m.margin > 0 THEN 1 ELSE 0 END AS pred_a,
-         |    CASE WHEN p.pred_lang = 'en' THEN 1 ELSE 0 END AS pred_b,
-         |    CASE WHEN p.lang = 'en' THEN 1 ELSE 0 END AS label
-         |  FROM m JOIN p USING (doc_id)),
-         |cells AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN pred_a = label THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_a_right,
-         |    CAST(sum(CASE WHEN pred_b = label THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_b_right,
-         |    CAST(sum(CASE WHEN pred_a = label AND pred_b != label
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS b_cell,
-         |    CAST(sum(CASE WHEN pred_a != label AND pred_b = label
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS c_cell
-         |  FROM j)
-         |SELECT n, n_a_right, n_b_right,
-         |  CAST(1000000 * n_a_right // n AS BIGINT) AS acc_a_ppm,
-         |  CAST(1000000 * n_b_right // n AS BIGINT) AS acc_b_ppm,
-         |  b_cell, c_cell,
-         |  CASE WHEN b_cell + c_cell = 0 THEN 0.0
-         |    ELSE CAST((b_cell - c_cell) * (b_cell - c_cell) AS DOUBLE)
-         |      / CAST(b_cell + c_cell AS DOUBLE) END AS chi2
-         |FROM cells""".stripMargin
-    },
-
-    // H13: cell-contracted Kendall tau-b; one orientation per
-    // unordered cell pair; sqrt is IEEE-correctly-rounded both engines
-    "q_kendall" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
-        |  FROM m JOIN documents d USING (doc_id)),
-        |cells AS (SELECT va AS i, vb AS j, CAST(count(*) AS BIGINT) AS n
-        |  FROM sc GROUP BY 1, 2),
-        |conc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
-        |    AS c_pairs
-        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j > a.j),
-        |disc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
-        |    AS d_pairs
-        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j < a.j),
-        |ma AS (SELECT CAST(sum(t) AS BIGINT) AS ntot,
-        |    CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_a
-        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY i)),
-        |mb AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_b
-        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY j))
-        |SELECT ntot AS n, c_pairs, d_pairs,
-        |  ntot * (ntot - 1) // 2 AS n0, ties_a, ties_b,
-        |  CASE WHEN ntot * (ntot - 1) // 2 = ties_a
-        |         OR ntot * (ntot - 1) // 2 = ties_b THEN 0.0
-        |  ELSE CAST(c_pairs - d_pairs AS DOUBLE)
-        |    / sqrt(CAST(ntot * (ntot - 1) // 2 - ties_a AS DOUBLE)
-        |         * CAST(ntot * (ntot - 1) // 2 - ties_b AS DOUBLE))
-        |  END AS tau_b
-        |FROM conc, disc, ma, mb""".stripMargin,
-
-    // rank-association twin: the q_kendall CTEs with the gamma /
-    // Somers' D ratios instead of τ-b's geometric-mean denominator
-    "q_rank_assoc" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
-        |  FROM m JOIN documents d USING (doc_id)),
-        |cells AS (SELECT va AS i, vb AS j, CAST(count(*) AS BIGINT) AS n
-        |  FROM sc GROUP BY 1, 2),
-        |conc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
-        |    AS c_pairs
-        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j > a.j),
-        |disc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
-        |    AS d_pairs
-        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j < a.j),
-        |ma AS (SELECT CAST(sum(t) AS BIGINT) AS ntot,
-        |    CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_a
-        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY i)),
-        |mb AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_b
-        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY j))
-        |SELECT ntot AS n, c_pairs, d_pairs,
-        |  ntot * (ntot - 1) // 2 AS n0, ties_a, ties_b,
-        |  CASE WHEN c_pairs + d_pairs = 0 THEN 0.0
-        |    ELSE CAST(c_pairs - d_pairs AS DOUBLE)
-        |      / CAST(c_pairs + d_pairs AS DOUBLE) END AS gamma,
-        |  CASE WHEN ntot * (ntot - 1) // 2 = ties_a THEN 0.0
-        |    ELSE CAST(c_pairs - d_pairs AS DOUBLE)
-        |      / CAST(ntot * (ntot - 1) // 2 - ties_a AS DOUBLE) END
-        |    AS somers_d_ba,
-        |  CASE WHEN ntot * (ntot - 1) // 2 = ties_b THEN 0.0
-        |    ELSE CAST(c_pairs - d_pairs AS DOUBLE)
-        |      / CAST(ntot * (ntot - 1) // 2 - ties_b AS DOUBLE) END
-        |    AS somers_d_ab
-        |FROM conc, disc, ma, mb""".stripMargin,
-
-    // H12: Murphy decomposition — clamped-linear link (slope 25) to
-    // ppm, 50000-ppm forecast bins at midpoints, all terms e-12 with
-    // the floor-rounding identity gap emitted as a self-check
-    "q_brier" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bb AS (
-        |  SELECT (least(999999, greatest(0, 500000 + margin * 25))
-        |      // 50000) * 50000 + 25000 AS phat,
-        |    CAST(count(*) AS BIGINT) AS n_k,
-        |    CAST(sum(lab) AS BIGINT) AS np_k
-        |  FROM sc GROUP BY 1),
-        |tt AS (
-        |  SELECT phat, n_k, np_k,
-        |    CAST(sum(n_k) OVER () AS BIGINT) AS nn,
-        |    CAST(sum(np_k) OVER () AS BIGINT) AS pp
-        |  FROM bb),
-        |ob AS (
-        |  SELECT *, 1000000 * pp // nn AS obar,
-        |    1000000 * np_k // n_k AS obark
-        |  FROM tt),
-        |ag AS (
-        |  SELECT max(nn) AS n, max(pp) AS n_pos, max(obar) AS obar_ppm,
-        |    sum(CAST(np_k AS HUGEINT) * (phat - 1000000) * (phat - 1000000)
-        |      + CAST(n_k - np_k AS HUGEINT) * phat * phat) AS bsum,
-        |    sum(CAST(n_k AS HUGEINT) * (phat - obark) * (phat - obark))
-        |      AS rsum,
-        |    sum(CAST(n_k AS HUGEINT) * (obark - obar) * (obark - obar))
-        |      AS ssum
-        |  FROM ob)
-        |SELECT n, n_pos, obar_ppm,
-        |  CAST(bsum // n AS BIGINT) AS brier_e12,
-        |  CAST(rsum // n AS BIGINT) AS reliability_e12,
-        |  CAST(ssum // n AS BIGINT) AS resolution_e12,
-        |  obar_ppm * (1000000 - obar_ppm) AS uncertainty_e12,
-        |  CAST(bsum // n AS BIGINT) - (CAST(rsum // n AS BIGINT)
-        |    - CAST(ssum // n AS BIGINT)
-        |    + obar_ppm * (1000000 - obar_ppm)) AS identity_gap_e12
-        |FROM ag""".stripMargin,
-
-    // B25: full outer header⋈detail-sums on the key domain, exact
-    // cpp money, octave buckets for the mismatch mass
-    "q_recon" ->
-      """WITH items AS (
-        |  SELECT l_orderkey AS k,
-        |    CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-        |      * (100 - CAST(round(l_discount*100) AS BIGINT))
-        |      * (100 + CAST(round(l_tax*100) AS BIGINT))) AS BIGINT)
-        |      AS items_cpp
-        |  FROM lineitem GROUP BY 1),
-        |heads AS (SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice*100) AS BIGINT) * 10000 AS head_cpp
-        |  FROM orders),
-        |j AS (
-        |  SELECT CASE WHEN i.items_cpp IS NULL THEN 'orphan_order'
-        |              WHEN h.head_cpp IS NULL THEN 'orphan_item'
-        |              WHEN h.head_cpp = i.items_cpp THEN 'matched'
-        |              ELSE 'delta' END AS status,
-        |    coalesce(h.head_cpp, 0) - coalesce(i.items_cpp, 0) AS delta
-        |  FROM heads h FULL OUTER JOIN items i ON h.k = i.k),
-        |b AS (
-        |  SELECT status,
-        |    CAST(CASE WHEN status = 'delta'
-        |      THEN length(to_base(abs(delta), 2)) ELSE 0 END AS BIGINT)
-        |      AS delta_bits,
-        |    delta
-        |  FROM j)
-        |SELECT status, delta_bits, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(delta AS HUGEINT)) AS BIGINT) AS net_delta_cpp,
-        |  CAST(sum(CAST(abs(delta) AS HUGEINT)) AS BIGINT)
-        |    AS abs_delta_cpp
-        |FROM b GROUP BY 1, 2 ORDER BY status, delta_bits""".stripMargin,
-
-    // H21: H4's rank-sum per slice; degenerate slices pinned 500000
-    "q_auc_slices" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT d.source AS slice, m.margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |cells AS (SELECT slice, s, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(lab) AS BIGINT) AS np
-        |  FROM sc GROUP BY 1, 2),
-        |cum AS (SELECT *,
-        |    CAST(coalesce(sum(n) OVER (PARTITION BY slice ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cum
-        |  FROM cells),
-        |ag AS (SELECT slice, CAST(sum(np) AS BIGINT) AS n_pos,
-        |    CAST(sum(n - np) AS BIGINT) AS n_neg,
-        |    CAST(sum(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
-        |  FROM cum GROUP BY 1)
-        |SELECT slice, n_pos, n_neg,
-        |  CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN 500000
-        |    ELSE (sum_r2 - n_pos * (n_pos + 1)) * 500000
-        |      // (n_pos * n_neg) END AS BIGINT) AS auc_ppm
-        |FROM ag ORDER BY slice""".stripMargin,
-
-    // H20: pair masses off the completed t×sbin grid; admissibility
-    // pinned (event drives; same-t censored comparable; event-event
-    // same-t not); ties half-credit via 500000*(2c+t)
-    "q_cindex" ->
-      """WITH j AS (
-        |  SELECT epoch_us(l.l_shipdate) // 86400000000 AS ship_day,
-        |    epoch_us(o.o_orderdate) // 86400000000 AS order_day,
-        |    CAST(round(o.o_totalprice * 100) AS BIGINT) // 5000000
-        |      AS sbin
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |cut AS (SELECT max(ship_day) - 30 AS cutoff FROM j),
-        |obs AS (
-        |  SELECT CASE WHEN ship_day <= cutoff THEN 1 ELSE 0 END AS e,
-        |    CASE WHEN ship_day <= cutoff THEN ship_day - order_day
-        |         ELSE cutoff - order_day END AS t, sbin
-        |  FROM j CROSS JOIN cut WHERE order_day <= cutoff),
-        |cells AS (SELECT t, sbin AS s, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(e) AS BIGINT) AS ne FROM obs GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT td.t, sd.s, coalesce(c.n, 0) AS n,
-        |    coalesce(c.ne, 0) AS ne
-        |  FROM (SELECT DISTINCT t FROM cells) td
-        |  CROSS JOIN (SELECT DISTINCT s FROM cells) sd
-        |  LEFT JOIN cells c USING (t, s)),
-        |g AS (
-        |  SELECT t, s, n, ne,
-        |    CAST(sum(n) OVER (PARTITION BY s)
-        |      - sum(n) OVER (PARTITION BY s ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS later,
-        |    n - ne AS cens
-        |  FROM grid),
-        |g2 AS (
-        |  SELECT *,
-        |    CAST(coalesce(sum(later) OVER (PARTITION BY t ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS later_lt,
-        |    CAST(coalesce(sum(later) OVER (PARTITION BY t ORDER BY s DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS later_gt,
-        |    CAST(coalesce(sum(cens) OVER (PARTITION BY t ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cens_lt,
-        |    CAST(coalesce(sum(cens) OVER (PARTITION BY t ORDER BY s DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS cens_gt
-        |  FROM g),
-        |ag AS (
-        |  SELECT CAST(sum(ne * (later_lt + cens_lt)) AS BIGINT) AS conc,
-        |    CAST(sum(ne * (later_gt + cens_gt)) AS BIGINT) AS disc,
-        |    CAST(sum(ne * (later + cens)) AS BIGINT) AS tied
-        |  FROM g2 WHERE ne > 0)
-        |SELECT conc, disc, tied, conc + disc + tied AS comparable,
-        |  CAST(CASE WHEN conc + disc + tied = 0 THEN 500000
-        |    ELSE 500000 * CAST(2 * conc + tied AS HUGEINT)
-        |      // (conc + disc + tied) END AS BIGINT) AS c_ppm
-        |FROM ag""".stripMargin,
-
-    // H19: observed (truth, pred) cells with exact row/col shares
-    "q_confusion" -> {
-      val lex = Map(
-        "de" -> "['join','merge','sort','order']",
-        "en" -> "['the','a','of','key']",
-        "es" -> "['data','row','table','column']",
-        "fr" -> "['query','filter','group','window']",
-        "zh" -> "['spark','stream','batch','vector']")
-      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
-        .mkString(",\n    ")
-      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"WHEN score_$c = g THEN '$c'").mkString(" ")
-      s"""WITH t2 AS (SELECT doc_id, lang, string_split(text,' ') AS toks2
-         |  FROM documents),
-         |s2 AS (SELECT doc_id, lang,
-         |    $scores
-         |  FROM t2),
-         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
-         |    score_fr, score_zh) AS g FROM s2),
-         |p AS (SELECT doc_id, lang,
-         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
-         |cells AS (SELECT lang AS truth, pred_lang AS pred,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM p GROUP BY 1, 2),
-         |m AS (SELECT truth, pred, n,
-         |    CAST(sum(n) OVER (PARTITION BY truth) AS BIGINT) AS row_n,
-         |    CAST(sum(n) OVER (PARTITION BY pred) AS BIGINT) AS col_n
-         |  FROM cells)
-         |SELECT truth, pred, n, row_n, col_n,
-         |  CAST(1000000 * n // row_n AS BIGINT) AS row_share_ppm,
-         |  CAST(1000000 * n // col_n AS BIGINT) AS col_share_ppm
-         |FROM m ORDER BY truth, pred""".stripMargin
-    },
-
-    // E67: Σmin TV between the doc_id-parity halves, no self-join
-    "q_tv_snapshots" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id % 2 AS snap,
-        |    unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |counts AS (
-        |  SELECT source, w,
-        |    CAST(sum(CASE WHEN snap = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS f0,
-        |    CAST(sum(CASE WHEN snap = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS f1
-        |  FROM toks WHERE len(w) > 0 GROUP BY 1, 2),
-        |tt AS (
-        |  SELECT source, f0, f1,
-        |    CAST(sum(f0) OVER (PARTITION BY source) AS BIGINT) AS t0,
-        |    CAST(sum(f1) OVER (PARTITION BY source) AS BIGINT) AS t1
-        |  FROM counts),
-        |ag AS (
-        |  SELECT source, max(t0) AS t0, max(t1) AS t1,
-        |    sum(least(CAST(f0 AS HUGEINT) * t1, CAST(f1 AS HUGEINT) * t0))
-        |      AS smin
-        |  FROM tt GROUP BY 1)
-        |SELECT source, t0, t1,
-        |  CAST(CASE WHEN t0 = 0 OR t1 = 0 THEN 1000000
-        |    ELSE 1000000 * (CAST(t0 AS HUGEINT) * t1 - smin)
-        |      // (CAST(t0 AS HUGEINT) * t1) END AS BIGINT) AS tv_ppm
-        |FROM ag ORDER BY source""".stripMargin,
-
-    // H16: exact cross-multiplied kappa — sign-split ppm, chance term
-    // off the marginal product join, never floored p_o/p_e
-    "q_kappa" -> {
-      val lex = Map(
-        "de" -> "['join','merge','sort','order']",
-        "en" -> "['the','a','of','key']",
-        "es" -> "['data','row','table','column']",
-        "fr" -> "['query','filter','group','window']",
-        "zh" -> "['spark','stream','batch','vector']")
-      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
-        .mkString(",\n    ")
-      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"WHEN score_$c = g THEN '$c'").mkString(" ")
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-         |  FROM documents),
-         |f AS (
-         |  SELECT doc_id,
-         |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-         |  FROM toks),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-         |  FROM f GROUP BY doc_id),
-         |t2 AS (SELECT doc_id, string_split(text,' ') AS toks2
-         |  FROM documents),
-         |s2 AS (SELECT doc_id,
-         |    $scores
-         |  FROM t2),
-         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
-         |    score_fr, score_zh) AS g FROM s2),
-         |p AS (SELECT doc_id,
-         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
-         |j AS (
-         |  SELECT CASE WHEN m.margin > 0 THEN 1 ELSE 0 END AS pred_a,
-         |    CASE WHEN p.pred_lang = 'en' THEN 1 ELSE 0 END AS pred_b
-         |  FROM m JOIN p USING (doc_id)),
-         |cells AS (SELECT pred_a, pred_b, CAST(count(*) AS BIGINT) AS n
-         |  FROM j GROUP BY 1, 2),
-         |ra AS (SELECT pred_a AS k, CAST(sum(n) AS BIGINT) AS r
-         |  FROM cells GROUP BY 1),
-         |rb AS (SELECT pred_b AS k, CAST(sum(n) AS BIGINT) AS c
-         |  FROM cells GROUP BY 1),
-         |ch AS (SELECT coalesce(sum(CAST(r AS HUGEINT) * c),
-         |    CAST(0 AS HUGEINT)) AS rc
-         |  FROM ra JOIN rb USING (k)),
-         |tt AS (SELECT CAST(sum(n) AS BIGINT) AS ntot,
-         |    CAST(sum(CASE WHEN pred_a = pred_b THEN n ELSE 0 END)
-         |      AS BIGINT) AS agree
-         |  FROM cells),
-         |fin AS (SELECT ntot, agree, rc,
-         |    CAST(ntot AS HUGEINT) * agree - rc AS num,
-         |    CAST(ntot AS HUGEINT) * ntot - rc AS den
-         |  FROM tt, ch)
-         |SELECT ntot AS n, agree,
-         |  CAST(1000000 * agree // ntot AS BIGINT) AS po_ppm,
-         |  CAST(1000000 * rc // (CAST(ntot AS HUGEINT) * ntot)
-         |    AS BIGINT) AS pe_ppm,
-         |  CAST(CASE WHEN den = 0 THEN 0
-         |    WHEN num >= 0 THEN 1000000 * num // den
-         |    ELSE -(1000000 * (-num) // den) END AS BIGINT) AS kappa_ppm
-         |FROM fin""".stripMargin
-    },
-
-    // H17: exact cells; MCC = one double step in pinned literal order
-    // (each marginal factor < 2^53 exactly representable, the H13 sqrt
-    // precedent); zero marginal pins 0.0
-    "q_mcc" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |cells AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN margin >= 1 AND lab = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS tp,
-        |    CAST(sum(CASE WHEN margin >= 1 AND lab = 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS fp,
-        |    CAST(sum(CASE WHEN margin < 1 AND lab = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS fn,
-        |    CAST(sum(CASE WHEN margin < 1 AND lab = 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS tn
-        |  FROM sc)
-        |SELECT tp, fp, fn, tn,
-        |  CASE WHEN tp + fp = 0 OR tp + fn = 0 OR tn + fp = 0
-        |      OR tn + fn = 0 THEN 0.0
-        |    ELSE CAST(tp * tn - fp * fn AS DOUBLE)
-        |      / sqrt(CAST(tp + fp AS DOUBLE) * CAST(tp + fn AS DOUBLE)
-        |           * CAST(tn + fp AS DOUBLE) * CAST(tn + fn AS DOUBLE))
-        |  END AS mcc
-        |FROM cells""".stripMargin,
-
-    // H18: ECE with the weight-before-floor exact form (one floor at
-    // the final div n); MCE's inner floor is on a non-negative ratio
-    "q_ece" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bb AS (
-        |  SELECT (least(999999, greatest(0, 500000 + margin * 25))
-        |      // 50000) * 50000 + 25000 AS phat,
-        |    CAST(count(*) AS BIGINT) AS n_k,
-        |    CAST(sum(lab) AS BIGINT) AS np_k
-        |  FROM sc GROUP BY 1),
-        |ag AS (
-        |  SELECT CAST(sum(n_k) AS BIGINT) AS n,
-        |    CAST(count(*) AS BIGINT) AS n_bins,
-        |    sum(abs(CAST(1000000 AS HUGEINT) * np_k
-        |      - CAST(phat AS HUGEINT) * n_k)) AS gsum,
-        |    CAST(max(abs(1000000 * np_k // n_k - phat)) AS BIGINT)
-        |      AS mce_ppm
-        |  FROM bb)
-        |SELECT n, n_bins, CAST(gsum // n AS BIGINT) AS ece_ppm, mce_ppm
-        |FROM ag""".stripMargin,
-
-    "q_kmv_setops" ->
-      """WITH t AS (
-        |  SELECT CASE WHEN year(l_shipdate) = 1995 THEN 0 ELSE 1 END AS side,
-        |    l_partkey AS pk
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 2001)),
-        |h AS (
-        |  SELECT DISTINCT side,
-        |    CAST(('0x'||substr(md5('kmv:'||CAST(pk AS VARCHAR)),1,8))
-        |      AS BIGINT) AS h
-        |  FROM t),
-        |ra AS (SELECT h, row_number() OVER (ORDER BY h) AS rn
-        |       FROM h WHERE side = 0),
-        |rb AS (SELECT h, row_number() OVER (ORDER BY h) AS rn
-        |       FROM h WHERE side = 1),
-        |ru AS (SELECT h, row_number() OVER (ORDER BY h) AS rn
-        |       FROM (SELECT DISTINCT h FROM h)),
-        |sa AS (SELECT CAST(count(*) AS BIGINT) AS cnt,
-        |         CAST(max(h) AS BIGINT) AS kth FROM ra WHERE rn <= 64),
-        |sb AS (SELECT CAST(count(*) AS BIGINT) AS cnt,
-        |         CAST(max(h) AS BIGINT) AS kth FROM rb WHERE rn <= 64),
-        |su AS (SELECT CAST(count(*) AS BIGINT) AS cnt,
-        |         CAST(max(h) AS BIGINT) AS kth FROM ru WHERE rn <= 64),
-        |rho AS (SELECT CAST(count(*) AS BIGINT) AS rho
-        |        FROM (SELECT h FROM ru WHERE rn <= 64) u
-        |        JOIN (SELECT h FROM ra WHERE rn <= 64) a USING (h)
-        |        JOIN (SELECT h FROM rb WHERE rn <= 64) b USING (h)),
-        |es AS (
-        |  SELECT
-        |    CAST(CASE WHEN sa.cnt < 64 THEN sa.cnt
-        |         ELSE (63 * 4294967296) // greatest(sa.kth, 1) END AS BIGINT)
-        |      AS est_a,
-        |    CAST(CASE WHEN sb.cnt < 64 THEN sb.cnt
-        |         ELSE (63 * 4294967296) // greatest(sb.kth, 1) END AS BIGINT)
-        |      AS est_b,
-        |    CAST(CASE WHEN su.cnt < 64 THEN su.cnt
-        |         ELSE (63 * 4294967296) // greatest(su.kth, 1) END AS BIGINT)
-        |      AS est_union,
-        |    su.cnt AS u_cnt, rho.rho
-        |  FROM sa, sb, su, rho),
-        |f AS (
-        |  SELECT est_a, est_b, est_union,
-        |    CAST(CASE WHEN u_cnt < 64 THEN rho
-        |         ELSE (rho * est_union) // 64 END AS BIGINT) AS est_inter,
-        |    est_union AS eu FROM es)
-        |SELECT est_a, est_b, est_union, est_inter,
-        |  CAST((est_inter * 1000000) // greatest(eu, 1) AS BIGINT)
-        |    AS jaccard_ppm
-        |FROM f""".stripMargin,
-
-    "q_skyline" ->
-      """WITH pts AS (
-        |  SELECT o.o_custkey, c.c_nationkey,
-        |    CAST(SUM(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS spend_cents,
-        |    CAST(count(*) AS BIGINT) AS n_orders
-        |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-        |  GROUP BY 1, 2)
-        |SELECT p.c_nationkey, p.o_custkey, p.spend_cents, p.n_orders
-        |FROM pts p
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM pts q
-        |  WHERE q.c_nationkey = p.c_nationkey
-        |    AND q.spend_cents >= p.spend_cents
-        |    AND q.n_orders >= p.n_orders
-        |    AND (q.spend_cents > p.spend_cents OR q.n_orders > p.n_orders))
-        |ORDER BY p.c_nationkey, p.o_custkey""".stripMargin,
-    "q_scd2_new" ->
-      s"""WITH $sqlSnaps
-         |SELECT * FROM scd_new ORDER BY terminal_id""".stripMargin,
-    "q_scd2_deleted" ->
-      s"""WITH $sqlSnaps
-         |SELECT * FROM scd_deleted ORDER BY terminal_id""".stripMargin,
-    "q_scd2_changed" ->
-      s"""WITH $sqlSnaps
-         |SELECT * FROM scd_changed ORDER BY terminal_id""".stripMargin,
-    "q_scd2_apply" ->
-      s"""SELECT * FROM $sqlScd2History
-         |ORDER BY terminal_id, effective_from, deleted_flg""".stripMargin,
-    // squash twin: splitting then squashing is the identity, so the
-    // oracle is the untouched apply history itself
-    "q_scd2_squash" ->
-      s"""SELECT * FROM $sqlScd2History
-         |ORDER BY terminal_id, effective_from, deleted_flg""".stripMargin,
-    "q_scd2_current" ->
-      s"""SELECT * FROM $sqlScd2History
-         |WHERE deleted_flg = 0 AND effective_to = '2999-12-31'
-         |ORDER BY terminal_id""".stripMargin,
-
-    // Profile twin: one SELECT per column over the same pre-formatted
-    // frame, UNION ALL into the tall shape.
-    "q_profile" -> {
-      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_orderdate", "o_orderpriority")
-      cols.map(c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n_rows,
-           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           |  count(DISTINCT $c) AS n_distinct,
-           |  CAST(min($c) AS VARCHAR) AS min_v,
-           |  CAST(max($c) AS VARCHAR) AS max_v
-           |FROM (SELECT * REPLACE (strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate)
-           |      FROM orders)""".stripMargin)
-        .mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
-    },
-
-    // PIT twin: same half-open windows, non-deleted versions joined in
-    // the ON clause so unmatched facts survive the left join.
-    "q_scd2_pit" ->
-      s"""WITH hist AS (SELECT * FROM $sqlScd2History),
-         |f AS (
-         |  SELECT l_orderkey, l_partkey,
-         |    strftime(DATE '2024-03-01' +
-         |      CAST(l_orderkey % 4 AS INT) * INTERVAL 1 DAY, '%Y-%m-%d') AS fact_dt
-         |  FROM lineitem),
-         |j AS (
-         |  SELECT f.fact_dt, f.l_partkey, h.terminal_city
-         |  FROM f LEFT JOIN hist h ON h.terminal_id = f.l_partkey
-         |    AND h.deleted_flg = 0
-         |    AND f.fact_dt >= h.effective_from AND f.fact_dt < h.effective_to)
-         |SELECT fact_dt, terminal_city, count(*) AS n,
-         |  count(DISTINCT l_partkey) AS n_parts
-         |FROM j GROUP BY 1, 2
-         |ORDER BY fact_dt, terminal_city NULLS FIRST""".stripMargin,
-
-    "q_scd2_changelog" ->
-      s"""WITH hist AS (SELECT * FROM $sqlScd2History),
-         |v AS (
-         |  SELECT *, row_number() OVER (PARTITION BY terminal_id
-         |    ORDER BY effective_from, deleted_flg) AS rn
-         |  FROM hist)
-         |SELECT
-         |  CASE WHEN deleted_flg = 1 THEN 'D'
-         |       WHEN rn = 1 THEN 'I' ELSE 'U' END AS op,
-         |  terminal_id AS key, terminal_type, terminal_city, terminal_address,
-         |  effective_from AS change_dt
-         |FROM v ORDER BY key, change_dt, op""".stripMargin,
-
-    "q_dq_summary" ->
-      """SELECT * FROM (
-        |  SELECT 'orphan_partkeys' AS check_name, count(*) AS violations
-        |  FROM lineitem l
-        |  WHERE NOT EXISTS (SELECT 1 FROM part p
-        |    WHERE p.p_partkey = l.l_partkey AND p.p_size <= 25)
-        |  UNION ALL
-        |  SELECT 'dup_orderkeys', count(*) FROM (
-        |    SELECT l_orderkey FROM lineitem GROUP BY 1 HAVING count(*) > 1))
-        |ORDER BY check_name""".stripMargin,
-
-    // check-suite twin: the same six fused row-local metrics + the
-    // referential key-domain count, one verdict row each
-    "q_dq_checks" ->
-      """WITH v AS (SELECT
-        |    COUNT(CASE WHEN l_shipdate IS NULL THEN 1 END) AS c1,
-        |    COUNT(CASE WHEN CAST(round(l_quantity*100) AS BIGINT) < 100
-        |      OR CAST(round(l_quantity*100) AS BIGINT) > 5000 THEN 1 END) AS c2,
-        |    COUNT(CASE WHEN l_returnflag NOT IN ('A','N','R')
-        |      OR l_returnflag IS NULL THEN 1 END) AS c3,
-        |    COUNT(*) - COUNT(DISTINCT (l_orderkey, l_linenumber)) AS c4,
-        |    COUNT(CASE WHEN CAST(round(l_discount*100) AS BIGINT) < 0
-        |      OR CAST(round(l_discount*100) AS BIGINT) > 8 THEN 1 END) AS c6,
-        |    COUNT(CASE WHEN NOT COALESCE(
-        |      CAST(round(l_extendedprice*100) AS BIGINT) >=
-        |      CAST(round(l_quantity*100) AS BIGINT), FALSE) THEN 1 END) AS c7
-        |  FROM lineitem),
-        |r AS (SELECT COUNT(*) AS c5 FROM (
-        |    SELECT DISTINCT l_orderkey AS k FROM lineitem
-        |    WHERE l_orderkey IS NOT NULL) f
-        |  WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = f.k)),
-        |u AS (
-        |  SELECT 'c1_shipdate_not_null' AS "check", c1 AS violations, 0 AS allowed FROM v
-        |  UNION ALL SELECT 'c2_qty_cents_bounds', c2, 0 FROM v
-        |  UNION ALL SELECT 'c3_returnflag_domain', c3, 0 FROM v
-        |  UNION ALL SELECT 'c4_line_unique', c4, 0 FROM v
-        |  UNION ALL SELECT 'c5_order_fk', c5, 0 FROM r
-        |  UNION ALL SELECT 'c6_discount_budget', c6, 0 FROM v
-        |  UNION ALL SELECT 'c7_price_covers_qty', c7, 0 FROM v)
-        |SELECT "check", CAST(violations AS BIGINT) AS violations,
-        |  CAST(allowed AS BIGINT) AS allowed,
-        |  CAST(CASE WHEN violations <= allowed THEN 1 ELSE 0 END AS BIGINT) AS pass
-        |FROM u ORDER BY "check"""".stripMargin,
-
-    "q_src_csv" ->
-      """WITH lines AS (
-        |  SELECT CAST(c_custkey AS VARCHAR) || ';' || c_name || ';' ||
-        |         CAST(c_nationkey AS VARCHAR) || ';' || c_mktsegment AS line
-        |  FROM customer),
-        |p AS (SELECT string_split(line, ';') AS f FROM lines)
-        |SELECT CAST(f[1] AS BIGINT) AS custkey, f[2] AS name,
-        |       CAST(f[3] AS BIGINT) AS nationkey, f[4] AS segment
-        |FROM p ORDER BY custkey""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT) AS sum_disc_cp,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT))) AS BIGINT) AS sum_charge_cpp,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_events_bucket" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_value_cents,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM events
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q_src_json" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) % 5 AS city
-        |FROM events
-        |ORDER BY event_id""".stripMargin,
-
-    "q_fraud_passport" ->
-      s"SELECT * FROM $fraudPassportBody ORDER BY client_key, event_dt_us",
-    "q_fraud_account" ->
-      s"SELECT * FROM $fraudAccountBody ORDER BY client_key, event_dt_us",
-    "q_fraud_city" ->
-      s"SELECT * FROM $fraudCityBody ORDER BY client_key",
-    "q_fraud_amount" ->
-      s"SELECT * FROM $fraudAmountBody ORDER BY client_key, event_dt_us",
-    "q_fraud_mart" ->
-      s"""SELECT * FROM (
-         |SELECT * FROM $fraudPassportBody
-         |UNION ALL SELECT * FROM $fraudAccountBody
-         |UNION ALL SELECT * FROM $fraudCityBody
-         |UNION ALL SELECT * FROM $fraudAmountBody)
-         |ORDER BY rule, client_key, event_dt_us""".stripMargin,
-
-    "q_etl_rename" ->
-      """SELECT o_orderkey AS account_num, o_custkey AS client,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS create_dt,
-        |  o_totalprice AS balance
-        |FROM orders ORDER BY account_num""".stripMargin,
-
-    "q3_join" ->
-      """SELECT o.o_orderkey, strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |  CAST(sum(CAST(round(l.l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l.l_discount*100) AS BIGINT))) AS BIGINT) AS revenue_cp
-        |FROM orders o
-        |JOIN customer c ON o.o_custkey = c.c_custkey AND c.c_mktsegment = 'BUILDING'
-        |JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |WHERE o.o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l.l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY o.o_orderkey, o.o_orderdate
-        |ORDER BY revenue_cp DESC, o.o_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q5_join5" ->
-      """SELECT n.n_name,
-        |  CAST(sum(CAST(round(l.l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l.l_discount*100) AS BIGINT))) AS BIGINT) AS revenue_cp
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey AND c.c_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
-        |WHERE o.o_orderdate < TIMESTAMP '1999-01-01'
-        |GROUP BY n.n_name
-        |ORDER BY revenue_cp DESC, n.n_name""".stripMargin,
-
-    "q_window_topn" ->
-      """SELECT * FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    CAST(round(o_totalprice*100) AS BIGINT) AS tp_cents,
-        |    CAST(row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY CAST(round(o_totalprice*100) AS BIGINT) DESC, o_orderkey) AS BIGINT) AS rn
-        |  FROM orders)
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    "q_window_running" ->
-      """WITH r AS (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber,
-        |    CAST(sum(CAST(l_quantity AS BIGINT)) OVER (PARTITION BY l_suppkey
-        |      ORDER BY l_shipdate, l_orderkey, l_linenumber,
-        |        CAST(l_quantity AS BIGINT)
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_qty
-        |  FROM lineitem)
-        |SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(running_qty) AS BIGINT) AS run_sum,
-        |  CAST(max(running_qty) AS BIGINT) AS run_max,
-        |  CAST(sum(running_qty * ((l_orderkey * 37 + l_linenumber) % 997))
-        |    AS BIGINT) AS run_dot
-        |FROM r GROUP BY l_suppkey
-        |ORDER BY l_suppkey""".stripMargin,
-
-    "q_semi_anti" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-        |AND NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
-
-    // Bloom prefilter is transparent to semantics: the twin is the
-    // plain IN-subquery semi-join + aggregation.
-    "q_bloom_semi" ->
-      """SELECT l_orderkey,
-        |  count(*) AS n_items,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS rev_cents
-        |FROM lineitem
-        |WHERE l_orderkey IN (
-        |  SELECT o_orderkey FROM orders WHERE o_totalprice > 480000.0)
-        |GROUP BY l_orderkey
-        |ORDER BY l_orderkey""".stripMargin,
-
-    "q_setops" ->
-      """SELECT * FROM (
-        |  SELECT partkey, 'sold_extreme' AS tag FROM (
-        |    SELECT DISTINCT l_partkey AS partkey FROM lineitem
-        |    INTERSECT (
-        |      SELECT p_partkey FROM part WHERE p_size <= 10
-        |      UNION ALL SELECT p_partkey FROM part WHERE p_size >= 40))
-        |  UNION ALL
-        |  SELECT partkey, 'small_unsold' AS tag FROM (
-        |    SELECT p_partkey AS partkey FROM part WHERE p_size <= 10
-        |    EXCEPT SELECT DISTINCT l_partkey FROM lineitem))
-        |ORDER BY tag, partkey""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_price_cents,
-        |  count(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_price_cents,
-        |  count(*) AS n
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_distinct_cond" ->
-      """SELECT o_orderpriority,
-        |  count(DISTINCT o_custkey) AS n_cust,
-        |  count(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
-        |  CAST(sum(CASE WHEN o_orderstatus = 'O'
-        |    THEN CAST(round(o_totalprice*100) AS BIGINT) ELSE 0 END) AS BIGINT) AS open_cents
-        |FROM orders
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH t AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |    CAST(round(value*100) AS BIGINT) AS v_cents
-        |  FROM events),
-        |b AS (
-        |  SELECT *,
-        |    CASE WHEN lag(ts_us) OVER w IS NULL
-        |           OR ts_us - lag(ts_us) OVER w > 30*60000000 THEN 1 ELSE 0 END AS is_new
-        |  FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-        |s AS (
-        |  SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM b)
-        |SELECT user_id, session_seq,
-        |  count(*) AS n_events,
-        |  CAST(min(ts_us) AS BIGINT) AS start_us,
-        |  CAST(max(ts_us) AS BIGINT) AS end_us,
-        |  CAST(sum(v_cents) AS BIGINT) AS sum_cents,
-        |  CAST(max(ts_us) - min(ts_us) AS BIGINT) AS duration_us
-        |FROM s GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
-
-    // D79: +1/-1 sweep over the D17 sessions; starts before ends at
-    // equal ts (closed intervals); greatest(open, open-d) carries the
-    // overnight plateau; per-day max is tie-order invariant
-    "q_concurrency" ->
-      """WITH t AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-        |b AS (
-        |  SELECT *,
-        |    CASE WHEN lag(ts_us) OVER w IS NULL
-        |           OR ts_us - lag(ts_us) OVER w > 30*60000000
-        |      THEN 1 ELSE 0 END AS is_new
-        |  FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-        |s AS (
-        |  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us
-        |    ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM b),
-        |sess AS (
-        |  SELECT user_id, session_seq, min(ts_us) AS start_us,
-        |    max(ts_us) AS end_us
-        |  FROM s GROUP BY 1, 2),
-        |deltas AS (
-        |  SELECT start_us AS ts, 1 AS d FROM sess
-        |  UNION ALL SELECT end_us, -1 FROM sess),
-        |sweep AS (
-        |  SELECT ts, d,
-        |    sum(d) OVER (ORDER BY ts, d DESC ROWS UNBOUNDED PRECEDING)
-        |      AS open
-        |  FROM deltas)
-        |SELECT ts // 86400000000 AS day,
-        |  CAST(max(greatest(open, open - d)) AS BIGINT) AS peak_concurrent,
-        |  CAST(sum(CASE WHEN d = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_starts
-        |FROM sweep GROUP BY 1 ORDER BY day""".stripMargin,
-
-    "q_range_join" ->
-      """WITH t AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events)
-        |SELECT a.user_id, a.event_id AS id1, b.event_id AS id2,
-        |  b.ts_us - a.ts_us AS gap_us
-        |FROM t a JOIN t b ON a.user_id = b.user_id
-        |  AND b.ts_us > a.ts_us AND b.ts_us - a.ts_us <= 300000000
-        |ORDER BY a.user_id, id1, id2""".stripMargin,
-
-    "q_null_safe" ->
-      """SELECT c_mktsegment,
-        |  count(*) AS n_rows,
-        |  count(o_orderpriority) AS n_matched,
-        |  CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-        |  CAST(sum(CASE WHEN o_orderpriority IS NOT DISTINCT FROM '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS n_urgent_nullsafe,
-        |  count(nullif(o_orderpriority, '5-LOW')) AS n_not_low
-        |FROM customer c LEFT JOIN (
-        |  SELECT o_custkey, o_orderpriority FROM orders WHERE o_orderstatus = 'P') o
-        |  ON c.c_custkey = o.o_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_window_range" ->
-      """WITH r AS (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber,
-        |    count(*) OVER (PARTITION BY l_suppkey ORDER BY CAST(l_quantity AS BIGINT)
-        |      RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS n_within5
-        |  FROM lineitem)
-        |SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(n_within5) AS BIGINT) AS w_sum,
-        |  CAST(max(n_within5) AS BIGINT) AS w_max,
-        |  CAST(sum(n_within5 * ((l_orderkey * 37 + l_linenumber) % 997))
-        |    AS BIGINT) AS w_dot
-        |FROM r GROUP BY l_suppkey
-        |ORDER BY l_suppkey""".stripMargin,
-
-    "q_window_firstlast" ->
-      """SELECT o_custkey, o_orderkey,
-        |  first_value(o_orderkey) OVER w AS first_key,
-        |  last_value(o_orderkey) OVER w AS last_key,
-        |  COALESCE(nth_value(o_orderkey, 2) OVER w, -1) AS second_key
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_median" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_quantity, 0.25) AS p25,
-        |  quantile_cont(l_quantity, 0.5) AS p50,
-        |  quantile_cont(l_quantity, 0.75) AS p75
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // D12: each engine runs its OWN sketch (DuckDB: HLL
-    // approx_count_distinct, t-digest approx_quantile) and emits the
-    // exact answer + a within-band verdict — only (exact, flag) is
-    // hashed, so the cross-engine sketch-layout difference is moot.
-    "q_approx_stats" ->
-      """SELECT l_returnflag,
-        |  count(DISTINCT l_partkey) AS exact_parts,
-        |  quantile_cont(l_extendedprice, 0.5) AS p50_exact,
-        |  quantile_cont(l_extendedprice, 0.95) AS p95_exact,
-        |  CAST(abs(approx_count_distinct(l_partkey) - count(DISTINCT l_partkey))
-        |       <= 0.10 * count(DISTINCT l_partkey) AS BIGINT) AS parts_ok,
-        |  CAST(abs(approx_quantile(l_extendedprice, 0.5) - quantile_cont(l_extendedprice, 0.5))
-        |       <= 0.02 * quantile_cont(l_extendedprice, 0.5) AS BIGINT) AS p50_ok,
-        |  CAST(abs(approx_quantile(l_extendedprice, 0.95) - quantile_cont(l_extendedprice, 0.95))
-        |       <= 0.02 * quantile_cont(l_extendedprice, 0.95) AS BIGINT) AS p95_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT user_id,
-        |  CAST(COALESCE(sum(CASE WHEN event_type='click' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS click,
-        |  CAST(COALESCE(sum(CASE WHEN event_type='error' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS error,
-        |  CAST(COALESCE(sum(CASE WHEN event_type='purchase' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS purchase,
-        |  CAST(COALESCE(sum(CASE WHEN event_type='signup' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS signup,
-        |  CAST(COALESCE(sum(CASE WHEN event_type='view' THEN CAST(round(value*100) AS BIGINT) END), 0) AS BIGINT) AS view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_unpivot" ->
-      """WITH base AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |    CAST(round(l_extendedprice*100) AS BIGINT) AS price_cents,
-        |    CAST(round(l_discount*100) AS BIGINT) AS discount_cents,
-        |    CAST(round(l_tax*100) AS BIGINT) AS tax_cents,
-        |    CAST(l_quantity AS BIGINT) AS qty
-        |  FROM lineitem),
-        |tall AS (
-        |  SELECT l_orderkey, l_linenumber, metric, v FROM base
-        |  UNPIVOT (v FOR metric IN (price_cents, discount_cents, tax_cents, qty)))
-        |SELECT metric, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(v) AS BIGINT) AS v_sum,
-        |  CAST(min(v) AS BIGINT) AS v_min,
-        |  CAST(max(v) AS BIGINT) AS v_max,
-        |  CAST(sum((v % 1000003) * ((l_orderkey * 37 + l_linenumber) % 997))
-        |    AS BIGINT) AS v_dot
-        |FROM tall GROUP BY metric
-        |ORDER BY metric""".stripMargin,
-
-    "q_corr" ->
-      """WITH b AS (SELECT l_returnflag,
-        |    CAST(round(l_extendedprice*100) AS BIGINT) AS x,
-        |    CAST(l_quantity AS BIGINT) AS y
-        |  FROM lineitem),
-        |m AS (SELECT l_returnflag, count(*) AS n,
-        |    sum(x) AS sx, sum(y) AS sy,
-        |    sum(x*x) AS sxx, sum(x*y) AS sxy, sum(y*y) AS syy
-        |  FROM b GROUP BY 1)
-        |SELECT l_returnflag, n,
-        |  CAST(n*sxy - sx*sy AS DOUBLE)
-        |    / (sqrt(CAST(n*sxx - sx*sx AS DOUBLE))
-        |       * sqrt(CAST(n*syy - sy*sy AS DOUBLE))) AS corr_price_qty,
-        |  CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*n AS DOUBLE) AS cov_price_qty,
-        |  CAST(n*sxy - sx*sy AS DOUBLE)
-        |    / CAST(n*syy - sy*sy AS DOUBLE) AS beta_price_on_qty
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-
-    "q_outliers" ->
-      """WITH b AS (SELECT l_returnflag,
-        |    CAST(round(l_extendedprice*100) AS BIGINT) AS x
-        |  FROM lineitem),
-        |m AS (SELECT l_returnflag, count(*) AS n,
-        |    sum(x) AS sx, sum(x*x) AS sxx
-        |  FROM b GROUP BY 1)
-        |SELECT b.l_returnflag, count(*) AS n_outliers,
-        |  min(x) AS min_outlier_cents, max(x) AS max_outlier_cents
-        |FROM b JOIN m USING (l_returnflag)
-        |WHERE (x*n - sx)*(x*n - sx)*n > 9*(n*sxx - sx*sx)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // overlap twin: same membership contraction + self-join + ppm
-    "q_type_overlap" ->
-      """WITH m AS (SELECT DISTINCT event_type AS t, user_id FROM events),
-        |sz AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS n FROM m GROUP BY 1),
-        |p AS (
-        |  SELECT a.t AS type1, b.t AS type2, CAST(COUNT(*) AS BIGINT) AS n_both
-        |  FROM m a JOIN m b ON a.user_id = b.user_id AND a.t < b.t
-        |  GROUP BY 1, 2)
-        |SELECT type1, type2, n_both, s1.n AS n1, s2.n AS n2,
-        |  CAST(1000000 * n_both // (s1.n + s2.n - n_both) AS BIGINT)
-        |    AS jaccard_ppm
-        |FROM p JOIN sz s1 ON s1.t = type1 JOIN sz s2 ON s2.t = type2
-        |ORDER BY 1, 2""".stripMargin,
-
-    // MAD twin: quantile_cont interpolates exactly like Spark's
-    // percentile, and integer cents keep every value on the 0.5 grain
-    "q_mad_outliers" ->
-      """WITH e AS (SELECT event_type,
-        |    CAST(round(value*100) AS BIGINT) AS v FROM events),
-        |m AS (SELECT event_type, quantile_cont(v, 0.5) AS med
-        |  FROM e GROUP BY 1),
-        |d AS (SELECT e.event_type, ABS(e.v - m.med) AS ad, m.med
-        |  FROM e JOIN m USING (event_type)),
-        |md AS (SELECT event_type, quantile_cont(ad, 0.5) AS mad
-        |  FROM d GROUP BY 1)
-        |SELECT d.event_type, MIN(d.med) AS med, MIN(md.mad) AS mad,
-        |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |  CAST(COUNT(CASE WHEN d.ad > 3*md.mad THEN 1 END) AS BIGINT)
-        |    AS n_outliers
-        |FROM d JOIN md USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_corr_subquery" ->
-      """WITH cust AS (
-        |  SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nationkey,
-        |    CAST(round(c_acctbal*100) AS BIGINT) AS bal_cents
-        |  FROM customer)
-        |SELECT c_custkey, nationkey, bal_cents FROM cust c
-        |WHERE bal_cents > (
-        |  SELECT CAST(sum(bal_cents) AS DOUBLE) / count(*) FROM cust c2
-        |  WHERE c2.nationkey = c.nationkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_date_funcs" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS BIGINT) AS y,
-        |  CAST(quarter(o_orderdate) AS BIGINT) AS q,
-        |  CAST(month(o_orderdate) AS BIGINT) AS m,
-        |  CAST(isodow(o_orderdate) AS BIGINT) AS isodow,
-        |  CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS BIGINT) AS age_days,
-        |  strftime(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus3m
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_string_funcs" ->
-      """SELECT c_custkey,
-        |  upper(c_name) AS up,
-        |  substring(c_mktsegment, 1, 3) AS seg3,
-        |  regexp_replace(c_name, '#', '-', 'g') AS dashed,
-        |  lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded,
-        |  CAST(length(c_name) AS BIGINT) AS name_len,
-        |  translate(c_mktsegment, 'AEIOU', 'aeiou') AS xlat
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q_sql_lateral" ->
-      """SELECT n.n_name, t.c_name, t.bal_cents
-        |FROM nation n,
-        |LATERAL (
-        |  SELECT c_name, CAST(round(c_acctbal*100) AS BIGINT) AS bal_cents
-        |  FROM customer WHERE c_nationkey = n.n_nationkey
-        |  ORDER BY bal_cents DESC, c_name LIMIT 2
-        |) t
-        |ORDER BY n.n_name, t.bal_cents DESC, t.c_name""".stripMargin,
-
-    "q_resample" ->
-      """WITH t AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |    CAST(round(value*100) AS BIGINT) AS v_cents
-        |  FROM events),
-        |obs AS (
-        |  SELECT user_id, ts_us, max(v_cents) AS v FROM t GROUP BY 1, 2),
-        |b AS (
-        |  SELECT user_id, min(ts_us) AS tmin, max(ts_us) AS tmax
-        |  FROM obs GROUP BY 1),
-        |grid AS (
-        |  SELECT user_id, unnest(range(
-        |    tmin // 21600000000 * 21600000000,
-        |    tmax // 21600000000 * 21600000000 + 1,
-        |    21600000000)) AS grid_us
-        |  FROM b)
-        |SELECT g.user_id, g.grid_us,
-        |  COALESCE(o.v, -1) AS v_cents,
-        |  CAST(CASE WHEN o.v IS NULL THEN 0 ELSE 1 END AS BIGINT) AS has_value
-        |FROM grid g ASOF LEFT JOIN obs o
-        |  ON g.user_id = o.user_id AND g.grid_us >= o.ts_us
-        |ORDER BY g.user_id, g.grid_us""".stripMargin,
-
-    "q_hierarchy" ->
-      """WITH RECURSIVE h(custkey, root, depth) AS (
-        |  SELECT c_custkey, c_custkey, CAST(0 AS BIGINT)
-        |  FROM customer WHERE c_custkey < 10
-        |  UNION ALL
-        |  SELECT c.c_custkey, h.root, h.depth + 1
-        |  FROM customer c JOIN h ON c.c_custkey // 10 = h.custkey
-        |  WHERE c.c_custkey >= 10
-        |)
-        |SELECT root, depth, count(*) AS n,
-        |  min(custkey) AS min_k, max(custkey) AS max_k
-        |FROM h GROUP BY root, depth ORDER BY root, depth""".stripMargin,
-
-    "q_interp" ->
-      """WITH t AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |    CAST(round(value*100) AS BIGINT) AS v_cents FROM events),
-        |obs AS (SELECT user_id, ts_us, max(v_cents) AS v FROM t GROUP BY 1, 2),
-        |b AS (SELECT user_id, min(ts_us) AS tmin, max(ts_us) AS tmax
-        |  FROM obs GROUP BY 1),
-        |grid AS (
-        |  SELECT user_id, unnest(range(tmin // 21600000000 * 21600000000,
-        |    tmax // 21600000000 * 21600000000 + 1, 21600000000)) AS grid_us
-        |  FROM b),
-        |p AS (
-        |  SELECT g.user_id, g.grid_us, o.ts_us AS p_t, o.v AS p_v
-        |  FROM grid g ASOF LEFT JOIN obs o
-        |    ON g.user_id = o.user_id AND g.grid_us >= o.ts_us),
-        |n AS (
-        |  SELECT g.user_id, g.grid_us, o.ts_us AS n_t, o.v AS n_v
-        |  FROM grid g ASOF LEFT JOIN obs o
-        |    ON g.user_id = o.user_id AND g.grid_us <= o.ts_us)
-        |SELECT p.user_id, p.grid_us,
-        |  CASE
-        |    WHEN p.p_t IS NULL AND n.n_t IS NULL THEN -1.0
-        |    WHEN p.p_t IS NULL THEN CAST(n.n_v AS DOUBLE)
-        |    WHEN n.n_t IS NULL THEN CAST(p.p_v AS DOUBLE)
-        |    WHEN n.n_t = p.p_t THEN CAST(p.p_v AS DOUBLE)
-        |    ELSE (CAST((n.n_v - p.p_v) * (p.grid_us - p.p_t) AS DOUBLE)
-        |      / (n.n_t - p.p_t)) + p.p_v
-        |  END AS v_interp
-        |FROM p JOIN n ON p.user_id = n.user_id AND p.grid_us = n.grid_us
-        |ORDER BY p.user_id, p.grid_us""".stripMargin,
-
-    "q_asof_prior" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'purchase'),
-        |e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'error')
-        |SELECT p.event_id, p.user_id, p.ts_us,
-        |  COALESCE(e.ts_us, -1) AS asof_ts,
-        |  COALESCE(p.ts_us - e.ts_us, -1) AS gap
-        |FROM p ASOF LEFT JOIN e
-        |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
-        |ORDER BY event_id""".stripMargin,
-
-    "q_asof_tol" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'purchase'),
-        |e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'error')
-        |SELECT p.event_id, p.user_id, p.ts_us,
-        |  CASE WHEN p.ts_us - e.ts_us <= 86400000000 THEN e.ts_us
-        |       ELSE -1 END AS asof_ts,
-        |  CASE WHEN p.ts_us - e.ts_us <= 86400000000
-        |       THEN p.ts_us - e.ts_us ELSE -1 END AS gap
-        |FROM p ASOF LEFT JOIN e
-        |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
-        |ORDER BY event_id""".stripMargin,
-
-    "q_asof_native" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'purchase'),
-        |e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'error')
-        |SELECT p.event_id, p.user_id, p.ts_us,
-        |  COALESCE(e.ts_us, -1) AS asof_ts,
-        |  COALESCE(p.ts_us - e.ts_us, -1) AS gap
-        |FROM p ASOF LEFT JOIN e
-        |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
-        |ORDER BY event_id""".stripMargin,
-
-    // ---- E section: training-data ops
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
-        |  count(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
-
-    // Sparse-cosine twin: mirrors the CONTENT-contracted index (the
-    // I14 discipline — identical texts have identical tf vectors, and
-    // an impact-ordered index dedups postings): same bigram vectors
-    // over distinct contents, df cap against the CONTENT count,
-    // content-level impact truncation, doc pairs expanded through
-    // group membership, same exact-integer cosine sequence.
-    "q_sparse_sim" ->
-      """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
-        |toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ts FROM rd),
-        |g AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(ts)),
-        |    i -> ts[i] || ' ' || ts[i+1])) AS gram
-        |  FROM toks WHERE len(ts) >= 2),
-        |tf AS (SELECT doc_id, gram, count(*) AS tf FROM g GROUP BY 1, 2),
-        |nd AS (SELECT count(*) AS n_docs FROM rd),
-        |keptg AS (
-        |  SELECT gram FROM tf CROSS JOIN nd
-        |  GROUP BY gram, n_docs HAVING count(*) <= n_docs * 0.4),
-        |kept0 AS (SELECT tf.* FROM tf JOIN keptg USING (gram)),
-        |kept AS (
-        |  SELECT doc_id, gram, tf FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY gram
-        |      ORDER BY tf DESC, doc_id) AS pr FROM kept0)
-        |  WHERE pr <= 1000),
-        |norms AS (SELECT doc_id, SUM(tf*tf) AS norm2 FROM kept GROUP BY 1),
-        |qdocs AS (
-        |  SELECT doc_id AS q_id, rep AS qrep FROM members
-        |  WHERE doc_id % 50 = 0 AND doc_id < 5000),
-        |qpost AS (
-        |  SELECT DISTINCT qd.qrep, k.gram, k.tf AS tfq
-        |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
-        |  JOIN kept k ON k.doc_id = qd.qrep),
-        |dots AS (
-        |  SELECT q.qrep, k.doc_id AS crep, SUM(q.tfq * k.tf) AS dot
-        |  FROM qpost q JOIN kept k USING (gram)
-        |  GROUP BY 1, 2),
-        |cc AS (
-        |  SELECT d.qrep, d.crep,
-        |    CAST(d.dot AS DOUBLE) /
-        |      (sqrt(CAST(nq.norm2 AS DOUBLE)) * sqrt(CAST(nd2.norm2 AS DOUBLE))) AS cos
-        |  FROM dots d
-        |  JOIN norms nq ON nq.doc_id = d.qrep
-        |  JOIN norms nd2 ON nd2.doc_id = d.crep),
-        |ex AS (
-        |  SELECT qd.q_id, mem.doc_id, c.cos
-        |  FROM qdocs qd
-        |  JOIN cc c ON c.qrep = qd.qrep
-        |  JOIN members mem ON mem.rep = c.crep
-        |  WHERE mem.doc_id <> qd.q_id),
-        |rk AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cos DESC, doc_id) AS BIGINT) AS rnk FROM ex)
-        |SELECT q_id, doc_id, cos, rnk FROM rk WHERE rnk <= 5
-        |ORDER BY q_id, rnk""".stripMargin,
-
-    // Normalization-dedup twin: same ASCII-only normalization (DuckDB
-    // needs the 'g' flag for replace-all; Spark replaces all by
-    // default), same injected variants, same 2-level aggregation.
-    "q_dedup_norm" ->
-      """WITH wd AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 20000000, upper(text) || ' .'
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |h AS (
-        |  SELECT doc_id, md5(text) AS raw_hash,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS norm_hash
-        |  FROM wd),
-        |g AS (
-        |  SELECT norm_hash, raw_hash, min(doc_id) AS keep_id,
-        |    count(*) AS n_docs
-        |  FROM h GROUP BY 1, 2)
-        |SELECT norm_hash, min(keep_id) AS keep_id,
-        |  CAST(sum(n_docs) AS BIGINT) AS n_copies,
-        |  count(*) AS n_raw_variants
-        |FROM g GROUP BY 1 HAVING count(*) > 1
-        |ORDER BY keep_id""".stripMargin,
-
-    "q_dedup_minhash" ->
-      s"""WITH $sqlLshCtes
-         |SELECT id1, id2, n_shared_bands FROM cand ORDER BY id1, id2""".stripMargin,
-
-    "q_dedup_verify" ->
-      s"""WITH $sqlLshCtes,
-         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
-         |j AS (
-         |  SELECT c.id1, c.id2, c.n_shared_bands,
-         |    CAST(len(list_intersect(a.shd, b.shd)) AS BIGINT) AS n_inter,
-         |    CAST(len(a.shd) + len(b.shd) AS BIGINT) AS n_sum
-         |  FROM cand c
-         |  JOIN sd a ON c.id1 = a.doc_id
-         |  JOIN sd b ON c.id2 = b.doc_id)
-         |SELECT id1, id2, n_shared_bands, n_inter,
-         |  n_sum - n_inter AS n_union,
-         |  n_inter / (n_sum - n_inter) AS jaccard
-         |FROM j ORDER BY id1, id2""".stripMargin,
-
-    // E71 twin: the same verified candidates, all measures + the same
-    // class ladder in integer ppm
-    "q_dedup_explain" ->
-      s"""WITH $sqlLshCtes,
-         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
-         |j AS (
-         |  SELECT c.id1, c.id2, c.n_shared_bands,
-         |    CAST(len(list_intersect(a.shd, b.shd)) AS BIGINT) AS n_inter,
-         |    CAST(len(a.shd) AS BIGINT) AS n1,
-         |    CAST(len(b.shd) AS BIGINT) AS n2
-         |  FROM cand c
-         |  JOIN sd a ON c.id1 = a.doc_id
-         |  JOIN sd b ON c.id2 = b.doc_id),
-         |m AS (
-         |  SELECT *,
-         |    CAST(1000000 * n_inter // (n1 + n2 - n_inter) AS BIGINT) AS jac_ppm,
-         |    CAST((n_inter * 1000000) // greatest(least(n1, n2), 1) AS BIGINT) AS cont_ppm,
-         |    CAST((least(n1, n2) * 1000000) // greatest(n1, n2) AS BIGINT) AS len_ratio_ppm
-         |  FROM j)
-         |SELECT id1, id2, n_shared_bands, n_inter, n1, n2,
-         |  jac_ppm, cont_ppm, len_ratio_ppm,
-         |  CASE WHEN n_inter = n1 AND n_inter = n2 THEN 'identical_grams'
-         |       WHEN cont_ppm = 1000000 THEN 'containment'
-         |       WHEN jac_ppm >= 700000 THEN 'near_dup'
-         |       ELSE 'candidate_only' END AS "class"
-         |FROM m ORDER BY id1, id2""".stripMargin,
-
-    // E69: threshold fold over the same verified candidates, integer
-    // ppm jaccard, zero-completed threshold rows
-    "q_dedup_curve" ->
-      s"""WITH $sqlLshCtes,
-         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
-         |j AS (
-         |  SELECT c.id1, c.id2,
-         |    CAST(1000000 * len(list_intersect(a.shd, b.shd))
-         |      // (len(a.shd) + len(b.shd)
-         |         - len(list_intersect(a.shd, b.shd))) AS BIGINT)
-         |      AS jac_ppm
-         |  FROM cand c
-         |  JOIN sd a ON c.id1 = a.doc_id
-         |  JOIN sd b ON c.id2 = b.doc_id),
-         |th AS (SELECT CAST(unnest([500000, 700000, 800000, 900000,
-         |    1000000]) AS BIGINT) AS threshold_ppm),
-         |f AS (SELECT t.threshold_ppm, j.id1, j.id2
-         |  FROM th t JOIN j ON j.jac_ppm >= t.threshold_ppm),
-         |np AS (SELECT threshold_ppm, CAST(count(*) AS BIGINT) AS n_pairs
-         |  FROM f GROUP BY 1),
-         |nd AS (SELECT threshold_ppm,
-         |    CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
-         |  FROM (SELECT threshold_ppm, unnest([id1, id2]) AS doc FROM f)
-         |  GROUP BY 1)
-         |SELECT t.threshold_ppm,
-         |  coalesce(np.n_pairs, 0) AS n_pairs,
-         |  coalesce(nd.n_docs, 0) AS n_docs
-         |FROM th t
-         |LEFT JOIN np USING (threshold_ppm)
-         |LEFT JOIN nd USING (threshold_ppm)
-         |ORDER BY t.threshold_ppm""".stripMargin,
-
-    // E68: length-arithmetic token counts (E9's definitions), ppm
-    "q_fertility" ->
-      """WITH d AS (
-        |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        |    CAST(sum(len(list_filter(string_split(text, ' '),
-        |      w -> len(w) > 0))) AS BIGINT) AS n_tokens,
-        |    CAST(sum((length(text) + 3) // 4) AS BIGINT) AS n_bpe
-        |  FROM documents GROUP BY 1, 2)
-        |SELECT lang, source, n_docs, n_chars, n_tokens, n_bpe,
-        |  CAST(CASE WHEN n_tokens = 0 THEN 0
-        |    ELSE 1000000 * n_chars // n_tokens END AS BIGINT)
-        |    AS chars_per_tok_ppm,
-        |  CAST(CASE WHEN n_tokens = 0 THEN 0
-        |    ELSE 1000000 * n_bpe // n_tokens END AS BIGINT)
-        |    AS bpe_per_tok_ppm
-        |FROM d ORDER BY lang, source""".stripMargin,
-
-    // D86: epoch-week grid, lag deltas sign-split, 0-baseline pinned
-    "q_movers" ->
-      """WITH weekly0 AS (
-        |  SELECT event_type, epoch_us(ts) // 604800000000 AS week,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(week) AS w0, max(week) AS w1
-        |  FROM weekly0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(w0, w1 + 1)) AS week
-        |  FROM span),
-        |weekly AS (SELECT g.event_type, g.week, coalesce(d.n, 0) AS n
-        |  FROM grid g LEFT JOIN weekly0 d USING (event_type, week)),
-        |lg AS (
-        |  SELECT event_type, week, n,
-        |    lag(n) OVER (PARTITION BY event_type ORDER BY week) AS prev_n
-        |  FROM weekly)
-        |SELECT event_type, CAST(week AS BIGINT) AS week, n,
-        |  CAST(prev_n AS BIGINT) AS prev_n,
-        |  CAST(CASE WHEN prev_n = 0 THEN 1000000
-        |    WHEN n >= prev_n THEN 1000000 * (n - prev_n) // prev_n
-        |    ELSE -(1000000 * (prev_n - n) // prev_n) END AS BIGINT)
-        |    AS delta_ppm
-        |FROM lg WHERE prev_n IS NOT NULL
-        |ORDER BY event_type, week""".stripMargin,
-
-    // H22: doubled midranks off the marginal histograms; rho is the
-    // one IEEE step over exact HUGEINT moments in pinned order
-    "q_spearman" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
-        |  FROM m JOIN documents d USING (doc_id)),
-        |cells AS (SELECT va, vb, CAST(count(*) AS BIGINT) AS n
-        |  FROM sc GROUP BY 1, 2),
-        |ra AS (
-        |  SELECT v AS va, 2 * cum + t + 1 AS ra2 FROM (
-        |    SELECT va AS v, CAST(sum(n) AS BIGINT) AS t,
-        |      CAST(coalesce(sum(sum(n)) OVER (ORDER BY va
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |        AS BIGINT) AS cum
-        |    FROM cells GROUP BY va)),
-        |rb AS (
-        |  SELECT v AS vb, 2 * cum + t + 1 AS rb2 FROM (
-        |    SELECT vb AS v, CAST(sum(n) AS BIGINT) AS t,
-        |      CAST(coalesce(sum(sum(n)) OVER (ORDER BY vb
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |        AS BIGINT) AS cum
-        |    FROM cells GROUP BY vb)),
-        |mo AS (
-        |  SELECT CAST(sum(n) AS BIGINT) AS nn,
-        |    sum(CAST(n AS HUGEINT) * ra2) AS sa,
-        |    sum(CAST(n AS HUGEINT) * rb2) AS sb,
-        |    sum(CAST(n AS HUGEINT) * ra2 * ra2) AS saa,
-        |    sum(CAST(n AS HUGEINT) * rb2 * rb2) AS sbb,
-        |    sum(CAST(n AS HUGEINT) * ra2 * rb2) AS sab
-        |  FROM cells JOIN ra USING (va) JOIN rb USING (vb)),
-        |fin AS (
-        |  SELECT nn, nn * sab - sa * sb AS num,
-        |    nn * saa - sa * sa AS sxx, nn * sbb - sb * sb AS syy
-        |  FROM mo)
-        |SELECT nn AS n,
-        |  CASE WHEN sxx = 0 OR syy = 0 THEN 0.0
-        |    ELSE CAST(num AS DOUBLE)
-        |      / sqrt(CAST(sxx AS DOUBLE) * CAST(syy AS DOUBLE))
-        |  END AS rho
-        |FROM fin""".stripMargin,
-
-    // D85: lower quantiles off the cumulative histogram, rank
-    // ceil(p*n/100), bucket picked by its cumulative range
-    "q_quantiles" ->
-      """WITH h AS (
-        |  SELECT l_returnflag AS grp,
-        |    CAST(round(l_quantity * 100) AS BIGINT) AS x,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT grp, x, c,
-        |    CAST(sum(c) OVER (PARTITION BY grp ORDER BY x
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(sum(c) OVER (PARTITION BY grp) AS BIGINT) AS n
-        |  FROM h),
-        |l AS (
-        |  SELECT grp, x, c, cum, n,
-        |    CAST(unnest([25, 50, 75, 90, 99]) AS BIGINT) AS p
-        |  FROM cum),
-        |r AS (SELECT *, (p * n + 99) // 100 AS rk FROM l)
-        |SELECT grp, p, n, x AS q_value
-        |FROM r WHERE cum >= rk AND cum - c < rk
-        |ORDER BY grp, p""".stripMargin,
-
-    // B26: frontier lag per type, stale flag at the pinned budget
-    "q_freshness" ->
-      """WITH per AS (
-        |  SELECT event_type,
-        |    CAST(min(epoch_us(ts)) AS BIGINT) AS first_ts_us,
-        |    CAST(max(epoch_us(ts)) AS BIGINT) AS last_ts_us,
-        |    CAST(count(*) AS BIGINT) AS n_rows
-        |  FROM events GROUP BY 1),
-        |f AS (SELECT max(last_ts_us) AS frontier FROM per)
-        |SELECT event_type, n_rows, first_ts_us, last_ts_us,
-        |  (frontier - last_ts_us) // 1000000 AS lag_s,
-        |  CAST(CASE WHEN (frontier - last_ts_us) // 1000000 > 86400
-        |    THEN 1 ELSE 0 END AS BIGINT) AS stale_flg
-        |FROM per CROSS JOIN f ORDER BY event_type""".stripMargin,
-
-    // D84: (ts, event_id)-ordered lag gaps, octave buckets via
-    // to_base bit length, shares over the per-type octave frame
-    "q_interarrival" ->
-      """WITH e AS (
-        |  SELECT event_type, user_id, epoch_us(ts) AS ts_us, event_id
-        |  FROM events),
-        |g AS (
-        |  SELECT event_type,
-        |    (ts_us - lag(ts_us) OVER (PARTITION BY event_type, user_id
-        |      ORDER BY ts_us, event_id)) // 1000000 AS gap_s
-        |  FROM e),
-        |h AS (
-        |  SELECT event_type,
-        |    CAST(length(to_base(gap_s + 1, 2)) AS BIGINT) AS gap_bits,
-        |    CAST(count(*) AS BIGINT) AS n_gaps,
-        |    CAST(min(gap_s) AS BIGINT) AS min_gap_s,
-        |    CAST(max(gap_s) AS BIGINT) AS max_gap_s
-        |  FROM g WHERE gap_s IS NOT NULL GROUP BY 1, 2)
-        |SELECT event_type, gap_bits, n_gaps, min_gap_s, max_gap_s,
-        |  CAST(1000000 * n_gaps // sum(n_gaps)
-        |    OVER (PARTITION BY event_type) AS BIGINT) AS share_ppm
-        |FROM h ORDER BY event_type, gap_bits""".stripMargin,
-
-    // E53 twin: batch = synthetic re-crawl copies (replica-aware id
-    // range, shared constants with Dedup.incrementalLsh) + the %10=7
-    // fresh slice; candidates vs corpus (any) and vs smaller-id batch
-    // docs; exact-Jaccard gate 7/10 in integers
-    "q_dedup_incremental" ->
-      s"""WITH $sqlLshCtes,
-         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
-         |ci AS (
-         |  SELECT DISTINCT b.doc_id, o.doc_id AS other_id,
-         |    CASE WHEN ${sqlIsBatchDoc("o.doc_id")}
-         |         THEN 0 ELSE 1 END AS from_corpus
-         |  FROM bands b JOIN bands o
-         |    ON b.band = o.band AND b.bucket = o.bucket
-         |   AND b.doc_id <> o.doc_id
-         |  WHERE (${sqlIsBatchDoc("b.doc_id")})
-         |    AND (NOT (${sqlIsBatchDoc("o.doc_id")})
-         |         OR o.doc_id < b.doc_id)),
-         |gt AS (
-         |  SELECT c.doc_id, c.from_corpus,
-         |    CASE WHEN 10 * len(list_intersect(a.shd, o.shd))
-         |         >= 7 * (len(a.shd) + len(o.shd)
-         |                 - len(list_intersect(a.shd, o.shd)))
-         |         THEN 1 ELSE 0 END AS dup
-         |  FROM ci c
-         |  JOIN sd a ON c.doc_id = a.doc_id
-         |  JOIN sd o ON c.other_id = o.doc_id)
-         |SELECT nd.doc_id,
-         |  CAST(COALESCE(sum(gt.from_corpus), 0) AS BIGINT) AS n_cand_corpus,
-         |  CAST(COALESCE(count(gt.from_corpus), 0)
-         |       - COALESCE(sum(gt.from_corpus), 0) AS BIGINT) AS n_cand_batch,
-         |  CAST(COALESCE(sum(gt.dup), 0) AS BIGINT) AS n_dup,
-         |  CAST(COALESCE(max(gt.dup), 0) AS BIGINT) AS is_dup
-         |FROM (SELECT doc_id FROM t
-         |      WHERE ${sqlIsBatchDoc("doc_id")}) nd
-         |LEFT JOIN gt ON nd.doc_id = gt.doc_id
-         |GROUP BY nd.doc_id ORDER BY nd.doc_id""".stripMargin,
-
-    "q_containment" ->
-      s"""WITH $sqlLshCtes,
-         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
-         |j AS (
-         |  SELECT c.id1, c.id2,
-         |    CAST(len(list_intersect(a.shd, b.shd)) AS BIGINT) AS n_inter,
-         |    CAST(least(len(a.shd), len(b.shd)) AS BIGINT) AS n_min
-         |  FROM cand c
-         |  JOIN sd a ON c.id1 = a.doc_id
-         |  JOIN sd b ON c.id2 = b.doc_id)
-         |SELECT id1, id2, n_inter, n_min,
-         |  (n_inter * 1000000) // greatest(n_min, 1) AS containment_ppm
-         |FROM j ORDER BY id1, id2""".stripMargin,
-
-    "q_minhash_calib" -> {
-      val eqTerms = (0 until 8)
-        .map(i => s"(CASE WHEN s1.sig_$i = s2.sig_$i THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH $sqlLshCtes,
-         |sd AS (SELECT doc_id, list_distinct(sh) AS shd FROM s),
-         |j AS (
-         |  SELECT c.id1, c.id2,
-         |    CAST(len(list_intersect(a.shd, b.shd)) AS BIGINT) AS n_inter,
-         |    CAST(len(a.shd) + len(b.shd) AS BIGINT) AS n_sum
-         |  FROM cand c
-         |  JOIN sd a ON c.id1 = a.doc_id
-         |  JOIN sd b ON c.id2 = b.doc_id),
-         |eqs AS (
-         |  SELECT c.id1, c.id2, CAST($eqTerms AS BIGINT) AS n_eq_sigs
-         |  FROM cand c
-         |  JOIN sig s1 ON c.id1 = s1.doc_id
-         |  JOIN sig s2 ON c.id2 = s2.doc_id)
-         |SELECT j.id1, j.id2, e.n_eq_sigs,
-         |  (e.n_eq_sigs * 1000000) // 8 AS est_ppm,
-         |  n_inter / (n_sum - n_inter) AS jaccard
-         |FROM j JOIN eqs e ON e.id1 = j.id1 AND e.id2 = j.id2
-         |ORDER BY j.id1, j.id2""".stripMargin
-    },
-
-    "q_dedup_clusters" -> sqlClustersOracle,
-    "q_split_safe" -> sqlSplitSafeOracle,
-
-    // same transitive-closure truth — the Spark side differs (alternating
-    // star contraction instead of min-label propagation)
-    "q_dedup_cc" -> sqlClustersOracle,
-
-    "q_dedup_simhash" ->
-      """WITH toksd AS (
-        |  SELECT doc_id, unnest(list_distinct(string_split(text,' '))) AS tok
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id, CAST(('0x'||substr(md5(tok),1,8)) AS BIGINT) AS h
-        |  FROM toksd),
-        |v AS (
-        |  SELECT doc_id, bit,
-        |    SUM(CASE WHEN (h >> CAST(bit AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM h, range(0,16) r(bit) GROUP BY doc_id, bit)
-        |SELECT doc_id,
-        |  CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << CAST(bit AS INTEGER)) ELSE 0 END) AS BIGINT) AS simhash
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // G4 twin: regenerate the index-derived payload strings, replay the
-    // stub decoder's sequential rolling hash (acc = (31·acc + byte) mod
-    // 2³²) as a recursive CTE, then aHash bits / 16-bit bands / Hamming
-    // verify — all in exact integer space except the mean compare,
-    // which is the same single IEEE division on both engines. The
-    // 64-bit phash itself is never materialized here (bit tables
-    // instead), dodging cross-engine signed-shift semantics.
-    "q_phash_dups" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT i AS media_id, i AS src FROM range(500) t(i)
-        |  UNION ALL
-        |  SELECT i + 10000 AS media_id, i AS src FROM range(500) t(i) WHERE i % 50 = 0),
-        |medias AS (
-        |  SELECT media_id,
-        |    'media-' || src || '-' ||
-        |    (CASE src % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) ||
-        |    '-payload' AS payload
-        |  FROM base),
-        |m2 AS (
-        |  SELECT media_id, payload, length(payload) AS len,
-        |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma
-        |  FROM medias),
-        |scan AS (
-        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
-        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
-        |  FROM m2
-        |  UNION ALL
-        |  SELECT media_id, payload, len, n_luma, i + 1,
-        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
-        |  FROM scan WHERE i + 1 < n_luma),
-        |luma AS (SELECT media_id, i, acc % 256 AS v FROM scan),
-        |stats AS (
-        |  SELECT media_id, count(*) AS n, CAST(SUM(v) AS BIGINT) AS s
-        |  FROM luma GROUP BY 1),
-        |bits AS (
-        |  SELECT st.media_id, b.i AS bit,
-        |    CASE WHEN l.v > st.s / st.n THEN 1 ELSE 0 END AS bs
-        |  FROM stats st CROSS JOIN range(64) b(i)
-        |  JOIN luma l ON l.media_id = st.media_id AND l.i = b.i % st.n),
-        |bands AS (
-        |  SELECT media_id, bit // 16 AS band,
-        |    CAST(SUM(CASE WHEN bs = 1 THEN (CAST(1 AS BIGINT) << CAST(bit % 16 AS INTEGER)) ELSE 0 END) AS BIGINT) AS bv
-        |  FROM bits GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT a.media_id AS id1, b.media_id AS id2
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.media_id < b.media_id)
-        |SELECT c.id1, c.id2,
-        |  CAST(SUM(CASE WHEN x.bs <> y.bs THEN 1 ELSE 0 END) AS BIGINT) AS hamming
-        |FROM cand c
-        |JOIN bits x ON x.media_id = c.id1
-        |JOIN bits y ON y.media_id = c.id2 AND y.bit = x.bit
-        |GROUP BY 1, 2
-        |HAVING SUM(CASE WHEN x.bs <> y.bs THEN 1 ELSE 0 END) <= 8
-        |ORDER BY 1, 2""".stripMargin,
-
-    // G6 twin: the audio pipeline replayed — remaster payload rule →
-    // stub sample scan (same recursion as q_phash_dups) → sliding
-    // 13-sample windows → 12 successive-comparison bits → df-capped
-    // fingerprint join → per-(pair, offset) vote histogram → best
-    // alignment per pair
-    "q_audio_dups" ->
-      """WITH RECURSIVE medias AS (
-        |  SELECT CAST(i AS BIGINT) AS media_id,
-        |    CASE WHEN i % 4 = 3
-        |      THEN 'audio-track-' || (i - 3) || '-program-material-remaster-v2'
-        |      ELSE 'audio-track-' || i || '-program-material' END AS payload
-        |  FROM range(60) t(i)),
-        |m2 AS (
-        |  SELECT media_id, payload, length(payload) AS len,
-        |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma
-        |  FROM medias),
-        |scan AS (
-        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
-        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
-        |  FROM m2
-        |  UNION ALL
-        |  SELECT media_id, payload, len, n_luma, i + 1,
-        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
-        |  FROM scan WHERE i + 1 < n_luma),
-        |luma AS (SELECT media_id, n_luma, i, acc % 256 AS v FROM scan),
-        |wins AS (
-        |  SELECT DISTINCT l.media_id, CAST(w.w AS BIGINT) AS w
-        |  FROM luma l CROSS JOIN range(0, 4096, 2) w(w)
-        |  WHERE w.w <= l.n_luma - 13),
-        |fp AS (
-        |  SELECT ws.media_id, ws.w AS win_idx,
-        |    CAST(SUM(CASE WHEN hi.v > lo.v
-        |      THEN (CAST(1 AS BIGINT) << CAST(b.b AS INTEGER)) ELSE 0 END) AS BIGINT) AS fhash
-        |  FROM wins ws CROSS JOIN range(12) b(b)
-        |  JOIN luma hi ON hi.media_id = ws.media_id AND hi.i = ws.w + b.b + 1
-        |  JOIN luma lo ON lo.media_id = ws.media_id AND lo.i = ws.w + b.b
-        |  GROUP BY 1, 2),
-        |keepf AS (
-        |  SELECT fhash FROM fp GROUP BY 1
-        |  HAVING COUNT(DISTINCT media_id) <= 10),
-        |hf AS (SELECT fp.* FROM fp JOIN keepf USING (fhash)),
-        |votes AS (
-        |  SELECT a.media_id AS id1, b.media_id AS id2,
-        |    a.win_idx - b.win_idx AS delta,
-        |    CAST(COUNT(*) AS BIGINT) AS n_matches
-        |  FROM hf a JOIN hf b ON a.fhash = b.fhash AND a.media_id < b.media_id
-        |  GROUP BY 1, 2, 3
-        |  HAVING COUNT(*) >= 3),
-        |best AS (
-        |  SELECT *, row_number() OVER (PARTITION BY id1, id2
-        |    ORDER BY n_matches DESC, delta) AS rn FROM votes)
-        |SELECT id1, id2, delta AS best_delta, n_matches
-        |FROM best WHERE rn = 1 ORDER BY id1, id2""".stripMargin,
-
-    // G5 twin: the whole video pipeline replayed — padded video
-    // payloads → stub frame counts → per-frame payload derivation
-    // (re-upload rule) → per-frame stub decode (same recursive scan as
-    // q_phash_dups, keyed by (media, frame)) → signed 64-bit phash →
-    // 3-frame shingles (lead window) → shared-sig join → diagonal
-    // islands → per-pair run aggregates.
-    "q_video_dups" ->
-      """WITH RECURSIVE vids AS (
-        |  SELECT i AS media_id, 'media-' || i || '-video' AS base
-        |  FROM range(60) t(i)),
-        |pv AS (
-        |  SELECT media_id, base || repeat('x',
-        |    CAST((6 - length(base) % 7 + 7) % 7 + 7 * (media_id % 3)
-        |      AS INTEGER)) AS vp
-        |  FROM vids),
-        |meta AS (
-        |  SELECT media_id, 1 + length(vp) % 7 AS n_frames FROM pv),
-        |frames AS (
-        |  SELECT m.media_id, f.i AS frame_idx
-        |  FROM meta m JOIN range(7) f(i) ON f.i < m.n_frames),
-        |fp AS (
-        |  SELECT media_id, frame_idx,
-        |    'frame-' || (CASE WHEN media_id % 5 = 4 AND frame_idx >= 2
-        |      THEN CAST(media_id - 4 AS VARCHAR) || ':' ||
-        |           CAST(frame_idx - 2 AS VARCHAR)
-        |      ELSE CAST(media_id AS VARCHAR) || ':' ||
-        |           CAST(frame_idx AS VARCHAR) END) AS pay
-        |  FROM frames),
-        |f2 AS (
-        |  SELECT media_id, frame_idx, pay, length(pay) AS len,
-        |    (4 + length(pay) % 8) * (3 + length(pay) % 5) AS n_luma
-        |  FROM fp),
-        |scan AS (
-        |  SELECT media_id, frame_idx, pay, len, n_luma,
-        |    CAST(0 AS BIGINT) AS i,
-        |    CAST((17*31 + ascii(substr(pay, 1, 1))) % 4294967296
-        |      AS BIGINT) AS acc
-        |  FROM f2
-        |  UNION ALL
-        |  SELECT media_id, frame_idx, pay, len, n_luma, i + 1,
-        |    (acc * 31 + ascii(substr(pay,
-        |      CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
-        |  FROM scan WHERE i + 1 < n_luma),
-        |luma AS (
-        |  SELECT media_id, frame_idx, i, acc % 256 AS v FROM scan),
-        |stats AS (
-        |  SELECT media_id, frame_idx, count(*) AS n,
-        |    CAST(SUM(v) AS BIGINT) AS s
-        |  FROM luma GROUP BY 1, 2),
-        |bits AS (
-        |  SELECT st.media_id, st.frame_idx, b.i AS bit,
-        |    CASE WHEN l.v > st.s / st.n THEN 1 ELSE 0 END AS bs
-        |  FROM stats st CROSS JOIN range(64) b(i)
-        |  JOIN luma l ON l.media_id = st.media_id
-        |    AND l.frame_idx = st.frame_idx AND l.i = b.i % st.n),
-        |ph AS (
-        |  SELECT media_id, frame_idx,
-        |    CAST(CASE WHEN hv >= 9223372036854775808
-        |      THEN hv - 18446744073709551616 ELSE hv END AS BIGINT)
-        |      AS phash
-        |  FROM (
-        |    SELECT media_id, frame_idx,
-        |      SUM(CAST(bs AS HUGEINT) *
-        |        (CAST(1 AS HUGEINT) << CAST(bit AS INTEGER))) AS hv
-        |    FROM bits GROUP BY 1, 2)),
-        |sh AS (
-        |  SELECT media_id, frame_idx AS sidx,
-        |    md5(CAST(phash AS VARCHAR) || ':' || CAST(h1 AS VARCHAR)
-        |      || ':' || CAST(h2 AS VARCHAR)) AS sig
-        |  FROM (
-        |    SELECT media_id, frame_idx, phash,
-        |      lead(phash, 1) OVER (PARTITION BY media_id
-        |        ORDER BY frame_idx) AS h1,
-        |      lead(phash, 2) OVER (PARTITION BY media_id
-        |        ORDER BY frame_idx) AS h2
-        |    FROM ph)
-        |  WHERE h1 IS NOT NULL AND h2 IS NOT NULL),
-        |shared AS (
-        |  SELECT a.media_id AS vid1, b.media_id AS vid2,
-        |    a.sidx AS i1, a.sidx - b.sidx AS diag
-        |  FROM sh a JOIN sh b
-        |    ON a.sig = b.sig AND a.media_id < b.media_id),
-        |runs AS (
-        |  SELECT vid1, vid2, diag, grp,
-        |    CAST(count(*) AS BIGINT) AS n_shingles
-        |  FROM (SELECT vid1, vid2, diag, i1,
-        |          i1 - row_number() OVER (PARTITION BY vid1, vid2, diag
-        |            ORDER BY i1) AS grp
-        |        FROM shared)
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT CAST(vid1 AS BIGINT) AS vid1, CAST(vid2 AS BIGINT) AS vid2,
-        |  CAST(SUM(n_shingles) AS BIGINT) AS n_shared_shingles,
-        |  CAST(MAX(n_shingles) + 2 AS BIGINT) AS longest_run_frames,
-        |  CAST(count(*) AS BIGINT) AS n_runs
-        |FROM runs GROUP BY 1, 2 ORDER BY vid1, vid2""".stripMargin,
-
-    // G2 twin: decoder replay (same recursive CTE as q_phash_dups,
-    // without the dup injection), then per-media feature aggregates.
-    "q_media_features" ->
-      """WITH RECURSIVE medias AS (
-        |  SELECT i AS media_id,
-        |    (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) AS kind,
-        |    'media-' || i || '-' ||
-        |    (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) ||
-        |    '-payload' AS payload
-        |  FROM range(500) t(i)),
-        |m2 AS (
-        |  SELECT media_id, kind, payload, length(payload) AS len,
-        |    4 + length(payload) % 8 AS w, 3 + length(payload) % 5 AS h,
-        |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma,
-        |    CASE WHEN kind = 'video' THEN 1 + length(payload) % 7 ELSE 1 END AS frames
-        |  FROM medias),
-        |scan AS (
-        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
-        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
-        |  FROM m2
-        |  UNION ALL
-        |  SELECT media_id, payload, len, n_luma, i + 1,
-        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
-        |  FROM scan WHERE i + 1 < n_luma),
-        |stats AS (
-        |  SELECT media_id, count(*) AS n,
-        |    CAST(SUM(acc % 256) AS BIGINT) AS s,
-        |    CAST(MAX(acc % 256) AS DOUBLE) AS mx
-        |  FROM scan GROUP BY 1)
-        |SELECT m.media_id, m.kind,
-        |  CAST(m.w AS BIGINT) AS width, CAST(m.h AS BIGINT) AS height,
-        |  CAST(m.frames AS BIGINT) AS n_frames,
-        |  st.s / st.n AS mean_luma, st.mx AS max_luma
-        |FROM m2 m JOIN stats st USING (media_id)
-        |ORDER BY m.media_id""".stripMargin,
-
-    // G3 twin: frame indices from the stub's metadata derivation alone.
-    "q_frame_sample" ->
-      """WITH medias AS (
-        |  SELECT i AS media_id,
-        |    (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) AS kind,
-        |    length('media-' || i || '-' ||
-        |      (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) ||
-        |      '-payload') AS len
-        |  FROM range(500) t(i)),
-        |f AS (
-        |  SELECT media_id,
-        |    CASE WHEN kind = 'video' THEN 1 + len % 7 ELSE 1 END AS frames
-        |  FROM medias)
-        |SELECT media_id,
-        |  unnest(range(0, CAST(frames AS BIGINT), 2)) AS frame_idx
-        |FROM f
-        |ORDER BY media_id, frame_idx""".stripMargin,
-
-    "q_lang_id" -> {
-      val lex = Map(
-        "de" -> "['join','merge','sort','order']",
-        "en" -> "['the','a','of','key']",
-        "es" -> "['data','row','table','column']",
-        "fr" -> "['query','filter','group','window']",
-        "zh" -> "['spark','stream','batch','vector']")
-      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"CAST(len(list_filter(toks, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
-        .mkString(",\n    ")
-      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"WHEN score_$c = g THEN '$c'").mkString(" ")
-      s"""WITH t AS (SELECT doc_id, lang, string_split(text,' ') AS toks FROM documents),
-         |s AS (
-         |  SELECT doc_id, lang,
-         |    $scores
-         |  FROM t),
-         |g AS (SELECT *, greatest(score_de, score_en, score_es, score_fr, score_zh) AS g FROM s)
-         |SELECT doc_id, lang, score_de, score_en, score_es, score_fr, score_zh,
-         |  CASE $cases ELSE 'und' END AS pred_lang
-         |FROM g ORDER BY doc_id""".stripMargin
-    },
-
-    // E62: TV by the Σmin identity — inner join only (one-sided words
-    // contribute zero to Σmin); cross-multiplied, never divides early
-    "q_tv_sources" ->
-      """WITH toks AS (
-        |  SELECT source, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |cnt AS (
-        |  SELECT source, w, CAST(count(*) AS BIGINT) AS f
-        |  FROM toks WHERE length(w) > 0 GROUP BY 1, 2),
-        |tt AS (SELECT source, CAST(sum(f) AS BIGINT) AS t
-        |  FROM cnt GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.source AS source_a, b.source AS source_b,
-        |    CAST(count(*) AS BIGINT) AS n_shared_words,
-        |    sum(least(CAST(a.f AS HUGEINT) * tb.t,
-        |      CAST(b.f AS HUGEINT) * ta.t)) AS smin,
-        |    max(ta.t) AS ta, max(tb.t) AS tb
-        |  FROM cnt a JOIN cnt b ON a.w = b.w AND a.source < b.source
-        |  JOIN tt ta ON ta.source = a.source
-        |  JOIN tt tb ON tb.source = b.source
-        |  GROUP BY 1, 2)
-        |SELECT source_a, source_b, n_shared_words,
-        |  CAST(1000000 * (CAST(ta AS HUGEINT) * tb - smin)
-        |    // (CAST(ta AS HUGEINT) * tb) AS BIGINT) AS tv_ppm
-        |FROM pairs ORDER BY source_a, source_b""".stripMargin,
-
-    // E66: unbiased without-replacement Simpson; HUGEINT products
-    "q_diversity" ->
-      """WITH toks AS (
-        |  SELECT source, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |cnt AS (
-        |  SELECT source, w, CAST(count(*) AS BIGINT) AS f
-        |  FROM toks WHERE length(w) > 0 GROUP BY 1, 2),
-        |ag AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_vocab,
-        |    CAST(sum(f) AS BIGINT) AS n_tokens,
-        |    sum(CAST(f AS HUGEINT) * (f - 1)) AS coll
-        |  FROM cnt GROUP BY 1)
-        |SELECT source, n_vocab, n_tokens,
-        |  CAST(CASE WHEN n_tokens <= 1 THEN 0
-        |    ELSE 1000000 * coll
-        |      // (CAST(n_tokens AS HUGEINT) * (n_tokens - 1))
-        |    END AS BIGINT) AS simpson_ppm,
-        |  CAST(CASE WHEN n_tokens <= 1 THEN 0
-        |    ELSE 1000000 - 1000000 * coll
-        |      // (CAST(n_tokens AS HUGEINT) * (n_tokens - 1))
-        |    END AS BIGINT) AS diversity_ppm
-        |FROM ag ORDER BY source""".stripMargin,
-
-    // E64: per-doc novelty — distinct shingles, df=1 share, max df,
-    // mean df bit-length (the E56 doubling-bucket idiom)
-    "q_novelty" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |sh0 AS (
-        |  SELECT doc_id, list_transform(range(1, len(toks)-1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS sh
-        |  FROM t),
-        |hx AS (
-        |  SELECT DISTINCT doc_id,
-        |    CAST(('0x'||substr(md5(s),1,8)) AS BIGINT) AS x
-        |  FROM (SELECT doc_id, unnest(sh) AS s FROM sh0)),
-        |df AS (SELECT x, CAST(count(*) AS BIGINT) AS df FROM hx GROUP BY 1)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-        |  CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_unique,
-        |  CAST(1000000 * sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)
-        |    // count(*) AS BIGINT) AS unique_ppm,
-        |  max(df) AS max_df,
-        |  CAST(1000000 * sum(length(to_base(df, 2))) // count(*)
-        |    AS BIGINT) AS mean_df_bits_e6
-        |FROM hx JOIN df USING (x)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // E63: the dedup pipeline's exact shingle units (word 3-grams,
-    // md5-prefix hash), distinct per source, directional containment
-    "q_leakage" ->
-      """WITH t AS (
-        |  SELECT source, string_split(text, ' ') AS toks FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |sh AS (
-        |  SELECT source, list_transform(range(1, len(toks)-1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS sh
-        |  FROM t),
-        |hx AS (
-        |  SELECT DISTINCT source,
-        |    CAST(('0x'||substr(md5(s),1,8)) AS BIGINT) AS x
-        |  FROM (SELECT source, unnest(sh) AS s FROM sh)),
-        |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n_sh
-        |  FROM hx GROUP BY 1),
-        |pr AS (
-        |  SELECT a.source AS source_a, b.source AS source_b,
-        |    CAST(count(*) AS BIGINT) AS n_shared
-        |  FROM hx a JOIN hx b ON a.x = b.x AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT source_a, source_b, n_shared, za.n_sh AS n_a,
-        |  zb.n_sh AS n_b,
-        |  CAST(1000000 * n_shared // za.n_sh AS BIGINT) AS leak_a_ppm,
-        |  CAST(1000000 * n_shared // zb.n_sh AS BIGINT) AS leak_b_ppm
-        |FROM pr JOIN sz za ON za.source = pr.source_a
-        |JOIN sz zb ON zb.source = pr.source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-
-    "q_quality" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text,' ') AS toks FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(toks, x -> CAST(length(x) AS BIGINT))), (a,b) -> a+b) AS BIGINT) AS sum_tok_len,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['join','merge','sort','order','the','a','of','key','data','row','table','column',
-        |       'query','filter','group','window','spark','stream','batch','vector'], x))) AS BIGINT) AS stop_hits
-        |  FROM t),
-        |r AS (
-        |  SELECT *,
-        |    n_distinct / n_tokens AS distinct_ratio,
-        |    sum_tok_len / n_tokens AS mean_tok_len,
-        |    stop_hits / n_tokens AS stop_ratio
-        |  FROM c)
-        |SELECT doc_id, n_chars, n_tokens, n_distinct, sum_tok_len, stop_hits,
-        |  distinct_ratio, mean_tok_len, stop_ratio,
-        |  CAST((n_tokens >= 20 AND n_tokens <= 1000 AND distinct_ratio >= 0.05) AS BIGINT) AS quality_ok
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_ws,
-        |  CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS n_words,
-        |  CAST((length(text) + 3) // 4 AS BIGINT) AS n_bpe_est
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_zipf" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-        |v AS (SELECT w, CAST(count(*) AS BIGINT) AS f
-        |      FROM toks WHERE w <> '' GROUP BY 1),
-        |b AS (SELECT CAST(length(to_base(f, 2)) AS BIGINT) AS freq_bits,
-        |        CAST(count(*) AS BIGINT) AS n_words,
-        |        CAST(sum(f) AS BIGINT) AS n_occ,
-        |        CAST(min(f) AS BIGINT) AS min_f,
-        |        CAST(max(f) AS BIGINT) AS max_f
-        |      FROM v GROUP BY 1)
-        |SELECT freq_bits, n_words, n_occ, min_f, max_f,
-        |  CAST(1000000 * sum(n_occ) OVER (ORDER BY freq_bits DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    // sum(n_occ) OVER () AS BIGINT) AS cum_share_ppm,
-        |  CAST(length(to_base(n_words, 2)) + freq_bits - 1 AS BIGINT)
-        |    AS zipf_const_bits
-        |FROM b ORDER BY freq_bits""".stripMargin,
-
-    "q_heaps" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |toks AS (SELECT doc_id, unnest(t) AS w FROM d),
-        |fm AS (SELECT w, min(doc_id) AS m FROM toks WHERE w <> '' GROUP BY 1),
-        |vb AS (SELECT CASE WHEN m = 0 THEN 0
-        |         ELSE length(to_base(m, 2)) END AS k,
-        |         CAST(count(*) AS BIGINT) AS new_vocab
-        |       FROM fm GROUP BY 1),
-        |tb AS (SELECT CASE WHEN doc_id = 0 THEN 0
-        |         ELSE length(to_base(doc_id, 2)) END AS k,
-        |         CAST(count(*) AS BIGINT) AS new_docs,
-        |         CAST(sum(len(list_filter(t, x -> x <> ''))) AS BIGINT)
-        |           AS new_tokens
-        |       FROM d GROUP BY 1),
-        |j AS (SELECT tb.k, tb.new_docs, tb.new_tokens,
-        |        COALESCE(vb.new_vocab, 0) AS new_vocab
-        |      FROM tb LEFT JOIN vb ON tb.k = vb.k)
-        |SELECT CAST(k AS BIGINT) AS k,
-        |  CAST(sum(new_docs) OVER wcum AS BIGINT) AS n_docs,
-        |  CAST(sum(new_tokens) OVER wcum AS BIGINT) AS n_tokens,
-        |  CAST(sum(new_vocab) OVER wcum AS BIGINT) AS n_vocab,
-        |  CAST(new_vocab AS BIGINT) AS new_vocab,
-        |  CAST(new_tokens AS BIGINT) AS new_tokens,
-        |  CAST(CASE WHEN new_tokens > 0
-        |    THEN 1000000 * new_vocab // new_tokens ELSE 0 END AS BIGINT)
-        |    AS new_rate_ppm
-        |FROM j
-        |WINDOW wcum AS (ORDER BY k
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY k""".stripMargin,
-
-    "q_tfidf_top" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |df AS (
-        |  SELECT term, count(*) AS df FROM (
-        |    SELECT DISTINCT doc_id, term FROM toks) GROUP BY 1),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, CAST(tf.tf AS BIGINT) AS tf,
-        |    CAST(df.df AS BIGINT) AS df,
-        |    CAST((tf.tf * 1000000) // df.df AS BIGINT) AS score
-        |  FROM tf JOIN df USING (term)),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY score DESC, term) AS rn
-        |  FROM scored)
-        |SELECT doc_id, term AS top_term, tf, df, score
-        |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "q_bigrams" ->
-      """WITH t AS (
-        |  SELECT string_split(text,' ') AS toks FROM documents
-        |  WHERE len(string_split(text,' ')) >= 2),
-        |b AS (
-        |  SELECT unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS bigram
-        |  FROM t)
-        |SELECT bigram, count(*) AS n FROM b
-        |GROUP BY bigram HAVING count(*) >= 10
-        |ORDER BY bigram""".stripMargin,
-
-    "q_coherence" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text,' ') AS toks FROM documents
-        |  WHERE len(string_split(text,' ')) >= 2),
-        |db AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS bg
-        |  FROM t),
-        |model AS (
-        |  SELECT bg, count(*) AS bg_cnt, string_split(bg,' ')[1] AS w1
-        |  FROM db GROUP BY bg),
-        |prefix AS (
-        |  SELECT w1, CAST(sum(bg_cnt) AS BIGINT) AS w1_cnt
-        |  FROM model GROUP BY w1),
-        |scored AS (
-        |  SELECT m.bg, m.bg_cnt * 1000000 // p.w1_cnt AS ppm
-        |  FROM model m JOIN prefix p ON m.w1 = p.w1)
-        |SELECT d.doc_id, count(*) AS n_bigrams,
-        |  CAST(sum(s.ppm) AS BIGINT) AS sum_ppm,
-        |  CAST(sum(s.ppm) AS BIGINT) // count(*) AS coherence_ppm
-        |FROM db d JOIN scored s ON d.bg = s.bg
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-
-    "q_fingerprint" ->
-      """SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split(text,' '),
-        |      t -> CAST(('0x'||substr(md5(t),1,8)) AS BIGINT))),
-        |    (a,b) -> (a*1000003 + b) % 2147483647) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_ann_brute" ->
-      """WITH v AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2 FROM n WHERE vec_id < 10),
-        |sc AS (
-        |  SELECT q.q_id, n.vec_id,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> q.q_svec[i]*n.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS DOUBLE))) AS cos
-        |  FROM n JOIN q ON n.vec_id <> q.q_id),
-        |r AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
-        |  FROM sc)
-        |SELECT q_id, vec_id, cos, rnk FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    "q_ann_ivf" ->
-      """WITH v AS (
-        |  SELECT vec_id, label, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, label, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2 FROM n WHERE vec_id < 10),
-        |cent0 AS (
-        |  SELECT label, i, SUM(svec[i]) AS s
-        |  FROM n, range(1,65) t(i) GROUP BY label, i),
-        |cent AS (
-        |  SELECT label, list(s ORDER BY i) AS cvec FROM cent0 GROUP BY label),
-        |centn AS (
-        |  SELECT label, cvec,
-        |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
-        |      list_transform(cvec, x -> CAST(x AS HUGEINT)*x)), (a,b) -> a+b) AS cnorm2
-        |  FROM cent),
-        |routed0 AS (
-        |  SELECT q.q_id, q.q_svec, q.q_norm2, c.label,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS HUGEINT),
-        |      list_transform(range(1,65), i -> CAST(q.q_svec[i] AS HUGEINT)*c.cvec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(c.cnorm2 AS DOUBLE))) AS ccos
-        |  FROM q CROSS JOIN centn c),
-        |routed AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY ccos DESC, label) AS crnk
-        |    FROM routed0) WHERE crnk = 1),
-        |sc AS (
-        |  SELECT r.q_id, CAST(n.label AS BIGINT) AS label, n.vec_id,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> r.q_svec[i]*n.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(r.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS DOUBLE))) AS cos
-        |  FROM n JOIN routed r ON n.label = r.label AND n.vec_id <> r.q_id),
-        |rk AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
-        |  FROM sc)
-        |SELECT q_id, label, vec_id, cos, rnk FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin,
-
-    // Learned-IVF twin: identical probe math to q_ann_ivf but the coarse
-    // cell comes from the parquet the Spark query exported (path patched
-    // in by Verify — __GRAFT_CELLS__), nprobe=2, k=3. Everything after
-    // the assignment table is exact scaled-integer math.
-    "q_ann_ivf_learned" ->
-      """WITH cells AS (
-        |  SELECT vec_id, CAST(cell AS BIGINT) AS cell
-        |  FROM read_parquet('__GRAFT_CELLS__/*.parquet')),
-        |v AS (
-        |  SELECT e.vec_id, c.cell, list_transform(e.embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings e JOIN cells c USING (vec_id)),
-        |n AS (
-        |  SELECT vec_id, cell, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2 FROM n WHERE vec_id < 10),
-        |cent0 AS (
-        |  SELECT cell, i, SUM(svec[i]) AS s
-        |  FROM n, range(1,65) t(i) GROUP BY cell, i),
-        |cent AS (
-        |  SELECT cell, list(s ORDER BY i) AS cvec FROM cent0 GROUP BY cell),
-        |centn AS (
-        |  SELECT cell, cvec,
-        |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
-        |      list_transform(cvec, x -> CAST(x AS HUGEINT)*x)), (a,b) -> a+b) AS cnorm2
-        |  FROM cent),
-        |routed0 AS (
-        |  SELECT q.q_id, q.q_svec, q.q_norm2, c.cell,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS HUGEINT),
-        |      list_transform(range(1,65), i -> CAST(q.q_svec[i] AS HUGEINT)*c.cvec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(c.cnorm2 AS DOUBLE))) AS ccos
-        |  FROM q CROSS JOIN centn c),
-        |routed AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY ccos DESC, cell) AS crnk
-        |    FROM routed0) WHERE crnk <= 2),
-        |sc AS (
-        |  SELECT r.q_id, n.cell, n.vec_id,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> r.q_svec[i]*n.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(r.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS DOUBLE))) AS cos
-        |  FROM n JOIN routed r ON n.cell = r.cell AND n.vec_id <> r.q_id),
-        |rk AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
-        |  FROM sc)
-        |SELECT q_id, cell, vec_id, cos, rnk FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin,
-
-    "q_curate" ->
-      """WITH g AS (
-        |  SELECT doc_id, lang, text,
-        |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
-        |    md5(text) AS content_hash
-        |  FROM documents
-        |  WHERE lang IN ('en','de','fr')),
-        |gated AS (
-        |  SELECT * FROM g
-        |  WHERE n_tokens >= 20 AND n_tokens <= 1000
-        |    AND n_distinct / n_tokens >= 0.05),
-        |keepers AS (
-        |  SELECT content_hash, min(doc_id) AS doc_id FROM gated GROUP BY 1)
-        |SELECT g.doc_id, g.lang, g.n_tokens, g.content_hash
-        |FROM gated g
-        |WHERE EXISTS (SELECT 1 FROM keepers k
-        |  WHERE k.content_hash = g.content_hash AND k.doc_id = g.doc_id)
-        |ORDER BY g.doc_id""".stripMargin,
-
-    "q_mode" ->
-      """WITH cc AS (
-        |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v,
-        |    CAST(count(*) AS BIGINT) AS nv
-        |  FROM events GROUP BY 1, 2),
-        |rk AS (
-        |  SELECT event_type, v, nv,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY nv DESC, v) AS rn
-        |  FROM cc)
-        |SELECT event_type, v AS mode_cents, nv AS n_occurrences
-        |FROM rk WHERE rn = 1 ORDER BY event_type""".stripMargin,
-
-    "q_erasure" ->
-      """WITH ev AS (SELECT event_type, user_id FROM events),
-        |surv AS (
-        |  SELECT event_type,
-        |    CAST(count(*) AS BIGINT) AS n_surviving,
-        |    CAST(count(DISTINCT user_id) AS BIGINT) AS n_users_surviving
-        |  FROM ev WHERE user_id % 97 <> 0 GROUP BY 1),
-        |gone AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_erased
-        |  FROM ev WHERE user_id % 97 = 0 GROUP BY 1)
-        |SELECT s.event_type, s.n_surviving, s.n_users_surviving,
-        |  COALESCE(g.n_erased, 0) AS n_erased
-        |FROM surv s LEFT JOIN gone g ON g.event_type = s.event_type
-        |ORDER BY s.event_type""".stripMargin,
-
-    "q_source_cap" ->
-      """SELECT source, CAST(doc_id AS BIGINT) AS doc_id,
-        |  CAST(n_chars AS BIGINT) AS n_chars
-        |FROM (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (
-        |      PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn
-        |  FROM documents) t
-        |WHERE rn <= 10
-        |ORDER BY source, doc_id""".stripMargin,
-
-    "q_curate_full" ->
-      s"""WITH RECURSIVE $sqlLshCtes,
-         |edges AS MATERIALIZED (
-         |  SELECT id1 AS a, id2 AS b FROM cand
-         |  UNION SELECT id2, id1 FROM cand),
-         |walk(node, lbl) AS (
-         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
-         |  UNION
-         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
-         |  FROM walk w JOIN edges e ON w.node = e.a
-         |  GROUP BY e.b),
-         |assign AS MATERIALIZED (
-         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
-         |  FROM walk GROUP BY node),
-         |g AS (
-         |  SELECT doc_id, lang, text,
-         |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
-         |    md5(text) AS content_hash
-         |  FROM documents
-         |  WHERE lang IN ('en','de','fr')),
-         |gated AS (
-         |  SELECT * FROM g
-         |  WHERE n_tokens >= 20 AND n_tokens <= 1000
-         |    AND n_distinct / n_tokens >= 0.05),
-         |keepers AS (
-         |  SELECT content_hash, min(doc_id) AS doc_id FROM gated GROUP BY 1),
-         |cur AS (
-         |  SELECT g.doc_id, g.lang, g.n_tokens, g.content_hash
-         |  FROM gated g
-         |  WHERE EXISTS (SELECT 1 FROM keepers k
-         |    WHERE k.content_hash = g.content_hash AND k.doc_id = g.doc_id))
-         |SELECT c.doc_id, c.lang, c.n_tokens, c.content_hash
-         |FROM cur c LEFT JOIN assign a ON c.doc_id = a.doc_id
-         |WHERE a.cluster_id IS NULL OR a.cluster_id = c.doc_id
-         |ORDER BY c.doc_id""".stripMargin,
-
-    // E70: first-failing-gate attribution; keeper = min PASSING copy,
-    // near-dup canonical = full-corpus cluster min id (E19 semantics)
-    "q_curation_funnel" ->
-      s"""WITH RECURSIVE $sqlLshCtes,
-         |edges AS MATERIALIZED (
-         |  SELECT id1 AS a, id2 AS b FROM cand
-         |  UNION SELECT id2, id1 FROM cand),
-         |walk(node, lbl) AS (
-         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
-         |  UNION
-         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
-         |  FROM walk w JOIN edges e ON w.node = e.a
-         |  GROUP BY e.b),
-         |assign AS MATERIALIZED (
-         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
-         |  FROM walk GROUP BY node),
-         |g AS (
-         |  SELECT doc_id, lang, source,
-         |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT)
-         |      AS n_distinct,
-         |    md5(text) AS content_hash,
-         |    lang IN ('en','de','fr') AS lang_ok,
-         |    CAST(len(string_split(text,' ')) AS BIGINT) < 20
-         |      AS short_bad,
-         |    CAST(len(string_split(text,' ')) AS BIGINT) > 1000
-         |      AS long_bad
-         |  FROM documents),
-         |g2 AS (
-         |  SELECT *, n_distinct / n_tokens < 0.05 AS div_bad,
-         |    lang_ok AND NOT short_bad AND NOT long_bad
-         |      AND NOT (n_distinct / n_tokens < 0.05) AS passed
-         |  FROM g),
-         |ke AS (
-         |  SELECT content_hash, min(doc_id) AS keep_id
-         |  FROM g2 WHERE passed GROUP BY 1),
-         |r AS (
-         |  SELECT g2.source, g2.n_tokens,
-         |    CASE WHEN NOT g2.lang_ok THEN '1_lang'
-         |      WHEN g2.short_bad THEN '2_too_short'
-         |      WHEN g2.long_bad THEN '3_too_long'
-         |      WHEN g2.div_bad THEN '4_low_diversity'
-         |      WHEN g2.doc_id != k.keep_id THEN '5_exact_dup'
-         |      WHEN a.cluster_id IS NOT NULL
-         |        AND a.cluster_id != g2.doc_id THEN '6_near_dup'
-         |      ELSE '7_kept' END AS reason
-         |  FROM g2
-         |  LEFT JOIN ke k ON g2.content_hash = k.content_hash
-         |  LEFT JOIN assign a ON g2.doc_id = a.doc_id)
-         |SELECT source, reason, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-         |FROM r GROUP BY 1, 2 ORDER BY source, reason""".stripMargin,
-
-    // Coreset twin: the same exact-integer SRP signature pipeline as
-    // q_dedup_embed (no dup injection), then one group per bucket.
-    "q_coreset" ->
-      """WITH v AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings),
-        |signs AS (
-        |  SELECT j.j AS j, i.i AS i,
-        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM range(0,16) j(j), range(0,64) i(i)),
-        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
-        |  FROM v, range(0,64) i(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
-        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
-        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id)
-        |SELECT sig, min(vec_id) AS rep_id,
-        |  CAST(count(*) AS BIGINT) AS bucket_size
-        |FROM sig GROUP BY sig ORDER BY rep_id""".stripMargin,
-
-    "q_dedup_embed" ->
-      """WITH base AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id % 100 = 0),
-        |v AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM base),
-        |n AS (
-        |  SELECT vec_id, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |signs AS (
-        |  SELECT j.j AS j, i.i AS i,
-        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM range(0,16) j(j), range(0,64) i(i)),
-        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
-        |  FROM n, range(0,64) i(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
-        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
-        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id),
-        |masks AS (
-        |  SELECT CAST(0 AS BIGINT) AS m
-        |  UNION ALL
-        |  SELECT CAST(1 AS BIGINT) << CAST(j.j AS INTEGER) FROM range(0,16) j(j)),
-        |probes AS (
-        |  SELECT vec_id, xor(sig, m) AS psig FROM sig, masks),
-        |cand AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM sig a JOIN probes b ON a.sig = b.psig AND a.vec_id < b.vec_id),
-        |sc AS (
-        |  SELECT c.id1, c.id2,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
-        |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)
-        |SELECT id1, id2, cos FROM sc WHERE cos >= 0.999 ORDER BY id1, id2""".stripMargin,
-
-    // E54 twin: identical SRP discipline, asymmetric sides — probes
-    // explode on the eval side only; leaked copies re-injected +10M
-    "q_contam_embed" ->
-      """WITH ev AS (
-        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
-        |tr AS (
-        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 0
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, embedding FROM ev
-        |  WHERE (vec_id // 50) % 4 = 0),
-        |base AS (
-        |  SELECT vec_id, embedding, 1 AS is_ev FROM ev
-        |  UNION ALL
-        |  SELECT vec_id, embedding, 0 AS is_ev FROM tr),
-        |v AS (
-        |  SELECT vec_id, is_ev, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM base),
-        |n AS (
-        |  SELECT vec_id, is_ev, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |signs AS (
-        |  SELECT j.j AS j, i.i AS i,
-        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM range(0,16) j(j), range(0,64) i(i)),
-        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
-        |  FROM n, range(0,64) i(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
-        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
-        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id),
-        |masks AS (
-        |  SELECT CAST(0 AS BIGINT) AS m
-        |  UNION ALL
-        |  SELECT CAST(1 AS BIGINT) << CAST(j.j AS INTEGER) FROM range(0,16) j(j)),
-        |probes AS (
-        |  SELECT s.vec_id, xor(s.sig, m.m) AS psig
-        |  FROM sig s JOIN n ON n.vec_id = s.vec_id
-        |  CROSS JOIN masks m WHERE n.is_ev = 1),
-        |cand AS (
-        |  SELECT p.vec_id AS eval_id, t.vec_id AS train_id
-        |  FROM probes p
-        |  JOIN sig t ON t.sig = p.psig
-        |  JOIN n tn ON tn.vec_id = t.vec_id AND tn.is_ev = 0),
-        |sc AS (
-        |  SELECT c.eval_id, c.train_id,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
-        |  FROM cand c JOIN n x ON c.eval_id = x.vec_id JOIN n y ON c.train_id = y.vec_id)
-        |SELECT eval_id, CAST(count(*) AS BIGINT) AS n_leaks,
-        |  MAX(cos) AS max_cos, MIN(train_id) AS leak_id
-        |FROM sc WHERE cos >= 0.999
-        |GROUP BY eval_id ORDER BY eval_id""".stripMargin,
-
-    // knob-off twin: identical up to candidate generation, which joins
-    // exact signatures only (no 1-bit probe masks)
-    "q_dedup_embed_exactsig" ->
-      """WITH base AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id % 100 = 0),
-        |v AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM base),
-        |n AS (
-        |  SELECT vec_id, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |signs AS (
-        |  SELECT j.j AS j, i.i AS i,
-        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM range(0,16) j(j), range(0,64) i(i)),
-        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
-        |  FROM n, range(0,64) i(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
-        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
-        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id),
-        |cand AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id < b.vec_id),
-        |sc AS (
-        |  SELECT c.id1, c.id2,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
-        |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)
-        |SELECT id1, id2, cos FROM sc WHERE cos >= 0.999 ORDER BY id1, id2""".stripMargin,
-
-    "q_emb_quantize" ->
-      """WITH d AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dvec
-        |  FROM embeddings),
-        |m AS (
-        |  SELECT vec_id, dvec,
-        |    list_max(list_transform(dvec, x -> abs(x))) AS max_abs
-        |  FROM d),
-        |q AS (
-        |  SELECT vec_id,
-        |    list_transform(dvec, x -> CAST(round(x * 127 / max_abs) AS BIGINT)) AS qvec
-        |  FROM m)
-        |SELECT vec_id,
-        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), qvec), (a,b) -> a+b) AS BIGINT) AS q_sum,
-        |  CAST(list_min(qvec) AS BIGINT) AS q_min,
-        |  CAST(list_max(qvec) AS BIGINT) AS q_max
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    "q_chunk" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        |c AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n,
-        |  CAST(1 + CASE WHEN len(toks) > 40
-        |    THEN (len(toks) - 40 + 29) // 30 ELSE 0 END AS BIGINT) AS n_chunks
-        |  FROM t),
-        |x AS (SELECT doc_id, toks, n, unnest(range(0, n_chunks)) AS i FROM c)
-        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
-        |  array_to_string(toks[(i*30+1):(i*30+40)], ' ') AS chunk_text,
-        |  CAST(least(40, n - i*30) AS BIGINT) AS chunk_tokens
-        |FROM x ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q_gopher" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        |u AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-        |uc AS (SELECT doc_id, tok, count(*) AS c FROM u GROUP BY 1, 2),
-        |ua AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |  count(*) AS n_distinct, CAST(max(c) AS BIGINT) AS max_uni
-        |  FROM uc GROUP BY 1),
-        |b AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS bg
-        |  FROM t WHERE len(toks) >= 2),
-        |bc AS (SELECT doc_id, bg, count(*) AS c FROM b GROUP BY 1, 2),
-        |ba AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-        |  CAST(max(c) AS BIGINT) AS max_bi FROM bc GROUP BY 1)
-        |SELECT ua.doc_id, ua.n_tokens, ua.n_distinct,
-        |  (ua.n_tokens - ua.n_distinct) * 1000000 // ua.n_tokens AS dup_tok_ppm,
-        |  ua.max_uni * 1000000 // ua.n_tokens AS top_uni_ppm,
-        |  COALESCE(ba.max_bi * 1000000 // ba.n_bigrams, 0) AS top_bi_ppm,
-        |  CAST(CASE WHEN ua.max_uni * 1000000 // ua.n_tokens <= 120000
-        |    AND COALESCE(ba.max_bi * 1000000 // ba.n_bigrams, 0) <= 80000
-        |    AND (ua.n_tokens - ua.n_distinct) * 1000000 // ua.n_tokens <= 800000
-        |    THEN 1 ELSE 0 END AS BIGINT) AS gopher_ok
-        |FROM ua LEFT JOIN ba ON ua.doc_id = ba.doc_id
-        |ORDER BY ua.doc_id""".stripMargin,
-
-    "q_pii_scrub" ->
-      """WITH t AS (
-        |  SELECT doc_id, text
-        |    || CASE WHEN doc_id % 7 = 0 THEN ' contact user'
-        |         || CAST(doc_id AS VARCHAR) || '@example.com now' ELSE '' END
-        |    || CASE WHEN doc_id % 11 = 0 THEN ' call 555-'
-        |         || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' asap'
-        |       ELSE '' END AS t2
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id,
-        |    regexp_replace(regexp_replace(t2,
-        |      '[a-z0-9]+@[a-z]+\.[a-z]+', '<EMAIL>', 'g'),
-        |      '\d{3}-\d{4}', '<PHONE>', 'g') AS s2
-        |  FROM t)
-        |SELECT doc_id,
-        |  (length(s2) - length(replace(s2, '<EMAIL>', ''))) // 7 AS n_emails,
-        |  (length(s2) - length(replace(s2, '<PHONE>', ''))) // 7 AS n_phones,
-        |  CAST(('0x'||substr(md5(s2),1,8)) AS BIGINT) AS scrub_hash
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "q_split" ->
-      """WITH t AS (
-        |  SELECT source, doc_id, n_chars,
-        |    CAST(('0x'||substr(md5('split:'||CAST(doc_id AS VARCHAR)),1,8))
-        |      AS BIGINT) % 100 AS b
-        |  FROM documents)
-        |SELECT source,
-        |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
-        |    ELSE 'test' END AS split,
-        |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  min(doc_id) AS min_doc
-        |FROM t GROUP BY 1, 2 ORDER BY source, split""".stripMargin,
-
-    // DLT priority sampling twin: same md5-derived uniform, identical
-    // two-op IEEE sequence (cast-mul, then divide), same tie-break.
-    "q_priority_sample" ->
-      """SELECT doc_id, source, n_chars,
-        |  (CAST(n_chars AS DOUBLE) * 4294967296.0) /
-        |  CAST(CAST(('0x'||substr(md5('prio:'||CAST(doc_id AS VARCHAR)),1,8))
-        |    AS BIGINT) + 1 AS DOUBLE) AS priority
-        |FROM documents
-        |ORDER BY priority DESC, doc_id LIMIT 100""".stripMargin,
-
-    // Mixture-sampling twin: same parity budgets, same md5 permutation,
-    // same strictly-before cumulative predicate.
-    "q_mixture" ->
-      """WITH t AS (
-        |  SELECT source, doc_id, n_chars,
-        |    CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 0
-        |      THEN 4000 ELSE 2000 END AS budget,
-        |    COALESCE(SUM(n_chars) OVER (PARTITION BY source
-        |      ORDER BY CAST(('0x'||substr(md5('mix:'||CAST(doc_id AS VARCHAR)),1,8))
-        |        AS BIGINT), doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-        |  FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM t WHERE cum_before < budget
-        |GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q_histogram" ->
-      """WITH ev AS (
-        |  SELECT event_type,
-        |    CAST(round(value*100) AS BIGINT) AS v
-        |  FROM events),
-        |b AS (SELECT min(v) AS mn, max(v) AS mx FROM ev)
-        |SELECT event_type,
-        |  ((v - mn) * 10) // (mx - mn + 1) AS bin,
-        |  count(*) AS n,
-        |  min(v) AS lo_cents, max(v) AS hi_cents
-        |FROM ev CROSS JOIN b
-        |GROUP BY 1, 2 ORDER BY event_type, bin""".stripMargin,
-
-    "q_histogram_depth" ->
-      """WITH vals AS (
-        |  SELECT CAST(round(value*100) AS BIGINT) AS v, count(*) AS nv
-        |  FROM events GROUP BY 1),
-        |cum AS (
-        |  SELECT v, nv, sum(nv) OVER (ORDER BY v) AS cum FROM vals),
-        |tot AS (SELECT CAST(sum(nv) AS BIGINT) AS n_rows FROM vals)
-        |SELECT CAST(((cum - nv) * 8) // n_rows AS BIGINT) AS bucket,
-        |  CAST(sum(nv) AS BIGINT) AS n,
-        |  min(v) AS lo_cents, max(v) AS hi_cents
-        |FROM cum CROSS JOIN tot
-        |GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    // Collection twin: the zip_with(arr, reverse(arr)) fold equals
-    // 2·Σarr by symmetry, and exists(x > t) equals max > t — the twin
-    // states the identities, which checks the HOFs against closed forms.
-    "q_collection_funcs" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(round(value*100) AS BIGINT) AS v FROM events),
-        |a AS (SELECT user_id, list(v ORDER BY v) AS arr FROM ev GROUP BY 1)
-        |SELECT user_id,
-        |  CAST(len(arr) AS BIGINT) AS n,
-        |  CAST(list_sum(arr) AS BIGINT) AS total_cents,
-        |  list_min(arr) AS min_cents,
-        |  list_max(arr) AS max_cents,
-        |  CAST(len(list_filter(arr, x -> x % 2 = 0)) AS BIGINT) AS n_even,
-        |  array_to_string(arr[1:3], ',') AS first3,
-        |  arr[1] AS elem1,
-        |  CAST(2 * list_sum(arr) AS BIGINT) AS zip_sum,
-        |  CAST(list_max(arr) > 90000 AS BIGINT) AS has_big
-        |FROM a ORDER BY user_id""".stripMargin,
-
-    "q_drift" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(round(value*100) AS BIGINT) AS v
-        |  FROM events),
-        |bdmin AS (SELECT min(day) AS dmin FROM ev),
-        |base AS (SELECT event_type, v FROM ev CROSS JOIN bdmin
-        |  WHERE day < dmin + 15),
-        |cur AS (SELECT event_type, v FROM ev CROSS JOIN bdmin
-        |  WHERE day >= dmin + 15),
-        |bounds AS (SELECT min(v) AS mn, max(v) AS mx FROM (
-        |  SELECT v FROM base UNION ALL SELECT v FROM cur)),
-        |b AS (SELECT event_type, ((v - mn) * 10) // (mx - mn + 1) AS bin,
-        |    count(*) AS n_b FROM base CROSS JOIN bounds GROUP BY 1, 2),
-        |c AS (SELECT event_type, ((v - mn) * 10) // (mx - mn + 1) AS bin,
-        |    count(*) AS n_c FROM cur CROSS JOIN bounds GROUP BY 1, 2),
-        |tb AS (SELECT event_type, CAST(sum(n_b) AS BIGINT) AS tb FROM b GROUP BY 1),
-        |tc AS (SELECT event_type, CAST(sum(n_c) AS BIGINT) AS tc FROM c GROUP BY 1),
-        |j AS (
-        |  SELECT b.event_type, b.bin,
-        |    CAST(COALESCE(c.n_c, 0) AS DOUBLE) AS ncd,
-        |    CAST(tb.tb AS DOUBLE) AS tbd, CAST(tc.tc AS DOUBLE) AS tcd,
-        |    CAST(b.n_b AS DOUBLE) AS nbd
-        |  FROM b
-        |  LEFT JOIN c ON c.event_type = b.event_type AND c.bin = b.bin
-        |  JOIN tb ON tb.event_type = b.event_type
-        |  JOIN tc ON tc.event_type = b.event_type)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_bins,
-        |  CAST(SUM(CAST(ROUND(((ncd * tbd - tcd * nbd) * (ncd * tbd - tcd * nbd) * 1000000.0) / ((tbd * tcd) * nbd)) AS BIGINT)) AS BIGINT) AS chi2_u
-        |FROM j GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q_incr_agg" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  min(CAST(round(value*100) AS BIGINT)) AS min_cents,
-        |  max(CAST(round(value*100) AS BIGINT)) AS max_cents
-        |FROM events GROUP BY 1 ORDER BY user_id""".stripMargin,
-
-    "q_triangles" ->
-      """WITH sd AS (SELECT doc_id, text FROM documents WHERE doc_id % 125 = 0),
-        |u AS (
-        |  SELECT doc_id, md5(text) AS ch FROM documents
-        |  UNION ALL SELECT doc_id + 10000000, md5(text) FROM sd
-        |  UNION ALL SELECT doc_id + 20000000, md5(text) FROM sd),
-        |e AS (
-        |  SELECT l.doc_id AS id1, r.doc_id AS id2
-        |  FROM u l JOIN u r ON l.ch = r.ch AND l.doc_id < r.doc_id),
-        |t AS (
-        |  SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
-        |  FROM e e1
-        |  JOIN e e2 ON e1.id2 = e2.id1
-        |  JOIN e e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2),
-        |n AS (SELECT unnest([a, b, c]) AS node FROM t)
-        |SELECT CAST(node AS BIGINT) AS node,
-        |  CAST(count(*) AS BIGINT) AS n_triangles
-        |FROM n GROUP BY 1 ORDER BY node""".stripMargin,
-
-    // D75: same dup graph; lcc = 2·tri/(deg·(deg−1)) in ppm, deg≥2
-    // nodes only, triangle-free nodes grid-completed at 0
-    "q_lcc" ->
-      """WITH sd AS (SELECT doc_id, text FROM documents WHERE doc_id % 125 = 0),
-        |u AS (
-        |  SELECT doc_id, md5(text) AS ch FROM documents
-        |  UNION ALL SELECT doc_id + 10000000, md5(text) FROM sd
-        |  UNION ALL SELECT doc_id + 20000000, md5(text) FROM sd),
-        |e AS (
-        |  SELECT l.doc_id AS id1, r.doc_id AS id2
-        |  FROM u l JOIN u r ON l.ch = r.ch AND l.doc_id < r.doc_id),
-        |t AS (
-        |  SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
-        |  FROM e e1
-        |  JOIN e e2 ON e1.id2 = e2.id1
-        |  JOIN e e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2),
-        |tri AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-        |  FROM (SELECT unnest([a, b, c]) AS node FROM t) GROUP BY 1),
-        |deg AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS degree
-        |  FROM (SELECT id1 AS node FROM e UNION ALL SELECT id2 FROM e)
-        |  GROUP BY 1),
-        |j AS (
-        |  SELECT d.node, d.degree,
-        |    coalesce(tri.n_triangles, 0) AS n_triangles
-        |  FROM deg d LEFT JOIN tri USING (node) WHERE d.degree >= 2)
-        |SELECT CAST(node AS BIGINT) AS node, degree, n_triangles,
-        |  CAST(1000000 * 2 * n_triangles // (degree * (degree - 1))
-        |    AS BIGINT) AS lcc_ppm
-        |FROM j ORDER BY node""".stripMargin,
-
-    "q_winsorize" ->
-      """WITH ev AS (
-        |  SELECT event_type, CAST(round(value*100) AS BIGINT) AS v FROM events),
-        |cc AS (SELECT event_type, v, count(*) AS nv FROM ev GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT event_type, v, nv,
-        |    sum(nv) OVER (PARTITION BY event_type ORDER BY v) AS cum
-        |  FROM cc),
-        |tot AS (SELECT event_type, CAST(sum(nv) AS BIGINT) AS n
-        |  FROM cc GROUP BY 1),
-        |lo AS (
-        |  SELECT c.event_type, min(c.v) AS lo_cents
-        |  FROM cum c JOIN tot t ON t.event_type = c.event_type
-        |  WHERE c.cum >= (5 * t.n + 99) // 100 GROUP BY 1),
-        |hi AS (
-        |  SELECT c.event_type, min(c.v) AS hi_cents
-        |  FROM cum c JOIN tot t ON t.event_type = c.event_type
-        |  WHERE c.cum >= (95 * t.n + 99) // 100 GROUP BY 1),
-        |cl AS (
-        |  SELECT e.event_type, e.v, lo.lo_cents, hi.hi_cents,
-        |    least(greatest(e.v, lo.lo_cents), hi.hi_cents) AS wv
-        |  FROM ev e
-        |  JOIN lo ON lo.event_type = e.event_type
-        |  JOIN hi ON hi.event_type = e.event_type)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  min(lo_cents) AS lo_cents, min(hi_cents) AS hi_cents,
-        |  CAST(sum(CASE WHEN v < lo_cents THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_lo,
-        |  CAST(sum(CASE WHEN v > hi_cents THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_hi,
-        |  CAST(sum(v) AS BIGINT) AS sum_raw_cents,
-        |  CAST(sum(wv) AS BIGINT) AS sum_wins_cents
-        |FROM cl GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q_window_distinct" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
-        |  FROM events),
-        |b AS (SELECT max(day) AS dmax FROM ud),
-        |e AS (
-        |  SELECT user_id,
-        |    unnest(range(day, least(day + 7, dmax + 1))) AS window_day
-        |  FROM ud CROSS JOIN b)
-        |SELECT CAST(window_day AS BIGINT) AS window_day,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_active_users
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_prefix_join" ->
-      """WITH u AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 250 = 0),
-        |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM u),
-        |g AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
-        |  FROM t WHERE len(toks) >= 3),
-        |gd AS (SELECT DISTINCT doc_id, g FROM g),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM gd GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-        |  FROM gd a JOIN gd b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |j AS (
-        |  SELECT id1, id2, n_inter, s1.sz AS sz1, s2.sz AS sz2
-        |  FROM pairs
-        |  JOIN sz s1 ON s1.doc_id = id1
-        |  JOIN sz s2 ON s2.doc_id = id2)
-        |SELECT id1, id2, CAST(n_inter AS BIGINT) AS n_inter,
-        |  n_inter / CAST(sz1 + sz2 - n_inter AS DOUBLE) AS jaccard
-        |FROM j
-        |WHERE 10 * n_inter >= 7 * (sz1 + sz2 - n_inter)
-        |ORDER BY id1, id2""".stripMargin,
-
-    "q_table_diff" ->
-      s"""WITH $sqlSnaps,
-         |la AS (
-         |  SELECT terminal_id % 256 AS bucket,
-         |    CAST(('0x'||substr(md5(CAST(terminal_id AS VARCHAR) || '|' ||
-         |      terminal_type || '|' || terminal_city || '|' ||
-         |      terminal_address),1,8)) AS BIGINT) AS rh
-         |  FROM snap1),
-         |lb AS (
-         |  SELECT terminal_id % 256 AS bucket,
-         |    CAST(('0x'||substr(md5(CAST(terminal_id AS VARCHAR) || '|' ||
-         |      terminal_type || '|' || terminal_city || '|' ||
-         |      terminal_address),1,8)) AS BIGINT) AS rh
-         |  FROM snap2),
-         |ga AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n,
-         |       CAST(bit_xor(rh) AS BIGINT) AS cs FROM la GROUP BY 1),
-         |gb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n,
-         |       CAST(bit_xor(rh) AS BIGINT) AS cs FROM lb GROUP BY 1)
-         |SELECT COALESCE(ga.bucket, gb.bucket) AS bucket,
-         |  COALESCE(ga.n, 0) AS n_left, COALESCE(gb.n, 0) AS n_right,
-         |  COALESCE(ga.cs, 0) AS xor_left, COALESCE(gb.cs, 0) AS xor_right
-         |FROM ga FULL OUTER JOIN gb ON ga.bucket = gb.bucket
-         |WHERE COALESCE(ga.n, 0) <> COALESCE(gb.n, 0)
-         |   OR COALESCE(ga.cs, 0) <> COALESCE(gb.cs, 0)
-         |ORDER BY bucket""".stripMargin,
-
-    "q_topk_agg" ->
-      """SELECT event_type, CAST(rnk AS BIGINT) AS rnk, v AS v_cents FROM (
-        |  SELECT event_type, v, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY v) AS rnk
-        |  FROM (SELECT event_type, CAST(round(value*100) AS BIGINT) AS v
-        |        FROM events))
-        |WHERE rnk <= 5 ORDER BY event_type, rnk""".stripMargin,
-
-    "q_skew_profile" ->
-      """WITH pk AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY 1),
-        |cc AS (SELECT cnt, count(*) AS nk FROM pk GROUP BY 1),
-        |cum AS (SELECT cnt, nk, sum(nk) OVER (ORDER BY cnt) AS cum FROM cc),
-        |tot AS (SELECT CAST(sum(nk) AS BIGINT) AS n_keys,
-        |               CAST(sum(cnt*nk) AS BIGINT) AS n_rows,
-        |               max(cnt) AS max_cnt, min(cnt) AS min_cnt FROM cc)
-        |SELECT metric, CAST(value AS BIGINT) AS value FROM (
-        |  SELECT 'max_cnt' AS metric, max_cnt AS value FROM tot
-        |  UNION ALL SELECT 'mean_cnt_ppm', (n_rows * 1000000) // n_keys FROM tot
-        |  UNION ALL SELECT 'min_cnt', min_cnt FROM tot
-        |  UNION ALL SELECT 'n_keys', n_keys FROM tot
-        |  UNION ALL SELECT 'n_rows', n_rows FROM tot
-        |  UNION ALL SELECT 'skew_ppm', (max_cnt * n_keys * 1000000) // n_rows FROM tot
-        |  UNION ALL SELECT 'p50_cnt', min(cnt) FROM cum CROSS JOIN tot
-        |    WHERE cum >= (1 * n_keys + 1) // 2
-        |  UNION ALL SELECT 'p90_cnt', min(cnt) FROM cum CROSS JOIN tot
-        |    WHERE cum >= (9 * n_keys + 9) // 10
-        |  UNION ALL SELECT 'p99_cnt', min(cnt) FROM cum CROSS JOIN tot
-        |    WHERE cum >= (99 * n_keys + 99) // 100)
-        |ORDER BY metric""".stripMargin,
-
-    "q_src_orc" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // BM25 twin — mirrors the content-contracted index: postings and
-    // truncation per distinct content, corpus stats (df/N/S) at DOC
-    // level through group sizes, doc pairs expanded via membership.
-    "q_bm25" ->
-      """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep, count(*) AS gsz
-        |  FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
-        |gs AS (SELECT rep AS doc_id, gsz FROM reps),
-        |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM rd),
-        |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS tok
-        |  FROM t WHERE len(toks) >= 2),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM g GROUP BY 1, 2),
-        |dl AS (SELECT doc_id,
-        |    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END
-        |      AS BIGINT) AS dl
-        |  FROM t),
-        |c AS (SELECT CAST(sum(gs.gsz) AS BIGINT) AS n,
-        |             CAST(sum(gs.gsz * dl.dl) AS BIGINT) AS s
-        |  FROM dl JOIN gs USING (doc_id)),
-        |dft AS (SELECT tok, CAST(sum(gs.gsz) AS BIGINT) AS df
-        |  FROM tf JOIN gs USING (doc_id) GROUP BY 1),
-        |kept0 AS (
-        |  SELECT tf.doc_id, tf.tok, tf.tf, dft.df
-        |  FROM tf JOIN dft USING (tok) CROSS JOIN c
-        |  WHERE dft.df <= CAST(c.n AS DOUBLE) * 0.4),
-        |kept AS (
-        |  SELECT doc_id, tok, tf, df FROM (
-        |    SELECT k.*, row_number() OVER (PARTITION BY tok
-        |      ORDER BY tf DESC, doc_id) AS pr
-        |    FROM kept0 k)
-        |  WHERE pr <= 1000),
-        |qdocs AS (SELECT doc_id AS q_id, rep AS qrep FROM members
-        |  WHERE doc_id % 50 = 0 AND doc_id < 20000000),
-        |qpost AS (
-        |  SELECT DISTINCT qd.qrep, k.tok
-        |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
-        |  JOIN kept k ON k.doc_id = qd.qrep),
-        |terms AS (
-        |  SELECT q.qrep, k.doc_id AS crep,
-        |    CAST(c.s AS DOUBLE) AS sd, CAST(k.tf AS DOUBLE) AS tfd,
-        |    CAST(c.n AS DOUBLE) AS nd, CAST(k.df AS DOUBLE) AS dfd,
-        |    CAST(d.dl AS DOUBLE) AS dld
-        |  FROM qpost q JOIN kept k USING (tok)
-        |  JOIN dl d ON d.doc_id = k.doc_id
-        |  CROSS JOIN c),
-        |scoredc AS (
-        |  SELECT qrep, crep,
-        |    CAST(SUM(CAST(ROUND((22.0 * sd * tfd * (2.0*nd - 2.0*dfd + 1.0) * 1000000.0) / ((10.0*sd*tfd + 3.0*sd + 9.0*dld*nd) * (2.0*dfd + 1.0))) AS BIGINT)) AS BIGINT) AS score_u
-        |  FROM terms GROUP BY 1, 2),
-        |bys AS (
-        |  SELECT sc.qrep, sc.score_u, CAST(sum(g.gsz) AS BIGINT) AS msz
-        |  FROM scoredc sc JOIN gs g ON g.doc_id = sc.crep
-        |  GROUP BY 1, 2),
-        |cut AS (
-        |  SELECT qrep, score_u FROM (
-        |    SELECT qrep, score_u,
-        |      COALESCE(SUM(msz) OVER (PARTITION BY qrep ORDER BY score_u DESC
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS higher
-        |    FROM bys)
-        |  WHERE higher < 6),
-        |ex AS (
-        |  SELECT qd.q_id, mem.doc_id, sc.score_u
-        |  FROM qdocs qd
-        |  JOIN scoredc sc ON sc.qrep = qd.qrep
-        |  JOIN cut ON cut.qrep = sc.qrep AND cut.score_u = sc.score_u
-        |  JOIN members mem ON mem.rep = sc.crep
-        |  WHERE mem.doc_id <> qd.q_id)
-        |SELECT q_id, doc_id, score_u, rnk FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-        |    ORDER BY score_u DESC, doc_id) AS BIGINT) AS rnk
-        |  FROM ex)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    "q_charset" ->
-      """WITH noisy AS (
-        |  SELECT doc_id, text ||
-        |    (CASE WHEN doc_id % 7 = 0 THEN '�' ELSE '' END) ||
-        |    (CASE WHEN doc_id % 11 = 0 THEN ' café naïve' ELSE '' END) ||
-        |    (CASE WHEN doc_id % 13 = 0 THEN chr(9) || chr(9) ELSE '' END) AS t2
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id, CAST(length(t2) AS BIGINT) AS n_chars,
-        |    CAST(length(t2) - length(regexp_replace(t2, '�', '', 'g'))
-        |      AS BIGINT) AS n_repl,
-        |    CAST(length(t2) - length(regexp_replace(t2, '[\x00-\x1f]', '', 'g'))
-        |      AS BIGINT) AS n_ctrl,
-        |    CAST(length(t2) - length(regexp_replace(t2, '[^\x00-\x7f]', '', 'g'))
-        |      AS BIGINT) AS n_non_ascii
-        |  FROM noisy)
-        |SELECT doc_id, n_chars, n_repl, n_ctrl,
-        |  (n_non_ascii * 1000000) // n_chars AS non_ascii_ppm,
-        |  CAST(n_repl = 0 AND n_ctrl = 0 AND
-        |    (n_non_ascii * 1000000) // n_chars < 20000 AS BIGINT) AS keep
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "q_contam" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> CAST(('0x'||substr(md5(toks[i] || ' ' || toks[i+1]),1,8))
-        |      AS BIGINT))) AS g
-        |  FROM t WHERE len(toks) >= 2),
-        |e AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
-        |s AS (SELECT DISTINCT d.doc_id, d.g FROM g d JOIN e USING (g)
-        |  WHERE d.doc_id % 97 <> 0)
-        |SELECT doc_id, count(*) AS n_shared_grams
-        |FROM s GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // E55 twin: identical packed-key rightmost-min winnowing selection
-    // (one MIN window over g·2^28 + (2^28−1−pos))
-    "q_winnow" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
-        |b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t WHERE len(tk) >= 3),
-        |g AS (
-        |  SELECT doc_id, pos0,
-        |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0+1 AS INTEGER):CAST(pos0+3 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
-        |  FROM (SELECT doc_id, tk, unnest(range(0, n - 2)) AS pos0 FROM b)),
-        |wm AS (
-        |  SELECT doc_id,
-        |    MIN(g * 268435456 + (268435455 - pos0)) OVER (PARTITION BY doc_id ORDER BY pos0
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-        |    COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos0
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wn
-        |  FROM g),
-        |fp AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE wn = 4),
-        |agg AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fps,
-        |    MIN(wmin // 268435456) AS min_g, MAX(wmin // 268435456) AS max_g
-        |  FROM fp GROUP BY doc_id),
-        |nw AS (SELECT doc_id, n - 5 AS n_windows FROM b WHERE n - 5 >= 1)
-        |SELECT a.doc_id, nw.n_windows, a.n_fps,
-        |  CAST(a.n_fps * 1000000 // nw.n_windows AS BIGINT) AS density_ppm,
-        |  a.min_g, a.max_g
-        |FROM agg a JOIN nw USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // E55 pairs twin: I14 content reps, df-capped fingerprint postings
-    "q_winnow_pairs" ->
-      """WITH ch AS (SELECT doc_id, text, md5(text) AS ch FROM documents),
-        |reps AS (SELECT MIN(doc_id) AS doc_id FROM ch GROUP BY ch),
-        |rd AS (SELECT c.doc_id, c.text FROM ch c JOIN reps r ON c.doc_id = r.doc_id),
-        |t AS (SELECT doc_id, string_split(text,' ') AS tk FROM rd),
-        |b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t WHERE len(tk) >= 3),
-        |g AS (
-        |  SELECT doc_id, pos0,
-        |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0+1 AS INTEGER):CAST(pos0+3 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
-        |  FROM (SELECT doc_id, tk, unnest(range(0, n - 2)) AS pos0 FROM b)),
-        |wm AS (
-        |  SELECT doc_id,
-        |    MIN(g * 268435456 + (268435455 - pos0)) OVER (PARTITION BY doc_id ORDER BY pos0
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-        |    COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos0
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wn
-        |  FROM g),
-        |fp AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE wn = 4),
-        |fpg AS (SELECT DISTINCT doc_id, wmin // 268435456 AS g FROM fp),
-        |rare AS (SELECT g FROM (SELECT g, count(*) AS df FROM fpg GROUP BY g) WHERE df <= 24),
-        |posts AS (SELECT f.doc_id, f.g FROM fpg f JOIN rare USING (g))
-        |SELECT a.doc_id AS id1, b2.doc_id AS id2, CAST(count(*) AS BIGINT) AS n_shared
-        |FROM posts a JOIN posts b2 ON a.g = b2.g AND a.doc_id < b2.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id1, id2""".stripMargin,
-
-    "q_stratified" ->
-      """SELECT doc_id, lang, CAST(rn AS BIGINT) AS rn FROM (
-        |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
-        |    ORDER BY CAST(('0x'||substr(md5('strat:'||CAST(doc_id AS VARCHAR)),1,8))
-        |      AS BIGINT), doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 20 ORDER BY lang, rn""".stripMargin,
-
-    "q_dupspan_removal" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
-        |b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t),
-        |g AS (
-        |  SELECT doc_id, pos0,
-        |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0 AS INTEGER):CAST(pos0+2 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
-        |  FROM (SELECT doc_id, tk,
-        |          unnest(range(1, CAST(len(tk) AS BIGINT) - 1)) AS pos0
-        |        FROM b WHERE n >= 3)),
-        |d AS (SELECT g FROM (SELECT g, count(*) AS c FROM g GROUP BY g) WHERE c >= 2),
-        |cov AS (
-        |  SELECT DISTINCT doc_id, pos0 + off AS p
-        |  FROM g JOIN d USING (g)
-        |  CROSS JOIN (SELECT unnest(range(0, 3)) AS off) o),
-        |tokrows AS (
-        |  SELECT doc_id, unnest(tk) AS tok,
-        |    unnest(range(1, CAST(len(tk) AS BIGINT) + 1)) AS p
-        |  FROM b),
-        |kept AS (
-        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
-        |    md5(string_agg(tok, ' ' ORDER BY p)) AS cm
-        |  FROM (SELECT tr.doc_id, tr.tok, tr.p
-        |        FROM tokrows tr ANTI JOIN cov USING (doc_id, p))
-        |  GROUP BY 1)
-        |SELECT b.doc_id, b.n AS n_tokens,
-        |  b.n - COALESCE(k.n_kept, 0) AS n_removed,
-        |  COALESCE(k.cm, md5('')) AS clean_md5
-        |FROM b LEFT JOIN kept k USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    "q_lines_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 10 = 0
-        |      THEN 'nav footer terms privacy contact about login search home menu ' || text
-        |      ELSE text END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM d),
-        |l0 AS (
-        |  SELECT doc_id, tk,
-        |    unnest(range(0, CAST(ceil(len(tk)/10.0) AS BIGINT))) AS pos
-        |  FROM t),
-        |l AS (
-        |  SELECT doc_id, pos,
-        |    array_to_string(tk[CAST(pos*10+1 AS INTEGER):CAST(pos*10+10 AS INTEGER)], ' ') AS line
-        |  FROM l0),
-        |h AS (SELECT doc_id, pos, line, md5(line) AS line_hash FROM l),
-        |f AS (SELECT line_hash, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS line_df
-        |  FROM h GROUP BY 1),
-        |k AS (
-        |  SELECT h.doc_id, h.pos, h.line,
-        |    CASE WHEN f.line_df < 3 THEN 1 ELSE 0 END AS keep
-        |  FROM h JOIN f USING (line_hash))
-        |SELECT doc_id,
-        |  CAST(COUNT(*) AS BIGINT) AS n_lines,
-        |  CAST(COUNT(*) - SUM(keep) AS BIGINT) AS n_removed,
-        |  md5(coalesce(string_agg(CASE WHEN keep = 1 THEN line END, ' ' ORDER BY pos), '')) AS clean_md5
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_dupspan" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        |b AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n, toks
-        |  FROM t WHERE len(toks) >= 3),
-        |g AS (SELECT doc_id, n, toks,
-        |    unnest(range(0, len(toks) - 2)) AS pos0 FROM b),
-        |g2 AS (SELECT doc_id, n, pos0,
-        |    CAST(('0x'||substr(md5(
-        |      array_to_string(toks[pos0+1:pos0+3], ' ')),1,8)) AS BIGINT) AS g
-        |  FROM g),
-        |dup AS (SELECT g FROM g2 GROUP BY g HAVING count(*) >= 2),
-        |d AS (SELECT doc_id, n, pos0,
-        |    lead(pos0) OVER (PARTITION BY doc_id ORDER BY pos0) AS nxt
-        |  FROM g2 JOIN dup USING (g)),
-        |cov AS (SELECT doc_id, n, count(*) AS dup_grams,
-        |    CAST(sum(CASE WHEN nxt IS NULL THEN 3
-        |      ELSE least(3, nxt - pos0) END) AS BIGINT) AS cov_toks
-        |  FROM d GROUP BY doc_id, n)
-        |SELECT b.doc_id, b.n AS n_tokens, b.n - 2 AS n_grams,
-        |  COALESCE(dup_grams, 0) AS n_dup_grams,
-        |  COALESCE(cov_toks, 0) AS covered_tokens,
-        |  COALESCE(cov_toks, 0) * 1000000 // b.n AS coverage_ppm
-        |FROM b LEFT JOIN cov USING (doc_id, n)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    "q_pack" ->
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tok,
-        |    ('0x'||substr(md5('pack:'||CAST(doc_id AS VARCHAR)),1,8))::BIGINT % 32
-        |      AS shard
-        |  FROM documents),
-        |c AS (SELECT doc_id, shard, n_tok,
-        |    CAST(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |  FROM t)
-        |SELECT doc_id, shard, n_tok,
-        |  (cum - n_tok) % 512 AS seq_offset,
-        |  (cum - n_tok) // 512 AS seq_id,
-        |  (cum - 1) // 512 - (cum - n_tok) // 512 + 1 AS n_seqs
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_dsir" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(source = 'src0' AS BIGINT) AS is_target,
-        |    string_split(text,' ') AS toks
-        |  FROM documents WHERE len(string_split(text,' ')) >= 2),
-        |pd AS (
-        |  SELECT doc_id, is_target,
-        |    unnest(list_transform(range(1, len(toks)),
-        |      i -> CAST(('0x'||substr(md5(toks[i] || ' ' || toks[i+1]),1,8))
-        |        AS BIGINT) % 8192)) AS b
-        |  FROM t),
-        |g1 AS (SELECT doc_id, is_target, b, count(*) AS c
-        |  FROM pd GROUP BY 1, 2, 3),
-        |model AS (SELECT b,
-        |    CAST(sum(c * is_target) AS BIGINT) AS ct,
-        |    CAST(sum(c * (1 - is_target)) AS BIGINT) AS cr
-        |  FROM g1 GROUP BY b),
-        |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS tt,
-        |    CAST(sum(cr) AS BIGINT) AS tr FROM model),
-        |w AS (SELECT b,
-        |    (ct + 1) * 1000000 // (tt + 8192)
-        |      - (cr + 1) * 1000000 // (tr + 8192) AS w_ppm
-        |  FROM model CROSS JOIN tot)
-        |SELECT g1.doc_id, g1.is_target,
-        |  CAST(sum(c) AS BIGINT) AS n_grams,
-        |  CAST(sum(c * w_ppm) AS BIGINT) AS score_sum,
-        |  CAST(sum(c * w_ppm) AS BIGINT) // CAST(sum(c) AS BIGINT) AS score_avg,
-        |  CAST(g1.is_target = 0 AND
-        |    CAST(sum(c * w_ppm) AS BIGINT) // CAST(sum(c) AS BIGINT) > 0
-        |    AS BIGINT) AS selected
-        |FROM g1 JOIN w USING (b)
-        |GROUP BY g1.doc_id, g1.is_target
-        |ORDER BY g1.doc_id""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT COALESCE(c_mktsegment, '(all)') AS seg,
-        |  COALESCE(CAST(c_nationkey AS BIGINT), -1) AS nk,
-        |  CAST(GROUPING(c_mktsegment) AS BIGINT) AS g_seg,
-        |  CAST(GROUPING(c_nationkey) AS BIGINT) AS g_nk,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(round(c_acctbal*100) AS BIGINT)) AS BIGINT) AS bal_cents
-        |FROM customer
-        |GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
-        |ORDER BY g_seg, g_nk, seg, nk""".stripMargin,
-
-    "q_window_rank" ->
-      """WITH t AS (
-        |  SELECT c_custkey, c_mktsegment,
-        |    CAST(round(c_acctbal*100) AS BIGINT) AS bal_cents
-        |  FROM customer)
-        |SELECT c_custkey, c_mktsegment, bal_cents,
-        |  percent_rank() OVER w AS pr, cume_dist() OVER w AS cd,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |  CAST(dense_rank() OVER w AS BIGINT) AS dr
-        |FROM t
-        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY bal_cents, c_custkey)
-        |ORDER BY c_mktsegment, c_custkey""".stripMargin,
-
-    // Fuzzy twin — mirrors the name-level contraction: Levenshtein per
-    // distinct name pair, distance-level cut, membership expansion.
-    // The expansion is CONTRACTED to each matched name's 6 smallest
-    // member ids (mem6) BEFORE the per-query fan-out: only those can
-    // ever reach the global top-5 after self-exclusion (within a name
-    // candidates order by match_id; 5 winners + possibly self = 6).
-    // The old full expansion was queries × group-size rows — ~315M at
-    // the 100× tier, an >70 GB window-sort spill (the r10 resource
-    // wall); mem6 is provably output-identical (hash-verified at
-    // sf0.01 and 100×) and runs in ~1 s there.
-    "q_fuzzy" -> sqlFuzzy("levenshtein"),
-
-    // E65: DuckDB's damerau_levenshtein IS the unrestricted DL the
-    // native kernel computes (verified: dl('ca','abc') = 2, not OSA 3)
-    "q_fuzzy_dl" -> sqlFuzzy("damerau_levenshtein"),
-
-    "q_zorder" ->
-      """WITH e AS (
-        |  SELECT user_id % 1024 AS d1,
-        |    (epoch_us(ts) // 3600000000) % 1024 AS d2 FROM events),
-        |z AS (
-        |  SELECT d1, d2, list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(range(0, 10),
-        |      i -> (((d1 >> i) & 1) << (2*i)) | (((d2 >> i) & 1) << (2*i+1)))),
-        |    (a,b) -> a | b) AS z FROM e)
-        |SELECT z // 1024 AS z_bucket, count(*) AS n,
-        |  CAST(min(d1) AS BIGINT) AS d1_min, CAST(max(d1) AS BIGINT) AS d1_max,
-        |  CAST(min(d2) AS BIGINT) AS d2_min, CAST(max(d2) AS BIGINT) AS d2_max
-        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_twa" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |    CAST(round(value*100) AS BIGINT) AS v_cents
-        |  FROM events),
-        |l AS (
-        |  SELECT user_id, ts_us, v_cents,
-        |    lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) AS next_ts
-        |  FROM e),
-        |a AS (
-        |  SELECT user_id,
-        |    CAST(COALESCE(sum((next_ts - ts_us) * v_cents), 0) AS BIGINT) AS wsum,
-        |    CAST(max(ts_us) - min(ts_us) AS BIGINT) AS span_us
-        |  FROM l GROUP BY 1)
-        |SELECT user_id, wsum, span_us,
-        |  CASE WHEN span_us > 0
-        |    THEN CAST(wsum AS DOUBLE) / CAST(span_us AS DOUBLE)
-        |    ELSE -1.0 END AS twa_cents
-        |FROM a ORDER BY user_id""".stripMargin,
-
-    "q_funnel" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_type FROM events),
-        |t1 AS (
-        |  SELECT user_id, min(ts_us) AS t1 FROM e
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |t2 AS (
-        |  SELECT e.user_id, min(e.ts_us) AS t2 FROM e
-        |  JOIN t1 ON e.user_id = t1.user_id AND e.ts_us > t1.t1
-        |  WHERE e.event_type = 'click' GROUP BY 1),
-        |t3 AS (
-        |  SELECT e.user_id, min(e.ts_us) AS t3 FROM e
-        |  JOIN t2 ON e.user_id = t2.user_id AND e.ts_us > t2.t2
-        |  WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT t1.user_id, t1.t1 AS t1_us,
-        |  COALESCE(t2.t2, -1) AS t2_us,
-        |  COALESCE(t3.t3, -1) AS t3_us,
-        |  CAST(1 + CASE WHEN t2.t2 IS NULL THEN 0 ELSE 1 END
-        |         + CASE WHEN t3.t3 IS NULL THEN 0 ELSE 1 END AS BIGINT) AS stage
-        |FROM t1
-        |LEFT JOIN t2 ON t1.user_id = t2.user_id
-        |LEFT JOIN t3 ON t1.user_id = t3.user_id
-        |ORDER BY t1.user_id""".stripMargin,
-
-    "q_attribution" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type
-        |  FROM events),
-        |c AS (
-        |  SELECT user_id, ts_us AS conv_ts, event_id AS conv_id
-        |  FROM e WHERE event_type = 'purchase'),
-        |t AS (
-        |  SELECT user_id, ts_us AS touch_ts, event_id AS touch_id,
-        |    event_type AS channel
-        |  FROM e WHERE event_type IN ('view', 'click')),
-        |p AS (
-        |  SELECT t.channel, t.touch_id, t.touch_ts, c.conv_id
-        |  FROM t JOIN c ON t.user_id = c.user_id
-        |   AND t.touch_ts < c.conv_ts
-        |   AND t.touch_ts >= c.conv_ts - 604800000000),
-        |s AS (
-        |  SELECT channel, conv_id,
-        |    count(*) OVER (PARTITION BY conv_id) AS n_touch,
-        |    row_number() OVER (PARTITION BY conv_id
-        |      ORDER BY touch_ts DESC, touch_id DESC) AS lt_rank
-        |  FROM p)
-        |SELECT channel,
-        |  count(*) AS n_touchpoints,
-        |  count(DISTINCT conv_id) AS n_conversions,
-        |  CAST(sum(1000000 // n_touch) AS BIGINT) AS linear_credit_ppm,
-        |  CAST(sum(CASE WHEN lt_rank = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS last_touch_convs
-        |FROM s GROUP BY 1 ORDER BY channel""".stripMargin,
-
-    "q_markov" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type
-        |  FROM events),
-        |p AS (
-        |  SELECT event_type AS from_state,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, event_id) AS to_state
-        |  FROM e),
-        |t AS (
-        |  SELECT from_state, to_state, CAST(count(*) AS BIGINT) AS n_trans
-        |  FROM p WHERE to_state IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_state, to_state, n_trans,
-        |  CAST(1000000 * n_trans
-        |    // sum(n_trans) OVER (PARTITION BY from_state) AS BIGINT) AS p_ppm
-        |FROM t ORDER BY from_state, to_state""".stripMargin,
-
-    // path twin: the same two leads + type³ aggregation + lexicographic
-    // tie-broken top-k
-    "q_event_paths" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type AS e1,
-        |    lead(event_type, 1) OVER w AS e2,
-        |    lead(event_type, 2) OVER w AS e3
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
-        |g AS (
-        |  SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS n_walks,
-        |    CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |  FROM seq WHERE e3 IS NOT NULL GROUP BY 1, 2, 3),
-        |r AS (SELECT *, row_number() OVER (
-        |    ORDER BY n_walks DESC, e1, e2, e3) AS rank FROM g)
-        |SELECT e1, e2, e3, n_walks, n_users, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 25 ORDER BY rank""".stripMargin,
-
-    "q_benford" ->
-      """WITH c AS (
-        |  SELECT o_orderpriority AS grp,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |o AS (
-        |  SELECT grp,
-        |    CAST(substring(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM c WHERE cents > 0 GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT g.grp, d.digit FROM (SELECT DISTINCT grp FROM o) g
-        |  CROSS JOIN (SELECT CAST(unnest(range(1, 10)) AS BIGINT) AS digit) d),
-        |f AS (
-        |  SELECT grid.grp, grid.digit, COALESCE(o.n, 0) AS n
-        |  FROM grid LEFT JOIN o ON grid.grp = o.grp AND grid.digit = o.digit),
-        |e AS (
-        |  SELECT grp, digit, n,
-        |    CAST(1000000 * n // sum(n) OVER (PARTITION BY grp) AS BIGINT)
-        |      AS obs_ppm,
-        |    CAST(CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
-        |      WHEN 3 THEN 124939 WHEN 4 THEN 96910 WHEN 5 THEN 79181
-        |      WHEN 6 THEN 66947 WHEN 7 THEN 57992 WHEN 8 THEN 51153
-        |      ELSE 45757 END AS BIGINT) AS exp_ppm
-        |  FROM f)
-        |SELECT grp, digit, n, obs_ppm, exp_ppm,
-        |  obs_ppm - exp_ppm AS dev_ppm,
-        |  CAST(sum((obs_ppm - exp_ppm) * (obs_ppm - exp_ppm) // exp_ppm)
-        |    OVER (PARTITION BY grp) AS BIGINT) AS chi2_scaled
-        |FROM e ORDER BY grp, digit""".stripMargin,
-
-    "q_cusum" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |m AS (
-        |  SELECT event_type, day, n,
-        |    CAST(sum(n) OVER (PARTITION BY event_type)
-        |      // count(n) OVER (PARTITION BY event_type) AS BIGINT) AS mu
-        |  FROM daily),
-        |p AS (
-        |  SELECT event_type, day, n, mu, n - mu AS dev,
-        |    sum(n - mu - mu // 10) OVER w AS p_hi,
-        |    sum(-(n - mu) - mu // 10) OVER w AS p_lo
-        |  FROM m WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |q AS (
-        |  SELECT event_type, day, n, mu, dev,
-        |    CAST(p_hi - least(min(p_hi) OVER w, 0) AS BIGINT) AS cusum_hi,
-        |    CAST(p_lo - least(min(p_lo) OVER w, 0) AS BIGINT) AS cusum_lo
-        |  FROM p WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_type, day, n, mu, dev, cusum_hi, cusum_lo,
-        |  CAST(CASE WHEN cusum_hi > mu OR cusum_lo > mu
-        |    THEN 1 ELSE 0 END AS BIGINT) AS alarm
-        |FROM q ORDER BY event_type, day""".stripMargin,
-
-    "q_trend" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |x AS (
-        |  SELECT event_type,
-        |    day - min(day) OVER (PARTITION BY event_type) AS x, n
-        |  FROM daily),
-        |a AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(n) AS BIGINT) AS sy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx,
-        |    CAST(sum(x * n) AS BIGINT) AS sxy
-        |  FROM x GROUP BY 1),
-        |b AS (
-        |  SELECT event_type, k, sy,
-        |    CAST(k * sxy - sx * sy AS BIGINT) AS num,
-        |    CAST(k * sxx - sx * sx AS BIGINT) AS den
-        |  FROM a)
-        |SELECT event_type, k AS n_days, sy AS total, num, den,
-        |  CAST(CASE WHEN den = 0 THEN 0
-        |    WHEN num >= 0 THEN 1000000 * num // den
-        |    ELSE -(1000000 * (-num) // den) END AS BIGINT) AS slope_ppm
-        |FROM b ORDER BY event_type""".stripMargin,
-
-    "q_canon" ->
-      s"""WITH RECURSIVE $sqlLshCtes,
-         |edges AS MATERIALIZED (
-         |  SELECT id1 AS a, id2 AS b FROM cand
-         |  UNION SELECT id2, id1 FROM cand),
-         |walk(node, lbl) AS (
-         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
-         |  UNION
-         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
-         |  FROM walk w JOIN edges e ON w.node = e.a
-         |  GROUP BY e.b),
-         |assign AS MATERIALIZED (
-         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
-         |  FROM walk GROUP BY node),
-         |cl AS (
-         |  SELECT doc_id, cluster_id,
-         |    CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-         |      AS cluster_size
-         |  FROM assign),
-         |j AS (
-         |  SELECT cl.doc_id, cl.cluster_id, cl.cluster_size,
-         |    CAST(length(b.text) AS BIGINT) AS n_chars
-         |  FROM cl JOIN base b ON cl.doc_id = b.doc_id)
-         |SELECT doc_id, cluster_id, cluster_size, n_chars,
-         |  first_value(doc_id) OVER (PARTITION BY cluster_id
-         |    ORDER BY n_chars DESC, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         |    AS canonical_id,
-         |  CAST(doc_id = first_value(doc_id) OVER (PARTITION BY cluster_id
-         |    ORDER BY n_chars DESC, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         |    AS BIGINT) AS keep
-         |FROM j ORDER BY doc_id""".stripMargin,
-
-    "q_abtest" ->
-      """WITH per AS (
-        |  SELECT user_id, user_id % 2 AS variant,
-        |    CAST(max(CASE WHEN event_type = 'purchase'
-        |      AND CAST(round(value * 100) AS BIGINT) >= 15000
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS conv
-        |  FROM events GROUP BY user_id),
-        |cells AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN variant = 0 AND conv = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS a,
-        |    CAST(sum(CASE WHEN variant = 0 AND conv = 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS b,
-        |    CAST(sum(CASE WHEN variant = 1 AND conv = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c,
-        |    CAST(sum(CASE WHEN variant = 1 AND conv = 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS d
-        |  FROM per)
-        |SELECT a, b, c, d, a + b + c + d AS n,
-        |  CAST(1000000 * a // (a + b) AS BIGINT) AS rate0_ppm,
-        |  CAST(1000000 * c // (c + d) AS BIGINT) AS rate1_ppm,
-        |  CAST(a + b + c + d AS DOUBLE) * (a*d - b*c) * (a*d - b*c)
-        |    / (CAST(a + b AS DOUBLE) * (c + d) * (a + c) * (b + d)) AS chi2
-        |FROM cells""".stripMargin,
-
-    // D73: the probe construction is replayed verbatim (not a RANGE
-    // window — RANGE frames include ALL peers at the current ts, the
-    // probe prefix does not, so only the shared construction is
-    // tie-robust on replica corpora with duplicated timestamps)
-    "q_structuring" ->
-      """WITH sub AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |    CAST(round(value*100) AS BIGINT) AS amt_cents
-        |  FROM events
-        |  WHERE event_type = 'purchase'
-        |    AND CAST(round(value*100) AS BIGINT) > 0
-        |    AND CAST(round(value*100) AS BIGINT) < 10000),
-        |timeline AS (
-        |  SELECT user_id, ts_us, 1 AS kind, event_id, amt_cents FROM sub
-        |  UNION ALL
-        |  SELECT user_id, ts_us - 259200000000, 0, event_id, 0 FROM sub),
-        |prefixed AS (
-        |  SELECT user_id, ts_us, kind, event_id,
-        |    sum(CASE WHEN kind = 1 THEN amt_cents ELSE 0 END) OVER w AS ps,
-        |    sum(CASE WHEN kind = 1 THEN 1 ELSE 0 END) OVER w AS pc
-        |  FROM timeline
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, kind, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |flags AS (
-        |  SELECT r.user_id, r.ts_us,
-        |    r.ps - p.ps AS win_sum, r.pc - p.pc AS win_cnt
-        |  FROM (SELECT * FROM prefixed WHERE kind = 1) r
-        |  JOIN (SELECT event_id, ps, pc FROM prefixed WHERE kind = 0) p
-        |    USING (event_id)
-        |  WHERE r.pc - p.pc >= 4 AND r.ps - p.ps >= 15000)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_flagged,
-        |  CAST(max(win_sum) AS BIGINT) AS peak_sum_cents,
-        |  CAST(max(win_cnt) AS BIGINT) AS peak_n_txn,
-        |  min(ts_us) AS first_flag_ts_us
-        |FROM flags GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // D77: the D73 probe construction with three horizons on one
-    // frame; probes pivot back via conditional max per event
-    "q_velocity" ->
-      """WITH sub AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |    CAST(round(value*100) AS BIGINT) AS amt_cents
-        |  FROM events WHERE event_type = 'purchase'),
-        |timeline AS (
-        |  SELECT user_id, ts_us, 3 AS kind, event_id, amt_cents FROM sub
-        |  UNION ALL
-        |  SELECT user_id, ts_us - 3600000000, 0, event_id, 0 FROM sub
-        |  UNION ALL
-        |  SELECT user_id, ts_us - 86400000000, 1, event_id, 0 FROM sub
-        |  UNION ALL
-        |  SELECT user_id, ts_us - 604800000000, 2, event_id, 0 FROM sub),
-        |prefixed AS (
-        |  SELECT user_id, ts_us, kind, event_id, amt_cents,
-        |    sum(CASE WHEN kind = 3 THEN amt_cents ELSE 0 END) OVER w AS ps,
-        |    sum(CASE WHEN kind = 3 THEN 1 ELSE 0 END) OVER w AS pc
-        |  FROM timeline
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, kind, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |probes AS (
-        |  SELECT event_id,
-        |    max(CASE WHEN kind = 0 THEN ps END) AS lo_s_1h,
-        |    max(CASE WHEN kind = 0 THEN pc END) AS lo_c_1h,
-        |    max(CASE WHEN kind = 1 THEN ps END) AS lo_s_24h,
-        |    max(CASE WHEN kind = 1 THEN pc END) AS lo_c_24h,
-        |    max(CASE WHEN kind = 2 THEN ps END) AS lo_s_7d,
-        |    max(CASE WHEN kind = 2 THEN pc END) AS lo_c_7d
-        |  FROM prefixed WHERE kind < 3 GROUP BY event_id)
-        |SELECT r.user_id, r.ts_us, r.event_id, r.amt_cents,
-        |  CAST(r.pc - p.lo_c_1h AS BIGINT) AS cnt_1h,
-        |  CAST(r.ps - p.lo_s_1h AS BIGINT) AS sum_1h,
-        |  CAST(r.pc - p.lo_c_24h AS BIGINT) AS cnt_24h,
-        |  CAST(r.ps - p.lo_s_24h AS BIGINT) AS sum_24h,
-        |  CAST(r.pc - p.lo_c_7d AS BIGINT) AS cnt_7d,
-        |  CAST(r.ps - p.lo_s_7d AS BIGINT) AS sum_7d
-        |FROM (SELECT * FROM prefixed WHERE kind = 3) r
-        |JOIN probes p USING (event_id)
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    // D74: ×n-centered integer ACF; zero days completed; HUGEINT
-    // products; sign-split final ppm (truncate == floor on |num|)
-    "q_acf" ->
-      """WITH daily0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |  FROM daily0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
-        |  FROM span),
-        |daily AS (
-        |  SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
-        |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
-        |cent AS (
-        |  SELECT event_type, day,
-        |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-        |    CAST(count(*) OVER (PARTITION BY event_type) AS HUGEINT) * x
-        |      - sum(x) OVER (PARTITION BY event_type) AS c
-        |  FROM daily),
-        |den AS (SELECT event_type, sum(c * c) AS den, max(n) AS n_days
-        |  FROM cent GROUP BY 1),
-        |num AS (
-        |  SELECT a.event_type, l.lag, sum(a.c * b.c) AS num
-        |  FROM cent a
-        |  CROSS JOIN (SELECT unnest(range(1, 8)) AS lag) l
-        |  JOIN cent b ON b.event_type = a.event_type
-        |    AND b.day = a.day + l.lag
-        |  GROUP BY 1, 2)
-        |SELECT n.event_type, CAST(n.lag AS BIGINT) AS lag,
-        |  CAST(d.n_days AS BIGINT) AS n_days,
-        |  CAST(CASE WHEN d.den = 0 THEN 0
-        |    WHEN n.num >= 0 THEN 1000000 * n.num // d.den
-        |    ELSE -(1000000 * (-n.num) // d.den) END AS BIGINT) AS acf_ppm
-        |FROM num n JOIN den d USING (event_type)
-        |ORDER BY event_type, lag""".stripMargin,
-
-    // D78: slopes quantized sign-split to e-6/day BEFORE the median;
-    // lower median read off the count-of-counts contraction
-    "q_theilsen" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT a.event_type,
-        |    CASE WHEN b.n >= a.n
-        |      THEN 1000000 * (b.n - a.n) // (b.day - a.day)
-        |      ELSE -(1000000 * (a.n - b.n) // (b.day - a.day))
-        |    END AS slope_e6
-        |  FROM daily a JOIN daily b
-        |    ON b.event_type = a.event_type AND b.day > a.day),
-        |cc AS (SELECT event_type, slope_e6, CAST(count(*) AS BIGINT) AS c
-        |  FROM pairs GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT event_type, slope_e6, c,
-        |    CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT)
-        |      AS n_pairs,
-        |    CAST(sum(c) OVER (PARTITION BY event_type ORDER BY slope_e6
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum
-        |  FROM cc),
-        |nd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
-        |  FROM daily GROUP BY 1)
-        |SELECT cum.event_type, nd.n_days, cum.n_pairs,
-        |  cum.slope_e6 AS sen_slope_e6
-        |FROM cum JOIN nd USING (event_type)
-        |WHERE cum >= (n_pairs + 1) // 2
-        |  AND cum - c < (n_pairs + 1) // 2
-        |ORDER BY event_type""".stripMargin,
-
-    // D81: Pettitt via the U_t = U_{t-1} + V_t recursion; V off the
-    // value histogram; U_n excluded; earliest argmax pinned
-    "q_pettitt" ->
-      """WITH daily0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |  FROM daily0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
-        |  FROM span),
-        |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
-        |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
-        |hist AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS c
-        |  FROM daily GROUP BY 1, 2),
-        |hcum AS (
-        |  SELECT event_type, x, c,
-        |    CAST(coalesce(sum(c) OVER (PARTITION BY event_type ORDER BY x
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS below,
-        |    CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |  FROM hist),
-        |v AS (
-        |  SELECT d.event_type, d.day,
-        |    h.below - (h.n - h.below - h.c) AS v, h.n
-        |  FROM daily d JOIN hcum h USING (event_type, x)),
-        |u AS (
-        |  SELECT event_type, day, n,
-        |    CAST(sum(v) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS u,
-        |    max(day) OVER (PARTITION BY event_type) AS d1
-        |  FROM v),
-        |uf AS (SELECT * FROM u WHERE day < d1),
-        |k AS (SELECT event_type, CAST(max(abs(u)) AS BIGINT) AS k_stat,
-        |    CAST(max(n) AS BIGINT) AS n_days FROM uf GROUP BY 1),
-        |cp AS (SELECT uf.event_type, k.k_stat, k.n_days,
-        |    CAST(min(uf.day) AS BIGINT) AS cp_day
-        |  FROM uf JOIN k USING (event_type) WHERE abs(uf.u) = k.k_stat
-        |  GROUP BY 1, 2, 3)
-        |SELECT cp.event_type, cp.n_days, cp.cp_day, cp.k_stat,
-        |  uf.u AS u_at_cp
-        |FROM cp JOIN uf ON uf.event_type = cp.event_type
-        |  AND uf.day = cp.cp_day
-        |ORDER BY cp.event_type""".stripMargin,
-
-    // D82: exact rational Fano — cross-multiplied var/mean, HUGEINT
-    "q_dispersion" ->
-      """WITH daily0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |  FROM daily0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
-        |  FROM span),
-        |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
-        |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
-        |ag AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx,
-        |    sum(CAST(x AS HUGEINT) * x) AS sxx
-        |  FROM daily GROUP BY 1),
-        |vn AS (SELECT *, CAST(n AS HUGEINT) * sxx
-        |    - CAST(sx AS HUGEINT) * sx AS varnum FROM ag)
-        |SELECT event_type, n AS n_days,
-        |  CAST(1000000 * sx // n AS BIGINT) AS mean_e6,
-        |  CAST(CASE WHEN n <= 1 THEN 0
-        |    ELSE 1000000 * varnum // (CAST(n AS HUGEINT) * (n - 1))
-        |    END AS BIGINT) AS var_e6,
-        |  CAST(CASE WHEN n <= 1 OR sx = 0 THEN 0
-        |    ELSE 1000000 * varnum // (CAST(n - 1 AS HUGEINT) * sx)
-        |    END AS BIGINT) AS fano_ppm
-        |FROM vn ORDER BY event_type""".stripMargin,
-
-    // D83: runs over above/below-median signs; exact-median days out;
-    // z = A*sqrt(B)/sqrt(C) on exact integers in pinned literal order
-    "q_runs" ->
-      """WITH daily0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |  FROM daily0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
-        |  FROM span),
-        |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
-        |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
-        |hist AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS c
-        |  FROM daily GROUP BY 1, 2),
-        |hcum AS (
-        |  SELECT event_type, x, c,
-        |    CAST(sum(c) OVER (PARTITION BY event_type ORDER BY x
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS n_tot
-        |  FROM hist),
-        |med AS (SELECT event_type, CAST(min(x) AS BIGINT) AS med
-        |  FROM hcum WHERE cum >= (n_tot + 1) // 2 GROUP BY 1),
-        |sg AS (
-        |  SELECT d.event_type, d.day,
-        |    CASE WHEN d.x > m.med THEN 1 ELSE -1 END AS sgn
-        |  FROM daily d JOIN med m USING (event_type)
-        |  WHERE d.x != m.med),
-        |br AS (
-        |  SELECT event_type, sgn,
-        |    CASE WHEN lag(sgn) OVER (PARTITION BY event_type
-        |        ORDER BY day) IS DISTINCT FROM sgn THEN 1 ELSE 0
-        |      END AS brk
-        |  FROM sg),
-        |ag AS (
-        |  SELECT event_type, CAST(sum(brk) AS BIGINT) AS runs,
-        |    CAST(sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n1,
-        |    CAST(sum(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n2
-        |  FROM br GROUP BY 1),
-        |zz AS (SELECT *,
-        |    (n1 + n2) * (runs - 1) - 2 * n1 * n2 AS za,
-        |    2 * n1 * n2 * (2 * n1 * n2 - n1 - n2) AS zc
-        |  FROM ag)
-        |SELECT event_type, runs, n1, n2,
-        |  CASE WHEN n1 = 0 OR n2 = 0 OR zc <= 0 THEN 0.0
-        |    ELSE CAST(za AS DOUBLE) * sqrt(CAST(n1 + n2 - 1 AS DOUBLE))
-        |      / sqrt(CAST(zc AS DOUBLE)) END AS z
-        |FROM zz ORDER BY event_type""".stripMargin,
-
-    // D80: ABC classes on exact centi-cent cumulative shares
-    "q_pareto" ->
-      """WITH pp AS (
-        |  SELECT l_partkey,
-        |    CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-        |      * (100 - CAST(round(l_discount*100) AS BIGINT)))
-        |      AS BIGINT) AS rev_cp
-        |  FROM lineitem GROUP BY 1),
-        |r AS (
-        |  SELECT rev_cp,
-        |    CAST(sum(rev_cp) OVER (ORDER BY rev_cp DESC, l_partkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(sum(rev_cp) OVER () AS BIGINT) AS tot
-        |  FROM pp),
-        |c AS (
-        |  SELECT CASE
-        |      WHEN CAST(cum AS HUGEINT) * 100 <= CAST(tot AS HUGEINT) * 70
-        |        THEN 'A'
-        |      WHEN CAST(cum AS HUGEINT) * 100 <= CAST(tot AS HUGEINT) * 90
-        |        THEN 'B'
-        |      ELSE 'C' END AS cls, rev_cp, tot
-        |  FROM r)
-        |SELECT cls, CAST(count(*) AS BIGINT) AS n_parts,
-        |  CAST(sum(rev_cp) AS BIGINT) AS revenue_cp,
-        |  CAST(1000000 * sum(rev_cp) // max(tot) AS BIGINT) AS share_ppm
-        |FROM c GROUP BY cls ORDER BY cls""".stripMargin,
-
-    // D76: sample-normalized Gini ((n-1)·Σx denominator) + Lorenz
-    // bottom-half / top-decile shares; tie order pinned by (x, u)
-    "q_gini" ->
-      """WITH per AS (
-        |  SELECT c.c_mktsegment AS grp, o.o_custkey AS u,
-        |    sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS x
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  GROUP BY 1, 2),
-        |rk AS (
-        |  SELECT grp, u, x,
-        |    CAST(row_number() OVER (PARTITION BY grp ORDER BY x, u)
-        |      AS BIGINT) AS i,
-        |    CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS n,
-        |    CAST(sum(x) OVER (PARTITION BY grp) AS BIGINT) AS tot
-        |  FROM per),
-        |ag AS (
-        |  SELECT grp, max(n) AS n_users, max(tot) AS total_cents,
-        |    sum(CAST(2 * i - n - 1 AS HUGEINT) * x) AS gnum,
-        |    CAST(sum(CASE WHEN i <= n // 2 THEN x ELSE 0 END) AS BIGINT)
-        |      AS bottom_half_cents,
-        |    CAST(sum(CASE WHEN i > (9 * n) // 10 THEN x ELSE 0 END)
-        |      AS BIGINT) AS top_decile_cents
-        |  FROM rk GROUP BY grp)
-        |SELECT grp, n_users, total_cents,
-        |  CAST(CASE WHEN n_users <= 1 OR total_cents = 0 THEN 0
-        |    ELSE 1000000 * gnum
-        |      // (CAST(n_users - 1 AS HUGEINT) * total_cents)
-        |    END AS BIGINT) AS gini_ppm,
-        |  CAST(CASE WHEN total_cents = 0 THEN 0
-        |    ELSE 1000000 * CAST(bottom_half_cents AS HUGEINT) // total_cents
-        |    END AS BIGINT) AS bottom50_share_ppm,
-        |  CAST(CASE WHEN total_cents = 0 THEN 0
-        |    ELSE 1000000 * CAST(top_decile_cents AS HUGEINT) // total_cents
-        |    END AS BIGINT) AS top10_share_ppm
-        |FROM ag ORDER BY grp""".stripMargin,
-
-    "q_dedup_impact" ->
-      s"""WITH RECURSIVE $sqlLshCtes,
-         |edges AS MATERIALIZED (
-         |  SELECT id1 AS a, id2 AS b FROM cand
-         |  UNION SELECT id2, id1 FROM cand),
-         |walk(node, lbl) AS (
-         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
-         |  UNION
-         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
-         |  FROM walk w JOIN edges e ON w.node = e.a
-         |  GROUP BY e.b),
-         |assign AS MATERIALIZED (
-         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
-         |  FROM walk GROUP BY node),
-         |j AS (
-         |  SELECT a2.doc_id, a2.cluster_id,
-         |    CAST(length(b.text) AS BIGINT) AS n_chars
-         |  FROM assign a2 JOIN base b ON a2.doc_id = b.doc_id),
-         |canon AS (
-         |  SELECT doc_id,
-         |    CAST(doc_id = first_value(doc_id) OVER (PARTITION BY cluster_id
-         |      ORDER BY n_chars DESC, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         |      AS BIGINT) AS keep
-         |  FROM j),
-         |km AS (SELECT doc_id, keep FROM canon
-         |       WHERE doc_id % 1000000000 < 10000000),
-         |docs2 AS (
-         |  SELECT doc_id, source,
-         |    CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
-         |      AS BIGINT) AS n_tok
-         |  FROM documents),
-         |j2 AS (
-         |  SELECT d.source, COALESCE(km.keep, 1) AS keep, d.n_tok
-         |  FROM docs2 d LEFT JOIN km ON d.doc_id = km.doc_id)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(1 - keep) AS BIGINT) AS n_dropped,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  CAST(sum((1 - keep) * n_tok) AS BIGINT) AS tokens_dropped,
-         |  CAST(1000000 * sum(1 - keep) // count(*) AS BIGINT)
-         |    AS doc_drop_ppm,
-         |  CAST(1000000 * sum((1 - keep) * n_tok) // sum(n_tok) AS BIGINT)
-         |    AS token_drop_ppm
-         |FROM j2 GROUP BY source ORDER BY source""".stripMargin,
-
-    "q_islands" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events
-        |  WHERE (epoch_us(ts) // 86400000000) % 7 <> 3
-        |  GROUP BY 1, 2),
-        |g AS (
-        |  SELECT event_type, day, n,
-        |    day - row_number() OVER (PARTITION BY event_type ORDER BY day)
-        |      AS grp
-        |  FROM daily),
-        |i AS (
-        |  SELECT event_type, CAST(min(day) AS BIGINT) AS island_start,
-        |    CAST(max(day) AS BIGINT) AS island_end,
-        |    CAST(count(*) AS BIGINT) AS n_days,
-        |    CAST(sum(n) AS BIGINT) AS n_events
-        |  FROM g GROUP BY event_type, grp)
-        |SELECT event_type, island_start, island_end, n_days, n_events,
-        |  CAST(COALESCE(lead(island_start) OVER (PARTITION BY event_type
-        |    ORDER BY island_start) - island_end - 1, 0) AS BIGINT)
-        |    AS gap_after
-        |FROM i ORDER BY event_type, island_start""".stripMargin,
-
-    "q_seasonal" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT event_type, day, n, day % 7 AS dow,
-        |    CAST(sum(n) OVER (PARTITION BY event_type, day % 7)
-        |      // count(n) OVER (PARTITION BY event_type, day % 7)
-        |      AS BIGINT) AS dow_mean
-        |  FROM daily),
-        |r AS (
-        |  SELECT *, n - dow_mean AS residual,
-        |    abs(n - dow_mean) AS abs_res
-        |  FROM b),
-        |h AS (
-        |  SELECT event_type, abs_res, CAST(count(*) AS BIGINT) AS c
-        |  FROM r GROUP BY 1, 2),
-        |h2 AS (
-        |  SELECT event_type, abs_res,
-        |    sum(c) OVER (PARTITION BY event_type ORDER BY abs_res
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(c) OVER (PARTITION BY event_type) AS n_tot
-        |  FROM h),
-        |mad AS (
-        |  SELECT event_type, CAST(min(abs_res) AS BIGINT) AS mad
-        |  FROM h2 WHERE cum >= (n_tot + 1) // 2 GROUP BY 1)
-        |SELECT r.event_type, r.day, r.n, CAST(r.dow AS BIGINT) AS dow,
-        |  r.dow_mean, r.residual, mad.mad,
-        |  CAST(CASE WHEN r.abs_res > 3 * mad.mad THEN 1 ELSE 0 END
-        |    AS BIGINT) AS anomaly
-        |FROM r JOIN mad ON r.event_type = mad.event_type
-        |ORDER BY r.event_type, r.day""".stripMargin,
-
-    "q_boiler" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, string_split(text, ' ') AS toks
-        |  FROM documents),
-        |b AS (SELECT doc_id, source, toks FROM t WHERE len(toks) >= 3),
-        |g0 AS (
-        |  SELECT doc_id, source, toks,
-        |    unnest(range(0, len(toks) - 2)) AS pos0
-        |  FROM b),
-        |g1 AS (
-        |  SELECT DISTINCT doc_id, source,
-        |    CAST(('0x' || substr(md5(
-        |      array_to_string(toks[pos0+1:pos0+3], ' ')), 1, 8)) AS BIGINT)
-        |      AS g
-        |  FROM g0),
-        |nd AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-        |  FROM b GROUP BY 1),
-        |d2 AS (
-        |  SELECT g1.doc_id, g1.source,
-        |    CAST(count(*) OVER (PARTITION BY g1.source, g1.g) AS BIGINT)
-        |      AS df
-        |  FROM g1)
-        |SELECT d2.doc_id, d2.source,
-        |  CAST(count(*) AS BIGINT) AS n_grams,
-        |  CAST(sum(CASE WHEN df * 1000000 // n_docs >= 500000
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-        |  CAST(1000000 * sum(CASE WHEN df * 1000000 // n_docs >= 500000
-        |    THEN 1 ELSE 0 END) // count(*) AS BIGINT) AS boiler_ppm
-        |FROM d2 JOIN nd ON d2.source = nd.source
-        |GROUP BY d2.doc_id, d2.source
-        |ORDER BY d2.doc_id""".stripMargin,
-
-    "q_cdc" ->
-      """WITH log AS (
-        |  SELECT o_orderkey // 4 AS k, o_orderkey AS lsn,
-        |    CASE CAST(o_orderkey % 10 AS INT) WHEN 0 THEN 'D'
-        |      WHEN 5 THEN 'I' ELSE 'U' END AS op,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status
-        |  FROM orders),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY k
-        |      ORDER BY lsn DESC, op DESC,
-        |        md5(concat(CAST(price_cents AS VARCHAR), status)) DESC) AS rn,
-        |    CAST(count(*) OVER (PARTITION BY k) AS BIGINT) AS n_ops,
-        |    CAST(sum(CASE WHEN op = 'D' THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY k) AS BIGINT) AS n_deletes
-        |  FROM log)
-        |SELECT k, lsn AS applied_lsn, n_ops, n_deletes, price_cents, status
-        |FROM r WHERE rn = 1 AND op <> 'D' ORDER BY k""".stripMargin,
-
-    // merged mart ≡ full recompute from the whole op-log (the B33
-    // equivalence: per-key delta lsns exceed base lsns, so folding the
-    // snapshot + delta equals folding everything)
-    "q_mart_merge" ->
-      """WITH log AS (
-        |  SELECT o_orderkey // 4 AS k, o_orderkey AS lsn,
-        |    CASE CAST(o_orderkey % 10 AS INT) WHEN 0 THEN 'D'
-        |      WHEN 5 THEN 'I' ELSE 'U' END AS op,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST((o_orderkey // 4) % 8 AS VARCHAR) AS part
-        |  FROM orders),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY k
-        |      ORDER BY lsn DESC, op DESC,
-        |        md5(concat(CAST(price_cents AS VARCHAR), status, part)) DESC) AS rn
-        |  FROM log)
-        |SELECT k, price_cents, status, part
-        |FROM r WHERE rn = 1 AND op <> 'D' ORDER BY k""".stripMargin,
-
-    // B39 twin: the same UPDATE-then-DELETE statement pair in plain SQL
-    // B42 twin: evolved-table readback — the added column is NULL for
-    // pre-evolution rows, carried for the evolved batch, overwritten
-    // where the backfill UPDATE matched
-    "q_mart_evolve" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders)
-        |SELECT k, price_cents, status, part,
-        |  CASE WHEN status = 'F' AND k % 5 = 0 THEN CAST(42 AS BIGINT)
-        |       WHEN k % 2 = 1 THEN CAST(k % 1000 AS BIGINT)
-        |       ELSE NULL END AS discount_ppm
-        |FROM base
-        |ORDER BY k""".stripMargin,
-
-    "q_mart_delete" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders),
-        |upd AS (
-        |  SELECT k,
-        |    CASE WHEN status = 'F' AND k % 7 = 0 THEN price_cents + 100
-        |         ELSE price_cents END AS price_cents,
-        |    status, part
-        |  FROM base)
-        |SELECT k, price_cents, status, part FROM upd
-        |WHERE NOT (status = 'O' AND k % 3 = 0)
-        |ORDER BY k""".stripMargin,
-
-    // B40 twin: the multiset diff base → post-DML, keys on both sides
-    // of the diff reclassified as update pre/postimages
-    "q_mart_cdf" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders),
-        |final AS (
-        |  SELECT k,
-        |    CASE WHEN status = 'F' AND k % 7 = 0 THEN price_cents + 100
-        |         ELSE price_cents END AS price_cents,
-        |    status, part
-        |  FROM base
-        |  WHERE NOT (status = 'O' AND k % 3 = 0)),
-        |d AS (SELECT * FROM base EXCEPT ALL SELECT * FROM final),
-        |i AS (SELECT * FROM final EXCEPT ALL SELECT * FROM base),
-        |uk AS (SELECT k FROM d INTERSECT SELECT k FROM i)
-        |SELECT k, price_cents, status, part,
-        |  CASE WHEN k IN (SELECT k FROM uk) THEN 'update_preimage'
-        |       ELSE 'delete' END AS _change_type
-        |FROM d
-        |UNION ALL
-        |SELECT k, price_cents, status, part,
-        |  CASE WHEN k IN (SELECT k FROM uk) THEN 'update_postimage'
-        |       ELSE 'insert' END AS _change_type
-        |FROM i
-        |ORDER BY k, _change_type""".stripMargin,
-
-    // B43 twin: the final table under the RENAMED names, with the two
-    // engine-pinned invariants as constants — the CDF across the two
-    // metadata-only rename commits is empty (0 rows), and version 0
-    // still reads under its own pre-rename column names (TRUE)
-    "q_mart_rename" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS amount_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS bucket
-        |  FROM orders)
-        |SELECT k,
-        |  CASE WHEN status = 'F' AND k % 5 = 0 THEN amount_cents + 7
-        |       ELSE amount_cents END AS amount_cents,
-        |  status, bucket,
-        |  CAST(0 AS BIGINT) AS rename_cdf_rows,
-        |  TRUE AS v0_old_names
-        |FROM base
-        |ORDER BY k""".stripMargin,
-
-    // B44 twin: both transaction legs recomputed independently and
-    // joined — if either leg's commit were missing or stale the row
-    // count / aggregates could not match
-    "q_mart_txn" ->
-      """WITH fact AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders),
-        |dim AS (
-        |  SELECT status, CAST(count(*) AS BIGINT) AS n_orders,
-        |    CAST(sum(price_cents) AS BIGINT) AS sum_cents
-        |  FROM fact GROUP BY status)
-        |SELECT f.k, f.price_cents, f.status, f.part, d.n_orders, d.sum_cents
-        |FROM fact f JOIN dim d USING (status)
-        |ORDER BY f.k""".stripMargin,
-
-    "q_mart_txn3" ->
-      """WITH fact AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders),
-        |dim AS (
-        |  SELECT status, CAST(count(*) AS BIGINT) AS n_orders,
-        |    CAST(sum(price_cents) AS BIGINT) AS sum_cents
-        |  FROM fact GROUP BY status),
-        |aud AS (
-        |  SELECT part, CAST(count(*) AS BIGINT) AS n_part
-        |  FROM fact GROUP BY part)
-        |SELECT f.k, f.price_cents, f.status, f.part,
-        |  d.n_orders, d.sum_cents, a.n_part,
-        |  TRUE AS torn_before_replay, TRUE AS replay_recovered
-        |FROM fact f JOIN dim d USING (status) JOIN aud a USING (part)
-        |ORDER BY f.k""".stripMargin,
-
-    "q_mart_sql" ->
-      """SELECT o_orderkey AS k,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS amount_cents,
-        |  o_orderstatus AS status,
-        |  'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part,
-        |  TRUE AS bad_stmt_refused
-        |FROM orders ORDER BY 1""".stripMargin,
-
-    "q_km" ->
-      """WITH j AS (
-        |  SELECT o.o_orderpriority AS grp,
-        |    epoch_us(l.l_shipdate) // 86400000000 AS ship_day,
-        |    epoch_us(o.o_orderdate) // 86400000000 AS order_day
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |cut AS (SELECT max(ship_day) - 30 AS cutoff FROM j),
-        |obs AS (
-        |  SELECT grp,
-        |    CASE WHEN ship_day <= cutoff THEN 1 ELSE 0 END AS is_event,
-        |    CASE WHEN ship_day <= cutoff THEN ship_day - order_day
-        |         ELSE cutoff - order_day END AS t
-        |  FROM j CROSS JOIN cut WHERE order_day <= cutoff),
-        |per_lag AS (
-        |  SELECT grp, t, CAST(sum(is_event) AS BIGINT) AS d,
-        |    CAST(sum(1 - is_event) AS BIGINT) AS c
-        |  FROM obs GROUP BY 1, 2),
-        |risk AS (
-        |  SELECT grp, t, d, c,
-        |    CAST(sum(d + c) OVER (PARTITION BY grp) -
-        |      COALESCE(sum(d + c) OVER (PARTITION BY grp ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n_risk
-        |  FROM per_lag),
-        |dth AS (SELECT * FROM risk WHERE d > 0),
-        |packed AS (
-        |  SELECT grp,
-        |    list(d * 4294967296 + n_risk ORDER BY t) AS xs,
-        |    list(t ORDER BY t) AS ts
-        |  FROM dth GROUP BY grp),
-        |folded AS (
-        |  SELECT r.grp, r.t, r.d, r.c, r.n_risk,
-        |    CAST(list_reduce(
-        |      list_prepend(CAST(1000000 AS BIGINT),
-        |        list_filter(p.xs, (x, i) -> p.ts[i] <= r.t)),
-        |      (acc, x) -> (acc * ((x % 4294967296) - (x // 4294967296)))
-        |                  // (x % 4294967296)) AS BIGINT) AS surv_ppm
-        |  FROM dth r JOIN packed p ON r.grp = p.grp)
-        |SELECT grp, t, d AS n_event, c AS n_censored, n_risk, surv_ppm
-        |FROM folded ORDER BY grp, t""".stripMargin,
-
-    "q_snm" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_sort(list_distinct(
-        |      list_filter(string_split(text, ' '), x -> x <> ''))) AS toks
-        |  FROM documents
-        |  WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) > 0),
-        |kb AS (
-        |  SELECT doc_id, array_to_string(toks, ' ') AS key,
-        |    substring(array_to_string(toks, ' '), 1, 8) AS blk
-        |  FROM t),
-        |ld AS (
-        |  SELECT doc_id, blk,
-        |    lead(doc_id, 1) OVER win AS n1,
-        |    lead(doc_id, 2) OVER win AS n2,
-        |    lead(doc_id, 3) OVER win AS n3,
-        |    row_number() OVER win AS rn_a,
-        |    row_number() OVER (PARTITION BY blk
-        |      ORDER BY key DESC, doc_id DESC) AS rn_d
-        |  FROM kb WINDOW win AS (PARTITION BY blk ORDER BY key, doc_id)),
-        |interior AS (
-        |  SELECT doc_id, n1 AS nbr FROM ld WHERE n1 IS NOT NULL
-        |  UNION ALL SELECT doc_id, n2 FROM ld WHERE n2 IS NOT NULL
-        |  UNION ALL SELECT doc_id, n3 FROM ld WHERE n3 IS NOT NULL),
-        |bi AS (
-        |  SELECT blk, row_number() OVER (ORDER BY blk) AS blk_idx
-        |  FROM (SELECT DISTINCT blk FROM kb)),
-        |tails AS (
-        |  SELECT ld.doc_id AS a_id, ld.rn_d, bi.blk_idx
-        |  FROM ld JOIN bi ON ld.blk = bi.blk WHERE ld.rn_d < 4),
-        |heads AS (
-        |  SELECT ld.doc_id AS b_id, ld.rn_a, bi.blk_idx - 1 AS blk_idx
-        |  FROM ld JOIN bi ON ld.blk = bi.blk WHERE ld.rn_a < 4),
-        |seam AS (
-        |  SELECT a_id AS doc_id, b_id AS nbr
-        |  FROM tails JOIN heads USING (blk_idx) WHERE rn_d + rn_a <= 4),
-        |pairs AS (
-        |  SELECT least(doc_id, nbr) AS id1, greatest(doc_id, nbr) AS id2,
-        |    CAST(count(*) AS BIGINT) AS n_props
-        |  FROM (SELECT * FROM interior UNION ALL SELECT * FROM seam)
-        |  GROUP BY 1, 2),
-        |v AS (
-        |  SELECT p.id1, p.id2, p.n_props,
-        |    CAST(len(list_intersect(a.toks, b.toks)) AS BIGINT) AS n_inter,
-        |    CAST(len(a.toks) + len(b.toks) AS BIGINT) AS n_sum
-        |  FROM pairs p
-        |  JOIN t a ON p.id1 = a.doc_id
-        |  JOIN t b ON p.id2 = b.doc_id)
-        |SELECT id1, id2, n_props, n_inter, n_sum - n_inter AS n_union,
-        |  CAST(1000000 * n_inter // (n_sum - n_inter) AS BIGINT) AS jac_ppm
-        |FROM v
-        |WHERE 1000000 * n_inter // (n_sum - n_inter) >= 500000
-        |ORDER BY id1, id2""".stripMargin,
-
-    "q_rfm" ->
-      """WITH base AS (
-        |  SELECT o_custkey,
-        |    max(epoch_us(o_orderdate) // 86400000000) AS r_day,
-        |    CAST(count(*) AS BIGINT) AS f_cnt,
-        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS m_cents
-        |  FROM orders GROUP BY 1),
-        |b2 AS (SELECT *, m_cents // 100 AS m_dollars FROM base),
-        |rs AS (
-        |  SELECT v, 1 + 5 * COALESCE(sum(c) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    // sum(c) OVER () AS sc
-        |  FROM (SELECT r_day AS v, count(*) AS c FROM b2 GROUP BY 1)),
-        |fs AS (
-        |  SELECT v, 1 + 5 * COALESCE(sum(c) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    // sum(c) OVER () AS sc
-        |  FROM (SELECT f_cnt AS v, count(*) AS c FROM b2 GROUP BY 1)),
-        |ms AS (
-        |  SELECT v, 1 + 5 * COALESCE(sum(c) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    // sum(c) OVER () AS sc
-        |  FROM (SELECT m_dollars AS v, count(*) AS c FROM b2 GROUP BY 1))
-        |SELECT b2.o_custkey, b2.r_day, b2.f_cnt, b2.m_cents,
-        |  CAST(rs.sc AS BIGINT) AS r_score,
-        |  CAST(fs.sc AS BIGINT) AS f_score,
-        |  CAST(ms.sc AS BIGINT) AS m_score,
-        |  CAST(rs.sc * 100 + fs.sc * 10 + ms.sc AS BIGINT) AS rfm,
-        |  CASE
-        |    WHEN rs.sc >= 4 AND fs.sc >= 4 AND ms.sc >= 4 THEN 'champion'
-        |    WHEN rs.sc <= 2 AND fs.sc >= 4 THEN 'at_risk'
-        |    WHEN rs.sc >= 4 AND fs.sc <= 2 THEN 'new'
-        |    WHEN rs.sc <= 2 AND fs.sc <= 2 AND ms.sc <= 2 THEN 'hibernating'
-        |    ELSE 'core' END AS segment
-        |FROM b2
-        |JOIN rs ON b2.r_day = rs.v
-        |JOIN fs ON b2.f_cnt = fs.v
-        |JOIN ms ON b2.m_dollars = ms.v
-        |ORDER BY b2.o_custkey""".stripMargin,
-
-    "q_cohort" ->
-      """WITH uw AS (
-        |  SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS wk
-        |  FROM events),
-        |c AS (
-        |  SELECT user_id, min(wk) AS cohort_wk FROM uw GROUP BY 1)
-        |SELECT c.cohort_wk, uw.wk - c.cohort_wk AS week_offset,
-        |  count(*) AS n_users
-        |FROM uw JOIN c ON uw.user_id = c.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // D59 twin: identical code string (string_agg with the same total
-    // (ts, event_id) order), RE2 counting the same forced-extent
-    // episodes Java's regex counts (see Analytics.patternEpisodes).
-    "q_seq_pattern" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |    CASE event_type WHEN 'view' THEN 'v' WHEN 'click' THEN 'c'
-        |      WHEN 'purchase' THEN 'p' WHEN 'signup' THEN 's'
-        |      ELSE 'e' END AS code
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        |    string_agg(code, '' ORDER BY ts_us, event_id) AS seq
-        |  FROM e GROUP BY 1)
-        |SELECT user_id, n_events, seq,
-        |  CAST(len(regexp_extract_all(seq, 'vc*p')) AS BIGINT) AS n_funnel,
-        |  CAST(len(regexp_extract_all(seq, 'vp')) AS BIGINT) AS n_direct
-        |FROM s ORDER BY user_id""".stripMargin,
-
-    // E50 twin: same contraction, same doc-weighted model counts, and
-    // bl(x) as length(to_base(x,2)) — integer bit lengths, so the
-    // stupid-backoff code lengths replay bit-for-bit.
-    "q_lm_quality" ->
-      """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep,
-        |    CAST(sum(CASE WHEN doc_id % 5 <> 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS tcnt
-        |  FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, string_split(m.text, ' ') AS t
-        |  FROM m JOIN reps r ON m.doc_id = r.rep),
-        |toks AS (SELECT doc_id, unnest(t) AS w FROM rd),
-        |p2 AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
-        |    unnest(t[2:len(t)]) AS w2
-        |  FROM rd WHERE len(t) >= 2),
-        |tc AS (SELECT rep AS doc_id, tcnt FROM reps),
-        |uni AS (SELECT w, CAST(sum(tc.tcnt) AS BIGINT) AS c1
-        |  FROM toks JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1),
-        |big AS (SELECT w1, w2, CAST(sum(tc.tcnt) AS BIGINT) AS c2
-        |  FROM p2 JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS tot FROM uni),
-        |bits AS (SELECT p.doc_id,
-        |    CAST(CASE WHEN b.c2 IS NOT NULL
-        |      THEN length(to_base(u1.c1, 2)) - length(to_base(b.c2, 2))
-        |    WHEN u2.c1 IS NOT NULL
-        |      THEN length(to_base(t.tot, 2)) - length(to_base(u2.c1, 2)) + 4
-        |    ELSE length(to_base(t.tot, 2)) + 8 END AS BIGINT) AS bits
-        |  FROM p2 p
-        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-        |  LEFT JOIN uni u1 ON p.w1 = u1.w
-        |  LEFT JOIN uni u2 ON p.w2 = u2.w
-        |  CROSS JOIN tot t),
-        |sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(bits) AS BIGINT) AS bits_sum FROM bits GROUP BY 1),
-        |f AS (SELECT r.rep, COALESCE(sc.n_pairs, 0) AS n_pairs,
-        |    COALESCE(sc.bits_sum, 0) AS bits_sum
-        |  FROM reps r LEFT JOIN sc ON sc.doc_id = r.rep)
-        |SELECT mem.doc_id, f.n_pairs, f.bits_sum,
-        |  CAST(CASE WHEN f.n_pairs > 0 THEN (1000 * f.bits_sum) // f.n_pairs
-        |    ELSE -1 END AS BIGINT) AS mbits_per_pair
-        |FROM f JOIN members mem ON mem.rep = f.rep
-        |ORDER BY mem.doc_id""".stripMargin,
-
-    // E52 twin: the E50 chain + the distinct-value tercile cuts
-    // (3·cum ≥ k·n — exact integer ceil), value-based bucket edges.
-    "q_lm_buckets" ->
-      """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep,
-        |    CAST(sum(CASE WHEN doc_id % 5 <> 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS tcnt
-        |  FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, string_split(m.text, ' ') AS t
-        |  FROM m JOIN reps r ON m.doc_id = r.rep),
-        |toks AS (SELECT doc_id, unnest(t) AS w FROM rd),
-        |p2 AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
-        |    unnest(t[2:len(t)]) AS w2
-        |  FROM rd WHERE len(t) >= 2),
-        |tc AS (SELECT rep AS doc_id, tcnt FROM reps),
-        |uni AS (SELECT w, CAST(sum(tc.tcnt) AS BIGINT) AS c1
-        |  FROM toks JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1),
-        |big AS (SELECT w1, w2, CAST(sum(tc.tcnt) AS BIGINT) AS c2
-        |  FROM p2 JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS tot FROM uni),
-        |bits AS (SELECT p.doc_id,
-        |    CAST(CASE WHEN b.c2 IS NOT NULL
-        |      THEN length(to_base(u1.c1, 2)) - length(to_base(b.c2, 2))
-        |    WHEN u2.c1 IS NOT NULL
-        |      THEN length(to_base(t.tot, 2)) - length(to_base(u2.c1, 2)) + 4
-        |    ELSE length(to_base(t.tot, 2)) + 8 END AS BIGINT) AS bits
-        |  FROM p2 p
-        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-        |  LEFT JOIN uni u1 ON p.w1 = u1.w
-        |  LEFT JOIN uni u2 ON p.w2 = u2.w
-        |  CROSS JOIN tot t),
-        |sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(bits) AS BIGINT) AS bits_sum FROM bits GROUP BY 1),
-        |sd AS (SELECT mem.doc_id, doc.lang,
-        |    CAST((1000 * sc.bits_sum) // sc.n_pairs AS BIGINT)
-        |      AS mbits_per_pair
-        |  FROM sc JOIN members mem ON mem.rep = sc.doc_id
-        |  JOIN documents doc ON doc.doc_id = mem.doc_id),
-        |hist AS (SELECT lang, mbits_per_pair, CAST(count(*) AS BIGINT) AS c
-        |  FROM sd GROUP BY 1, 2),
-        |cum AS (SELECT lang, mbits_per_pair,
-        |    sum(c) OVER (PARTITION BY lang ORDER BY mbits_per_pair) AS cum,
-        |    sum(c) OVER (PARTITION BY lang) AS n
-        |  FROM hist),
-        |cuts AS (SELECT lang,
-        |    min(CASE WHEN cum * 3 >= n THEN mbits_per_pair END) AS t1,
-        |    min(CASE WHEN cum * 3 >= 2 * n THEN mbits_per_pair END) AS t2
-        |  FROM cum GROUP BY 1)
-        |SELECT sd.doc_id, sd.lang, sd.mbits_per_pair,
-        |  CASE WHEN sd.mbits_per_pair <= c.t1 THEN 'head'
-        |    WHEN sd.mbits_per_pair <= c.t2 THEN 'middle'
-        |    ELSE 'tail' END AS bucket
-        |FROM sd JOIN cuts c USING (lang)
-        |ORDER BY sd.doc_id""".stripMargin,
-
-    // E51 twin: one md5 per row drives both the shard assignment
-    // (first-8-hex mod N, the E23 idiom — non-negative, so % == pmod)
-    // and the within-shard rank.
-    "q_shuffle_shards" ->
-      """WITH r AS (SELECT doc_id,
-        |    md5('shuf42:' || CAST(doc_id AS VARCHAR)) AS rk
-        |  FROM documents),
-        |a AS (SELECT doc_id, rk,
-        |    CAST(('0x' || substr(rk, 1, 8)) AS BIGINT) % 8 AS shard
-        |  FROM r)
-        |SELECT doc_id, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY rk, doc_id)
-        |    - 1 AS BIGINT) AS pos
-        |FROM a ORDER BY shard, pos""".stripMargin,
-
-    // D60 twin: identical Apriori prune, pair join, and exact ppm lift
-    // (integer floor-div on both sides, all operands non-negative).
-    "q_copurchase" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |freq AS (
-        |  SELECT p, CAST(count(*) AS BIGINT) AS nf FROM items
-        |  GROUP BY 1 HAVING count(*) >= 2),
-        |kept AS (SELECT i.o, i.p FROM items i JOIN freq f USING (p)),
-        |tot AS (
-        |  SELECT CAST(count(DISTINCT o) AS BIGINT) AS tot FROM items),
-        |pairs AS (
-        |  SELECT a.p AS p1, b.p AS p2, CAST(count(*) AS BIGINT) AS n_orders
-        |  FROM kept a JOIN kept b ON a.o = b.o AND a.p < b.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p.p1, p.p2, p.n_orders,
-        |  (p.n_orders * t.tot * 1000000) // (f1.nf * f2.nf) AS lift_ppm
-        |FROM pairs p
-        |JOIN freq f1 ON f1.p = p.p1
-        |JOIN freq f2 ON f2.p = p.p2
-        |CROSS JOIN tot t
-        |ORDER BY p.p1, p.p2""".stripMargin,
-
-    "q_salted_join" ->
-      """SELECT CAST(s_nationkey AS BIGINT) AS nationkey, count(*) AS n,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)
-        |    AS sum_price_cents
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_full_outer" ->
-      """WITH p AS (
-        |  SELECT user_id, count(*) AS n_purch FROM events
-        |  WHERE event_type = 'purchase' GROUP BY 1),
-        |e AS (
-        |  SELECT user_id, count(*) AS n_err FROM events
-        |  WHERE event_type = 'error' GROUP BY 1)
-        |SELECT user_id,
-        |  COALESCE(n_purch, 0) AS n_purch,
-        |  COALESCE(n_err, 0) AS n_err,
-        |  CASE WHEN n_purch IS NULL THEN 'err_only'
-        |       WHEN n_err IS NULL THEN 'purch_only'
-        |       ELSE 'both' END AS presence
-        |FROM p FULL OUTER JOIN e USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-
-    "q_emb_stats" ->
-      """WITH n AS (
-        |  SELECT label,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(embedding,
-        |        x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT))), (a,b) -> a + b*b
-        |    ) AS norm2
-        |  FROM embeddings)
-        |SELECT CAST(label AS BIGINT) AS label, count(*) AS n_vecs,
-        |  CAST(sum(norm2) AS BIGINT) AS sum_norm2,
-        |  CAST(min(norm2) AS BIGINT) AS min_norm2,
-        |  CAST(max(norm2) AS BIGINT) AS max_norm2
-        |FROM n GROUP BY label ORDER BY label""".stripMargin,
-
-    // SemDeDup twin: identical dup injection, the exported KMeans cell
-    // table (__GRAFT_SEMCELLS__), and the same µ-scaled exact-integer
-    // cosine op sequence as the other embedding oracles; removal =
-    // EXISTS a smaller-id same-cell neighbor at cos >= 0.999.
-    "q_semdedup" ->
-      """WITH wd AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, embedding FROM embeddings
-        |  WHERE vec_id % 100 = 0),
-        |cells AS (
-        |  SELECT vec_id, CAST(cell AS BIGINT) AS cell
-        |  FROM read_parquet('__GRAFT_SEMCELLS__/*.parquet')),
-        |nn AS (
-        |  SELECT w.vec_id, c.cell,
-        |    list_transform(w.embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM wd w JOIN cells c USING (vec_id)),
-        |n AS MATERIALIZED (
-        |  -- per-row svec math is EXACT in double (every term and
-        |  -- partial sum an integer < 2^53), so the native vectorized
-        |  -- list_dot_product replaces the interpreted list_reduce
-        |  -- lambda (~40x on the O(cell^2) pair scan) while producing
-        |  -- bit-identical cosines; group-summed centroid math
-        |  -- elsewhere stays HUGEINT, where double would NOT be exact
-        |  SELECT vec_id, cell,
-        |    list_transform(svec, x -> CAST(x AS DOUBLE)) AS dvec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM nn),
-        |rm AS (
-        |  SELECT DISTINCT b.vec_id
-        |  FROM n a JOIN n b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  WHERE list_dot_product(a.dvec, b.dvec)
-        |    / (sqrt(CAST(a.norm2 AS DOUBLE)) * sqrt(CAST(b.norm2 AS DOUBLE)))
-        |    >= 0.999)
-        |SELECT n.vec_id, n.cell,
-        |  CASE WHEN rm.vec_id IS NULL THEN CAST(1 AS BIGINT)
-        |       ELSE CAST(0 AS BIGINT) END AS kept
-        |FROM n LEFT JOIN rm USING (vec_id)
-        |ORDER BY n.vec_id""".stripMargin,
-
-    // HLL twin: identical md5 register routing; ρ = trailing-zeros
-    // position via (w & -w) — pure integer bit ops both engines; the
-    // numerator constant is 709000·64²·2^30.
-    "q_hll_distinct" ->
-      """WITH pairs AS (
-        |  SELECT c_nationkey AS nat, l_partkey AS pk
-        |  FROM customer
-        |  JOIN orders ON o_custkey = c_custkey
-        |  JOIN lineitem ON l_orderkey = o_orderkey),
-        |h AS (
-        |  SELECT nat,
-        |    CAST(('0x'||substr(md5('hll:'||CAST(pk AS VARCHAR)),1,8))
-        |      AS BIGINT) AS h
-        |  FROM pairs),
-        |r AS (
-        |  SELECT nat, h % 64 AS idx,
-        |    CASE WHEN h // 64 = 0 THEN 27
-        |         ELSE bit_count(((h // 64) & -(h // 64)) - 1) + 1 END AS rho
-        |  FROM h),
-        |reg AS (SELECT nat, idx, MAX(rho) AS m FROM r GROUP BY 1, 2),
-        |a AS (SELECT nat, CAST(SUM(CAST(1 AS BIGINT) << (30 - m))
-        |        AS BIGINT) AS sp, CAST(COUNT(*) AS BIGINT) AS np
-        |      FROM reg GROUP BY 1)
-        |SELECT CAST(nat AS BIGINT) AS c_nationkey,
-        |  CAST(3118214976372736000
-        |    // (1000000 * (sp + (64 - np) * 1073741824)) AS BIGINT)
-        |    AS est_distinct,
-        |  CAST(64 - np AS BIGINT) AS v_zero
-        |FROM a ORDER BY 1""".stripMargin,
-
-    // D72 twin: identical staged bit-smear octave, bucket id, exact
-    // ppm rank walk, and integer midpoint inverse — the estimates
-    // (not just the rows) are bit-identical cross-engine.
-    "q_qsketch" ->
-      """WITH v AS (
-        |  SELECT l_returnflag AS flag,
-        |    greatest(CAST(round(l_extendedprice * 100) AS BIGINT),
-        |             CAST(1 AS BIGINT)) AS c0
-        |  FROM lineitem),
-        |m1 AS (SELECT flag, c0, c0 | (c0 >> 1) AS s FROM v),
-        |m2 AS (SELECT flag, c0, s | (s >> 2) AS s FROM m1),
-        |m3 AS (SELECT flag, c0, s | (s >> 4) AS s FROM m2),
-        |m4 AS (SELECT flag, c0, s | (s >> 8) AS s FROM m3),
-        |m5 AS (SELECT flag, c0, s | (s >> 16) AS s FROM m4),
-        |m6 AS (SELECT flag, c0, s | (s >> 32) AS s FROM m5),
-        |b AS (
-        |  SELECT flag,
-        |    CASE WHEN c0 < 64 THEN c0
-        |         ELSE (CAST(bit_count(s) AS BIGINT) - 1 - 6) * 64
-        |              + c0 // ((s + 1) // 128) END AS bid
-        |  FROM m6),
-        |sk AS (SELECT flag, bid, CAST(COUNT(*) AS BIGINT) AS cnt
-        |       FROM b GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT flag, bid, cnt,
-        |    CAST(SUM(cnt) OVER (PARTITION BY flag ORDER BY bid)
-        |      AS BIGINT) AS cum
-        |  FROM sk),
-        |tot AS (SELECT flag, CAST(SUM(cnt) AS BIGINT) AS n,
-        |          CAST(COUNT(*) AS BIGINT) AS n_buckets
-        |        FROM sk GROUP BY 1),
-        |g AS (SELECT flag, n, n_buckets, q_ppm FROM tot
-        |      CROSS JOIN (SELECT UNNEST([500000, 900000, 990000])
-        |                    AS q_ppm)),
-        |sel AS (
-        |  SELECT c.flag, g.q_ppm, g.n, g.n_buckets, MIN(c.bid) AS bid
-        |  FROM cum c JOIN g ON g.flag = c.flag
-        |  WHERE c.cum * 1000000 >= g.n * g.q_ppm
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT flag, CAST(q_ppm AS BIGINT) AS q_ppm, n, n_buckets,
-        |  CASE WHEN bid < 64 THEN bid
-        |       ELSE (bid - (bid // 64 - 1) * 64)
-        |            * (CAST(1 AS BIGINT) << CAST(bid // 64 - 1 AS INT))
-        |            + ((CAST(1 AS BIGINT) << CAST(bid // 64 - 1 AS INT))
-        |               - 1) // 2
-        |  END AS est_cents
-        |FROM sel ORDER BY 1, 2""".stripMargin,
-
-    "q_ks_drift" ->
-      """WITH s AS (
-        |  SELECT CASE WHEN year(o_orderdate) = 1995 THEN 0 ELSE 1 END
-        |      AS side,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS v
-        |  FROM orders WHERE year(o_orderdate) IN (1995, 1996)),
-        |b AS (
-        |  SELECT v AS x,
-        |    CAST(SUM(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS da,
-        |    CAST(SUM(CASE WHEN side <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS db
-        |  FROM s GROUP BY 1),
-        |c AS (
-        |  SELECT x, da, db,
-        |    CAST(SUM(da) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS ca,
-        |    CAST(SUM(db) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS cb
-        |  FROM b),
-        |t AS (SELECT CAST(SUM(da) AS BIGINT) AS n_a,
-        |        CAST(SUM(db) AS BIGINT) AS n_b FROM b)
-        |SELECT n_a, n_b,
-        |  CAST(MAX(abs(n_b * ca - n_a * cb)) AS BIGINT) AS d_num,
-        |  CAST(MAX(abs(n_b * ca - n_a * cb)) * 1000000
-        |    // greatest(n_a * n_b, 1) AS BIGINT) AS ks_ppm
-        |FROM c, t GROUP BY n_a, n_b""".stripMargin,
-
-    // PR-curve twin: the q_auc scored CTE, descending cumulative TP/FP
-    "q_pr_curve" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(SUM(lab) AS BIGINT) AS np
-        |        FROM sc GROUP BY s),
-        |cum AS (SELECT s,
-        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |        FROM bys),
-        |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos FROM bys)
-        |SELECT s AS threshold, tp, pp - tp AS fp,
-        |  CAST(tp * 1000000 // greatest(pp, 1) AS BIGINT)
-        |    AS precision_ppm,
-        |  CAST(tp * 1000000 // greatest(n_pos, 1) AS BIGINT)
-        |    AS recall_ppm
-        |FROM cum, t ORDER BY threshold""".stripMargin,
-
-    // Integrity twin: parent PKs are unique in this schema, so a LEFT
-    // JOIN probe neither duplicates nor drops child rows
-    "q_integrity" ->
-      """SELECT * FROM (
-        |  SELECT 'customer.nation' AS fk,
-        |    CAST(COUNT(DISTINCT c_nationkey) AS BIGINT) AS n_child_keys,
-        |    CAST(COUNT(DISTINCT CASE WHEN n_nationkey IS NULL
-        |      THEN c_nationkey END) AS BIGINT) AS orphan_keys,
-        |    CAST(SUM(CASE WHEN n_nationkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS orphan_rows
-        |  FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-        |  WHERE c_nationkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'lineitem.orders',
-        |    CAST(COUNT(DISTINCT l_orderkey) AS BIGINT),
-        |    CAST(COUNT(DISTINCT CASE WHEN o_orderkey IS NULL
-        |      THEN l_orderkey END) AS BIGINT),
-        |    CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM lineitem LEFT JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE l_orderkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'lineitem.part',
-        |    CAST(COUNT(DISTINCT l_partkey) AS BIGINT),
-        |    CAST(COUNT(DISTINCT CASE WHEN p_partkey IS NULL
-        |      THEN l_partkey END) AS BIGINT),
-        |    CAST(SUM(CASE WHEN p_partkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
-        |  WHERE l_partkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'lineitem.supplier',
-        |    CAST(COUNT(DISTINCT l_suppkey) AS BIGINT),
-        |    CAST(COUNT(DISTINCT CASE WHEN s_suppkey IS NULL
-        |      THEN l_suppkey END) AS BIGINT),
-        |    CAST(SUM(CASE WHEN s_suppkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM lineitem LEFT JOIN supplier ON l_suppkey = s_suppkey
-        |  WHERE l_suppkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'nation.region',
-        |    CAST(COUNT(DISTINCT n_regionkey) AS BIGINT),
-        |    CAST(COUNT(DISTINCT CASE WHEN r_regionkey IS NULL
-        |      THEN n_regionkey END) AS BIGINT),
-        |    CAST(SUM(CASE WHEN r_regionkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM nation LEFT JOIN region ON n_regionkey = r_regionkey
-        |  WHERE n_regionkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'orders.customer',
-        |    CAST(COUNT(DISTINCT o_custkey) AS BIGINT),
-        |    CAST(COUNT(DISTINCT CASE WHEN c_custkey IS NULL
-        |      THEN o_custkey END) AS BIGINT),
-        |    CAST(SUM(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        |  WHERE o_custkey IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'supplier.nation',
-        |    CAST(COUNT(DISTINCT s_nationkey) AS BIGINT),
-        |    CAST(COUNT(DISTINCT CASE WHEN n_nationkey IS NULL
-        |      THEN s_nationkey END) AS BIGINT),
-        |    CAST(SUM(CASE WHEN n_nationkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM supplier LEFT JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE s_nationkey IS NOT NULL
-        |) ORDER BY fk""".stripMargin,
-
-    // RRF twin: the q_bm25 pipeline at k=10 (cut < 11) + the
-    // q_ann_brute pipeline with %50-aligned queries at k=10, fused by
-    // rank only — 10^6 // (60 + rnk) summed per (query, item)
-    "q_rrf_fusion" ->
-      """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep, count(*) AS gsz
-        |  FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
-        |gs AS (SELECT rep AS doc_id, gsz FROM reps),
-        |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM rd),
-        |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS tok
-        |  FROM t WHERE len(toks) >= 2),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM g GROUP BY 1, 2),
-        |dl AS (SELECT doc_id,
-        |    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END
-        |      AS BIGINT) AS dl
-        |  FROM t),
-        |c AS (SELECT CAST(sum(gs.gsz) AS BIGINT) AS n,
-        |             CAST(sum(gs.gsz * dl.dl) AS BIGINT) AS s
-        |  FROM dl JOIN gs USING (doc_id)),
-        |dft AS (SELECT tok, CAST(sum(gs.gsz) AS BIGINT) AS df
-        |  FROM tf JOIN gs USING (doc_id) GROUP BY 1),
-        |kept0 AS (
-        |  SELECT tf.doc_id, tf.tok, tf.tf, dft.df
-        |  FROM tf JOIN dft USING (tok) CROSS JOIN c
-        |  WHERE dft.df <= CAST(c.n AS DOUBLE) * 0.4),
-        |kept AS (
-        |  SELECT doc_id, tok, tf, df FROM (
-        |    SELECT k.*, row_number() OVER (PARTITION BY tok
-        |      ORDER BY tf DESC, doc_id) AS pr
-        |    FROM kept0 k)
-        |  WHERE pr <= 1000),
-        |qdocs AS (SELECT doc_id AS q_id, rep AS qrep FROM members
-        |  WHERE doc_id % 50 = 0 AND doc_id < 20000000),
-        |qpost AS (
-        |  SELECT DISTINCT qd.qrep, k.tok
-        |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
-        |  JOIN kept k ON k.doc_id = qd.qrep),
-        |terms AS (
-        |  SELECT q.qrep, k.doc_id AS crep,
-        |    CAST(c.s AS DOUBLE) AS sd, CAST(k.tf AS DOUBLE) AS tfd,
-        |    CAST(c.n AS DOUBLE) AS nd, CAST(k.df AS DOUBLE) AS dfd,
-        |    CAST(d.dl AS DOUBLE) AS dld
-        |  FROM qpost q JOIN kept k USING (tok)
-        |  JOIN dl d ON d.doc_id = k.doc_id
-        |  CROSS JOIN c),
-        |scoredc AS (
-        |  SELECT qrep, crep,
-        |    CAST(SUM(CAST(ROUND((22.0 * sd * tfd * (2.0*nd - 2.0*dfd + 1.0) * 1000000.0) / ((10.0*sd*tfd + 3.0*sd + 9.0*dld*nd) * (2.0*dfd + 1.0))) AS BIGINT)) AS BIGINT) AS score_u
-        |  FROM terms GROUP BY 1, 2),
-        |bys AS (
-        |  SELECT sc.qrep, sc.score_u, CAST(sum(g.gsz) AS BIGINT) AS msz
-        |  FROM scoredc sc JOIN gs g ON g.doc_id = sc.crep
-        |  GROUP BY 1, 2),
-        |cut AS (
-        |  SELECT qrep, score_u FROM (
-        |    SELECT qrep, score_u,
-        |      COALESCE(SUM(msz) OVER (PARTITION BY qrep ORDER BY score_u DESC
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS higher
-        |    FROM bys)
-        |  WHERE higher < 11),
-        |ex AS (
-        |  SELECT qd.q_id, mem.doc_id, sc.score_u
-        |  FROM qdocs qd
-        |  JOIN scoredc sc ON sc.qrep = qd.qrep
-        |  JOIN cut ON cut.qrep = sc.qrep AND cut.score_u = sc.score_u
-        |  JOIN members mem ON mem.rep = sc.crep
-        |  WHERE mem.doc_id <> qd.q_id),
-        |lex AS (
-        |  SELECT q_id, doc_id AS item_id, rnk FROM (
-        |    SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-        |      ORDER BY score_u DESC, doc_id) AS BIGINT) AS rnk
-        |    FROM ex)
-        |  WHERE rnk <= 10),
-        |v AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings),
-        |nv AS (
-        |  SELECT vec_id, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |qv AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2
-        |  FROM nv WHERE vec_id % 50 = 0 AND vec_id < 20000000),
-        |scv AS (
-        |  SELECT qv.q_id, nv.vec_id,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> qv.q_svec[i]*nv.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(qv.q_norm2 AS DOUBLE)) * sqrt(CAST(nv.norm2 AS DOUBLE))) AS cos
-        |  FROM nv JOIN qv ON nv.vec_id <> qv.q_id),
-        |sem AS (
-        |  SELECT q_id, vec_id AS item_id, rnk FROM (
-        |    SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
-        |    FROM scv)
-        |  WHERE rnk <= 10),
-        |u AS (SELECT * FROM lex UNION ALL SELECT * FROM sem),
-        |f AS (
-        |  SELECT q_id, item_id,
-        |    CAST(SUM(1000000 // (60 + rnk)) AS BIGINT) AS rrf_u,
-        |    CAST(COUNT(*) AS BIGINT) AS n_lists
-        |  FROM u GROUP BY 1, 2)
-        |SELECT q_id, item_id, rrf_u, n_lists, rnk FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-        |    ORDER BY rrf_u DESC, item_id) AS BIGINT) AS rnk
-        |  FROM f)
-        |WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin,
-
-    // dictionary twin: row_number over the sorted distinct domain
-    "q_dict_encode" ->
-      """WITH dd AS (
-        |  SELECT DISTINCT event_type AS value FROM events
-        |  WHERE event_type IS NOT NULL),
-        |d AS (SELECT value,
-        |        CAST(row_number() OVER (ORDER BY value) - 1 AS BIGINT)
-        |          AS id
-        |      FROM dd),
-        |c AS (SELECT d.id AS event_type_id, CAST(COUNT(*) AS BIGINT) AS n
-        |      FROM events e JOIN d ON e.event_type = d.value
-        |      GROUP BY 1)
-        |SELECT c.event_type_id, c.n, d.value
-        |FROM c JOIN d ON d.id = c.event_type_id
-        |ORDER BY 1""".stripMargin,
-
-    // bitset twin: identical word/bit packing, bit_or fold, popcount
-    "q_bitset_distinct" ->
-      """WITH b AS (
-        |  SELECT event_type AS et, user_id // 63 AS w,
-        |    CAST(1 AS BIGINT) << CAST(user_id % 63 AS INT) AS m
-        |  FROM events),
-        |mw AS (SELECT et, w, bit_or(m) AS mask FROM b GROUP BY 1, 2)
-        |SELECT et, CAST(SUM(bit_count(mask)) AS BIGINT) AS n_distinct,
-        |  CAST(COUNT(*) AS BIGINT) AS n_words
-        |FROM mw GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // EWMA twin: list(... ORDER BY ts, id) + list_reduce is the same
-    // totally-ordered integer fold as Spark's sort_array + aggregate
-    "q_ewma" ->
-      """SELECT user_id,
-        |  CAST(COUNT(*) AS BIGINT) AS n_txn,
-        |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list(CAST(round(value*100) AS BIGINT)
-        |         ORDER BY epoch_us(ts), event_id)),
-        |    (a, b) -> (a + b) // 2) AS BIGINT) AS ewma_cents
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // overlap twin: the direct quadratic join the blocked form must
-    // reproduce exactly
-    // ANALYTIC twin: every interval here is exactly (lo, lo+7), so two
-    // intervals overlap iff |lo_x − lo_y| ≤ 7 and the pair count folds
-    // over the per-(key, day) histogram — C(n,2) same-day + n_d·n_d'
-    // for day gaps 1..7 — a (keys × days)-sized computation. The old
-    // direct quadratic join enumerated ~2.8e10 pairs at the 100× tier
-    // (25 nation keys × 600k intervals each) and never finished; this
-    // independent derivation hash-matches the engine's bucket-blocked
-    // enumeration at sf0.01/10×/100× (1.9 s at 100×).
-    "q_interval_overlap" ->
-      """WITH o AS (
-        |  SELECT CAST(c_nationkey AS BIGINT) AS key,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS lo
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |d AS MATERIALIZED (
-        |  SELECT key, lo, CAST(count(*) AS BIGINT) AS n FROM o GROUP BY 1, 2),
-        |same AS (
-        |  SELECT key, CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS c FROM d GROUP BY 1),
-        |crossd AS (
-        |  SELECT a.key, CAST(SUM(a.n * b.n) AS BIGINT) AS c
-        |  FROM d a JOIN d b ON a.key = b.key AND b.lo > a.lo AND b.lo <= a.lo + 7
-        |  GROUP BY 1)
-        |SELECT s.key, CAST(s.c + COALESCE(x.c, 0) AS BIGINT) AS n_pairs
-        |FROM same s LEFT JOIN crossd x ON s.key = x.key
-        |WHERE s.c + COALESCE(x.c, 0) > 0
-        |ORDER BY 1""".stripMargin,
-
-    // spatial twin: the direct quadratic distance self-join over the
-    // same integer plane embedding
-    // Grid-blocked twin (the engine's own 3×3-cell blocking, so the
-    // DuckDB side is an EQUALITY hash join instead of the quadratic
-    // inequality join that ran >1 h at 100×), contracted per id1.
-    // DEFAULT twin = the DIRECT quadratic join (ADVICE r11: the grid-
-    // blocked rewrite shared the engine's own blocking scheme at every
-    // tier, so a conceptual blocking error would have passed both
-    // sides unnoticed; at sf0.01 the quadratic form is cheap and fully
-    // independent). The grid-blocked form lives in
-    // [[scaledOracleOverrides]] for the 10x/100x close checks, where
-    // the quadratic join's ~2.8e10 candidate pairs never finish.
-    "q_spatial_join" ->
-      """WITH pts AS (
-        |  SELECT event_id AS id,
-        |    ((event_id % 1000003) * 2654435761) % 1000000 AS x,
-        |    ((event_id % 1000033) * 2246822519) % 1000000 AS y
-        |  FROM events WHERE event_id % 17 = 0),
-        |pairs AS (
-        |  SELECT a.id AS id1, b.id AS id2,
-        |    GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS cheb
-        |  FROM pts a JOIN pts b
-        |    ON a.id < b.id
-        |    AND ABS(a.x - b.x) <= 20000 AND ABS(a.y - b.y) <= 20000)
-        |SELECT id1, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(sum(cheb) AS BIGINT) AS cheb_sum,
-        |  CAST(min(cheb) AS BIGINT) AS cheb_min,
-        |  CAST(max(id2) AS BIGINT) AS id2_max
-        |FROM pairs GROUP BY id1 ORDER BY id1""".stripMargin,
-
-    // nearest-neighbor twin: quadratic argmin with the same
-    // (distance, id) tie-break
-    "q_spatial_nn" ->
-      """WITH pts AS (
-        |  SELECT event_id AS id,
-        |    ((event_id % 1000003) * 2654435761) % 1000000 AS x,
-        |    ((event_id % 1000033) * 2246822519) % 1000000 AS y
-        |  FROM events WHERE event_id % 17 = 0),
-        |cand AS (
-        |  SELECT a.id, b.id AS nn_id,
-        |    GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS cheb
-        |  FROM pts a JOIN pts b
-        |    ON a.id <> b.id
-        |    AND ABS(a.x - b.x) <= 20000 AND ABS(a.y - b.y) <= 20000),
-        |rk AS (SELECT *, row_number() OVER (
-        |    PARTITION BY id ORDER BY cheb, nn_id) AS rn FROM cand)
-        |SELECT id, nn_id, cheb FROM rk WHERE rn = 1 ORDER BY id""".stripMargin,
-
-    // best-F1 twin: the q_pr_curve CTEs + exact pico argmax, highest
-    // threshold on ties
-    "q_best_f1" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(SUM(lab) AS BIGINT) AS np
-        |        FROM sc GROUP BY s),
-        |cum AS (SELECT s,
-        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |        FROM bys),
-        |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos FROM bys),
-        |pts AS (
-        |  SELECT s AS threshold, tp, pp, n_pos,
-        |    CAST(2 * tp * 1000000000000 // (pp + n_pos) AS BIGINT)
-        |      AS f1_pico
-        |  FROM cum, t)
-        |SELECT threshold, tp, pp - tp AS fp, n_pos - tp AS fn, f1_pico
-        |FROM pts
-        |WHERE f1_pico = (SELECT MAX(f1_pico) FROM pts)
-        |ORDER BY threshold DESC LIMIT 1""".stripMargin,
-
-    "q_cost_threshold" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(SUM(lab) AS BIGINT) AS np
-        |        FROM sc GROUP BY s),
-        |cum AS (SELECT s,
-        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |        FROM bys),
-        |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
-        |        CAST(MAX(s) + 1 AS BIGINT) AS none_t FROM bys),
-        |pts AS (
-        |  SELECT s AS threshold, tp, pp, n_pos FROM cum, t
-        |  UNION ALL
-        |  SELECT none_t, 0, 0, n_pos FROM t),
-        |costs AS (
-        |  SELECT threshold, tp, pp - tp AS fp, n_pos - tp AS fn,
-        |    CAST((pp - tp) * 100 + (n_pos - tp) * 900 AS BIGINT)
-        |      AS cost_cents
-        |  FROM pts)
-        |SELECT threshold, tp, fp, fn, cost_cents
-        |FROM costs
-        |WHERE cost_cents = (SELECT MIN(cost_cents) FROM costs)
-        |ORDER BY threshold DESC LIMIT 1""".stripMargin,
-
-    // IVM twin: the FULL join recompute — matching hashes prove the
-    // delta algebra, they don't replay it
-    "q_ivm_join" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS nat,
-        |  CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT)
-        |    AS sum_cents
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_mannwhitney" ->
-      """WITH base AS (
-        |  SELECT o_orderstatus AS slice,
-        |    CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS grp,
-        |    CAST(round(o_totalprice*100) AS BIGINT) AS v
-        |  FROM orders),
-        |byval AS (
-        |  SELECT slice, v, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(SUM(grp) AS BIGINT) AS n1v
-        |  FROM base GROUP BY 1, 2),
-        |cums AS (
-        |  SELECT *, CAST(coalesce(SUM(n) OVER (PARTITION BY slice ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |    AS cum
-        |  FROM byval),
-        |agg AS (
-        |  SELECT slice, CAST(SUM(n1v) AS BIGINT) AS n1,
-        |    CAST(SUM(n - n1v) AS BIGINT) AS n2,
-        |    CAST(SUM(n1v * (2*cum + n + 1)) AS BIGINT) AS r1_x2,
-        |    CAST(SUM(CAST(n AS HUGEINT)*n*n - n) AS HUGEINT) AS ties
-        |  FROM cums GROUP BY 1),
-        |fin AS (
-        |  SELECT slice, n1, n2, r1_x2 - n1*(n1+1) AS u1_x2,
-        |    CAST(n1 AS HUGEINT) * n2
-        |      * (CAST(n1+n2 AS HUGEINT)*(n1+n2)*(n1+n2) - (n1+n2) - ties)
-        |      AS var_num,
-        |    CAST(3 AS HUGEINT)*(n1+n2)*(n1+n2-1) AS var_den
-        |  FROM agg)
-        |SELECT slice, n1, n2, u1_x2,
-        |  CASE WHEN n1 = 0 OR n2 = 0 OR var_num <= 0 THEN 0.0
-        |  ELSE CAST(u1_x2 - n1*n2 AS DOUBLE)
-        |    / sqrt(CAST(var_num AS DOUBLE) / CAST(var_den AS DOUBLE)) END AS z
-        |FROM fin ORDER BY slice""".stripMargin,
-
-    "q_kruskal" ->
-      """WITH base AS (
-        |  SELECT o_orderstatus AS slice, o_orderpriority AS g,
-        |    CAST(round(o_totalprice*100) AS BIGINT) AS v
-        |  FROM orders),
-        |byval AS (
-        |  SELECT slice, v, CAST(count(*) AS BIGINT) AS n
-        |  FROM base GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT *, 2 * CAST(coalesce(SUM(n) OVER (PARTITION BY slice
-        |      ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      0) AS BIGINT) + n + 1 AS ar2
-        |  FROM byval),
-        |pg AS (
-        |  SELECT pc.slice, pc.g, CAST(SUM(pc.c) AS BIGINT) AS ng,
-        |    CAST(SUM(CAST(pc.c AS HUGEINT) * r.ar2) AS HUGEINT) AS r2g
-        |  FROM (SELECT slice, g, v, CAST(count(*) AS BIGINT) AS c
-        |        FROM base GROUP BY 1, 2, 3) pc
-        |  JOIN ranked r ON pc.slice = r.slice AND pc.v = r.v
-        |  GROUP BY 1, 2),
-        |terms AS (
-        |  SELECT slice, ng,
-        |    CAST(r2g * r2g * 3000000 // CAST(ng AS HUGEINT) AS HUGEINT)
-        |      AS term
-        |  FROM pg),
-        |tie AS (
-        |  SELECT slice, CAST(SUM(CAST(n AS HUGEINT)*n*n - n) AS HUGEINT)
-        |    AS ties
-        |  FROM ranked GROUP BY 1),
-        |agg AS (
-        |  SELECT slice, CAST(count(*) AS BIGINT) AS k,
-        |    CAST(SUM(ng) AS BIGINT) AS n_tot,
-        |    CAST(SUM(term) AS HUGEINT) AS s3m
-        |  FROM terms GROUP BY 1),
-        |fin AS (
-        |  SELECT a.slice, a.k, a.n_tot,
-        |    greatest(CAST(a.s3m // (CAST(a.n_tot AS HUGEINT)*(a.n_tot+1))
-        |      - 3000000*(a.n_tot+1) AS BIGINT), 0) AS h_nn,
-        |    CAST(a.n_tot AS HUGEINT)*a.n_tot*a.n_tot - a.n_tot AS cube_n,
-        |    CAST(a.n_tot AS HUGEINT)*a.n_tot*a.n_tot - a.n_tot - t.ties
-        |      AS corr_den
-        |  FROM agg a JOIN tie t ON a.slice = t.slice)
-        |SELECT slice, k, n_tot,
-        |  CASE WHEN corr_den <= 0 THEN 0 ELSE h_nn END AS h_ppm,
-        |  CASE WHEN corr_den <= 0 THEN 0
-        |    ELSE CAST(CAST(h_nn AS HUGEINT) * cube_n // corr_den AS BIGINT)
-        |  END AS h_corr_ppm
-        |FROM fin ORDER BY slice""".stripMargin,
-
-    "q_hhi" ->
-      """WITH per AS (
-        |  SELECT CAST(s_nationkey AS BIGINT) AS grp, l_suppkey AS p,
-        |    CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT)) AS HUGEINT)
-        |      AS x
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |agg AS (
-        |  SELECT grp, CAST(count(*) AS BIGINT) AS n_participants,
-        |    CAST(SUM(x) AS HUGEINT) AS tot, CAST(SUM(x*x) AS HUGEINT) AS sq
-        |  FROM per GROUP BY 1),
-        |fin AS (
-        |  SELECT grp, n_participants, CAST(tot AS BIGINT) AS total_cents,
-        |    CASE WHEN tot <= 0 THEN 0
-        |      ELSE CAST(1000000 * sq // (tot * tot) AS BIGINT) END AS hhi
-        |  FROM agg)
-        |SELECT grp, n_participants, total_cents, hhi AS hhi_ppm,
-        |  CASE WHEN n_participants <= 1 THEN 1000000
-        |    WHEN hhi * n_participants <= 1000000 THEN 0
-        |    ELSE (hhi * n_participants - 1000000) // (n_participants - 1)
-        |  END AS hhi_norm_ppm,
-        |  CASE WHEN hhi <= 0 THEN 0 ELSE 1000000000 // hhi END
-        |    AS eff_n_milli
-        |FROM fin ORDER BY grp""".stripMargin,
-
-    "q_linkpred" ->
-      """WITH items AS MATERIALIZED (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |freq AS MATERIALIZED (
-        |  SELECT p FROM items GROUP BY p
-        |  HAVING count(*) >= 2 AND count(*) <= 1000),
-        |kept AS MATERIALIZED (SELECT i.o, i.p FROM items i JOIN freq USING (p)),
-        |edges AS MATERIALIZED (
-        |  SELECT a.p AS p1, b.p AS p2
-        |  FROM kept a JOIN kept b ON a.o = b.o AND a.p < b.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS MATERIALIZED (
-        |  SELECT p, CAST(count(*) AS BIGINT) AS deg FROM (
-        |    SELECT p1 AS p FROM edges UNION ALL SELECT p2 FROM edges) u
-        |  GROUP BY 1 HAVING count(*) <= 60),
-        |adj AS MATERIALIZED (
-        |  SELECT e.x, e.nbr FROM (
-        |    SELECT p1 AS x, p2 AS nbr FROM edges
-        |    UNION ALL SELECT p2, p1 FROM edges) e
-        |  JOIN deg dx ON dx.p = e.x JOIN deg dn ON dn.p = e.nbr),
-        |wedge AS MATERIALIZED (
-        |  SELECT l.x AS a, r.x AS c, CAST(count(*) AS BIGINT) AS cn
-        |  FROM adj l JOIN adj r ON l.nbr = r.nbr AND l.x < r.x
-        |  GROUP BY 1, 2),
-        |cand AS MATERIALIZED (
-        |  SELECT w.* FROM wedge w
-        |  LEFT JOIN edges e ON w.a = e.p1 AND w.c = e.p2
-        |  WHERE e.p1 IS NULL)
-        |SELECT cand.a AS p1, cand.c AS p2, cn, da.deg AS deg_a,
-        |  dc.deg AS deg_c,
-        |  CAST(1000000 * cn // (da.deg + dc.deg - cn) AS BIGINT)
-        |    AS jaccard_ppm
-        |FROM cand JOIN deg da ON da.p = cand.a JOIN deg dc ON dc.p = cand.c
-        |ORDER BY cn DESC, jaccard_ppm DESC, p1, p2 LIMIT 20""".stripMargin,
-
-    "q_ndcg" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(label AS BIGINT) AS label, list_transform(
-        |    embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, label, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |q AS (SELECT vec_id AS q_id, label AS q_label, svec AS q_svec,
-        |    norm2 AS q_norm2 FROM n WHERE vec_id < 10),
-        |sc AS (
-        |  SELECT q.q_id, q.q_label, n.vec_id, n.label AS h_label,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> q.q_svec[i]*n.svec[i])),
-        |      (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS
-        |        DOUBLE))) AS cos
-        |  FROM n JOIN q ON n.vec_id <> q.q_id),
-        |r AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cos DESC, vec_id) AS INT) AS rnk
-        |  FROM sc),
-        |top AS (SELECT * FROM r WHERE rnk <= 10),
-        |dcg AS (
-        |  SELECT q_id, q_label,
-        |    CAST(SUM(CASE WHEN h_label = q_label THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_rel_topk,
-        |    CAST(SUM(CASE WHEN h_label = q_label THEN
-        |      ([1000000, 630929, 500000, 430676, 386852,
-        |        356207, 333333, 315464, 301029, 289064])[rnk]
-        |      ELSE 0 END) AS BIGINT) AS dcg_fp
-        |  FROM top GROUP BY 1, 2),
-        |lc AS (SELECT CAST(label AS BIGINT) AS q_label,
-        |    CAST(count(*) AS BIGINT) AS n_label FROM embeddings GROUP BY 1),
-        |fin AS (
-        |  SELECT d.q_id, d.q_label, lc.n_label - 1 AS n_rel, d.n_rel_topk,
-        |    d.dcg_fp,
-        |    CASE WHEN lc.n_label - 1 <= 0 THEN 0
-        |      ELSE ([1000000, 1630929, 2130929, 2561605, 2948457,
-        |        3304664, 3637997, 3953461, 4254490, 4543554])
-        |        [CAST(least(lc.n_label - 1, 10) AS INT)] END AS idcg_fp
-        |  FROM dcg d JOIN lc ON d.q_label = lc.q_label)
-        |SELECT q_id, q_label, n_rel, n_rel_topk, dcg_fp,
-        |  CASE WHEN idcg_fp <= 0 THEN 0
-        |    ELSE CAST(1000000 * dcg_fp // idcg_fp AS BIGINT) END AS ndcg_ppm
-        |FROM fin ORDER BY q_id""".stripMargin,
-
-    "q_ann_recall" ->
-      """WITH v AS (
-        |  SELECT vec_id, label, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, label, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2
-        |  FROM n WHERE vec_id < 10),
-        |bsc AS (
-        |  SELECT q.q_id, n.vec_id,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> q.q_svec[i]*n.svec[i])),
-        |      (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS
-        |        DOUBLE))) AS cos
-        |  FROM n JOIN q ON n.vec_id <> q.q_id),
-        |brute AS (
-        |  SELECT q_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos DESC, vec_id) AS rnk FROM bsc) WHERE rnk <= 3),
-        |cent0 AS (
-        |  SELECT label, i, SUM(svec[i]) AS s
-        |  FROM n, range(1,65) t(i) GROUP BY label, i),
-        |cent AS (
-        |  SELECT label, list(s ORDER BY i) AS cvec FROM cent0
-        |  GROUP BY label),
-        |centn AS (
-        |  SELECT label, cvec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(cvec, x -> x*x)), (a,b) -> a+b) AS cnorm2
-        |  FROM cent),
-        |routed0 AS (
-        |  SELECT q.q_id, q.q_svec, q.q_norm2, c.label,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> q.q_svec[i]*c.cvec[i])),
-        |      (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(q.q_norm2 AS DOUBLE)) * sqrt(CAST(c.cnorm2 AS
-        |        DOUBLE))) AS ccos
-        |  FROM q CROSS JOIN centn c),
-        |routed AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id
-        |      ORDER BY ccos DESC, label) AS crnk
-        |    FROM routed0) WHERE crnk = 1),
-        |isc AS (
-        |  SELECT r.q_id, n.vec_id,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> r.q_svec[i]*n.svec[i])),
-        |      (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(r.q_norm2 AS DOUBLE)) * sqrt(CAST(n.norm2 AS
-        |        DOUBLE))) AS cos
-        |  FROM n JOIN routed r ON n.label = r.label AND n.vec_id <> r.q_id),
-        |approx AS (
-        |  SELECT q_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id
-        |      ORDER BY cos DESC, vec_id) AS rnk FROM isc) WHERE rnk <= 3)
-        |SELECT b.q_id,
-        |  CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_hit,
-        |  CAST(1000000 * SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0
-        |    END) // 3 AS BIGINT) AS recall_ppm
-        |FROM brute b LEFT JOIN approx a
-        |  ON b.q_id = a.q_id AND b.vec_id = a.vec_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_cochran" ->
-      """WITH base AS (
-        |  SELECT o_orderstatus AS slice, o_orderkey AS item,
-        |    CASE WHEN CAST(round(o_totalprice*100) AS BIGINT) > 15000000
-        |      THEN 1 ELSE 0 END AS r1,
-        |    CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-        |      THEN 1 ELSE 0 END AS r2,
-        |    CASE WHEN month(o_orderdate) <= 6 THEN 1 ELSE 0 END AS r3
-        |  FROM orders),
-        |lng AS (
-        |  SELECT slice, item, 'r_bigticket' AS rater, r1 AS x FROM base
-        |  UNION ALL SELECT slice, item, 'r_priority', r2 FROM base
-        |  UNION ALL SELECT slice, item, 'r_h1season', r3 FROM base),
-        |byr AS (
-        |  SELECT slice, CAST(count(*) AS BIGINT) AS k,
-        |    CAST(SUM(cj) AS BIGINT) AS t,
-        |    CAST(SUM(CAST(cj AS HUGEINT)*cj) AS HUGEINT) AS sc2
-        |  FROM (SELECT slice, rater, CAST(SUM(x) AS BIGINT) AS cj
-        |        FROM lng GROUP BY 1, 2) c GROUP BY 1),
-        |byi AS (
-        |  SELECT slice, CAST(count(*) AS BIGINT) AS n_items,
-        |    CAST(SUM(CAST(ri AS HUGEINT)*ri) AS HUGEINT) AS sr2
-        |  FROM (SELECT slice, item, CAST(SUM(x) AS BIGINT) AS ri
-        |        FROM lng GROUP BY 1, 2) i GROUP BY 1),
-        |fin AS (
-        |  SELECT r.slice, r.k, i.n_items, r.t,
-        |    (r.k - 1) * (r.k * r.sc2 - CAST(r.t AS HUGEINT) * r.t) AS num,
-        |    CAST(r.k AS HUGEINT) * r.t - i.sr2 AS den
-        |  FROM byr r JOIN byi i ON r.slice = i.slice)
-        |SELECT slice, k, n_items, t, k - 1 AS df,
-        |  CASE WHEN den <= 0 THEN 0
-        |    ELSE CAST(1000 * num // den AS BIGINT) END AS q_milli
-        |FROM fin ORDER BY slice""".stripMargin,
-
-    "q_kendall_w" ->
-      """WITH per AS (
-        |  SELECT l_suppkey AS item,
-        |    CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT)
-        |      AS rev,
-        |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
-        |    CAST(count(DISTINCT l_partkey) AS BIGINT) AS npart
-        |  FROM lineitem GROUP BY 1),
-        |lng AS (
-        |  SELECT item, 'rev' AS rater, rev AS v FROM per
-        |  UNION ALL SELECT item, 'qty', qty FROM per
-        |  UNION ALL SELECT item, 'npart', npart FROM per),
-        |byval AS (
-        |  SELECT rater, v, CAST(count(*) AS BIGINT) AS t
-        |  FROM lng GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT *, 2 * CAST(coalesce(SUM(t) OVER (PARTITION BY rater
-        |      ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      0) AS BIGINT) + t + 1 AS ar2
-        |  FROM byval),
-        |itemsums AS (
-        |  SELECT l.item, CAST(SUM(r.ar2) AS BIGINT) AS r2i
-        |  FROM lng l JOIN ranked r ON l.rater = r.rater AND l.v = r.v
-        |  GROUP BY 1),
-        |tie AS (
-        |  SELECT CAST(coalesce(SUM(CAST(t AS HUGEINT)*t*t - t), 0)
-        |    AS HUGEINT) AS tsum FROM ranked),
-        |base AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_items,
-        |    CAST(SUM(CAST(r2i AS HUGEINT)*r2i) AS HUGEINT) AS s2
-        |  FROM itemsums),
-        |fin AS (
-        |  SELECT n_items,
-        |    3*s2 - CAST(27 AS HUGEINT)*n_items*(n_items+1)*(n_items+1)
-        |      AS num,
-        |    CAST(9 AS HUGEINT)
-        |      * (CAST(n_items AS HUGEINT)*n_items*n_items - n_items)
-        |      - 3*tsum AS den
-        |  FROM base, tie)
-        |SELECT CAST(3 AS BIGINT) AS m, n_items,
-        |  CASE WHEN den <= 0 THEN 0
-        |    ELSE CAST(num * 1000000 // den AS BIGINT) END AS w_ppm,
-        |  CASE WHEN den <= 0 THEN 0
-        |    ELSE CAST(num * 1000000 * 3 * (n_items - 1) // den AS BIGINT)
-        |  END AS chi2_ppm
-        |FROM fin""".stripMargin,
-
-    "q_kripp" ->
-      """WITH base AS (
-        |  SELECT o_orderstatus AS slice, o_orderkey AS item,
-        |    CASE WHEN CAST(round(o_totalprice*100) AS BIGINT) < 5000000
-        |      THEN 'low'
-        |      WHEN CAST(round(o_totalprice*100) AS BIGINT) < 15000000
-        |      THEN 'mid' ELSE 'high' END AS c1,
-        |    CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 'high'
-        |      WHEN o_orderpriority = '3-MEDIUM' THEN 'mid'
-        |      ELSE 'low' END AS c2,
-        |    CASE WHEN month(o_orderdate) <= 4 THEN 'low'
-        |      WHEN month(o_orderdate) <= 8 THEN 'mid'
-        |      ELSE 'high' END AS c3
-        |  FROM orders),
-        |lng AS (
-        |  SELECT slice, item, c1 AS cat FROM base
-        |  UNION ALL SELECT slice, item, c2 FROM base
-        |  UNION ALL SELECT slice, item, c3 FROM base WHERE item % 3 <> 0),
-        |cells AS (
-        |  SELECT slice, item, cat, CAST(count(*) AS BIGINT) AS ncu
-        |  FROM lng GROUP BY 1, 2, 3),
-        |units AS (
-        |  SELECT slice, item, CAST(SUM(ncu) AS BIGINT) AS mu,
-        |    CAST(SUM(ncu*ncu) AS BIGINT) AS snc2
-        |  FROM cells GROUP BY 1, 2 HAVING SUM(ncu) >= 2),
-        |obs AS (
-        |  SELECT slice, CAST(count(*) AS BIGINT) AS n_items,
-        |    CAST(SUM((2 // (mu - 1)) * (mu*mu - snc2)) AS BIGINT)
-        |      AS o_scaled
-        |  FROM units GROUP BY 1),
-        |marg AS (
-        |  SELECT slice, CAST(count(*) AS BIGINT) AS n_cats,
-        |    CAST(SUM(nc) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(nc AS HUGEINT)*nc) AS HUGEINT) AS msnc2
-        |  FROM (SELECT c.slice, c.cat, CAST(SUM(c.ncu) AS BIGINT) AS nc
-        |        FROM cells c JOIN units u
-        |          ON c.slice = u.slice AND c.item = u.item
-        |        GROUP BY 1, 2) mm GROUP BY 1),
-        |fin AS (
-        |  SELECT o.slice, o.n_items, m.n, m.n_cats, o.o_scaled,
-        |    CAST(m.n AS HUGEINT) * m.n - m.msnc2 AS de_num
-        |  FROM obs o JOIN marg m ON o.slice = m.slice)
-        |SELECT slice, n_items, n, n_cats,
-        |  CASE WHEN de_num <= 0 THEN 1000000
-        |    ELSE 1000000 - CAST(1000000 * CAST(n - 1 AS HUGEINT) * o_scaled
-        |      // (2 * de_num) AS BIGINT) END AS alpha_ppm
-        |FROM fin ORDER BY slice""".stripMargin,
-
-    "q_oov" ->
-      """WITH toks AS (
-        |  SELECT source, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |ps AS (
-        |  SELECT source, w, CAST(count(*) AS BIGINT) AS f
-        |  FROM toks WHERE length(w) > 0 GROUP BY 1, 2),
-        |vocab AS (
-        |  SELECT w FROM (
-        |    SELECT w, CAST(SUM(f) AS BIGINT) AS cf FROM ps GROUP BY 1) c
-        |  ORDER BY cf DESC, w LIMIT 2000)
-        |SELECT source, CAST(SUM(f) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CASE WHEN v.w IS NULL THEN f ELSE 0 END) AS BIGINT)
-        |    AS oov_tokens,
-        |  CAST(SUM(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS oov_types,
-        |  CASE WHEN SUM(f) = 0 THEN 0
-        |    ELSE CAST(1000000 * SUM(CASE WHEN v.w IS NULL THEN f ELSE 0 END)
-        |      // SUM(f) AS BIGINT) END AS oov_ppm
-        |FROM ps LEFT JOIN vocab v ON ps.w = v.w
-        |GROUP BY 1 ORDER BY 1""".stripMargin
-  )
 }

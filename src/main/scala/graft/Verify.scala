@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for an external DuckDB compare (tools/check.py), plus a
   * HEAD_SHA provenance stamp when run inside a git checkout.
   *
@@ -26,13 +26,13 @@ object Verify {
     // Optional trailing args filter to named queries (dev loop); the
     // driver's two-arg invocation still dumps everything.
     val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
-    selected.foreach { case (name, fn) =>
-      try Harness.drive(spark, s"verify-$name", timeoutSec) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      if (only.isEmpty) SparkEntry.registry
+      else SparkEntry.registry.filter(d => only.contains(d.name))
+    selected.foreach { d =>
+      try Harness.drive(spark, s"verify-${d.name}", timeoutSec) {
+        d.build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${d.name}")
       } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,18 +50,16 @@ object Verify {
     // Tier-switched twins (ADVICE r11): scaled close dumps swap in the
     // resource-feasible rewrites; the graded small tiers keep the
     // fully independent defaults.
-    val oracles =
-      if (sys.env.get("SPARK_GRAFT_SCALED_TWINS").contains("1"))
-        SparkEntry.oracleSql ++ SparkEntry.scaledOracleOverrides
-      else SparkEntry.oracleSql
-    val json = oracles
-      // the learned-IVF twin reads the cell table the Spark query
-      // exported; the path depends on the sf dir, so patch it in here
-      .map { case (k, v) =>
-        (k, v.replace("__GRAFT_CELLS__", SparkEntry.cellsExportPath(sfDir))
-          .replace("__GRAFT_SEMCELLS__", SparkEntry.semCellsExportPath(sfDir)))
-      }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val scaled = sys.env.get("SPARK_GRAFT_SCALED_TWINS").contains("1")
+    val json = SparkEntry.registry
+      .map { d =>
+        val sql = if (scaled) d.scaledOracle.getOrElse(d.oracle) else d.oracle
+        // the learned-IVF twin reads the cell table the Spark query
+        // exported; the path depends on the sf dir, so patch it in here
+        val patched = sql.replace("__GRAFT_CELLS__", SparkEntry.cellsExportPath(sfDir))
+          .replace("__GRAFT_SEMCELLS__", SparkEntry.semCellsExportPath(sfDir))
+        s"${q(d.name)}: ${q(patched)}"
+      }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     // The scratch tables (q_mart_*/q_src_orc live marts, ORC files…)

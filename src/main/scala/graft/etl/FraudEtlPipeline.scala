@@ -71,10 +71,21 @@ object FraudEtlPipeline {
     * replays the SAME batch: the SCD2 re-merge is a fixpoint (the
     * current view already equals the snapshot → zero detects) and the
     * atomic sink replaces the day's own partitions — the day converges
-    * instead of double-applying. */
+    * instead of double-applying.
+    *
+    * The history is replaced by renames only: `<history>` → `.prev`,
+    * `.next` → `<history>`, then `.prev` is deleted. Each run first
+    * repairs an interrupted swap, so a crash at any point leaves a whole
+    * history to merge into, never a half-deleted one or none at all. */
   def runDaily(spark: SparkSession, layout: Layout,
                clients: DataFrame, accounts: DataFrame,
                publish: (DataFrame, String, String) => Unit = appendPublish): Option[String] = {
+    val histDir = Paths.get(layout.historyPath)
+    val prevDir = Paths.get(layout.historyPath + ".prev")
+    if (Files.exists(prevDir)) {
+      if (Files.exists(histDir)) deleteTree(prevDir) // crash before the delete
+      else Files.move(prevDir, histDir) // crash between the two renames
+    }
     DelimitedSource.discoverBatch(layout.dropDir, ".txt").map { txnFile =>
       val batchId = DelimitedSource.batchIdFromFilename(txnFile).getOrElse(
         throw new IllegalArgumentException(s"no batch id in $txnFile"))
@@ -92,20 +103,16 @@ object FraudEtlPipeline {
 
       // --- SCD2 terminal history (data_to_db.py:282-292)
       val history =
-        if (Files.exists(Paths.get(layout.historyPath)))
+        if (Files.exists(histDir))
           Scd2.merge(spark.read.parquet(layout.historyPath), terminals,
             "terminal_id", termAttrs, batchDate)
         else Scd2.init(terminals, batchDate)
-      // state is parquet: land the new version, then reload
-      val tmp = layout.historyPath + ".next"
-      history.write.mode("overwrite").parquet(tmp)
-      val histDir = Paths.get(layout.historyPath)
-      if (Files.exists(histDir)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(histDir).iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists(_))
-      }
-      Files.move(Paths.get(tmp), histDir)
+      // state is parquet: land the new version, swap it in, then reload
+      val tmp = Paths.get(layout.historyPath + ".next")
+      history.write.mode("overwrite").parquet(tmp.toString)
+      if (Files.exists(histDir)) Files.move(histDir, prevDir)
+      Files.move(tmp, histDir)
+      deleteTree(prevDir)
       val currentTerminals = Scd2.currentView(spark.read.parquet(layout.historyPath))
 
       // --- enrich transactions into the rule input shape
@@ -138,4 +145,10 @@ object FraudEtlPipeline {
       batchDate
     }
   }
+
+  private def deleteTree(dir: java.nio.file.Path): Unit =
+    if (Files.exists(dir)) {
+      import scala.jdk.CollectionConverters._
+      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    }
 }

@@ -65,12 +65,7 @@ object ConnectedComponents {
 
     // Shuffles sized to the graph, not the corpus (same rationale and
     // hang-avoidance as lshClusters: fixed shapes, classic scheduling).
-    val parts = math.max(1L, math.min(nEdges / 100000L, 4096L)).toString
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try GraphStats.withLoopConf(spark, nEdges, keepAqe = false) { _ =>
       // Terminal-state test, checked directly instead of waiting for a
       // whole extra confirming round: the edge set is a disjoint star
       // forest iff no root is also a child (no v appears as a u) AND
@@ -122,10 +117,6 @@ object ConnectedComponents {
         .localCheckpoint(true)
       edges.unpersist(false)
       result
-    } finally {
-      canonical.unpersist(false)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+    } finally canonical.unpersist(false)
   }
 }

@@ -647,22 +647,15 @@ object Dedup {
     val nEdges = edges.count() // materializes the cache; sizes the loop
 
     // The candidate graph is orders of magnitude smaller than the
-    // corpus: the iteration's shuffles are sized to the GRAPH (one
-    // partition per ~100k edges), not to the corpus's partitioning —
-    // at local scale that makes each round a couple of single-task
-    // stages; on a billion-edge graph it stays fully distributed. The
-    // conf override is scoped: every action below runs inside this
-    // operator, and the returned frame is already materialized.
-    val parts = math.max(1L, math.min(nEdges / 100000L, 4096L)).toString
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    // AQE has nothing to re-plan in the loop (partitioning is already
-    // sized to the graph, shapes are fixed), and its stage-event loop
-    // has a hang window when session confs shift under it mid-session —
-    // classic DAG scheduling is both safer and faster here.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // corpus: the iteration's shuffles are sized to the GRAPH, not to
+    // the corpus's partitioning. AQE stays off: it has nothing to
+    // re-plan in the loop (partitioning is already sized to the graph,
+    // shapes are fixed), and its stage-event loop has a hang window
+    // when session confs shift under it mid-session — classic DAG
+    // scheduling is both safer and faster here. The scope is safe
+    // because every action below runs inside this operator and the
+    // returned frame is already materialized.
+    GraphStats.withLoopConf(spark, nEdges, keepAqe = false) { _ =>
       // Fused init: round 1 from identity labels is exactly
       // min(node, min neighbor) — computed as ONE aggregation, no join.
       // `persisted` tracks the actual cached frame (unpersist on a
@@ -699,21 +692,15 @@ object Dedup {
       // resolves any diameter in O(log^2) rounds with the identical
       // min-label contract — the documented upgrade path, taken
       // automatically instead of asking the caller to retune maxIter.
-      if (changed > 0) {
-        edges.unpersist(false)
-        persisted.unpersist(false)
-        return ConnectedComponents.components(pairs)
-      }
-      // materialize once and cut lineage: the loop's named persists
-      // can then be released deterministically instead of living
-      // until session end (result blocks free on GC of this frame)
-      val result = labels.select(col("node"), col("label")).localCheckpoint(true)
+      // Otherwise materialize once and cut lineage: the loop's named
+      // persists can then be released deterministically instead of
+      // living until session end (result blocks free on GC of this frame)
+      val result =
+        if (changed > 0) None
+        else Some(labels.select(col("node"), col("label")).localCheckpoint(true))
       edges.unpersist(false)
       persisted.unpersist(false)
-      result
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      result.getOrElse(ConnectedComponents.components(pairs))
     }
   }
 

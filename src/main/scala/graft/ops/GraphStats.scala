@@ -21,14 +21,14 @@ import org.apache.spark.sql.functions._
 object GraphStats {
 
   /** Scoped loop configuration shared by the iterative operators
-    * (PageRank / BFS / SSSP / k-core), mirroring
-    * [[Dedup.minLabelClosure]]'s measured recipe: the candidate graph
-    * is orders of magnitude smaller than the corpus, so the loop's
-    * shuffles are sized to the GRAPH (one partition per ~100k edges,
-    * capped) rather than the session's corpus partitioning. AQE
-    * defaults OFF for the loop — but r15's 10x-zipf tier measurements
-    * flipped it ON (`keepAqe`) for every loop that re-shuffles the
-    * full (skewed) edge list per round: kCore 19.0→8.4 s, BFS
+    * (PageRank / BFS / SSSP / k-core, [[Dedup.minLabelClosure]],
+    * [[ConnectedComponents.components]]): the candidate graph is orders
+    * of magnitude smaller than the corpus, so the loop's shuffles are
+    * sized to the GRAPH (one partition per ~100k edges, capped) rather
+    * than the session's corpus partitioning. AQE defaults OFF for the
+    * loop — but r15's 10x-zipf tier measurements flipped it ON
+    * (`keepAqe`) for every loop that re-shuffles the full (skewed)
+    * edge list per round: kCore 19.0→8.4 s, BFS
     * 6.4→4.9, SSSP 5.3→4.9, PageRank 7.0→6.3 at 10x, with sf0.1
     * at-or-better — AQE's skew splitting beats its per-job replanning
     * latency as soon as the graph carries hot keys. Scale-adaptive by
@@ -36,9 +36,9 @@ object GraphStats {
     * count, not a constant. Every frame the loop returns is eagerly
     * checkpointed inside the scope, so restored session conf only
     * governs the caller's presentation sort. */
-  private def withLoopConf[T](spark: org.apache.spark.sql.SparkSession,
-                              nEdges: Long,
-                              keepAqe: Boolean = false)(body: Int => T): T = {
+  private[graft] def withLoopConf[T](spark: org.apache.spark.sql.SparkSession,
+                                     nEdges: Long,
+                                     keepAqe: Boolean = false)(body: Int => T): T = {
     // A defaultParallelism FLOOR was tried here in r15 (hypothesis: the
     // edge-derived count serializes small-graph loops) and REVERTED on
     // measurement: at sf0.1 (~12 loop partitions) flooring to 32 made

@@ -17,18 +17,12 @@ object ReportMart {
     * this batch and leaves every other partition untouched, so a
     * re-run of a failed day converges instead of double-appending —
     * the retry semantics a daily mart needs. (Static overwrite mode
-    * would truncate the whole table; the conf scope is per-write.) */
-  def publishDay(mart: DataFrame, path: String): Unit = {
-    val spark = mart.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try mart.write.mode("overwrite")
+    * would truncate the whole table. The mode is a writer option, not
+    * a session conf, so writes that overlap in one session cannot see
+    * each other's mode.) */
+  def publishDay(mart: DataFrame, path: String): Unit =
+    mart.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("rule", "batch_date").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
 
   /** Exactly-once publish for a STREAMING micro-batch (F6): the batch
     * id is the idempotency token Structured Streaming hands every
@@ -39,19 +33,11 @@ object ReportMart {
     * converges instead of double-appending. `rule` stays the leading
     * partition column, so per-rule reads prune exactly as with
     * [[append]]. */
-  def publishBatch(mart: DataFrame, path: String, batchId: Long): Unit = {
-    val spark = mart.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try mart
+  def publishBatch(mart: DataFrame, path: String, batchId: Long): Unit =
+    mart
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-      .write.mode("overwrite")
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("rule", "batch_id").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

@@ -109,7 +109,8 @@ class LifecycleSpec extends SparkSpec {
       .map(r => r.schema.fieldNames.sorted.toSeq.map(f => String.valueOf(r.get(r.fieldIndex(f)))))
 
   test("5-day pipeline with day-3 kill+rerun and day-4 erasure ≡ crash-free lane") {
-    // --- lane 1: crash on day 3 between mart stage and commit; erase after day 4
+    // --- lane 1: crash on day 2 inside the history swap and on day 3
+    // between mart stage and commit; erase after day 4
     val root1 = Files.createTempDirectory("graft_lc1")
     val drop1 = Files.createDirectory(root1.resolve("drop"))
     val layout1 = Layout(drop1.toString, root1.resolve("archive").toString,
@@ -132,6 +133,15 @@ class LifecycleSpec extends SparkSpec {
         // replaces the day's own (empty so far) partitions
         assert(FraudEtlPipeline.runDaily(spark, layout1, clients, accounts,
           FraudEtlPipeline.atomicPublish).contains("2021-03-03"))
+      } else if (day == "02032021") {
+        // crash inside the history swap, after `<history>` → `.prev` and
+        // before `.next` → `<history>`: the rerun must merge into the
+        // moved-aside history, not re-init it from this day's snapshot
+        val prev = root1.resolve("hist.prev")
+        Files.move(root1.resolve("hist"), prev)
+        assert(FraudEtlPipeline.runDaily(spark, layout1, clients, accounts,
+          FraudEtlPipeline.atomicPublish).contains("2021-03-02"))
+        assert(!Files.exists(prev))
       } else {
         assert(FraudEtlPipeline.runDaily(spark, layout1, clients, accounts,
           FraudEtlPipeline.atomicPublish).isDefined)

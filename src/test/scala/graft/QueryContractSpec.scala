@@ -96,8 +96,9 @@ class QueryContractSpec extends SparkSpec {
     // Since r6 there are NO allowed holes: q_approx_stats (the last
     // rows-only query) now emits exact+verdict columns both engines
     // agree on, so every query key must have oracle SQL.
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(noOracle.isEmpty,
-      s"queries missing oracle SQL: ${noOracle.mkString(", ")}")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    val blank = SparkEntry.registry.filter(d =>
+      d.oracle.trim.isEmpty || d.scaledOracle.exists(_.trim.isEmpty)).map(_.name)
+    assert(blank.isEmpty, s"queries with blank oracle SQL: ${blank.mkString(", ")}")
   }
 }

@@ -7,9 +7,9 @@ The layout/TZ determinism sweeps only prove what they cover; a query
 added AFTER a sweep ran would ship unproven on those axes without
 anyone noticing. This check makes that impossible to miss at round
 close: it extracts the query list from SparkEntry.scala AT HEAD (the
-`"name" -> ((` entries of the `queries` map — the same set graft.Verify
-dumps) and FAILS unless every query has a non-empty parquet dump in
-EVERY given sweep dir. Run it on each sweep dir after compare_runs.py;
+`QueryDef("name"` entries of `SparkEntry.registry` — the same set
+graft.Verify dumps) and FAILS unless every query has a non-empty
+parquet dump in EVERY given sweep dir. Run it on each sweep dir after compare_runs.py;
 rc != 0 means the sweep is stale and must be re-run at HEAD.
 
 HERMETICITY (VERDICT r9 #2): each dir must also carry a HEAD_SHA stamp
@@ -31,7 +31,7 @@ ENTRY = os.path.join(HERE, "..", "src", "main", "scala", "graft", "SparkEntry.sc
 
 def head_queries():
     src = open(ENTRY, encoding="utf-8").read()
-    names = re.findall(r'"([A-Za-z0-9_]+)"\s*->\s*\(\(', src)
+    names = re.findall(r'QueryDef\("([A-Za-z0-9_]+)"', src)
     if len(names) < 100:
         sys.exit(f"sweep_check: only {len(names)} queries parsed from "
                  f"SparkEntry.scala — extraction regex is stale, fix it")
