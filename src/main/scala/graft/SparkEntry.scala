@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -71,6 +71,15 @@ object SparkEntry {
   private def scratchDir(name: String): String =
     sys.props.getOrElse("graft.scratch.dir",
       System.getProperty("java.io.tmpdir")) + "/" + name
+
+  /** [[scratchDir]] emptied: the query rebuilds its live table there
+    * from nothing on every run. */
+  private def freshScratch(s: SparkSession, name: String): String = {
+    val out = scratchDir(name)
+    val p = new org.apache.hadoop.fs.Path(out)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    out
+  }
 
   /** One entry per implemented operator from SURVEY.md §2: its Spark
     * plan next to its DuckDB twin. Lazy because the twins read the
@@ -998,7 +1007,7 @@ object SparkEntry {
       // which is the same single IEEE division on both engines. The
       // 64-bit phash itself is never materialized here (bit tables
       // instead), dodging cross-engine signed-shift semantics.
-      oracle = """WITH RECURSIVE base AS (
+      oracle = s"""WITH RECURSIVE base AS (
         |  SELECT i AS media_id, i AS src FROM range(500) t(i)
         |  UNION ALL
         |  SELECT i + 10000 AS media_id, i AS src FROM range(500) t(i) WHERE i % 50 = 0),
@@ -1012,14 +1021,7 @@ object SparkEntry {
         |  SELECT media_id, payload, length(payload) AS len,
         |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma
         |  FROM medias),
-        |scan AS (
-        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
-        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
-        |  FROM m2
-        |  UNION ALL
-        |  SELECT media_id, payload, len, n_luma, i + 1,
-        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
-        |  FROM scan WHERE i + 1 < n_luma),
+        |$sqlLumaScan,
         |luma AS (SELECT media_id, i, acc % 256 AS v FROM scan),
         |stats AS (
         |  SELECT media_id, count(*) AS n, CAST(SUM(v) AS BIGINT) AS s
@@ -1061,7 +1063,7 @@ object SparkEntry {
         .orderBy(col("media_id")),
       // G2 twin: decoder replay (same recursive CTE as q_phash_dups,
       // without the dup injection), then per-media feature aggregates.
-      oracle = """WITH RECURSIVE medias AS (
+      oracle = s"""WITH RECURSIVE medias AS (
         |  SELECT i AS media_id,
         |    (CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END) AS kind,
         |    'media-' || i || '-' ||
@@ -1074,14 +1076,7 @@ object SparkEntry {
         |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma,
         |    CASE WHEN kind = 'video' THEN 1 + length(payload) % 7 ELSE 1 END AS frames
         |  FROM medias),
-        |scan AS (
-        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
-        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
-        |  FROM m2
-        |  UNION ALL
-        |  SELECT media_id, payload, len, n_luma, i + 1,
-        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
-        |  FROM scan WHERE i + 1 < n_luma),
+        |$sqlLumaScan,
         |stats AS (
         |  SELECT media_id, count(*) AS n,
         |    CAST(SUM(acc % 256) AS BIGINT) AS s,
@@ -1240,7 +1235,7 @@ object SparkEntry {
       // 13-sample windows → 12 successive-comparison bits → df-capped
       // fingerprint join → per-(pair, offset) vote histogram → best
       // alignment per pair
-      oracle = """WITH RECURSIVE medias AS (
+      oracle = s"""WITH RECURSIVE medias AS (
         |  SELECT CAST(i AS BIGINT) AS media_id,
         |    CASE WHEN i % 4 = 3
         |      THEN 'audio-track-' || (i - 3) || '-program-material-remaster-v2'
@@ -1250,14 +1245,7 @@ object SparkEntry {
         |  SELECT media_id, payload, length(payload) AS len,
         |    (4 + length(payload) % 8) * (3 + length(payload) % 5) AS n_luma
         |  FROM medias),
-        |scan AS (
-        |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
-        |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
-        |  FROM m2
-        |  UNION ALL
-        |  SELECT media_id, payload, len, n_luma, i + 1,
-        |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
-        |  FROM scan WHERE i + 1 < n_luma),
+        |$sqlLumaScan,
         |luma AS (SELECT media_id, n_luma, i, acc % 256 AS v FROM scan),
         |wins AS (
         |  SELECT DISTINCT l.media_id, CAST(w.w AS BIGINT) AS w
@@ -1288,28 +1276,15 @@ object SparkEntry {
         |SELECT id1, id2, delta AS best_delta, n_matches
         |FROM best WHERE rn = 1 ORDER BY id1, id2""".stripMargin),
     QueryDef("q_lang_id", (s, d) => ops.TextAnalysis.langId(Tables.documents(s, d)),
-      oracle = {
-      val lex = Map(
-        "de" -> "['join','merge','sort','order']",
-        "en" -> "['the','a','of','key']",
-        "es" -> "['data','row','table','column']",
-        "fr" -> "['query','filter','group','window']",
-        "zh" -> "['spark','stream','batch','vector']")
-      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"CAST(len(list_filter(toks, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
-        .mkString(",\n    ")
-      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"WHEN score_$c = g THEN '$c'").mkString(" ")
-      s"""WITH t AS (SELECT doc_id, lang, string_split(text,' ') AS toks FROM documents),
+      oracle = s"""WITH t AS (SELECT doc_id, lang, string_split(text,' ') AS toks FROM documents),
          |s AS (
          |  SELECT doc_id, lang,
-         |    $scores
+         |    ${sqlLangScores("toks")}
          |  FROM t),
          |g AS (SELECT *, greatest(score_de, score_en, score_es, score_fr, score_zh) AS g FROM s)
          |SELECT doc_id, lang, score_de, score_en, score_es, score_fr, score_zh,
-         |  CASE $cases ELSE 'und' END AS pred_lang
-         |FROM g ORDER BY doc_id""".stripMargin
-    }),
+         |  CASE $sqlLangCases ELSE 'und' END AS pred_lang
+         |FROM g ORDER BY doc_id""".stripMargin),
     QueryDef("q_quality", (s, d) => ops.TextAnalysis.qualityScore(Tables.documents(s, d)),
       oracle = """WITH t AS (SELECT doc_id, text, string_split(text,' ') AS toks FROM documents),
         |c AS (
@@ -1401,18 +1376,7 @@ object SparkEntry {
         key = "user_id", timeCol = "ts_us", idCol = "event_id",
         typeCol = "event_type", queryType = "purchase", refType = "error")
         .orderBy(col("event_id")),
-      oracle = """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'purchase'),
-        |e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'error')
-        |SELECT p.event_id, p.user_id, p.ts_us,
-        |  COALESCE(e.ts_us, -1) AS asof_ts,
-        |  COALESCE(p.ts_us - e.ts_us, -1) AS gap
-        |FROM p ASOF LEFT JOIN e
-        |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
-        |ORDER BY event_id""".stripMargin),
+      oracle = sqlAsOfPrior),
     // ---- D11 with a 1-day staleness bound: matches older than the
     // tolerance are no-match, exactly as if the reference were absent
     QueryDef("q_asof_tol", (s, d) =>
@@ -1442,18 +1406,7 @@ object SparkEntry {
         key = "user_id", timeCol = "ts_us", idCol = "event_id",
         typeCol = "event_type", queryType = "purchase", refType = "error")
         .orderBy(col("event_id")),
-      oracle = """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'purchase'),
-        |e AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'error')
-        |SELECT p.event_id, p.user_id, p.ts_us,
-        |  COALESCE(e.ts_us, -1) AS asof_ts,
-        |  COALESCE(p.ts_us - e.ts_us, -1) AS gap
-        |FROM p ASOF LEFT JOIN e
-        |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
-        |ORDER BY event_id""".stripMargin),
+      oracle = sqlAsOfPrior),
 
     // ---- D25: SQL entrypoint + LATERAL correlated subquery (top-2
     // customers per nation). Users of the engine can hand it SQL text;
@@ -1635,19 +1588,7 @@ object SparkEntry {
     QueryDef("q_triangles", (s, d) =>
       ops.GraphStats.triangles(
         ops.GraphStats.contentDupEdges(Tables.documents(s, d))),
-      oracle = """WITH sd AS (SELECT doc_id, text FROM documents WHERE doc_id % 125 = 0),
-        |u AS (
-        |  SELECT doc_id, md5(text) AS ch FROM documents
-        |  UNION ALL SELECT doc_id + 10000000, md5(text) FROM sd
-        |  UNION ALL SELECT doc_id + 20000000, md5(text) FROM sd),
-        |e AS (
-        |  SELECT l.doc_id AS id1, r.doc_id AS id2
-        |  FROM u l JOIN u r ON l.ch = r.ch AND l.doc_id < r.doc_id),
-        |t AS (
-        |  SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
-        |  FROM e e1
-        |  JOIN e e2 ON e1.id2 = e2.id1
-        |  JOIN e e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2),
+      oracle = s"""WITH $sqlDupTriangles,
         |n AS (SELECT unnest([a, b, c]) AS node FROM t)
         |SELECT CAST(node AS BIGINT) AS node,
         |  CAST(count(*) AS BIGINT) AS n_triangles
@@ -1659,19 +1600,7 @@ object SparkEntry {
         ops.GraphStats.contentDupEdges(Tables.documents(s, d))),
       // D75: same dup graph; lcc = 2·tri/(deg·(deg−1)) in ppm, deg≥2
       // nodes only, triangle-free nodes grid-completed at 0
-      oracle = """WITH sd AS (SELECT doc_id, text FROM documents WHERE doc_id % 125 = 0),
-        |u AS (
-        |  SELECT doc_id, md5(text) AS ch FROM documents
-        |  UNION ALL SELECT doc_id + 10000000, md5(text) FROM sd
-        |  UNION ALL SELECT doc_id + 20000000, md5(text) FROM sd),
-        |e AS (
-        |  SELECT l.doc_id AS id1, r.doc_id AS id2
-        |  FROM u l JOIN u r ON l.ch = r.ch AND l.doc_id < r.doc_id),
-        |t AS (
-        |  SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
-        |  FROM e e1
-        |  JOIN e e2 ON e1.id2 = e2.id1
-        |  JOIN e e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2),
+      oracle = s"""WITH $sqlDupTriangles,
         |tri AS (
         |  SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
         |  FROM (SELECT unnest([a, b, c]) AS node FROM t) GROUP BY 1),
@@ -1924,72 +1853,7 @@ object SparkEntry {
       // BM25 twin — mirrors the content-contracted index: postings and
       // truncation per distinct content, corpus stats (df/N/S) at DOC
       // level through group sizes, doc pairs expanded via membership.
-      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep, count(*) AS gsz
-        |  FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
-        |gs AS (SELECT rep AS doc_id, gsz FROM reps),
-        |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM rd),
-        |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS tok
-        |  FROM t WHERE len(toks) >= 2),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM g GROUP BY 1, 2),
-        |dl AS (SELECT doc_id,
-        |    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END
-        |      AS BIGINT) AS dl
-        |  FROM t),
-        |c AS (SELECT CAST(sum(gs.gsz) AS BIGINT) AS n,
-        |             CAST(sum(gs.gsz * dl.dl) AS BIGINT) AS s
-        |  FROM dl JOIN gs USING (doc_id)),
-        |dft AS (SELECT tok, CAST(sum(gs.gsz) AS BIGINT) AS df
-        |  FROM tf JOIN gs USING (doc_id) GROUP BY 1),
-        |kept0 AS (
-        |  SELECT tf.doc_id, tf.tok, tf.tf, dft.df
-        |  FROM tf JOIN dft USING (tok) CROSS JOIN c
-        |  WHERE dft.df <= CAST(c.n AS DOUBLE) * 0.4),
-        |kept AS (
-        |  SELECT doc_id, tok, tf, df FROM (
-        |    SELECT k.*, row_number() OVER (PARTITION BY tok
-        |      ORDER BY tf DESC, doc_id) AS pr
-        |    FROM kept0 k)
-        |  WHERE pr <= 1000),
-        |qdocs AS (SELECT doc_id AS q_id, rep AS qrep FROM members
-        |  WHERE doc_id % 50 = 0 AND doc_id < 20000000),
-        |qpost AS (
-        |  SELECT DISTINCT qd.qrep, k.tok
-        |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
-        |  JOIN kept k ON k.doc_id = qd.qrep),
-        |terms AS (
-        |  SELECT q.qrep, k.doc_id AS crep,
-        |    CAST(c.s AS DOUBLE) AS sd, CAST(k.tf AS DOUBLE) AS tfd,
-        |    CAST(c.n AS DOUBLE) AS nd, CAST(k.df AS DOUBLE) AS dfd,
-        |    CAST(d.dl AS DOUBLE) AS dld
-        |  FROM qpost q JOIN kept k USING (tok)
-        |  JOIN dl d ON d.doc_id = k.doc_id
-        |  CROSS JOIN c),
-        |scoredc AS (
-        |  SELECT qrep, crep,
-        |    CAST(SUM(CAST(ROUND((22.0 * sd * tfd * (2.0*nd - 2.0*dfd + 1.0) * 1000000.0) / ((10.0*sd*tfd + 3.0*sd + 9.0*dld*nd) * (2.0*dfd + 1.0))) AS BIGINT)) AS BIGINT) AS score_u
-        |  FROM terms GROUP BY 1, 2),
-        |bys AS (
-        |  SELECT sc.qrep, sc.score_u, CAST(sum(g.gsz) AS BIGINT) AS msz
-        |  FROM scoredc sc JOIN gs g ON g.doc_id = sc.crep
-        |  GROUP BY 1, 2),
-        |cut AS (
-        |  SELECT qrep, score_u FROM (
-        |    SELECT qrep, score_u,
-        |      COALESCE(SUM(msz) OVER (PARTITION BY qrep ORDER BY score_u DESC
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS higher
-        |    FROM bys)
-        |  WHERE higher < 6),
-        |ex AS (
-        |  SELECT qd.q_id, mem.doc_id, sc.score_u
-        |  FROM qdocs qd
-        |  JOIN scoredc sc ON sc.qrep = qd.qrep
-        |  JOIN cut ON cut.qrep = sc.qrep AND cut.score_u = sc.score_u
-        |  JOIN members mem ON mem.rep = sc.crep
-        |  WHERE mem.doc_id <> qd.q_id)
+      oracle = s"""WITH ${sqlBm25Ex(5)}
         |SELECT q_id, doc_id, score_u, rnk FROM (
         |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
         |    ORDER BY score_u DESC, doc_id) AS BIGINT) AS rnk
@@ -2060,15 +1924,7 @@ object SparkEntry {
         |  FROM sc)
         |SELECT q_id, vec_id, cos, rnk FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
     QueryDef("q_ann_ivf", (s, d) => ops.Ann.ivfTopK(Tables.embeddings(s, d)),
-      oracle = """WITH v AS (
-        |  SELECT vec_id, label, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, label, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
+      oracle = s"""WITH $sqlLabeledVecNorms,
         |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2 FROM n WHERE vec_id < 10),
         |cent0 AS (
         |  SELECT label, i, SUM(svec[i]) AS s
@@ -2229,72 +2085,26 @@ object SparkEntry {
         |  CAST(max(norm2) AS BIGINT) AS max_norm2
         |FROM n GROUP BY label ORDER BY label""".stripMargin),
     QueryDef("q_dedup_embed", (s, d) => ops.Ann.embedCosineDups(Tables.embeddings(s, d)),
-      oracle = """WITH base AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id % 100 = 0),
-        |v AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM base),
-        |n AS (
-        |  SELECT vec_id, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |signs AS (
-        |  SELECT j.j AS j, i.i AS i,
-        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM range(0,16) j(j), range(0,64) i(i)),
-        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
-        |  FROM n, range(0,64) i(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
-        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
-        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id),
-        |masks AS (
-        |  SELECT CAST(0 AS BIGINT) AS m
-        |  UNION ALL
-        |  SELECT CAST(1 AS BIGINT) << CAST(j.j AS INTEGER) FROM range(0,16) j(j)),
-        |probes AS (
-        |  SELECT vec_id, xor(sig, m) AS psig FROM sig, masks),
-        |cand AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM sig a JOIN probes b ON a.sig = b.psig AND a.vec_id < b.vec_id),
-        |sc AS (
-        |  SELECT c.id1, c.id2,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
-        |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)
-        |SELECT id1, id2, cos FROM sc WHERE cos >= 0.999 ORDER BY id1, id2""".stripMargin),
+      oracle = sqlEmbedDups(
+        """masks AS (
+          |  SELECT CAST(0 AS BIGINT) AS m
+          |  UNION ALL
+          |  SELECT CAST(1 AS BIGINT) << CAST(j.j AS INTEGER) FROM range(0,16) j(j)),
+          |probes AS (
+          |  SELECT vec_id, xor(sig, m) AS psig FROM sig, masks),
+          |cand AS (
+          |  SELECT a.vec_id AS id1, b.vec_id AS id2
+          |  FROM sig a JOIN probes b ON a.sig = b.psig AND a.vec_id < b.vec_id)""".stripMargin)),
     // E42: diversity coreset — one representative per occupied SRP
     // angular cell (deterministic distributed stand-in for k-center)
     QueryDef("q_coreset", (s, d) => ops.Ann.srpCoreset(Tables.embeddings(s, d)),
       // Coreset twin: the same exact-integer SRP signature pipeline as
       // q_dedup_embed (no dup injection), then one group per bucket.
-      oracle = """WITH v AS (
+      oracle = s"""WITH v AS (
         |  SELECT vec_id, list_transform(embedding,
         |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
         |  FROM embeddings),
-        |signs AS (
-        |  SELECT j.j AS j, i.i AS i,
-        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM range(0,16) j(j), range(0,64) i(i)),
-        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
-        |  FROM v, range(0,64) i(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
-        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
-        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id)
+        |${sqlSrpSig("v")}
         |SELECT sig, min(vec_id) AS rep_id,
         |  CAST(count(*) AS BIGINT) AS bucket_size
         |FROM sig GROUP BY sig ORDER BY rep_id""".stripMargin),
@@ -2307,43 +2117,10 @@ object SparkEntry {
       ops.Ann.embedCosineDups(Tables.embeddings(s, d), oneBitProbes = false),
       // knob-off twin: identical up to candidate generation, which joins
       // exact signatures only (no 1-bit probe masks)
-      oracle = """WITH base AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id % 100 = 0),
-        |v AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM base),
-        |n AS (
-        |  SELECT vec_id, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
-        |signs AS (
-        |  SELECT j.j AS j, i.i AS i,
-        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM range(0,16) j(j), range(0,64) i(i)),
-        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
-        |  FROM n, range(0,64) i(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
-        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
-        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id),
-        |cand AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id < b.vec_id),
-        |sc AS (
-        |  SELECT c.id1, c.id2,
-        |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
-        |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
-        |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)
-        |SELECT id1, id2, cos FROM sc WHERE cos >= 0.999 ORDER BY id1, id2""".stripMargin),
+      oracle = sqlEmbedDups(
+        """cand AS (
+          |  SELECT a.vec_id AS id1, b.vec_id AS id2
+          |  FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id < b.vec_id)""".stripMargin)),
     // E54: embedding-space contamination screen — the semantic twin of
     // E24's verbatim n-gram screen; eval side broadcast + SRP-bucketed,
     // recovers the synthetically leaked eval vectors exactly
@@ -2351,7 +2128,7 @@ object SparkEntry {
       ops.Ann.embedContamination(Tables.embeddings(s, d)),
       // E54 twin: identical SRP discipline, asymmetric sides — probes
       // explode on the eval side only; leaked copies re-injected +10M
-      oracle = """WITH ev AS (
+      oracle = s"""WITH ev AS (
         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
         |tr AS (
         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 0
@@ -2371,20 +2148,7 @@ object SparkEntry {
         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
         |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
         |  FROM v),
-        |signs AS (
-        |  SELECT j.j AS j, i.i AS i,
-        |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
-        |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
-        |  FROM range(0,16) j(j), range(0,64) i(i)),
-        |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
-        |  FROM n, range(0,64) i(i)),
-        |proj AS (
-        |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
-        |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
-        |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
-        |  FROM proj GROUP BY vec_id),
+        |${sqlSrpSig("n")},
         |masks AS (
         |  SELECT CAST(0 AS BIGINT) AS m
         |  UNION ALL
@@ -2413,20 +2177,8 @@ object SparkEntry {
     QueryDef("q_winnow", (s, d) => ops.Winnow.profile(Tables.documents(s, d)),
       // E55 twin: identical packed-key rightmost-min winnowing selection
       // (one MIN window over g·2^28 + (2^28−1−pos))
-      oracle = """WITH t AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
-        |b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t WHERE len(tk) >= 3),
-        |g AS (
-        |  SELECT doc_id, pos0,
-        |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0+1 AS INTEGER):CAST(pos0+3 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
-        |  FROM (SELECT doc_id, tk, unnest(range(0, n - 2)) AS pos0 FROM b)),
-        |wm AS (
-        |  SELECT doc_id,
-        |    MIN(g * 268435456 + (268435455 - pos0)) OVER (PARTITION BY doc_id ORDER BY pos0
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-        |    COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos0
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wn
-        |  FROM g),
-        |fp AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE wn = 4),
+      oracle = s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+        |$sqlWinnowFp,
         |agg AS (
         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fps,
         |    MIN(wmin // 268435456) AS min_g, MAX(wmin // 268435456) AS max_g
@@ -2441,23 +2193,11 @@ object SparkEntry {
     QueryDef("q_winnow_pairs", (s, d) =>
       ops.Winnow.sharedPairs(Tables.documents(s, d)),
       // E55 pairs twin: I14 content reps, df-capped fingerprint postings
-      oracle = """WITH ch AS (SELECT doc_id, text, md5(text) AS ch FROM documents),
+      oracle = s"""WITH ch AS (SELECT doc_id, text, md5(text) AS ch FROM documents),
         |reps AS (SELECT MIN(doc_id) AS doc_id FROM ch GROUP BY ch),
         |rd AS (SELECT c.doc_id, c.text FROM ch c JOIN reps r ON c.doc_id = r.doc_id),
         |t AS (SELECT doc_id, string_split(text,' ') AS tk FROM rd),
-        |b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t WHERE len(tk) >= 3),
-        |g AS (
-        |  SELECT doc_id, pos0,
-        |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0+1 AS INTEGER):CAST(pos0+3 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
-        |  FROM (SELECT doc_id, tk, unnest(range(0, n - 2)) AS pos0 FROM b)),
-        |wm AS (
-        |  SELECT doc_id,
-        |    MIN(g * 268435456 + (268435455 - pos0)) OVER (PARTITION BY doc_id ORDER BY pos0
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-        |    COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos0
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wn
-        |  FROM g),
-        |fp AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE wn = 4),
+        |$sqlWinnowFp,
         |fpg AS (SELECT DISTINCT doc_id, wmin // 268435456 AS g FROM fp),
         |rare AS (SELECT g FROM (SELECT g, count(*) AS df FROM fpg GROUP BY g) WHERE df <= 24),
         |posts AS (SELECT f.doc_id, f.g FROM fpg f JOIN rare USING (g))
@@ -2465,19 +2205,7 @@ object SparkEntry {
         |FROM posts a JOIN posts b2 ON a.g = b2.g AND a.doc_id < b2.doc_id
         |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id1, id2""".stripMargin),
     QueryDef("q_curate", (s, d) => ops.Curation.curate(Tables.documents(s, d)),
-      oracle = """WITH g AS (
-        |  SELECT doc_id, lang, text,
-        |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
-        |    md5(text) AS content_hash
-        |  FROM documents
-        |  WHERE lang IN ('en','de','fr')),
-        |gated AS (
-        |  SELECT * FROM g
-        |  WHERE n_tokens >= 20 AND n_tokens <= 1000
-        |    AND n_distinct / n_tokens >= 0.05),
-        |keepers AS (
-        |  SELECT content_hash, min(doc_id) AS doc_id FROM gated GROUP BY 1)
+      oracle = s"""WITH $sqlCurateKeepers
         |SELECT g.doc_id, g.lang, g.n_tokens, g.content_hash
         |FROM gated g
         |WHERE EXISTS (SELECT 1 FROM keepers k
@@ -2497,32 +2225,8 @@ object SparkEntry {
         |WHERE rn <= 10
         |ORDER BY source, doc_id""".stripMargin),
     QueryDef("q_curate_full", (s, d) => ops.Curation.curateFull(Tables.documents(s, d)),
-      oracle = s"""WITH RECURSIVE $sqlLshCtes,
-         |edges AS MATERIALIZED (
-         |  SELECT id1 AS a, id2 AS b FROM cand
-         |  UNION SELECT id2, id1 FROM cand),
-         |walk(node, lbl) AS (
-         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
-         |  UNION
-         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
-         |  FROM walk w JOIN edges e ON w.node = e.a
-         |  GROUP BY e.b),
-         |assign AS MATERIALIZED (
-         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
-         |  FROM walk GROUP BY node),
-         |g AS (
-         |  SELECT doc_id, lang, text,
-         |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
-         |    md5(text) AS content_hash
-         |  FROM documents
-         |  WHERE lang IN ('en','de','fr')),
-         |gated AS (
-         |  SELECT * FROM g
-         |  WHERE n_tokens >= 20 AND n_tokens <= 1000
-         |    AND n_distinct / n_tokens >= 0.05),
-         |keepers AS (
-         |  SELECT content_hash, min(doc_id) AS doc_id FROM gated GROUP BY 1),
+      oracle = s"""WITH RECURSIVE $sqlClusterAssignCtes,
+         |$sqlCurateKeepers,
          |cur AS (
          |  SELECT g.doc_id, g.lang, g.n_tokens, g.content_hash
          |  FROM gated g
@@ -2538,19 +2242,7 @@ object SparkEntry {
       ops.Curation.curationFunnel(Tables.documents(s, d)),
       // E70: first-failing-gate attribution; keeper = min PASSING copy,
       // near-dup canonical = full-corpus cluster min id (E19 semantics)
-      oracle = s"""WITH RECURSIVE $sqlLshCtes,
-         |edges AS MATERIALIZED (
-         |  SELECT id1 AS a, id2 AS b FROM cand
-         |  UNION SELECT id2, id1 FROM cand),
-         |walk(node, lbl) AS (
-         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
-         |  UNION
-         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
-         |  FROM walk w JOIN edges e ON w.node = e.a
-         |  GROUP BY e.b),
-         |assign AS MATERIALIZED (
-         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
-         |  FROM walk GROUP BY node),
+      oracle = s"""WITH RECURSIVE $sqlClusterAssignCtes,
          |g AS (
          |  SELECT doc_id, lang, source,
          |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
@@ -3899,19 +3591,7 @@ object SparkEntry {
         |ORDER BY d2.doc_id""".stripMargin),
     // ---- E60: dedup-cluster canonical election (the apply step)
     QueryDef("q_canon", (s, d) => ops.Dedup.canonicalize(Tables.documents(s, d)),
-      oracle = s"""WITH RECURSIVE $sqlLshCtes,
-         |edges AS MATERIALIZED (
-         |  SELECT id1 AS a, id2 AS b FROM cand
-         |  UNION SELECT id2, id1 FROM cand),
-         |walk(node, lbl) AS (
-         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
-         |  UNION
-         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
-         |  FROM walk w JOIN edges e ON w.node = e.a
-         |  GROUP BY e.b),
-         |assign AS MATERIALIZED (
-         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
-         |  FROM walk GROUP BY node),
+      oracle = s"""WITH RECURSIVE $sqlClusterAssignCtes,
          |cl AS (
          |  SELECT doc_id, cluster_id,
          |    CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT)
@@ -3934,19 +3614,7 @@ object SparkEntry {
     // ---- E61: what that election costs each source (docs/tokens ppm)
     QueryDef("q_dedup_impact", (s, d) =>
       ops.Dedup.dedupImpact(Tables.documents(s, d)),
-      oracle = s"""WITH RECURSIVE $sqlLshCtes,
-         |edges AS MATERIALIZED (
-         |  SELECT id1 AS a, id2 AS b FROM cand
-         |  UNION SELECT id2, id1 FROM cand),
-         |walk(node, lbl) AS (
-         |  SELECT a, MIN(LEAST(a, b)) FROM edges GROUP BY a
-         |  UNION
-         |  SELECT e.b, MIN(LEAST(w.lbl, e.b))
-         |  FROM walk w JOIN edges e ON w.node = e.a
-         |  GROUP BY e.b),
-         |assign AS MATERIALIZED (
-         |  SELECT node AS doc_id, MIN(lbl) AS cluster_id
-         |  FROM walk GROUP BY node),
+      oracle = s"""WITH RECURSIVE $sqlClusterAssignCtes,
          |j AS (
          |  SELECT a2.doc_id, a2.cluster_id,
          |    CAST(length(b.text) AS BIGINT) AS n_chars
@@ -4047,14 +3715,7 @@ object SparkEntry {
     QueryDef("q_acf", (s, d) => ops.Analytics.acfProfile(Tables.events(s, d)),
       // D74: ×n-centered integer ACF; zero days completed; HUGEINT
       // products; sign-split final ppm (truncate == floor on |num|)
-      oracle = """WITH daily0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |  FROM daily0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
-        |  FROM span),
+      oracle = s"""WITH $sqlDailyGrid,
         |daily AS (
         |  SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
         |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
@@ -4168,14 +3829,7 @@ object SparkEntry {
       ops.Analytics.pettittChangepoint(Tables.events(s, d)),
       // D81: Pettitt via the U_t = U_{t-1} + V_t recursion; V off the
       // value histogram; U_n excluded; earliest argmax pinned
-      oracle = """WITH daily0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |  FROM daily0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
-        |  FROM span),
+      oracle = s"""WITH $sqlDailyGrid,
         |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
         |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
         |hist AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS c
@@ -4214,14 +3868,7 @@ object SparkEntry {
     QueryDef("q_dispersion", (s, d) =>
       ops.Analytics.dispersionIndex(Tables.events(s, d)),
       // D82: exact rational Fano — cross-multiplied var/mean, HUGEINT
-      oracle = """WITH daily0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |  FROM daily0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
-        |  FROM span),
+      oracle = s"""WITH $sqlDailyGrid,
         |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
         |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
         |ag AS (
@@ -4245,14 +3892,7 @@ object SparkEntry {
       ops.Analytics.runsTest(Tables.events(s, d)),
       // D83: runs over above/below-median signs; exact-median days out;
       // z = A*sqrt(B)/sqrt(C) on exact integers in pinned literal order
-      oracle = """WITH daily0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |  FROM daily0 GROUP BY 1),
-        |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
-        |  FROM span),
+      oracle = s"""WITH $sqlDailyGrid,
         |daily AS (SELECT g.event_type, g.day, coalesce(d.x, 0) AS x
         |  FROM grid g LEFT JOIN daily0 d USING (event_type, day)),
         |hist AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS c
@@ -4426,9 +4066,7 @@ object SparkEntry {
     // touched partitions), read the table back. Delta lsns exceed base
     // lsns per key, so merged ≡ the oracle's full fold of the whole log
     QueryDef("q_mart_merge", (s, d) => {
-      val out = scratchDir("graft_mart_merge")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val out = freshScratch(s, "graft_mart_merge")
       val log = Tables.orders(s, d).select(
         expr("o_orderkey div 4").as("k"),
         col("o_orderkey").as("lsn"),
@@ -4472,14 +4110,8 @@ object SparkEntry {
     // OCC commit; the readback is the post-DML table, so the oracle
     // checks the full statement semantics end-to-end.
     QueryDef("q_mart_delete", (s, d) => {
-      val out = scratchDir("graft_mart_delete")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("k"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"),
-        col("o_orderstatus").as("status"),
-        expr("concat('p', CAST(o_orderkey % 8 AS STRING))").as("part"))
+      val out = freshScratch(s, "graft_mart_delete")
+      val base = martOrders(s, d)
       sources.AtomicMart.publish(base, out, Seq("part"), statCols = Seq("k"))
       sources.MartDml.update(s, out,
         col("status") === "F" && col("k") % 7 === 0,
@@ -4493,12 +4125,7 @@ object SparkEntry {
           col("part").cast("string").as("part"))
         .orderBy(col("k"))
     },
-      oracle = """WITH base AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders),
+      oracle = s"""WITH ${sqlMartOrders("base")},
         |upd AS (
         |  SELECT k,
         |    CASE WHEN status = 'F' AND k % 7 = 0 THEN price_cents + 100
@@ -4512,14 +4139,8 @@ object SparkEntry {
     // between two retained versions (v0 → post-DML head), keyed so
     // rewrites classify as update pre/postimage pairs.
     QueryDef("q_mart_cdf", (s, d) => {
-      val out = scratchDir("graft_mart_cdf")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("k"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"),
-        col("o_orderstatus").as("status"),
-        expr("concat('p', CAST(o_orderkey % 8 AS STRING))").as("part"))
+      val out = freshScratch(s, "graft_mart_cdf")
+      val base = martOrders(s, d)
       sources.AtomicMart.publish(base, out, Seq("part"), statCols = Seq("k"))
       sources.MartDml.update(s, out,
         col("status") === "F" && col("k") % 7 === 0,
@@ -4537,12 +4158,7 @@ object SparkEntry {
     },
       // B40 twin: the multiset diff base → post-DML, keys on both sides
       // of the diff reclassified as update pre/postimages
-      oracle = """WITH base AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders),
+      oracle = s"""WITH ${sqlMartOrders("base")},
         |final AS (
         |  SELECT k,
         |    CASE WHEN status = 'F' AND k % 7 = 0 THEN price_cents + 100
@@ -4570,14 +4186,8 @@ object SparkEntry {
     // evolved table, so the oracle checks end-to-end: old rows NULL in
     // the added column except where the backfill touched them.
     QueryDef("q_mart_evolve", (s, d) => {
-      val out = scratchDir("graft_mart_evolve")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("k"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"),
-        col("o_orderstatus").as("status"),
-        expr("concat('p', CAST(o_orderkey % 8 AS STRING))").as("part"))
+      val out = freshScratch(s, "graft_mart_evolve")
+      val base = martOrders(s, d)
       sources.AtomicMart.publish(base.filter(col("k") % 2 === 0), out, Seq("part"))
       sources.AtomicMart.addColumn(s, out, "discount_ppm", "BIGINT")
       sources.AtomicMart.publish(
@@ -4595,12 +4205,7 @@ object SparkEntry {
       // B42 twin: evolved-table readback — the added column is NULL for
       // pre-evolution rows, carried for the evolved batch, overwritten
       // where the backfill UPDATE matched
-      oracle = """WITH base AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders)
+      oracle = s"""WITH ${sqlMartOrders("base")}
         |SELECT k, price_cents, status, part,
         |  CASE WHEN status = 'F' AND k % 5 = 0 THEN CAST(42 AS BIGINT)
         |       WHEN k % 2 = 1 THEN CAST(k % 1000 AS BIGINT)
@@ -4616,14 +4221,8 @@ object SparkEntry {
     // EMPTY (no partition pointer moved), version 0 still reads under
     // its OWN (old) names, and the head reads under the new ones.
     QueryDef("q_mart_rename", (s, d) => {
-      val out = scratchDir("graft_mart_rename")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("k"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"),
-        col("o_orderstatus").as("status"),
-        expr("concat('p', CAST(o_orderkey % 8 AS STRING))").as("part"))
+      val out = freshScratch(s, "graft_mart_rename")
+      val base = martOrders(s, d)
       val v0 = sources.AtomicMart.publish(base.filter(col("k") % 2 === 0), out, Seq("part"))
       sources.AtomicMart.renameColumn(s, out, "price_cents", "amount_cents")
       val vRenamed = sources.AtomicMart.renameColumn(s, out, "part", "bucket")
@@ -4671,14 +4270,8 @@ object SparkEntry {
     // rep_fraud.py daily pair); the readback joins the committed pair,
     // so the oracle checks both legs landed and agree.
     QueryDef("q_mart_txn", (s, d) => {
-      val root = scratchDir("graft_mart_txn")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val fact = Tables.orders(s, d).select(
-        col("o_orderkey").as("k"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"),
-        col("o_orderstatus").as("status"),
-        expr("concat('p', CAST(o_orderkey % 8 AS STRING))").as("part"))
+      val root = freshScratch(s, "graft_mart_txn")
+      val fact = martOrders(s, d)
       val dim = fact.groupBy(col("status"))
         .agg(count(lit(1)).as("n_orders"), sum(col("price_cents")).as("sum_cents"))
         .withColumn("dpart", lit("all"))
@@ -4701,12 +4294,7 @@ object SparkEntry {
       // B44 twin: both transaction legs recomputed independently and
       // joined — if either leg's commit were missing or stale the row
       // count / aggregates could not match
-      oracle = """WITH fact AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders),
+      oracle = s"""WITH ${sqlMartOrders("fact")},
         |dim AS (
         |  SELECT status, CAST(count(*) AS BIGINT) AS n_orders,
         |    CAST(sum(price_cents) AS BIGINT) AS sum_cents
@@ -4724,9 +4312,7 @@ object SparkEntry {
     // both the append-to-shared-partition and the fresh-partition leg
     // shapes in one intent.
     QueryDef("q_mart_txn3", (s, d) => {
-      val root = scratchDir("graft_mart_txn3")
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      val root = freshScratch(s, "graft_mart_txn3")
       def slices(even: Boolean) = {
         val fact = Tables.orders(s, d)
           .filter(col("o_orderkey") % 2 === (if (even) 0 else 1)).select(
@@ -4771,12 +4357,7 @@ object SparkEntry {
         .withColumn("replay_recovered", lit(replayed))
         .orderBy(col("k"))
     },
-      oracle = """WITH fact AS (
-        |  SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |    o_orderstatus AS status,
-        |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
-        |  FROM orders),
+      oracle = s"""WITH ${sqlMartOrders("fact")},
         |dim AS (
         |  SELECT status, CAST(count(*) AS BIGINT) AS n_orders,
         |    CAST(sum(price_cents) AS BIGINT) AS sum_cents
@@ -4795,14 +4376,8 @@ object SparkEntry {
     // direct recompute, and an out-of-grammar statement is refused
     // whole (flag column).
     QueryDef("q_mart_sql", (s, d) => {
-      val out = scratchDir("graft_mart_sql")
-      val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("k"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"),
-        col("o_orderstatus").as("status"),
-        expr("concat('p', CAST(o_orderkey % 8 AS STRING))").as("part"))
+      val out = freshScratch(s, "graft_mart_sql")
+      val base = martOrders(s, d)
       sources.AtomicMart.publish(base, out, Seq("part"))
       sources.MartSql.exec(s, s"ALTER TABLE '$out' RENAME COLUMN price_cents TO amount_cents")
       sources.MartSql.exec(s, s"ALTER TABLE '$out' ADD COLUMN note STRING")
@@ -4922,37 +4497,7 @@ object SparkEntry {
       // E50 twin: same contraction, same doc-weighted model counts, and
       // bl(x) as length(to_base(x,2)) — integer bit lengths, so the
       // stupid-backoff code lengths replay bit-for-bit.
-      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep,
-        |    CAST(sum(CASE WHEN doc_id % 5 <> 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS tcnt
-        |  FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, string_split(m.text, ' ') AS t
-        |  FROM m JOIN reps r ON m.doc_id = r.rep),
-        |toks AS (SELECT doc_id, unnest(t) AS w FROM rd),
-        |p2 AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
-        |    unnest(t[2:len(t)]) AS w2
-        |  FROM rd WHERE len(t) >= 2),
-        |tc AS (SELECT rep AS doc_id, tcnt FROM reps),
-        |uni AS (SELECT w, CAST(sum(tc.tcnt) AS BIGINT) AS c1
-        |  FROM toks JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1),
-        |big AS (SELECT w1, w2, CAST(sum(tc.tcnt) AS BIGINT) AS c2
-        |  FROM p2 JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS tot FROM uni),
-        |bits AS (SELECT p.doc_id,
-        |    CAST(CASE WHEN b.c2 IS NOT NULL
-        |      THEN length(to_base(u1.c1, 2)) - length(to_base(b.c2, 2))
-        |    WHEN u2.c1 IS NOT NULL
-        |      THEN length(to_base(t.tot, 2)) - length(to_base(u2.c1, 2)) + 4
-        |    ELSE length(to_base(t.tot, 2)) + 8 END AS BIGINT) AS bits
-        |  FROM p2 p
-        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-        |  LEFT JOIN uni u1 ON p.w1 = u1.w
-        |  LEFT JOIN uni u2 ON p.w2 = u2.w
-        |  CROSS JOIN tot t),
-        |sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(bits) AS BIGINT) AS bits_sum FROM bits GROUP BY 1),
+      oracle = s"""WITH $sqlLmBits,
         |f AS (SELECT r.rep, COALESCE(sc.n_pairs, 0) AS n_pairs,
         |    COALESCE(sc.bits_sum, 0) AS bits_sum
         |  FROM reps r LEFT JOIN sc ON sc.doc_id = r.rep)
@@ -5003,37 +4548,7 @@ object SparkEntry {
       ops.LmQuality.perplexityBuckets(Tables.documents(s, d)),
       // E52 twin: the E50 chain + the distinct-value tercile cuts
       // (3·cum ≥ k·n — exact integer ceil), value-based bucket edges.
-      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep,
-        |    CAST(sum(CASE WHEN doc_id % 5 <> 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS tcnt
-        |  FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, string_split(m.text, ' ') AS t
-        |  FROM m JOIN reps r ON m.doc_id = r.rep),
-        |toks AS (SELECT doc_id, unnest(t) AS w FROM rd),
-        |p2 AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
-        |    unnest(t[2:len(t)]) AS w2
-        |  FROM rd WHERE len(t) >= 2),
-        |tc AS (SELECT rep AS doc_id, tcnt FROM reps),
-        |uni AS (SELECT w, CAST(sum(tc.tcnt) AS BIGINT) AS c1
-        |  FROM toks JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1),
-        |big AS (SELECT w1, w2, CAST(sum(tc.tcnt) AS BIGINT) AS c2
-        |  FROM p2 JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1, 2),
-        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS tot FROM uni),
-        |bits AS (SELECT p.doc_id,
-        |    CAST(CASE WHEN b.c2 IS NOT NULL
-        |      THEN length(to_base(u1.c1, 2)) - length(to_base(b.c2, 2))
-        |    WHEN u2.c1 IS NOT NULL
-        |      THEN length(to_base(t.tot, 2)) - length(to_base(u2.c1, 2)) + 4
-        |    ELSE length(to_base(t.tot, 2)) + 8 END AS BIGINT) AS bits
-        |  FROM p2 p
-        |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-        |  LEFT JOIN uni u1 ON p.w1 = u1.w
-        |  LEFT JOIN uni u2 ON p.w2 = u2.w
-        |  CROSS JOIN tot t),
-        |sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(bits) AS BIGINT) AS bits_sum FROM bits GROUP BY 1),
+      oracle = s"""WITH $sqlLmBits,
         |sd AS (SELECT mem.doc_id, doc.lang,
         |    CAST((1000 * sc.bits_sum) // sc.n_pairs AS BIGINT)
         |      AS mbits_per_pair
@@ -5116,13 +4631,85 @@ object SparkEntry {
     QueryDef("q_pagerank", (s, d) =>
       ops.GraphStats.pageRank(
         ops.GraphStats.tradeEdges(Tables.orders(s, d), Tables.lineitem(s, d))),
-      oracle = sqlPageRank),
+      // D47 PageRank twin: the five damped-update iterations unrolled as
+      // chained CTEs (standard SQL forbids aggregating over the recursive
+      // term, so a recursive CTE can't express the per-round SUM —
+      // unrolling keeps the oracle a single deterministic statement).
+      // Integer ppm + floor division (`//`) mirrors Spark's `div`.
+      // AS MATERIALIZED throughout is load-bearing at the 100× tier: a
+      // plain CTE gets INLINED into every reference, so each of the five
+      // rounds re-derived p — the DISTINCT over the orders⋈lineitem join
+      // (60M rows at 100×) — and the oracle died of spill ENOSPC (r10's
+      // one unresolved FAIL). Materialized, the big join runs once and
+      // each round is one hash join over the 25M-edge list: measured
+      // 55 s at 100×, hash-identical to the engine dump.
+      oracle = {
+      val rounds = (1 to 5).map { i =>
+        s"""r$i AS MATERIALIZED (
+           |  SELECT n.node,
+           |    150000 + (COALESCE(s.c, 0) * 85) // 100 AS rank_ppm
+           |  FROM n LEFT JOIN (
+           |    SELECT e.dst AS node,
+           |      CAST(SUM(r.rank_ppm // od.outdeg) AS BIGINT) AS c
+           |    FROM e JOIN r${i - 1} r ON r.node = e.src
+           |           JOIN od ON od.src = e.src
+           |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH p AS MATERIALIZED (
+         |  SELECT DISTINCT o_custkey AS cust, l_suppkey + 500000000 AS supp
+         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+         |e AS MATERIALIZED (SELECT cust AS src, supp AS dst FROM p
+         |      UNION ALL SELECT supp AS src, cust AS dst FROM p),
+         |od AS MATERIALIZED (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
+         |       FROM e GROUP BY 1),
+         |n AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
+         |r0 AS MATERIALIZED (SELECT node, CAST(1000000 AS BIGINT) AS rank_ppm FROM n),
+         |$rounds
+         |SELECT CAST(node AS BIGINT) AS node,
+         |  CAST(rank_ppm AS BIGINT) AS rank_ppm
+         |FROM r5 ORDER BY node""".stripMargin
+    }),
     // D64: k-core decomposition of the same trade graph — iterative
     // peeling to the maximal ≥k-degree subgraph (cascades included)
     QueryDef("q_kcore", (s, d) =>
       ops.GraphStats.kCore(
         ops.GraphStats.tradeEdges(Tables.orders(s, d), Tables.lineitem(s, d))),
-      oracle = sqlKCore),
+      // D64 twin: fixed 12 peel rounds (fixpoint measured at 2 on the
+      // trade graph at sf0.01/sf0.1; rounds past fixpoint are idempotent,
+      // so the generous constant is pure safety margin — and the Spark
+      // side *requires* convergence, so a graph needing more rounds fails
+      // loudly there instead of hash-mismatching here). The SQL carries
+      // its OWN convergence sentinel too — the final SELECT error()s if
+      // the last two peel rounds still differ — so the oracle is valid
+      // standalone, not only alongside the Spark require().
+      oracle = {
+      val k = 24
+      val rounds = 12
+      // AS MATERIALIZED is load-bearing: DuckDB INLINES plain CTE
+      // references, and each round reads its predecessor twice — without
+      // materialization e12 would expand to 2^12 scans of lineitem
+      // (observed as fd exhaustion, not just slowness).
+      val peels = (1 to rounds).map { i =>
+        s"""k$i AS MATERIALIZED (SELECT src FROM e${i - 1} GROUP BY src
+           |        HAVING count(*) >= $k),
+           |e$i AS MATERIALIZED (SELECT c.src, c.dst FROM e${i - 1} c
+           |        JOIN k$i a ON c.src = a.src JOIN k$i b ON c.dst = b.src)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH p AS MATERIALIZED (
+         |  SELECT DISTINCT o_custkey AS cust, l_suppkey + 500000000 AS supp
+         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+         |e0 AS MATERIALIZED (SELECT cust AS src, supp AS dst FROM p
+         |       UNION ALL SELECT supp AS src, cust AS dst FROM p),
+         |$peels
+         |SELECT CAST(src AS BIGINT) AS node,
+         |  CAST(count(*) AS BIGINT) AS core_deg
+         |FROM e$rounds
+         |WHERE (SELECT CASE WHEN (SELECT count(*) FROM e${rounds - 1})
+         |         = (SELECT count(*) FROM e$rounds) THEN 1
+         |       ELSE error('q_kcore oracle: peel not converged after '
+         |         || '$rounds rounds — raise rounds') END) = 1
+         |GROUP BY src ORDER BY node""".stripMargin
+    }),
 
     // D50: k-hop BFS from seeded sources over the trade graph — delta
     // iteration (frontier-only joins), oracle is a depth-bounded
@@ -5177,13 +4764,7 @@ object SparkEntry {
     // E46: hashed-feature linear scorer (fasttext-style serving path)
     QueryDef("q_hashed_score", (s, d) =>
       ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d)),
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks)
+      oracle = s"""WITH $sqlE46Buckets
         |SELECT doc_id,
         |  CAST(count(*) AS BIGINT) AS n_tokens,
         |  CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin,
@@ -5194,14 +4775,7 @@ object SparkEntry {
     // D52: KMV distinct-count estimate of parts ordered per customer
     // nation — the estimate ITSELF is integer-exact cross-engine
     QueryDef("q_kmv_distinct", (s, d) =>
-      ops.Sketches.kmvDistinct(
-        Tables.customer(s, d).select(col("c_custkey"),
-          col("c_nationkey").cast("long").as("c_nationkey"))
-          .join(Tables.orders(s, d).select(col("o_orderkey"),
-            col("o_custkey").as("c_custkey")), Seq("c_custkey"))
-          .join(Tables.lineitem(s, d).select(
-            col("l_orderkey").as("o_orderkey"), col("l_partkey")),
-            Seq("o_orderkey")),
+      ops.Sketches.kmvDistinct(nationParts(s, d),
         grp = "c_nationkey", v = "l_partkey"),
       oracle = """WITH pairs AS (
         |  SELECT c_nationkey AS nat, l_partkey AS pk
@@ -5394,66 +4968,21 @@ object SparkEntry {
     // English — ties by average rank, doubled into integer space
     QueryDef("q_auc", (s, d) =>
       ml.Evaluation.aucExact(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         score = "margin", label = "is_en"),
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(SUM(lab) AS BIGINT) AS np
-        |        FROM sc GROUP BY s),
-        |rk AS (SELECT *, COALESCE(SUM(n) OVER (ORDER BY s
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-        |       FROM bys),
-        |ag AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
-        |         CAST(SUM(n - np) AS BIGINT) AS n_neg,
-        |         CAST(SUM(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
-        |       FROM rk)
-        |SELECT n_pos, n_neg,
-        |  CAST((sum_r2 - n_pos * (n_pos + 1)) * 500000
-        |    // (n_pos * n_neg) AS BIGINT) AS auc_ppm
-        |FROM ag""".stripMargin),
+      oracle = s"""WITH $sqlE46Labeled,
+        |${sqlRankSumAuc("sc")}""".stripMargin),
 
     // H10: Poisson-bootstrap uncertainty band for the H4 AUC —
     // deterministic md5-inverted Poisson(1) weights per (replicate,
     // doc), weighted tie-aware rank-sum per replicate, all integer
     QueryDef("q_auc_ci", (s, d) =>
       ml.Evaluation.aucBootstrap(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         score = "margin", label = "is_en"),
       // H10 twin: same scored frame, 16 Poisson(1)-reweighted replicates
       // (md5-inverted CDF, integer thresholds), weighted rank-sum each
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
+      oracle = s"""WITH $sqlE46Margin,
         |sc AS (
         |  SELECT d.doc_id, margin AS s,
         |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
@@ -5499,35 +5028,8 @@ object SparkEntry {
       // H9 twin: the four rule bodies provide the labels (each body
       // carries its own WITH scope; the outer clients CTE is shadowed
       // inside them, deliberately identically)
-      oracle = s"""WITH $sqlClients,
-         |mart AS (
-         |  SELECT DISTINCT client_key FROM (
-         |    SELECT client_key FROM $fraudPassportBody
-         |    UNION ALL SELECT client_key FROM $fraudAccountBody
-         |    UNION ALL SELECT client_key FROM $fraudCityBody
-         |    UNION ALL SELECT client_key FROM $fraudAmountBody)),
-         |scored AS (
-         |  SELECT c.c_custkey,
-         |    (CASE WHEN DATE '2024-06-30' > c.passport_valid_to
-         |       THEN 400 ELSE 0 END
-         |     + CASE WHEN c.c_acctbal < 0 THEN 300 ELSE 0 END
-         |     + (c.c_custkey * 37) % 100) AS s,
-         |    CASE WHEN m.client_key IS NULL THEN 0 ELSE 1 END AS lab
-         |  FROM clients c LEFT JOIN mart m ON c.c_custkey = m.client_key),
-         |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-         |          CAST(SUM(lab) AS BIGINT) AS np
-         |        FROM scored GROUP BY s),
-         |rk AS (SELECT *, COALESCE(SUM(n) OVER (ORDER BY s
-         |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-         |       FROM bys),
-         |ag AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
-         |         CAST(SUM(n - np) AS BIGINT) AS n_neg,
-         |         CAST(SUM(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
-         |       FROM rk)
-         |SELECT n_pos, n_neg,
-         |  CAST((sum_r2 - n_pos * (n_pos + 1)) * 500000
-         |    // (n_pos * n_neg) AS BIGINT) AS auc_ppm
-         |FROM ag""".stripMargin),
+      oracle = s"""WITH $sqlFraudScored,
+         |${sqlRankSumAuc("scored")}""".stripMargin),
 
     // H11: decile lift / cumulative-gains table of the SAME fraud
     // scorer — the campaign-targeting view (contact the top decile
@@ -5535,21 +5037,7 @@ object SparkEntry {
     // random?). Ties share a bucket on the distinct-score contraction.
     QueryDef("q_lift", (s, d) =>
       ml.Evaluation.liftTable(fraudScoredFrame(s, d)),
-      oracle = s"""WITH $sqlClients,
-         |mart AS (
-         |  SELECT DISTINCT client_key FROM (
-         |    SELECT client_key FROM $fraudPassportBody
-         |    UNION ALL SELECT client_key FROM $fraudAccountBody
-         |    UNION ALL SELECT client_key FROM $fraudCityBody
-         |    UNION ALL SELECT client_key FROM $fraudAmountBody)),
-         |scored AS (
-         |  SELECT c.c_custkey,
-         |    (CASE WHEN DATE '2024-06-30' > c.passport_valid_to
-         |       THEN 400 ELSE 0 END
-         |     + CASE WHEN c.c_acctbal < 0 THEN 300 ELSE 0 END
-         |     + (c.c_custkey * 37) % 100) AS s,
-         |    CASE WHEN m.client_key IS NULL THEN 0 ELSE 1 END AS lab
-         |  FROM clients c LEFT JOIN mart m ON c.c_custkey = m.client_key),
+      oracle = s"""WITH $sqlFraudScored,
          |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
          |          CAST(SUM(lab) AS BIGINT) AS np
          |        FROM scored GROUP BY s),
@@ -5584,23 +5072,9 @@ object SparkEntry {
     // H5: calibration curve of the same scorer, fixed-width margin bins
     QueryDef("q_calibration", (s, d) =>
       ml.Evaluation.calibration(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         score = "margin", label = "is_en"),
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
+      oracle = s"""WITH $sqlE46Margin,
         |sc AS (
         |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
         |  FROM m JOIN documents d USING (doc_id))
@@ -5643,29 +5117,11 @@ object SparkEntry {
     // scored frame as q_auc — the rare-positive ranking verdict
     QueryDef("q_ap", (s, d) =>
       ml.Evaluation.averagePrecision(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         score = "margin", label = "is_en"),
       // H15: tie groups contribute their positive mass at the group's
       // own precision; per-level ppm floors identical both engines
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
+      oracle = s"""WITH $sqlE46Labeled,
         |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(lab) AS BIGINT) AS np
         |  FROM sc GROUP BY 1),
@@ -5687,51 +5143,14 @@ object SparkEntry {
     // E7 lexicon lang-id, judged on the discordant rows only
     QueryDef("q_mcnemar", (s, d) => {
       val docs = Tables.documents(s, d)
-      val a = ops.TextAnalysis.hashedLinearScore(docs)
-        .select(col("doc_id"),
-          when(col("margin") > 0L, 1L).otherwise(0L).as("pred_a"))
-      val b = ops.TextAnalysis.langId(docs)
-        .select(col("doc_id"),
-          when(col("pred_lang") === "en", 1L).otherwise(0L).as("pred_b"))
       val lab = docs.select(col("doc_id"),
         when(col("lang") === "en", 1L).otherwise(0L).as("label"))
-      ml.Evaluation.mcnemar(
-        a.join(b, Seq("doc_id")).join(lab, Seq("doc_id")))
+      ml.Evaluation.mcnemar(e46VsLangId(docs).join(lab, Seq("doc_id")))
     },
       // H14: discordant-cell chi-square, no continuity correction
       // (pinned); one double division of exact integers (D71 discipline)
-      oracle = {
-      val lex = Map(
-        "de" -> "['join','merge','sort','order']",
-        "en" -> "['the','a','of','key']",
-        "es" -> "['data','row','table','column']",
-        "fr" -> "['query','filter','group','window']",
-        "zh" -> "['spark','stream','batch','vector']")
-      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
-        .mkString(",\n    ")
-      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"WHEN score_$c = g THEN '$c'").mkString(" ")
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-         |  FROM documents),
-         |f AS (
-         |  SELECT doc_id,
-         |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-         |  FROM toks),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-         |  FROM f GROUP BY doc_id),
-         |t2 AS (SELECT doc_id, lang, string_split(text,' ') AS toks2
-         |  FROM documents),
-         |s2 AS (SELECT doc_id, lang,
-         |    $scores
-         |  FROM t2),
-         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
-         |    score_fr, score_zh) AS g FROM s2),
-         |p AS (SELECT doc_id, lang,
-         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
+      oracle = s"""WITH $sqlE46Margin,
+         |${sqlLangPred("doc_id, lang")},
          |j AS (
          |  SELECT CASE WHEN m.margin > 0 THEN 1 ELSE 0 END AS pred_a,
          |    CASE WHEN p.pred_lang = 'en' THEN 1 ELSE 0 END AS pred_b,
@@ -5755,48 +5174,15 @@ object SparkEntry {
          |  CASE WHEN b_cell + c_cell = 0 THEN 0.0
          |    ELSE CAST((b_cell - c_cell) * (b_cell - c_cell) AS DOUBLE)
          |      / CAST(b_cell + c_cell AS DOUBLE) END AS chi2
-         |FROM cells""".stripMargin
-    }),
+         |FROM cells""".stripMargin),
 
     // H13: Kendall tau-b between the binned margin and binned doc
     // length — the is-the-scorer-just-a-ruler confound check
     QueryDef("q_kendall", (s, d) =>
-      ml.Evaluation.kendallTauB(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            col("n_chars")), Seq("doc_id"))
-          .select(expr("(margin + 1000000000) div 500").as("va"),
-            expr("n_chars div 200").as("vb"))),
+      ml.Evaluation.kendallTauB(e46MarginVsLength(s, d)),
       // H13: cell-contracted Kendall tau-b; one orientation per
       // unordered cell pair; sqrt is IEEE-correctly-rounded both engines
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
-        |  FROM m JOIN documents d USING (doc_id)),
-        |cells AS (SELECT va AS i, vb AS j, CAST(count(*) AS BIGINT) AS n
-        |  FROM sc GROUP BY 1, 2),
-        |conc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
-        |    AS c_pairs
-        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j > a.j),
-        |disc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
-        |    AS d_pairs
-        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j < a.j),
-        |ma AS (SELECT CAST(sum(t) AS BIGINT) AS ntot,
-        |    CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_a
-        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY i)),
-        |mb AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_b
-        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY j))
+      oracle = s"""WITH $sqlE46Concordance
         |SELECT ntot AS n, c_pairs, d_pairs,
         |  ntot * (ntot - 1) // 2 AS n0, ties_a, ties_b,
         |  CASE WHEN ntot * (ntot - 1) // 2 = ties_a
@@ -5810,42 +5196,10 @@ object SparkEntry {
     // H23: gamma + both Somers' D directions off H13's concordance
     // contraction — one cell pass, three coefficient families
     QueryDef("q_rank_assoc", (s, d) =>
-      ml.Evaluation.rankAssociation(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            col("n_chars")), Seq("doc_id"))
-          .select(expr("(margin + 1000000000) div 500").as("va"),
-            expr("n_chars div 200").as("vb"))),
+      ml.Evaluation.rankAssociation(e46MarginVsLength(s, d)),
       // rank-association twin: the q_kendall CTEs with the gamma /
       // Somers' D ratios instead of τ-b's geometric-mean denominator
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
-        |  FROM m JOIN documents d USING (doc_id)),
-        |cells AS (SELECT va AS i, vb AS j, CAST(count(*) AS BIGINT) AS n
-        |  FROM sc GROUP BY 1, 2),
-        |conc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
-        |    AS c_pairs
-        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j > a.j),
-        |disc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
-        |    AS d_pairs
-        |  FROM cells a JOIN cells b ON b.i > a.i AND b.j < a.j),
-        |ma AS (SELECT CAST(sum(t) AS BIGINT) AS ntot,
-        |    CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_a
-        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY i)),
-        |mb AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_b
-        |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY j))
+      oracle = s"""WITH $sqlE46Concordance
         |SELECT ntot AS n, c_pairs, d_pairs,
         |  ntot * (ntot - 1) // 2 AS n0, ties_a, ties_b,
         |  CASE WHEN c_pairs + d_pairs = 0 THEN 0.0
@@ -5865,35 +5219,12 @@ object SparkEntry {
     // reliability vs resolution vs base-rate uncertainty, one-row verdict
     QueryDef("q_brier", (s, d) =>
       ml.Evaluation.brierDecomposition(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         score = "margin", label = "is_en"),
       // H12: Murphy decomposition — clamped-linear link (slope 25) to
       // ppm, 50000-ppm forecast bins at midpoints, all terms e-12 with
       // the floor-rounding identity gap emitted as a self-check
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bb AS (
-        |  SELECT (least(999999, greatest(0, 500000 + margin * 25))
-        |      // 50000) * 50000 + 25000 AS phat,
-        |    CAST(count(*) AS BIGINT) AS n_k,
-        |    CAST(sum(lab) AS BIGINT) AS np_k
-        |  FROM sc GROUP BY 1),
+      oracle = s"""WITH $sqlE46ForecastBins,
         |tt AS (
         |  SELECT phat, n_k, np_k,
         |    CAST(sum(n_k) OVER () AS BIGINT) AS nn,
@@ -5963,24 +5294,10 @@ object SparkEntry {
     // single-class slices pin to 500000, never fail
     QueryDef("q_auc_slices", (s, d) =>
       ml.Evaluation.sliceAuc(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"), col("source"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, col("source"), isEn),
         slice = "source", score = "margin", label = "is_en"),
       // H21: H4's rank-sum per slice; degenerate slices pinned 500000
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
+      oracle = s"""WITH $sqlE46Margin,
         |sc AS (
         |  SELECT d.source AS slice, m.margin AS s,
         |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
@@ -6073,27 +5390,7 @@ object SparkEntry {
         ops.TextAnalysis.langId(Tables.documents(s, d)),
         truth = "lang", pred = "pred_lang"),
       // H19: observed (truth, pred) cells with exact row/col shares
-      oracle = {
-      val lex = Map(
-        "de" -> "['join','merge','sort','order']",
-        "en" -> "['the','a','of','key']",
-        "es" -> "['data','row','table','column']",
-        "fr" -> "['query','filter','group','window']",
-        "zh" -> "['spark','stream','batch','vector']")
-      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
-        .mkString(",\n    ")
-      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"WHEN score_$c = g THEN '$c'").mkString(" ")
-      s"""WITH t2 AS (SELECT doc_id, lang, string_split(text,' ') AS toks2
-         |  FROM documents),
-         |s2 AS (SELECT doc_id, lang,
-         |    $scores
-         |  FROM t2),
-         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
-         |    score_fr, score_zh) AS g FROM s2),
-         |p AS (SELECT doc_id, lang,
-         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
+      oracle = s"""WITH ${sqlLangPred("doc_id, lang")},
          |cells AS (SELECT lang AS truth, pred_lang AS pred,
          |    CAST(count(*) AS BIGINT) AS n
          |  FROM p GROUP BY 1, 2),
@@ -6104,8 +5401,7 @@ object SparkEntry {
          |SELECT truth, pred, n, row_n, col_n,
          |  CAST(1000000 * n // row_n AS BIGINT) AS row_share_ppm,
          |  CAST(1000000 * n // col_n AS BIGINT) AS col_share_ppm
-         |FROM m ORDER BY truth, pred""".stripMargin
-    }),
+         |FROM m ORDER BY truth, pred""".stripMargin),
 
     // E67: within-source stability — TV between interleaved doc-id
     // halves; a drifting source is two populations under one label
@@ -6264,26 +5560,10 @@ object SparkEntry {
     // H22: Spearman rho on the same bins as q_kendall — the linear-
     // cost monotone-association companion to tau-b
     QueryDef("q_spearman", (s, d) =>
-      ml.Evaluation.spearmanRho(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            col("n_chars")), Seq("doc_id"))
-          .select(expr("(margin + 1000000000) div 500").as("va"),
-            expr("n_chars div 200").as("vb"))),
+      ml.Evaluation.spearmanRho(e46MarginVsLength(s, d)),
       // H22: doubled midranks off the marginal histograms; rho is the
       // one IEEE step over exact HUGEINT moments in pinned order
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
+      oracle = s"""WITH $sqlE46Margin,
         |sc AS (
         |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
         |  FROM m JOIN documents d USING (doc_id)),
@@ -6324,50 +5604,12 @@ object SparkEntry {
 
     // H16: Cohen's kappa between the same two raters q_mcnemar pits
     // against the label — here judged against EACH OTHER, no label
-    QueryDef("q_kappa", (s, d) => {
-      val docs = Tables.documents(s, d)
-      val a = ops.TextAnalysis.hashedLinearScore(docs)
-        .select(col("doc_id"),
-          when(col("margin") > 0L, 1L).otherwise(0L).as("pred_a"))
-      val b = ops.TextAnalysis.langId(docs)
-        .select(col("doc_id"),
-          when(col("pred_lang") === "en", 1L).otherwise(0L).as("pred_b"))
-      ml.Evaluation.cohenKappa(a.join(b, Seq("doc_id")))
-    },
+    QueryDef("q_kappa", (s, d) =>
+      ml.Evaluation.cohenKappa(e46VsLangId(Tables.documents(s, d))),
       // H16: exact cross-multiplied kappa — sign-split ppm, chance term
       // off the marginal product join, never floored p_o/p_e
-      oracle = {
-      val lex = Map(
-        "de" -> "['join','merge','sort','order']",
-        "en" -> "['the','a','of','key']",
-        "es" -> "['data','row','table','column']",
-        "fr" -> "['query','filter','group','window']",
-        "zh" -> "['spark','stream','batch','vector']")
-      val scores = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"CAST(len(list_filter(toks2, x -> list_contains(${lex(c)}, x))) AS BIGINT) AS score_$c")
-        .mkString(",\n    ")
-      val cases = Seq("de", "en", "es", "fr", "zh").map(c =>
-        s"WHEN score_$c = g THEN '$c'").mkString(" ")
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-         |  FROM documents),
-         |f AS (
-         |  SELECT doc_id,
-         |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-         |  FROM toks),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-         |  FROM f GROUP BY doc_id),
-         |t2 AS (SELECT doc_id, string_split(text,' ') AS toks2
-         |  FROM documents),
-         |s2 AS (SELECT doc_id,
-         |    $scores
-         |  FROM t2),
-         |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
-         |    score_fr, score_zh) AS g FROM s2),
-         |p AS (SELECT doc_id,
-         |    CASE $cases ELSE 'und' END AS pred_lang FROM g2),
+      oracle = s"""WITH $sqlE46Margin,
+         |${sqlLangPred("doc_id")},
          |j AS (
          |  SELECT CASE WHEN m.margin > 0 THEN 1 ELSE 0 END AS pred_a,
          |    CASE WHEN p.pred_lang = 'en' THEN 1 ELSE 0 END AS pred_b
@@ -6396,33 +5638,18 @@ object SparkEntry {
          |  CAST(CASE WHEN den = 0 THEN 0
          |    WHEN num >= 0 THEN 1000000 * num // den
          |    ELSE -(1000000 * (-num) // den) END AS BIGINT) AS kappa_ppm
-         |FROM fin""".stripMargin
-    }),
+         |FROM fin""".stripMargin),
 
     // H17: MCC at the margin>0 operating point (q_mcnemar's pred_a) —
     // the imbalance-honest single-threshold verdict beside H8's F1
     QueryDef("q_mcc", (s, d) =>
       ml.Evaluation.mccAtThreshold(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         threshold = 1L, score = "margin", label = "is_en"),
       // H17: exact cells; MCC = one double step in pinned literal order
       // (each marginal factor < 2^53 exactly representable, the H13 sqrt
       // precedent); zero marginal pins 0.0
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
+      oracle = s"""WITH $sqlE46Margin,
         |sc AS (
         |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
         |  FROM m JOIN documents d USING (doc_id)),
@@ -6450,34 +5677,11 @@ object SparkEntry {
     // calibration gate beside H5's picture and H12's attribution
     QueryDef("q_ece", (s, d) =>
       ml.Evaluation.expectedCalibrationError(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         score = "margin", label = "is_en"),
       // H18: ECE with the weight-before-floor exact form (one floor at
       // the final div n); MCE's inner floor is on a non-negative ratio
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bb AS (
-        |  SELECT (least(999999, greatest(0, 500000 + margin * 25))
-        |      // 50000) * 50000 + 25000 AS phat,
-        |    CAST(count(*) AS BIGINT) AS n_k,
-        |    CAST(sum(lab) AS BIGINT) AS np_k
-        |  FROM sc GROUP BY 1),
+      oracle = s"""WITH $sqlE46ForecastBins,
         |ag AS (
         |  SELECT CAST(sum(n_k) AS BIGINT) AS n,
         |    CAST(count(*) AS BIGINT) AS n_bins,
@@ -6510,14 +5714,7 @@ object SparkEntry {
     // q_kmv_distinct — two estimator families, one task, both
     // integer-exact cross-engine
     QueryDef("q_hll_distinct", (s, d) =>
-      ops.Sketches.hllDistinct(
-        Tables.customer(s, d).select(col("c_custkey"),
-          col("c_nationkey").cast("long").as("c_nationkey"))
-          .join(Tables.orders(s, d).select(col("o_orderkey"),
-            col("o_custkey").as("c_custkey")), Seq("c_custkey"))
-          .join(Tables.lineitem(s, d).select(
-            col("l_orderkey").as("o_orderkey"), col("l_partkey")),
-            Seq("o_orderkey")),
+      ops.Sketches.hllDistinct(nationParts(s, d),
         grp = "c_nationkey", v = "l_partkey"),
       // HLL twin: identical md5 register routing; ρ = trailing-zeros
       // position via (w & -w) — pure integer bit ops both engines; the
@@ -6588,37 +5785,10 @@ object SparkEntry {
     // English — every operating point an exact integer
     QueryDef("q_pr_curve", (s, d) =>
       ml.Evaluation.prCurve(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         score = "margin", label = "is_en"),
       // PR-curve twin: the q_auc scored CTE, descending cumulative TP/FP
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(SUM(lab) AS BIGINT) AS np
-        |        FROM sc GROUP BY s),
-        |cum AS (SELECT s,
-        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |        FROM bys),
+      oracle = s"""WITH $sqlE46Cum,
         |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos FROM bys)
         |SELECT s AS threshold, tp, pp - tp AS fp,
         |  CAST(tp * 1000000 // greatest(pp, 1) AS BIGINT)
@@ -6727,72 +5897,7 @@ object SparkEntry {
       // RRF twin: the q_bm25 pipeline at k=10 (cut < 11) + the
       // q_ann_brute pipeline with %50-aligned queries at k=10, fused by
       // rank only — 10^6 // (60 + rnk) summed per (query, item)
-      oracle = """WITH m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
-        |reps AS (SELECT ch, min(doc_id) AS rep, count(*) AS gsz
-        |  FROM m GROUP BY 1),
-        |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
-        |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
-        |gs AS (SELECT rep AS doc_id, gsz FROM reps),
-        |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM rd),
-        |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || ' ' || toks[i+1])) AS tok
-        |  FROM t WHERE len(toks) >= 2),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM g GROUP BY 1, 2),
-        |dl AS (SELECT doc_id,
-        |    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END
-        |      AS BIGINT) AS dl
-        |  FROM t),
-        |c AS (SELECT CAST(sum(gs.gsz) AS BIGINT) AS n,
-        |             CAST(sum(gs.gsz * dl.dl) AS BIGINT) AS s
-        |  FROM dl JOIN gs USING (doc_id)),
-        |dft AS (SELECT tok, CAST(sum(gs.gsz) AS BIGINT) AS df
-        |  FROM tf JOIN gs USING (doc_id) GROUP BY 1),
-        |kept0 AS (
-        |  SELECT tf.doc_id, tf.tok, tf.tf, dft.df
-        |  FROM tf JOIN dft USING (tok) CROSS JOIN c
-        |  WHERE dft.df <= CAST(c.n AS DOUBLE) * 0.4),
-        |kept AS (
-        |  SELECT doc_id, tok, tf, df FROM (
-        |    SELECT k.*, row_number() OVER (PARTITION BY tok
-        |      ORDER BY tf DESC, doc_id) AS pr
-        |    FROM kept0 k)
-        |  WHERE pr <= 1000),
-        |qdocs AS (SELECT doc_id AS q_id, rep AS qrep FROM members
-        |  WHERE doc_id % 50 = 0 AND doc_id < 20000000),
-        |qpost AS (
-        |  SELECT DISTINCT qd.qrep, k.tok
-        |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
-        |  JOIN kept k ON k.doc_id = qd.qrep),
-        |terms AS (
-        |  SELECT q.qrep, k.doc_id AS crep,
-        |    CAST(c.s AS DOUBLE) AS sd, CAST(k.tf AS DOUBLE) AS tfd,
-        |    CAST(c.n AS DOUBLE) AS nd, CAST(k.df AS DOUBLE) AS dfd,
-        |    CAST(d.dl AS DOUBLE) AS dld
-        |  FROM qpost q JOIN kept k USING (tok)
-        |  JOIN dl d ON d.doc_id = k.doc_id
-        |  CROSS JOIN c),
-        |scoredc AS (
-        |  SELECT qrep, crep,
-        |    CAST(SUM(CAST(ROUND((22.0 * sd * tfd * (2.0*nd - 2.0*dfd + 1.0) * 1000000.0) / ((10.0*sd*tfd + 3.0*sd + 9.0*dld*nd) * (2.0*dfd + 1.0))) AS BIGINT)) AS BIGINT) AS score_u
-        |  FROM terms GROUP BY 1, 2),
-        |bys AS (
-        |  SELECT sc.qrep, sc.score_u, CAST(sum(g.gsz) AS BIGINT) AS msz
-        |  FROM scoredc sc JOIN gs g ON g.doc_id = sc.crep
-        |  GROUP BY 1, 2),
-        |cut AS (
-        |  SELECT qrep, score_u FROM (
-        |    SELECT qrep, score_u,
-        |      COALESCE(SUM(msz) OVER (PARTITION BY qrep ORDER BY score_u DESC
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS higher
-        |    FROM bys)
-        |  WHERE higher < 11),
-        |ex AS (
-        |  SELECT qd.q_id, mem.doc_id, sc.score_u
-        |  FROM qdocs qd
-        |  JOIN scoredc sc ON sc.qrep = qd.qrep
-        |  JOIN cut ON cut.qrep = sc.qrep AND cut.score_u = sc.score_u
-        |  JOIN members mem ON mem.rep = sc.crep
-        |  WHERE mem.doc_id <> qd.q_id),
+      oracle = s"""WITH ${sqlBm25Ex(10)},
         |lex AS (
         |  SELECT q_id, doc_id AS item_id, rnk FROM (
         |    SELECT *, CAST(row_number() OVER (PARTITION BY q_id
@@ -7031,38 +6136,11 @@ object SparkEntry {
     // scorer, exact argmax in pico-units over the distinct-score frame
     QueryDef("q_best_f1", (s, d) =>
       ml.Evaluation.bestF1(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         score = "margin", label = "is_en"),
       // best-F1 twin: the q_pr_curve CTEs + exact pico argmax, highest
       // threshold on ties
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(SUM(lab) AS BIGINT) AS np
-        |        FROM sc GROUP BY s),
-        |cum AS (SELECT s,
-        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |        FROM bys),
+      oracle = s"""WITH $sqlE46Cum,
         |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos FROM bys),
         |pts AS (
         |  SELECT s AS threshold, tp, pp, n_pos,
@@ -7076,37 +6154,10 @@ object SparkEntry {
     // H11: min-money-lost operating point (review 100c, miss 900c)
     QueryDef("q_cost_threshold", (s, d) =>
       ml.Evaluation.costThreshold(
-        ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
-          .select(col("doc_id"), col("margin"))
-          .join(Tables.documents(s, d).select(col("doc_id"),
-            when(col("lang") === "en", 1L).otherwise(0L).as("is_en")),
-            Seq("doc_id")),
+        e46Frame(s, d, isEn),
         fpCostCents = 100L, fnCostCents = 900L,
         score = "margin", label = "is_en"),
-      oracle = """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
-        |  FROM toks),
-        |m AS (
-        |  SELECT doc_id,
-        |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
-        |  FROM f GROUP BY doc_id),
-        |sc AS (
-        |  SELECT margin AS s,
-        |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
-        |  FROM m JOIN documents d USING (doc_id)),
-        |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-        |          CAST(SUM(lab) AS BIGINT) AS np
-        |        FROM sc GROUP BY s),
-        |cum AS (SELECT s,
-        |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
-        |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |        FROM bys),
+      oracle = s"""WITH $sqlE46Cum,
         |t AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
         |        CAST(MAX(s) + 1 AS BIGINT) AS none_t FROM bys),
         |pts AS (
@@ -7379,15 +6430,7 @@ object SparkEntry {
 
     // H25: recall@3 of the IVF index vs the brute-force ground truth
     QueryDef("q_ann_recall", (s, d) => ops.Ann.recallAtK(Tables.embeddings(s, d)),
-      oracle = """WITH v AS (
-        |  SELECT vec_id, label, list_transform(embedding,
-        |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, label, svec,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
-        |  FROM v),
+      oracle = s"""WITH $sqlLabeledVecNorms,
         |q AS (SELECT vec_id AS q_id, svec AS q_svec, norm2 AS q_norm2
         |  FROM n WHERE vec_id < 10),
         |bsc AS (
@@ -7679,6 +6722,77 @@ object SparkEntry {
     registry.map(d => d.name -> d.oracle).toMap
 
   // ---------------------------------------------------------------------
+  // Spark sub-plans that several builds share.
+  // ---------------------------------------------------------------------
+
+  /** H9/H11 shared frame: the deterministic integer risk score per
+    * client (passport expiry + blacklist balance + key-derived weight
+    * term), labeled by fraud-mart membership. */
+  private def fraudScoredFrame(s: SparkSession, d: String): DataFrame = {
+    val labels = FraudRules.mart(FraudRules.allRules(s, d))
+      .select(col("client_key").as("c_custkey")).distinct()
+      .withColumn("label", lit(1L))
+    FraudModel.clients(s, d)
+      .select(col("c_custkey"),
+        (when(to_date(lit("2024-06-30")) > col("passport_valid_to"), 400L)
+          .otherwise(0L) +
+          when(col("c_acctbal") < 0, 300L).otherwise(0L) +
+          (col("c_custkey") * 37) % 100).as("score"))
+      .join(labels, Seq("c_custkey"), "left")
+      .withColumn("label", coalesce(col("label"), lit(0L)))
+  }
+
+  /** The E46 scorer's `margin` per doc joined to the doc columns `cols`
+    * — the frame the H-family scorer evaluations read. */
+  private def e46Frame(s: SparkSession, d: String, cols: Column*): DataFrame =
+    ops.TextAnalysis.hashedLinearScore(Tables.documents(s, d))
+      .select(col("doc_id"), col("margin"))
+      .join(Tables.documents(s, d).select(col("doc_id") +: cols: _*),
+        Seq("doc_id"))
+
+  /** The E46 label: 1 when the doc is English. */
+  private def isEn: Column =
+    when(col("lang") === "en", 1L).otherwise(0L).as("is_en")
+
+  /** H13/H22/H23 input: the E46 margin and the doc length, each binned
+    * (`va`, `vb`). */
+  private def e46MarginVsLength(s: SparkSession, d: String): DataFrame =
+    e46Frame(s, d, col("n_chars"))
+      .select(expr("(margin + 1000000000) div 500").as("va"),
+        expr("n_chars div 200").as("vb"))
+
+  /** H14/H16 raters per doc: the E46 scorer (`pred_a`: margin > 0) and
+    * the E7 lexicon lang-id (`pred_b`: predicts English). */
+  private def e46VsLangId(docs: DataFrame): DataFrame = {
+    val a = ops.TextAnalysis.hashedLinearScore(docs)
+      .select(col("doc_id"),
+        when(col("margin") > 0L, 1L).otherwise(0L).as("pred_a"))
+    val b = ops.TextAnalysis.langId(docs)
+      .select(col("doc_id"),
+        when(col("pred_lang") === "en", 1L).otherwise(0L).as("pred_b"))
+    a.join(b, Seq("doc_id"))
+  }
+
+  /** D52 input: each line item's part key under its customer's nation. */
+  private def nationParts(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d).select(col("c_custkey"),
+      col("c_nationkey").cast("long").as("c_nationkey"))
+      .join(Tables.orders(s, d).select(col("o_orderkey"),
+        col("o_custkey").as("c_custkey")), Seq("c_custkey"))
+      .join(Tables.lineitem(s, d).select(
+        col("l_orderkey").as("o_orderkey"), col("l_partkey")),
+        Seq("o_orderkey"))
+
+  /** The B39–B45 live-mart input: orders as `(k, price_cents, status,
+    * part)` over 8 key-derived partitions; twin of [[sqlMartOrders]]. */
+  private def martOrders(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select(
+      col("o_orderkey").as("k"),
+      expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"),
+      col("o_orderstatus").as("status"),
+      expr("concat('p', CAST(o_orderkey % 8 AS STRING))").as("part"))
+
+  // ---------------------------------------------------------------------
   // DuckDB oracle twins. Shared CTE bodies keep the analog model
   // definitions in one place (must mirror graft.fraud.FraudModel).
   // ---------------------------------------------------------------------
@@ -7700,23 +6814,6 @@ object SparkEntry {
       |    c_mktsegment AS segment, c_acctbal,
       |    DATE '2024-01-01' + CAST((c_custkey * 7) % 400 AS INTEGER) AS passport_valid_to
       |  FROM customer)""".stripMargin
-
-  /** H9/H11 shared frame: the deterministic integer risk score per
-    * client (passport expiry + blacklist balance + key-derived weight
-    * term), labeled by fraud-mart membership. */
-  private def fraudScoredFrame(s: SparkSession, d: String): DataFrame = {
-    val labels = FraudRules.mart(FraudRules.allRules(s, d))
-      .select(col("client_key").as("c_custkey")).distinct()
-      .withColumn("label", lit(1L))
-    FraudModel.clients(s, d)
-      .select(col("c_custkey"),
-        (when(to_date(lit("2024-06-30")) > col("passport_valid_to"), 400L)
-          .otherwise(0L) +
-          when(col("c_acctbal") < 0, 300L).otherwise(0L) +
-          (col("c_custkey") * 37) % 100).as("score"))
-      .join(labels, Seq("c_custkey"), "left")
-      .withColumn("label", coalesce(col("label"), lit(0L)))
-  }
 
   private def fraudPassportBody =
     s"""(WITH $sqlTxns, $sqlClients,
@@ -7790,6 +6887,45 @@ object SparkEntry {
        |  'guessing_amount_fraud' AS rule
        |FROM flagged f LEFT JOIN clients c ON f.user_id = c.c_custkey)""".stripMargin
 
+  /** H9/H11 twin of [[fraudScoredFrame]]: `scored(c_custkey, s, lab)`,
+    * labeled by membership in the four rule bodies' mart (each body
+    * carries its own WITH scope; the outer clients CTE is shadowed
+    * inside them, deliberately identically). */
+  private def sqlFraudScored =
+    s"""$sqlClients,
+       |mart AS (
+       |  SELECT DISTINCT client_key FROM (
+       |    SELECT client_key FROM $fraudPassportBody
+       |    UNION ALL SELECT client_key FROM $fraudAccountBody
+       |    UNION ALL SELECT client_key FROM $fraudCityBody
+       |    UNION ALL SELECT client_key FROM $fraudAmountBody)),
+       |scored AS (
+       |  SELECT c.c_custkey,
+       |    (CASE WHEN DATE '2024-06-30' > c.passport_valid_to
+       |       THEN 400 ELSE 0 END
+       |     + CASE WHEN c.c_acctbal < 0 THEN 300 ELSE 0 END
+       |     + (c.c_custkey * 37) % 100) AS s,
+       |    CASE WHEN m.client_key IS NULL THEN 0 ELSE 1 END AS lab
+       |  FROM clients c LEFT JOIN mart m ON c.c_custkey = m.client_key)""".stripMargin
+
+  /** H4's exact tie-aware rank-sum AUC over a scored CTE `(s, lab)`:
+    * per-score counts `bys`, exclusive cumulative rank, one ppm row. */
+  private def sqlRankSumAuc(scored: String): String =
+    s"""bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+       |          CAST(SUM(lab) AS BIGINT) AS np
+       |        FROM $scored GROUP BY s),
+       |rk AS (SELECT *, COALESCE(SUM(n) OVER (ORDER BY s
+       |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+       |       FROM bys),
+       |ag AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
+       |         CAST(SUM(n - np) AS BIGINT) AS n_neg,
+       |         CAST(SUM(np * (2 * cum + n + 1)) AS BIGINT) AS sum_r2
+       |       FROM rk)
+       |SELECT n_pos, n_neg,
+       |  CAST((sum_r2 - n_pos * (n_pos + 1)) * 500000
+       |    // (n_pos * n_neg) AS BIGINT) AS auc_ppm
+       |FROM ag""".stripMargin
+
   /** Transitive closure over the LSH candidate pairs — the shared truth
     * for both cluster operators (min-label `q_dedup_clusters` and
     * star-contraction `q_dedup_cc`).
@@ -7845,10 +6981,6 @@ object SparkEntry {
        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
        |FROM b GROUP BY 1, 2 ORDER BY source, split""".stripMargin
 
-  /** Shared LSH pipeline CTEs (mirror of [[ops.Dedup.minhashLsh]]):
-    * synthetic-dup universe → shingles → minhash signatures → banded
-    * buckets → candidate pairs (`cand`). Consumed by the minhash,
-    * verify, and clusters oracles. */
   /** E53 batch-membership predicate, generated from the SAME constants
     * the Scala operator uses (Dedup.ReplicaShift / SyntheticDupBase) so
     * the two twins cannot drift: a doc is batch iff it is a synthetic
@@ -7858,6 +6990,10 @@ object SparkEntry {
     s"$c % ${ops.Dedup.ReplicaShift} >= ${ops.Dedup.SyntheticDupBase} " +
       s"OR $c % 10 = 7"
 
+  /** Shared LSH pipeline CTEs (mirror of [[ops.Dedup.minhashLsh]]):
+    * synthetic-dup universe → shingles → minhash signatures → banded
+    * buckets → candidate pairs (`cand`). Consumed by the minhash,
+    * verify, and clusters oracles. */
   private val sqlLshCtes: String = {
     val sigDefs = (0 until 8).map(i =>
       s"MIN((${ops.Dedup.minhashA(i)}*x + ${ops.Dedup.minhashB(i)}) % ${ops.Dedup.MinhashP}) AS sig_$i")
@@ -7943,18 +7079,6 @@ object SparkEntry {
        |  '2024-03-02', '2999-12-31', CAST(1 AS BIGINT)
        |FROM scd_deleted)""".stripMargin
 
-  /** D47 PageRank twin: the five damped-update iterations unrolled as
-    * chained CTEs (standard SQL forbids aggregating over the recursive
-    * term, so a recursive CTE can't express the per-round SUM —
-    * unrolling keeps the oracle a single deterministic statement).
-    * Integer ppm + floor division (`//`) mirrors Spark's `div`. */
-  /** AS MATERIALIZED throughout is load-bearing at the 100× tier: a
-    * plain CTE gets INLINED into every reference, so each of the five
-    * rounds re-derived p — the DISTINCT over the orders⋈lineitem join
-    * (60M rows at 100×) — and the oracle died of spill ENOSPC (r10's
-    * one unresolved FAIL). Materialized, the big join runs once and
-    * each round is one hash join over the 25M-edge list: measured
-    * 55 s at 100×, hash-identical to the engine dump. */
   /** Shared fuzzy-lookup twin (q_fuzzy / q_fuzzy_dl differ only in the
     * edit-distance metric). See the q_fuzzy wiring note for why mem6
     * contracts the expansion. */
@@ -8004,67 +7128,385 @@ object SparkEntry {
        |SELECT q_id, match_id, dist, rn FROM ranked
        |WHERE rn <= 5 ORDER BY q_id, rn""".stripMargin
 
-  private val sqlPageRank: String = {
-    val rounds = (1 to 5).map { i =>
-      s"""r$i AS MATERIALIZED (
-         |  SELECT n.node,
-         |    150000 + (COALESCE(s.c, 0) * 85) // 100 AS rank_ppm
-         |  FROM n LEFT JOIN (
-         |    SELECT e.dst AS node,
-         |      CAST(SUM(r.rank_ppm // od.outdeg) AS BIGINT) AS c
-         |    FROM e JOIN r${i - 1} r ON r.node = e.src
-         |           JOIN od ON od.src = e.src
-         |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH p AS MATERIALIZED (
-       |  SELECT DISTINCT o_custkey AS cust, l_suppkey + 500000000 AS supp
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-       |e AS MATERIALIZED (SELECT cust AS src, supp AS dst FROM p
-       |      UNION ALL SELECT supp AS src, cust AS dst FROM p),
-       |od AS MATERIALIZED (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
-       |       FROM e GROUP BY 1),
-       |n AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-       |r0 AS MATERIALIZED (SELECT node, CAST(1000000 AS BIGINT) AS rank_ppm FROM n),
-       |$rounds
-       |SELECT CAST(node AS BIGINT) AS node,
-       |  CAST(rank_ppm AS BIGINT) AS rank_ppm
-       |FROM r5 ORDER BY node""".stripMargin
-  }
+  /** E46 twin of [[ops.TextAnalysis.hashedLinearScore]]'s features:
+    * each token's md5-hashed bucket, `f(doc_id, b)`. */
+  private val sqlE46Buckets =
+    """toks AS (
+      |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+      |  FROM documents),
+      |f AS (
+      |  SELECT doc_id,
+      |    CAST(('0x'||substr(md5('qw:'||tok),1,8)) AS BIGINT) % 1024 AS b
+      |  FROM toks)""".stripMargin
 
-  /** D64 twin: fixed 12 peel rounds (fixpoint measured at 2 on the
-    * trade graph at sf0.01/sf0.1; rounds past fixpoint are idempotent,
-    * so the generous constant is pure safety margin — and the Spark
-    * side *requires* convergence, so a graph needing more rounds fails
-    * loudly there instead of hash-mismatching here). The SQL carries
-    * its OWN convergence sentinel too — the final SELECT error()s if
-    * the last two peel rounds still differ — so the oracle is valid
-    * standalone, not only alongside the Spark require(). */
-  private def sqlKCore: String = {
-    val k = 24
-    val rounds = 12
-    // AS MATERIALIZED is load-bearing: DuckDB INLINES plain CTE
-    // references, and each round reads its predecessor twice — without
-    // materialization e12 would expand to 2^12 scans of lineitem
-    // (observed as fd exhaustion, not just slowness).
-    val peels = (1 to rounds).map { i =>
-      s"""k$i AS MATERIALIZED (SELECT src FROM e${i - 1} GROUP BY src
-         |        HAVING count(*) >= $k),
-         |e$i AS MATERIALIZED (SELECT c.src, c.dst FROM e${i - 1} c
-         |        JOIN k$i a ON c.src = a.src JOIN k$i b ON c.dst = b.src)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH p AS MATERIALIZED (
-       |  SELECT DISTINCT o_custkey AS cust, l_suppkey + 500000000 AS supp
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-       |e0 AS MATERIALIZED (SELECT cust AS src, supp AS dst FROM p
-       |       UNION ALL SELECT supp AS src, cust AS dst FROM p),
-       |$peels
-       |SELECT CAST(src AS BIGINT) AS node,
-       |  CAST(count(*) AS BIGINT) AS core_deg
-       |FROM e$rounds
-       |WHERE (SELECT CASE WHEN (SELECT count(*) FROM e${rounds - 1})
-       |         = (SELECT count(*) FROM e$rounds) THEN 1
-       |       ELSE error('q_kcore oracle: peel not converged after '
-       |         || '$rounds rounds — raise rounds') END) = 1
-       |GROUP BY src ORDER BY node""".stripMargin
-  }
+  /** The E46 per-doc integer margin `m(doc_id, margin)` that every
+    * scorer-evaluation twin starts from. */
+  private val sqlE46Margin =
+    s"""$sqlE46Buckets,
+       |m AS (
+       |  SELECT doc_id,
+       |    CAST(SUM((b * 2654435761) % 2001 - 1000) AS BIGINT) AS margin
+       |  FROM f GROUP BY doc_id)""".stripMargin
+
+  /** [[sqlE46Margin]] labeled: `sc(s, lab)`, lab 1 for English docs. */
+  private val sqlE46Labeled =
+    s"""$sqlE46Margin,
+       |sc AS (
+       |  SELECT margin AS s,
+       |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+       |  FROM m JOIN documents d USING (doc_id))""".stripMargin
+
+  /** The PR-curve CTEs over [[sqlE46Labeled]]: per-score counts
+    * `bys(s, n, np)`, then descending cumulative `cum(s, tp, pp)`. */
+  private val sqlE46Cum =
+    s"""$sqlE46Labeled,
+       |bys AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
+       |          CAST(SUM(lab) AS BIGINT) AS np
+       |        FROM sc GROUP BY s),
+       |cum AS (SELECT s,
+       |          CAST(SUM(np) OVER (ORDER BY s DESC ROWS BETWEEN
+       |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
+       |          CAST(SUM(n) OVER (ORDER BY s DESC ROWS BETWEEN
+       |            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
+       |        FROM bys)""".stripMargin
+
+  /** H13/H23 concordance CTEs over the E46 margin and doc length, each
+    * binned: cells `(i, j, n)`, concordant/discordant pair counts, and
+    * the tie counts on either margin. */
+  private val sqlE46Concordance =
+    s"""$sqlE46Margin,
+       |sc AS (
+       |  SELECT (margin + 1000000000) // 500 AS va, n_chars // 200 AS vb
+       |  FROM m JOIN documents d USING (doc_id)),
+       |cells AS (SELECT va AS i, vb AS j, CAST(count(*) AS BIGINT) AS n
+       |  FROM sc GROUP BY 1, 2),
+       |conc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
+       |    AS c_pairs
+       |  FROM cells a JOIN cells b ON b.i > a.i AND b.j > a.j),
+       |disc AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT)
+       |    AS d_pairs
+       |  FROM cells a JOIN cells b ON b.i > a.i AND b.j < a.j),
+       |ma AS (SELECT CAST(sum(t) AS BIGINT) AS ntot,
+       |    CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_a
+       |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY i)),
+       |mb AS (SELECT CAST(sum(t * (t - 1) // 2) AS BIGINT) AS ties_b
+       |  FROM (SELECT CAST(sum(n) AS BIGINT) AS t FROM cells GROUP BY j))""".stripMargin
+
+  /** H12/H18 forecast bins: the E46 margin through the clamped-linear
+    * link (slope 25) to a ppm forecast, 50000-ppm bins at midpoints,
+    * `bb(phat, n_k, np_k)`. */
+  private val sqlE46ForecastBins =
+    s"""$sqlE46Margin,
+       |sc AS (
+       |  SELECT margin, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS lab
+       |  FROM m JOIN documents d USING (doc_id)),
+       |bb AS (
+       |  SELECT (least(999999, greatest(0, 500000 + margin * 25))
+       |      // 50000) * 50000 + 25000 AS phat,
+       |    CAST(count(*) AS BIGINT) AS n_k,
+       |    CAST(sum(lab) AS BIGINT) AS np_k
+       |  FROM sc GROUP BY 1)""".stripMargin
+
+  /** The E7 lexicons, in the lang-id's decision order. */
+  private val langLexicon = Seq(
+    "de" -> "['join','merge','sort','order']",
+    "en" -> "['the','a','of','key']",
+    "es" -> "['data','row','table','column']",
+    "fr" -> "['query','filter','group','window']",
+    "zh" -> "['spark','stream','batch','vector']")
+
+  /** E7 twin of [[ops.TextAnalysis.langId]]: one lexicon-hit count
+    * `score_<lang>` per language over the token list `toks`. */
+  private def sqlLangScores(toks: String): String =
+    langLexicon.map { case (c, words) =>
+      s"CAST(len(list_filter($toks, x -> list_contains($words, x))) AS BIGINT) AS score_$c"
+    }.mkString(",\n    ")
+
+  /** The lang-id decision over the scores and their max `g`: the first
+    * language, in lexicon order, that reaches `g`. */
+  private val sqlLangCases =
+    langLexicon.map { case (c, _) => s"WHEN score_$c = g THEN '$c'" }.mkString(" ")
+
+  /** The lang-id prediction as CTEs `t2 → s2 → g2 → p(cols..., pred_lang)`,
+    * carrying the document columns `cols` through. */
+  private def sqlLangPred(cols: String): String =
+    s"""t2 AS (SELECT $cols, string_split(text,' ') AS toks2
+       |  FROM documents),
+       |s2 AS (SELECT $cols,
+       |    ${sqlLangScores("toks2")}
+       |  FROM t2),
+       |g2 AS (SELECT *, greatest(score_de, score_en, score_es,
+       |    score_fr, score_zh) AS g FROM s2),
+       |p AS (SELECT $cols,
+       |    CASE $sqlLangCases ELSE 'und' END AS pred_lang FROM g2)""".stripMargin
+
+  /** E39 twin of [[ops.Bm25.topK]] up to the expanded top-`k` hits
+    * `ex(q_id, doc_id, score_u)`: postings and truncation per distinct
+    * content, corpus stats (df/N/S) at doc level through group sizes. */
+  private def sqlBm25Ex(k: Int): String =
+    s"""m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
+       |reps AS (SELECT ch, min(doc_id) AS rep, count(*) AS gsz
+       |  FROM m GROUP BY 1),
+       |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
+       |rd AS (SELECT m.doc_id, m.text FROM m JOIN reps r ON m.doc_id = r.rep),
+       |gs AS (SELECT rep AS doc_id, gsz FROM reps),
+       |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM rd),
+       |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+       |    i -> toks[i] || ' ' || toks[i+1])) AS tok
+       |  FROM t WHERE len(toks) >= 2),
+       |tf AS (SELECT doc_id, tok, count(*) AS tf FROM g GROUP BY 1, 2),
+       |dl AS (SELECT doc_id,
+       |    CAST(CASE WHEN len(toks) >= 2 THEN len(toks) - 1 ELSE 0 END
+       |      AS BIGINT) AS dl
+       |  FROM t),
+       |c AS (SELECT CAST(sum(gs.gsz) AS BIGINT) AS n,
+       |             CAST(sum(gs.gsz * dl.dl) AS BIGINT) AS s
+       |  FROM dl JOIN gs USING (doc_id)),
+       |dft AS (SELECT tok, CAST(sum(gs.gsz) AS BIGINT) AS df
+       |  FROM tf JOIN gs USING (doc_id) GROUP BY 1),
+       |kept0 AS (
+       |  SELECT tf.doc_id, tf.tok, tf.tf, dft.df
+       |  FROM tf JOIN dft USING (tok) CROSS JOIN c
+       |  WHERE dft.df <= CAST(c.n AS DOUBLE) * 0.4),
+       |kept AS (
+       |  SELECT doc_id, tok, tf, df FROM (
+       |    SELECT k.*, row_number() OVER (PARTITION BY tok
+       |      ORDER BY tf DESC, doc_id) AS pr
+       |    FROM kept0 k)
+       |  WHERE pr <= 1000),
+       |qdocs AS (SELECT doc_id AS q_id, rep AS qrep FROM members
+       |  WHERE doc_id % 50 = 0 AND doc_id < 20000000),
+       |qpost AS (
+       |  SELECT DISTINCT qd.qrep, k.tok
+       |  FROM (SELECT DISTINCT qrep FROM qdocs) qd
+       |  JOIN kept k ON k.doc_id = qd.qrep),
+       |terms AS (
+       |  SELECT q.qrep, k.doc_id AS crep,
+       |    CAST(c.s AS DOUBLE) AS sd, CAST(k.tf AS DOUBLE) AS tfd,
+       |    CAST(c.n AS DOUBLE) AS nd, CAST(k.df AS DOUBLE) AS dfd,
+       |    CAST(d.dl AS DOUBLE) AS dld
+       |  FROM qpost q JOIN kept k USING (tok)
+       |  JOIN dl d ON d.doc_id = k.doc_id
+       |  CROSS JOIN c),
+       |scoredc AS (
+       |  SELECT qrep, crep,
+       |    CAST(SUM(CAST(ROUND((22.0 * sd * tfd * (2.0*nd - 2.0*dfd + 1.0) * 1000000.0) / ((10.0*sd*tfd + 3.0*sd + 9.0*dld*nd) * (2.0*dfd + 1.0))) AS BIGINT)) AS BIGINT) AS score_u
+       |  FROM terms GROUP BY 1, 2),
+       |bys AS (
+       |  SELECT sc.qrep, sc.score_u, CAST(sum(g.gsz) AS BIGINT) AS msz
+       |  FROM scoredc sc JOIN gs g ON g.doc_id = sc.crep
+       |  GROUP BY 1, 2),
+       |cut AS (
+       |  SELECT qrep, score_u FROM (
+       |    SELECT qrep, score_u,
+       |      COALESCE(SUM(msz) OVER (PARTITION BY qrep ORDER BY score_u DESC
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS higher
+       |    FROM bys)
+       |  WHERE higher < ${k + 1}),
+       |ex AS (
+       |  SELECT qd.q_id, mem.doc_id, sc.score_u
+       |  FROM qdocs qd
+       |  JOIN scoredc sc ON sc.qrep = qd.qrep
+       |  JOIN cut ON cut.qrep = sc.qrep AND cut.score_u = sc.score_u
+       |  JOIN members mem ON mem.rep = sc.crep
+       |  WHERE mem.doc_id <> qd.q_id)""".stripMargin
+
+  /** E50 twin of [[ops.LmQuality.score]] up to the per-rep code
+    * lengths `sc(doc_id, n_pairs, bits_sum)`; `members` expands a rep
+    * back to its docs. */
+  private val sqlLmBits =
+    """m AS (SELECT doc_id, md5(text) AS ch, text FROM documents),
+      |reps AS (SELECT ch, min(doc_id) AS rep,
+      |    CAST(sum(CASE WHEN doc_id % 5 <> 0 THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS tcnt
+      |  FROM m GROUP BY 1),
+      |members AS (SELECT r.rep, m.doc_id FROM m JOIN reps r USING (ch)),
+      |rd AS (SELECT m.doc_id, string_split(m.text, ' ') AS t
+      |  FROM m JOIN reps r ON m.doc_id = r.rep),
+      |toks AS (SELECT doc_id, unnest(t) AS w FROM rd),
+      |p2 AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
+      |    unnest(t[2:len(t)]) AS w2
+      |  FROM rd WHERE len(t) >= 2),
+      |tc AS (SELECT rep AS doc_id, tcnt FROM reps),
+      |uni AS (SELECT w, CAST(sum(tc.tcnt) AS BIGINT) AS c1
+      |  FROM toks JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1),
+      |big AS (SELECT w1, w2, CAST(sum(tc.tcnt) AS BIGINT) AS c2
+      |  FROM p2 JOIN tc USING (doc_id) WHERE tc.tcnt > 0 GROUP BY 1, 2),
+      |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS tot FROM uni),
+      |bits AS (SELECT p.doc_id,
+      |    CAST(CASE WHEN b.c2 IS NOT NULL
+      |      THEN length(to_base(u1.c1, 2)) - length(to_base(b.c2, 2))
+      |    WHEN u2.c1 IS NOT NULL
+      |      THEN length(to_base(t.tot, 2)) - length(to_base(u2.c1, 2)) + 4
+      |    ELSE length(to_base(t.tot, 2)) + 8 END AS BIGINT) AS bits
+      |  FROM p2 p
+      |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
+      |  LEFT JOIN uni u1 ON p.w1 = u1.w
+      |  LEFT JOIN uni u2 ON p.w2 = u2.w
+      |  CROSS JOIN tot t),
+      |sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
+      |    CAST(sum(bits) AS BIGINT) AS bits_sum FROM bits GROUP BY 1)""".stripMargin
+
+  /** SRP signatures of [[ops.Ann]]: 16 md5-signed hyperplanes over the
+    * 64 integer-scaled dims of `from(vec_id, svec)`, packed into one
+    * BIGINT per vector, `sig(vec_id, sig)`. */
+  private def sqlSrpSig(from: String): String =
+    s"""signs AS (
+       |  SELECT j.j AS j, i.i AS i,
+       |    CASE WHEN CAST(('0x'||substr(md5(CAST(j.j AS VARCHAR)||'_'||CAST(i.i AS VARCHAR)),1,8)) AS BIGINT) & 1 = 1
+       |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END AS w
+       |  FROM range(0,16) j(j), range(0,64) i(i)),
+       |ex AS (SELECT vec_id, i.i AS i, svec[CAST(i.i AS INTEGER)+1] AS x
+       |  FROM $from, range(0,64) i(i)),
+       |proj AS (
+       |  SELECT e.vec_id, s.j, SUM(e.x * s.w) AS p
+       |  FROM ex e JOIN signs s ON e.i = s.i GROUP BY 1, 2),
+       |sig AS (
+       |  SELECT vec_id, CAST(SUM(CASE WHEN p >= 0
+       |    THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS sig
+       |  FROM proj GROUP BY vec_id)""".stripMargin
+
+  /** Twin of [[ops.Ann.embedCosineDups]] around its candidate CTEs
+    * `cand(id1, id2)`: injected copies, integer-scaled vectors and
+    * norms, SRP signatures, then the exact cosine verify. */
+  private def sqlEmbedDups(cand: String): String =
+    s"""WITH base AS (
+       |  SELECT vec_id, embedding FROM embeddings
+       |  UNION ALL
+       |  SELECT vec_id + 10000000, embedding FROM embeddings WHERE vec_id % 100 = 0),
+       |v AS (
+       |  SELECT vec_id, list_transform(embedding,
+       |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+       |  FROM base),
+       |n AS (
+       |  SELECT vec_id, svec,
+       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+       |  FROM v),
+       |${sqlSrpSig("n")},
+       |$cand,
+       |sc AS (
+       |  SELECT c.id1, c.id2,
+       |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |      list_transform(range(1,65), i -> x.svec[i]*y.svec[i])), (a,b) -> a+b) AS DOUBLE)
+       |      / (sqrt(CAST(x.norm2 AS DOUBLE)) * sqrt(CAST(y.norm2 AS DOUBLE))) AS cos
+       |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)
+       |SELECT id1, id2, cos FROM sc WHERE cos >= 0.999 ORDER BY id1, id2""".stripMargin
+
+  /** Per-(event_type, day) event counts `daily0` and each type's day
+    * `grid` from its first to its last day — the daily-series input. */
+  private val sqlDailyGrid =
+    """daily0 AS (
+      |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+      |    CAST(count(*) AS BIGINT) AS x
+      |  FROM events GROUP BY 1, 2),
+      |span AS (SELECT event_type, min(day) AS d0, max(day) AS d1
+      |  FROM daily0 GROUP BY 1),
+      |grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day
+      |  FROM span)""".stripMargin
+
+  /** Twin of [[ops.GraphStats.contentDupEdges]] (two injected replicas
+    * per seed): edges `e(id1 < id2)` and oriented triangles `t(a, b, c)`. */
+  private val sqlDupTriangles =
+    """sd AS (SELECT doc_id, text FROM documents WHERE doc_id % 125 = 0),
+      |u AS (
+      |  SELECT doc_id, md5(text) AS ch FROM documents
+      |  UNION ALL SELECT doc_id + 10000000, md5(text) FROM sd
+      |  UNION ALL SELECT doc_id + 20000000, md5(text) FROM sd),
+      |e AS (
+      |  SELECT l.doc_id AS id1, r.doc_id AS id2
+      |  FROM u l JOIN u r ON l.ch = r.ch AND l.doc_id < r.doc_id),
+      |t AS (
+      |  SELECT e1.id1 AS a, e1.id2 AS b, e2.id2 AS c
+      |  FROM e e1
+      |  JOIN e e2 ON e1.id2 = e2.id1
+      |  JOIN e e3 ON e3.id1 = e1.id1 AND e3.id2 = e2.id2)""".stripMargin
+
+  /** E55 winnowing over token lists `t(doc_id, tk)`: 3-gram md5 hashes,
+    * rightmost-min per 4-window as one packed-BIGINT MIN window, the
+    * selected fingerprints `fp(doc_id, wmin)`. */
+  private val sqlWinnowFp =
+    """b AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n FROM t WHERE len(tk) >= 3),
+      |g AS (
+      |  SELECT doc_id, pos0,
+      |    CAST(('0x'||substr(md5(array_to_string(tk[CAST(pos0+1 AS INTEGER):CAST(pos0+3 AS INTEGER)], ' ')),1,8)) AS BIGINT) AS g
+      |  FROM (SELECT doc_id, tk, unnest(range(0, n - 2)) AS pos0 FROM b)),
+      |wm AS (
+      |  SELECT doc_id,
+      |    MIN(g * 268435456 + (268435455 - pos0)) OVER (PARTITION BY doc_id ORDER BY pos0
+      |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
+      |    COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos0
+      |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wn
+      |  FROM g),
+      |fp AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE wn = 4)""".stripMargin
+
+  /** D11 twin: each purchase's last prior error of the same user, -1
+    * where there is none. */
+  private val sqlAsOfPrior =
+    """WITH p AS (
+      |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
+      |  WHERE event_type = 'purchase'),
+      |e AS (
+      |  SELECT user_id, epoch_us(ts) AS ts_us FROM events
+      |  WHERE event_type = 'error')
+      |SELECT p.event_id, p.user_id, p.ts_us,
+      |  COALESCE(e.ts_us, -1) AS asof_ts,
+      |  COALESCE(p.ts_us - e.ts_us, -1) AS gap
+      |FROM p ASOF LEFT JOIN e
+      |  ON p.user_id = e.user_id AND p.ts_us >= e.ts_us
+      |ORDER BY event_id""".stripMargin
+
+  /** Twin of [[martOrders]] under the CTE name `cte`. */
+  private def sqlMartOrders(cte: String): String =
+    s"""$cte AS (
+       |  SELECT o_orderkey AS k,
+       |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+       |    o_orderstatus AS status,
+       |    'p' || CAST(o_orderkey % 8 AS VARCHAR) AS part
+       |  FROM orders)""".stripMargin
+
+  /** The synthetic media decoder: a mod-2^32 rolling hash walks each
+    * payload of `m2(media_id, payload, len, n_luma)`, one `scan` row per
+    * luma sample `i` (the sample is `acc % 256`). */
+  private val sqlLumaScan =
+    """scan AS (
+      |  SELECT media_id, payload, len, n_luma, CAST(0 AS BIGINT) AS i,
+      |    CAST((17*31 + ascii(substr(payload, 1, 1))) % 4294967296 AS BIGINT) AS acc
+      |  FROM m2
+      |  UNION ALL
+      |  SELECT media_id, payload, len, n_luma, i + 1,
+      |    (acc * 31 + ascii(substr(payload, CAST((i + 1) % len AS INTEGER) + 1, 1))) % 4294967296
+      |  FROM scan WHERE i + 1 < n_luma)""".stripMargin
+
+  /** Integer-scaled embeddings with label and squared norm,
+    * `n(vec_id, label, svec, norm2)` — the IVF twins' input. */
+  private val sqlLabeledVecNorms =
+    """v AS (
+      |  SELECT vec_id, label, list_transform(embedding,
+      |    x -> CAST(round(CAST(x AS DOUBLE)*1000000.0) AS BIGINT)) AS svec
+      |  FROM embeddings),
+      |n AS (
+      |  SELECT vec_id, label, svec,
+      |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+      |      list_transform(svec, x -> x*x)), (a,b) -> a+b) AS norm2
+      |  FROM v)""".stripMargin
+
+
+  /** Twin of [[ops.Curation.curate]]'s gates: language, length and
+    * diversity gates `gated`, then the min doc id per content hash
+    * `keepers(content_hash, doc_id)`. */
+  private val sqlCurateKeepers =
+    """g AS (
+      |  SELECT doc_id, lang, text,
+      |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
+      |    CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) AS n_distinct,
+      |    md5(text) AS content_hash
+      |  FROM documents
+      |  WHERE lang IN ('en','de','fr')),
+      |gated AS (
+      |  SELECT * FROM g
+      |  WHERE n_tokens >= 20 AND n_tokens <= 1000
+      |    AND n_distinct / n_tokens >= 0.05),
+      |keepers AS (
+      |  SELECT content_hash, min(doc_id) AS doc_id FROM gated GROUP BY 1)""".stripMargin
 }

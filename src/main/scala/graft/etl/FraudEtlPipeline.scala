@@ -7,12 +7,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.fraud.FraudRules
-import graft.sources.{DelimitedSource, ReportMart}
+import graft.sources.DelimitedSource
 
 /** Daily-batch orchestration — the engine's analog of the reference's
   * `main.py`: discover the day's file drop, stage the three feeds,
   * SCD2-merge the terminal snapshot, run the four fraud rules against
-  * the day's transactions, append the report mart, archive the consumed
+  * the day's transactions, publish the report mart, archive the consumed
   * files.
   *
   * Differences from the reference are deliberate Spark-first choices:
@@ -46,11 +46,6 @@ object FraudEtlPipeline {
 
   private val termAttrs = Seq("terminal_type", "terminal_city", "terminal_address")
 
-  /** The original mart sink: plain parquet append (double-appends on a
-    * replayed day — the reference's INSERT semantics). */
-  val appendPublish: (DataFrame, String, String) => Unit =
-    (mart, path, _) => ReportMart.append(mart, path)
-
   /** Crash-atomic mart sink (B27): the day's mart goes through
     * AtomicMart's stage + manifest-commit keyed (rule, batch_date), so
     * a replayed day REPLACES its own partitions (idempotent retry) and
@@ -64,8 +59,8 @@ object FraudEtlPipeline {
     * pre-loaded dimensions main.py assumes are already in the DWH.
     * Returns the processed batch date, or None if no drop is present.
     *
-    * `publish` is the mart sink — [[appendPublish]] (default, the
-    * reference analog) or [[atomicPublish]] (B27). Ordering is the
+    * `publish` is the mart sink, [[atomicPublish]] unless a caller
+    * substitutes its own (tests inject a crashing one). Ordering is the
     * recovery contract: history write → mart publish → archive. A
     * crash anywhere leaves the drop files in place, so the rerun
     * replays the SAME batch: the SCD2 re-merge is a fixpoint (the
@@ -79,7 +74,7 @@ object FraudEtlPipeline {
     * history to merge into, never a half-deleted one or none at all. */
   def runDaily(spark: SparkSession, layout: Layout,
                clients: DataFrame, accounts: DataFrame,
-               publish: (DataFrame, String, String) => Unit = appendPublish): Option[String] = {
+               publish: (DataFrame, String, String) => Unit = atomicPublish): Option[String] = {
     val histDir = Paths.get(layout.historyPath)
     val prevDir = Paths.get(layout.historyPath + ".prev")
     if (Files.exists(prevDir)) {
@@ -129,7 +124,7 @@ object FraudEtlPipeline {
           col("oper_result"),
           col("city"))
 
-      // --- the four rules (rep_fraud.py) + mart append (REP_FRAUD)
+      // --- the four rules (rep_fraud.py) + mart publish (REP_FRAUD)
       val mart = FraudRules.mart(Seq(
         FraudRules.passportFraud(clients, blacklist, ruleTxns, batchDate),
         FraudRules.accountFraud(accounts, clients, ruleTxns, batchDate),

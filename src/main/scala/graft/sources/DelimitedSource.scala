@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -37,6 +39,13 @@ object DelimitedSource {
       spark.read.schema(schema).json(path)
   }
 
+  /** A split load's two frames plus the cache-release handle: the good
+    * and quarantine frames share one persisted parse, and a daily-loop
+    * caller must `release()` after materializing both or it leaks one
+    * cached RDD per batch for the life of the session. */
+  final case class SplitLoad(good: DataFrame, quarantine: DataFrame,
+                             release: () => Unit)
+
   /** A10 — JSONL with a corrupt-record QUARANTINE: real feeds carry
     * truncated lines, stray log text and schema drift; FAILFAST kills
     * the batch for one bad line (one straggler blocks the day) and
@@ -49,13 +58,6 @@ object DelimitedSource {
     * filter the internal corrupt column straight off the scan, because
     * pushdown could prune the very columns whose failed decode defines
     * corruption. */
-  /** A split load's two frames plus the cache-release handle: the good
-    * and quarantine frames share one persisted parse, and a daily-loop
-    * caller must `release()` after materializing both or it leaks one
-    * cached RDD per batch for the life of the session. */
-  final case class SplitLoad(good: DataFrame, quarantine: DataFrame,
-                             release: () => Unit)
-
   final case class JsonLines(schema: StructType) {
     private val Corrupt = "_corrupt_record"
 
@@ -105,12 +107,15 @@ object DelimitedSource {
     if (!Files.isDirectory(d)) None
     else {
       import scala.jdk.CollectionConverters._
-      Files.list(d).iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.endsWith(ext))
-        .toSeq
-        .sortBy(n => (batchIdFromFilename(n).fold(n)(batchIdToDate), n))
-        .headOption
+      // the listing holds a directory descriptor until closed
+      Using.resource(Files.list(d)) { files =>
+        files.iterator().asScala
+          .map(_.getFileName.toString)
+          .filter(_.endsWith(ext))
+          .toSeq
+          .sortBy(n => (batchIdFromFilename(n).fold(n)(batchIdToDate), n))
+          .headOption
+      }
     }
   }
 

@@ -50,6 +50,16 @@ class IngestSpec extends SparkSpec {
       dir.resolve("transactions_01032021.txt"), dir.resolve("archive"))
     assert(Files.exists(archived) && archived.toString.endsWith(".backup"))
     assert(!Files.exists(dir.resolve("transactions_01032021.txt")))
+
+    // a daily loop calls discoverBatch once per day: it must close the
+    // directory listing it opens
+    val fds = Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fds), "needs /proc/self/fd to count descriptors")
+    def openFds(): Long = scala.util.Using.resource(Files.list(fds))(_.count())
+    val before = openFds()
+    (1 to 500).foreach(_ => DelimitedSource.discoverBatch(backlog.toString))
+    val grown = openFds() - before
+    assert(grown < 50, s"500 discoverBatch calls left $grown more descriptors open")
   }
 
   test("orc and json sources round-trip with explicit schemas") {

@@ -100,5 +100,12 @@ class QueryContractSpec extends SparkSpec {
     val blank = SparkEntry.registry.filter(d =>
       d.oracle.trim.isEmpty || d.scaledOracle.exists(_.trim.isEmpty)).map(_.name)
     assert(blank.isEmpty, s"queries with blank oracle SQL: ${blank.mkString(", ")}")
+    // a shared sql… fragment spliced into a literal that lacks the `s`
+    // interpolator survives verbatim; DuckDB would only fail on parse
+    val unspliced = SparkEntry.registry.filter(d =>
+      (d.oracle +: d.scaledOracle.toSeq).exists(q =>
+        q.contains("${") || q.contains("$sql"))).map(_.name)
+    assert(unspliced.isEmpty,
+      s"oracle SQL with an unspliced fragment: ${unspliced.mkString(", ")}")
   }
 }

@@ -10,8 +10,13 @@ A query whose hash depends on the physical layout (shuffle partition
 count, core count) or on the JVM default timezone/locale would break
 on any real cluster, where neither ever matches local[32] — this is
 the proof harness for that axis.
+
+It also compares the dirs' oracle_sql.json twin by twin, each dir's own
+absolute path masked first (the learned-cell twins embed it): a twin
+whose SQL differs is a FAIL and counts as divergent, so two dumps of a
+refactor that must not change any twin prove it with one run.
 """
-import sys, glob, os
+import sys, glob, json, os
 import pandas as pd
 from check import canon
 
@@ -31,9 +36,25 @@ def hashes(out_dir):
     return result
 
 
+def oracles(out_dir):
+    """Twin name -> oracle SQL with out_dir's path masked; None if absent."""
+    path = os.path.join(out_dir, "oracle_sql.json")
+    if not os.path.isfile(path):
+        return None
+    roots = sorted({os.path.abspath(out_dir), os.path.realpath(out_dir)},
+                   key=len, reverse=True)
+    masked = {}
+    for q, sql in json.load(open(path)).items():
+        for r in roots:
+            sql = sql.replace(r, "<VERIFY_DIR>")
+        masked[q] = sql
+    return masked
+
+
 def main():
     base_dir, rest = sys.argv[1], sys.argv[2:]
     base = hashes(base_dir)
+    base_sql = oracles(base_dir)
     n_bad = 0
     for other_dir in rest:
         other = hashes(other_dir)
@@ -41,13 +62,24 @@ def main():
         for q in missing:
             print(f"FAIL {q}: present in only one of {base_dir} / {other_dir}")
             n_bad += 1
+        divergent = set()
         for q in sorted(set(base) & set(other)):
             if base[q] != other[q]:
                 print(f"FAIL {q}: hash differs {base_dir} vs {other_dir}")
-                n_bad += 1
-        same = sum(1 for q in set(base) & set(other) if base[q] == other[q])
-        print(f"== {other_dir}: {same} identical, "
-              f"{len(set(base) & set(other)) - same} divergent, {len(missing)} missing ==")
+                divergent.add(q)
+        other_sql = oracles(other_dir)
+        sql_differs = set()
+        if base_sql is not None and other_sql is not None:
+            for q in sorted(set(base_sql) | set(other_sql)):
+                if base_sql.get(q) != other_sql.get(q):
+                    print(f"FAIL {q}: oracle SQL differs")
+                    sql_differs.add(q)
+        divergent |= sql_differs - set(missing)
+        n_bad += len(divergent)
+        common = set(base) & set(other)
+        print(f"== {other_dir}: {len(common - divergent)} identical, "
+              f"{len(divergent)} divergent, {len(missing)} missing, "
+              f"{len(sql_differs)} oracle twins differ ==")
     sys.exit(1 if n_bad else 0)
 
 
