@@ -2,9 +2,14 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.fraud.FraudRules
 import graft.sources.DelimitedSource
@@ -46,6 +51,10 @@ object FraudEtlPipeline {
 
   private val termAttrs = Seq("terminal_type", "terminal_city", "terminal_address")
 
+  /** The terminal history as [[Scd2.init]] and [[Scd2.merge]] write it. */
+  private val historySchema: StructType = terminalSchema.add("effective_from", StringType)
+    .add("effective_to", StringType).add("deleted_flg", LongType)
+
   /** Crash-atomic mart sink (B27): the day's mart goes through
     * AtomicMart's stage + manifest-commit keyed (rule, batch_date), so
     * a replayed day REPLACES its own partitions (idempotent retry) and
@@ -66,7 +75,8 @@ object FraudEtlPipeline {
     * replays the SAME batch: the SCD2 re-merge is a fixpoint (the
     * current view already equals the snapshot → zero detects) and the
     * atomic sink replaces the day's own partitions — the day converges
-    * instead of double-applying.
+    * instead of double-applying. The day's transactions are cached for
+    * the rules and released before the run returns, failed or not.
     *
     * The history is replaced by renames only: `<history>` → `.prev`,
     * `.next` → `<history>`, then `.prev` is deleted. Each run first
@@ -96,23 +106,11 @@ object FraudEtlPipeline {
         .select(col("passport").as("c_custkey"))
       val terminals = DelimitedSource.Csv(terminalSchema).load(spark, termPath)
 
-      // --- SCD2 terminal history (data_to_db.py:282-292)
-      val history =
-        if (Files.exists(histDir))
-          Scd2.merge(spark.read.parquet(layout.historyPath), terminals,
-            "terminal_id", termAttrs, batchDate)
-        else Scd2.init(terminals, batchDate)
-      // state is parquet: land the new version, swap it in, then reload
-      val tmp = Paths.get(layout.historyPath + ".next")
-      history.write.mode("overwrite").parquet(tmp.toString)
-      if (Files.exists(histDir)) Files.move(histDir, prevDir)
-      Files.move(tmp, histDir)
-      deleteTree(prevDir)
-      val currentTerminals = Scd2.currentView(spark.read.parquet(layout.historyPath))
-
-      // --- enrich transactions into the rule input shape
+      // --- enrich transactions into the rule input shape, parsed once and
+      // cached by user_id: the window rules shuffle nothing. The snapshot
+      // is the merged history's current view (Scd2PropertySpec).
       val ruleTxns = txns
-        .join(broadcast(currentTerminals.select(col("terminal_id"),
+        .join(broadcast(terminals.select(col("terminal_id"),
           col("terminal_city").as("city"))),
           txns("terminal") === col("terminal_id"), "left")
         .select(
@@ -123,15 +121,40 @@ object FraudEtlPipeline {
           col("oper_type").as("event_type"),
           col("oper_result"),
           col("city"))
+        .repartition(col("user_id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
 
-      // --- the four rules (rep_fraud.py) + mart publish (REP_FRAUD)
-      val mart = FraudRules.mart(Seq(
-        FraudRules.passportFraud(clients, blacklist, ruleTxns, batchDate),
-        FraudRules.accountFraud(accounts, clients, ruleTxns, batchDate),
-        FraudRules.cityFraud(ruleTxns, clients, maxMinutes = 60),
-        FraudRules.guessingAmountFraud(ruleTxns, clients, maxMinutes = 20,
-          opTypes = Seq("PAYMENT", "WITHDRAW"))))
-      publish(mart, layout.martPath, batchDate)
+      // --- SCD2 terminal history (data_to_db.py:282-292): land the new
+      // version, then swap it in, on its own thread beside the parse
+      val landed = Future {
+        val history =
+          if (Files.exists(histDir))
+            Scd2.merge(spark.read.schema(historySchema).parquet(layout.historyPath),
+              terminals, "terminal_id", termAttrs, batchDate)
+          else Scd2.init(terminals, batchDate)
+        val tmp = Paths.get(layout.historyPath + ".next")
+        history.write.mode("overwrite").parquet(tmp.toString)
+        if (Files.exists(histDir)) Files.move(histDir, prevDir)
+        Files.move(tmp, histDir)
+        deleteTree(prevDir)
+      }(ExecutionContext.fromExecutor(new Thread(_).start()))
+
+      // --- the four rules (rep_fraud.py) + mart publish (REP_FRAUD),
+      // after the swap; each rule in one task, so one file per rule
+      try {
+        Bridge.fillCache(ruleTxns)
+        Await.result(landed, Duration.Inf)
+        publish(FraudRules.mart(Seq(
+          FraudRules.passportFraud(clients, blacklist, ruleTxns, batchDate),
+          FraudRules.accountFraud(accounts, clients, ruleTxns, batchDate),
+          FraudRules.cityFraud(ruleTxns, clients, maxMinutes = 60),
+          FraudRules.guessingAmountFraud(ruleTxns, clients, maxMinutes = 20,
+            opTypes = Seq("PAYMENT", "WITHDRAW"))).map(_.coalesce(1))),
+          layout.martPath, batchDate)
+      } finally {
+        ruleTxns.unpersist(false)
+        Await.ready(landed, Duration.Inf)
+      }
 
       // --- archive the consumed drop (data_to_db.py:118-119)
       Seq(txnPath, blPath, termPath).foreach { p =>

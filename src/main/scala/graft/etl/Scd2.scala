@@ -1,8 +1,8 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** SCD2 (slowly-changing-dimension type 2) maintenance, the Spark-native
   * re-expression of the reference's terminal-history pipeline
@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.LongType
   *
   * Unlike the reference's in-place sqlite UPDATEs, this is pure
   * DataFrame algebra — rewrite-the-partition semantics, which is what an
-  * immutable data lake at 100 TB needs. Every detect is a key-join the
-  * planner can broadcast when the snapshot is small; the merge is
-  * union-of-joins with a single shuffle on the business key.
+  * immutable data lake at 100 TB needs. The detects are key joins; the
+  * merge itself is one keyed window over history ∪ snapshot — a single
+  * shuffle on the business key, no joins and no pins.
   *
   * Effective-time columns are caller-supplied batch labels (strings),
   * not wall-clock `current_timestamp` — deterministic replays beat the
@@ -60,50 +60,39 @@ object Scd2 {
     * (data_to_db.py:209-271 update_terminals_hist): close open versions
     * of changed/deleted keys, append changed+new rows, append deleted
     * tombstones.
+    *
+    * One window keyed on `key` over history ∪ snapshot flags each key:
+    * open non-deleted version, in the snapshot, an attribute differs
+    * (null-unsafe, as [[detectChanged]]; null keys match nothing). Each
+    * row explodes to its versions. A touched key closes every row open
+    * at [[HighDate]], tombstones included. One snapshot row per key.
     */
   def merge(history: DataFrame, snapshot: DataFrame, key: String,
             attrs: Seq[String], batchDate: String): DataFrame = {
+    val w = Window.partitionBy(col(key))
+    val snap = col("__snap")
+    val open = !snap && col("deleted_flg") === 0L && col("effective_to") === HighDate
+    val hasOpen = col(key).isNotNull && max(open).over(w)
+    val inSnap = col(key).isNotNull && max(snap).over(w)
+    val changed = hasOpen && inSnap && coalesce(attrs.map(a =>
+      max(when(snap, col(a))).over(w) =!= max(when(open, col(a))).over(w))
+      .reduce(_ || _), lit(false))
+    val closes = (changed || hasOpen && !inSnap) && col("effective_to") === HighDate
+    def version(from: Column, to: Column, flag: Column) = struct(
+      from.as("effective_from"), to.as("effective_to"), flag.as("deleted_flg"))
+    val versions = array(
+      when(!snap, version(col("effective_from"),
+        when(closes, lit(batchDate)).otherwise(col("effective_to")), col("deleted_flg"))),
+      when(open && !inSnap, version(lit(batchDate), lit(HighDate), lit(1L))),
+      when(snap && (!hasOpen || changed), version(lit(batchDate), lit(HighDate), lit(0L))))
     val cols = key +: attrs
-    val current = history
-      .filter(col("deleted_flg") === 0L && col("effective_to") === HighDate)
-      .select(cols.map(col): _*)
-      // three consumers (the new/deleted/changed detects) — un-cut,
-      // each re-derived the history scan + open-version filter.
-      // Current-dimension-sized.
-      .localCheckpoint(true)
-
-    val newRows = detectNew(current, snapshot, key)
-    val deletedRows = detectDeleted(current, snapshot, key)
-    val changedRows = detectChanged(current, snapshot, key, attrs)
-
-    val touchedKeys = changedRows.select(col(key))
-      .unionByName(deletedRows.select(col(key)))
-      // three consumers (close semi, untouched anti + semi) — un-cut,
-      // each re-ran the changed+deleted detect joins. Key-only rows.
-      .localCheckpoint(true)
-
-    // Close the open version of every touched key (reference's UPDATE …
-    // SET effective_to = now()-1s, re-expressed as a column rewrite).
-    val closed = history
-      .join(touchedKeys, Seq(key), "left_semi")
-      .filter(col("effective_to") === HighDate)
-      .withColumn("effective_to", lit(batchDate))
-    val untouched = history
-      .join(touchedKeys, Seq(key), "left_anti")
-      .unionByName(history
-        .join(touchedKeys, Seq(key), "left_semi")
-        .filter(col("effective_to") =!= HighDate))
-
-    val inserts = newRows.unionByName(changedRows)
-      .withColumn("effective_from", lit(batchDate))
-      .withColumn("effective_to", lit(HighDate))
-      .withColumn("deleted_flg", lit(0L))
-      .unionByName(deletedRows
-        .withColumn("effective_from", lit(batchDate))
-        .withColumn("effective_to", lit(HighDate))
-        .withColumn("deleted_flg", lit(1L)))
-
-    untouched.unionByName(closed).unionByName(inserts)
+    history.withColumn("__snap", lit(false))
+      .unionByName(snapshot.select(cols.map(col): _*).withColumn("__snap", lit(true)),
+        allowMissingColumns = true)
+      .select(cols.map(col) :+ versions.as("__v"): _*)
+      .withColumn("__v", explode(filter(col("__v"), _.isNotNull)))
+      .select(history.columns.toSeq.map(c =>
+        if (cols.contains(c)) col(c) else col(s"__v.$c").as(c)): _*)
   }
 
   /** The reference's STG_V_TERMINALS current view (data_to_db.py:158-168):

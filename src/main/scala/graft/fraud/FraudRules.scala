@@ -1,6 +1,6 @@
 package graft.fraud
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,15 +17,26 @@ import org.apache.spark.sql.functions._
   */
 object FraudRules {
 
-  private val martCols: Seq[Column] = Seq(
-    col("event_dt_us"), col("client_key"), col("passport"), col("fio"),
-    col("phone"), col("segment"), col("rule"))
+  /** A rule's hits in the mart schema: hit time, client key, client dims. */
+  private def hits(joined: DataFrame, ts: String, client: String, rule: String): DataFrame =
+    joined.select(col(ts).as("event_dt_us"), col(client).as("client_key"),
+      col("passport_num").as("passport"), col("fio"), col("phone"), col("segment"),
+      lit(rule).as("rule"))
+
+  /** The reference's `WHERE date > valid_to OR passport IN (SELECT …)`
+    * (rep_fraud.py:6-55): the blacklisted clients, plus the expired ones
+    * not blacklisted. The two sets are disjoint, so the union needs no
+    * dedup — no shuffle or aggregate inside the broadcast build. */
+  private def invalidClients(clients: DataFrame, blacklist: DataFrame,
+                             batchDate: String): DataFrame =
+    clients.join(broadcast(blacklist), Seq("c_custkey"), "left_semi")
+      .unionByName(clients
+        .filter(to_date(lit(batchDate)) > col("passport_valid_to"))
+        .join(broadcast(blacklist), Seq("c_custkey"), "left_anti"))
 
   /** Rule 1 — operation on an expired or blacklisted passport
-    * (rep_fraud.py:6-55). Invalid-client set = expiry filter UNION
-    * blacklist semi-join (the reference's `WHERE date > valid_to OR
-    * passport IN (SELECT …)`), then the reference's full dimension
-    * traversal (rep_fraud.py:28-35): transactions → cards →
+    * (rep_fraud.py:6-55): [[invalidClients]], then the reference's full
+    * dimension traversal (rep_fraud.py:28-35): transactions → cards →
     * accounts → invalid clients. The three dim hops pre-collapse into
     * ONE broadcast build side (dims join dims first — all tiny), so the
     * fact stream is still touched exactly once, map-side.
@@ -33,21 +44,13 @@ object FraudRules {
   def passportFraud(clients: DataFrame, blacklist: DataFrame,
                     cards: DataFrame, accountsBridge: DataFrame,
                     txns: DataFrame, batchDate: String): DataFrame = {
-    val expired = clients.filter(to_date(lit(batchDate)) > col("passport_valid_to"))
-    val blacklisted = clients.join(broadcast(blacklist), Seq("c_custkey"), "left_semi")
-    val invalid = expired.unionByName(blacklisted).dropDuplicates("c_custkey")
+    val invalid = invalidClients(clients, blacklist, batchDate)
     // clients → accounts → cards, collapsed dim-side before touching txns
     val invalidCards = invalid
       .join(accountsBridge, invalid("c_custkey") === accountsBridge("client"))
       .join(cards, Seq("account_num"))
-    txns
-      .join(broadcast(invalidCards), Seq("card_num"))
-      .select(
-        col("ts_us").as("event_dt_us"),
-        col("c_custkey").as("client_key"),
-        col("passport_num").as("passport"),
-        col("fio"), col("phone"), col("segment"),
-        lit("passport_fraud").as("rule"))
+    hits(txns.join(broadcast(invalidCards), Seq("card_num")),
+      "ts_us", "c_custkey", "passport_fraud")
   }
 
   /** Rule 1, direct-join form — for feeds whose transactions already
@@ -55,17 +58,9 @@ object FraudRules {
     * upstream): the dim chain collapses to one broadcast join. */
   def passportFraud(clients: DataFrame, blacklist: DataFrame,
                     txns: DataFrame, batchDate: String): DataFrame = {
-    val expired = clients.filter(to_date(lit(batchDate)) > col("passport_valid_to"))
-    val blacklisted = clients.join(broadcast(blacklist), Seq("c_custkey"), "left_semi")
-    val invalid = expired.unionByName(blacklisted).dropDuplicates("c_custkey")
-    txns
-      .join(broadcast(invalid), txns("user_id") === invalid("c_custkey"))
-      .select(
-        col("ts_us").as("event_dt_us"),
-        col("c_custkey").as("client_key"),
-        col("passport_num").as("passport"),
-        col("fio"), col("phone"), col("segment"),
-        lit("passport_fraud").as("rule"))
+    val invalid = invalidClients(clients, blacklist, batchDate)
+    hits(txns.join(broadcast(invalid), txns("user_id") === invalid("c_custkey")),
+      "ts_us", "c_custkey", "passport_fraud")
   }
 
   /** Rule 2 — operation on an inactive contract (rep_fraud.py:59-106):
@@ -77,14 +72,8 @@ object FraudRules {
     val invalid = accounts
       .filter(to_date(lit(batchDate)) > col("valid_to"))
       .join(broadcast(clients), accounts("client") === clients("c_custkey"), "left")
-    txns
-      .join(broadcast(invalid), txns("user_id") === invalid("client"))
-      .select(
-        col("ts_us").as("event_dt_us"),
-        col("client").as("client_key"),
-        col("passport_num").as("passport"),
-        col("fio"), col("phone"), col("segment"),
-        lit("account_fraud").as("rule"))
+    hits(txns.join(broadcast(invalid), txns("user_id") === invalid("client")),
+      "ts_us", "client", "account_fraud")
   }
 
   /** Rule 3 — operations in different cities within one hour
@@ -118,14 +107,8 @@ object FraudRules {
         col("lead_us") >= col("ts_us"))
       .groupBy(col("user_id"))
       .agg(max(col("ts_us")).as("event_dt_us"))
-    flagged
-      .join(broadcast(clients), flagged("user_id") === clients("c_custkey"), "left")
-      .select(
-        col("event_dt_us"),
-        col("user_id").as("client_key"),
-        col("passport_num").as("passport"),
-        col("fio"), col("phone"), col("segment"),
-        lit("city_fraud").as("rule"))
+    hits(flagged.join(broadcast(clients), flagged("user_id") === clients("c_custkey"), "left"),
+      "event_dt_us", "user_id", "city_fraud")
   }
 
   /** Rule 4 — amount-guessing (rep_fraud.py:187-261): within the
@@ -157,19 +140,13 @@ object FraudRules {
       col("lag_amt_2") > col("lag_amt_1") &&
       col("lag_amt_1") > col("amt_cents") &&
       expr("(ts_us - lag_us_3) div 60000000") <= maxMinutes)
-    flagged
-      .join(broadcast(clients), flagged("user_id") === clients("c_custkey"), "left")
-      .select(
-        col("ts_us").as("event_dt_us"),
-        col("user_id").as("client_key"),
-        col("passport_num").as("passport"),
-        col("fio"), col("phone"), col("segment"),
-        lit("guessing_amount_fraud").as("rule"))
+    hits(flagged.join(broadcast(clients), flagged("user_id") === clients("c_custkey"), "left"),
+      "ts_us", "user_id", "guessing_amount_fraud")
   }
 
   /** REP_FRAUD mart: tagged UNION ALL of all rules (main.py:20-26). */
   def mart(rules: Seq[DataFrame]): DataFrame =
-    rules.map(_.select(martCols: _*)).reduce(_ unionByName _)
+    rules.reduce(_ unionByName _)
 
   /** Memoized persisted transaction frames, keyed by (session, dir):
     * all four rules (and the mart union) read the same enriched frame,

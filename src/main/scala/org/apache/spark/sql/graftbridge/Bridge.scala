@@ -27,4 +27,14 @@ object Bridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
       case _ => None
     }
+
+  /** Fill a persisted frame's cache in one job, after the jobs of its
+    * own plan. Filled by an action instead, the cache is built through
+    * the adaptive planner: one job for each distinct column set that
+    * the action's plan scans it with. */
+  def fillCache(df: DataFrame): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.count())
+  }
 }

@@ -22,7 +22,7 @@ class PipelineSpec extends SparkSpec {
         |4;2021-03-01 11:30:00;20.00;4;PAYMENT;SUCCESS;T2
         |""".stripMargin)
     Files.writeString(drop.resolve("passport_blacklist_01032021.csv"),
-      "date;passport\n2021-03-01;3\n")
+      "date;passport\n2021-03-01;3\n2021-03-01;1\n")
     Files.writeString(drop.resolve("terminals_01032021.csv"),
       """terminal_id;terminal_type;terminal_city;terminal_address
         |T1;ATM;Moscow;Lenina 1
@@ -45,6 +45,32 @@ class PipelineSpec extends SparkSpec {
         |T1;ATM;Riga;Brivibas 9
         |T3;POS;Bern;Bahnhof 3
         |""".stripMargin)
+  }
+
+  /** Half the 21 jobs day 2 ran when each rule parsed the drop again and
+    * SCD2 merged by three detect joins and two pins. */
+  private val DayJobBudget = 10
+
+  /** Spark jobs that `body` starts on this thread, counted by job group. */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      // job-start events post asynchronously; poll until stable
+      var last = -1
+      var spins = 0
+      while (jobs.get != last && spins < 100) {
+        last = jobs.get; Thread.sleep(100); spins += 1
+      }
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("two daily runs: SCD2 versions, rule hits, mart append, archive") {
@@ -76,15 +102,24 @@ class PipelineSpec extends SparkSpec {
     val mart1 = AtomicMart.read(spark, layout.martPath)
     // client 1: expired passport; client 3: blacklisted
     val flagged1 = mart1.filter(col("rule") === "passport_fraud")
-      .select("client_key").as[Long].collect().toSet
-    assert(flagged1 == Set(1L, 3L))
+      .select("client_key").as[Long].collect().toSeq
+    assert(flagged1.toSet == Set(1L, 3L))
+    // client 1 is expired AND blacklisted: still one row per transaction
+    assert(flagged1.count(_ == 1L) == 1)
     // client 4: Moscow 11:00 -> Oslo 11:30 within an hour
     assert(mart1.filter(col("rule") === "city_fraud")
       .select("client_key").as[Long].collect().toSet == Set(4L))
 
     writeDay2(drop)
-    assert(FraudEtlPipeline.runDaily(spark, layout, clients, accounts)
-      .contains("2021-03-02"))
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val day2Jobs = jobsOf("pipeline-day2") {
+      assert(FraudEtlPipeline.runDaily(spark, layout, clients, accounts)
+        .contains("2021-03-02"))
+    }
+    // a merge into a 2-version history plus four rules over 4 rows
+    assert(day2Jobs <= DayJobBudget, s"day 2 ran $day2Jobs jobs")
+    // nothing persisted or pinned outlives the run
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
 
     val hist2 = spark.read.parquet(layout.historyPath)
     // T1 changed (closed + reopened), T2 deleted (closed + tombstone), T3 new

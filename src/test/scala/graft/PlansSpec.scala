@@ -111,12 +111,14 @@ class PlansSpec extends SparkSpec {
       "q_km"              -> (1, 6),
       "q_dedup_impact"    -> (1, 3),
       // r14: queries whose shared frames gained eager lineage cuts
-      // (Scd2.merge current/touchedKeys, concordanceIndex cells,
-      // perplexityBuckets scored) now truncate the materialized
-      // pipeline out of the final plan — the floors drop to the joins
-      // that remain visible after the cuts.
-      "q_scd2_pit"          -> (0, 12),
-      "q_scd2_squash"       -> (0, 12),
+      // (concordanceIndex cells, perplexityBuckets scored) now truncate
+      // the materialized pipeline out of the final plan — the floors
+      // drop to the joins that remain visible after the cuts.
+      // Scd2.merge is one keyed window with no joins, so the SCD2 pair
+      // keeps only the point-in-time join's broadcast (audited via
+      // graft.Plans at sf0.001: pit bhj=1 smj=0, squash bhj=0 smj=0).
+      "q_scd2_pit"          -> (0, 1),
+      "q_scd2_squash"       -> (0, 0),
       "q_cindex"            -> (1, 1),
       "q_lm_buckets"        -> (8, 2),
       // r7 (VERDICT r6 #6): coverage extended to EVERY query ≥2 s in
@@ -147,9 +149,8 @@ class PlansSpec extends SparkSpec {
       // bhj=1 smj=1 — its LSH clustering truncates at checkpoint cuts)
       "q_dedup_curve"       -> (6, 18),
       "q_curation_funnel"   -> (1, 1),
-      // r8 newcomers ≥2s (audited via graft.Plans at sf0.001:
-      // squash bhj=18 smj=0 — the SCD2 merge's detect joins all
-      // broadcast; explain bhj=8 smj=2, verifyCore's shape)
+      // r8 newcomer ≥2s (audited via graft.Plans at sf0.001: explain
+      // bhj=8 smj=2, verifyCore's shape)
       "q_dedup_explain"     -> (2, 8),
       // r9: q_mart_merge's returned frame is the read-back of the merged
       // AtomicMart (fold is one window pass inside the publish): ZERO
