@@ -147,23 +147,23 @@ object SparkEntry {
 
     // ---- C1..C5: the reference's fraud rules (SURVEY §2 C)
     QueryDef("q_fraud_passport", (s, d) =>
-      FraudRules.allRules(s, d).head
+      FraudRules.mart(FraudRules.analog(s, d), FraudRules.Analog, Seq("passport_fraud"))
         .orderBy(col("client_key"), col("event_dt_us")),
       oracle = s"SELECT * FROM $fraudPassportBody ORDER BY client_key, event_dt_us"),
     QueryDef("q_fraud_account", (s, d) =>
-      FraudRules.allRules(s, d)(1)
+      FraudRules.mart(FraudRules.analog(s, d), FraudRules.Analog, Seq("account_fraud"))
         .orderBy(col("client_key"), col("event_dt_us")),
       oracle = s"SELECT * FROM $fraudAccountBody ORDER BY client_key, event_dt_us"),
     QueryDef("q_fraud_city", (s, d) =>
-      FraudRules.allRules(s, d)(2)
+      FraudRules.mart(FraudRules.analog(s, d), FraudRules.Analog, Seq("city_fraud"))
         .orderBy(col("client_key")),
       oracle = s"SELECT * FROM $fraudCityBody ORDER BY client_key"),
     QueryDef("q_fraud_amount", (s, d) =>
-      FraudRules.allRules(s, d)(3)
+      FraudRules.mart(FraudRules.analog(s, d), FraudRules.Analog, Seq("guessing_amount_fraud"))
         .orderBy(col("client_key"), col("event_dt_us")),
       oracle = s"SELECT * FROM $fraudAmountBody ORDER BY client_key, event_dt_us"),
     QueryDef("q_fraud_mart", (s, d) =>
-      FraudRules.mart(FraudRules.allRules(s, d))
+      FraudRules.mart(FraudRules.analog(s, d), FraudRules.Analog)
         .orderBy(col("rule"), col("client_key"), col("event_dt_us")),
       oracle = s"""SELECT * FROM (
          |SELECT * FROM $fraudPassportBody
@@ -6727,11 +6727,10 @@ object SparkEntry {
 
   /** H9/H11 shared frame: the deterministic integer risk score per
     * client (passport expiry + blacklist balance + key-derived weight
-    * term), labeled by fraud-mart membership. */
+    * term), labeled by fraud-mart membership ([[ml.FraudScorer.labels]]). */
   private def fraudScoredFrame(s: SparkSession, d: String): DataFrame = {
-    val labels = FraudRules.mart(FraudRules.allRules(s, d))
-      .select(col("client_key").as("c_custkey")).distinct()
-      .withColumn("label", lit(1L))
+    val labels = ml.FraudScorer.labels(s, d)
+      .select(col("user_id").as("c_custkey"), lit(1L).as("label"))
     FraudModel.clients(s, d)
       .select(col("c_custkey"),
         (when(to_date(lit("2024-06-30")) > col("passport_valid_to"), 400L)
@@ -7051,9 +7050,9 @@ object SparkEntry {
       |  WHERE NOT EXISTS (SELECT 1 FROM snap2 n WHERE n.terminal_id = o.terminal_id)),
       |scd_changed AS (
       |  SELECT n.* FROM snap2 n JOIN snap1 o ON n.terminal_id = o.terminal_id
-      |  WHERE n.terminal_type <> o.terminal_type
-      |     OR n.terminal_city <> o.terminal_city
-      |     OR n.terminal_address <> o.terminal_address),
+      |  WHERE n.terminal_type IS DISTINCT FROM o.terminal_type
+      |     OR n.terminal_city IS DISTINCT FROM o.terminal_city
+      |     OR n.terminal_address IS DISTINCT FROM o.terminal_address),
       |touched AS (
       |  SELECT terminal_id FROM scd_changed
       |  UNION ALL SELECT terminal_id FROM scd_deleted)""".stripMargin

@@ -144,13 +144,9 @@ object FraudEtlPipeline {
       try {
         Bridge.fillCache(ruleTxns)
         Await.result(landed, Duration.Inf)
-        publish(FraudRules.mart(Seq(
-          FraudRules.passportFraud(clients, blacklist, ruleTxns, batchDate),
-          FraudRules.accountFraud(accounts, clients, ruleTxns, batchDate),
-          FraudRules.cityFraud(ruleTxns, clients, maxMinutes = 60),
-          FraudRules.guessingAmountFraud(ruleTxns, clients, maxMinutes = 20,
-            opTypes = Seq("PAYMENT", "WITHDRAW"))).map(_.coalesce(1))),
-          layout.martPath, batchDate)
+        val in = FraudRules.Inputs(ruleTxns, clients, blacklist, accounts, batchDate)
+        publish(FraudRules.mart(FraudRules.rules.values.toSeq
+          .map(_(in, FraudRules.Daily).coalesce(1))), layout.martPath, batchDate)
       } finally {
         ruleTxns.unpersist(false)
         Await.ready(landed, Duration.Inf)

@@ -36,13 +36,16 @@ object Scd2 {
     current.join(snapshot, Seq(key), "left_anti")
 
   /** Snapshot rows whose key exists in `current` but with any attribute
-    * changed (data_to_db.py:195-206 STG_CHANGED_TERMINALS). */
+    * changed (data_to_db.py:195-206 STG_CHANGED_TERMINALS). Null-safe,
+    * unlike the reference's `<>`: an attribute that turns null, or
+    * stops being null, is a change, so the current view always equals
+    * the last snapshot. */
   def detectChanged(current: DataFrame, snapshot: DataFrame,
                     key: String, attrs: Seq[String]): DataFrame = {
     val n = snapshot.alias("n")
     val o = current.alias("o")
     val anyDiff: Column = attrs
-      .map(a => col(s"n.$a") =!= col(s"o.$a"))
+      .map(a => !(col(s"n.$a") <=> col(s"o.$a")))
       .reduce(_ || _)
     n.join(o, col(s"n.$key") === col(s"o.$key"))
       .filter(anyDiff)
@@ -63,9 +66,10 @@ object Scd2 {
     *
     * One window keyed on `key` over history ∪ snapshot flags each key:
     * open non-deleted version, in the snapshot, an attribute differs
-    * (null-unsafe, as [[detectChanged]]; null keys match nothing). Each
+    * (null-safe, as [[detectChanged]]; null keys match nothing). Each
     * row explodes to its versions. A touched key closes every row open
-    * at [[HighDate]], tombstones included. One snapshot row per key.
+    * at [[HighDate]], tombstones included. A key the snapshot carries
+    * twice fails the merge (it would open two current versions).
     */
   def merge(history: DataFrame, snapshot: DataFrame, key: String,
             attrs: Seq[String], batchDate: String): DataFrame = {
@@ -73,10 +77,11 @@ object Scd2 {
     val snap = col("__snap")
     val open = !snap && col("deleted_flg") === 0L && col("effective_to") === HighDate
     val hasOpen = col(key).isNotNull && max(open).over(w)
-    val inSnap = col(key).isNotNull && max(snap).over(w)
-    val changed = hasOpen && inSnap && coalesce(attrs.map(a =>
-      max(when(snap, col(a))).over(w) =!= max(when(open, col(a))).over(w))
-      .reduce(_ || _), lit(false))
+    val snapRows = count(when(snap, 1)).over(w)
+    val inSnap = col(key).isNotNull && snapRows > 0
+    val changed = hasOpen && inSnap && attrs.map(a =>
+      !(max(when(snap, col(a))).over(w) <=> max(when(open, col(a))).over(w)))
+      .reduce(_ || _)
     val closes = (changed || hasOpen && !inSnap) && col("effective_to") === HighDate
     def version(from: Column, to: Column, flag: Column) = struct(
       from.as("effective_from"), to.as("effective_to"), flag.as("deleted_flg"))
@@ -89,7 +94,9 @@ object Scd2 {
     history.withColumn("__snap", lit(false))
       .unionByName(snapshot.select(cols.map(col): _*).withColumn("__snap", lit(true)),
         allowMissingColumns = true)
-      .select(cols.map(col) :+ versions.as("__v"): _*)
+      .select(cols.map(col) :+ when(col(key).isNotNull && snapRows > 1,
+        raise_error(concat(lit(s"duplicate $key in the snapshot: "), col(key).cast("string"))))
+        .otherwise(versions).as("__v"): _*)
       .withColumn("__v", explode(filter(col("__v"), _.isNotNull)))
       .select(history.columns.toSeq.map(c =>
         if (cols.contains(c)) col(c) else col(s"__v.$c").as(c)): _*)

@@ -16,22 +16,21 @@ import graft.functions.GraftFunctions._
   *     deterministically from c_custkey; blacklist := c_acctbal < 0)
   *   DWH_DIM_ACCOUNTS      → orders   (valid_to := o_orderdate + 9000d)
   *
+  * DWH_DIM_CARDS has no analog: a transaction's card is its client, so
+  * the reference's card → account → client chain is the identity on
+  * `user_id` = `c_custkey`.
+  *
   * All derived columns use exact integer / date arithmetic so the DuckDB
   * oracle computes bit-identical values (SURVEY.md §5).
   */
 object FraudModel {
 
   /** Transaction-stream analog of DWH_FACT_TRANSACTIONS
-    * (reference sql_scripts/DWH_tables.sql). `card_num` is the
-    * deterministic card key a transaction carries in the reference's
-    * schema (transactions join cards, not clients — rep_fraud.py:33):
-    * each user has two cards (see [[cards]]) and a transaction uses one
-    * of them by event parity. */
+    * (reference sql_scripts/DWH_tables.sql). */
   def transactions(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d).select(
       col("event_id"),
       col("user_id"),
-      (col("user_id") * 10 + col("event_id") % 2).as("card_num"),
       col("ts_us"),
       col("ts_t"),
       cents(col("value")).as("amt_cents"),
@@ -39,27 +38,6 @@ object FraudModel {
       when(col("event_type") === "error", lit("REJECT"))
         .otherwise(lit("SUCCESS")).as("oper_result"),
       (get_json_object(col("props"), "$.k").cast(LongType) % 5).as("city"))
-
-  /** Card dimension analog of DWH_DIM_CARDS (rep_fraud.py:31-33's
-    * `cards card ... on card.account = acc.account`): two cards per
-    * client account, card_num = client·10 + {0,1}. Derived
-    * deterministically from the client key so both engines agree. */
-  def cards(s: SparkSession, d: String): DataFrame =
-    Tables.customer(s, d)
-      .select(col("c_custkey"), explode(array(lit(0L), lit(1L))).as("i"))
-      .select(
-        (col("c_custkey") * 10 + col("i")).as("card_num"),
-        col("c_custkey").as("account_num"))
-
-  /** Account-bridge dimension analog of DWH_DIM_ACCOUNTS as used by the
-    * dim chain (rep_fraud.py:34 `acc.client = cl.client_id`): one
-    * account per client, keyed by the client id. (The contract-expiry
-    * accounts used by the account_fraud RULE are [[accounts]] — the
-    * reference similarly has per-rule account roles.) */
-  def accountsBridge(s: SparkSession, d: String): DataFrame =
-    Tables.customer(s, d).select(
-      col("c_custkey").as("account_num"),
-      col("c_custkey").as("client"))
 
   /** Client dimension analog of DWH_DIM_CLIENTS; `fio` mirrors the
     * reference's name concatenation (rep_fraud.py:15), and

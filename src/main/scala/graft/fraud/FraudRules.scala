@@ -1,5 +1,7 @@
 package graft.fraud
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,27 +37,12 @@ object FraudRules {
         .join(broadcast(blacklist), Seq("c_custkey"), "left_anti"))
 
   /** Rule 1 — operation on an expired or blacklisted passport
-    * (rep_fraud.py:6-55): [[invalidClients]], then the reference's full
-    * dimension traversal (rep_fraud.py:28-35): transactions → cards →
-    * accounts → invalid clients. The three dim hops pre-collapse into
-    * ONE broadcast build side (dims join dims first — all tiny), so the
-    * fact stream is still touched exactly once, map-side.
+    * (rep_fraud.py:6-55): [[invalidClients]] joined to the transactions
+    * on the client key. The reference walks transactions → cards →
+    * accounts → clients (rep_fraud.py:28-35); in the analog and in the
+    * staged drops a transaction's card already is its client key
+    * (`user_id`), so the chain is one broadcast join.
     */
-  def passportFraud(clients: DataFrame, blacklist: DataFrame,
-                    cards: DataFrame, accountsBridge: DataFrame,
-                    txns: DataFrame, batchDate: String): DataFrame = {
-    val invalid = invalidClients(clients, blacklist, batchDate)
-    // clients → accounts → cards, collapsed dim-side before touching txns
-    val invalidCards = invalid
-      .join(accountsBridge, invalid("c_custkey") === accountsBridge("client"))
-      .join(cards, Seq("account_num"))
-    hits(txns.join(broadcast(invalidCards), Seq("card_num")),
-      "ts_us", "c_custkey", "passport_fraud")
-  }
-
-  /** Rule 1, direct-join form — for feeds whose transactions already
-    * carry the client key (the staged/streamed drops map card→client
-    * upstream): the dim chain collapses to one broadcast join. */
   def passportFraud(clients: DataFrame, blacklist: DataFrame,
                     txns: DataFrame, batchDate: String): DataFrame = {
     val invalid = invalidClients(clients, blacklist, batchDate)
@@ -86,8 +73,7 @@ object FraudRules {
     * vacuously true; we implement the documented intent (next event at
     * most `maxMinutes` later).
     */
-  def cityFraud(txns: DataFrame, clients: DataFrame,
-                maxMinutes: Long = 60): DataFrame = {
+  def cityFraud(txns: DataFrame, clients: DataFrame, maxMinutes: Long): DataFrame = {
     // Single-pass form of the reference's three-step query (HAVING
     // subquery + self-join + window): the distinct-city count rides the
     // same user-key window partitioning as the lead(), and the final
@@ -118,7 +104,7 @@ object FraudRules {
     */
   def guessingAmountFraud(txns: DataFrame, clients: DataFrame,
                           maxMinutes: Long,
-                          opTypes: Seq[String] = Seq("purchase", "error")): DataFrame = {
+                          opTypes: Seq[String] = Analog.guessOpTypes): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
     val ops = txns
       .filter(col("event_type").isin(opTypes: _*))
@@ -144,9 +130,45 @@ object FraudRules {
       "ts_us", "user_id", "guessing_amount_fraud")
   }
 
-  /** REP_FRAUD mart: tagged UNION ALL of all rules (main.py:20-26). */
+  /** REP_FRAUD mart: tagged UNION ALL of rules (main.py:20-26). */
   def mart(rules: Seq[DataFrame]): DataFrame =
     rules.reduce(_ unionByName _)
+
+  /** The windowed rules' calibration: city-hop window, guessing window and op types. */
+  final case class Params(cityMaxMinutes: Long, guessMaxMinutes: Long,
+                          guessOpTypes: Seq[String])
+
+  /** The analog's calibration over the testdata event stream. */
+  val Analog: Params = Params(cityMaxMinutes = 60, guessMaxMinutes = 4320,
+    guessOpTypes = Seq("purchase", "error"))
+
+  /** The daily job's: the reference's 20-minute guessing run over
+    * payments and withdrawals (rep_fraud.py:187-261). */
+  val Daily: Params = Analog.copy(guessMaxMinutes = 20,
+    guessOpTypes = Seq("PAYMENT", "WITHDRAW"))
+
+  /** What the rules read: transactions keyed by `user_id` (ts_us,
+    * amt_cents, event_type, oper_result, city), the client dimension,
+    * the blacklisted `c_custkey`s, the contract accounts (client,
+    * valid_to), and the date expiries are judged at. */
+  final case class Inputs(txns: DataFrame, clients: DataFrame, blacklist: DataFrame,
+                          accounts: DataFrame, batchDate: String)
+
+  /** Each mart rule tag → its rule, in REP_FRAUD's order. */
+  val rules: ListMap[String, (Inputs, Params) => DataFrame] = ListMap(
+    "passport_fraud" -> { (in: Inputs, _: Params) =>
+      passportFraud(in.clients, in.blacklist, in.txns, in.batchDate) },
+    "account_fraud" -> { (in: Inputs, _: Params) =>
+      accountFraud(in.accounts, in.clients, in.txns, in.batchDate) },
+    "city_fraud" -> { (in: Inputs, p: Params) =>
+      cityFraud(in.txns, in.clients, p.cityMaxMinutes) },
+    "guessing_amount_fraud" -> { (in: Inputs, p: Params) =>
+      guessingAmountFraud(in.txns, in.clients, p.guessMaxMinutes, p.guessOpTypes) })
+
+  /** The mart of the rules tagged `tags` (all four by default); only
+    * those rules are built. */
+  def mart(in: Inputs, p: Params, tags: Seq[String] = rules.keys.toSeq): DataFrame =
+    mart(tags.map(rules(_)(in, p)))
 
   /** Memoized persisted transaction frames, keyed by (session, dir):
     * all four rules (and the mart union) read the same enriched frame,
@@ -175,16 +197,10 @@ object FraudRules {
     txnCache.clear()
   }
 
-  /** All four rules with the calibrated analog parameters. */
-  def allRules(s: SparkSession, d: String, batchDate: String = "2024-06-30")
-      : Seq[DataFrame] = {
-    val txns = enrichedTxns(s, d)
-    val cls = FraudModel.clients(s, d)
-    Seq(
-      passportFraud(cls, FraudModel.passportBlacklist(s, d),
-        FraudModel.cards(s, d), FraudModel.accountsBridge(s, d), txns, batchDate),
-      accountFraud(FraudModel.accounts(s, d), cls, txns, batchDate),
-      cityFraud(txns, cls, maxMinutes = 60),
-      guessingAmountFraud(txns, cls, maxMinutes = 4320))
-  }
+  /** The analog's inputs over the testdata star schema, judged at
+    * 2024-06-30; the transactions are the session's shared persisted
+    * frame. */
+  def analog(s: SparkSession, d: String): Inputs =
+    Inputs(enrichedTxns(s, d), FraudModel.clients(s, d), FraudModel.passportBlacklist(s, d),
+      FraudModel.accounts(s, d), "2024-06-30")
 }

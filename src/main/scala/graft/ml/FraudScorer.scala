@@ -29,9 +29,9 @@ object FraudScorer {
         countDistinct(col("city")).cast("double").as("n_cities"))
       .withColumn("reject_ratio", col("n_rejects") / col("n_ops"))
 
-  /** Labels: users flagged by any deterministic rule. */
+  /** Labels: users flagged by any of the four analog rules. */
   def labels(s: SparkSession, d: String): DataFrame =
-    FraudRules.mart(FraudRules.allRules(s, d))
+    FraudRules.mart(FraudRules.analog(s, d), FraudRules.Analog)
       .select(col("client_key").as("user_id")).distinct()
       .withColumn("label", lit(1.0))
 

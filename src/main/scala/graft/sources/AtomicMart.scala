@@ -11,11 +11,11 @@ import java.util.UUID
 
 /** B27 — crash-atomic, snapshot-isolated mart publish.
   *
-  * [[ReportMart.publishDay]] (B15) converges on re-run, but a reader
-  * CONCURRENT with the dynamic partition overwrite can observe a
-  * half-replaced partition: the overwrite deletes and rewrites files
-  * in place. This sink closes that gap with the manifest-commit
-  * pattern every serious lake format uses (Iceberg/Delta snapshot
+  * A dynamic partition overwrite (B15) converges on re-run, but a
+  * reader CONCURRENT with it can observe a half-replaced partition:
+  * the overwrite deletes and rewrites files in place. This sink closes
+  * that gap with the manifest-commit pattern every serious lake format
+  * uses (Iceberg/Delta snapshot
   * semantics, reduced to the minimum that parquet + a filesystem
   * rename can carry):
   *
@@ -859,7 +859,8 @@ object AtomicMart {
       schemaBasis = Some(base.flatMap(_.schemaDdl)))
   }
 
-  /** B15-shaped convenience: the daily fraud-mart publish. */
+  /** B15 — the daily fraud-mart publish keyed (rule, batch_date): a
+    * re-run of a day replaces only that day's partitions. */
   def publishDay(mart: DataFrame, path: String): Long =
     publish(mart, path, Seq("rule", "batch_date"))
 

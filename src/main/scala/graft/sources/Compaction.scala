@@ -25,9 +25,8 @@ import org.apache.spark.sql.functions._
   *    saturates the cluster while each output file stays one task's
   *    sequential write. Data volume moved = the small files only.
   *
-  * The rewrite lands in a fresh directory + atomic-ish swap is left to
-  * the caller/catalog (same posture as ReportMart's B15 publish);
-  * `compact` itself is pure rewrite mechanics.
+  * The rewrite lands in a fresh directory; the swap is left to the
+  * caller/catalog, and `compact` itself is pure rewrite mechanics.
   */
 object Compaction {
 

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.fraud.FraudRules
+import graft.sources.AtomicMart
+
 /** Continuous file-drop ingestion (SURVEY.md §2 F4): the reference's
   * daily `data/` directory polled by main.py becomes a streaming file
   * source — new `;`-CSV drops are picked up incrementally (exactly-once
@@ -23,31 +26,29 @@ object StreamingIngest {
       .csv(dropDir)
 
   /** F6 — continuous fraud scoring: every micro-batch of staged
-    * transactions runs the stateless rules (passport/account expiry)
-    * and publishes hits to the mart EXACTLY ONCE: foreachBatch is
-    * at-least-once (a crash between sink write and checkpoint commit
-    * replays the batch), so the publish is idempotent on the batch id
-    * (B15's dynamic-partition-overwrite discipline, keyed per
-    * micro-batch) — a replayed batch rewrites its own partitions and
-    * the mart converges. The windowed rules ride
-    * [[StreamingOps.guessingAmountStream]]'s keyed state instead — a
-    * per-batch window would miss cross-batch patterns. */
+    * transactions runs the stateless rules (passport/account expiry;
+    * the blacklist is the clients' `blacklisted = 1` rows) and
+    * publishes hits to the mart EXACTLY ONCE through
+    * [[graft.sources.AtomicMart.publishEpoch]] keyed on the batch id:
+    * foreachBatch is at-least-once, and a replayed batch replaces its
+    * own epoch's partitions in one manifest commit. The windowed rules
+    * ride [[StreamingOps.guessingAmountStream]]'s keyed state instead —
+    * a per-batch window would miss cross-batch patterns. */
   def continuousFraudMart(txns: DataFrame, clients: DataFrame,
                           accounts: DataFrame, batchDate: String,
-                          martPath: String, checkpoint: String): StreamingQuery =
+                          martPath: String, checkpoint: String): StreamingQuery = {
+    val blacklist = clients.filter(col("blacklisted") === 1L).select(col("c_custkey"))
     txns.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val mart = graft.fraud.FraudRules.mart(Seq(
-          graft.fraud.FraudRules.passportFraud(
-            clients, clients.filter(col("blacklisted") === 1L)
-              .select(col("c_custkey")), batch.toDF(), batchDate),
-          graft.fraud.FraudRules.accountFraud(
-            accounts, clients, batch.toDF(), batchDate)))
-        graft.sources.ReportMart.publishBatch(mart, martPath, batchId)
+        val in = FraudRules.Inputs(batch.toDF(), clients, blacklist, accounts, batchDate)
+        AtomicMart.publishEpoch(FraudRules.mart(in, FraudRules.Daily,
+          Seq("passport_fraud", "account_fraud")), martPath, Seq("rule"), batchId)
+        ()
       }
       .start()
+  }
 
   /** F12 — streaming SCD2 maintenance: the reference's daily terminal
     * loop (data_to_db.py's update_terminals_hist cadence) as a
@@ -118,7 +119,7 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        epochId: Long) =>
-        graft.sources.AtomicMart.publishEpoch(batch.toDF(), martPath, partCols, epochId)
+        AtomicMart.publishEpoch(batch.toDF(), martPath, partCols, epochId)
         ()
       }
       .start()

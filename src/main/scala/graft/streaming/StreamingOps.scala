@@ -98,7 +98,7 @@ object StreamingOps {
     * the number of ever-seen users — unbounded on a 100 TB stream.
     */
   def guessingAmountStream(txns: Dataset[Txn],
-                           maxMinutes: Long = 4320,
+                           maxMinutes: Long = graft.fraud.FraudRules.Analog.guessMaxMinutes,
                            watermarkDelay: String = "10 minutes"): Dataset[FraudHit] = {
     import txns.sparkSession.implicits._
 

@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types._
 
-import graft.sources.{DelimitedSource, ReportMart, XlsxSource}
+import graft.sources.{AtomicMart, DelimitedSource, XlsxSource}
 import graft.fraud.FraudRules
 
 /** A4/A5/A1 file-level behavior: delimited reads with explicit schema,
@@ -336,6 +338,66 @@ class IngestSpec extends SparkSpec {
     assert(rows.map(_.toSeq) == Seq(Seq("left right", "5")))
   }
 
+  /** An .xlsx: a zip of (part name, SpreadsheetML) entries. */
+  private def writeWorkbook(path: java.nio.file.Path, parts: (String, String)*): Unit = {
+    val z = new java.util.zip.ZipOutputStream(Files.newOutputStream(path))
+    try for ((n, c) <- parts) {
+      z.putNextEntry(new java.util.zip.ZipEntry(n))
+      z.write(c.getBytes("UTF-8")); z.closeEntry()
+    } finally z.close()
+  }
+
+  private def sheetXml(rows: String*): String =
+    """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
+      |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
+      |""".stripMargin + rows.mkString("\n") + "\n</sheetData></worksheet>"
+
+  /** Two generated terminal feeds, each a two-sheet workbook: a
+    * shared-string header, shared and inline string cells, a sparse row
+    * (B missing), and a second sheet the readers must skip. */
+  private def generatedDrop(): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("graft_xlsx_gen")
+    val shared =
+      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
+        |<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="4" uniqueCount="4">
+        |<si><t>terminal_id</t></si><si><t>terminal_type</t></si><si><t>terminal_city</t></si>
+        |<si><t>POS</t></si>
+        |</sst>""".stripMargin
+    val other = sheetXml("""<row r="1"><c r="A1" t="inlineStr"><is><t>not a feed</t></is></c></row>""")
+    for ((day, id) <- Seq("01032021" -> "P1", "02032021" -> "P2")) {
+      val feed = sheetXml(
+        """<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c><c r="C1" t="s"><v>2</v></c></row>""",
+        s"""<row r="2"><c r="A2" t="inlineStr"><is><t>$id</t></is></c><c r="B2" t="s"><v>3</v></c><c r="C2" t="inlineStr"><is><t>Riga</t></is></c></row>""",
+        s"""<row r="3"><c r="A3" t="inlineStr"><is><t>${id}0</t></is></c><c r="C3"><v>42</v></c></row>""")
+      writeWorkbook(dir.resolve(s"terminals_$day.xlsx"), "xl/worksheets/sheet1.xml" -> feed,
+        "xl/worksheets/sheet2.xml" -> other, "xl/sharedStrings.xml" -> shared)
+    }
+    dir
+  }
+
+  test("A6: xlsx source reads generated two-sheet workbooks (first sheet only)") {
+    val dir = generatedDrop()
+    val df = XlsxSource.read(spark, dir.resolve("terminals_01032021.xlsx").toString)
+    assert(df.columns.toSeq == Seq("terminal_id", "terminal_type", "terminal_city", "_source_file"))
+    val rows = df.collect().map(r => (0 to 2).map(r.getString)).toSeq
+    assert(rows == Seq(Seq("P1", "POS", "Riga"), Seq("P10", null, "42")))
+    assert(XlsxSource.read(spark, s"$dir/terminals_0[12]032021.xlsx")
+      .select("_source_file").distinct().count() == 2)
+  }
+
+  test("A8: DSv2 xlsx format agrees with XlsxSource.read on generated workbooks") {
+    val glob = s"${generatedDrop()}/terminals_0[12]032021.xlsx"
+    val v2 = spark.read.format("graft.sources.XlsxV2").load(glob)
+    val v1 = XlsxSource.read(spark, glob)
+    assert(v2.schema == v1.schema)
+    assert(v1.count() == 4)
+    assert(v2.exceptAll(v1).isEmpty && v1.exceptAll(v2).isEmpty)
+    assert(v2.rdd.getNumPartitions == 2)
+    val pruned = v2.select("terminal_city", "_source_file").collect()
+    assert(pruned.map(_.getString(0)).sorted.toSeq == Seq("42", "42", "Riga", "Riga") &&
+      pruned.forall(_.getString(1).endsWith(".xlsx")))
+  }
+
   test("A6: xlsx cell-reference decoding") {
     assert(XlsxSource.colIndex("A1") == 0)
     assert(XlsxSource.colIndex("Z9") == 25)
@@ -345,27 +407,29 @@ class IngestSpec extends SparkSpec {
 
   test("report mart appends partitioned by rule and reads back") {
     val out = Files.createTempDirectory("graft_mart").resolve("mart").toString
-    val mart = FraudRules.mart(FraudRules.allRules(spark, sf))
-    ReportMart.append(mart, out)
-    val back = ReportMart.read(spark, out)
+    val mart = FraudRules.mart(FraudRules.analog(spark, sf), FraudRules.Analog)
+    AtomicMart.publish(mart, out, Seq("rule"))
+    val back = AtomicMart.read(spark, out)
     assert(back.count() == mart.count())
     assert(back.select("rule").distinct().count() >= 1)
     // partition pruning: rule dirs exist on disk
-    assert(Files.list(Paths.get(out)).iterator().hasNext)
+    val walk = Files.walk(Paths.get(out))
+    try assert(walk.iterator().asScala.exists(_.getFileName.toString.startsWith("rule=")))
+    finally walk.close()
   }
 
   test("B15: publishDay is idempotent and leaves other days untouched") {
     import org.apache.spark.sql.functions.lit
     val out = Files.createTempDirectory("graft_mart2").resolve("mart").toString
-    val base = FraudRules.mart(FraudRules.allRules(spark, sf))
+    val base = FraudRules.mart(FraudRules.analog(spark, sf), FraudRules.Analog)
     val day1 = base.withColumn("batch_date", lit("2024-03-01"))
     val day2 = base.limit(50).withColumn("batch_date", lit("2024-03-02"))
-    ReportMart.publishDay(day1, out)
-    ReportMart.publishDay(day2, out)
-    val n1 = ReportMart.read(spark, out).count()
+    AtomicMart.publishDay(day1, out)
+    AtomicMart.publishDay(day2, out)
+    val n1 = AtomicMart.read(spark, out).count()
     // re-running day2 (the retry case) must converge, not double-append
-    ReportMart.publishDay(day2, out)
-    val back = ReportMart.read(spark, out)
+    AtomicMart.publishDay(day2, out)
+    val back = AtomicMart.read(spark, out)
     assert(back.count() == n1)
     assert(back.filter(org.apache.spark.sql.functions.col("batch_date") ===
       "2024-03-01").count() == day1.count())

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 
 import graft.etl.FraudEtlPipeline
+import graft.fraud.FraudRules
 import graft.etl.FraudEtlPipeline.Layout
 import graft.sources.AtomicMart
 
@@ -73,25 +74,69 @@ class PipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  private lazy val clients = Seq(
+    (1L, "IVANOV IVAN", "0001 000001", "+7000000001", "VIP",
+      java.sql.Date.valueOf("2021-01-01")),
+    (2L, "PETROV PETR", "0002 000002", "+7000000002", "STD",
+      java.sql.Date.valueOf("2025-01-01")),
+    (3L, "SIDOROV SID", "0003 000003", "+7000000003", "STD",
+      java.sql.Date.valueOf("2025-01-01")),
+    (4L, "KOTOV KOT", "0004 000004", "+7000000004", "VIP",
+      java.sql.Date.valueOf("2025-01-01")))
+    .toDF("c_custkey", "fio", "passport_num", "phone", "segment",
+      "passport_valid_to")
+  private lazy val accounts = Seq((2L, java.sql.Date.valueOf("2020-06-01")))
+    .toDF("client", "valid_to")
+
+  test("Daily's four-rule union equals the benchmark's four explicit rule calls") {
+    // (client, minute, cents, op type, result, city): client 1 expired
+    // and blacklisted, 3 blacklisted, 2 on an expired account; 4 hops
+    // city within the hour, 3 only after it; 2 guesses within 20
+    // minutes, 3 within 30, 4 over a transfer
+    val txns = Seq(
+      (1L, 0L, 10000L, "PAYMENT", "SUCCESS", "Moscow"),
+      (3L, 5L, 5000L, "PAYMENT", "SUCCESS", "Oslo"),
+      (3L, 200L, 5000L, "PAYMENT", "SUCCESS", "Moscow"),
+      (4L, 60L, 7000L, "PAYMENT", "SUCCESS", "Moscow"),
+      (4L, 90L, 2000L, "PAYMENT", "SUCCESS", "Oslo"),
+      (2L, 1000L, 5000L, "WITHDRAW", "REJECT", "Riga"),
+      (2L, 1005L, 4000L, "WITHDRAW", "REJECT", "Riga"),
+      (2L, 1010L, 3000L, "WITHDRAW", "REJECT", "Riga"),
+      (2L, 1015L, 2000L, "WITHDRAW", "SUCCESS", "Riga"),
+      (3L, 3000L, 50L, "WITHDRAW", "REJECT", "Moscow"),
+      (3L, 3010L, 40L, "WITHDRAW", "REJECT", "Moscow"),
+      (3L, 3020L, 30L, "WITHDRAW", "REJECT", "Moscow"),
+      (3L, 3030L, 20L, "WITHDRAW", "SUCCESS", "Moscow"),
+      (4L, 2000L, 500L, "TRANSFER", "REJECT", "Oslo"),
+      (4L, 2001L, 400L, "TRANSFER", "REJECT", "Oslo"),
+      (4L, 2002L, 300L, "TRANSFER", "REJECT", "Oslo"),
+      (4L, 2003L, 200L, "TRANSFER", "SUCCESS", "Oslo"))
+      .zipWithIndex.map { case ((u, m, a, t, r, c), i) => (i.toLong, u, m * 60000000L, a, t, r, c) }
+      .toDF("event_id", "user_id", "ts_us", "amt_cents", "event_type", "oper_result", "city")
+    val blacklist = Seq(1L, 3L).toDF("c_custkey")
+    val batchDate = "2021-03-02"
+    val daily = FraudRules.mart(
+      FraudRules.Inputs(txns, clients, blacklist, accounts, batchDate), FraudRules.Daily)
+    // perfbench/driver/Driver.scala's tracedDay, call for call
+    val replay = FraudRules.mart(Seq(
+      FraudRules.passportFraud(clients, blacklist, txns, batchDate),
+      FraudRules.accountFraud(accounts, clients, txns, batchDate),
+      FraudRules.cityFraud(txns, clients, maxMinutes = 60),
+      FraudRules.guessingAmountFraud(txns, clients, maxMinutes = 20,
+        opTypes = Seq("PAYMENT", "WITHDRAW"))))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(daily) == rows(replay))
+    val byRule = daily.select("rule", "client_key").as[(String, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    assert(byRule == Map("passport_fraud" -> Set(1L, 3L), "account_fraud" -> Set(2L),
+      "city_fraud" -> Set(4L), "guessing_amount_fraud" -> Set(2L)))
+  }
+
   test("two daily runs: SCD2 versions, rule hits, mart append, archive") {
     val root = Files.createTempDirectory("graft_pipeline")
     val drop = Files.createDirectory(root.resolve("drop"))
     val layout = Layout(drop.toString, root.resolve("archive").toString,
       root.resolve("terminals_hist").toString, root.resolve("mart").toString)
-
-    val clients = Seq(
-      (1L, "IVANOV IVAN", "0001 000001", "+7000000001", "VIP",
-        java.sql.Date.valueOf("2021-01-01")),
-      (2L, "PETROV PETR", "0002 000002", "+7000000002", "STD",
-        java.sql.Date.valueOf("2025-01-01")),
-      (3L, "SIDOROV SID", "0003 000003", "+7000000003", "STD",
-        java.sql.Date.valueOf("2025-01-01")),
-      (4L, "KOTOV KOT", "0004 000004", "+7000000004", "VIP",
-        java.sql.Date.valueOf("2025-01-01")))
-      .toDF("c_custkey", "fio", "passport_num", "phone", "segment",
-        "passport_valid_to")
-    val accounts = Seq((2L, java.sql.Date.valueOf("2020-06-01")))
-      .toDF("client", "valid_to")
 
     writeDay1(drop)
     assert(FraudEtlPipeline.runDaily(spark, layout, clients, accounts)

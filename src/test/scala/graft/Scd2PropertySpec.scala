@@ -9,13 +9,15 @@ import org.apache.spark.sql.functions._
 import graft.etl.Scd2
 
 /** SCD2 merge invariants under randomized snapshot pairs (seeded):
-  *   1. currentView(merge(init(s1), s2)) == s2 (modulo row order)
+  *   1. currentView(merge(init(s1), s2)) == s2 (modulo row order), also
+  *      when attributes are or become null
   *   2. versions partition time: one open row per surviving key, closed
   *      versions end at the batch date
   *   3. deleted keys leave exactly one tombstone carrying old attrs
   *
   * and, over seeded multi-day chains, the one-window merge equals the
-  * three-detect merge it replaced, row for row.
+  * three-detect merge it replaced, row for row. A snapshot that
+  * repeats a key fails the merge.
   */
 class Scd2PropertySpec extends SparkSpec {
   import spark.implicits._
@@ -60,6 +62,38 @@ class Scd2PropertySpec extends SparkSpec {
         assert(tombs.length == 1 && tombs.head._2 == s1(k),
           s"trial $trial key $k: tombstone")
       }
+    }
+  }
+
+  test("invariant (1) holds when an attribute turns null, stops being null or stays null") {
+    // key 1: null -> Rome -> null; key 2: Oslo -> null -> Oslo;
+    // key 3: null throughout; key 4: Lima throughout
+    val days = Seq(
+      Seq(1L -> null, 2L -> "Oslo", 3L -> null, 4L -> "Lima"),
+      Seq(1L -> "Rome", 2L -> null, 3L -> null, 4L -> "Lima"),
+      Seq(1L -> null, 2L -> "Oslo", 3L -> null, 4L -> "Lima"))
+    var hist = Scd2.init(days.head.toDF("terminal_id", "city"), "d1")
+    for ((snap, i) <- days.zipWithIndex.tail) {
+      hist = Scd2.merge(hist, snap.toDF("terminal_id", "city"), "terminal_id", attrs, s"d${i + 1}")
+      val current = Scd2.currentView(hist).select("terminal_id", "city").as[(Long, String)]
+        .collect().toMap
+      assert(current == snap.toMap, s"day ${i + 1}: current view != snapshot")
+    }
+    val versions = hist.groupBy("terminal_id").count().as[(Long, Long)].collect().toMap
+    // keys 1 and 2 open a version per day; keys 3 and 4 never change
+    assert(versions == Map(1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 1L))
+  }
+
+  test("a snapshot that repeats a key fails the merge") {
+    val hist = Scd2.init(Seq(1L -> "Rome", 2L -> "Oslo").toDF("terminal_id", "city"), "d1")
+    for (dup <- Seq(2L, 3L)) { // an existing key, a new key
+      val snap = Seq(1L -> "Rome", dup -> "Lima", dup -> "Bern").toDF("terminal_id", "city")
+      val e = intercept[Exception] {
+        Scd2.merge(hist, snap, "terminal_id", attrs, "d2").collect()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(s"duplicate terminal_id in the snapshot: $dup")),
+        s"key $dup: $e")
     }
   }
 

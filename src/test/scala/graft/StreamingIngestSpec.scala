@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.etl.FraudEtlPipeline
+import graft.sources.AtomicMart
 import graft.streaming.StreamingIngest
 
 /** F4 — continuous file-drop ingestion into a date-partitioned lake,
@@ -41,7 +42,7 @@ class StreamingIngestSpec extends SparkSpec {
     val q = StreamingIngest.continuousFraudMart(stream, clients, accounts,
       "2021-03-01", mart, root.resolve("ckpt").toString)
     q.awaitTermination()
-    val hits = spark.read.parquet(mart)
+    val hits = AtomicMart.read(spark, mart)
     // client 1 expired passport; client 2 expired account
     assert(hits.filter(col("rule") === "passport_fraud")
       .select("client_key").as[Long].collect().toSet == Set(1L))
@@ -81,13 +82,13 @@ class StreamingIngestSpec extends SparkSpec {
         "2021-03-01", mart, ckpt).awaitTermination()
     }
     run(root.resolve("ckpt").toString)
-    val first = spark.read.parquet(mart).drop("batch_id").collect().toSeq
+    val first = AtomicMart.read(spark, mart).drop("epoch").collect().toSeq
     assert(first.nonEmpty)
     // kill-and-replay: a fresh checkpoint re-delivers the same files as
     // micro-batch 0 — the worst-case at-least-once replay. The
-    // batch-id-keyed dynamic overwrite must rewrite, not append.
+    // epoch-keyed commit must replace, not append.
     run(root.resolve("ckpt_replay").toString)
-    val replayed = spark.read.parquet(mart).drop("batch_id").collect().toSeq
+    val replayed = AtomicMart.read(spark, mart).drop("epoch").collect().toSeq
     assert(replayed.groupBy(identity).view.mapValues(_.size).toMap ==
       first.groupBy(identity).view.mapValues(_.size).toMap,
       s"mart diverged after replay: ${first.size} -> ${replayed.size} rows")
