@@ -414,11 +414,8 @@ object AtomicMart {
     *    widening is a silent rewrite of history; an intentional type
     *    change is a new column + backfill, stated in the plan.
     *
-    * Driver-only string/metadata work — nothing here touches data. */
-  private[sources] def mergedSchemaDdl(spark: SparkSession, path: String,
-      batch: org.apache.spark.sql.types.StructType, mergeSchema: Boolean): String =
-    mergedSchemaDdlFrom(readManifest(spark, path), batch, mergeSchema)
-
+    * Driver-only string/metadata work — nothing here touches data;
+    * `base` is the manifest the commit builds on. */
   private[sources] def mergedSchemaDdlFrom(base: Option[Manifest],
       batch: org.apache.spark.sql.types.StructType, mergeSchema: Boolean): String = {
     import org.apache.spark.sql.types.StructType

@@ -1,22 +1,21 @@
 package graft.sources
 
+import java.io.InputStream
 import java.nio.ByteBuffer
-import java.util.{Map => JMap, Set => JSet}
+import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
+import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,8 +23,8 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** A9 — Avro source + sink over the container-format jars Spark ships
   * (org.apache.avro; the spark-avro connector module is NOT on this
-  * classpath, so the format is wired up from scratch, the A8 XlsxV2
-  * pattern): `spark.read.format("graft.sources.AvroV2").load(dir)`
+  * classpath, so the format is wired up from scratch as a
+  * [[PerFileFormat]]): `spark.read.format("graft.sources.AvroV2").load(dir)`
   * and [[AvroV2.write]].
   *
   * Scale shape: one `InputPartition` per .avro file — container files
@@ -46,42 +45,19 @@ import org.apache.spark.util.SerializableConfiguration
   * fast with a clear message — flatten before export (the B1 rename /
   * D45 collection ops exist for exactly that).
   */
-class AvroV2 extends TableProvider {
-  override def supportsExternalMetadata(): Boolean = true
+class AvroV2 extends PerFileFormat {
+  override protected def label: String = "avro"
+  override protected def suffix: String = ".avro"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     AvroV2.schemaFor(options.get("path"))
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table =
-    new AvroV2.AvroTable(schema, properties.get("path"))
+  override protected def scanBuilder(full: StructType, path: String,
+                                     options: JMap[String, String]): ScanBuilder =
+    new AvroV2.AvroScanBuilder(full, path)
 }
 
 object AvroV2 {
-
-  private def driverConf: Configuration =
-    SparkSession.active.sessionState.newHadoopConf()
-
-  private[sources] def fileBytes(pathGlob: String, conf: Configuration): Long = {
-    val p = new Path(pathGlob)
-    val fs = p.getFileSystem(conf)
-    val stats = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    stats.toSeq
-      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
-      .filter(_.getPath.getName.endsWith(".avro"))
-      .map(_.getLen).sum
-  }
-
-  private[sources] def listFiles(pathGlob: String, conf: Configuration): Seq[String] = {
-    val p = new Path(pathGlob)
-    val fs = p.getFileSystem(conf)
-    val stats = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    stats.toSeq
-      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
-      .filter(_.getPath.getName.endsWith(".avro"))
-      .map(_.getPath.toString)
-      .sorted
-  }
 
   // ---- schema mapping (both directions share one supported set) ----
 
@@ -137,13 +113,9 @@ object AvroV2 {
   }
 
   def schemaFor(pathGlob: String): StructType = {
-    val conf = driverConf
-    val files = listFiles(pathGlob, conf)
-    require(files.nonEmpty, s"no .avro files match $pathGlob")
-    val p = new Path(files.head)
-    val in = p.getFileSystem(conf).open(p)
-    val stream = new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]())
-    val avro = try stream.getSchema finally { stream.close(); in.close() }
+    val avro = PerFileFormat.readFirst(pathGlob, ".avro") { (_, in) =>
+      new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]()).getSchema
+    }
     StructType(avro.getFields.asScala.map(fromAvroField).toArray)
   }
 
@@ -156,14 +128,15 @@ object AvroV2 {
   def write(df: DataFrame, dir: String): Unit = {
     val schema = df.schema
     val avroJson = toAvroSchema(schema, "graft_export").toString
+    val conf = new SerializableConfiguration(PerFileFormat.hadoopConf(df.sparkSession))
     val p0 = new Path(dir)
-    p0.getFileSystem(driverConf).mkdirs(p0)
+    p0.getFileSystem(conf.value).mkdirs(p0)
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.hasNext) {
         val avro = new Schema.Parser().parse(avroJson)
         val part = TaskContext.getPartitionId()
         val path = new Path(dir, f"part-$part%05d.avro")
-        val out = path.getFileSystem(new Configuration()).create(path, true)
+        val out = path.getFileSystem(conf.value).create(path, true)
         val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avro))
         w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
         w.create(avro, out)
@@ -192,17 +165,7 @@ object AvroV2 {
     }
   }
 
-  // ---- scan machinery (the A8 shape) ----
-
-  private[sources] class AvroTable(schema0: StructType, path: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"avro:$path"
-    override def schema(): StructType = schema0
-    override def capabilities(): JSet[TableCapability] =
-      java.util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new AvroScanBuilder(schema0, path)
-  }
+  // ---- scan: the PerFileFormat shape plus filter/aggregate pushdown ----
 
   /** I27 — DSv2 AGGREGATE pushdown (SupportsPushDownAggregates): a
     * no-group-by COUNT(*) / MIN / MAX over this source never ships
@@ -232,10 +195,9 @@ object AvroV2 {
     * resolve against the FILE schema independently of column pruning
     * (a filter column need not survive the projection). */
   private class AvroScanBuilder(full: StructType, path: String)
-      extends ScanBuilder with SupportsPushDownRequiredColumns
+      extends PerFileFormat.PrunedScanBuilder(full)
       with SupportsPushDownAggregates
       with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-    private var required: StructType = full
     private var aggs: Seq[PushedAgg] = Nil
     private var pushed: Array[org.apache.spark.sql.sources.Filter] =
       Array.empty
@@ -249,9 +211,6 @@ object AvroV2 {
     }
     override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
       pushed
-
-    override def pruneColumns(requiredSchema: StructType): Unit =
-      required = requiredSchema
 
     override def pushAggregation(aggregation: Aggregation): Boolean = {
       if (aggregation.groupByExpressions.nonEmpty) return false
@@ -279,8 +238,8 @@ object AvroV2 {
     }
 
     override def build(): Scan =
-      if (aggs.nonEmpty) new AvroAggScan(full, aggs, path, pushed)
-      else new AvroScan(full, required, path, pushed)
+      if (aggs.nonEmpty) new AvroAggScan(aggs, path, pushed)
+      else new AvroScan(required, path, pushed)
   }
 
   /** Shared executor-side evaluator for the I29 pushed filters: values
@@ -324,6 +283,15 @@ object AvroV2 {
       case other => sys.error(s"unsupported pushed comparison: $other")
     }
 
+    /** All of `filters` as one record predicate. Filter columns
+      * resolve against the file's schema, independently of column
+      * pruning (a filter column need not survive the projection). */
+    def matcher(filters: Array[Filter], schema: Schema): GenericRecord => Boolean = {
+      val pos = filters.flatMap(_.references).distinct
+        .map(c => c -> schema.getField(c).pos()).toMap
+      rec => filters.forall(eval(_, c => rec.get(pos(c))))
+    }
+
     def eval(f: Filter, get: String => AnyRef): Boolean = f match {
       case EqualTo(a, v) => cmp(get(a), v).contains(0)
       case GreaterThan(a, v) => cmp(get(a), v).exists(_ > 0)
@@ -341,103 +309,82 @@ object AvroV2 {
   private[sources] case class AggMin(f: StructField) extends PushedAgg
   private[sources] case class AggMax(f: StructField) extends PushedAgg
 
-  private class AvroAggScan(full: StructType, aggs: Seq[PushedAgg],
-                            path: String,
+  private def aggSchema(aggs: Seq[PushedAgg]): StructType = StructType(aggs.map {
+    case AggCountStar => StructField("count_star", LongType, nullable = false)
+    case AggMin(f) => StructField(s"min_${f.name}", f.dataType)
+    case AggMax(f) => StructField(s"max_${f.name}", f.dataType)
+  })
+
+  private class AvroAggScan(aggs: Seq[PushedAgg], path: String,
                             filters: Array[org.apache.spark.sql.sources.Filter])
-      extends Scan with Batch {
-    override def readSchema(): StructType = StructType(aggs.map {
-      case AggCountStar => StructField("count_star", LongType, nullable = false)
-      case AggMin(f) => StructField(s"min_${f.name}", f.dataType)
-      case AggMax(f) => StructField(s"max_${f.name}", f.dataType)
-    })
+      extends PerFileFormat.FileScan(path, ".avro", aggSchema(aggs),
+        new AggDecoder(aggs, filters)) {
     override def description(): String = "AvroAggScan pushed=[" + aggs.map {
       case AggCountStar => "count(*)"
       case AggMin(f) => s"min(${f.name})"
       case AggMax(f) => s"max(${f.name})"
     }.mkString(", ") + "] PushedFilters=[" + filters.mkString(", ") + "]"
-    override def toBatch: Batch = this
-    override def planInputPartitions(): Array[InputPartition] =
-      listFiles(path, driverConf).map(f => AvroPartition(f): InputPartition).toArray
-    override def createReaderFactory(): PartitionReaderFactory =
-      new AvroAggReaderFactory(aggs, filters,
-        new SerializableConfiguration(driverConf))
   }
 
-  private class AvroAggReaderFactory(aggs: Seq[PushedAgg],
-                                     filters: Array[org.apache.spark.sql.sources.Filter],
-                                     conf: SerializableConfiguration)
-      extends PartitionReaderFactory {
-    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-      val file = p.asInstanceOf[AvroPartition].file
-      new PartitionReader[InternalRow] {
-        private var done = false
-        private var row: InternalRow = _
+  /** One file → one partial-aggregate row, in one streaming pass. */
+  private class AggDecoder(aggs: Seq[PushedAgg],
+                           filters: Array[org.apache.spark.sql.sources.Filter])
+      extends PerFileFormat.Decoder {
+    override def rows(file: String, in: InputStream): Iterator[InternalRow] =
+      Iterator.fill(1)(fold(in))
 
-        // one streaming pass over the file; partial per aggregate
-        private def fold(): InternalRow = {
-          val pth = new Path(file)
-          val in = pth.getFileSystem(conf.value).open(pth)
-          val stream = new DataFileStream[GenericRecord](
-            in, new GenericDatumReader[GenericRecord]())
-          try {
-            val pos = aggs.map {
-              case AggCountStar => -1
-              case AggMin(f) => stream.getSchema.getField(f.name).pos()
-              case AggMax(f) => stream.getSchema.getField(f.name).pos()
-            }
-            var count = 0L
-            val acc = Array.fill[Any](aggs.length)(null)
-            def lt(a: Any, b: Any): Boolean = (a, b) match {
-              case (x: Int, y: Int) => x < y
-              case (x: Long, y: Long) => x < y
-              case (x: Float, y: Float) => x < y
-              case (x: Double, y: Double) => x < y
-              case (x: UTF8String, y: UTF8String) => x.compareTo(y) < 0
-              case _ => sys.error(s"unorderable partial: $a vs $b")
-            }
-            val fcols = filters.flatMap(_.references).distinct
-            val fpos = fcols.map(c =>
-              c -> stream.getSchema.getField(c).pos()).toMap
-            while (stream.hasNext) {
-              val rec = stream.next()
-              if (filters.forall(FilterEval.eval(_,
-                  c => rec.get(fpos(c)).asInstanceOf[AnyRef]))) {
-              count += 1L
-              aggs.indices.foreach { i =>
-                aggs(i) match {
-                  case AggCountStar => ()
-                  case AggMin(f) =>
-                    val v = conv(rec.get(pos(i)).asInstanceOf[AnyRef], f)
-                    if (v != null && (acc(i) == null || lt(v, acc(i))))
-                      acc(i) = v
-                  case AggMax(f) =>
-                    val v = conv(rec.get(pos(i)).asInstanceOf[AnyRef], f)
-                    if (v != null && (acc(i) == null || lt(acc(i), v)))
-                      acc(i) = v
-                }
-              }
-              }
-            }
-            InternalRow.fromSeq(aggs.indices.map(i => aggs(i) match {
-              case AggCountStar => count
-              case _ => acc(i)
-            }))
-          } finally { stream.close(); in.close() }
-        }
-
-        private def conv(v: AnyRef, f: StructField): Any = v match {
-          case null => null
-          case u: org.apache.avro.util.Utf8 => UTF8String.fromString(u.toString)
-          case s: String => UTF8String.fromString(s)
-          case other => other
-        }
-
-        override def next(): Boolean =
-          if (done) false else { row = fold(); done = true; true }
-        override def get(): InternalRow = row
-        override def close(): Unit = ()
+    private def fold(in: InputStream): InternalRow = {
+      val stream = new DataFileStream[GenericRecord](
+        in, new GenericDatumReader[GenericRecord]())
+      val pos = aggs.map {
+        case AggCountStar => -1
+        case AggMin(f) => stream.getSchema.getField(f.name).pos()
+        case AggMax(f) => stream.getSchema.getField(f.name).pos()
       }
+      var count = 0L
+      val acc = Array.fill[Any](aggs.length)(null)
+      def lt(a: Any, b: Any): Boolean = (a, b) match {
+        case (x: Int, y: Int) => x < y
+        case (x: Long, y: Long) => x < y
+        case (x: Float, y: Float) => x < y
+        case (x: Double, y: Double) => x < y
+        case (x: UTF8String, y: UTF8String) => x.compareTo(y) < 0
+        case _ => sys.error(s"unorderable partial: $a vs $b")
+      }
+      val keep = FilterEval.matcher(filters, stream.getSchema)
+      while (stream.hasNext) {
+        val rec = stream.next()
+        if (keep(rec)) {
+          count += 1L
+          aggs.indices.foreach { i =>
+            aggs(i) match {
+              case AggCountStar => ()
+              case AggMin(_) =>
+                val v = convert(rec.get(pos(i)))
+                if (v != null && (acc(i) == null || lt(v, acc(i)))) acc(i) = v
+              case AggMax(_) =>
+                val v = convert(rec.get(pos(i)))
+                if (v != null && (acc(i) == null || lt(acc(i), v))) acc(i) = v
+            }
+          }
+        }
+      }
+      InternalRow.fromSeq(aggs.indices.map(i => aggs(i) match {
+        case AggCountStar => count
+        case _ => acc(i)
+      }))
     }
+  }
+
+  /** Avro datum → Catalyst value. */
+  private def convert(v: AnyRef): Any = v match {
+    case null => null
+    case u: org.apache.avro.util.Utf8 => UTF8String.fromString(u.toString)
+    case s: String => UTF8String.fromString(s)
+    case b: ByteBuffer =>
+      val a = new Array[Byte](b.remaining()); b.duplicate().get(a); a
+    case other => other // int/long/float/double/boolean — and the
+    // date / timestamp-micros wire values ARE Catalyst's encodings
   }
 
   /** I28 — DSv2 statistics reporting (SupportsReportStatistics): the
@@ -451,84 +398,35 @@ object AvroV2 {
     * errs large and a borderline table stays on the safe SMJ path).
     * Row count is left unknown: a wrong numRows poisons downstream
     * cardinality estimates, absent is strictly better. */
-  private class AvroScan(full: StructType, required: StructType, path: String,
+  private class AvroScan(required: StructType, path: String,
                          filters: Array[org.apache.spark.sql.sources.Filter])
-      extends Scan with Batch
+      extends PerFileFormat.FileScan(path, ".avro", required, new RowDecoder(required, filters))
       with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-    override def readSchema(): StructType = required
     override def description(): String =
       "AvroScan PushedFilters=[" + filters.mkString(", ") + "]"
-    override def toBatch: Batch = this
     override def estimateStatistics()
         : org.apache.spark.sql.connector.read.Statistics =
       new org.apache.spark.sql.connector.read.Statistics {
         override def sizeInBytes(): java.util.OptionalLong =
-          java.util.OptionalLong.of(4L * fileBytes(path, driverConf))
+          java.util.OptionalLong.of(4L * files.map(_.getLen).sum)
         override def numRows(): java.util.OptionalLong =
           java.util.OptionalLong.empty()
       }
-    override def planInputPartitions(): Array[InputPartition] =
-      listFiles(path, driverConf).map(f => AvroPartition(f): InputPartition).toArray
-    override def createReaderFactory(): PartitionReaderFactory =
-      new AvroReaderFactory(required, filters,
-        new SerializableConfiguration(driverConf))
   }
 
-  private case class AvroPartition(file: String) extends InputPartition
-
-  private class AvroReaderFactory(required: StructType,
-                                  filters: Array[org.apache.spark.sql.sources.Filter],
-                                  conf: SerializableConfiguration)
-      extends PartitionReaderFactory {
-    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-      val file = p.asInstanceOf[AvroPartition].file
-      new PartitionReader[InternalRow] {
-        // the session's Hadoop conf shipped from the driver (the
-        // FixedWidth r7 fix): a bare `new Configuration()` on the
-        // executor loses S3 credentials / defaultFS / kerberos
-        private val in = {
-          val pth = new Path(file)
-          pth.getFileSystem(conf.value).open(pth)
-        }
-        private val stream =
-          new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]())
-        // field positions resolved against the FILE's schema by name
-        private val srcIdx = required.fields.map(f =>
-          stream.getSchema.getField(f.name).pos())
-        // filter columns resolve independently of the pruned
-        // projection (a filter column need not survive the project)
-        private val fpos = filters.flatMap(_.references).distinct
-          .map(c => c -> stream.getSchema.getField(c).pos()).toMap
-        private var cur: InternalRow = _
-
-        private def convert(v: AnyRef, dt: DataType): Any = v match {
-          case null => null
-          case u: org.apache.avro.util.Utf8 => UTF8String.fromString(u.toString)
-          case s: String => UTF8String.fromString(s)
-          case b: ByteBuffer =>
-            val a = new Array[Byte](b.remaining()); b.duplicate().get(a); a
-          case other => other // int/long/float/double/boolean — and the
-          // date / timestamp-micros wire values ARE Catalyst's encodings
-        }
-
-        @scala.annotation.tailrec
-        override final def next(): Boolean =
-          if (!stream.hasNext) false
-          else {
-            val rec = stream.next()
-            if (filters.forall(FilterEval.eval(_,
-                c => rec.get(fpos(c)).asInstanceOf[AnyRef]))) {
-              cur = InternalRow.fromSeq(
-                required.fields.indices.map(i =>
-                  convert(rec.get(srcIdx(i)).asInstanceOf[AnyRef],
-                    required.fields(i).dataType)))
-              true
-            } else next()
-          }
-
-        override def get(): InternalRow = cur
-        override def close(): Unit = { stream.close(); in.close() }
-      }
+  /** One file → the records passing the pushed filters, as rows of the
+    * pruned schema; field positions resolve against the FILE's schema
+    * by name. */
+  private class RowDecoder(required: StructType,
+                                    filters: Array[org.apache.spark.sql.sources.Filter])
+      extends PerFileFormat.Decoder {
+    override def rows(file: String, in: InputStream): Iterator[InternalRow] = {
+      val stream =
+        new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]())
+      val srcIdx = required.fields.map(f => stream.getSchema.getField(f.name).pos())
+      val keep = FilterEval.matcher(filters, stream.getSchema)
+      stream.iterator().asScala.filter(keep).map(rec =>
+        InternalRow.fromSeq(srcIdx.toSeq.map(i => convert(rec.get(i)))))
     }
   }
 }

@@ -1,17 +1,13 @@
 package graft.sources
 
-import java.util.{Map => JMap, Set => JSet}
+import java.io.InputStream
+import java.util.{Map => JMap}
 
 import scala.io.Source
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.util.SerializableConfiguration
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -37,22 +33,23 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Blank lines are skipped; short lines are space-padded; a malformed
   * numeric fails LOUDLY with file/line context (a silent null in a
-  * money column is how reconciliation breaks). One InputPartition per
-  * file — daily-drop directories parallelize file-by-file like the
-  * XLSX sources (A6/A8) — and column pruning is pushed into the scan:
-  * pruned fields are never sliced or decoded. [[formatLines]] is the
+  * money column is how reconciliation breaks). A [[PerFileFormat]]:
+  * one InputPartition per file (daily-drop directories parallelize
+  * file-by-file), and column pruning is pushed into the scan: pruned
+  * fields are never sliced or decoded. [[formatLines]] is the
   * inverse (DataFrame → padded records) used for round-trip tests and
   * outbound mainframe feeds. */
-class FixedWidth extends TableProvider {
-  override def supportsExternalMetadata(): Boolean = true
+class FixedWidth extends PerFileFormat {
+  override protected def label: String = "fixedwidth"
+  override protected def suffix: String = ""
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     FixedWidth.schemaFor(FixedWidth.parseSpec(options.get("fields")))
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table =
-    new FixedWidth.FwTable(schema, properties.get("path"),
-      properties.get("fields"))
+  override protected def scanBuilder(full: StructType, path: String,
+                                     options: JMap[String, String]): ScanBuilder =
+    PerFileFormat.prunedScan(path, suffix, full)(required =>
+      new FixedWidth.FwDecoder(FixedWidth.parseSpec(options.get("fields")), required.fieldNames))
 }
 
 object FixedWidth {
@@ -115,111 +112,35 @@ object FixedWidth {
     era * 146097 + doe - 719468
   }
 
-  private def driverConf: Configuration =
-    SparkSession.active.sessionState.newHadoopConf()
-
-  private[sources] def listFiles(pathGlob: String, conf: Configuration): Seq[String] = {
-    val p = new Path(pathGlob)
-    val fs = p.getFileSystem(conf)
-    val stats = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    stats.toSeq
-      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
-      .filterNot(_.isDirectory)
-      .map(_.getPath.toString)
-      .sorted
-  }
-
-  private[sources] class FwTable(schema0: StructType, path: String,
-                                 fieldsOpt: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"fixedwidth:$path"
-    override def schema(): StructType = schema0
-    override def capabilities(): JSet[TableCapability] =
-      java.util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new FwScanBuilder(schema0, path, fieldsOpt)
-  }
-
-  private class FwScanBuilder(full: StructType, path: String, fieldsOpt: String)
-      extends ScanBuilder with SupportsPushDownRequiredColumns {
-    private var required: StructType = full
-    override def pruneColumns(requiredSchema: StructType): Unit =
-      required = requiredSchema
-    override def build(): Scan = new FwScan(required, path, fieldsOpt)
-  }
-
-  private class FwScan(required: StructType, path: String, fieldsOpt: String)
-      extends Scan with Batch {
-    override def readSchema(): StructType = required
-    override def toBatch: Batch = this
-    override def planInputPartitions(): Array[InputPartition] =
-      listFiles(path, driverConf).map(f => FwPartition(f): InputPartition).toArray
-    override def createReaderFactory(): PartitionReaderFactory =
-      // the SESSION's Hadoop conf rides to executors in a
-      // SerializableConfiguration — a reader built from a bare `new
-      // Configuration()` loses S3 credentials / defaultFS / kerberos
-      new FwReaderFactory(fieldsOpt, required.fieldNames,
-        new SerializableConfiguration(driverConf))
-  }
-
-  private case class FwPartition(file: String) extends InputPartition
-
-  private class FwReaderFactory(fieldsOpt: String,
-                                requiredNames: Array[String],
-                                conf: SerializableConfiguration)
-      extends PartitionReaderFactory {
-    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-      val file = p.asInstanceOf[FwPartition].file
-      new PartitionReader[InternalRow] {
-        private val fields = parseSpec(fieldsOpt)
-        private val recLen = fields.map(_.width).sum
-        // pruning: only the REQUIRED fields are sliced and decoded
-        private val picked = requiredNames.map(n => fields.find(_.name == n).get)
-        private var lineNo = 0
-        // stream lazily: a multi-GB daily drop must not materialize in
-        // one Vector; the open stream is released in close()
-        private var src: Source = _
-        private lazy val lines: Iterator[String] = {
-          val pth = new Path(file)
-          src = Source.fromInputStream(
-            pth.getFileSystem(conf.value).open(pth), "UTF-8")
-          src.getLines()
+  private class FwDecoder(fields: Seq[Field], requiredNames: Array[String])
+      extends PerFileFormat.Decoder {
+    override def rows(file: String, in: InputStream): Iterator[InternalRow] = {
+      val recLen = fields.map(_.width).sum
+      // pruning: only the REQUIRED fields are sliced and decoded
+      val picked = requiredNames.map(n => fields.find(_.name == n).get)
+      // lines stream: a multi-GB daily drop never materializes at once
+      Source.fromInputStream(in, "UTF-8").getLines().zipWithIndex
+        .filter(_._1.trim.nonEmpty)
+        .map { case (line, i) =>
+          val padded = if (line.length >= recLen) line
+          else line + (" " * (recLen - line.length))
+          def ctx = s"$file:${i + 1}"
+          InternalRow.fromSeq(picked.toSeq.map { f =>
+            val raw = padded.substring(f.start, f.start + f.width)
+            f.kind match {
+              case "string" =>
+                val v = raw.replaceAll("\\s+$", "")
+                if (v.isEmpty) null else UTF8String.fromString(v)
+              case "long" =>
+                val t = raw.trim
+                require(t.nonEmpty && t.forall(_.isDigit),
+                  s"bad long '$raw' at $ctx")
+                t.toLong
+              case "cents" => decodeZoned(raw, ctx)
+              case "day" => yyyymmddToEpochDay(raw, ctx)
+            }
+          })
         }
-        private var cur: InternalRow = _
-
-        override def next(): Boolean = {
-          var line: String = null
-          while (line == null && lines.hasNext) {
-            val l = lines.next(); lineNo += 1
-            if (l.trim.nonEmpty) line = l
-          }
-          if (line == null) false
-          else {
-            val padded = if (line.length >= recLen) line
-            else line + (" " * (recLen - line.length))
-            def ctx = s"$file:$lineNo"
-            cur = InternalRow.fromSeq(picked.toSeq.map { f =>
-              val raw = padded.substring(f.start, f.start + f.width)
-              f.kind match {
-                case "string" =>
-                  val v = raw.replaceAll("\\s+$", "")
-                  if (v.isEmpty) null else UTF8String.fromString(v)
-                case "long" =>
-                  val t = raw.trim
-                  require(t.nonEmpty && t.forall(_.isDigit),
-                    s"bad long '$raw' at $ctx")
-                  t.toLong
-                case "cents" => decodeZoned(raw, ctx)
-                case "day" => yyyymmddToEpochDay(raw, ctx)
-              }
-            })
-            true
-          }
-        }
-
-        override def get(): InternalRow = cur
-        override def close(): Unit = if (src != null) src.close()
-      }
     }
   }
 

@@ -4,8 +4,7 @@ import java.io.{ByteArrayInputStream, InputStream}
 import java.util.zip.ZipInputStream
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** XLSX ingestion (SURVEY.md §2 A6 — the reference's terminals and
   * passport-blacklist daily feeds are .xlsx: data_to_db.py:22-24
@@ -16,9 +15,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * parser — so the workbook decode is self-contained here instead of
   * pulling Apache POI (which the zero-egress build cannot resolve).
   *
-  * Scale posture: `binaryFiles` gives one task per workbook, the parse
-  * runs executor-side, and no shuffle happens — a day's drop of N files
-  * scans with N-way parallelism, exactly like the delimited sources.
+  * Scale posture: [[read]] is the [[XlsxV2]] DataSourceV2 format — one
+  * task per workbook, the parse runs executor-side, and no shuffle
+  * happens — a day's drop of N files scans with N-way parallelism,
+  * exactly like the delimited sources.
   * XLSX is a driver-facing ingest format (dimension feeds, thousands of
   * rows each), not a fact-table format; the parsed frame lands in
   * staging parquet immediately (FraudEtlPipeline), so the XML cost is
@@ -155,26 +155,9 @@ object XlsxSource {
   }
 
   /** Read a glob of .xlsx workbooks into one DataFrame of string
-    * columns named by the (shared) header row, plus `_source_file` for
-    * filename-derived batch ids (pairs with
-    * [[DelimitedSource.batchDateFromName]]). */
-  def read(spark: SparkSession, pathGlob: String): DataFrame = {
-    val files = spark.sparkContext.binaryFiles(pathGlob)
-    // Header from one workbook driver-side (feeds share one schema).
-    val header = files.take(1) match {
-      case Array((_, pds)) => parseWorkbook(pds.open()).head.map(Option(_).getOrElse(""))
-      case _ => throw new IllegalArgumentException(s"no files match $pathGlob")
-    }
-    val width = header.length
-    val rows = files.flatMap { case (path, pds) =>
-      parseWorkbook(pds.open()).drop(1).map { cells =>
-        val dense = cells.take(width).padTo(width, null)
-        Row.fromSeq(dense.toSeq :+ path)
-      }
-    }
-    val schema = StructType(
-      header.map(StructField(_, StringType, nullable = true)) :+
-        StructField("_source_file", StringType, nullable = false))
-    spark.createDataFrame(rows, schema)
-  }
+    * columns named by the (shared) header row of the first workbook,
+    * plus `_source_file` for filename-derived batch ids (pairs with
+    * [[DelimitedSource.batchIdFromFilename]]): the [[XlsxV2]] format. */
+  def read(spark: SparkSession, pathGlob: String): DataFrame =
+    spark.read.format(classOf[XlsxV2].getName).load(pathGlob)
 }

@@ -1,139 +1,74 @@
 package graft.sources
 
-import java.util.{Map => JMap, Set => JSet}
+import java.io.InputStream
+import java.util.{Map => JMap}
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A8 — the dependency-free XLSX reader as a genuine DataSourceV2
-  * format: `spark.read.format("graft.sources.XlsxV2").load(glob)`.
+  * format: `spark.read.format("graft.sources.XlsxV2").load(glob)`, the
+  * one XLSX read path ([[XlsxSource.read]] is this call).
   * This is the remaining Spark integration surface after expressions,
   * aggregates, planner strategies and optimizer rules (I-section) —
-  * a `TableProvider` with schema inference (header row of the first
+  * a [[PerFileFormat]] with schema inference (header row of the first
   * workbook), one `InputPartition` PER FILE (a daily-drop directory
   * parallelizes across the cluster file-by-file, the right granularity
   * for zip-archived workbooks that cannot be split), and COLUMN
-  * PRUNING pushed into the scan (`SupportsPushDownRequiredColumns`) —
-  * a `select(two, cols)` materializes only those fields per row.
+  * PRUNING pushed into the scan — a `select(two, cols)` materializes
+  * only those fields per row.
   * Parsing itself is [[XlsxSource.parseWorkbook]] (JDK zip + StAX),
   * executor-side through Hadoop streams, so any FS Spark can reach
-  * works. Appends `_source_file` for batch-date extraction, matching
-  * [[XlsxSource.read]].
+  * works. Appends `_source_file` (the workbook's path) for batch-date
+  * extraction ([[DelimitedSource.batchIdFromFilename]]).
   */
-class XlsxV2 extends TableProvider {
-  override def supportsExternalMetadata(): Boolean = true
+class XlsxV2 extends PerFileFormat {
+  override protected def label: String = "xlsx"
+  override protected def suffix: String = ".xlsx"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     XlsxV2.schemaFor(options.get("path"))
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table =
-    new XlsxV2.XlsxTable(schema, properties.get("path"))
+  override protected def scanBuilder(full: StructType, path: String,
+                                     options: JMap[String, String]): ScanBuilder =
+    PerFileFormat.prunedScan(path, suffix, full)(required =>
+      new XlsxV2.XlsxDecoder(full.fieldNames, required.fieldNames))
 }
 
 object XlsxV2 {
 
   val SourceFileCol = "_source_file"
 
-  private def driverConf: Configuration =
-    SparkSession.active.sessionState.newHadoopConf()
-
-  private[sources] def listFiles(pathGlob: String, conf: Configuration): Seq[String] = {
-    val p = new Path(pathGlob)
-    val fs = p.getFileSystem(conf)
-    val stats = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    stats.toSeq
-      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
-      .filter(_.getPath.getName.endsWith(".xlsx"))
-      .map(_.getPath.toString)
-      .sorted
-  }
-
   def schemaFor(pathGlob: String): StructType = {
-    val conf = driverConf
-    val files = listFiles(pathGlob, conf)
-    require(files.nonEmpty, s"no .xlsx files match $pathGlob")
-    val p = new Path(files.head)
-    val in = p.getFileSystem(conf).open(p)
-    val header = try XlsxSource.parseWorkbook(in).head finally in.close()
+    val header = PerFileFormat.readFirst(pathGlob, ".xlsx") { (file, in) =>
+      XlsxSource.parseWorkbook(in).headOption.getOrElse(throw new IllegalArgumentException(
+        s"$file: the first sheet has no rows, so no header to name the columns"))
+    }
     StructType(header.map(h =>
       StructField(Option(h).getOrElse(""), StringType, nullable = true)) :+
       StructField(SourceFileCol, StringType, nullable = false))
   }
 
-  private[sources] class XlsxTable(schema0: StructType, path: String)
-      extends Table with SupportsRead {
-    override def name(): String = s"xlsx:$path"
-    override def schema(): StructType = schema0
-    override def capabilities(): JSet[TableCapability] =
-      java.util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new XlsxScanBuilder(schema0, path)
-  }
-
-  private class XlsxScanBuilder(full: StructType, path: String)
-      extends ScanBuilder with SupportsPushDownRequiredColumns {
-    private var required: StructType = full
-    override def pruneColumns(requiredSchema: StructType): Unit =
-      required = requiredSchema
-    override def build(): Scan = new XlsxScan(full, required, path)
-  }
-
-  private class XlsxScan(full: StructType, required: StructType, path: String)
-      extends Scan with Batch {
-    override def readSchema(): StructType = required
-    override def toBatch: Batch = this
-    override def planInputPartitions(): Array[InputPartition] =
-      listFiles(path, driverConf).map(f => XlsxPartition(f): InputPartition).toArray
-    override def createReaderFactory(): PartitionReaderFactory =
-      new XlsxReaderFactory(full.fieldNames, required.fieldNames)
-  }
-
-  private case class XlsxPartition(file: String) extends InputPartition
-
-  private class XlsxReaderFactory(fullNames: Array[String],
-                                  requiredNames: Array[String])
-      extends PartitionReaderFactory {
-    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-      val file = p.asInstanceOf[XlsxPartition].file
-      new PartitionReader[InternalRow] {
-        // data columns only — _source_file is synthesized, not parsed
-        private val width = fullNames.length - 1
-        private val idx = requiredNames.map {
-          case SourceFileCol => -1
-          case n => fullNames.indexOf(n)
-        }
-        private val fileU = UTF8String.fromString(file)
-        private lazy val rows: Iterator[Array[String]] = {
-          val pth = new Path(file)
-          val in = pth.getFileSystem(new Configuration()).open(pth)
-          try XlsxSource.parseWorkbook(in).drop(1).iterator
-          finally in.close()
-        }
-        private var cur: InternalRow = _
-
-        override def next(): Boolean =
-          if (!rows.hasNext) false
-          else {
-            val dense = rows.next().take(width).padTo(width, null)
-            cur = InternalRow.fromSeq(idx.toSeq.map {
-              case -1 => fileU
-              case i if i >= 0 && dense(i) != null => UTF8String.fromString(dense(i))
-              case _ => null
-            })
-            true
-          }
-
-        override def get(): InternalRow = cur
-        override def close(): Unit = ()
+  private class XlsxDecoder(fullNames: Array[String], requiredNames: Array[String])
+      extends PerFileFormat.Decoder {
+    override def rows(file: String, in: InputStream): Iterator[InternalRow] = {
+      // data columns only — _source_file is synthesized, not parsed
+      val width = fullNames.length - 1
+      val idx = requiredNames.map {
+        case SourceFileCol => -1
+        case n => fullNames.indexOf(n)
+      }
+      val fileU = UTF8String.fromString(file)
+      XlsxSource.parseWorkbook(in).iterator.drop(1).map { cells =>
+        val dense = cells.take(width).padTo(width, null)
+        InternalRow.fromSeq(idx.toSeq.map {
+          case -1 => fileU
+          case i if dense(i) != null => UTF8String.fromString(dense(i))
+          case _ => null
+        })
       }
     }
   }

@@ -25,29 +25,21 @@ object StreamingIngest {
       .schema(schema)
       .csv(dropDir)
 
-  /** F6 — continuous fraud scoring: every micro-batch of staged
-    * transactions runs the stateless rules (passport/account expiry;
-    * the blacklist is the clients' `blacklisted = 1` rows) and
-    * publishes hits to the mart EXACTLY ONCE through
-    * [[graft.sources.AtomicMart.publishEpoch]] keyed on the batch id:
-    * foreachBatch is at-least-once, and a replayed batch replaces its
-    * own epoch's partitions in one manifest commit. The windowed rules
-    * ride [[StreamingOps.guessingAmountStream]]'s keyed state instead —
-    * a per-batch window would miss cross-batch patterns. */
+  /** F6 — continuous fraud scoring: the stateless rules
+    * (passport/account expiry; the blacklist is the clients'
+    * `blacklisted = 1` rows) are stream–static broadcast joins, so
+    * their mart over the transaction stream is itself a stream, and
+    * [[epochMartStream]] publishes each micro-batch's hits EXACTLY ONCE.
+    * The windowed rules ride [[StreamingOps.guessingAmountStream]]'s
+    * keyed state instead — a per-batch window would miss cross-batch
+    * patterns. */
   def continuousFraudMart(txns: DataFrame, clients: DataFrame,
                           accounts: DataFrame, batchDate: String,
                           martPath: String, checkpoint: String): StreamingQuery = {
     val blacklist = clients.filter(col("blacklisted") === 1L).select(col("c_custkey"))
-    txns.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val in = FraudRules.Inputs(batch.toDF(), clients, blacklist, accounts, batchDate)
-        AtomicMart.publishEpoch(FraudRules.mart(in, FraudRules.Daily,
-          Seq("passport_fraud", "account_fraud")), martPath, Seq("rule"), batchId)
-        ()
-      }
-      .start()
+    val in = FraudRules.Inputs(txns, clients, blacklist, accounts, batchDate)
+    epochMartStream(FraudRules.mart(in, FraudRules.Daily, Seq("passport_fraud", "account_fraud")),
+      martPath, Seq("rule"), checkpoint)
   }
 
   /** F12 — streaming SCD2 maintenance: the reference's daily terminal

@@ -275,14 +275,15 @@ class IngestSpec extends SparkSpec {
     assume(Files.exists(Paths.get(
       "/root/reference/sql_project-master/data/terminals_02032021.xlsx")))
     val v2 = spark.read.format("graft.sources.XlsxV2").load(glob)
-    val v1 = XlsxSource.read(spark, glob)
-    assert(v2.schema == v1.schema)
-    assert(v2.exceptAll(v1).isEmpty && v1.exceptAll(v2).isEmpty)
+    val expected = parsedRows(Seq("01032021", "02032021").map(d =>
+      Paths.get(s"/root/reference/sql_project-master/data/terminals_$d.xlsx")))
+    assert(bag(rowsOf(v2)) == bag(expected))
+    assert(bag(rowsOf(XlsxSource.read(spark, glob))) == bag(expected))
     // daily drops parallelize file-by-file (zip archives don't split)
     assert(v2.rdd.getNumPartitions == 2)
     // pruned projection round-trips through SupportsPushDownRequiredColumns
     val pruned = v2.select("terminal_id", "_source_file").collect()
-    assert(pruned.length == v1.count() &&
+    assert(pruned.length == expected.length &&
       pruned.forall(_.getString(1).endsWith(".xlsx")))
   }
 
@@ -375,6 +376,67 @@ class IngestSpec extends SparkSpec {
     dir
   }
 
+  /** Each workbook's data rows as [[XlsxSource.parseWorkbook]] decodes
+    * the file directly, padded to its header's width, plus the path
+    * the format reports in `_source_file`. */
+  private def parsedRows(files: Seq[java.nio.file.Path]): Seq[Seq[String]] =
+    files.flatMap { f =>
+      val in = Files.newInputStream(f)
+      val rows = try XlsxSource.parseWorkbook(in) finally in.close()
+      val width = rows.head.length
+      rows.drop(1).map(_.toSeq.take(width).padTo(width, null) :+ s"file:${f.toAbsolutePath}")
+    }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.collect().toSeq.map(_.toSeq.map(_.asInstanceOf[String]))
+
+  private def bag[T](xs: Seq[T]): Map[T, Int] =
+    xs.groupBy(identity).view.mapValues(_.size).toMap
+
+  test("A8: a workbook whose first sheet has no rows is rejected, naming the file") {
+    val dir = Files.createTempDirectory("graft_xlsx_empty")
+    val f = dir.resolve("terminals_03032021.xlsx")
+    writeWorkbook(f, "xl/worksheets/sheet1.xml" -> sheetXml())
+    val e = intercept[IllegalArgumentException](XlsxSource.read(spark, f.toString))
+    assert(e.getMessage.contains("terminals_03032021.xlsx") &&
+      e.getMessage.contains("no rows"), e.getMessage)
+  }
+
+  test("A8/A9: the per-file formats read, and AvroV2.write writes, through the session's Hadoop conf") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // `sessfs` is registered in the session conf only: an executor that
+    // builds a bare Configuration cannot resolve it, and with the cache
+    // disabled it cannot borrow the instance the driver created either
+    val impl = s"fs.${SessionOnlyFs.Scheme}.impl"
+    spark.conf.set(impl, classOf[SessionOnlyFs].getName)
+    spark.conf.set(s"$impl.disable.cache", "true")
+    try {
+      val dir = generatedDrop()
+      def via(p: java.nio.file.Path) = s"${SessionOnlyFs.Scheme}://${p.toAbsolutePath}"
+      Files.writeString(dir.resolve("accts.dat"), "A001007\nB002012\n")
+      val avroSrc = spark.range(0, 40, 1, 2).select(col("id"), (col("id") * 3).as("v"))
+      val checks: Seq[(String, () => Unit)] = Seq(
+        "XlsxV2 read" -> (() => assert(spark.read.format("graft.sources.XlsxV2")
+          .load(via(dir.resolve("terminals_01032021.xlsx"))).count() == 2)),
+        "FixedWidth read" -> (() => assert(spark.read.format("graft.sources.FixedWidth")
+          .option("fields", "acct:4:string,n:3:long").load(via(dir.resolve("accts.dat")))
+          .as[(String, Long)].collect().toSet == Set(("A001", 7L), ("B002", 12L)))),
+        "AvroV2.write" -> (() => graft.sources.AvroV2.write(avroSrc, via(dir.resolve("avro")))),
+        "AvroV2 read" -> (() => {
+          val back = spark.read.format("graft.sources.AvroV2").load(via(dir.resolve("avro")))
+          assert(back.exceptAll(avroSrc).isEmpty && avroSrc.exceptAll(back).isEmpty)
+        }))
+      val failed = checks.flatMap { case (what, check) =>
+        scala.util.Try(check()).failed.toOption.map(e => s"$what: $e")
+      }
+      assert(failed.isEmpty, failed.mkString("\n"))
+    } finally {
+      spark.conf.unset(impl)
+      spark.conf.unset(s"$impl.disable.cache")
+    }
+  }
+
   test("A6: xlsx source reads generated two-sheet workbooks (first sheet only)") {
     val dir = generatedDrop()
     val df = XlsxSource.read(spark, dir.resolve("terminals_01032021.xlsx").toString)
@@ -386,12 +448,16 @@ class IngestSpec extends SparkSpec {
   }
 
   test("A8: DSv2 xlsx format agrees with XlsxSource.read on generated workbooks") {
-    val glob = s"${generatedDrop()}/terminals_0[12]032021.xlsx"
+    val dir = generatedDrop()
+    val glob = s"$dir/terminals_0[12]032021.xlsx"
     val v2 = spark.read.format("graft.sources.XlsxV2").load(glob)
-    val v1 = XlsxSource.read(spark, glob)
-    assert(v2.schema == v1.schema)
-    assert(v1.count() == 4)
-    assert(v2.exceptAll(v1).isEmpty && v1.exceptAll(v2).isEmpty)
+    assert(v2.columns.toSeq == Seq("terminal_id", "terminal_type", "terminal_city", "_source_file"))
+    // the format's rows are the direct parse of each workbook plus its path
+    val expected = parsedRows(Seq("01032021", "02032021").map(d =>
+      dir.resolve(s"terminals_$d.xlsx")))
+    assert(expected.length == 4)
+    assert(bag(rowsOf(v2)) == bag(expected))
+    assert(bag(rowsOf(XlsxSource.read(spark, glob))) == bag(expected))
     assert(v2.rdd.getNumPartitions == 2)
     val pruned = v2.select("terminal_city", "_source_file").collect()
     assert(pruned.map(_.getString(0)).sorted.toSeq == Seq("42", "42", "Riga", "Riga") &&
@@ -464,4 +530,15 @@ class IngestSpec extends SparkSpec {
     split.release()
     assert(spark.sparkContext.getPersistentRDDs.size < cachedBefore)
   }
+}
+
+/** The local filesystem under a scheme of its own, for checking that a
+  * filesystem registered only in the session conf reaches executors. */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${SessionOnlyFs.Scheme}:///")
+  override def getScheme: String = SessionOnlyFs.Scheme
+}
+
+object SessionOnlyFs {
+  val Scheme = "sessfs"
 }

@@ -1559,48 +1559,63 @@ class ParitySpec extends SparkSpec {
 
   test("F39 triggered CDF stream: kill between delivery and bookmark replays; mirror ≡ head") {
     import java.nio.file.Files
+    import scala.collection.mutable.ArrayBuffer
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
     import graft.sources.{AtomicMart, MartDml}
-    import graft.streaming.CdfStream
+    import graft.streaming.MartCdfSource
     val table = Files.createTempDirectory("graft_cdfsrc").toString
     val replica = Files.createTempDirectory("graft_cdfrep").toString
-    val bk = Files.createTempDirectory("graft_cdfbk").toString
+    // Spark's checkpoint is the bookmark: every run below shares it
+    val cp = Files.createTempDirectory("graft_cdfbk").resolve("cp").toString
     def rows(xs: (Long, Long, String)*) =
       xs.toSeq.toDF("k", "amount", "status")
         .withColumn("part", concat(lit("p"), col("k") % 2))
+    // one AvailableNow drain through `sink`; returns the ticket ranges
+    def drain(sink: DataFrame => Unit): Seq[(Long, Long)] = {
+      val tickets = ArrayBuffer.empty[(Long, Long)]
+      spark.readStream.format("graft.streaming.MartCdfSource")
+        .option("path", table).load()
+        .writeStream.option("checkpointLocation", cp)
+        .foreachBatch { (t: DataFrame, _: Long) =>
+          tickets ++= t.as[(Long, Long)].collect()
+          sink(t)
+        }
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      tickets.toSeq
+    }
+    def mirror(t: DataFrame): Unit =
+      MartCdfSource.mirror(t, table, replica, Seq("part"))
     // v0: initial snapshot
     AtomicMart.publish(rows((1L, 10L, "a"), (2L, 20L, "a"), (3L, 30L, "a")), table, Seq("part"))
-    val d0 = CdfStream.mirrorTick(spark, table, bk, replica, Seq("part"))
-    assert(d0.contains(CdfStream.Delivery(-1L, 0L)))
+    assert(drain(mirror) == Seq((-1L, 0L)))
     assert(AtomicMart.read(spark, replica).count() == 3)
-    // caught up: next tick delivers nothing
-    assert(CdfStream.mirrorTick(spark, table, bk, replica, Seq("part")).isEmpty)
+    // caught up: the next drain delivers nothing
+    assert(drain(mirror).isEmpty)
     // v1: update + v2: delete land on the source
     MartDml.update(spark, table, col("k") === 2L, Map("amount" -> lit(25L)))
     MartDml.delete(spark, table, col("k") === 3L)
-    // KILL between delivery and bookmark advance: a sink that throws
-    // leaves the bookmark untouched, so the SAME range replays next tick
+    // KILL between delivery and the checkpoint's commit: a sink that
+    // throws kills the query, so the SAME range replays on the rerun
     var killed = false
-    intercept[RuntimeException] {
-      CdfStream.tick(spark, table, bk, Seq("k")) { (chg, from, to) =>
-        assert(from == 0L && to == 2L)
-        chg.count() // deliver (execute the plan), then die pre-commit
+    val e = intercept[StreamingQueryException] {
+      drain { t =>
+        assert(t.as[(Long, Long)].collect().toSeq == Seq((0L, 2L)))
+        MartCdfSource.changesFor(t, table, Seq("k")).foreach(_.count()) // deliver, then die
         killed = true
-        throw new RuntimeException("crash before bookmark advance")
+        throw new RuntimeException("crash before the batch commits")
       }
     }
-    assert(killed)
-    // replayed tick folds the range into the replica and commits
-    val d1 = CdfStream.mirrorAvailableNow(spark, table, bk, replica, Seq("part"))
-    assert(d1 == Seq(CdfStream.Delivery(0L, 2L)))
+    assert(killed, e.toString)
+    // the rerun on the same checkpoint folds the range into the replica
+    assert(drain(mirror) == Seq((0L, 2L)))
     // fold across restarts ≡ source head (values AND multiset size)
     val got = AtomicMart.read(spark, replica)
       .select("k", "amount", "status").as[(Long, Long, String)].collect().toSet
     assert(got == Set((1L, 10L, "a"), (2L, 25L, "a")), got.toString)
     assert(AtomicMart.read(spark, replica).count() == 2)
-    // a replay of an ALREADY-COMMITTED range converges (idempotent):
-    // force it by re-running the merge fold with the same ops
-    val d2 = CdfStream.mirrorAvailableNow(spark, table, bk, replica, Seq("part"))
-    assert(d2.isEmpty) // bookmark at head: nothing re-delivered
+    // a drain at the head re-delivers nothing
+    assert(drain(mirror).isEmpty)
   }
 }
