@@ -86,9 +86,6 @@ object Checks {
       .orderBy(col("check"))
   }
 
-  /** Run the suite: one fused scan for all row-local checks + one
-    * key-domain anti-join per referential check. Returns one verdict
-    * row per check, ordered by name. */
   /** Check names ride into a generated stack() expression; confine them
     * to characters that can never break the quoting. */
   private val SafeName = "[A-Za-z0-9_][A-Za-z0-9_ .:/=<>%-]*".r
@@ -103,6 +100,9 @@ object Checks {
         s"check name '${c.name}' must match $SafeName (no quotes/backticks)")
     }
 
+  /** Run the suite: one fused scan for all row-local checks + one
+    * key-domain anti-join per referential check. Returns one verdict
+    * row per check, ordered by name. */
   def run(df: DataFrame, checks: Seq[Check]): DataFrame = {
     require(checks.nonEmpty, "Checks.run needs at least one check")
     require(checks.map(_.name).distinct.length == checks.length,

@@ -153,8 +153,9 @@ object LakeLifecycle {
     * Replaying a killed day converges: both state tables are
     * AtomicMart-published keyed by the day, so the rerun replaces the
     * day's own partitions instead of double-appending, and the
-    * returned survivors are a pure function of (prior state, batch). */
-  /** PRECONDITION (what makes incremental ≡ one-shot provable): doc_ids
+    * returned survivors are a pure function of (prior state, batch).
+    *
+    * PRECONDITION (what makes incremental ≡ one-shot provable): doc_ids
     * must increase monotonically across batches — "earlier" is any-seen
     * incrementally but strictly-smaller-id within the one-shot pass, so
     * a later batch carrying a smaller id than an already-seen doc would

@@ -28,12 +28,20 @@ object Evaluation {
     * scored rows, stratify (per-slice AUC) before this op. */
   def aucExact(scored: DataFrame, score: String = "score",
                label: String = "label"): DataFrame =
-    finishAuc(scored.groupBy(col(score).as("s"))
-      .agg(count(lit(1)).as("n"), sum(col(label)).as("np")))
+    finishAuc(scoreContract(scored, score, label))
+
+  /** The distinct-score contraction (s, n, np): per distinct score the
+    * row count and the positive count — the only corpus-sized pass of
+    * H4, H7, H8, H11 and H15. Counters merge associatively, so this
+    * frame is also the F27 scorer-health monitor's complete-mode state,
+    * bounded by the score domain. */
+  def scoreContract(scored: DataFrame, score: String = "score",
+                    label: String = "label"): DataFrame =
+    scored.groupBy(col(score).as("s"))
+      .agg(count(lit(1)).as("n"), sum(col(label)).as("np"))
 
   /** The rank-sum back half over a (s, n, np) distinct-score frame —
-    * shared with the F27 streaming monitor so live and batch AUC are
-    * the same arithmetic applied to the same contraction shape. */
+    * applied to batch contractions and F27 state snapshots alike. */
   def finishAuc(byScore: DataFrame): DataFrame = {
     val w = Window.orderBy(col("s"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -63,14 +71,20 @@ object Evaluation {
     * long (same stratify-beyond-~3·10^9-rows caveat as H4). */
   def ksDrift(samples: DataFrame, side: String = "side",
               v: String = "v"): DataFrame =
-    finishKs(samples.groupBy(col(v).as("x"))
-      .agg(sum(when(col(side) === 0L, 1L).otherwise(0L)).as("da"),
-        sum(when(col(side) =!= 0L, 1L).otherwise(0L)).as("db")))
+    finishKs(ksContract(samples, side, v))
 
-  /** The KS back half over an (x, da, db) distinct-value frame —
-    * shared with the F29 streaming drift monitor (the finishAuc/
-    * finishAp/finishKappa split): the cumulative-max walk is
-    * non-associative, so it is never streaming state. */
+  /** The distinct-value contraction (x, da, db): per distinct value the
+    * side-0 and other-side counts — also the F29 streaming drift
+    * monitor's complete-mode state, bounded by the value domain. */
+  def ksContract(samples: DataFrame, side: String = "side",
+                 v: String = "v"): DataFrame =
+    samples.groupBy(col(v).as("x"))
+      .agg(sum(when(col(side) === 0L, 1L).otherwise(0L)).as("da"),
+        sum(when(col(side) =!= 0L, 1L).otherwise(0L)).as("db"))
+
+  /** The KS back half over an (x, da, db) distinct-value frame — the
+    * cumulative-max walk is non-associative, so it is never streaming
+    * state. */
   def finishKs(byV: DataFrame): DataFrame = {
     val w = Window.orderBy(col("x"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -132,8 +146,7 @@ object Evaluation {
     * operating point hash-verifies cross-engine. */
   def prCurve(scored: DataFrame, score: String = "score",
               label: String = "label"): DataFrame = {
-    val byScore = scored.groupBy(col(score).as("s"))
-      .agg(count(lit(1)).as("n"), sum(col(label)).as("np"))
+    val byScore = scoreContract(scored, score, label)
     val w = Window.orderBy(col("s").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val cum = byScore
@@ -159,8 +172,7 @@ object Evaluation {
     * distinct-score contraction as H7: the corpus is touched once. */
   def bestF1(scored: DataFrame, score: String = "score",
              label: String = "label"): DataFrame = {
-    val byScore = scored.groupBy(col(score).as("s"))
-      .agg(count(lit(1)).as("n"), sum(col(label)).as("np"))
+    val byScore = scoreContract(scored, score, label)
     val w = Window.orderBy(col("s").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val pts = byScore
@@ -270,8 +282,7 @@ object Evaluation {
     * k-row bucket frame. Same posture as H4/H7/H8. */
   def liftTable(scored: DataFrame, score: String = "score",
                 label: String = "label", buckets: Int = 10): DataFrame = {
-    val byScore = scored.groupBy(col(score).as("s"))
-      .agg(count(lit(1)).as("n"), sum(col(label)).as("np"))
+    val byScore = scoreContract(scored, score, label)
     val wd = Window.orderBy(col("s").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val tot = Window.rowsBetween(
@@ -320,8 +331,7 @@ object Evaluation {
   def costThreshold(scored: DataFrame, fpCostCents: Long, fnCostCents: Long,
                     score: String = "score", label: String = "label")
       : DataFrame = {
-    val byScore = scored.groupBy(col(score).as("s"))
-      .agg(count(lit(1)).as("n"), sum(col(label)).as("np"))
+    val byScore = scoreContract(scored, score, label)
     val w = Window.orderBy(col("s").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val tot = byScore.agg(sum(col("np")).as("n_pos"),
@@ -363,8 +373,7 @@ object Evaluation {
     * one cumulative window over the score domain. */
   def averagePrecision(scored: DataFrame, score: String = "score",
                        label: String = "label"): DataFrame =
-    finishAp(scored.groupBy(col(score).as("s"))
-      .agg(count(lit(1)).as("n"), sum(col(label)).as("np")))
+    finishAp(scoreContract(scored, score, label))
 
   /** The AP back half over a (s, n, np) frame — F27's other finisher. */
   def finishAp(byScore: DataFrame): DataFrame = {
@@ -415,28 +424,6 @@ object Evaluation {
               (col("b_cell") + col("c_cell")).cast("double"))
           .as("chi2"))
 
-  /** H13 — Kendall τ-b rank correlation between two BINNED integer
-    * columns (Kendall 1938; tie-corrected τ-b 1945) — here the
-    * score-confound check an eval suite owes its users: is the scorer
-    * ranking quality, or just re-measuring length? (A |τ| near 1
-    * against n_chars means the "quality" scorer is a ruler.) Callers
-    * bin both sides first (the H5 fixed-width discipline) — that is
-    * what makes the computation cell-contracted AND what bounds it:
-    * concordant/discordant pair masses come from a strict-dominance
-    * self-join of the (binA, binB) contingency cells, each unordered
-    * pair of distinct cells counted in exactly one orientation, so
-    * the work is |cells|² with |cells| bounded by the bin grid —
-    * never N². Tie terms Σt(t−1)/2 come off the two marginals. C, D,
-    * n0, and both tie terms are exact BIGINTs; τ-b itself is the one
-    * IEEE step — (C−D)/√((n0−n1)(n0−n2)) assembled in identical
-    * literal order from exact integers (sqrt is correctly rounded in
-    * IEEE 754, so both engines produce the same double — the q_abtest
-    * χ² precedent). Degenerate marginals (all mass in one bin) emit
-    * τ-b = 0 with the tie terms showing why, never NULL.
-    *
-    * Scale: one corpus pass to the cell contraction; the dominance
-    * join broadcasts the cell frame (grid-bounded by contract). Exact
-    * while N² < 2⁶³ — the H4 stratify-beyond caveat. */
   /** The shared concordance contraction: one row of exact-BIGINT pair
     * masses (C, D), marginal tie terms and n0 off the (binA, binB)
     * contingency cells — every rank-association coefficient (τ-b,
@@ -463,6 +450,28 @@ object Evaluation {
       .withColumn("n0", expr("ntot * (ntot - 1) div 2"))
   }
 
+  /** H13 — Kendall τ-b rank correlation between two BINNED integer
+    * columns (Kendall 1938; tie-corrected τ-b 1945) — here the
+    * score-confound check an eval suite owes its users: is the scorer
+    * ranking quality, or just re-measuring length? (A |τ| near 1
+    * against n_chars means the "quality" scorer is a ruler.) Callers
+    * bin both sides first (the H5 fixed-width discipline) — that is
+    * what makes the computation cell-contracted AND what bounds it:
+    * concordant/discordant pair masses come from a strict-dominance
+    * self-join of the (binA, binB) contingency cells, each unordered
+    * pair of distinct cells counted in exactly one orientation, so
+    * the work is |cells|² with |cells| bounded by the bin grid —
+    * never N². Tie terms Σt(t−1)/2 come off the two marginals. C, D,
+    * n0, and both tie terms are exact BIGINTs; τ-b itself is the one
+    * IEEE step — (C−D)/√((n0−n1)(n0−n2)) assembled in identical
+    * literal order from exact integers (sqrt is correctly rounded in
+    * IEEE 754, so both engines produce the same double — the q_abtest
+    * χ² precedent). Degenerate marginals (all mass in one bin) emit
+    * τ-b = 0 with the tie terms showing why, never NULL.
+    *
+    * Scale: one corpus pass to the cell contraction; the dominance
+    * join broadcasts the cell frame (grid-bounded by contract). Exact
+    * while N² < 2⁶³ — the H4 stratify-beyond caveat. */
   def kendallTauB(binned: DataFrame, a: String = "va", b: String = "vb")
       : DataFrame =
     concordanceCounts(binned, a, b)
@@ -528,13 +537,18 @@ object Evaluation {
     * n² fits decimal(38,0): ~10¹⁹ rows. */
   def cohenKappa(paired: DataFrame, a: String = "pred_a",
                  b: String = "pred_b"): DataFrame =
-    finishKappa(paired.groupBy(col(a).as("pred_a"), col(b).as("pred_b"))
-      .agg(count(lit(1)).as("n")))
+    finishKappa(kappaContract(paired, a, b))
 
-  /** The κ back half over a (pred_a, pred_b, n) cell frame — shared
-    * with the F28 streaming agreement monitor so live and batch κ are
-    * the same arithmetic on the same contraction shape (the
-    * finishAuc/finishAp split). */
+  /** The (pred_a, pred_b, n) contingency-cell contraction — also the
+    * F28 streaming agreement monitor's complete-mode state, bounded by
+    * the label alphabet squared. */
+  def kappaContract(paired: DataFrame, a: String = "pred_a",
+                    b: String = "pred_b"): DataFrame =
+    paired.groupBy(col(a).as("pred_a"), col(b).as("pred_b"))
+      .agg(count(lit(1)).as("n"))
+
+  /** The κ back half over a (pred_a, pred_b, n) cell frame, applied to
+    * batch contractions and F28 state snapshots alike. */
   def finishKappa(cells: DataFrame): DataFrame = {
     val margA = cells.groupBy(col("pred_a").as("k"))
       .agg(sum(col("n")).as("r"))

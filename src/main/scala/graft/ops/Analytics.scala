@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -687,14 +687,14 @@ object Analytics {
   def benfordScreen(orders: DataFrame,
                     groupCol: String = "o_orderpriority",
                     amountCol: String = "o_totalprice"): DataFrame =
-    benfordFinish(benfordDigits(orders, groupCol, amountCol)
-      .groupBy(col("grp"), col("digit"))
-      .agg(count(lit(1)).as("n")))
+    benfordFinish(benfordContract(orders, groupCol, amountCol))
 
-  /** The map-side digit extraction (grp, digit) — shared verbatim by the
-    * F22 streaming monitor so live and batch digits can never drift. */
-  def benfordDigits(rows: DataFrame, groupCol: String,
-                    amountCol: String): DataFrame =
+  /** The (grp, digit, n) first-digit count: the map-side digit
+    * extraction and its count — also the F22 streaming monitor's
+    * complete-mode state (bounded at groups·9 rows), so live and batch
+    * digits can never drift. */
+  def benfordContract(rows: DataFrame, groupCol: String,
+                      amountCol: String): DataFrame =
     rows
       .select(col(groupCol).as("grp"),
         expr(s"CAST(round($amountCol * 100) AS BIGINT)").as("cents"))
@@ -702,6 +702,8 @@ object Analytics {
       .withColumn("digit", substring(col("cents").cast("string"), 1, 1)
         .cast("long"))
       .select(col("grp"), col("digit"))
+      .groupBy(col("grp"), col("digit"))
+      .agg(count(lit(1)).as("n"))
 
   /** The deviation finisher over (grp, digit, n) counts — the batch
     * screen's back half, also applied to streaming state snapshots. */
@@ -1253,13 +1255,19 @@ object Analytics {
   def quantileLadder(rows: DataFrame, group: String, value: String,
                      quantiles: Seq[Long] = Seq(25L, 50L, 75L, 90L, 99L))
       : DataFrame =
-    finishLadder(rows.select(col(group).as("grp"), col(value).as("x"))
-      .groupBy(col("grp"), col("x"))
-      .agg(count(lit(1)).as("c")), quantiles)
+    finishLadder(ladderContract(rows, group, col(value)), quantiles)
 
-  /** The ladder back half over a (grp, x, c) value histogram — shared
-    * with the F31 streaming maintainer (rank windows are
-    * non-associative, never state; the finishAuc discipline). */
+  /** The (grp, x, c) value histogram — the one corpus-sized pass of
+    * D85 and D90, and (counts add) the complete-mode state of the F31
+    * and F34 streaming monitors: one state family, two finishers. */
+  def ladderContract(rows: DataFrame, group: String, value: Column): DataFrame =
+    rows.select(col(group).as("grp"), value.as("x"))
+      .groupBy(col("grp"), col("x"))
+      .agg(count(lit(1)).as("c"))
+
+  /** The ladder back half over a (grp, x, c) value histogram (rank
+    * windows are non-associative, never state; the finishAuc
+    * discipline). */
   def finishLadder(hist: DataFrame,
                    quantiles: Seq[Long] = Seq(25L, 50L, 75L, 90L, 99L))
       : DataFrame = {
@@ -1302,9 +1310,9 @@ object Analytics {
       .drop("cum", "n", "rlo", "rhi")
   }
 
-  /** D90's back half over a (grp, x, c) value histogram — shared
-    * VERBATIM with the F34 streaming monitor (medians are
-    * non-associative, never state; the finishLadder discipline).
+  /** D90's back half over a (grp, x, c) value histogram — also the
+    * F34 streaming monitor's finisher (medians are non-associative,
+    * never state; the finishLadder discipline).
     * Returns (event_type, med, mad, n_rows, n_outliers) under
     * Hampel's |x−med| > 3·MAD rule. Join-free: both median picks are
     * window aggregates over the (re-grouped) histogram. */
@@ -1331,10 +1339,8 @@ object Analytics {
     * and the fence count on that contraction — the same plan at any
     * row count, and the finisher the F34 stream shares. */
   def madOutliers(events: DataFrame): DataFrame =
-    finishMad(events
-      .select(col("event_type").as("grp"),
-        graft.functions.GraftFunctions.cents(col("value")).as("x"))
-      .groupBy(col("grp"), col("x")).agg(count(lit(1)).as("c")))
+    finishMad(ladderContract(events, "event_type",
+      graft.functions.GraftFunctions.cents(col("value"))))
 
   /** B26 — FRESHNESS mart: per stream (event type) the lag of its last
     * arrival behind the corpus frontier — the is-the-feed-alive check
@@ -1346,14 +1352,18 @@ object Analytics {
     * flag comes with its blast radius. One scan, one contraction to
     * the type domain, frontier via one broadcast scalar. */
   def freshness(events: DataFrame, staleAfterS: Long = 86400L): DataFrame =
-    finishFreshness(events.groupBy(col("event_type"))
-      .agg(min(col("ts_us")).as("first_ts_us"),
-        max(col("ts_us")).as("last_ts_us"), count(lit(1)).as("n_rows")),
-      staleAfterS)
+    finishFreshness(freshnessContract(events), staleAfterS)
 
-  /** The freshness back half over a per-type (first, last, n) frame —
-    * shared with the F30 live monitor (the finishAuc/finishKs split:
-    * the frontier depends on every type, non-associative, never
+  /** The per-type (first_ts_us, last_ts_us, n_rows) contraction — also
+    * the F30 live monitor's complete-mode state (min/max/count merge
+    * associatively, bounded by the type domain). */
+  def freshnessContract(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type"))
+      .agg(min(col("ts_us")).as("first_ts_us"),
+        max(col("ts_us")).as("last_ts_us"), count(lit(1)).as("n_rows"))
+
+  /** The freshness back half over a per-type (first, last, n) frame
+    * (the frontier depends on every type: non-associative, never
     * streaming state). */
   def finishFreshness(per: DataFrame, staleAfterS: Long = 86400L)
       : DataFrame =

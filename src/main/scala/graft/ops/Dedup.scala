@@ -125,8 +125,9 @@ object Dedup {
   /** MinHash signatures sig_0..sig_{k-1} via explode + map-side-combined
     * min aggregation: the shuffle carries one row per doc after partial
     * aggregation, and the hot loop is flat codegen over (doc, shingle)
-    * rows — no nested array folds. */
-  /** Callers must pre-partition the input on `doc_id` BEFORE the shingle
+    * rows — no nested array folds.
+    *
+    * Callers must pre-partition the input on `doc_id` BEFORE the shingle
     * arrays are built (see [[minhashLsh]]): only tiny (id, text) rows
     * cross the wire, the explode stays partition-local, and the groupBy
     * reuses the same hash partitioning — zero further shuffles. */
@@ -144,11 +145,6 @@ object Dedup {
     ex.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
   }
 
-  /** E3 — MinHash+LSH candidate pairs: `bands` bands of `rowsPerBand`
-    * signature rows; docs sharing any band bucket become candidates.
-    * `dupMod` injects synthetic exact duplicates (id+10_000_000) so the
-    * operator's recall is observable on a corpus with no natural dups.
-    */
   /** The corpus plus synthetic exact duplicates (id+10_000_000 for every
     * dupMod-th doc) — the shared universe for LSH candidate generation,
     * verification, and clustering, so recall is observable on a corpus
@@ -174,7 +170,12 @@ object Dedup {
     * per-replica originals stay below [[SyntheticDupBase]]. */
   val ReplicaShift: Long = 1000000000L
 
-  /** LSH candidate pairs WITHOUT the final presentation sort — the form
+  /** E3 — MinHash+LSH candidate pairs: `bands` bands of `rowsPerBand`
+    * signature rows; docs sharing any band bucket become candidates.
+    * `dupMod` injects synthetic exact duplicates (id+10_000_000) so the
+    * operator's recall is observable on a corpus with no natural dups.
+    *
+    * The pairs come WITHOUT the final presentation sort — the form
     * downstream consumers ([[lshVerify]], [[lshClusters]]) compose with
     * (a global range-exchange in the middle of their plans would be
     * pure waste). [[minhashLsh]] adds the deterministic output order. */

@@ -325,8 +325,9 @@ object GraphStats {
     * enough rather than returning a half-peeled graph.
     *
     * `rawEdges` must be the symmetric (both-direction) edge list;
-    * output is each core node with its degree INSIDE the core. */
-  /** Choosing the round budget: each peel round removes every node
+    * output is each core node with its degree INSIDE the core.
+    *
+    * Choosing the round budget: each peel round removes every node
     * whose CURRENT degree is < k, so the rounds needed equal the
     * longest "peel cascade" — a chain where each removal drops the
     * next node under k. Dense cores converge in a handful of rounds

@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   * by addition ([[mergeSketches]]), which is what makes the sketch
   * distributable (partial sketches per executor / per day / per
   * source union into the global sketch losslessly) and maintainable
-  * under a complete-mode streaming aggregation (F24,
-  * [[graft.streaming.StreamingOps.qsketchMaintenanceStream]]). The
+  * under a complete-mode streaming aggregation (F24 runs
+  * [[buildSketch]] itself on the stream). The
   * quantile finisher runs on the bucket frame: a per-group window walk
   * over ≤ buckets rows, never over the data.
   *

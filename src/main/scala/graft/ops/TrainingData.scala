@@ -427,11 +427,6 @@ object TrainingData {
       .orderBy(col("doc_id"))
   }
 
-  /** E25 — stratified sampling: a deterministic pseudo-random `perKey`
-    * documents per stratum (language), ranked by a salted id hash. The
-    * window's top-N is pushed down as a group-limit (WindowGroupLimit),
-    * so no stratum ever materializes a full sort of its partition.
-    */
   /** E33 — duplicated-n-gram span REMOVAL (the dedup step of Lee et
     * al.'s exact-substring dedup, where E29 is the detection signal):
     * every token covered by a corpus-duplicated n-gram occurrence is
@@ -534,6 +529,11 @@ object TrainingData {
       .orderBy(col("doc_id"))
   }
 
+  /** E25 — stratified sampling: a deterministic pseudo-random `perKey`
+    * documents per stratum (language), ranked by a salted id hash. The
+    * window's top-N is pushed down as a group-limit (WindowGroupLimit),
+    * so no stratum ever materializes a full sort of its partition.
+    */
   def stratifiedSample(docs: DataFrame, perKey: Int = 20): DataFrame = {
     val w = Window.partitionBy(col("lang"))
       .orderBy(h32(concat(lit("strat:"), col("doc_id").cast("string"))),

@@ -129,7 +129,6 @@ object RelationalQueries {
       .orderBy(col("tag"), col("partkey"))
   }
 
-  /** D8 — ROLLUP over (returnflag, linestatus) with exact money. */
   /** D24 — CUBE: all grouping-set combinations (adds the per-linestatus
     * margins ROLLUP omits). */
   def cube(s: SparkSession, d: String): DataFrame = {
@@ -143,6 +142,7 @@ object RelationalQueries {
         col("l_linestatus").asc_nulls_first)
   }
 
+  /** D8 — ROLLUP over (returnflag, linestatus) with exact money. */
   def rollup(s: SparkSession, d: String): DataFrame = {
     Tables.lineitem(s, d)
       .select(col("l_returnflag"), col("l_linestatus"),

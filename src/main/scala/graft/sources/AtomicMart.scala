@@ -69,13 +69,6 @@ object AtomicMart {
   final case class Entry(values: Seq[String], dir: String,
                          stats: Map[String, ColStat] = Map.empty)
 
-  /** `schemaDdl` is B42's SCHEMA VERSIONING surface: the table schema
-    * THIS version declares, as a Spark DDL string (`a BIGINT, b
-    * STRING`). Each manifest pins the schema its readers conform to —
-    * old versions keep reading with their own (narrower) schema, the
-    * Delta time-travel-across-evolution contract. None = a manifest
-    * written before schema tracking (reads stay raw, full
-    * back-compat). */
   /** B43 — COLUMN MAPPING (Delta's public columnMapping design, name
     * mode): one column's stable numeric `id` plus its immutable
     * PHYSICAL name (what parquet files and partition directories
@@ -89,7 +82,13 @@ object AtomicMart {
     * carry, so old values can never resurrect. */
   final case class ColMap(id: Long, logical: String, physical: String)
 
-  /** `schemaDdl` is B42's SCHEMA VERSIONING surface (LOGICAL names).
+  /** `schemaDdl` is B42's SCHEMA VERSIONING surface: the table schema
+    * THIS version declares, as a Spark DDL string (`a BIGINT, b
+    * STRING`) over LOGICAL names. Each manifest pins the schema its
+    * readers conform to — old versions keep reading with their own
+    * (narrower) schema, the Delta time-travel-across-evolution
+    * contract. None = a manifest written before schema tracking (reads
+    * stay raw, full back-compat).
     * `colMap` = None means an unmapped table (logical ≡ physical, the
     * pre-B43 layout — full back-compat); Some(_) maps every declared
     * column. `maxColId` is monotone across commits so ids are never
@@ -307,11 +306,12 @@ object AtomicMart {
     * old version.
     *
     * `statCols` names data columns whose per-partition min/max are
-    * captured into the manifest for [[readBetween]] data skipping: ONE
+    * captured into the manifest for [[readFiltered]] data skipping: ONE
     * extra partial-aggregated pass over the batch (map-side combine,
     * partition-count-sized result), paid once at write time so every
-    * later selective read can prune without listing a file. Columns a
-    * partition holds only NULLs of simply get no stat (never skipped).
+    * later selective read can prune without listing a file. A column
+    * a partition holds only NULLs of gets empty bounds with its null
+    * count, so any value window skips that partition.
     * Pairs with z-order layout (I11): clustering the batch on the
     * stat columns before publishing tightens each dir's [min,max] and
     * turns the skip from "sometimes" into "almost always". */
@@ -711,8 +711,9 @@ object AtomicMart {
     * widens the conflict check to everything committed since that
     * read, exactly like Delta's read-snapshot tracking; leaving it
     * None checks only from commit-entry onward (blind appends, where
-    * staged data derives from nothing in the table). */
-  /** `schemaBasis` (ADVICE r11 TOCTOU fix) declares the table schema
+    * staged data derives from nothing in the table).
+    *
+    * `schemaBasis` (ADVICE r11 TOCTOU fix) declares the table schema
     * the caller READ when it derived `schemaDdl` (Some(None) = "table
     * had no schema yet"). The check runs on EVERY attempt — the first
     * claim-win included, closing the window where a commit that wins
@@ -1145,11 +1146,15 @@ object AtomicMart {
     m.entries.partition(entryMayMatch(_, m.partCols, physWindows))
   }
 
-  /** MULTI-COLUMN data skipping: [[readBetween]]'s generalization to a
-    * conjunctive predicate — every extractable conjunct prunes on its
-    * own column (stats or partition values), so compound predicates
-    * skip multiplicatively; the predicate then runs exactly on what
-    * remains. Returns (frame, partitions scanned, partitions skipped). */
+  /** DATA SKIPPING: prune every partition that cannot hold a row
+    * satisfying the conjunctive `predicate` — driver-side, before any
+    * directory is listed. Every extractable conjunct prunes on its own
+    * column (manifest stats or partition values), so compound
+    * predicates skip multiplicatively; stat-less entries are
+    * conservatively kept, and the predicate then runs exactly on what
+    * remains, so the answer never depends on the stats. A range on one
+    * column is `col(c).between(lo, hi)`. Returns (frame, partitions
+    * scanned, partitions skipped) so operators can assert the skip. */
   def readFiltered(spark: SparkSession, path: String,
                    predicate: org.apache.spark.sql.Column): (DataFrame, Int, Int) = {
     val m = readManifest(spark, path).getOrElse(
@@ -1157,38 +1162,6 @@ object AtomicMart {
     val (keep, skip) = pruneEntries(spark, m, predicate)
     if (keep.isEmpty) (conform(spark, spark.emptyDataFrame, m), 0, skip.size)
     else (conform(spark, readEntries(spark, keep), m).filter(predicate), keep.size, skip.size)
-  }
-
-  /** DATA SKIPPING on a NON-partition column: prune every partition
-    * whose manifest [min,max] for `column` cannot intersect [lo, hi]
-    * — driver-side, before any directory is listed — then apply the
-    * exact predicate as a residual filter, so the answer is correct
-    * whether or not any entry carries stats (stat-less entries are
-    * conservatively kept). `lo`/`hi` are compared in the stat's own
-    * domain (numeric or lexicographic); pass the column's native
-    * literal type so the residual comparison is typed right. Point
-    * lookups are readBetween(c, v, v). Returns (frame, partitions
-    * scanned, partitions skipped) so operators can assert the skip. */
-  def readBetween(spark: SparkSession, path: String, column: String,
-                  lo: Any, hi: Any): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val m = readManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $path"))
-    val statKey = physOf(m, column) // stats are keyed physical (B43)
-    val (keep, skip) = m.entries.partition { e =>
-      e.stats.get(statKey) match {
-        case Some(s) if s.min.nonEmpty =>
-          statGe(s.typ, s.max, lo.toString) && statGe(s.typ, hi.toString, s.min)
-        case Some(_) => false // all-null partition: no value can match
-        case None => true // no stats: must scan
-      }
-    }
-    val df = conform(spark, readEntries(spark, keep), m)
-    val exact =
-      if (df.columns.contains(column))
-        df.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-      else df // every partition skipped: empty frame, no such column
-    (exact, keep.size, skip.size)
   }
 
   /** B32 — SHALLOW CLONE: a new independent table whose v0 manifest

@@ -179,8 +179,9 @@ object AvroV2 {
     * group-bys, SUM/AVG, nested or non-orderable columns — returns
     * false and Spark falls back to the ordinary scan, so pushdown is
     * an optimization, never a semantics change. Min/max skip nulls
-    * (SQL semantics); an empty file still emits its count=0 partial. */
-  /** I29 — DSv2 FILTER pushdown (SupportsPushDownFilters), completing
+    * (SQL semantics); an empty file still emits its count=0 partial.
+    *
+    * I29 — DSv2 FILTER pushdown (SupportsPushDownFilters), completing
     * the scan-feature triple (columns A9, aggregates I27, statistics
     * I28): simple comparisons on top-level orderable columns are
     * accepted into the reader, which skips non-matching records

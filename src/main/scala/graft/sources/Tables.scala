@@ -61,18 +61,20 @@ object Tables {
     *   - `ts_t`   TimestampType for window / date functions.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    // GraftSession declares this at construction; guard for sessions
-    // built elsewhere (tests, notebooks) rather than re-setting per call.
-    if (s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-        .forall(_ != "true"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Both confs below change how the session reads and casts every
+    // timestamp, so a reader must not set them behind the caller's
+    // back: fail fast instead (GraftSession.builder declares both).
+    // INT64-nanos parquet is readable only as a raw long under
+    // nanosAsLong; without it the read throws PARQUET_TYPE_ILLEGAL.
+    if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
+      throw new IllegalStateException(
+        "events() requires spark.sql.legacy.parquet.nanosAsLong=true " +
+          "(events.parquet may carry INT64 nanosecond timestamps). Build " +
+          "the session via GraftSession, or set the conf yourself — the " +
+          "reader will not mutate your session.")
     // The NTZ→TIMESTAMP cast below is instant-preserving only under a
     // UTC session; a non-UTC session (ad-hoc notebook) would silently
     // shift ts_us by the zone offset and break DuckDB epoch_us parity.
-    // Fail fast instead of mutating the caller's session (a reader
-    // must not change the semantics of unrelated timestamp
-    // expressions in a session that deliberately set another zone) —
-    // GraftSession.builder declares UTC, like the nanosAsLong flag.
     if (s.conf.get("spark.sql.session.timeZone") != "UTC")
       throw new IllegalStateException(
         "events() requires spark.sql.session.timeZone=UTC (the NTZ " +

@@ -12,6 +12,29 @@ import graft.functions.GraftFunctions._
   * aggregations, keyed state for the sequential-pattern rule. State is
   * partitioned by user key, so a 1000-executor cluster shards it exactly
   * like the batch shuffles.
+  *
+  * The aggregation monitors have no code here: each runs its batch
+  * operator's own contraction on the stream as a complete- or
+  * update-mode grouped aggregation, and each state snapshot finishes
+  * through that operator's batch finisher — one state family, two
+  * finishers, so live and batch can never disagree:
+  *
+  *  - F13 `IncrementalAgg.state`; F15 `Sketches.cmsCounters`; F16
+  *    `Sketches.hllRegisters`; F18 `Sketches.bitsetWords`; F24
+  *    `QuantileSketch.buildSketch`
+  *  - F22 `Analytics.benfordContract` → `benfordFinish`; F23
+  *    `Analytics.cusumDaily` → `cusumFinish`; F30
+  *    `Analytics.freshnessContract` → `finishFreshness`; F31/F34
+  *    `Analytics.ladderContract` → `finishLadder`/`finishMad`; F36
+  *    `Analytics.hhiContract` → `finishHhi`
+  *  - F27 `Evaluation.scoreContract` → `finishAuc`/`finishAp`; F28
+  *    `Evaluation.kappaContract` → `finishKappa`; F29
+  *    `Evaluation.ksContract` → `finishKs`; F38
+  *    `RankTests.mannWhitneyContract` → `finishMannWhitney`
+  *
+  * What stays here is state no batch contraction shares: keyed state,
+  * joins, dedups, deploy-time-pinned bins (F17) and vocabularies (F37),
+  * and the row-local DQ counters (F33).
   */
 object StreamingOps {
 
@@ -326,72 +349,6 @@ object StreamingOps {
         greatest(abs(col("x1") - col("x2")), abs(col("y1") - col("y2"))).as("cheb"))
   }
 
-  /** F13 — continuous aggregate maintenance: the streaming form of B14
-    * ([[graft.etl.IncrementalAgg]]). An unwindowed grouped aggregation
-    * in complete/update mode IS mergeable-state maintenance — Spark's
-    * state store holds exactly the (n, sum, min, max) algebra B14
-    * merges at the table level, updated per micro-batch with no history
-    * rescan. ParitySpec pins stream == incremental merge == full
-    * recompute on identical rows. */
-  def aggMaintenanceStream(rows: DataFrame, key: String = "user_id",
-                           value: String = "v"): DataFrame =
-    rows.groupBy(col(key))
-      .agg(count(lit(1)).as("n"), sum(col(value)).as("sum_cents"),
-        min(col(value)).as("min_cents"), max(col(value)).as("max_cents"))
-
-  /** F15 — streaming count-min sketch maintenance (D51's engine run
-    * continuously): the d×w counter table as an unwindowed grouped
-    * aggregation in complete mode. Counter state is bounded at d·w rows
-    * REGARDLESS of stream length — the sketch property — and counts
-    * merge associatively, so micro-batch folding provably lands on the
-    * same counters as one batch build over the union of the batches
-    * (ParitySpec). This is the approx layer a stream serves when the
-    * exact token groupBy would hold unbounded keys in state. */
-  def cmsMaintenanceStream(toks: DataFrame, depth: Int = 3,
-                           width: Int = 512): DataFrame =
-    graft.ops.Sketches.cmsCounters(toks, depth, width)
-
-  /** F16 — streaming HyperLogLog maintenance (D55's register file run
-    * continuously): (group, idx) → max-ρ as an unwindowed grouped
-    * aggregation in complete mode. max is exactly mergeable, so
-    * micro-batch folding provably lands on the same registers as one
-    * batch build over the union of the batches — and state is bounded
-    * at groups·2^p rows regardless of stream length (the sketch
-    * property; the exact streaming countDistinct would hold every key
-    * ever seen). Downstream, D55's hllEstimate finishes each emitted
-    * register snapshot into the integer estimate. */
-  def hllMaintenanceStream(pairs: DataFrame, grp: String = "g",
-                           v: String = "v", p: Int = 6): DataFrame =
-    graft.ops.Sketches.hllRegisters(pairs, grp, v, p)
-
-  /** F24 — streaming quantile-sketch maintenance (D72 run live): the
-    * (group, bucket) → count frame of the log-linear quantile sketch
-    * as a complete-mode grouped aggregation. Counts merge by addition,
-    * so micro-batch folding provably lands on the same sketch as one
-    * batch build over the union of the batches — and state is bounded
-    * at groups·~3.8k rows regardless of stream length (an exact
-    * streaming percentile would buffer every value ever seen; this
-    * holds the 2^-7-relative-error summary instead). Each emitted
-    * snapshot finishes through D72's sketch-sized quantile rank walk
-    * ([[graft.ops.QuantileSketch.quantiles]]) — parity- and
-    * restart-pinned to the batch sketch in ParitySpec. */
-  def qsketchMaintenanceStream(rows: DataFrame, grp: String = "g",
-                               c: String = "v",
-                               p: Int = graft.ops.QuantileSketch.DefaultP)
-      : DataFrame =
-    graft.ops.QuantileSketch.buildSketch(rows, grp, c, p)
-
-  /** F18 — streaming EXACT distinct maintenance (D58 run live): the
-    * (group, word) → mask bitset as a complete-mode grouped
-    * aggregation — bit_or merges associatively, so micro-batch folding
-    * lands on the batch words, and state is bounded at
-    * groups·⌈domain/63⌉ rows forever (an exact streaming countDistinct
-    * would buffer every id). The popcount finisher turns each snapshot
-    * into exact per-group distinct counts. */
-  def bitsetMaintenanceStream(pairs: DataFrame, grp: String = "g",
-                              id: String = "v"): DataFrame =
-    graft.ops.Sketches.bitsetWords(pairs, grp, id)
-
   /** F17 — streaming drift-monitor state (B16 run live): the CURRENT
     * window's binned counts as a complete-mode grouped aggregation
     * with bin bounds FIXED from the deployed baseline (production
@@ -500,35 +457,6 @@ object StreamingOps {
     events.groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
   }
-
-  /** F22 — streaming Benford conformance monitor (D65 run live): the
-    * per-(group, digit) first-digit counts as a complete-mode grouped
-    * aggregation — counts merge associatively, state is bounded at
-    * groups·9 rows forever, and the map-side digit extraction is
-    * shared VERBATIM with the batch screen (Analytics.benfordDigits),
-    * so live and batch can never disagree on what a leading digit is.
-    * Each emitted snapshot finishes through Analytics.benfordFinish
-    * (grid completion, ppm shares, χ² score) — the F17 discipline:
-    * keep the unbounded-stream state minimal and associative, run the
-    * non-associative math on the bounded snapshot. */
-  def benfordDigitsStream(rows: DataFrame, group: String,
-                          amount: String): DataFrame =
-    graft.ops.Analytics.benfordDigits(rows, group, amount)
-      .groupBy(col("grp"), col("digit")).agg(count(lit(1)).as("n"))
-
-  /** F23 — streaming CUSUM shift monitor (D66 run live): the
-    * per-(type, day) counts as complete-mode state — associative
-    * merges, bounded by the DAY DOMAIN (the stream's calendar), never
-    * the event volume — with the day bucketing shared verbatim with
-    * the batch detector (Analytics.cusumDaily) and each snapshot
-    * finishing through Analytics.cusumFinish (μ, prefix sums, running
-    * minima, alarms). The CUSUM path is deliberately NOT maintained
-    * as state: μ depends on every day seen, so the path is
-    * non-associative — the F17/F22 split (minimal associative state,
-    * non-associative math on the bounded snapshot) is load-bearing
-    * here, not a style choice. */
-  def cusumDailyStream(events: DataFrame): DataFrame =
-    graft.ops.Analytics.cusumDaily(events)
 
   /** One keyed input event for [[markovStream]]. */
   case class MarkovEvent(user_id: Long, ts_us: Long, event_id: Long,
@@ -697,64 +625,6 @@ object StreamingOps {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
   }
 
-  /** F27 — streaming scorer-HEALTH monitor (H4 + H15 run live): the
-    * deployed model's AUC and average precision over everything scored
-    * so far, refreshed per trigger — the monitor that catches "the
-    * fraud ring changed and the model quietly stopped ranking" days
-    * before the weekly batch eval would. State is the per-score
-    * (count, positive-count) frame as a complete-mode grouped
-    * aggregation — associative merges, bounded by the SCORE DOMAIN
-    * forever (the F17/F22/F23 minimal-state split: rank-sum windows
-    * and precision folds are non-associative, so they run on the
-    * bounded snapshot through the BATCH finishers
-    * [[graft.ml.Evaluation]] `finishAuc`/`finishAp` — live and batch
-    * can never disagree on what AUC means). */
-  def scorerHealthState(scored: DataFrame, score: String = "score",
-                        label: String = "label"): DataFrame =
-    scored.groupBy(col(score).as("s"))
-      .agg(count(lit(1)).as("n"), sum(col(label)).as("np"))
-
-  /** F31 — streaming EXACT-quantile maintenance (D85 live): the
-    * (group, value) count histogram as complete-mode state —
-    * associative additions, bounded by the VALUE DOMAIN forever (the
-    * caller's binning contract; when the domain is genuinely unbounded
-    * the F24 log-linear sketch is the right tool — this maintainer is
-    * its EXACT sibling for bounded domains: true order statistics, no
-    * error band), each snapshot finishing through the batch
-    * [[graft.ops.Analytics]] `finishLadder` (rank windows are
-    * non-associative, never state). */
-  def ladderState(rows: DataFrame, group: String = "grp",
-                  value: String = "x"): DataFrame =
-    rows.groupBy(col(group).as("grp"), col(value).as("x"))
-      .agg(count(lit(1)).as("c"))
-
-  /** F34 — streaming MAD robust-outlier monitor (D90 live): the SAME
-    * value-domain-bounded (grp, x, c) histogram state as F31 — one
-    * state family, two finishers — with each snapshot finishing
-    * through the batch [[graft.ops.Analytics]] `finishMad` (medians
-    * are non-associative, never state). A model-score or amount
-    * stream gets live Hampel outlier counts whose semantics are
-    * EXACTLY the nightly batch's. */
-  def madState(rows: DataFrame, group: String = "grp",
-               value: String = "x"): DataFrame =
-    ladderState(rows, group, value)
-
-  /** F36 — streaming HHI concentration monitor (D94 live): the
-    * (market, participant) total contraction maintained as complete-
-    * mode grouped aggregation — sums merge associatively, so
-    * micro-batch folding provably lands on the same contraction as
-    * one batch pass, and state is bounded at markets·participants
-    * rows (the dimension domain, never the transaction stream). Each
-    * emitted snapshot finishes through the batch
-    * [[graft.ops.Analytics]] `finishHhi` (the share-squared ratio is
-    * non-associative, never state — the F31/F34 split): a payments
-    * desk watches a market's concentration drift toward one
-    * counterparty LIVE, with semantics EXACTLY the nightly D94's. */
-  def hhiState(txns: DataFrame, market: String = "grp",
-               participant: String = "p",
-               amt: String = "amt_cents"): DataFrame =
-    graft.ops.Analytics.hhiContract(txns, market, participant, amt)
-
   /** F37 — streaming OUT-OF-VOCABULARY mass monitor (E72 live): each
     * micro-batch's tokens classify STATELESSLY against the pinned
     * deploy-time vocabulary ([[graft.ops.CorpusStats]] `topVocab`,
@@ -767,22 +637,6 @@ object StreamingOps {
     * types need per-source word state (unbounded — the F33
     * reject-don't-degrade rule); a corpus audit uses E72, and a live
     * approximate-types sidecar is one F16 HLL register file away. */
-  /** F38 — streaming DRIFT-BY-RANKS monitor (D92 run live): the
-    * (slice, v) distinct-value contraction with per-value (n, n1v)
-    * counters as complete-mode state — counts merge associatively, so
-    * micro-batch folding provably lands on the same contraction as one
-    * batch pass, and state is bounded by slice·value cardinality
-    * forever (the F17/F31 minimal-state split: rank prefix-sums are
-    * non-associative, never state). grp=0 marks the pinned reference
-    * sample, grp=1 the live window; each emitted snapshot finishes
-    * through the batch [[graft.ops.RankTests]] `finishMannWhitney`, so
-    * the live tie-corrected rank-sum z IS the nightly D92's — a
-    * distribution-free drift alarm a single fat-finger outlier cannot
-    * swamp, which is exactly why a rank monitor earns its place next
-    * to the F29 KS and F17 χ² ones. */
-  def rankDriftState(rows: DataFrame): DataFrame =
-    graft.ops.RankTests.mannWhitneyContract(rows)
-
   def oovMassState(docs: DataFrame, vocab: DataFrame): DataFrame =
     docs
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
@@ -793,56 +647,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("n_tokens"),
         sum(when(col("in_vocab").isNull, 1L).otherwise(0L))
           .as("oov_tokens"))
-
-  /** F30 — streaming FRESHNESS monitor (B26 run live): per-stream
-    * last-arrival lag behind the corpus frontier, refreshed every
-    * trigger — the liveness alarm an ingestion SLA wants DURING the
-    * day, not at the nightly audit; a feed that silently stopped
-    * shows its lag growing trigger by trigger while every other
-    * monitor (volume, drift, agreement) still looks healthy on the
-    * data that IS arriving. State is the per-type (first, last, count)
-    * frame as complete-mode grouped aggregation — associative min/max/
-    * count merges, bounded by the TYPE domain forever — finishing
-    * through the batch [[graft.ops.Analytics]] `finishFreshness` (the
-    * frontier depends on every type: non-associative, never state). */
-  def freshnessState(events: DataFrame): DataFrame =
-    events.groupBy(col("event_type"))
-      .agg(min(col("ts_us")).as("first_ts_us"),
-        max(col("ts_us")).as("last_ts_us"), count(lit(1)).as("n_rows"))
-
-  /** F29 — streaming KS drift monitor (H6 run live): the two-sample
-    * Kolmogorov–Smirnov distance between a reference score population
-    * (side 0, e.g. the training distribution replayed once) and the
-    * live serving stream (side 1), refreshed per trigger — the
-    * covariate-shift alarm that, like F28, needs NO labels: the score
-    * DISTRIBUTION moves days before delayed labels can prove the
-    * accuracy moved. State is the per-distinct-value (da, db) count
-    * frame as complete-mode grouped aggregation — associative merges,
-    * bounded by the VALUE DOMAIN forever — finishing through the batch
-    * [[graft.ml.Evaluation]] `finishKs` (the cumulative-max walk is
-    * non-associative, so it is never state — the F27/F28 split). */
-  def ksState(rows: DataFrame, side: String = "side",
-              v: String = "v"): DataFrame =
-    rows.groupBy(col(v).as("x"))
-      .agg(sum(when(col(side) === 0L, 1L).otherwise(0L)).as("da"),
-        sum(when(col(side) =!= 0L, 1L).otherwise(0L)).as("db"))
-
-  /** F28 — streaming inter-rater AGREEMENT monitor (H16 run live): two
-    * scorers run side by side in production (champion/challenger, new
-    * lang-id vs old, model vs heuristic triage) and this maintains
-    * their Cohen's κ over everything scored so far — the "the
-    * challenger quietly diverged" alarm that needs NO labels, so it
-    * fires in the label-delay window where every accuracy monitor is
-    * blind. State is the (pred_a, pred_b) contingency-cell frame as a
-    * complete-mode grouped aggregation — associative merges, bounded
-    * at alphabet² forever — and snapshots finish through the BATCH
-    * [[graft.ml.Evaluation]] `finishKappa` (the F27 discipline: the
-    * chance-correction arithmetic is non-associative, so it is never
-    * state; live and batch κ are one code path). */
-  def agreementState(paired: DataFrame, a: String = "pred_a",
-                     b: String = "pred_b"): DataFrame =
-    paired.groupBy(col(a).as("pred_a"), col(b).as("pred_b"))
-      .agg(count(lit(1)).as("n"))
 
   case class VeloState(frontier: Long, n_late: Long,
                        buf: List[(Long, Long, Long)])

@@ -383,7 +383,8 @@ class AtomicMartSpec extends SparkSpec {
       (0 until 50).map(i => (dt.toString, (dt % 3) * 1000L + i, s"u${dt / 3}", dt * 100L + i))
     }.toDF("dt", "amount", "u", "id")
     AtomicMart.publish(df, path, Seq("dt"), statCols = Seq("amount", "u"))
-    val (one, kept1, skip1) = AtomicMart.readBetween(spark, path, "amount", 1000L, 1999L)
+    val (one, kept1, skip1) = AtomicMart.readFiltered(spark, path,
+      col("amount").between(1000L, 1999L))
     assert(kept1 == 3 && skip1 == 6 && one.count() == 150)
     val (both, kept2, skip2) = AtomicMart.readFiltered(spark, path,
       col("amount") >= 1000L && col("amount") <= 1999L && col("u") === "u1")
@@ -505,8 +506,8 @@ class AtomicMartSpec extends SparkSpec {
     // against NULL never match, and the stats prove there is nothing else
     val (vw, keptVW, _) = AtomicMart.readFiltered(spark, path, col("v") >= 0L)
     assert(keptVW == 8 && vw.count() == 7 * 20 + 10)
-    // old readBetween path stays consistent with the empty-bounds stat
-    val (rb, keptRB, _) = AtomicMart.readBetween(spark, path, "v", 0L, 10000L)
+    // a closed range stays consistent with the empty-bounds stat
+    val (rb, keptRB, _) = AtomicMart.readFiltered(spark, path, col("v").between(0L, 10000L))
     assert(keptRB == 8 && rb.count() == 7 * 20 + 10)
   }
 
@@ -682,7 +683,8 @@ class AtomicMartSpec extends SparkSpec {
       .select("tx_id").as[Long].collect().toSeq == Seq(2L))
     // data skipping on the RENAMED stat column (stats are keyed by the
     // rename-stable physical name)
-    val (df, scanned, skipped) = AtomicMart.readBetween(spark, path, "amount_cents", 150L, 300L)
+    val (df, scanned, skipped) = AtomicMart.readFiltered(spark, path,
+      col("amount_cents").between(150L, 300L))
     assert(df.select("tx_id").as[Long].collect().toSeq == Seq(2L))
     assert(scanned == 1 && skipped == 1)
     // writes under the new names land in the OLD physical layout

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.types._
 
-import graft.sources.{AtomicMart, DelimitedSource, XlsxSource}
+import graft.sources.{AtomicMart, DelimitedSource, Tables, XlsxSource}
 import graft.fraud.FraudRules
 
 /** A4/A5/A1 file-level behavior: delimited reads with explicit schema,
@@ -27,6 +27,14 @@ class IngestSpec extends SparkSpec {
     assert(rows.length == 2)
     assert(rows(0).getDouble(1) == 10.50)
     assert(rows(1).getString(2) == "B2")
+  }
+
+  test("events refuses a session without nanosAsLong and leaves its conf unchanged") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val e = intercept[IllegalStateException](Tables.events(s2, sf))
+    assert(e.getMessage.contains("spark.sql.legacy.parquet.nanosAsLong"))
+    assert(s2.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
   }
 
   test("batch id extraction and DDMMYYYY -> ISO date (tools.py analog)") {

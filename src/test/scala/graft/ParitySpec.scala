@@ -21,6 +21,16 @@ import graft.streaming.StreamingOps.{AsOfEvent, AsOfHit}
   *   F5  minhash near-dedup↔ first-per-signature keeper over batch sigs
   *   F7  SRP embed dedup   ↔ first-per-signature keeper over batch sigs
   *   F12 streaming SCD2    ↔ B5 [[graft.etl.Scd2.merge]] chain
+  *
+  * The aggregation monitors (F13, F15, F16, F18, F22–F24, F27–F31,
+  * F34, F36, F38) run their batch operator's own contraction on the
+  * stream (`IncrementalAgg.state`, `Sketches.cmsCounters`,
+  * `Evaluation.scoreContract`, `Analytics.ladderContract`, …), so for
+  * them stream and batch share one code path: those tests pin that the
+  * state store folds micro-batches (and survives a restart) to the
+  * one-pass batch answer, and that the batch finisher runs on the
+  * emitted snapshot. The DuckDB twins of the registry queries stay the
+  * independent check of the contractions themselves.
   */
 class ParitySpec extends SparkSpec {
   import spark.implicits._
@@ -427,7 +437,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.etl.IncrementalAgg
     val in = MemoryStream[(Long, Long)]
-    val q = StreamingOps.aggMaintenanceStream(in.toDS().toDF("user_id", "v"))
+    val q = IncrementalAgg.state(in.toDS().toDF("user_id", "v"), "user_id", col("v"))
       .writeStream.format("memory").queryName("aggmaint")
       .outputMode("complete").start()
     val b1 = Seq((1L, 10L), (1L, 5L), (2L, 7L))
@@ -452,7 +462,7 @@ class ParitySpec extends SparkSpec {
     val in = MemoryStream[(Long, Long)]
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long, Long, Long)]
-    val q = StreamingOps.aggMaintenanceStream(in.toDS().toDF("user_id", "v"))
+    val q = graft.etl.IncrementalAgg.state(in.toDS().toDF("user_id", "v"), "user_id", col("v"))
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val rows = df.collect().map(r =>
@@ -483,7 +493,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[String]
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    val q = StreamingOps.cmsMaintenanceStream(in.toDS().toDF("tok"))
+    val q = graft.ops.Sketches.cmsCounters(in.toDS().toDF("tok"))
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val rows = df.collect().map(r =>
@@ -580,7 +590,7 @@ class ParitySpec extends SparkSpec {
     // HLL registers: keys (g, idx), mergeable max
     val inH = MemoryStream[(Long, Long)]
     val bufH = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    val qH = StreamingOps.hllMaintenanceStream(inH.toDS().toDF("g", "v"))
+    val qH = graft.ops.Sketches.hllRegisters(inH.toDS().toDF("g", "v"), "g", "v")
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val rows = df.collect().map(r => (id, r.getLong(0), r.getLong(1), r.getInt(2).toLong))
@@ -603,7 +613,7 @@ class ParitySpec extends SparkSpec {
     // bitset words: keys (g, w), mergeable bit_or
     val inB = MemoryStream[(Long, Long)]
     val bufB = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    val qB = StreamingOps.bitsetMaintenanceStream(inB.toDS().toDF("g", "v"))
+    val qB = graft.ops.Sketches.bitsetWords(inB.toDS().toDF("g", "v"), "g", "v")
       .writeStream.outputMode("update")
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val rows = df.collect().map(r => (id, r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -646,7 +656,7 @@ class ParitySpec extends SparkSpec {
   test("F15 streaming count-min maintenance equals the batch sketch build") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[String]
-    val q = StreamingOps.cmsMaintenanceStream(in.toDS().toDF("tok"))
+    val q = graft.ops.Sketches.cmsCounters(in.toDS().toDF("tok"))
       .writeStream.format("memory").queryName("cmsstream")
       .outputMode("complete").start()
     // real corpus tokens split across three micro-batches, plus a
@@ -671,7 +681,7 @@ class ParitySpec extends SparkSpec {
   test("F16 streaming HLL maintenance equals the batch registers and estimate") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long)]
-    val q = StreamingOps.hllMaintenanceStream(in.toDS().toDF("g", "v"))
+    val q = graft.ops.Sketches.hllRegisters(in.toDS().toDF("g", "v"), "g", "v")
       .writeStream.format("memory").queryName("hllstream")
       .outputMode("complete").start()
     // three micro-batches over two groups, with cross-batch overlap:
@@ -698,7 +708,7 @@ class ParitySpec extends SparkSpec {
   test("F18 streaming bitset maintenance equals the batch exact distinct") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long)]
-    val q = StreamingOps.bitsetMaintenanceStream(in.toDS().toDF("g", "v"))
+    val q = graft.ops.Sketches.bitsetWords(in.toDS().toDF("g", "v"), "g", "v")
       .writeStream.format("memory").queryName("bitsetstream")
       .outputMode("complete").start()
     val all = (0L until 3000L).map(i => (i % 3, i % 700))
@@ -723,7 +733,7 @@ class ParitySpec extends SparkSpec {
   test("F24 streaming quantile-sketch maintenance equals the batch sketch and quantiles") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, Long)]
-    val q = StreamingOps.qsketchMaintenanceStream(in.toDS().toDF("g", "v"))
+    val q = graft.ops.QuantileSketch.buildSketch(in.toDS().toDF("g", "v"), "g", "v")
       .writeStream.format("memory").queryName("qskstream")
       .outputMode("complete").start()
     // long-tailed values over two groups with cross-batch repeats: the
@@ -870,8 +880,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.Analytics
     val in = MemoryStream[(String, Double)]
-    val q = StreamingOps.benfordDigitsStream(in.toDS().toDF("g", "amt"),
-        group = "g", amount = "amt")
+    val q = Analytics.benfordContract(in.toDS().toDF("g", "amt"), "g", "amt")
       .writeStream.format("memory").queryName("benford_state")
       .outputMode("complete").start()
     try {
@@ -897,7 +906,7 @@ class ParitySpec extends SparkSpec {
     import graft.ops.Analytics
     val day = 86400000000L
     val in = MemoryStream[(String, Long)]
-    val q = StreamingOps.cusumDailyStream(in.toDS().toDF("event_type", "ts_us"))
+    val q = Analytics.cusumDaily(in.toDS().toDF("event_type", "ts_us"))
       .writeStream.format("memory").queryName("cusum_state")
       .outputMode("complete").start()
     try {
@@ -1068,7 +1077,7 @@ class ParitySpec extends SparkSpec {
     // an outlier beyond 3·MAD, restart between the halves
     val b1 = Seq(("a", 10L), ("a", 12L), ("a", 11L), ("b", 5L), ("b", 7L))
     val b2 = Seq(("a", 13L), ("a", 500L), ("b", 6L), ("b", 100L))
-    def plan = StreamingOps.madState(in.toDS().toDF("t", "v"), "t", "v")
+    def plan = graft.ops.Analytics.ladderContract(in.toDS().toDF("t", "v"), "t", col("v"))
     completeRun(in, plan, "mad_rs1", ck, b1)
     completeRun(in, plan, "mad_rs2", ck, b2)
     val streamed = graft.ops.Analytics.finishMad(spark.table("mad_rs2"))
@@ -1098,7 +1107,7 @@ class ParitySpec extends SparkSpec {
     val ck = ckDir("agg")
     val b1 = Seq((1L, 10L), (1L, 5L), (2L, 7L))
     val b2 = Seq((1L, 20L), (3L, 1L), (2L, 3L))
-    def plan = StreamingOps.aggMaintenanceStream(in.toDS().toDF("user_id", "v"))
+    def plan = graft.etl.IncrementalAgg.state(in.toDS().toDF("user_id", "v"), "user_id", col("v"))
     completeRun(in, plan, "agg_rs1", ck, b1) // incarnation 1, then "kill"
     completeRun(in, plan, "agg_rs2", ck, b2) // incarnation 2 recovers state
     val streamed = spark.table("agg_rs2")
@@ -1134,7 +1143,7 @@ class ParitySpec extends SparkSpec {
     val ck = ckDir("cms")
     val b1 = Seq("x", "y", "x", "z")
     val b2 = Seq("x", "w", "y")
-    def plan = StreamingOps.cmsMaintenanceStream(
+    def plan = graft.ops.Sketches.cmsCounters(
       in.toDS().toDF("tok"), depth = 3, width = 64)
     completeRun(in, plan, "cms_rs1", ck, b1)
     completeRun(in, plan, "cms_rs2", ck, b2)
@@ -1153,8 +1162,8 @@ class ParitySpec extends SparkSpec {
     // idempotently (bit_or), keeping the count exact
     val b1 = Seq((1L, 5L), (1L, 70L), (2L, 5L))
     val b2 = Seq((1L, 5L), (1L, 200L), (2L, 6L), (3L, 1L))
-    def plan = StreamingOps.bitsetMaintenanceStream(
-      in.toDS().toDF("g", "v"))
+    def plan = graft.ops.Sketches.bitsetWords(
+      in.toDS().toDF("g", "v"), "g", "v")
     completeRun(in, plan, "bits_rs1", ck, b1)
     completeRun(in, plan, "bits_rs2", ck, b2)
     val streamed = graft.ops.Sketches.bitsetFinish(spark.table("bits_rs2"), "g")
@@ -1172,7 +1181,7 @@ class ParitySpec extends SparkSpec {
     // same bucket twice across incarnations), not reset or double-fold
     val b1 = Seq(("a", 63L), ("a", 64L), ("b", 5L))
     val b2 = Seq(("a", 64L), ("a", 130L), ("b", 5L))
-    def plan = StreamingOps.qsketchMaintenanceStream(in.toDS().toDF("g", "v"))
+    def plan = graft.ops.QuantileSketch.buildSketch(in.toDS().toDF("g", "v"), "g", "v")
     completeRun(in, plan, "qsk_rs1", ck, b1)
     completeRun(in, plan, "qsk_rs2", ck, b2)
     val streamed = spark.table("qsk_rs2")
@@ -1341,7 +1350,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long)]
     val ck = ckDir("health")
-    def plan = StreamingOps.scorerHealthState(
+    def plan = graft.ml.Evaluation.scoreContract(
       in.toDS().toDF("score", "label"))
     // scores repeat across triggers: the per-score counters must MERGE
     val b1 = Seq((10L, 1L), (20L, 0L), (10L, 0L), (30L, 1L))
@@ -1364,7 +1373,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, String)]
     val ck = ckDir("agree")
-    def plan = StreamingOps.agreementState(
+    def plan = graft.ml.Evaluation.kappaContract(
       in.toDS().toDF("pred_a", "pred_b"))
     // cell keys repeat across triggers AND the restart: counters merge
     val b1 = Seq(("en", "en"), ("en", "de"), ("de", "de"), ("en", "en"))
@@ -1384,7 +1393,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, Long)]
     val ck = ckDir("ladder")
-    def plan = StreamingOps.ladderState(in.toDS().toDF("grp", "x"))
+    def plan = graft.ops.Analytics.ladderContract(in.toDS().toDF("grp", "x"), "grp", col("x"))
     // values repeat across triggers AND the restart: counts must merge
     val b1 = Seq(("a", 1L), ("a", 2L), ("a", 2L), ("b", 7L))
     val b2 = Seq(("a", 3L), ("a", 2L), ("b", 7L), ("a", 10L))
@@ -1405,7 +1414,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, Long)]
     val ck = ckDir("fresh")
-    def plan = StreamingOps.freshnessState(
+    def plan = graft.ops.Analytics.freshnessContract(
       in.toDS().toDF("event_type", "ts_us"))
     val s = 1000000L
     val b1 = Seq(("live", 0L), ("stale", 100L * s), ("live", 50L * s))
@@ -1427,7 +1436,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long)]
     val ck = ckDir("ksdrift")
-    def plan = StreamingOps.ksState(in.toDS().toDF("side", "v"))
+    def plan = graft.ml.Evaluation.ksContract(in.toDS().toDF("side", "v"))
     // values repeat across triggers AND the restart: counters merge
     val b1 = Seq((0L, 10L), (0L, 20L), (1L, 20L), (1L, 30L))
     val b2 = Seq((0L, 10L), (1L, 40L), (0L, 30L), (1L, 20L))
@@ -1446,7 +1455,7 @@ class ParitySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, Long, Long)]
     val ck = ckDir("rankdrift")
-    def plan = StreamingOps.rankDriftState(in.toDS().toDF("slice", "grp", "v"))
+    def plan = graft.ops.RankTests.mannWhitneyContract(in.toDS().toDF("slice", "grp", "v"))
     // s1 drifts (live sample sits above the reference, with a cross-
     // restart tie at v=20); s2 stays one-sided → the finisher must pin
     // z=0 there, live exactly like batch
@@ -1517,7 +1526,7 @@ class ParitySpec extends SparkSpec {
     // m1 gains a third participant AFTER the restart — the recovered
     // (m1, 1) counter must absorb the new 25 on top of the pre-kill 100
     val b2 = Seq(("m1", 1L, 25L), ("m1", 3L, 25L), ("m2", 9L, 90L))
-    def plan = StreamingOps.hhiState(
+    def plan = graft.ops.Analytics.hhiContract(
       in.toDS().toDF("grp", "p", "amt_cents"))
     completeRun(in, plan, "hhi_rs1", ck, b1)
     completeRun(in, plan, "hhi_rs2", ck, b2)

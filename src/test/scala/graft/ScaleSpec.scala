@@ -589,7 +589,7 @@ class ScaleSpec extends SparkSpec {
     // compacting again is a no-op (nothing fragmented): same version back
     assert(AtomicMart.compact(spark, path) == 1L)
     // the rewrite captured stats → skipping now works on the compacted set
-    val (thin, kept, skipped) = AtomicMart.readBetween(spark, path, "v", 0L, 70L)
+    val (thin, kept, skipped) = AtomicMart.readFiltered(spark, path, col("v").between(0L, 70L))
     assert(kept + skipped == 4 && thin.count() == 11)
   }
 
@@ -610,7 +610,8 @@ class ScaleSpec extends SparkSpec {
       .filter(col("amount_cents") >= 100L && col("amount_cents") <= 3000L)
     // id*10 in [100,3000] → id in [10,300]; those ids hit every dt
     // partition, so THIS predicate skips nothing (stats are honest)...
-    val (all, keptAll, skipAll) = AtomicMart.readBetween(spark, path, "amount_cents", 100L, 3000L)
+    val (all, keptAll, skipAll) = AtomicMart.readFiltered(spark, path,
+      col("amount_cents").between(100L, 3000L))
     assert(keptAll == 8 && skipAll == 0)
     assert(all.count() == full.count())
     // ...but republishing one partition with a disjoint amount range
@@ -620,8 +621,8 @@ class ScaleSpec extends SparkSpec {
         (col("id") * 1000L).as("amount_cents"),
         concat(lit("v"), col("id") % 7).as("user"))
     AtomicMart.publish(hot, path, Seq("dt"), statCols = Seq("amount_cents", "user"))
-    val (pruned, kept, skipped) = AtomicMart.readBetween(
-      spark, path, "amount_cents", 8_000_000L, 8_500_000L)
+    val (pruned, kept, skipped) = AtomicMart.readFiltered(
+      spark, path, col("amount_cents").between(8_000_000L, 8_500_000L))
     assert(skipped == 8 && kept == 1,
       s"manifest stats must skip the 8 cold partitions, kept=$kept skipped=$skipped")
     // the skip is visible at the FILE level: only the hot partition's
@@ -630,11 +631,11 @@ class ScaleSpec extends SparkSpec {
     assert(pruned.select(min("amount_cents"), max("amount_cents")).as[(Long, Long)].head()
       == ((8_000_000L, 8_500_000L)))
     // string-domain stats prune too: users v0..v6 live only in the hot partition
-    val (justHot, keptS, skippedS) = AtomicMart.readBetween(spark, path, "user", "v0", "v6")
+    val (justHot, keptS, skippedS) = AtomicMart.readFiltered(spark, path, col("user").between("v0", "v6"))
     assert(skippedS == 8 && keptS == 1 && justHot.count() == 1000)
     // stat-less manifests stay readable and conservative: a column with
     // no stats scans everything, answers exactly
-    val (noStats, keptN, skippedN) = AtomicMart.readBetween(spark, path, "id", 0L, 10L)
+    val (noStats, keptN, skippedN) = AtomicMart.readFiltered(spark, path, col("id").between(0L, 10L))
     assert(keptN == 9 && skippedN == 0 && noStats.count() == 11)
   }
 
