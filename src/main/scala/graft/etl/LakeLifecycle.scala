@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
-import graft.sources.{AtomicCatalog, AtomicMart}
+import graft.sources.{AtomicMart, MartTxn}
 
 /** The multi-day lake lifecycle glue: the pieces every maintenance op
   * already provides in isolation (SCD2 merge, fraud rules, B27 atomic
@@ -62,32 +62,53 @@ object LakeLifecycle {
 
   // ------------------------------------------------------------------
   // Standing document corpus with incremental near-dedup (E53 run as
-  // a STATEFUL daily loop: persisted seen-store + band index, both
-  // B27-atomic so a killed day replays idempotently)
+  // a STATEFUL daily loop: persisted seen-store + band index, one B44
+  // transaction per day so a killed day replays idempotently)
   // ------------------------------------------------------------------
 
-  /** One AtomicCatalog root holding the two state tables, both
-    * partitioned by batch_day: `seen` rows are (doc_id, text, ch) for
-    * every document ever ingested (the stored-sketch stand-in the
-    * verify step re-reads), `index` rows are (doc_id, band, bucket) —
-    * the E53 persisted band index. A day's ingest commits BOTH tables
-    * in ONE catalog rename (B28), so no crash can leave the corpus and
-    * its index at different days. */
-  final case class DocLake(root: String)
+  /** One lake root holding the two state tables, ordinary AtomicMart
+    * tables partitioned by batch_day: `<root>/seen` rows are (doc_id,
+    * text, ch) for every document ever ingested (the stored-sketch
+    * stand-in the verify step re-reads), `<root>/index` rows are
+    * (doc_id, band, bucket) — the E53 persisted band index
+    * ([[graft.ops.Dedup.incrementalPairs]] probes it). A day's ingest
+    * commits BOTH tables in one [[MartTxn]] transaction whose intent
+    * log lives under the root, so no replayed day leaves the corpus
+    * and its index at different days: a crash before the intent moves
+    * neither table's version, and a crash after it is rolled forward
+    * by the `MartTxn.recover` the next [[LakeLifecycle.dedupDay]] runs
+    * before it reads. The lane's only reader is `dedupDay` itself; a
+    * CONCURRENT outside reader could see one leg committed and the
+    * other not in the middle of a commit, and must consume the pair
+    * through `MartTxn.tailPair`. */
+  final case class DocLake(root: String) {
+    def seenPath: String = s"$root/seen"
+    def indexPath: String = s"$root/index"
+  }
 
   /** MinHash signatures need ≥3 tokens (the E53 precondition); shorter
     * docs still dedup by md5 identity, they just never band. */
   private def bandable(df: DataFrame): DataFrame =
     df.filter(size(split(col("text"), " ")) >= 3)
 
+  private def emptySeen(spark: SparkSession): DataFrame = spark.emptyDataFrame
+    .withColumn("doc_id", lit(0L)).withColumn("text", lit(""))
+    .withColumn("ch", lit("")).limit(0)
+
+  private def emptyIndex(spark: SparkSession): DataFrame = spark.emptyDataFrame
+    .withColumn("doc_id", lit(0L)).withColumn("band", lit(0L))
+    .withColumn("bucket", lit("")).limit(0)
+
   /** Duplicate ids within `batch` given the prior state: a batch doc
     * is a duplicate iff some EARLIER document (any prior day's, or a
     * smaller-id doc of the same batch) is md5-identical OR shares a
-    * band bucket and passes the exact 3-gram Jaccard gate tNum/tDen.
-    * "Earlier = any seen doc, kept or dropped" — the same relation the
-    * one-shot twin evaluates as ordered pairs, which is what makes
-    * incremental ≡ one-shot provable (survivor-only comparison would
-    * make the answer depend on batch boundaries). */
+    * band bucket and passes the exact 3-gram Jaccard gate tNum/tDen —
+    * the banded part is E53's core ([[graft.ops.Dedup.incrementalPairs]])
+    * over `seen ∪ batch`. "Earlier = any seen doc, kept or dropped" —
+    * the same relation the one-shot twin evaluates as ordered pairs,
+    * which is what makes incremental ≡ one-shot provable
+    * (survivor-only comparison would make the answer depend on batch
+    * boundaries). */
   private def dupIds(batch: DataFrame, seen: DataFrame, seenIdx: DataFrame,
                      bands: Int, rowsPerBand: Int,
                      tNum: Int, tDen: Int): DataFrame = {
@@ -100,50 +121,10 @@ object LakeLifecycle {
       .filter(col("doc_id") =!= col("first_id"))
     val dupExact = dupExactSeen.select(col("doc_id"))
       .unionByName(dupExactBatch.select(col("doc_id")))
-    // --- banded near-dup candidates vs (stored index ∪ earlier-in-batch)
+    // --- banded near-dups vs (stored index ∪ earlier-in-batch)
     val bIdx = Dedup.bandIndex(bandable(b), bands, rowsPerBand).localCheckpoint(true)
-    val candStored = bIdx
-      .join(seenIdx.select(col("band"), col("bucket"), col("doc_id").as("other_id")),
-        Seq("band", "bucket"))
-      .select(col("doc_id"), col("other_id"))
-    val candBatch = bIdx
-      .join(bIdx.select(col("band"), col("bucket"), col("doc_id").as("other_id")),
-        Seq("band", "bucket"))
-      .filter(col("other_id") < col("doc_id"))
-      .select(col("doc_id"), col("other_id"))
-    val cand = candStored.unionByName(candBatch).distinct()
-    // --- exact Jaccard verify on candidates only, texts re-read from
-    //     the seen store (the stored-sketch fetch) or the batch itself
-    val texts = seen.select(col("doc_id"), col("text"), col("ch"))
-      .unionByName(b).localCheckpoint(true)
-    val ids = cand.select(col("doc_id"))
-      .unionByName(cand.select(col("other_id").as("doc_id"))).distinct()
-    val involved = texts.join(ids, Seq("doc_id"), "left_semi")
-    val grams = involved
-      .select(col("doc_id"),
-        explode(graft.functions.TextNative.ngramsL(col("text"), 3)).as("g"))
-      .distinct().localCheckpoint(true)
-    val sz = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val withCh = cand
-      .join(involved.select(col("doc_id"), col("ch").as("ch1")), Seq("doc_id"))
-      .join(involved.select(col("doc_id").as("other_id"), col("ch").as("ch2")),
-        Seq("other_id"))
-    val needInter = withCh.filter(col("ch1") =!= col("ch2"))
-      .select(col("doc_id"), col("other_id"))
-    val inter = needInter
-      .join(grams, Seq("doc_id"))
-      .join(grams.select(col("doc_id").as("other_id"), col("g")), Seq("other_id", "g"))
-      .groupBy(col("doc_id"), col("other_id")).agg(count(lit(1)).as("n_inter"))
-    val dupNear = withCh
-      .join(inter, Seq("doc_id", "other_id"), "left")
-      .join(sz.select(col("doc_id"), col("n_sh").as("n1")), Seq("doc_id"))
-      .join(sz.select(col("doc_id").as("other_id"), col("n_sh").as("n2")), Seq("other_id"))
-      .withColumn("ni",
-        when(col("ch1") === col("ch2"), col("n1"))
-          .otherwise(coalesce(col("n_inter"), lit(0L))))
-      // Jaccard = ni/(n1+n2-ni) >= tNum/tDen, cross-multiplied exact
-      .filter(col("ni") * tDen >= (col("n1") + col("n2") - col("ni")) * tNum)
-      .select(col("doc_id"))
+    val dupNear = Dedup.incrementalPairs(bIdx, seenIdx, seen.unionByName(b), tNum, tDen)
+      .filter(col("dup") === 1L).select(col("doc_id"))
     dupExact.unionByName(dupNear).distinct()
   }
 
@@ -151,7 +132,7 @@ object LakeLifecycle {
     * atomically appends the WHOLE batch (survivors and duplicates) to
     * the seen store + band index under partition batch_day=`day`.
     * Replaying a killed day converges: both state tables are
-    * AtomicMart-published keyed by the day, so the rerun replaces the
+    * AtomicMart tables keyed by the day, so the rerun replaces the
     * day's own partitions instead of double-appending, and the
     * returned survivors are a pure function of (prior state, batch).
     *
@@ -164,45 +145,33 @@ object LakeLifecycle {
   def dedupDay(spark: SparkSession, lake: DocLake, batch: DataFrame, day: String,
                bands: Int = 4, rowsPerBand: Int = 2,
                tNum: Int = 7, tDen: Int = 10): DataFrame = {
-    val seenAll = AtomicCatalog.read(spark, lake.root, "seen")
-    val seen =
-      if (seenAll.columns.nonEmpty)
-        // a replayed day must not see its own half-written state
-        seenAll.filter(col("batch_day") =!= day)
-          .select(col("doc_id"), col("text"), col("ch"))
-      else spark.emptyDataFrame
-        .withColumn("doc_id", lit(0L)).withColumn("text", lit(""))
-        .withColumn("ch", lit("")).limit(0)
-    if (seenAll.columns.nonEmpty) {
-      val maxSeen = seenAll.filter(col("batch_day") =!= day)
-        .agg(max(col("doc_id"))).head.get(0)
+    // a commit that died after its intent lands before anything reads
+    MartTxn.recover(spark, lake.root)
+    // a replayed day must not see its own half-written state
+    def prior(path: String, empty: DataFrame): DataFrame =
+      if (AtomicMart.currentVersion(spark, path).isEmpty) empty
+      else AtomicMart.read(spark, path).filter(col("batch_day") =!= day)
+        .select(empty.columns.map(col).toIndexedSeq: _*)
+    val seen = prior(lake.seenPath, emptySeen(spark))
+    val maxSeen = seen.agg(max(col("doc_id"))).head.get(0)
+    if (maxSeen != null) {
       val minBatch = batch.agg(min(col("doc_id"))).head.get(0)
-      if (maxSeen != null && minBatch != null) {
+      if (minBatch != null) {
         require(maxSeen.asInstanceOf[Long] < minBatch.asInstanceOf[Long],
           s"dedupDay requires monotone doc_ids across batches: seen max " +
             s"$maxSeen >= batch min $minBatch (day $day)")
       }
     }
-    val idxAll = AtomicCatalog.read(spark, lake.root, "index")
-    val seenIdx =
-      if (idxAll.columns.nonEmpty)
-        idxAll.filter(col("batch_day") =!= day)
-          .select(col("doc_id"), col("band"), col("bucket"))
-      else spark.emptyDataFrame
-        .withColumn("doc_id", lit(0L)).withColumn("band", lit(0L))
-        .withColumn("bucket", lit("")).limit(0)
+    val seenIdx = prior(lake.indexPath, emptyIndex(spark))
     val dups = dupIds(batch, seen, seenIdx, bands, rowsPerBand, tNum, tDen)
       .localCheckpoint(true)
     val b = batch.select(col("doc_id"), col("text"), md5(col("text")).as("ch"))
     val survivors = b.join(dups, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("text")).localCheckpoint(true)
-    // corpus + index land in ONE cross-table commit (B28): a kill
-    // anywhere before the catalog rename leaves yesterday's pair; a
-    // kill after it leaves today's pair — never a mixed-day lake
-    AtomicCatalog.publish(spark, lake.root, Seq(
-      AtomicCatalog.TableBatch("seen",
+    MartTxn.publishAll(spark, lake.root, Seq(
+      MartTxn.TxnBatch(lake.seenPath,
         b.withColumn("batch_day", lit(day)), Seq("batch_day")),
-      AtomicCatalog.TableBatch("index",
+      MartTxn.TxnBatch(lake.indexPath,
         Dedup.bandIndex(bandable(b), bands, rowsPerBand)
           .withColumn("batch_day", lit(day)), Seq("batch_day"))))
     survivors
@@ -216,13 +185,8 @@ object LakeLifecycle {
                    bands: Int = 4, rowsPerBand: Int = 2,
                    tNum: Int = 7, tDen: Int = 10): DataFrame = {
     val spark = docs.sparkSession
-    val emptySeen = spark.emptyDataFrame
-      .withColumn("doc_id", lit(0L)).withColumn("text", lit(""))
-      .withColumn("ch", lit("")).limit(0)
-    val emptyIdx = spark.emptyDataFrame
-      .withColumn("doc_id", lit(0L)).withColumn("band", lit(0L))
-      .withColumn("bucket", lit("")).limit(0)
-    val dups = dupIds(docs, emptySeen, emptyIdx, bands, rowsPerBand, tNum, tDen)
+    val dups = dupIds(docs, emptySeen(spark), emptyIndex(spark),
+      bands, rowsPerBand, tNum, tDen)
     docs.select(col("doc_id"), col("text"))
       .join(dups, Seq("doc_id"), "left_anti")
   }

@@ -448,16 +448,13 @@ object Dedup {
     * The batch here is the natural re-crawl analog on this testdata:
     * every synthetic dup copy (id ≥ 10M — a literal re-crawl of an
     * existing page) plus the `doc_id % newMod = newRem` slice as fresh
-    * documents. Verification re-reads text ONLY for candidate-involved
-    * docs (the left-semi prune below — the stand-in for fetching
-    * stored sketches), and identical contents short-circuit to dup by
-    * identity (the dominant re-crawl case pays no gram join, same
-    * contraction as [[verifyCore]]). */
+    * documents. This is [[incrementalPairs]] plus the per-doc
+    * finisher; the document lake's day lane
+    * (`graft.etl.LakeLifecycle.dedupDay`) is the core's second caller,
+    * with its persisted band index as the stored side. */
   def incrementalLsh(docs: DataFrame, bands: Int = 4, rowsPerBand: Int = 2,
                      dupMod: Long = 250, newMod: Long = 10, newRem: Long = 7,
                      tNum: Int = 7, tDen: Int = 10): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val k = bands * rowsPerBand
     val universe = withSyntheticDups(docs, dupMod)
       .filter(size(split(col("text"), " ")) >= 3)
     // replica-aware re-crawl test: ids are positive, so a plain modulo
@@ -469,8 +466,33 @@ object Dedup {
     val corpusB = bandIndex(universe.filter(!isNew), bands, rowsPerBand)
     val batchB = bandIndex(universe.filter(isNew), bands, rowsPerBand)
       .localCheckpoint(true)
+    val gated = incrementalPairs(batchB, corpusB, universe, tNum, tDen)
+    val perDoc = gated.groupBy(col("doc_id"))
+      .agg(sum(col("from_corpus")).as("n_cand_corpus"),
+        (count(lit(1)) - sum(col("from_corpus"))).as("n_cand_batch"),
+        sum(col("dup")).as("n_dup"), max(col("dup")).as("is_dup"))
+    universe.filter(isNew).select(col("doc_id"))
+      .join(perDoc, Seq("doc_id"), "left")
+      .na.fill(0L, Seq("n_cand_corpus", "n_cand_batch", "n_dup", "is_dup"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** E53's core: every candidate pair of a batch, gated. `batchB` is
+    * the batch's [[bandIndex]] (the caller pins it), `storedB` the
+    * stored corpus index it probes, and `universe` the `(doc_id,
+    * text)` rows both sides' texts come from. Candidates are the
+    * stored-bucket matches (`from_corpus` = 1) plus the within-batch
+    * pairs with a smaller `other_id` (0); verification re-reads text
+    * ONLY for candidate-involved docs (the left-semi prune below — the
+    * stand-in for fetching stored sketches), and identical contents
+    * short-circuit to dup by identity (the dominant re-crawl case pays
+    * no gram join, same contraction as [[verifyCore]]). Returns
+    * `(doc_id, other_id, from_corpus, dup)`, `dup` = 1 iff the pair's
+    * exact 3-gram Jaccard is ≥ tNum/tDen. */
+  def incrementalPairs(batchB: DataFrame, storedB: DataFrame, universe: DataFrame,
+                       tNum: Int, tDen: Int): DataFrame = {
     val candCorpus = batchB
-      .join(corpusB.select(col("band"), col("bucket"),
+      .join(storedB.select(col("band"), col("bucket"),
         col("doc_id").as("other_id")), Seq("band", "bucket"))
       .select(col("doc_id"), col("other_id"), lit(1L).as("from_corpus"))
     val candBatch = batchB
@@ -505,7 +527,7 @@ object Dedup {
       .join(grams.select(col("doc_id").as("other_id"), col("g")),
         Seq("other_id", "g"))
       .groupBy(col("doc_id"), col("other_id")).agg(count(lit(1)).as("n_inter"))
-    val gated = withCh
+    withCh
       .join(inter, Seq("doc_id", "other_id"), "left")
       .join(sz.select(col("doc_id"), col("n_sh").as("n1")), Seq("doc_id"))
       .join(sz.select(col("doc_id").as("other_id"), col("n_sh").as("n2")),
@@ -516,14 +538,7 @@ object Dedup {
         (lit(tDen.toLong) * col("ni") >=
           lit(tNum.toLong) * (col("n1") + col("n2") - col("ni")))
           .cast(LongType))
-    val perDoc = gated.groupBy(col("doc_id"))
-      .agg(sum(col("from_corpus")).as("n_cand_corpus"),
-        (count(lit(1)) - sum(col("from_corpus"))).as("n_cand_batch"),
-        sum(col("dup")).as("n_dup"), max(col("dup")).as("is_dup"))
-    universe.filter(isNew).select(col("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_cand_corpus", "n_cand_batch", "n_dup", "is_dup"))
-      .orderBy(col("doc_id"))
+      .select(col("doc_id"), col("other_id"), col("from_corpus"), col("dup"))
   }
 
   /** E45 — MinHash estimator CALIBRATION: per LSH candidate pair, the

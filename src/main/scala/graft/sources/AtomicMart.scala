@@ -641,7 +641,7 @@ object AtomicMart {
         // B43 column mapping the files carry PHYSICAL names; the
         // declared (logical) name is restored here, which is the one
         // place every read path funnels through — so RENAME COLUMN is
-        // honored by read/readVersion/readWhere/readFiltered/CDF/DML
+        // honored by read/readVersion/readPartitions/readFiltered/CDF/DML
         // alike.
         df.select(schema.fields.map { f =>
           val phys = physOf(m, f.name)
@@ -946,34 +946,30 @@ object AtomicMart {
       else Some(conform(spark, readEntries(spark, kept), m))
     }
 
+  /** The `snap-<uuid>` directory an entry's leaf was staged under: the
+    * leaf sits one `col=value` level per partition column below it.
+    * Counted from the leaf, so a table whose own path contains
+    * `snap-` resolves the same way. */
+  private def snapRoot(e: Entry): String =
+    e.values.foldLeft(e.dir)((dir, _) => dir.substring(0, dir.lastIndexOf('/')))
+
   /** Read a live entry set: group leaves by snapshot root so each
     * group reads with one basePath (restoring partition columns from
     * directory names); union the (few, one per live publish) groups. */
   private[sources] def readEntries(spark: SparkSession, entries: Seq[Entry]): DataFrame = {
     if (entries.isEmpty)
       return spark.emptyDataFrame
-    val bySnap = entries.groupBy(e => e.dir.substring(0, e.dir.indexOf("/", e.dir.indexOf("snap-"))))
-    bySnap.map { case (snapRoot, es) =>
-      spark.read.option("basePath", snapRoot).parquet(es.map(_.dir): _*)
+    entries.groupBy(snapRoot).map { case (root, es) =>
+      spark.read.option("basePath", root).parquet(es.map(_.dir): _*)
     // snapshots written before/after a schema evolution differ in
     // column sets; missing columns union in as NULLs (then conform
     // orders and types them per the manifest's declared schema)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Read one manifest-pruned partition subset: entries are filtered
-    * DRIVER-side against the manifest before any file is listed — the
-    * manifest is the partition index. */
-  def readWhere(spark: SparkSession, path: String, col: String, value: String): DataFrame = {
-    val m = readManifest(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $path"))
-    val i = m.partCols.indexOf(physOf(m, col))
-    require(i >= 0, s"$col is not a partition column (${logicalPartCols(m)})")
-    conform(spark, readEntries(spark, m.entries.filter(_.values(i) == value)), m)
-  }
-
   /** Read selected whole partitions (values tuples), optionally at a
-    * pinned version — the multi-partition readWhere a merge needs. */
+    * pinned version — the exact partition set a merge rewrites, without
+    * [[readFiltered]]'s predicate. */
   def readPartitions(spark: SparkSession, path: String, values: Seq[Seq[String]],
                      version: Option[Long] = None): DataFrame = {
     val m = version.map(manifestAt(spark, path, _)).orElse(readManifest(spark, path))
@@ -1287,7 +1283,7 @@ object AtomicMart {
     }
     val live: Set[String] = retained
       .flatMap(v => manifestAt(spark, path, v).entries)
-      .map(e => e.dir.substring(0, e.dir.indexOf("/", e.dir.indexOf("snap-"))))
+      .map(snapRoot)
       .toSet
     val dataRoot = new Path(path, DataDir)
     val cutoff = System.currentTimeMillis() - graceMs

@@ -17,15 +17,8 @@ import org.apache.spark.sql.types.StructType
   */
 object DelimitedSource {
 
-  /** A `TabularSource` is anything that can land a staging DataFrame;
-    * the reference's CSV/XLSX loaders are two instances (XLSX has no
-    * in-container reader — see SURVEY.md §2 A6). */
-  trait TabularSource {
-    def load(spark: SparkSession, path: String): DataFrame
-  }
-
   final case class Csv(schema: StructType, sep: String = ";",
-                       header: Boolean = true) extends TabularSource {
+                       header: Boolean = true) {
     def load(spark: SparkSession, path: String): DataFrame =
       spark.read
         .option("sep", sep)
@@ -34,7 +27,7 @@ object DelimitedSource {
         .csv(path)
   }
 
-  final case class Json(schema: StructType) extends TabularSource {
+  final case class Json(schema: StructType) {
     def load(spark: SparkSession, path: String): DataFrame =
       spark.read.schema(schema).json(path)
   }
@@ -76,12 +69,7 @@ object DelimitedSource {
     }
   }
 
-  final case class Parquet() extends TabularSource {
-    def load(spark: SparkSession, path: String): DataFrame =
-      spark.read.parquet(path)
-  }
-
-  final case class Orc() extends TabularSource {
+  final case class Orc() {
     def load(spark: SparkSession, path: String): DataFrame =
       spark.read.orc(path)
   }

@@ -8,16 +8,15 @@ import java.util.UUID
 
 /** B44 — MULTI-TABLE TRANSACTIONS across independent AtomicMart
   * tables, with a change-feed consumer that can never observe table
-  * A's update without table B's.
+  * A's update without table B's: the lake's one multi-table commit.
   *
-  * B28's AtomicCatalog makes N tables atomic by moving them under ONE
-  * manifest root — the right design when the tables are born together.
-  * But the reference's daily run (rep_fraud.py) derives a fraud mart
-  * AND the dimension snapshot it joins against as two EXISTING,
-  * independently-consumed tables, each with its own version history,
-  * CDF and bookmarks; re-homing them under a catalog would break every
-  * single-table consumer. This is the other classic design: a durable
-  * INTENT LOG with roll-forward recovery (write-ahead logging /
+  * Every leg stays an ordinary AtomicMart table with its own version
+  * history, schema, CDF and bookmarks — the reference's daily run
+  * (rep_fraud.py) derives a fraud mart AND the dimension snapshot it
+  * joins against as two such independently-consumed tables, and the
+  * document lake's day lane (`graft.etl.LakeLifecycle.dedupDay`)
+  * commits its corpus and band index the same way. The design is a
+  * durable INTENT LOG with roll-forward recovery (write-ahead logging /
   * presumed-commit 2PC, textbook public material — Gray & Reuter ch.
   * 10; Delta achieves the same pairing with `txn` app-ids in its
   * commit log, which is where the manifest's `txn` stamp comes from).

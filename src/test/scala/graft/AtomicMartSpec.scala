@@ -203,7 +203,9 @@ class AtomicMartSpec extends SparkSpec {
     assert(back.select("rule").as[String].collect().toSet == hostile.toSet)
     // manifest-pruned read still resolves each hostile value exactly
     hostile.foreach { r =>
-      assert(AtomicMart.readWhere(spark, path, "rule", r).count() == 1, s"value <$r>")
+      val (df, kept, skipped) = AtomicMart.readFiltered(spark, path, col("rule") === r)
+      assert(df.count() == 1, s"value <$r>")
+      assert(kept == 1 && skipped == 2, s"value <$r>")
     }
   }
 
@@ -221,8 +223,9 @@ class AtomicMartSpec extends SparkSpec {
       ("passport", 1L, 111L), ("passport", 10L, 110L),
       ("city", 2L, 200L), ("passport", 3L, 300L)))
     // Manifest-pruned partition read: no directory outside `city` listed.
-    val city = AtomicMart.readWhere(spark, path, "rule", "city")
+    val (city, kept, skipped) = AtomicMart.readFiltered(spark, path, col("rule") === "city")
     assert(city.select("tx_id").as[Long].collect().toSeq == Seq(2L))
+    assert(kept == 1 && skipped == 2)
     // vacuum is snapshot-granular: the first snapshot stays (city's
     // live pointer still targets it) and live rows are unchanged
     AtomicMart.vacuum(spark, path, graceMs = 0L)
@@ -679,7 +682,7 @@ class AtomicMartSpec extends SparkSpec {
     // CDF across the renames is EMPTY (no pointer moved)
     assert(MartCdf.readChanges(spark, path, v0, vRenamed).count() == 0)
     // partition pruning by the NEW logical name
-    assert(AtomicMart.readWhere(spark, path, "fraud_rule", "city")
+    assert(AtomicMart.readFiltered(spark, path, col("fraud_rule") === "city")._1
       .select("tx_id").as[Long].collect().toSeq == Seq(2L))
     // data skipping on the RENAMED stat column (stats are keyed by the
     // rename-stable physical name)
@@ -961,5 +964,24 @@ class AtomicMartSpec extends SparkSpec {
     assert(AtomicMart.vacuum(spark, path, graceMs = 0L)
       .count(_.contains("/data/")) == 1)
     assert(AtomicMart.read(spark, path).count() == 2)
+  }
+
+  test("a table under a snap- parent directory reads and vacuums by its own snapshot roots") {
+    // snapshot roots are counted up from each leaf, so `snap-` in the
+    // table's own path must not be taken for a snapshot directory
+    val path = Files.createTempDirectory("graft_amart").resolve("snap-lake/mart").toString
+    AtomicMart.publishDay(mart("2021-03-01", ("passport", 1L, 100L)), path)
+    AtomicMart.publishDay(mart("2021-03-02", ("city", 2L, 200L)), path)
+    // two live snapshots, each read under its own basePath
+    assert(AtomicMart.read(spark, path).select("tx_id").as[Long].collect().toSet
+      == Set(1L, 2L))
+    // replace every partition: both earlier snapshots die, the new one lives
+    AtomicMart.publish(mart("2021-03-01", ("passport", 1L, 111L))
+      .unionByName(mart("2021-03-02", ("city", 2L, 222L))),
+      path, Seq("rule", "batch_date"))
+    val removed = AtomicMart.vacuum(spark, path, graceMs = 0L)
+    assert(removed.count(_.contains("/data/")) == 2, s"removed=$removed")
+    assert(AtomicMart.read(spark, path).select("tx_id", "amount")
+      .as[(Long, Long)].collect().toSet == Set((1L, 111L), (2L, 222L)))
   }
 }

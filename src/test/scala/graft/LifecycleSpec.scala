@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.{FraudEtlPipeline, LakeLifecycle}
 import graft.etl.FraudEtlPipeline.Layout
 import graft.etl.LakeLifecycle.DocLake
-import graft.sources.AtomicMart
+import graft.sources.{AtomicMart, MartTxn}
 
 /** The composed lake lifecycle, end to end (VERDICT r7 #5): five
   * simulated days of daily drops through ingest → SCD2 → fraud rules →
@@ -231,19 +231,27 @@ class LifecycleSpec extends SparkSpec {
       if (day == "d3") {
         val b3 = batch.select(col("doc_id"), col("text"), md5(col("text")).as("ch"))
           .withColumn("batch_day", lit(day))
-        // crash BEFORE the catalog commit: staged data, no new version
-        val v0 = graft.sources.AtomicCatalog.currentVersion(spark, lake.root)
-        graft.sources.AtomicMart.stage(b3, s"${lake.root}/seen", Seq("batch_day"))
-        assert(graft.sources.AtomicCatalog.currentVersion(spark, lake.root) == v0)
-        // crash BETWEEN what used to be two single-table commits: a
-        // catalog version carrying day-3 seen but NOT day-3 index
-        // (possible only through a partial publish; dedupDay itself now
-        // commits both in one rename)
-        graft.sources.AtomicCatalog.publish(spark, lake.root, Seq(
-          graft.sources.AtomicCatalog.TableBatch("seen", b3, Seq("batch_day"))))
+        val idx3 = graft.ops.Dedup.bandIndex(b3.filter(size(split(col("text"), " ")) >= 3))
+          .withColumn("batch_day", lit(day))
+        def versions() = (AtomicMart.currentVersion(spark, lake.seenPath),
+          AtomicMart.currentVersion(spark, lake.indexPath))
+        // crash BEFORE the intent: staged data, neither version moves
+        val v0 = versions()
+        AtomicMart.stage(b3, lake.seenPath, Seq("batch_day"))
+        assert(versions() == v0)
+        // crash AFTER the intent, between the two legs: day-3 seen
+        // committed but NOT day-3 index; dedupDay's recover rolls the
+        // rest forward before it reads
+        MartTxn.publishAllKilled(spark, lake.root, Seq(
+          MartTxn.TxnBatch(lake.seenPath, b3, Seq("batch_day")),
+          MartTxn.TxnBatch(lake.indexPath, idx3, Seq("batch_day"))), legsToCommit = 1)
+        assert(versions()._1 != v0._1 && versions()._2 == v0._2)
         // the replay must converge to the same survivors as a clean run
         val replay1 = LakeLifecycle.dedupDay(spark, lake, batch, day)
           .select("doc_id").as[Long].collect().toSet
+        // a seen-only commit outside any transaction (day-3 seen, no
+        // day-3 index): the replay converges the same way
+        AtomicMart.publish(b3, lake.seenPath, Seq("batch_day"))
         val replay2 = LakeLifecycle.dedupDay(spark, lake, batch, day)
           .select("doc_id").as[Long].collect().toSet
         assert(replay1 == replay2)
@@ -254,9 +262,9 @@ class LifecycleSpec extends SparkSpec {
       }
       // cross-table consistency at every committed version: the index
       // never references a doc the seen store does not hold
-      val seenIds = graft.sources.AtomicCatalog.read(spark, lake.root, "seen")
+      val seenIds = AtomicMart.read(spark, lake.seenPath)
         .select("doc_id").as[Long].collect().toSet
-      val idxIds = graft.sources.AtomicCatalog.read(spark, lake.root, "index")
+      val idxIds = AtomicMart.read(spark, lake.indexPath)
         .select("doc_id").as[Long].collect().toSet
       assert(idxIds.subsetOf(seenIds))
     }
@@ -299,7 +307,8 @@ class LifecycleSpec extends SparkSpec {
       (1L, 100L, "a", "p0"), (2L, 200L, "a", "p1"), (3L, 300L, "b", "p2"))
       .toDF("k", "price_cents", "status", "part")
     AtomicMart.publish(base, path, Seq("part"))
-    val p2FilesBefore = AtomicMart.readWhere(spark, path, "part", "p2").inputFiles.toSet
+    val p2FilesBefore = AtomicMart.readFiltered(spark, path, col("part") === "p2")
+      ._1.inputFiles.toSet
     // the day's CDC batch: update k=1, tombstone k=2 (its partition
     // empties → retracted), insert k=9; p2 is untouched
     val delta = Seq(
@@ -315,7 +324,7 @@ class LifecycleSpec extends SparkSpec {
     assert(after == Set(
       (1L, 111L, "c", "p0"), (3L, 300L, "b", "p2"), (9L, 900L, "n", "p0")))
     // the untouched partition kept its OLD pointer: zero files rewritten
-    assert(AtomicMart.readWhere(spark, path, "part", "p2").inputFiles.toSet
+    assert(AtomicMart.readFiltered(spark, path, col("part") === "p2")._1.inputFiles.toSet
       == p2FilesBefore)
     // an empty delta is a no-op version-wise
     assert(graft.etl.MartMerge.merge(spark, path, delta.limit(0), Seq("part")) == 1L)
